@@ -840,7 +840,7 @@ def pca_top_component(
     ).localCheckpoint(eager=True)
 
     # r15 probe (plans/r15/ab_vector.py): an Arrow-kernel projection
-    # (vector_kernels.pca_project_q) was interleave-A/B'd here and
+    # was interleave-A/B'd here and
     # REVERTED — per round it swapped ~0.19 s of well-parallelized HOF
     # CPU for an ArrowEvalPython round trip that cost more at bench
     # scale (pca min 4.40 → 5.38 s over 8 rounds). The w-literal array

@@ -57,7 +57,7 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, functions as F
-from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType
+from pyspark.sql.types import ArrayType, DoubleType, IntegerType
 
 
 def _rows_matrix(s: pd.Series, dim: int, dtype) -> "tuple[np.ndarray, np.ndarray]":
@@ -238,26 +238,3 @@ def assign_cell_nano(anchor_mat: "list[list[float]]"):
         return pd.Series(out)
 
     return lambda vec: _assign(vec)
-
-
-def pca_project_q(w: "list[float]"):
-    """Kernel twin of pca_top_component's per-iteration projection
-    ``floor(aggregate(zip_with(_cv, w, (c, ww) -> double(c)*ww), 0.0,
-    +) + 0.5) AS BIGINT`` — int64 grid coords cast exactly to float64
-    (|c| ≪ 2^53), left fold in dimension order, half-up snap."""
-    W = np.asarray(w, dtype=np.float64)
-    dim = W.shape[0]
-
-    @F.pandas_udf(LongType())
-    def _proj(v: pd.Series) -> pd.Series:
-        valid, X = _rows_matrix(v, dim, np.float64)
-        n = len(valid)
-        out = pd.array([None] * n, dtype="Int64")
-        if X.shape[0]:
-            acc = np.zeros(X.shape[0], dtype=np.float64)
-            for d in range(dim):
-                acc += X[:, d] * W[d]
-            out[valid] = np.floor(acc + 0.5).astype(np.int64)
-        return pd.Series(out)
-
-    return lambda vec: _proj(vec)

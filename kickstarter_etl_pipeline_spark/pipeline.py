@@ -50,11 +50,12 @@ def run_pipeline(
     if raw is None:
         logger.critical("Extraction failed — terminating execution.")
         return None
-    logger.info("Extraction completed: %d rows, %d columns", raw.count(), len(raw.columns))
+    n_raw = raw.count()
+    logger.info("Extraction completed: %d rows, %d columns", n_raw, len(raw.columns))
     inspect_data(raw, logger)
 
     transformed = X.transform_kickstarter(raw)
-    n_raw, n_kept = raw.count(), transformed.count()
+    n_kept = transformed.count()
     if n_raw - n_kept:
         logger.warning("Removed %d rows with null 'name' (NOT NULL constraint).", n_raw - n_kept)
     logger.info("Transformation completed: %d rows, %d columns", n_kept, len(transformed.columns))

@@ -15,930 +15,462 @@ Determinism rules used throughout:
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import collections
+import inspect
+from collections.abc import Callable, Iterable, Sequence
+from types import ModuleType
 
 from pyspark.sql import DataFrame, SparkSession
 
+from kickstarter_etl_pipeline_spark import qdefs_embeddings, qdefs_star_events
+from kickstarter_etl_pipeline_spark.operators import (
+    analytics_queries,
+    classifier,
+    corpus_queries,
+    eval_queries,
+    graph_queries,
+    lm_queries,
+    mining_queries,
+    retail_queries,
+    stats_queries,
+    timeseries_queries,
+)
 from kickstarter_etl_pipeline_spark.oracles_builders import ALL_ORACLES as _ORACLES
+from kickstarter_etl_pipeline_spark.plans import tpch_queries, warehouse_queries
 from kickstarter_etl_pipeline_spark.session import ensure_runtime_confs
-
-from kickstarter_etl_pipeline_spark.plans.tpch_queries import (  # noqa: F401 — registry surface
-    q_q1_pricing_summary,
-    q_q1_pricing_summary_sql,
-    q_q4_order_priority,
-    q_q18_large_orders,
-    q_q7_nation_volume,
-    q_q14_promo_revenue,
-    q_q19_or_predicates,
-    q_q22_idle_balances,
-    q_q2_min_cost_supplier,
-    q_q6_forecast_revenue,
-    q_q9_product_profit,
-    q_q11_important_values,
-    q_q12_priority_class,
-    q_q15_top_supplier,
-    q_q16_supplier_part_counts,
-    q_q17_small_qty_revenue,
-    q_q20_promo_part_suppliers,
-    q_q21_waiting_suppliers,
-    q_q8_market_share,
-    q_q10_returned_items,
-    q_q13_order_count_distribution,
-    q_pipe_syntax_pricing,
-    q_lateral_topn_orders,
-    q_sql_scripting_rollup,
-)
-
-from kickstarter_etl_pipeline_spark.operators.analytics_queries import (  # noqa: F401 — registry surface
-    q_events_funnel,
-    q_cohort_retention,
-    q_events_anomaly_zscore,
-    q_rfm_segments,
-    q_event_transition_matrix,
-    q_error_blast_radius,
-    q_priority_mode_by_status,
-    q_nation_share_of_region,
-    q_shipping_priority,
-    q_local_supplier_volume,
-    q_above_avg_orders,
-    q_customers_without_orders,
-    q_yoy_customer_activity,
-    q_customers_with_orders_count,
-    q_custkeys_1998_not_1999,
-    q_custkeys_both_years,
-    q_price_stats_by_status,
-    q_range_join_price_bands,
-    q_skew_salted_join,
-    q_null_safe_join_agg,
-    q_grouping_sets_status_year,
-    q_cube_status_priority,
-    q_pivot_status_priority,
-    q_unpivot_metrics,
-    q_histogram_price,
-    q_except_all_priorities,
-    q_part_string_ops,
-    q_topk_customers,
-    q_rolling_active_users,
-    q_events_ohlc_bars,
-    q_events_twap,
-    q_session_paths,
-    q_session_basket_lift,
-    q_knn_label_vote,
-    q_ann_recall_report,
-    q_events_ewma,
-    q_traffic_seasonality,
-    q_supplier_hhi,
-    q_intersect_all_priorities,
-)
-
-from kickstarter_etl_pipeline_spark.operators.graph_queries import (  # noqa: F401 — registry surface
-    q_adamic_adar_links,
-    q_cooccurrence_cap_report,
-    q_degree_histogram,
-    q_graph_assortativity,
-    q_graph_pagerank,
-    q_graph_communities,
-    q_graph_hits,
-    q_graph_kcore,
-    q_community_modularity,
-    q_graph_betweenness,
-    q_graph_bfs_depths,
-    q_graph_distance_distribution,
-    q_graph_harmonic_centrality,
-    q_graph_ktruss,
-    q_graph_ppr,
-    q_graph_rotor_walks,
-    q_walk_skipgram_pairs,
-    q_graph_spectral_partition,
-    q_graph_weighted_distances,
-    q_part_hierarchy_rollup,
-    q_recursive_cte_ancestor_paths,
-)
-
-from kickstarter_etl_pipeline_spark.operators.stats_queries import (  # noqa: F401 — registry surface
-    q_bootstrap_ci_report,
-    q_funnel_latency_percentiles,
-    q_kendall_tau_nations,
-    q_mann_whitney_report,
-    q_elasticity_by_brand,
-    q_psi_drift_report,
-    q_theil_index_by_status,
-    q_winsorized_mean_by_status,
-    q_pareto_frontier_parts,
-    q_kaplan_meier_survival,
-    q_multitouch_attribution,
-    q_did_estimate_report,
-    q_chi2_type_by_dow,
-    q_ab_experiment_report,
-    q_gini_by_status,
-    q_exact_quartiles_by_status,
-    q_corr_price_quantity,
-    q_activity_decile_lift,
-    q_atkinson_index,
-    q_capped_running_balance,
-    q_mean_excess_report,
-    q_order_backlog_profile,
-    q_tail_index_report,
-)
-
-from kickstarter_etl_pipeline_spark.operators.timeseries_queries import (  # noqa: F401 — registry surface
-    q_acf_daily_revenue,
-    q_binseg_changepoint,
-    q_croston_forecast,
-    q_holt_linear_forecast,
-    q_holt_winters_forecast,
-    q_hurst_exponent,
-    q_markov_stationary,
-    q_mase_seasonal_naive,
-    q_transition_entropy,
-    q_weekday_seasonal_decomposition,
-)
-
-from kickstarter_etl_pipeline_spark.operators.retail_queries import (  # noqa: F401 — registry surface
-    q_abc_xyz_matrix,
-    q_price_index_report,
-    q_price_quartiles_by_brand,
-    q_association_rules_topk,
-    q_fellegi_sunter_linkage,
-    q_scd2_customer_priority,
-    q_item_cooccurrence_topk,
-    q_fuzzy_name_pairs,
-    q_cohort_ltv_curve,
-    q_abc_classification,
-    q_rolling_wau_report,
-    q_session_window_native,
-    q_interpurchase_gap_percentiles,
-)
-
-from kickstarter_etl_pipeline_spark.plans.warehouse_queries import (  # noqa: F401 — registry surface
-    q_cdc_apply_agg,
-    q_zorder_layout_report,
-    q_pit_priority_revenue,
-    q_time_travel_agg,
-    q_scd1_merge_agg,
-    q_scd2_priority_history,
-    q_compaction_roundtrip_agg,
-    q_dpp_join_prune_agg,
-    q_partitioned_prune_agg,
-    q_incremental_rollup_agg,
-    q_idempotent_append_agg,
-    q_dq_star_report,
-    q_dq_quarantine_report,
-    q_csv_roundtrip_agg,
-    q_json_roundtrip_agg,
-    q_jsonl_pyds_roundtrip_agg,
-    q_range_clustered_prune_agg,
-    q_orc_roundtrip_agg,
-    q_schema_evolution_agg,
-)
-
-from kickstarter_etl_pipeline_spark.operators.corpus_queries import (  # noqa: F401 — registry surface
-    q_source_quota,
-    q_length_filter_funnel,
-    q_domain_mix_report,
-    q_train_val_test_split,
-    q_stratified_sample,
-    q_hash_sample,
-    q_coverage_selection_report,
-    q_decontaminate_overlap,
-    q_curation_pack_manifest,
-    q_pretraining_manifest,
-    q_token_frequency,
-    q_tfidf_top_terms,
-    q_repetition_stats,
-    q_clean_corpus,
-    q_pii_scrub,
-    q_oov_rate,
-    q_perplexity_proxy,
-    q_bpe_token_counts,
-    q_doc_fingerprints,
-    q_lang_id,
-    q_quality_scores,
-    q_text_stats,
-    q_levenshtein_pairs,
-    q_char_jaccard_pairs,
-    q_containment_pairs,
-    q_semantic_dedup,
-    q_bigram_collocations,
-    q_seq_length_histogram,
-    q_inverted_index,
-    q_source_overlap_report,
-    q_skipgram_cooccurrence,
-    q_token_length_quartiles_by_source,
-    q_curation_decision,
-    q_lang_confusion_matrix,
-    q_k_anonymity_report,
-    q_vocab_growth_curve,
-    q_readability_scores,
-    q_js_divergence_sources,
-    q_mutual_information_report,
-    q_bleu_overlap_report,
-    q_phrase_search_hits,
-    q_cohens_kappa_quality,
-    q_collated_dedup_counts,
-    q_documents_stream_near_dup,
-)
-
-from kickstarter_etl_pipeline_spark.qdefs_star_events import (  # noqa: F401 — registry surface
-    q_dim_date,
-    q_dim_state,
-    q_dim_category,
-    q_fact_star,
-    q_star_flagship,
-    q_group_count_ordered,
-    q_project_rename_filter,
-    q_conditional_flag_agg,
-    q_ship_delay_by_priority,
-    q_window_rank_topn,
-    q_window_running_sum,
-    q_region_rollup,
-    q_events_tumbling,
-    q_events_sessionize,
-    q_events_json_kv,
-    q_events_variant_stats,
-    q_events_stream_tumbling,
-    q_events_stream_hourly_daily,
-    q_pystream_replay_agg,
-    q_events_stream_upsert,
-    q_events_sliding,
-    q_events_distinct_pairs,
-    q_exact_median_by_group,
-    q_user_clustering_coeffs,
-    q_quantized_topk,
-    q_user_triangle_counts,
-    q_events_asof_purchase_click,
-    q_events_stateful_sessions,
-    q_events_stream_state_split,
-    q_events_tws_evolved_totals,
-    q_events_tws_state_at_rest,
-    q_events_tws_restart_totals,
-    q_events_tws_sessions,
-    q_events_tws_timeout_sessions,
-    q_events_tws_ttl_counts,
-    q_events_tws_user_profile,
-    q_events_tws_warm_start,
-    q_events_stateful_timeout_sessions,
-    q_events_stream_conversions,
-    q_events_stream_left_join,
-    q_events_stream_full_join,
-    q_events_stream_sessions,
-    q_events_stream_sliding,
-    q_distinct_counts,
-    q_dedup_exact,
-    q_ngram_jaccard_pairs,
-    q_jaccard_prefix_join,
-    q_minhash_dedup_pairs,
-    q_simhash_candidates,
-    q_simhash_md5_candidates,
-    q_pack_sequences,
-    q_source_mixing_weights,
-    q_chunk_documents,
-    q_boilerplate_stats,
-    q_multimodal_features,
-    q_simhash_twin_containment,
-    q_events_stream_static_enrich,
-    q_events_asof_next_purchase,
-    q_simhash_near_dup_clusters,
-    q_events_stream_unattributed,
-)
-
-from kickstarter_etl_pipeline_spark.qdefs_embeddings import (  # noqa: F401 — registry surface
-    q_embedding_similarity_histogram,
-    q_embedding_topk,
-    q_ann_lsh_topk,
-    q_ann_ivf_topk,
-    q_ann_ivf_anchor_topk,
-    q_embedding_near_dup_exact,
-    q_approx_aggregates,
-    q_events_lag_lead,
-    q_embedding_norms,
-    q_events_gap_fill,
-    q_window_moving_avg,
-    q_window_ntile_percent,
-    q_embedding_dim_stats,
-    q_window_first_last,
-    q_window_cume_dist,
-    q_dedup_components,
-    q_dedup_components_star,
-    q_label_centroid_distances,
-    q_dedup_canonical_docs,
-    q_distinct_users_rollup,
-    q_embedding_quantization,
-    q_ivf_recall_report,
-    q_embedding_pca_top,
-    q_matryoshka_recall_report,
-)
-
-from kickstarter_etl_pipeline_spark.operators.mining_queries import (  # noqa: F401 — registry surface
-    q_winnowing_fingerprints,
-    q_bloom_prefiltered_join,
-    q_bpe_merge_candidates,
-    q_bpe_pack_manifest,
-    q_bpe_tokenized_stats,
-    q_bpe_train_merges,
-    q_hard_negative_mining,
-    q_table_diff_report,
-    q_duplicate_ngram_spans,
-    q_events_stream_dedup,
-    q_events_cusum_drift,
-    q_minhash_jaccard_estimate,
-    q_mmr_diversified_topk,
-    q_priority_weighted_sample,
-    q_source_diversity_report,
-    q_graph_link_prediction,
-    q_l_diversity_report,
-    q_lorenz_curve_events,
-    q_quality_percentile_filter,
-    q_session_bounce_rate,
-    q_sketch_accuracy_report,
-    q_zipf_slope,
-    q_countmin_heavy_hitters,
-    q_hll_manual_report,
-    q_bloom_fpr_report,
-    q_t_closeness_report,
-)
-
-from kickstarter_etl_pipeline_spark.operators.lm_queries import (  # noqa: F401 — registry surface
-    q_scalable_rank_events,
-    q_token_coverage_topk,
-    q_touch_attribution,
-    q_temperature_resample,
-    q_kneser_ney_bigrams,
-    q_shard_balance_report,
-    q_ngram_novelty_curve,
-    q_ccnet_quality_tiers,
-    q_ann_pq_topk,
-    q_pq_recall_report,
-    q_negative_sampling_table,
-    q_tokenizer_fertility,
-    q_daily_trend_by_type,
-    q_events_mad_anomaly,
-    q_user_activity_streaks,
-    q_traffic_burstiness,
-    q_rake_keywords,
-    q_frame_dedup_report,
-    q_image_decode_stats,
-    q_media_frame_stats,
-    q_preference_bt_strengths,
-    q_preference_dataset_manifest,
-    q_session_interval_overlap,
-    q_benford_price_audit,
-    q_dedup_cluster_histogram,
-    q_bigram_entropy_rate,
-    q_lexical_diversity_by_source,
-    q_char_entropy_per_doc,
-    q_price_percentile_bands,
-    q_embedding_dim_robust_stats,
-    q_embedding_outlier_report,
-    q_good_turing_unigrams,
-    q_weighted_median_by_group,
-    q_trimmed_mean_by_group,
-    q_dsir_selection_report,
-)
-
-from kickstarter_etl_pipeline_spark.operators.classifier import (  # noqa: F401 — registry surface
-    q_classifier_curation_manifest,
-    q_documents_stream_classifier_scores,
-    q_quality_perceptron_trajectory,
-)
-
-from kickstarter_etl_pipeline_spark.operators.eval_queries import (  # noqa: F401 — registry surface
-    q_quality_auc_report,
-    q_welch_ttest_report,
-    q_ols_daily_trend,
-    q_correlation_matrix,
-    q_cramers_v_status_priority,
-    q_time_weighted_value,
-    q_conversion_wilson_ci,
-    q_fd_violation_report,
-    q_quality_calibration_report,
-    q_source_ks_drift,
-    q_blocking_quality_report,
-    q_theil_sen_daily_trend,
-    q_rank_correlation_report,
-    q_bm25_topk,
-    q_snm_blocking_report,
-    q_rrf_fusion_topk,
-    q_ndcg_report,
-)
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-
-#: Registry entries that run a Structured Streaming query (state-store
-#: init, checkpoint dir, one or two AvailableNow runs — a fixed
-#: ~3-30 s setup each, regardless of sf). ``certify --tier`` routes
-#: these to a DEDICATED process while the batch tier shards round-robin
-#: (VERDICT r13 task 5): the streaming tier's fixed costs stop
-#: inflating every batch shard, so certify wall stays flat as this
-#: tier grows. Membership is pinned by
-#: tests/test_certify_shard.py::test_streaming_tier_matches_name_heuristic.
-STREAMING_QUERIES: frozenset[str] = frozenset({
-    "documents_stream_classifier_scores",
-    "documents_stream_near_dup",
-    "events_stateful_sessions",
-    "events_stateful_timeout_sessions",
-    "events_stream_conversions",
-    "events_stream_dedup",
-    "events_stream_full_join",
-    "events_stream_hourly_daily",
-    "events_stream_left_join",
-    "events_stream_sessions",
-    "events_stream_sliding",
-    "events_stream_static_enrich",
-    "events_stream_tumbling",
-    "events_stream_unattributed",
-    "events_stream_upsert",
-    "events_stream_state_split",
-    "events_tws_evolved_totals",
-    "events_tws_state_at_rest",
-    "events_tws_restart_totals",
-    "events_tws_sessions",
-    "events_tws_timeout_sessions",
-    "events_tws_ttl_counts",
-    "events_tws_user_profile",
-    "events_tws_warm_start",
-    "pystream_replay_agg",
-})
-
+#: The modules that define the registry's ``q_<name>`` functions.
+QUERY_MODULES: tuple[ModuleType, ...] = (
+    tpch_queries,
+    analytics_queries,
+    graph_queries,
+    stats_queries,
+    timeseries_queries,
+    retail_queries,
+    warehouse_queries,
+    corpus_queries,
+    qdefs_star_events,
+    qdefs_embeddings,
+    mining_queries,
+    lm_queries,
+    classifier,
+    eval_queries,
+)
 
 # Contract surface
 # ---------------------------------------------------------------------------
 
-# Ordering contract: the grading driver sweeps the FIRST 50 entries of
-# this dict; new queries are ALWAYS inserted at the head (never-graded
-# first — test_grading_window_invariants enforces the rotation).
-#
-# Round-12 state (executes the schedule committed at round-11 close —
-# VERDICT r11 task 1): the 50-slot window is the three
-# never-driver-graded round-11 additions (price_quartiles_by_brand,
-# degree_histogram, token_length_quartiles_by_source — CERTIFY_r11
-# MATCH evidence), then the r05 tail (graph_communities,
-# pit_priority_revenue, time_travel_agg — the rows-only
-# simhash_md5_candidates stays below the fold), then the head 44 of
-# the last-green-r06 block (duplicate_ngram_spans …
-# window_running_sum, registry order). The round-11 window (50/50
-# full pass in CORRECTNESS_r11) rotated just below the fold. After
-# this round no oracle-able entry's latest grade is older than r06.
-#
-# Round-13 state (executes the schedule committed at round-12 close):
-# the 50-slot window is the two never-driver-graded round-13
-# additions (curation_pack_manifest, image_decode_stats — both
-# certified MATCH at sf0.001 AND sf0.01 on addition), then the r06
-# stretch the r12 continuation displaced below the fold
-# (custkeys_1998_not_1999 … window_running_sum, all r06 green +
-# CERTIFY_r12 MATCH), the five named r06 entries
-# (local_supplier_volume … ship_delay_by_priority), and the r07
-# block head (scalable_rank_events … lexical_diversity_by_source)
-# filling the 50. The r12 window (50/50 full pass in CORRECTNESS_r12)
-# rotated below the fold. After this round the oldest oracle-able
-# driver grade is r07.
-#
-# Round-14 state (executes the schedule committed at round-13 close,
-# plus the mid-round classifier-family additions at the head per the
-# never-graded-first rule): the 50-slot window is the five
-# never-driver-graded round-14 additions (quality_perceptron_trajectory,
-# classifier_curation_manifest, documents_stream_classifier_scores,
-# events_tws_restart_totals, events_tws_ttl_counts,
-# preference_dataset_manifest — each certified MATCH at sf0.001 AND
-# sf0.01 on addition), then the FULL r07 remainder
-# (char_entropy_per_doc .. window_rank_topn, 27 entries) and the r08
-# block head (ivf_recall_report .. graph_pagerank, 17 entries) filling
-# the 50; the displaced bpe_token_counts, corr_price_quantity and
-# dedup_components (CERTIFY_r13/r14 MATCH) lead the r15 fill. The r13
-# window (50/50 full pass in CORRECTNESS_r13) rotated below the fold.
-# After this round the oldest oracle-able driver grade is r08.
-#
-# r15 rotation schedule: any never-graded round-15 additions first,
-# then the three r14-window entries the mid-round classifier-family
-# additions displaced below the fold (bpe_token_counts,
-# corr_price_quantity, dedup_components),
-# then the r08 remainder (dq_star_report onward in registry order)
-# and the r09 block; everything below the fold holds a green driver
-# grade or a latest-CERTIFY MATCH, or is declared rows-only; the
-# same-round all-registry signal is CERTIFY_r14.json
-# (python -m kickstarter_etl_pipeline_spark.certify).
-_QUERIES: dict[str, QueryFn] = {
-    # --- r14 WINDOW head: the seven LATE round-14 additions (second
-    # continuation session; each certified MATCH at sf0.001 AND
-    # sf0.01 on addition: bpe_train_merges, bpe_tokenized_stats,
-    # dpp_join_prune_agg, recursive_cte_ancestor_paths,
-    # pipe_syntax_pricing, collated_dedup_counts,
-    # events_tws_evolved_totals — the last sits with its TWS family
-    # a few entries down) lead the 50-slot window per the
-    # never-graded-first rule, followed by the earlier r14 additions.
-    # (Their oracles live in the oracles_r15.py ledger because the
-    # r14 ledger was sealed by the mid-round CERTIFY_r14 artifacts.)
-    # The seven entries they push below the fold all hold
-    # CERTIFY_r14 MATCH grades plus the close-tree CERTIFY refresh. ---
-    "bpe_train_merges": q_bpe_train_merges,
-    "bpe_tokenized_stats": q_bpe_tokenized_stats,
-    "bpe_pack_manifest": q_bpe_pack_manifest,
-    "dpp_join_prune_agg": q_dpp_join_prune_agg,
-    "recursive_cte_ancestor_paths": q_recursive_cte_ancestor_paths,
-    "pipe_syntax_pricing": q_pipe_syntax_pricing,
-    "collated_dedup_counts": q_collated_dedup_counts,
-    "lateral_topn_orders": q_lateral_topn_orders,
-    "sql_scripting_rollup": q_sql_scripting_rollup,
-    "quality_perceptron_trajectory": q_quality_perceptron_trajectory,
-    "classifier_curation_manifest": q_classifier_curation_manifest,
-    "documents_stream_classifier_scores": q_documents_stream_classifier_scores,
-    "events_stream_state_split": q_events_stream_state_split,
-    "documents_stream_near_dup": q_documents_stream_near_dup,
-    "events_tws_evolved_totals": q_events_tws_evolved_totals,
-    "events_tws_state_at_rest": q_events_tws_state_at_rest,
-    "events_tws_restart_totals": q_events_tws_restart_totals,
-    "events_tws_ttl_counts": q_events_tws_ttl_counts,
-    "preference_dataset_manifest": q_preference_dataset_manifest,
-    # r14 window fill (rotated at round-14 open per the schedule
-    # committed at the r13 close): the full r07 remainder
-    # (char_entropy_per_doc .. window_rank_topn, last green r07), then
-    # the r08 block head (ivf_recall_report .. dedup_components, last
-    # green r08) filling the 50. The r13 window (50/50 full pass in
-    # CORRECTNESS_r13) rotates below the fold with its grades on
-    # record. ---
-    "char_entropy_per_doc": q_char_entropy_per_doc,
-    "lorenz_curve_events": q_lorenz_curve_events,
-    "cube_status_priority": q_cube_status_priority,
-    "price_stats_by_status": q_price_stats_by_status,
-    "part_string_ops": q_part_string_ops,
-    "csv_roundtrip_agg": q_csv_roundtrip_agg,
-    "clean_corpus": q_clean_corpus,
-    "q1_pricing_summary_sql": q_q1_pricing_summary_sql,
-    "doc_fingerprints": q_doc_fingerprints,
-    "lang_id": q_lang_id,
-    "quality_scores": q_quality_scores,
-    "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-    "multimodal_features": q_multimodal_features,
-    "customers_without_orders": q_customers_without_orders,
-    "customers_with_orders_count": q_customers_with_orders_count,
-    "custkeys_both_years": q_custkeys_both_years,
-    "project_rename_filter": q_project_rename_filter,
-    "dedup_components_star": q_dedup_components_star,
-    "decontaminate_overlap": q_decontaminate_overlap,
-    "scd1_merge_agg": q_scd1_merge_agg,
-    "idempotent_append_agg": q_idempotent_append_agg,
-    "token_frequency": q_token_frequency,
-    "stratified_sample": q_stratified_sample,
-    "tfidf_top_terms": q_tfidf_top_terms,
-    "source_quota": q_source_quota,
-    "repetition_stats": q_repetition_stats,
-    "window_rank_topn": q_window_rank_topn,
-    "ivf_recall_report": q_ivf_recall_report,
-    "simhash_twin_containment": q_simhash_twin_containment,
-    "price_percentile_bands": q_price_percentile_bands,
-    "events_asof_next_purchase": q_events_asof_next_purchase,
-    "simhash_near_dup_clusters": q_simhash_near_dup_clusters,
-    "embedding_pca_top": q_embedding_pca_top,
-    "readability_scores": q_readability_scores,
-    "embedding_dim_robust_stats": q_embedding_dim_robust_stats,
-    "embedding_outlier_report": q_embedding_outlier_report,
-    "events_stream_static_enrich": q_events_stream_static_enrich,
-    "schema_evolution_agg": q_schema_evolution_agg,
-    "countmin_heavy_hitters": q_countmin_heavy_hitters,
-    "hll_manual_report": q_hll_manual_report,
-    "ann_ivf_topk": q_ann_ivf_topk,
-    "rfm_segments": q_rfm_segments,
-    "events_stream_hourly_daily": q_events_stream_hourly_daily,
-    "graph_pagerank": q_graph_pagerank,
-    "bpe_token_counts": q_bpe_token_counts,
-    "corr_price_quantity": q_corr_price_quantity,
-    "dedup_components": q_dedup_components,
-    # --- r13 WINDOW (rotated at round-13 open, per the schedule
-    # committed at round-12 close): never-driver-graded round-13
-    # additions first, then the r06 stretch the r12 continuation
-    # displaced below the fold, then the five named r06 entries; the
-    # r07 block fills any remaining slots. ---
-    "curation_pack_manifest": q_curation_pack_manifest,
-    "image_decode_stats": q_image_decode_stats,
-    "events_tws_sessions": q_events_tws_sessions,
-    "events_tws_timeout_sessions": q_events_tws_timeout_sessions,
-    "events_tws_user_profile": q_events_tws_user_profile,
-    "events_tws_warm_start": q_events_tws_warm_start,
-    "preference_bt_strengths": q_preference_bt_strengths,
-    # r13 window fill (rotated at round-13 open per the committed
-    # schedule): the r06 stretch the r12 continuation displaced below
-    # the fold (custkeys_1998_not_1999 ... window_running_sum), the
-    # five named r06 entries, then the r07 block head
-    # (scalable_rank_events ... lexical_diversity_by_source) filling
-    # the 50. The r12 window (50/50 green in CORRECTNESS_r12) rotates
-    # below the fold with its grades on record. ---
-    "custkeys_1998_not_1999": q_custkeys_1998_not_1999,
-    "pivot_status_priority": q_pivot_status_priority,
-    "events_sessionize": q_events_sessionize,
-    "events_json_kv": q_events_json_kv,
-    "events_sliding": q_events_sliding,
-    "events_distinct_pairs": q_events_distinct_pairs,
-    "events_asof_purchase_click": q_events_asof_purchase_click,
-    "char_jaccard_pairs": q_char_jaccard_pairs,
-    "distinct_counts": q_distinct_counts,
-    "events_stream_sliding": q_events_stream_sliding,
-    "embedding_topk": q_embedding_topk,
-    "text_stats": q_text_stats,
-    "dim_state": q_dim_state,
-    "dim_date": q_dim_date,
-    "dim_category": q_dim_category,
-    "region_rollup": q_region_rollup,
-    "topk_customers": q_topk_customers,
-    "shipping_priority": q_shipping_priority,
-    "events_tumbling": q_events_tumbling,
-    "window_running_sum": q_window_running_sum,
-    "local_supplier_volume": q_local_supplier_volume,
-    "above_avg_orders": q_above_avg_orders,
-    "group_count_ordered": q_group_count_ordered,
-    "conditional_flag_agg": q_conditional_flag_agg,
-    "ship_delay_by_priority": q_ship_delay_by_priority,
-    "scalable_rank_events": q_scalable_rank_events,
-    "token_coverage_topk": q_token_coverage_topk,
-    "touch_attribution": q_touch_attribution,
-    "temperature_resample": q_temperature_resample,
-    "kneser_ney_bigrams": q_kneser_ney_bigrams,
-    "shard_balance_report": q_shard_balance_report,
-    "ngram_novelty_curve": q_ngram_novelty_curve,
-    "ccnet_quality_tiers": q_ccnet_quality_tiers,
-    "ann_pq_topk": q_ann_pq_topk,
-    "pq_recall_report": q_pq_recall_report,
-    "negative_sampling_table": q_negative_sampling_table,
-    "tokenizer_fertility": q_tokenizer_fertility,
-    "daily_trend_by_type": q_daily_trend_by_type,
-    "events_mad_anomaly": q_events_mad_anomaly,
-    "user_activity_streaks": q_user_activity_streaks,
-    "traffic_burstiness": q_traffic_burstiness,
-    "rake_keywords": q_rake_keywords,
-    "media_frame_stats": q_media_frame_stats,
-    "session_interval_overlap": q_session_interval_overlap,
-    "benford_price_audit": q_benford_price_audit,
-    "dedup_cluster_histogram": q_dedup_cluster_histogram,
-    "bigram_entropy_rate": q_bigram_entropy_rate,
-    "lexical_diversity_by_source": q_lexical_diversity_by_source,
-    # --- r12 WINDOW (rotated at round-12 open, per the schedule
-    # committed at round-11 close — VERDICT r11 task 1): the three
-    # never-driver-graded round-11 additions (CERTIFY_r11 MATCH
-    # evidence), then the r05 tail (graph_communities,
-    # pit_priority_revenue, time_travel_agg), then the head 44 of the
-    # last-green-r06 block in registry order. After this round no
-    # oracle-able entry's latest driver grade is older than r06. ---
-    # Round-12 additions head the window (never-graded first). The six
-    # continuation-session entries (holt pair, three graph-tier
-    # centrality/sampling ops, max-coverage selection) landed after
-    # CERTIFY_r12's first capture and displace six r06-green entries
-    # (text_stats, dim_state, dim_date, dim_category, region_rollup,
-    # topk_customers — all CERTIFY MATCH; re-certified at the close
-    # tree) below the fold, joining the three the r12 open displaced:
-    "holt_linear_forecast": q_holt_linear_forecast,
-    "holt_winters_forecast": q_holt_winters_forecast,
-    "graph_harmonic_centrality": q_graph_harmonic_centrality,
-    "graph_rotor_walks": q_graph_rotor_walks,
-    "graph_betweenness": q_graph_betweenness,
-    "coverage_selection_report": q_coverage_selection_report,
-    "walk_skipgram_pairs": q_walk_skipgram_pairs,
-    "graph_distance_distribution": q_graph_distance_distribution,
-    "community_modularity": q_community_modularity,
-    "croston_forecast": q_croston_forecast,
-    "weekday_seasonal_decomposition": q_weekday_seasonal_decomposition,
-    "graph_ktruss": q_graph_ktruss,
-    "graph_ppr": q_graph_ppr,
-    "price_index_report": q_price_index_report,
-    "tail_index_report": q_tail_index_report,
-    "mean_excess_report": q_mean_excess_report,
-    "order_backlog_profile": q_order_backlog_profile,
-    "atkinson_index": q_atkinson_index,
-    "activity_decile_lift": q_activity_decile_lift,
-    "pretraining_manifest": q_pretraining_manifest,
-    "cooccurrence_cap_report": q_cooccurrence_cap_report,
-    "events_stream_conversions": q_events_stream_conversions,
-    "frame_dedup_report": q_frame_dedup_report,
-    "price_quartiles_by_brand": q_price_quartiles_by_brand,
-    "degree_histogram": q_degree_histogram,
-    "token_length_quartiles_by_source": q_token_length_quartiles_by_source,
-    "graph_communities": q_graph_communities,
-    "pit_priority_revenue": q_pit_priority_revenue,
-    "time_travel_agg": q_time_travel_agg,
-    "duplicate_ngram_spans": q_duplicate_ngram_spans,
-    "priority_weighted_sample": q_priority_weighted_sample,
-    "source_diversity_report": q_source_diversity_report,
-    "events_cusum_drift": q_events_cusum_drift,
-    "mmr_diversified_topk": q_mmr_diversified_topk,
-    "bpe_merge_candidates": q_bpe_merge_candidates,
-    "hard_negative_mining": q_hard_negative_mining,
-    "table_diff_report": q_table_diff_report,
-    "sketch_accuracy_report": q_sketch_accuracy_report,
-    "minhash_jaccard_estimate": q_minhash_jaccard_estimate,
-    "bloom_prefiltered_join": q_bloom_prefiltered_join,
-    "events_stream_dedup": q_events_stream_dedup,
-    "zipf_slope": q_zipf_slope,
-    "l_diversity_report": q_l_diversity_report,
-    "quality_percentile_filter": q_quality_percentile_filter,
-    "session_bounce_rate": q_session_bounce_rate,
-    "graph_link_prediction": q_graph_link_prediction,
-    "perplexity_proxy": q_perplexity_proxy,
-    "k_anonymity_report": q_k_anonymity_report,
-    "traffic_seasonality": q_traffic_seasonality,
-    "supplier_hhi": q_supplier_hhi,
-    "vocab_growth_curve": q_vocab_growth_curve,
-    "fact_star": q_fact_star,
-    "events_stream_tumbling": q_events_stream_tumbling,
-    # --- r11 window (graded green in CORRECTNESS_r11: 50/50 full
-    # pass; rotated below the fold at round-12 open) ---
-    "transition_entropy": q_transition_entropy,
-    "adamic_adar_links": q_adamic_adar_links,
-    "association_rules_topk": q_association_rules_topk,
-    "abc_xyz_matrix": q_abc_xyz_matrix,
-    "mase_seasonal_naive": q_mase_seasonal_naive,
-    "hurst_exponent": q_hurst_exponent,
-    "winsorized_mean_by_status": q_winsorized_mean_by_status,
-    "elasticity_by_brand": q_elasticity_by_brand,
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "ann_recall_report": q_ann_recall_report,
-    "bigram_collocations": q_bigram_collocations,
-    "boilerplate_stats": q_boilerplate_stats,
-    "chi2_type_by_dow": q_chi2_type_by_dow,
-    "chunk_documents": q_chunk_documents,
-    "containment_pairs": q_containment_pairs,
-    "curation_decision": q_curation_decision,
-    "events_ewma": q_events_ewma,
-    "events_ohlc_bars": q_events_ohlc_bars,
-    "events_stateful_sessions": q_events_stateful_sessions,
-    "events_stateful_timeout_sessions": q_events_stateful_timeout_sessions,
-    "events_stream_full_join": q_events_stream_full_join,
-    "events_stream_left_join": q_events_stream_left_join,
-    "minhash_dedup_pairs": q_minhash_dedup_pairs,
-    "events_stream_upsert": q_events_stream_upsert,
-    "events_stream_sessions": q_events_stream_sessions,
-    "pack_sequences": q_pack_sequences,
-    "source_mixing_weights": q_source_mixing_weights,
-    "events_variant_stats": q_events_variant_stats,
-    "jsonl_pyds_roundtrip_agg": q_jsonl_pyds_roundtrip_agg,
-    "pystream_replay_agg": q_pystream_replay_agg,
-    "range_clustered_prune_agg": q_range_clustered_prune_agg,
-    "yoy_customer_activity": q_yoy_customer_activity,
-    "semantic_dedup": q_semantic_dedup,
-    "seq_length_histogram": q_seq_length_histogram,
-    "user_triangle_counts": q_user_triangle_counts,
-    "inverted_index": q_inverted_index,
-    "source_overlap_report": q_source_overlap_report,
-    "user_clustering_coeffs": q_user_clustering_coeffs,
-    "quantized_topk": q_quantized_topk,
-    "zorder_layout_report": q_zorder_layout_report,
-    "skipgram_cooccurrence": q_skipgram_cooccurrence,
-    "exact_median_by_group": q_exact_median_by_group,
-    "rolling_active_users": q_rolling_active_users,
-    "events_twap": q_events_twap,
-    "gini_by_status": q_gini_by_status,
-    "session_paths": q_session_paths,
-    "exact_quartiles_by_status": q_exact_quartiles_by_status,
-    "session_basket_lift": q_session_basket_lift,
-    "knn_label_vote": q_knn_label_vote,
-    "lang_confusion_matrix": q_lang_confusion_matrix,
-    # --- r10 window (graded green in CORRECTNESS_r10: 50/50 full
-    # pass; rotated below the fold at round-11 open) ---
-    "fellegi_sunter_linkage": q_fellegi_sunter_linkage,
-    "theil_index_by_status": q_theil_index_by_status,
-    "markov_stationary": q_markov_stationary,
-    "winnowing_fingerprints": q_winnowing_fingerprints,
-    "embedding_similarity_histogram": q_embedding_similarity_histogram,
-    "psi_drift_report": q_psi_drift_report,
-    "acf_daily_revenue": q_acf_daily_revenue,
-    "binseg_changepoint": q_binseg_changepoint,
-    "mann_whitney_report": q_mann_whitney_report,
-    "funnel_latency_percentiles": q_funnel_latency_percentiles,
-    "kendall_tau_nations": q_kendall_tau_nations,
-    "graph_assortativity": q_graph_assortativity,
-    "cohens_kappa_quality": q_cohens_kappa_quality,
-    # --- never driver-graded (r9 below-fold first-grades; CERTIFY_r09 MATCH) ---
-    "session_window_native": q_session_window_native,
-    "interpurchase_gap_percentiles": q_interpurchase_gap_percentiles,
-    # --- re-grade: last green r04 ---
-    "cdc_apply_agg": q_cdc_apply_agg,
-    "cohort_retention": q_cohort_retention,
-    "compaction_roundtrip_agg": q_compaction_roundtrip_agg,
-    "dedup_canonical_docs": q_dedup_canonical_docs,
-    "domain_mix_report": q_domain_mix_report,
-    "dq_quarantine_report": q_dq_quarantine_report,
-    "embedding_near_dup_exact": q_embedding_near_dup_exact,
-    "embedding_norms": q_embedding_norms,
-    "error_blast_radius": q_error_blast_radius,
-    "event_transition_matrix": q_event_transition_matrix,
-    "events_anomaly_zscore": q_events_anomaly_zscore,
-    "events_funnel": q_events_funnel,
-    "events_gap_fill": q_events_gap_fill,
-    "events_lag_lead": q_events_lag_lead,
-    "grouping_sets_status_year": q_grouping_sets_status_year,
-    "incremental_rollup_agg": q_incremental_rollup_agg,
-    "label_centroid_distances": q_label_centroid_distances,
-    "length_filter_funnel": q_length_filter_funnel,
-    "nation_share_of_region": q_nation_share_of_region,
-    "null_safe_join_agg": q_null_safe_join_agg,
-    "oov_rate": q_oov_rate,
-    "partitioned_prune_agg": q_partitioned_prune_agg,
-    "pii_scrub": q_pii_scrub,
-    "priority_mode_by_status": q_priority_mode_by_status,
-    "q15_top_supplier": q_q15_top_supplier,
-    "q16_supplier_part_counts": q_q16_supplier_part_counts,
-    "q17_small_qty_revenue": q_q17_small_qty_revenue,
-    "q18_large_orders": q_q18_large_orders,
-    "q20_promo_part_suppliers": q_q20_promo_part_suppliers,
-    "q21_waiting_suppliers": q_q21_waiting_suppliers,
-    "q4_order_priority": q_q4_order_priority,
-    "range_join_price_bands": q_range_join_price_bands,
-    "train_val_test_split": q_train_val_test_split,
-    # --- re-grade: last green r05 ---
-    "ab_experiment_report": q_ab_experiment_report,
-    "ann_ivf_anchor_topk": q_ann_ivf_anchor_topk,
-    "simhash_md5_candidates": q_simhash_md5_candidates,
-    # --- last green r06 ---
-    # --- last green r07 --- (the full r07 remainder,
-    # char_entropy_per_doc .. window_rank_topn, moved INTO the r14
-    # window per the schedule committed at the r13 close) ---
-    # --- last green r08 --- (the block head, ivf_recall_report ..
-    # dedup_components, moved INTO the r14 window; the remainder below
-    # plus the r09 block is the committed r15 schedule) ---
-    "dq_star_report": q_dq_star_report,
-    "embedding_dim_stats": q_embedding_dim_stats,
-    "embedding_quantization": q_embedding_quantization,
-    "except_all_priorities": q_except_all_priorities,
-    "hash_sample": q_hash_sample,
-    "histogram_price": q_histogram_price,
-    "json_roundtrip_agg": q_json_roundtrip_agg,
-    "levenshtein_pairs": q_levenshtein_pairs,
-    "orc_roundtrip_agg": q_orc_roundtrip_agg,
-    "q10_returned_items": q_q10_returned_items,
-    "q13_order_count_distribution": q_q13_order_count_distribution,
-    "q14_promo_revenue": q_q14_promo_revenue,
-    "q19_or_predicates": q_q19_or_predicates,
-    "q22_idle_balances": q_q22_idle_balances,
-    "q7_nation_volume": q_q7_nation_volume,
-    "q8_market_share": q_q8_market_share,
-    "scd2_priority_history": q_scd2_priority_history,
-    "skew_salted_join": q_skew_salted_join,
-    "unpivot_metrics": q_unpivot_metrics,
-    "window_first_last": q_window_first_last,
-    "window_moving_avg": q_window_moving_avg,
-    "window_ntile_percent": q_window_ntile_percent,
-    "star_flagship": q_star_flagship,
-    "q1_pricing_summary": q_q1_pricing_summary,
-    "dedup_exact": q_dedup_exact,
-    "q2_min_cost_supplier": q_q2_min_cost_supplier,
-    "q6_forecast_revenue": q_q6_forecast_revenue,
-    "q9_product_profit": q_q9_product_profit,
-    "q11_important_values": q_q11_important_values,
-    "q12_priority_class": q_q12_priority_class,
-    # --- last green r09 ---
-    "jaccard_prefix_join": q_jaccard_prefix_join,
-    "bootstrap_ci_report": q_bootstrap_ci_report,
-    "mutual_information_report": q_mutual_information_report,
-    "welch_ttest_report": q_welch_ttest_report,
-    "pareto_frontier_parts": q_pareto_frontier_parts,
-    "kaplan_meier_survival": q_kaplan_meier_survival,
-    "multitouch_attribution": q_multitouch_attribution,
-    "bleu_overlap_report": q_bleu_overlap_report,
-    "graph_spectral_partition": q_graph_spectral_partition,
-    "fuzzy_name_pairs": q_fuzzy_name_pairs,
-    "ols_daily_trend": q_ols_daily_trend,
-    "time_weighted_value": q_time_weighted_value,
-    "conversion_wilson_ci": q_conversion_wilson_ci,
-    "fd_violation_report": q_fd_violation_report,
-    "phrase_search_hits": q_phrase_search_hits,
-    "item_cooccurrence_topk": q_item_cooccurrence_topk,
-    "scd2_customer_priority": q_scd2_customer_priority,
-    "capped_running_balance": q_capped_running_balance,
-    "did_estimate_report": q_did_estimate_report,
-    "rolling_wau_report": q_rolling_wau_report,
-    "cohort_ltv_curve": q_cohort_ltv_curve,
-    "abc_classification": q_abc_classification,
-    "graph_weighted_distances": q_graph_weighted_distances,
-    "correlation_matrix": q_correlation_matrix,
-    "cramers_v_status_priority": q_cramers_v_status_priority,
-    "dsir_selection_report": q_dsir_selection_report,
-    "part_hierarchy_rollup": q_part_hierarchy_rollup,
-    "snm_blocking_report": q_snm_blocking_report,
-    "window_cume_dist": q_window_cume_dist,
-    "intersect_all_priorities": q_intersect_all_priorities,
-    "rrf_fusion_topk": q_rrf_fusion_topk,
-    "ndcg_report": q_ndcg_report,
-    "graph_bfs_depths": q_graph_bfs_depths,
-    "graph_kcore": q_graph_kcore,
-    "js_divergence_sources": q_js_divergence_sources,
-    "t_closeness_report": q_t_closeness_report,
-    "bm25_topk": q_bm25_topk,
-    "rank_correlation_report": q_rank_correlation_report,
-    "trimmed_mean_by_group": q_trimmed_mean_by_group,
-    "graph_hits": q_graph_hits,
-    "events_stream_unattributed": q_events_stream_unattributed,
-    "quality_auc_report": q_quality_auc_report,
-    "quality_calibration_report": q_quality_calibration_report,
-    "source_ks_drift": q_source_ks_drift,
-    "blocking_quality_report": q_blocking_quality_report,
-    "theil_sen_daily_trend": q_theil_sen_daily_trend,
-    "good_turing_unigrams": q_good_turing_unigrams,
-    "weighted_median_by_group": q_weighted_median_by_group,
-    "matryoshka_recall_report": q_matryoshka_recall_report,
-    "bloom_fpr_report": q_bloom_fpr_report,
-    # --- rows-only (no DuckDB oracle; driver records rows-only check) ---
-    "simhash_candidates": q_simhash_candidates,
-    "distinct_users_rollup": q_distinct_users_rollup,
-    "approx_aggregates": q_approx_aggregates,
-}
+# Ordering contract: the grading driver sweeps the FIRST 50 names;
+# new queries are ALWAYS inserted at the head (never-graded first —
+# tests/test_oracle_parity.py::test_grading_window_invariants enforces
+# the rotation). Each name ``n`` binds the function ``q_<n>`` defined
+# in exactly one of QUERY_MODULES.
+QUERY_NAMES: tuple[str, ...] = (
+    "bpe_train_merges",
+    "bpe_tokenized_stats",
+    "bpe_pack_manifest",
+    "dpp_join_prune_agg",
+    "recursive_cte_ancestor_paths",
+    "pipe_syntax_pricing",
+    "collated_dedup_counts",
+    "lateral_topn_orders",
+    "sql_scripting_rollup",
+    "quality_perceptron_trajectory",
+    "classifier_curation_manifest",
+    "documents_stream_classifier_scores",
+    "events_stream_state_split",
+    "documents_stream_near_dup",
+    "events_tws_evolved_totals",
+    "events_tws_state_at_rest",
+    "events_tws_restart_totals",
+    "events_tws_ttl_counts",
+    "preference_dataset_manifest",
+    "char_entropy_per_doc",
+    "lorenz_curve_events",
+    "cube_status_priority",
+    "price_stats_by_status",
+    "part_string_ops",
+    "csv_roundtrip_agg",
+    "clean_corpus",
+    "q1_pricing_summary_sql",
+    "doc_fingerprints",
+    "lang_id",
+    "quality_scores",
+    "ngram_jaccard_pairs",
+    "multimodal_features",
+    "customers_without_orders",
+    "customers_with_orders_count",
+    "custkeys_both_years",
+    "project_rename_filter",
+    "dedup_components_star",
+    "decontaminate_overlap",
+    "scd1_merge_agg",
+    "idempotent_append_agg",
+    "token_frequency",
+    "stratified_sample",
+    "tfidf_top_terms",
+    "source_quota",
+    "repetition_stats",
+    "window_rank_topn",
+    "ivf_recall_report",
+    "simhash_twin_containment",
+    "price_percentile_bands",
+    "events_asof_next_purchase",
+    "simhash_near_dup_clusters",
+    "embedding_pca_top",
+    "readability_scores",
+    "embedding_dim_robust_stats",
+    "embedding_outlier_report",
+    "events_stream_static_enrich",
+    "schema_evolution_agg",
+    "countmin_heavy_hitters",
+    "hll_manual_report",
+    "ann_ivf_topk",
+    "rfm_segments",
+    "events_stream_hourly_daily",
+    "graph_pagerank",
+    "bpe_token_counts",
+    "corr_price_quantity",
+    "dedup_components",
+    "curation_pack_manifest",
+    "image_decode_stats",
+    "events_tws_sessions",
+    "events_tws_timeout_sessions",
+    "events_tws_user_profile",
+    "events_tws_warm_start",
+    "preference_bt_strengths",
+    "custkeys_1998_not_1999",
+    "pivot_status_priority",
+    "events_sessionize",
+    "events_json_kv",
+    "events_sliding",
+    "events_distinct_pairs",
+    "events_asof_purchase_click",
+    "char_jaccard_pairs",
+    "distinct_counts",
+    "events_stream_sliding",
+    "embedding_topk",
+    "text_stats",
+    "dim_state",
+    "dim_date",
+    "dim_category",
+    "region_rollup",
+    "topk_customers",
+    "shipping_priority",
+    "events_tumbling",
+    "window_running_sum",
+    "local_supplier_volume",
+    "above_avg_orders",
+    "group_count_ordered",
+    "conditional_flag_agg",
+    "ship_delay_by_priority",
+    "scalable_rank_events",
+    "token_coverage_topk",
+    "touch_attribution",
+    "temperature_resample",
+    "kneser_ney_bigrams",
+    "shard_balance_report",
+    "ngram_novelty_curve",
+    "ccnet_quality_tiers",
+    "ann_pq_topk",
+    "pq_recall_report",
+    "negative_sampling_table",
+    "tokenizer_fertility",
+    "daily_trend_by_type",
+    "events_mad_anomaly",
+    "user_activity_streaks",
+    "traffic_burstiness",
+    "rake_keywords",
+    "media_frame_stats",
+    "session_interval_overlap",
+    "benford_price_audit",
+    "dedup_cluster_histogram",
+    "bigram_entropy_rate",
+    "lexical_diversity_by_source",
+    "holt_linear_forecast",
+    "holt_winters_forecast",
+    "graph_harmonic_centrality",
+    "graph_rotor_walks",
+    "graph_betweenness",
+    "coverage_selection_report",
+    "walk_skipgram_pairs",
+    "graph_distance_distribution",
+    "community_modularity",
+    "croston_forecast",
+    "weekday_seasonal_decomposition",
+    "graph_ktruss",
+    "graph_ppr",
+    "price_index_report",
+    "tail_index_report",
+    "mean_excess_report",
+    "order_backlog_profile",
+    "atkinson_index",
+    "activity_decile_lift",
+    "pretraining_manifest",
+    "cooccurrence_cap_report",
+    "events_stream_conversions",
+    "frame_dedup_report",
+    "price_quartiles_by_brand",
+    "degree_histogram",
+    "token_length_quartiles_by_source",
+    "graph_communities",
+    "pit_priority_revenue",
+    "time_travel_agg",
+    "duplicate_ngram_spans",
+    "priority_weighted_sample",
+    "source_diversity_report",
+    "events_cusum_drift",
+    "mmr_diversified_topk",
+    "bpe_merge_candidates",
+    "hard_negative_mining",
+    "table_diff_report",
+    "sketch_accuracy_report",
+    "minhash_jaccard_estimate",
+    "bloom_prefiltered_join",
+    "events_stream_dedup",
+    "zipf_slope",
+    "l_diversity_report",
+    "quality_percentile_filter",
+    "session_bounce_rate",
+    "graph_link_prediction",
+    "perplexity_proxy",
+    "k_anonymity_report",
+    "traffic_seasonality",
+    "supplier_hhi",
+    "vocab_growth_curve",
+    "fact_star",
+    "events_stream_tumbling",
+    "transition_entropy",
+    "adamic_adar_links",
+    "association_rules_topk",
+    "abc_xyz_matrix",
+    "mase_seasonal_naive",
+    "hurst_exponent",
+    "winsorized_mean_by_status",
+    "elasticity_by_brand",
+    "ann_lsh_topk",
+    "ann_recall_report",
+    "bigram_collocations",
+    "boilerplate_stats",
+    "chi2_type_by_dow",
+    "chunk_documents",
+    "containment_pairs",
+    "curation_decision",
+    "events_ewma",
+    "events_ohlc_bars",
+    "events_stateful_sessions",
+    "events_stateful_timeout_sessions",
+    "events_stream_full_join",
+    "events_stream_left_join",
+    "minhash_dedup_pairs",
+    "events_stream_upsert",
+    "events_stream_sessions",
+    "pack_sequences",
+    "source_mixing_weights",
+    "events_variant_stats",
+    "jsonl_pyds_roundtrip_agg",
+    "pystream_replay_agg",
+    "range_clustered_prune_agg",
+    "yoy_customer_activity",
+    "semantic_dedup",
+    "seq_length_histogram",
+    "user_triangle_counts",
+    "inverted_index",
+    "source_overlap_report",
+    "user_clustering_coeffs",
+    "quantized_topk",
+    "zorder_layout_report",
+    "skipgram_cooccurrence",
+    "exact_median_by_group",
+    "rolling_active_users",
+    "events_twap",
+    "gini_by_status",
+    "session_paths",
+    "exact_quartiles_by_status",
+    "session_basket_lift",
+    "knn_label_vote",
+    "lang_confusion_matrix",
+    "fellegi_sunter_linkage",
+    "theil_index_by_status",
+    "markov_stationary",
+    "winnowing_fingerprints",
+    "embedding_similarity_histogram",
+    "psi_drift_report",
+    "acf_daily_revenue",
+    "binseg_changepoint",
+    "mann_whitney_report",
+    "funnel_latency_percentiles",
+    "kendall_tau_nations",
+    "graph_assortativity",
+    "cohens_kappa_quality",
+    "session_window_native",
+    "interpurchase_gap_percentiles",
+    "cdc_apply_agg",
+    "cohort_retention",
+    "compaction_roundtrip_agg",
+    "dedup_canonical_docs",
+    "domain_mix_report",
+    "dq_quarantine_report",
+    "embedding_near_dup_exact",
+    "embedding_norms",
+    "error_blast_radius",
+    "event_transition_matrix",
+    "events_anomaly_zscore",
+    "events_funnel",
+    "events_gap_fill",
+    "events_lag_lead",
+    "grouping_sets_status_year",
+    "incremental_rollup_agg",
+    "label_centroid_distances",
+    "length_filter_funnel",
+    "nation_share_of_region",
+    "null_safe_join_agg",
+    "oov_rate",
+    "partitioned_prune_agg",
+    "pii_scrub",
+    "priority_mode_by_status",
+    "q15_top_supplier",
+    "q16_supplier_part_counts",
+    "q17_small_qty_revenue",
+    "q18_large_orders",
+    "q20_promo_part_suppliers",
+    "q21_waiting_suppliers",
+    "q4_order_priority",
+    "range_join_price_bands",
+    "train_val_test_split",
+    "ab_experiment_report",
+    "ann_ivf_anchor_topk",
+    "simhash_md5_candidates",
+    "dq_star_report",
+    "embedding_dim_stats",
+    "embedding_quantization",
+    "except_all_priorities",
+    "hash_sample",
+    "histogram_price",
+    "json_roundtrip_agg",
+    "levenshtein_pairs",
+    "orc_roundtrip_agg",
+    "q10_returned_items",
+    "q13_order_count_distribution",
+    "q14_promo_revenue",
+    "q19_or_predicates",
+    "q22_idle_balances",
+    "q7_nation_volume",
+    "q8_market_share",
+    "scd2_priority_history",
+    "skew_salted_join",
+    "unpivot_metrics",
+    "window_first_last",
+    "window_moving_avg",
+    "window_ntile_percent",
+    "star_flagship",
+    "q1_pricing_summary",
+    "dedup_exact",
+    "q2_min_cost_supplier",
+    "q6_forecast_revenue",
+    "q9_product_profit",
+    "q11_important_values",
+    "q12_priority_class",
+    "jaccard_prefix_join",
+    "bootstrap_ci_report",
+    "mutual_information_report",
+    "welch_ttest_report",
+    "pareto_frontier_parts",
+    "kaplan_meier_survival",
+    "multitouch_attribution",
+    "bleu_overlap_report",
+    "graph_spectral_partition",
+    "fuzzy_name_pairs",
+    "ols_daily_trend",
+    "time_weighted_value",
+    "conversion_wilson_ci",
+    "fd_violation_report",
+    "phrase_search_hits",
+    "item_cooccurrence_topk",
+    "scd2_customer_priority",
+    "capped_running_balance",
+    "did_estimate_report",
+    "rolling_wau_report",
+    "cohort_ltv_curve",
+    "abc_classification",
+    "graph_weighted_distances",
+    "correlation_matrix",
+    "cramers_v_status_priority",
+    "dsir_selection_report",
+    "part_hierarchy_rollup",
+    "snm_blocking_report",
+    "window_cume_dist",
+    "intersect_all_priorities",
+    "rrf_fusion_topk",
+    "ndcg_report",
+    "graph_bfs_depths",
+    "graph_kcore",
+    "js_divergence_sources",
+    "t_closeness_report",
+    "bm25_topk",
+    "rank_correlation_report",
+    "trimmed_mean_by_group",
+    "graph_hits",
+    "events_stream_unattributed",
+    "quality_auc_report",
+    "quality_calibration_report",
+    "source_ks_drift",
+    "blocking_quality_report",
+    "theil_sen_daily_trend",
+    "good_turing_unigrams",
+    "weighted_median_by_group",
+    "matryoshka_recall_report",
+    "bloom_fpr_report",
+    "simhash_candidates",
+    "distinct_users_rollup",
+    "approx_aggregates",
+)
+
+
+def _resolve(
+    names: Sequence[str], modules: Iterable[ModuleType]
+) -> dict[str, QueryFn]:
+    """Bind each name to the ``q_<name>`` function defined in one of
+    ``modules``. A function counts where ``fn.__module__`` says it was
+    defined, so re-exports are ignored. Raises, naming the offenders,
+    if a name binds to no function or to two, is listed twice, or if a
+    defined ``q_*`` function is missing from ``names``."""
+    defined: dict[str, list[QueryFn]] = {}
+    for mod in modules:
+        for attr, fn in vars(mod).items():
+            if (
+                attr.startswith("q_")
+                and inspect.isfunction(fn)
+                and fn.__module__ == mod.__name__
+            ):
+                defined.setdefault(attr[2:], []).append(fn)
+    problems = {
+        "no function": [n for n in names if n not in defined],
+        "two functions": sorted(n for n, fns in defined.items() if len(fns) > 1),
+        "listed twice": sorted(
+            n for n, c in collections.Counter(names).items() if c > 1
+        ),
+        "not listed": sorted(set(defined) - set(names)),
+    }
+    problems = {k: v for k, v in problems.items() if v}
+    if problems:
+        raise RuntimeError(f"query registry out of sync: {problems}")
+    return {n: defined[n][0] for n in names}
+
+
+_QUERIES = _resolve(QUERY_NAMES, QUERY_MODULES)
+
+#: Registry entries that run a Structured Streaming query (state-store
+#: init, checkpoint dir, one or two AvailableNow runs — a fixed
+#: ~3-30 s setup each, regardless of sf): every name containing
+#: ``stream``, ``tws`` or ``stateful``. ``certify --tier`` routes these
+#: to a DEDICATED process while the batch tier shards round-robin, so
+#: the streaming tier's fixed costs stop inflating every batch shard.
+STREAMING_QUERIES: frozenset[str] = frozenset(
+    n for n in QUERY_NAMES if "stream" in n or "tws" in n or "stateful" in n
+)
 
 
 def queries() -> dict[str, QueryFn]:
@@ -963,5 +495,5 @@ def oracle_sql() -> dict[str, str]:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full star-schema build + rollup at sf0.001."""
     ensure_runtime_confs(spark)
+    q_star_flagship = _QUERIES["star_flagship"]
     return q_star_flagship(spark, "/root/testdata/sf0.001")
-

@@ -10,7 +10,9 @@ def test_scalable_rank_matches_plain_row_number(spark, sf_dir):
     row_number over the same total order — including under the skew
     of the real fixture distribution."""
     from pyspark.sql import Window
-    from kickstarter_etl_pipeline_spark.queries import q_scalable_rank_events
+    from kickstarter_etl_pipeline_spark.operators.lm_queries import (
+        q_scalable_rank_events,
+    )
     from kickstarter_etl_pipeline_spark.sources.readers import load_table
 
     two_phase = q_scalable_rank_events(spark, sf_dir)
@@ -32,7 +34,7 @@ def test_pq_every_vector_gets_m_codes(spark, sf_dir):
     """The PQ code assignment must produce exactly one code per
     (vector, subspace) — a missing or duplicated code silently corrupts
     every downstream ADC distance."""
-    from kickstarter_etl_pipeline_spark.queries import q_ann_pq_topk
+    from kickstarter_etl_pipeline_spark.operators.lm_queries import q_ann_pq_topk
 
     # the query's output is rank-limited; probe the invariant through
     # the result shape instead: every query must have exactly 5 ranked
@@ -77,7 +79,7 @@ def test_touch_attribution_handcrafted(spark):
 def test_kneser_ney_rows_and_bounds(spark, sf_dir):
     """KN probabilities are proper probabilities: in (0, 1], and the
     discounted main term never exceeds the raw MLE ratio."""
-    from kickstarter_etl_pipeline_spark.queries import q_kneser_ney_bigrams
+    from kickstarter_etl_pipeline_spark.operators.lm_queries import q_kneser_ney_bigrams
 
     rows = q_kneser_ney_bigrams(spark, sf_dir).collect()
     assert rows, "top-50 bigram table must be non-empty"
@@ -114,7 +116,9 @@ def test_novelty_first_doc_is_fully_novel(spark):
 def test_temperature_resample_flattens(spark, sf_dir):
     """τ < 1 must flatten the distribution: the max source share can
     only shrink, the min can only grow (relative ordering preserved)."""
-    from kickstarter_etl_pipeline_spark.queries import q_temperature_resample
+    from kickstarter_etl_pipeline_spark.operators.lm_queries import (
+        q_temperature_resample,
+    )
 
     rows = q_temperature_resample(spark, sf_dir).collect()
     assert rows

@@ -301,7 +301,9 @@ def test_t_closeness_flag_is_exact(spark, sf_dir):
     cross-multiplication, never by the rounded float EMD — so wherever
     the reported EMD is clear of the 0.2 boundary, the two must agree;
     and class sizes must partition the corpus."""
-    from kickstarter_etl_pipeline_spark.queries import q_t_closeness_report
+    from kickstarter_etl_pipeline_spark.operators.mining_queries import (
+        q_t_closeness_report,
+    )
 
     rows = q_t_closeness_report(spark, sf_dir).collect()
     assert rows
@@ -352,7 +354,9 @@ def test_bpe_train_matches_reference_algorithm(spark, sf_dir):
     import re
     from collections import Counter
 
-    from kickstarter_etl_pipeline_spark.queries import q_bpe_train_merges
+    from kickstarter_etl_pipeline_spark.operators.mining_queries import (
+        q_bpe_train_merges,
+    )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     words = Counter()
@@ -403,7 +407,7 @@ def test_bpe_tokenized_stats_consistent_with_training(spark, sf_dir):
     symbol total under all 8 merges), every fertility is >= 1e6
     (a merge never splits a word), and n_chars >= bpe_tokens (a
     symbol is >= 1 char)."""
-    from kickstarter_etl_pipeline_spark.queries import (
+    from kickstarter_etl_pipeline_spark.operators.mining_queries import (
         q_bpe_tokenized_stats,
         q_bpe_train_merges,
     )
@@ -426,7 +430,7 @@ def test_bpe_pack_consistent_with_family(spark, sf_dir):
     are monotone in doc order within every source."""
     from collections import defaultdict
 
-    from kickstarter_etl_pipeline_spark.queries import (
+    from kickstarter_etl_pipeline_spark.operators.mining_queries import (
         q_bpe_pack_manifest,
         q_bpe_train_merges,
     )

@@ -105,23 +105,16 @@ def test_entry_smoke(spark):
 
 
 def test_registry_has_no_duplicate_keys():
-    """Duplicate keys in a dict literal are silent in Python (later
-    binding wins) but they corrupt the 50-slot window arithmetic the
-    rotation comments reason about — parse the source and reject them."""
+    """A repeated name would corrupt the 50-slot window arithmetic the
+    rotation contract reasons about; the ordered name list must hold
+    each query exactly once."""
     import collections
-    import os
-    import re
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    src = open(
-        os.path.join(root, "kickstarter_etl_pipeline_spark", "queries.py")
-    ).read()
-    body = re.search(
-        r"_QUERIES: dict\[str, QueryFn\] = \{(.*?)\n\}", src, re.S
-    ).group(1)
-    keys = re.findall(r'^\s*"([a-z0-9_]+)":', body, re.M)
-    dupes = [k for k, c in collections.Counter(keys).items() if c > 1]
+    from kickstarter_etl_pipeline_spark.queries import QUERY_NAMES
+
+    dupes = [k for k, c in collections.Counter(QUERY_NAMES).items() if c > 1]
     assert not dupes, f"duplicate registry keys: {dupes}"
+    assert list(QUERIES) == list(QUERY_NAMES)
 
 
 def test_grading_window_invariants():
@@ -200,13 +193,8 @@ def test_coverage_inventory_is_complete():
     import re
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    src = open(
-        os.path.join(root, "kickstarter_etl_pipeline_spark", "queries.py")
-    ).read()
-    body = re.search(r"_QUERIES: dict\[str, QueryFn\] = \{(.*?)\n\}", src, re.S).group(1)
-    keys = re.findall(r'^\s*"([a-z0-9_]+)":', body, re.M)
     cov = open(os.path.join(root, "COVERAGE.md")).read()
-    missing = [k for k in keys if f"`{k}`" not in cov]
+    missing = [k for k in QUERIES if f"`{k}`" not in cov]
     assert not missing, f"registry entries absent from COVERAGE.md: {missing}"
     # r7 verdict task 8: the doc-count line must track the registry so
     # the r6-style drift (inventory rows silently diverging from the

@@ -12,10 +12,10 @@ from contextlib import redirect_stdout
 
 from pyspark.sql import functions as F
 
-from kickstarter_etl_pipeline_spark.queries import (
+from kickstarter_etl_pipeline_spark.plans.tpch_queries import q_q1_pricing_summary
+from kickstarter_etl_pipeline_spark.qdefs_star_events import (
     q_fact_star,
     q_project_rename_filter,
-    q_q1_pricing_summary,
 )
 
 
@@ -63,7 +63,7 @@ def test_q7_broadcasts_all_dims(spark, sf_dir):
     """The 6-way Q7 join must broadcast supplier and both nation roles —
     the only shuffle joins allowed are the two fact-sized ones
     (lineitem⋈orders⋈customer)."""
-    from kickstarter_etl_pipeline_spark.queries import q_q7_nation_volume
+    from kickstarter_etl_pipeline_spark.plans.tpch_queries import q_q7_nation_volume
 
     plan = explain_str(q_q7_nation_volume(spark, sf_dir))
     assert plan.count("BroadcastHashJoin") >= 3
@@ -75,7 +75,9 @@ def test_range_join_is_broadcast_nested_loop(spark, sf_dir):
     """The interval join against the 4-row band table must be ONE pass
     over the fact with a broadcast probe — BroadcastNestedLoopJoin, not
     a shuffle (CartesianProduct would mean the broadcast was lost)."""
-    from kickstarter_etl_pipeline_spark.queries import q_range_join_price_bands
+    from kickstarter_etl_pipeline_spark.operators.analytics_queries import (
+        q_range_join_price_bands,
+    )
 
     plan = explain_str(q_range_join_price_bands(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan
@@ -85,7 +87,7 @@ def test_range_join_is_broadcast_nested_loop(spark, sf_dir):
 def test_hash_sample_prunes_columns(spark, sf_dir):
     """The deterministic sample is a scan-level filter + 3-column read —
     no shuffle, no join, nothing wide."""
-    from kickstarter_etl_pipeline_spark.queries import q_hash_sample
+    from kickstarter_etl_pipeline_spark.operators.corpus_queries import q_hash_sample
 
     plan = explain_str(q_hash_sample(spark, sf_dir))
     read_schema = [line for line in plan.splitlines() if "ReadSchema" in line][0]
@@ -97,7 +99,7 @@ def test_q6_pushes_all_three_predicates(spark, sf_dir):
     """Q6 is the pushdown canary: date range, discount range, and
     quantity bound must ALL reach the parquet scan, and the read schema
     must carry only the columns the query touches."""
-    from kickstarter_etl_pipeline_spark.queries import q_q6_forecast_revenue
+    from kickstarter_etl_pipeline_spark.plans.tpch_queries import q_q6_forecast_revenue
 
     plan = explain_str(q_q6_forecast_revenue(spark, sf_dir))
     assert "PushedFilters" in plan
@@ -117,7 +119,7 @@ def test_q9_broadcasts_all_dims(spark, sf_dir):
     """Q9's part/supplier/nation joins must all broadcast; lineitem
     shuffles exactly once — for the final (nation, year) aggregate —
     with map-side partial aggregation below it."""
-    from kickstarter_etl_pipeline_spark.queries import q_q9_product_profit
+    from kickstarter_etl_pipeline_spark.plans.tpch_queries import q_q9_product_profit
 
     plan = explain_str(q_q9_product_profit(spark, sf_dir))
     assert plan.count("BroadcastHashJoin") >= 3
@@ -131,7 +133,7 @@ def test_q2_argmin_joinback_broadcasts_the_min_side(spark, sf_dir):
     """The per-part min frame and all dims ride broadcasts; the only
     shuffles are the two aggregates over the (part, supplier) lattice.
     Nested-loop would mean the equality join-back lost its key."""
-    from kickstarter_etl_pipeline_spark.queries import q_q2_min_cost_supplier
+    from kickstarter_etl_pipeline_spark.plans.tpch_queries import q_q2_min_cost_supplier
 
     plan = explain_str(q_q2_min_cost_supplier(spark, sf_dir))
     assert plan.count("BroadcastHashJoin") >= 3
@@ -143,7 +145,7 @@ def test_q15_scalar_max_stays_distributed(spark, sf_dir):
     """The MAX-revenue scalar must reach the filter as a broadcast
     (nested-loop over ONE row), never via a driver collect — the plan
     still ends in a join, and the revenue view aggregates partially."""
-    from kickstarter_etl_pipeline_spark.queries import q_q15_top_supplier
+    from kickstarter_etl_pipeline_spark.plans.tpch_queries import q_q15_top_supplier
 
     plan = explain_str(q_q15_top_supplier(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
@@ -172,7 +174,7 @@ def test_shuffle_hash_hint_honored(spark, sf_dir):
 def test_pack_sequences_single_shuffle(spark, sf_dir):
     """Packing is one shuffle on the shard key: a single Exchange
     (hashpartitioning on source for the window), no joins."""
-    from kickstarter_etl_pipeline_spark.queries import q_pack_sequences
+    from kickstarter_etl_pipeline_spark.qdefs_star_events import q_pack_sequences
 
     plan = explain_str(q_pack_sequences(spark, sf_dir), mode="simple")
     assert plan.count("Exchange") == 1
@@ -183,7 +185,7 @@ def test_source_mixing_broadcasts_totals(spark, sf_dir):
     """The one-row totals frame must reach the per-source rows as a
     broadcast (nested-loop over ONE row), never via a driver collect,
     and the per-source aggregate must combine map-side."""
-    from kickstarter_etl_pipeline_spark.queries import q_source_mixing_weights
+    from kickstarter_etl_pipeline_spark.qdefs_star_events import q_source_mixing_weights
 
     plan = explain_str(q_source_mixing_weights(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
@@ -195,7 +197,7 @@ def test_chunk_documents_no_shuffle(spark, sf_dir):
     """Chunking is embarrassingly parallel: explode fan-out with zero
     Exchange in the plan (AQE read repartition aside, there is no
     aggregation or join to shuffle for)."""
-    from kickstarter_etl_pipeline_spark.queries import q_chunk_documents
+    from kickstarter_etl_pipeline_spark.qdefs_star_events import q_chunk_documents
 
     plan = explain_str(q_chunk_documents(spark, sf_dir), mode="simple")
     assert "Join" not in plan
@@ -210,7 +212,7 @@ def test_semantic_dedup_join_condition_is_dot_only(spark, sf_dir):
     kernel, plus the anchor-assignment kernel) and NO zip_with fold in
     any join condition — a zip_with reappearing there would mean the
     per-pair JVM recompute came back."""
-    from kickstarter_etl_pipeline_spark.queries import q_semantic_dedup
+    from kickstarter_etl_pipeline_spark.operators.corpus_queries import q_semantic_dedup
 
     plan = explain_str(q_semantic_dedup(spark, sf_dir))
     assert "ArrowEvalPython" in plan, "pair-dot Arrow kernel missing from plan"
@@ -224,7 +226,9 @@ def test_bigram_collocations_topk_is_take_ordered(spark, sf_dir):
     """Global top-k must be TakeOrderedAndProject (distributed heaps),
     never a global Sort + Limit single reducer, and the unigram table
     must broadcast into the pair table."""
-    from kickstarter_etl_pipeline_spark.queries import q_bigram_collocations
+    from kickstarter_etl_pipeline_spark.operators.corpus_queries import (
+        q_bigram_collocations,
+    )
 
     plan = explain_str(q_bigram_collocations(spark, sf_dir))
     assert "TakeOrderedAndProject" in plan
@@ -235,7 +239,9 @@ def test_bloom_prefilter_broadcasts_bitmap(spark, sf_dir):
     """The bloom bitmap (<= n_bits/64 rows) must ride a broadcast join
     onto the fact — a shuffle there would defeat the prefilter's
     purpose — and the pattern must introduce no nested-loop join."""
-    from kickstarter_etl_pipeline_spark.queries import q_bloom_prefiltered_join
+    from kickstarter_etl_pipeline_spark.operators.mining_queries import (
+        q_bloom_prefiltered_join,
+    )
 
     plan = explain_str(q_bloom_prefiltered_join(spark, sf_dir))
     assert plan.count("BroadcastHashJoin") >= 2  # bitmap probe + exact dim join
@@ -246,7 +252,9 @@ def test_bloom_prefilter_broadcasts_bitmap(spark, sf_dir):
 def test_duplicate_ngram_spans_prunes_columns(spark, sf_dir):
     """The span stats read only (doc_id, text) from the documents scan —
     lang/source/n_chars must be pruned."""
-    from kickstarter_etl_pipeline_spark.queries import q_duplicate_ngram_spans
+    from kickstarter_etl_pipeline_spark.operators.mining_queries import (
+        q_duplicate_ngram_spans,
+    )
 
     plan = explain_str(q_duplicate_ngram_spans(spark, sf_dir))
     read_schemas = [line for line in plan.splitlines() if "ReadSchema" in line]
@@ -258,7 +266,9 @@ def test_duplicate_ngram_spans_prunes_columns(spark, sf_dir):
 def test_hard_negative_mining_broadcasts_queries(spark, sf_dir):
     """The 20-anchor side must broadcast against the corpus scan (the
     embedding_topk shape) — no shuffle of the corpus."""
-    from kickstarter_etl_pipeline_spark.queries import q_hard_negative_mining
+    from kickstarter_etl_pipeline_spark.operators.mining_queries import (
+        q_hard_negative_mining,
+    )
 
     plan = explain_str(q_hard_negative_mining(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
@@ -266,7 +276,7 @@ def test_hard_negative_mining_broadcasts_queries(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_threshold_curve_queries_have_no_outer_bnlj(spark, sf_dir):
+def test_threshold_curve_queries_have_no_outer_bnlj(spark, sf_dir, monkeypatch):
     """Threshold-curve family (lorenz_curve_events, vocab_growth_curve):
     the round-6 drafts left-joined 10 threshold rows onto a DATA-sized
     table on `value <= thr` — a LEFT-outer BroadcastNestedLoopJoin must
@@ -274,21 +284,50 @@ def test_threshold_curve_queries_have_no_outer_bnlj(spark, sf_dir):
     The round-7 prefix-sum shape allows BNLJ only for the deliberate
     one-row scalar cross-joins (Inner/Cross, broadcasting the 1-row
     side); any OUTER nested-loop join here is a regression. The decile
-    lookups themselves must be broadcast HASH joins."""
-    from kickstarter_etl_pipeline_spark.queries import (
-        q_lorenz_curve_events,
+    lookups themselves must be broadcast HASH joins.
+
+    vocab_growth_curve collects its 10-row decile frame for the prefix
+    sums (collected_offsets), so its final plan is a driver-literal
+    scan; its decile joins are checked on the frame handed to that
+    collect."""
+    from kickstarter_etl_pipeline_spark.operators import lm_queries
+    from kickstarter_etl_pipeline_spark.operators.corpus_queries import (
         q_vocab_growth_curve,
     )
+    from kickstarter_etl_pipeline_spark.operators.mining_queries import (
+        q_lorenz_curve_events,
+    )
 
-    for q in (q_lorenz_curve_events, q_vocab_growth_curve):
-        plan = explain_str(q(spark, sf_dir))
+    collected = []
+    real_collected_offsets = lm_queries.collected_offsets
+
+    def spy(counts, *args, **kwargs):
+        collected.append(counts)
+        return real_collected_offsets(counts, *args, **kwargs)
+
+    monkeypatch.setattr(lm_queries, "collected_offsets", spy)
+
+    lorenz = explain_str(q_lorenz_curve_events(spark, sf_dir))
+    assert not collected
+    vocab = explain_str(q_vocab_growth_curve(spark, sf_dir))
+    (decile_frame,) = collected
+    vocab_deciles = explain_str(decile_frame)
+    assert "Scan ExistingRDD" in vocab and "Join" not in vocab
+
+    for name, plan in (
+        ("lorenz_curve_events", lorenz),
+        ("vocab_growth_curve", vocab),
+        ("vocab_growth_curve deciles", vocab_deciles),
+    ):
         bnlj_lines = [
             line for line in plan.splitlines() if "BroadcastNestedLoopJoin" in line
         ]
         outer = [line for line in bnlj_lines if "Outer" in line]
-        assert not outer, f"{q.__name__}: outer BNLJ present: {outer}"
-        assert "CartesianProduct" not in plan
-        assert "BroadcastHashJoin" in plan  # the threshold equi-joins
+        assert not outer, f"{name}: outer BNLJ present: {outer}"
+        assert "CartesianProduct" not in plan, name
+    # the threshold equi-joins
+    assert "BroadcastHashJoin" in lorenz
+    assert "BroadcastHashJoin" in vocab_deciles
 
 
 def test_ann_pq_topk_is_all_broadcast_hash(spark, sf_dir):
@@ -296,7 +335,7 @@ def test_ann_pq_topk_is_all_broadcast_hash(spark, sf_dir):
     ride broadcast HASH joins onto the corpus-sized sides — a
     SortMergeJoin or nested-loop join anywhere defeats the
     8-bytes-per-vector point of product quantization."""
-    from kickstarter_etl_pipeline_spark.queries import q_ann_pq_topk
+    from kickstarter_etl_pipeline_spark.operators.lm_queries import q_ann_pq_topk
 
     plan = explain_str(q_ann_pq_topk(spark, sf_dir))
     assert plan.count("BroadcastHashJoin") >= 2  # codebook + LUT
@@ -312,7 +351,9 @@ def test_scalable_rank_single_partition_only_for_offsets(spark, sf_dir):
     pid-indexed literal array, so the consumer plan carries NO
     SinglePartition exchange at all (and no offsets window/join) —
     just a projection over the checkpointed ranked rows."""
-    from kickstarter_etl_pipeline_spark.queries import q_scalable_rank_events
+    from kickstarter_etl_pipeline_spark.operators.lm_queries import (
+        q_scalable_rank_events,
+    )
 
     plan = explain_str(q_scalable_rank_events(spark, sf_dir), mode="simple")
     assert "Exchange SinglePartition" not in plan
@@ -331,7 +372,9 @@ def test_rfm_segments_no_global_ntile_funnel(spark, sf_dir):
     its checkpoint) may funnel only the P-row offset aggregate — never
     a data-sized sort — and must carry no ntile/Window-over-data at
     all."""
-    from kickstarter_etl_pipeline_spark.queries import q_rfm_segments
+    from kickstarter_etl_pipeline_spark.operators.analytics_queries import (
+        q_rfm_segments,
+    )
 
     plan = explain_str(q_rfm_segments(spark, sf_dir), mode="simple")
     assert "ntile" not in plan.lower()
@@ -360,7 +403,7 @@ def test_two_phase_consumers_no_data_sized_funnel(spark, sf_dir):
     SinglePartition exchange in the visible plan sits directly above a
     HashAggregate (P-row offsets / 64-row dim counts — control data),
     never above raw data rows, and no ntile window appears."""
-    from kickstarter_etl_pipeline_spark.queries import (
+    from kickstarter_etl_pipeline_spark.operators.lm_queries import (
         q_embedding_dim_robust_stats,
         q_price_percentile_bands,
     )
@@ -388,10 +431,12 @@ def test_round9_tiers_no_data_sized_funnel(spark, sf_dir):
     offsets, the G-row group totals, or the grid-bounded per-score
     table — never above raw corpus rows; and no ntile/global sort of
     data appears."""
-    from kickstarter_etl_pipeline_spark.queries import (
+    from kickstarter_etl_pipeline_spark.operators.eval_queries import (
         q_quality_auc_report,
         q_rank_correlation_report,
         q_source_ks_drift,
+    )
+    from kickstarter_etl_pipeline_spark.operators.lm_queries import (
         q_trimmed_mean_by_group,
         q_weighted_median_by_group,
     )
@@ -425,7 +470,7 @@ def test_star_flagship_does_not_force_broadcast_part(spark, sf_dir):
     falls back to a shuffle join at 100 TB, where a forced hint would
     OOM the executors. The bounded dims (state: 3, category: 3 750)
     keep their hints."""
-    from kickstarter_etl_pipeline_spark.queries import q_star_flagship
+    from kickstarter_etl_pipeline_spark.qdefs_star_events import q_star_flagship
 
     logical = (
         q_star_flagship(spark, sf_dir)
@@ -444,7 +489,9 @@ def test_topk_customers_broadcasts_post_limit_side(spark, sf_dir):
     join and hint the 10-row side: the TakeOrdered sits UNDER the
     broadcast join (feeding its build side), never above it, and the
     full customer projection (linear in sf) is unhinted."""
-    from kickstarter_etl_pipeline_spark.queries import q_topk_customers
+    from kickstarter_etl_pipeline_spark.operators.analytics_queries import (
+        q_topk_customers,
+    )
 
     df = q_topk_customers(spark, sf_dir)
     logical = df._jdf.queryExecution().optimizedPlan().toString()
@@ -468,12 +515,14 @@ def test_round10_tiers_no_data_sized_funnel(spark, sf_dir):
     Every SinglePartition exchange must sit directly above a
     HashAggregate (P-row offsets / group totals), never above raw
     corpus rows."""
-    from kickstarter_etl_pipeline_spark.queries import (
-        q_binseg_changepoint,
+    from kickstarter_etl_pipeline_spark.operators.stats_queries import (
         q_funnel_latency_percentiles,
-        q_hurst_exponent,
         q_mann_whitney_report,
         q_winsorized_mean_by_status,
+    )
+    from kickstarter_etl_pipeline_spark.operators.timeseries_queries import (
+        q_binseg_changepoint,
+        q_hurst_exponent,
     )
 
     for q in (
@@ -511,7 +560,7 @@ def test_star_flagship_single_fact_shuffle_no_bnlj(spark, sf_dir):
     the fact side through an extra shuffle or degrades a join to a
     nested loop fails here structurally instead of waiting for a
     bench re-audit."""
-    from kickstarter_etl_pipeline_spark.queries import q_star_flagship
+    from kickstarter_etl_pipeline_spark.qdefs_star_events import q_star_flagship
 
     plan = (
         q_star_flagship(spark, sf_dir)
@@ -545,7 +594,7 @@ def test_frame_dedup_topk_has_no_global_sort(spark, sf_dir):
     global Sort — the difference between O(k) and a full-shuffle sort
     of every duplicated frame group at 100 TB. Also: no joins at all;
     the whole query is one fan-out + one md5-keyed aggregate."""
-    from kickstarter_etl_pipeline_spark.queries import q_frame_dedup_report
+    from kickstarter_etl_pipeline_spark.operators.lm_queries import q_frame_dedup_report
 
     plan = explain_str(q_frame_dedup_report(spark, sf_dir))
     assert "TakeOrderedAndProject" in plan, plan
@@ -561,7 +610,9 @@ def test_cap_report_never_builds_pairs(spark, sf_dir):
     the audit of the pair-join device must itself never pair-join: no
     join operators, exactly the scan → distinct → bucket-count →
     single-row rollup pipeline."""
-    from kickstarter_etl_pipeline_spark.queries import q_cooccurrence_cap_report
+    from kickstarter_etl_pipeline_spark.operators.graph_queries import (
+        q_cooccurrence_cap_report,
+    )
 
     plan = explain_str(q_cooccurrence_cap_report(spark, sf_dir))
     assert "Join" not in plan, plan
@@ -579,7 +630,7 @@ def test_holt_fold_evaluates_once_no_join_no_window(spark, sf_dir):
     forecast and MAE each re-evaluated aggregate()). Also: the whole
     query is scan -> day agg -> priority collect -> project; any Join
     or Window is a structural regression."""
-    from kickstarter_etl_pipeline_spark.queries import (
+    from kickstarter_etl_pipeline_spark.operators.timeseries_queries import (
         q_holt_linear_forecast,
         q_holt_winters_forecast,
     )
@@ -603,7 +654,9 @@ def test_harmonic_centrality_final_stage_shape(spark, sf_dir):
     — no join, no window, no sort. The per-round frontier joins live
     behind localCheckpoints (same posture as bfs_depths/kcore) and are
     bounded by pivots x edges per round by construction."""
-    from kickstarter_etl_pipeline_spark.queries import q_graph_harmonic_centrality
+    from kickstarter_etl_pipeline_spark.operators.graph_queries import (
+        q_graph_harmonic_centrality,
+    )
 
     plan = (
         q_graph_harmonic_centrality(spark, sf_dir)

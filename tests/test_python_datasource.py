@@ -97,7 +97,7 @@ def test_stream_reader_replays_in_micro_batches(spark):
     """pyeventlog must admit exactly `batches` micro-batches (offset
     counter, not one giant batch) and reproduce the batch aggregate."""
     from tests.conftest import SF_SMOKE
-    from kickstarter_etl_pipeline_spark.queries import q_pystream_replay_agg
+    from kickstarter_etl_pipeline_spark.qdefs_star_events import q_pystream_replay_agg
     from kickstarter_etl_pipeline_spark.sources.python_datasource import (
         EventLogStreamReader,
     )

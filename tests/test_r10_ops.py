@@ -57,7 +57,9 @@ def test_markov_stationary_shares_sum_to_one(spark, sf_dir):
     iteration to floor division — shares must still sum to ~1 and all
     be positive on the fixture chain (irreducible: every event type
     follows every other somewhere)."""
-    from kickstarter_etl_pipeline_spark.queries import q_markov_stationary
+    from kickstarter_etl_pipeline_spark.operators.timeseries_queries import (
+        q_markov_stationary,
+    )
 
     rows = q_markov_stationary(spark, sf_dir).collect()
     assert len(rows) == 5
@@ -72,7 +74,9 @@ def test_markov_stationary_is_a_fixpoint(spark, sf_dir):
     that DEFINES stationarity, which the oracle twin (same iteration)
     cannot itself certify."""
     from kickstarter_etl_pipeline_spark.operators import events as EV
-    from kickstarter_etl_pipeline_spark.queries import q_markov_stationary
+    from kickstarter_etl_pipeline_spark.operators.timeseries_queries import (
+        q_markov_stationary,
+    )
     from kickstarter_etl_pipeline_spark.sources.readers import load_table
     from pyspark.sql import Window
 
@@ -156,7 +160,9 @@ def test_assortativity_bounds(spark, sf_dir):
     edge count (symmetrization)."""
     from kickstarter_etl_pipeline_spark.operators.graph import cooccurrence_edges
     from kickstarter_etl_pipeline_spark.operators import events as EV
-    from kickstarter_etl_pipeline_spark.queries import q_graph_assortativity
+    from kickstarter_etl_pipeline_spark.operators.graph_queries import (
+        q_graph_assortativity,
+    )
     from kickstarter_etl_pipeline_spark.sources.readers import load_table
 
     row = q_graph_assortativity(spark, sf_dir).collect()[0]
@@ -193,7 +199,9 @@ def test_transition_entropy_bounds(spark, sf_dir):
     every state — the defining bound of Shannon entropy."""
     import math as _math
 
-    from kickstarter_etl_pipeline_spark.queries import q_transition_entropy
+    from kickstarter_etl_pipeline_spark.operators.timeseries_queries import (
+        q_transition_entropy,
+    )
 
     rows = q_transition_entropy(spark, sf_dir).collect()
     assert len(rows) == 5
@@ -205,7 +213,9 @@ def test_hurst_exponent_plausible_range(spark, sf_dir):
     """R/S analysis on a real (finite, noisy) series must produce a
     finite H in the (0, 1) open interval — the estimator's domain;
     values outside it would mean a broken block decomposition."""
-    from kickstarter_etl_pipeline_spark.queries import q_hurst_exponent
+    from kickstarter_etl_pipeline_spark.operators.timeseries_queries import (
+        q_hurst_exponent,
+    )
 
     row = q_hurst_exponent(spark, sf_dir).collect()[0]
     assert 0.0 < row["hurst_exponent"] < 1.0, row
@@ -215,7 +225,9 @@ def test_winsorized_mean_between_cuts(spark, sf_dir):
     """The winsorized mean must lie within [p05, p95] for every
     status — clamping guarantees it; a mean outside the cut interval
     would mean the clamp never applied."""
-    from kickstarter_etl_pipeline_spark.queries import q_winsorized_mean_by_status
+    from kickstarter_etl_pipeline_spark.operators.stats_queries import (
+        q_winsorized_mean_by_status,
+    )
 
     for r in q_winsorized_mean_by_status(spark, sf_dir).collect():
         assert r["p05_price"] <= r["winsorized_mean"] <= r["p95_price"], r

@@ -145,7 +145,10 @@ def test_plan_summary_reports_scale_facts(spark, sf_dir):
     """plan_summary must surface pushdown, broadcast, and codegen facts
     a pipeline can assert on at runtime."""
     from kickstarter_etl_pipeline_spark.plans.inspect import plan_summary
-    from kickstarter_etl_pipeline_spark.queries import q_project_rename_filter, q_fact_star
+    from kickstarter_etl_pipeline_spark.qdefs_star_events import (
+        q_fact_star,
+        q_project_rename_filter,
+    )
 
     s = plan_summary(q_project_rename_filter(spark, sf_dir))
     assert s["n_scans"] == 1 and s["whole_stage_codegen"]
@@ -258,7 +261,7 @@ def test_advisor_flags_each_hazard_and_passes_clean_plans(spark, sf_dir):
     sp = [f for f in advise(summary) if "SinglePartition" in f]
     assert sp and all(f.startswith("INFO") for f in sp), sp
 
-    from kickstarter_etl_pipeline_spark.queries import q_star_flagship
+    from kickstarter_etl_pipeline_spark.qdefs_star_events import q_star_flagship
 
     clean = [f for f in advise(q_star_flagship(spark, sf_dir)) if f.startswith("CRITICAL")]
     assert clean == [], clean
@@ -379,7 +382,7 @@ def test_prover_bounded_branches_demote_and_large_limit_stays(spark, sf_dir):
 
 def test_pid_control_funnel_demotes_but_global_window_stays(spark, sf_dir):
     """r14 funnel rule: a SinglePartition exchange whose INPUT is the
-    ≤P-row spark_partition_id-keyed control aggregate (two_phase_rank's
+    ≤P-row spark_partition_id-keyed control aggregate (a hand-built
     offset window) demotes to INFO — the funnel carries control data,
     not the corpus — while a raw global window over data-sized input
     keeps the WARN (pinned in the advisor hazard test too)."""
@@ -406,21 +409,17 @@ def test_pid_control_funnel_demotes_but_global_window_stays(spark, sf_dir):
     sp = [f for f in fs if "SinglePartition" in f]
     assert sp and all(f.startswith("INFO") for f in sp), fs
 
-    # HONEST LIMIT, pinned: the real two_phase_rank checkpoints the
-    # ranked rows BEFORE the control aggregate, so the plan the
-    # advisor sees starts at `Scan ExistingRDD` — the
-    # `spark_partition_id() AS _pid` definition is destroyed by the
-    # checkpoint boundary and the textual prover cannot (and must
-    # not pretend to) re-derive the ≤P bound across it. The standing
-    # WARN on checkpointed two_phase_rank consumers stays, documented
-    # in PLANS.md as the bounded control funnel.
+    # The real two_phase_rank has no global offsets window left: its
+    # ≤P per-partition offsets are collected once and ride a literal
+    # array indexed by the partition id, so its plan carries no
+    # SinglePartition exchange and the advisor has no funnel to flag.
     from kickstarter_etl_pipeline_spark.operators.lm_queries import two_phase_rank
 
     ranked = two_phase_rank(
         orders.select("o_orderkey", "o_totalprice"), ["o_totalprice", "o_orderkey"]
     )
     fs2 = advise(ranked)
-    assert [f for f in fs2 if f.startswith("WARN") and "SinglePartition" in f], fs2
+    assert not [f for f in fs2 if "SinglePartition" in f], fs2
 
 
 def test_pid_funnel_rule_rejects_mixed_keys(spark, sf_dir):

@@ -130,7 +130,7 @@ def test_q7_bucketed_single_shuffle(spark, sf_dir):
     broadcasts, and the ONLY shuffle exchange left in the plan is the
     final aggregate's — the pay-once-at-ingest pattern that makes the
     Q7/Q8 family viable at 100 TB. Results must equal the plain query."""
-    from kickstarter_etl_pipeline_spark.queries import q_q7_nation_volume
+    from kickstarter_etl_pipeline_spark.plans.tpch_queries import q_q7_nation_volume
 
     warehouse_dir = spark.conf.get("spark.sql.warehouse.dir", "").removeprefix("file:")
     for t in ("b7_lineitem", "b7_orders"):
@@ -398,7 +398,7 @@ def test_q18_bucketed_no_fact_shuffle(spark, sf_dir):
     plain query's."""
     import re
 
-    from kickstarter_etl_pipeline_spark.queries import q_q18_large_orders
+    from kickstarter_etl_pipeline_spark.plans.tpch_queries import q_q18_large_orders
 
     warehouse_dir = spark.conf.get("spark.sql.warehouse.dir", "").removeprefix("file:")
     for t in ("b18_lineitem", "b18_orders"):
@@ -464,7 +464,7 @@ def test_hits_partition_invariant(spark, sf_dir):
     edge inputs and a different loop_partitions must produce the
     identical score table."""
     from kickstarter_etl_pipeline_spark.operators.graph import hits
-    from kickstarter_etl_pipeline_spark.queries import q_graph_hits
+    from kickstarter_etl_pipeline_spark.operators.graph_queries import q_graph_hits
 
     base = {(r["role"], r["id"], r["score"])
             for r in q_graph_hits(spark, sf_dir).collect()}
@@ -490,7 +490,7 @@ def test_hits_partition_invariant(spark, sf_dir):
 def test_bm25_partition_invariant(spark, sf_dir):
     """bm25_topk's per-doc score is an exact integer sum of nano-unit
     partial scores — partitioning must not move any rank or score."""
-    from kickstarter_etl_pipeline_spark.queries import q_bm25_topk
+    from kickstarter_etl_pipeline_spark.operators.eval_queries import q_bm25_topk
 
     rows1 = [tuple(r) for r in q_bm25_topk(spark, sf_dir).collect()]
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -530,7 +530,9 @@ def test_jsd_partition_invariant(spark, sf_dir):
     spine (nano-nat grid snapped BEFORE the pair sums) — shuffle
     partition count must not move any divergence. Also pin the JSD
     bounds: 0 <= jsd <= ln 2 (+ one 6-dp grid step)."""
-    from kickstarter_etl_pipeline_spark.queries import q_js_divergence_sources
+    from kickstarter_etl_pipeline_spark.operators.corpus_queries import (
+        q_js_divergence_sources,
+    )
 
     rows1 = {tuple(r) for r in q_js_divergence_sources(spark, sf_dir).collect()}
     assert rows1
@@ -579,7 +581,9 @@ def test_hierarchy_rollup_arithmetic_identities(spark, sf_dir):
     the root (key 0) rolls up every part (subtree_count = N, value =
     total cents), every leaf has subtree_count 1 = its own cents, and
     depth equals the 4-ary ancestor-chain length floor-log formula."""
-    from kickstarter_etl_pipeline_spark.queries import q_part_hierarchy_rollup
+    from kickstarter_etl_pipeline_spark.operators.graph_queries import (
+        q_part_hierarchy_rollup,
+    )
 
     rows = {r["p_partkey"]: r for r in q_part_hierarchy_rollup(spark, sf_dir).collect()}
     n = len(rows)
@@ -613,7 +617,9 @@ def test_dsir_partition_invariant(spark, sf_dir):
     """dsir_selection_report's log weights are exact integer sums of
     grid-snapped per-bucket log-odds — shuffle partition count must
     not move any rank, weight, or selected doc."""
-    from kickstarter_etl_pipeline_spark.queries import q_dsir_selection_report
+    from kickstarter_etl_pipeline_spark.operators.lm_queries import (
+        q_dsir_selection_report,
+    )
 
     rows1 = [tuple(r) for r in q_dsir_selection_report(spark, sf_dir).collect()]
     assert len(rows1) == 100
@@ -631,7 +637,9 @@ def test_snm_partition_invariant(spark, sf_dir):
     the rank is totally ordered by (key, doc_id), so partitioning must
     not move any metric. Also pin the window arithmetic: candidates
     <= 2 passes x N x (w-1) and reduction/completeness in [0, 1]."""
-    from kickstarter_etl_pipeline_spark.queries import q_snm_blocking_report
+    from kickstarter_etl_pipeline_spark.operators.eval_queries import (
+        q_snm_blocking_report,
+    )
 
     row1 = q_snm_blocking_report(spark, sf_dir).collect()[0]
     assert row1["n_candidates"] <= 2 * row1["n_docs"] * 5
@@ -660,10 +668,14 @@ def test_round9_new_queries_plan_contracts(spark, sf_dir):
     pairing and the closure self-join must stay equi-joins — a
     CartesianProduct or broadcast nested loop anywhere means the
     rank+d / midpoint-key design regressed into an all-pairs plan."""
-    from kickstarter_etl_pipeline_spark.queries import (
-        q_dsir_selection_report,
-        q_part_hierarchy_rollup,
+    from kickstarter_etl_pipeline_spark.operators.eval_queries import (
         q_snm_blocking_report,
+    )
+    from kickstarter_etl_pipeline_spark.operators.graph_queries import (
+        q_part_hierarchy_rollup,
+    )
+    from kickstarter_etl_pipeline_spark.operators.lm_queries import (
+        q_dsir_selection_report,
     )
 
     dsir = _formatted_plan(q_dsir_selection_report(spark, sf_dir))
@@ -795,7 +807,9 @@ def test_bootstrap_ci_partition_invariant_and_sane(spark, sf_dir):
     """bootstrap_ci_report: replicate means are exact integer floor
     divisions of md5-deterministic weighted sums — partition count must
     not move a bound; CI must bracket the point estimate."""
-    from kickstarter_etl_pipeline_spark.queries import q_bootstrap_ci_report
+    from kickstarter_etl_pipeline_spark.operators.stats_queries import (
+        q_bootstrap_ci_report,
+    )
 
     rows1 = sorted(tuple(r) for r in q_bootstrap_ci_report(spark, sf_dir).collect())
     assert len(rows1) == 5
@@ -815,7 +829,9 @@ def test_mutual_information_nonneg_total_and_partition_invariant(spark, sf_dir):
     contributions) must be >= 0 up to grid noise (information
     inequality; individual source contributions may be negative), and
     the nano-nat integer sums make it partition-invariant."""
-    from kickstarter_etl_pipeline_spark.queries import q_mutual_information_report
+    from kickstarter_etl_pipeline_spark.operators.corpus_queries import (
+        q_mutual_information_report,
+    )
 
     rows1 = sorted(tuple(r) for r in q_mutual_information_report(spark, sf_dir).collect())
     total = sum(r[2] for r in rows1)
@@ -862,7 +878,9 @@ def test_pareto_frontier_dominance_and_partition_invariance(spark, sf_dir):
     and every omitted candidate dominated (checked brute-force on the
     collected candidate set — control-sized), and the result must not
     move with the shuffle partition count."""
-    from kickstarter_etl_pipeline_spark.queries import q_pareto_frontier_parts
+    from kickstarter_etl_pipeline_spark.operators.stats_queries import (
+        q_pareto_frontier_parts,
+    )
     from kickstarter_etl_pipeline_spark.sources.readers import load_table as _lt
 
     rows1 = sorted(tuple(r) for r in q_pareto_frontier_parts(spark, sf_dir).collect())
@@ -891,7 +909,9 @@ def test_kaplan_meier_curve_properties(spark, sf_dir):
     ln((n-d)/n) of the first event day (single-term prefix)."""
     import math
 
-    from kickstarter_etl_pipeline_spark.queries import q_kaplan_meier_survival
+    from kickstarter_etl_pipeline_spark.operators.stats_queries import (
+        q_kaplan_meier_survival,
+    )
 
     rows = sorted(
         (r["event_day"], r["n_at_risk"], r["n_events"], r["log_survival"])
@@ -915,7 +935,9 @@ def test_multitouch_attribution_conserves_credit(spark, sf_dir):
     purchases with at least one touchpoint in the 7-day window),
     recomputed independently here. Partition count must not move it."""
     from kickstarter_etl_pipeline_spark.operators import events as EV
-    from kickstarter_etl_pipeline_spark.queries import q_multitouch_attribution
+    from kickstarter_etl_pipeline_spark.operators.stats_queries import (
+        q_multitouch_attribution,
+    )
 
     rows1 = sorted(tuple(r) for r in q_multitouch_attribution(spark, sf_dir).collect())
     total_bp = sum(r[1] for r in rows1)
@@ -948,7 +970,9 @@ def test_bleu_overlap_bounds_and_totals(spark, sf_dir):
     brevity penalty are both <= 1 in log space <= 0), gram totals are
     strictly decreasing in n for docs long enough to have all four, and
     matched counts never exceed totals."""
-    from kickstarter_etl_pipeline_spark.queries import q_bleu_overlap_report
+    from kickstarter_etl_pipeline_spark.operators.corpus_queries import (
+        q_bleu_overlap_report,
+    )
 
     rows = q_bleu_overlap_report(spark, sf_dir).collect()
     assert rows
@@ -993,12 +1017,12 @@ def test_session4_plan_contracts(spark, sf_dir):
     equi-joins, and the bootstrap must keep its one-row broadcast-free
     single-aggregate shape (only hash aggregates, no sort of the fact
     table)."""
-    from kickstarter_etl_pipeline_spark.queries import (
+    from kickstarter_etl_pipeline_spark.operators.stats_queries import (
         q_bootstrap_ci_report,
-        q_jaccard_prefix_join,
         q_multitouch_attribution,
         q_pareto_frontier_parts,
     )
+    from kickstarter_etl_pipeline_spark.qdefs_star_events import q_jaccard_prefix_join
 
     for q in (
         q_jaccard_prefix_join,
@@ -1038,7 +1062,9 @@ def test_capped_balance_floor_binds(spark):
         df.withColumn("props", F.lit("{}")).select(
             "event_id", "ts", "user_id", "event_type", "value", "props"
         ).write.mode("overwrite").parquet(os.path.join(d, "events.parquet"))
-        from kickstarter_etl_pipeline_spark.queries import q_capped_running_balance
+        from kickstarter_etl_pipeline_spark.operators.stats_queries import (
+            q_capped_running_balance,
+        )
 
         got = {
             r["user_id"]: (r["final_balance"], r["max_balance"])

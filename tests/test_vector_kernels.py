@@ -20,7 +20,6 @@ from kickstarter_etl_pipeline_spark.operators.vector_kernels import (
     assign_cell_int,
     assign_cell_nano,
     dot_arrow,
-    pca_project_q,
     probe_cells_int,
 )
 
@@ -168,27 +167,6 @@ def test_dot_arrow_matches_hof(spark, float_df):
             assert math.isnan(k), (r["ia"], r["ib"], h, k)
         else:
             assert h == k, (r["ia"], r["ib"], h, k)
-
-
-def test_pca_project_q_matches_hof(spark, int_df):
-    w = [math.sin(j) / 8 for j in range(64)]
-    w_arr = F.array(*[F.lit(float(x)) for x in w])
-    proj = F.floor(
-        F.aggregate(
-            F.zip_with("v", w_arr, lambda c, ww: c.cast("double") * ww),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        + F.lit(0.5)
-    ).cast("long")
-    hof = {r["id"]: r["q"] for r in int_df.filter("id < 100").select("id", proj.alias("q")).collect()}
-    kern = {
-        r["id"]: r["q"]
-        for r in int_df.filter("id < 100")
-        .select("id", pca_project_q(w)(F.col("v")).alias("q"))
-        .collect()
-    }
-    assert kern == hof
 
 
 def test_mmr_grouped_pass_matches_legacy_plan(spark):

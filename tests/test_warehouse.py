@@ -10,6 +10,7 @@ import shutil
 import pytest
 
 from kickstarter_etl_pipeline_spark.logging_config import configure_logger
+from kickstarter_etl_pipeline_spark.pipeline import run_pipeline
 from kickstarter_etl_pipeline_spark.plans.star import kickstarter_star
 from kickstarter_etl_pipeline_spark.plans.warehouse import create_warehouse_schema, load_warehouse
 from tests.test_transform_kickstarter import raw_rows
@@ -48,6 +49,40 @@ def test_warehouse_load_and_query(spark):
         """
     ).collect()
     assert [(r["state_name"], r["n"]) for r in res] == [("failed", 1), ("successful", 2)]
+
+
+
+def test_run_pipeline_end_to_end(spark, tmp_path, caplog):
+    """extract → inspect → transform → load on a 4-row CSV: the load
+    counts, the logged narrative through the passed logger, and the
+    reference's None contract on a missing path."""
+    csv_path = str(tmp_path / "ks.csv")
+    raw_rows(spark).toPandas().to_csv(csv_path, index=False)
+    logger = logging.getLogger("RunPipelineTest")
+    caplog.set_level(logging.INFO, logger=logger.name)
+
+    def logged():
+        return [
+            (r.levelname, r.getMessage()) for r in caplog.records if r.name == logger.name
+        ]
+
+    counts = run_pipeline(spark, csv_path, db="wh_test", logger=logger)
+    assert counts == {"dim_state": 2, "dim_category": 3, "dim_date": 2, "fact_campaigns": 3}
+    lines = logged()
+    assert lines[0] == ("INFO", "START OF KICKSTARTER ETL PIPELINE")
+    assert lines[-1] == ("INFO", "END OF ETL PIPELINE.")
+    for line in (
+        ("INFO", "Extraction completed: 4 rows, 15 columns"),
+        ("WARNING", "Removed 1 rows with null 'name' (NOT NULL constraint)."),
+        ("INFO", "Transformation completed: 3 rows, 13 columns"),
+        ("INFO", "Null values in 'pledged_usd': 0"),
+        ("INFO", "fact_campaigns loaded with 3 records."),
+    ):
+        assert line in lines, lines
+
+    caplog.clear()
+    assert run_pipeline(spark, str(tmp_path / "missing.csv"), logger=logger) is None
+    assert logged()[-1] == ("CRITICAL", "Extraction failed — terminating execution.")
 
 
 def test_configure_logger_rotating(tmp_path=None):
