@@ -14,6 +14,7 @@ from kickstarter_etl_pipeline_spark.operators.dedup import (
 )
 from kickstarter_etl_pipeline_spark.operators.dims import build_dim_date
 from kickstarter_etl_pipeline_spark.operators.multimodal import documents_as_media, extract_features
+from kickstarter_etl_pipeline_spark.operators.ranking import ntile_exact, two_phase_rank
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.operators.similarity import (
     brute_force_topk,
@@ -154,28 +155,6 @@ def q_events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ntile_exact(rank_col, n_col, k: int):
-    """``ntile(k)`` reproduced arithmetically from a global rank and the
-    row count: the SQL-standard tile rule gives the FIRST ``n % k``
-    buckets ``floor(n/k)+1`` rows and the rest ``floor(n/k)`` — NOT the
-    equal-width ``1 + floor(k*(rank-1)/n)`` formula, which spreads the
-    remainder across the range (they diverge whenever n % k ∉ {0, k-1};
-    e.g. n=6, k=4 puts rank 4 in tile 2 vs tile 3). All operands are
-    exact longs below 2^53, so the double divisions inside floor are
-    exact; both engines agree bit-for-bit."""
-    base = F.floor(n_col / F.lit(k)).cast("long")
-    rem = (n_col % F.lit(k)).cast("long")
-    cut = (base + F.lit(1)) * rem
-    big = F.lit(1) + F.floor((rank_col - F.lit(1)) / (base + F.lit(1)))
-    # greatest() guards the n < k corner (base = 0): the branch is never
-    # taken there (cut = n bounds every rank), but keeps the unevaluated
-    # expression finite.
-    small = rem + F.lit(1) + F.floor(
-        (rank_col - F.lit(1) - cut) / F.greatest(base, F.lit(1))
-    )
-    return F.when(rank_col <= cut, big).otherwise(small).cast("int")
-
-
 def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM customer segmentation: per customer the last-order date
     (recency), order count (frequency), and exact-decimal spend
@@ -187,15 +166,15 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ntile(4)`` windows funnel the whole per-customer aggregate — at
     100 TB hundreds of millions of rows — through ONE task, three
     times. Instead each metric's global rank comes from
-    :func:`~kickstarter_etl_pipeline_spark.operators.lm_queries.two_phase_rank`
+    :func:`~kickstarter_etl_pipeline_spark.operators.ranking.two_phase_rank`
     (range-partition, rank locally, add broadcast per-partition
     offsets — no task ever holds more than its range), and the
     quartile is recovered arithmetically from (rank, n) by
-    :func:`_ntile_exact`, bit-identical to the oracle's ``ntile(4)``.
+    :func:`~kickstarter_etl_pipeline_spark.operators.ranking.ntile_exact`,
+    bit-identical to the oracle's ``ntile(4)``.
     n rides a one-row broadcast (max rank of the already-checkpointed
     first pass — no second scan of orders). One shuffle for the
     per-customer aggregate + three balanced range exchanges."""
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import two_phase_rank
 
     orders = load_table(spark, sf_dir, "orders")
     per_cust = orders.groupBy("o_custkey").agg(
@@ -222,9 +201,9 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             "last_order_date",
             "frequency",
             "monetary",
-            _ntile_exact(F.col("_r_rank"), F.col("_n_cust"), 4).alias("r_quartile"),
-            _ntile_exact(F.col("_f_rank"), F.col("_n_cust"), 4).alias("f_quartile"),
-            _ntile_exact(F.col("_m_rank"), F.col("_n_cust"), 4).alias("m_quartile"),
+            ntile_exact(F.col("_r_rank"), F.col("_n_cust"), 4).alias("r_quartile"),
+            ntile_exact(F.col("_f_rank"), F.col("_n_cust"), 4).alias("f_quartile"),
+            ntile_exact(F.col("_m_rank"), F.col("_n_cust"), 4).alias("m_quartile"),
         )
         .withColumn(
             "segment",

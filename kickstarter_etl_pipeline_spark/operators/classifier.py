@@ -52,6 +52,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from kickstarter_etl_pipeline_spark.operators.ranking import two_phase_rank
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
 
 #: Fixed epoch count, unrolled identically by the DuckDB twin
@@ -288,13 +289,12 @@ def q_classifier_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFram
     ((n_kept·1000) DIV n_docs). ONE graded query spanning train +
     inference + calibrated selection.
 
-    Scale: the global order uses lm_queries.two_phase_rank (range
+    Scale: the global order uses ranking.two_phase_rank (range
     repartition + local rank + P-row broadcast offsets — no
     single-partition window); the keep budget (n_total·600) DIV 1000
     comes from a 1-row broadcast aggregate; lang×source is an
     enumeration-bounded grid (≤ a few hundred cells at any sf).
     """
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import two_phase_rank
 
     feats = doc_feature_frame(spark, sf_dir)
     w, _ = perceptron_fit(feats)

@@ -14,6 +14,10 @@ from kickstarter_etl_pipeline_spark.operators.dedup import (
 )
 from kickstarter_etl_pipeline_spark.operators.dims import build_dim_date
 from kickstarter_etl_pipeline_spark.operators.multimodal import documents_as_media, extract_features
+from kickstarter_etl_pipeline_spark.operators.ranking import (
+    collected_offsets,
+    grouped_two_phase_rank,
+)
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.operators.similarity import brute_force_topk, lsh_topk
 from kickstarter_etl_pipeline_spark.operators.transform import fractional_days
@@ -427,8 +431,6 @@ def q_seq_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (≤ a few hundred length buckets at any corpus size) — its prefix
     # sum rides a driver literal (collected_offsets) instead of a
     # no-partition window (SinglePartition exchange)
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import collected_offsets
-
     off = collected_offsets(buckets, ["bucket_start"], [("n_tokens", "_coff")])
     total = F.broadcast(off.agg(F.sum("n_tokens").alias("_tot")))
     return (
@@ -670,8 +672,6 @@ def q_vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r15 (VERDICT r14 item 7): the 10-row decile frame is control data
     # — its prefix sums ride a driver literal (collected_offsets)
     # instead of a no-partition window (SinglePartition exchange)
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import collected_offsets
-
     joined = (
         thresholds.join(F.broadcast(vocab_b), "pct", "left")
         .join(F.broadcast(volume_b), "pct", "left")
@@ -1088,7 +1088,6 @@ def q_token_length_quartiles_by_source(spark: SparkSession, sf_dir: str) -> Data
     rank window would funnel each source through ONE task; the
     composite-key range exchange splits every source across
     partitions); the final rollup has one row per source."""
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import grouped_two_phase_rank
     from kickstarter_etl_pipeline_spark.operators.text import tokens
 
     docs = load_table(spark, sf_dir, "documents").select(

@@ -9,9 +9,11 @@ deterministic and matches the reference exactly.
 Scale note: a global-order window funnels through one partition, which is
 correct-by-construction for enumeration dims (statuses, categories:
 ≤ thousands of rows after the distinct shuffles away the fact volume).
-For high-cardinality dims use :func:`dim_with_scalable_keys`, which keeps
-the sort distributed (rangepartition + per-partition offsets) and assigns
-the same dense 1..N keys without a single-reducer window.
+For high-cardinality dims rank the distinct frame with
+:func:`~kickstarter_etl_pipeline_spark.operators.ranking.two_phase_rank`,
+which keeps the sort distributed (range partitions + per-partition
+offsets) and assigns the same dense 1..N keys without a single-reducer
+window.
 """
 
 from __future__ import annotations
@@ -38,55 +40,13 @@ def dim_from_distinct(
     # bare orderBy window, but with a partition defined, so WindowExec
     # doesn't emit its move-all-data warning on every execution (a bare
     # orderBy — or any foldable partition key like lit(0) — does).
-    # High-cardinality dims use dim_with_scalable_keys instead.
+    # High-cardinality dims use ranking.two_phase_rank instead.
     window = Window.partitionBy(F.spark_partition_id()).orderBy(*order_cols)
     return (
         df.select(*columns)
         .distinct()
         .coalesce(1)
         .withColumn(key_col, F.row_number().over(window).cast("int"))
-        .select(key_col, *columns)
-    )
-
-
-def dim_with_scalable_keys(df: DataFrame, columns: list[str], key_col: str) -> DataFrame:
-    """Dense 1..N keys without a single-partition window.
-
-    Sort-distributes via repartitionByRange, numbers rows inside each
-    partition, then adds per-partition offsets computed from partition
-    sizes (tiny driver-side list, not data). Keys equal the global-sort
-    row_number, but no stage is single-threaded — the variant to use when
-    a dimension has millions of distinct values.
-    """
-    distinct = df.select(*columns).distinct().repartitionByRange(*columns).sortWithinPartitions(*columns)
-    part_win = Window.partitionBy(F.spark_partition_id()).orderBy(*columns)
-    local = distinct.withColumn("_pid", F.spark_partition_id()).withColumn(
-        "_local_rn", F.row_number().over(part_win)
-    )
-    # Pin the physical partitioning before the two actions below: the
-    # range partitioner re-samples on each execution, so without a
-    # materialization the size-collect and the final action could see
-    # DIFFERENT pid→rows assignments, breaking key density. The eager
-    # local checkpoint makes both actions read the same stored blocks
-    # (released by the ContextCleaner when the frame is dropped).
-    local = local.localCheckpoint(eager=True)
-    sizes = local.groupBy("_pid").count().orderBy("_pid").collect()
-    offsets, running = [], 0
-    for row in sizes:
-        offsets.append((row["_pid"], running))
-        running += row["count"]
-    # Apply offsets via a broadcast equi-join on a tiny (pid, offset)
-    # frame — constant-depth plan at any partition count. (A chained
-    # when() would build a thousands-deep expression tree at thousands
-    # of partitions and blow past codegen limits.)
-    spark = df.sparkSession
-    if offsets:
-        offset_df = spark.createDataFrame(offsets, ["_pid", "_offset"])
-        keyed = local.join(F.broadcast(offset_df), on="_pid", how="inner")
-    else:
-        keyed = local.withColumn("_offset", F.lit(0))
-    return (
-        keyed.withColumn(key_col, (F.col("_local_rn") + F.col("_offset")).cast("long"))
         .select(key_col, *columns)
     )
 

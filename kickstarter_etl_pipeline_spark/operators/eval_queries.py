@@ -27,6 +27,10 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from kickstarter_etl_pipeline_spark.operators import events as EV
 from kickstarter_etl_pipeline_spark.operators import text as TX
+from kickstarter_etl_pipeline_spark.operators.ranking import (
+    collected_offsets,
+    two_phase_rank,
+)
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
 
@@ -73,8 +77,6 @@ def q_quality_auc_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct values at scale). two_phase_rank's range-partitioned
     # running sum computes the identical exact-long cumulative; the
     # exclusive prefix is the inclusive cum minus the row's own count.
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import two_phase_rank
-
     cum = two_phase_rank(per, ["q"], cum_col="n").select(
         "p", "n", (F.col("cum") - F.col("n")).cast("long").alias("cneg")
     )
@@ -160,11 +162,6 @@ def q_source_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the source's prefix offset (exact longs; the offsets ride a
     # driver literal — sources are control-sized by the same contract
     # as the limit(1000) cap below).
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import (
-        collected_offsets,
-        two_phase_rank,
-    )
-
     cum_all = two_phase_rank(per_q, ["q"], cum_col="c_all").select(
         "q", F.col("cum").cast("long").alias("cum_all")
     )
@@ -355,8 +352,6 @@ def q_rank_correlation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the value-grid table (data-derived at scale). two_phase_rank's
         # range-partitioned running sum gives the identical exact-long
         # cumulative; cum_before = inclusive cum − the row's own count.
-        from kickstarter_etl_pipeline_spark.operators.lm_queries import two_phase_rank
-
         per = base.groupBy(col).agg(F.count("*").cast("long").alias("_c"))
         return two_phase_rank(per, [col], cum_col="_c").select(
             col,
@@ -514,7 +509,6 @@ def q_snm_blocking_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense integer keys), never a range join or all-pairs. The truth
     set and candidate set are both banded pipelines; every metric is
     a ratio of exact longs. One row out."""
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import two_phase_rank
     from kickstarter_etl_pipeline_spark.qdefs_star_events import (
         q_ngram_jaccard_pairs,
     )
@@ -607,7 +601,6 @@ def q_rrf_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     no single-task window — rank-ALL is exactly the regime the scale
     path exists for); the fusion join is doc_id-keyed; top-10 is a
     TakeOrdered. The 5-term query rides a broadcast as in bm25."""
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import two_phase_rank
     from kickstarter_etl_pipeline_spark.operators.text import tokens
 
     RRF_K = 60

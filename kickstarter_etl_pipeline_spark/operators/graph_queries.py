@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from kickstarter_etl_pipeline_spark.operators import events as EV
+from kickstarter_etl_pipeline_spark.operators.ranking import collected_offsets
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
 
@@ -303,8 +304,6 @@ def q_graph_distance_distribution(spark: SparkSession, sf_dir: str) -> DataFrame
     # r15 (VERDICT r14 item 7): the ≤(rounds+1)-row depth table is
     # control data — its prefix sum rides a driver literal
     # (collected_offsets) instead of a no-partition window
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import collected_offsets
-
     off = collected_offsets(per_depth, ["depth"], [("n_pairs", "_coff")])
     total = F.broadcast(off.agg(F.sum("n_pairs").cast("long").alias("_t")))
     return (

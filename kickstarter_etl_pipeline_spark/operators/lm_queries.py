@@ -10,270 +10,17 @@ on both engines, rankings totally ordered by (value, id).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-from pyspark.sql import types as T
 
 from kickstarter_etl_pipeline_spark.constants import BENFORD_P, RAKE_STOPWORDS
 from kickstarter_etl_pipeline_spark.operators import text as TX
+from kickstarter_etl_pipeline_spark.operators.ranking import (
+    collected_offsets,
+    grouped_two_phase_rank,
+    ntile_exact,
+    two_phase_rank,
+)
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
-from kickstarter_etl_pipeline_spark.session import default_parallelism
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
-
-
-def two_phase_rank(
-    df: DataFrame,
-    order_cols: list,
-    cum_col: str | None = None,
-    n_parts: int | None = None,
-    max_col: str | None = None,
-) -> DataFrame:
-    """TWO-PHASE distributed global rank (and optional global prefix
-    sum) — the scale path that lifts the single-partition ceiling a
-    `Window.orderBy(...)` global rank otherwise hits (SCALE.md,
-    Windows): range-partition the rows by the sort key, rank (and
-    partially prefix-sum) LOCALLY within each range partition, then add
-    per-partition offsets computed from the partition aggregates — a
-    P-row bounded collect (control data, one row per range partition)
-    shipped back as a pid-indexed literal array (r15; the offsets
-    formerly rode a no-partition window + broadcast join, which put an
-    Exchange SinglePartition in every consumer plan). No partition ever
-    sees more than its range's rows; the only all-data exchange is the
-    range repartition — balanced by the range partitioner, never a
-    single task.
-
-    Adds a ``rank`` column (bit-identical to a plain global
-    row_number over ``order_cols``), when ``cum_col`` is given a
-    ``cum`` column equal to the inclusive running sum of ``cum_col``
-    in that order, and when ``max_col`` is given a ``cum_max_excl``
-    column equal to the EXCLUSIVE running max of ``max_col`` (NULL on
-    the global first row) — the prefix-aggregate family the skyline /
-    dominance operators ride. Determinism: the range partitioner's sampled
-    boundaries vary run to run, but rank/cum are pure functions of the
-    total order (``order_cols`` must be unique per row) — boundaries
-    only move rows between partitions, never change the output.
-
-    ``n_parts`` sizes the range split and is a DATA-sized knob, like
-    the graph loops' ``loop_partitions``: the default (≤8) is the
-    measured fixture optimum — the frames ranked here are usually
-    post-aggregation and small, and a wider split only adds task
-    dispatch (probed round 10: a partition-count-tracking default
-    cost +30-80% on the bench consumers at sf0.1 with identical
-    output). On a real cluster pass n_parts ≈ rows / the per-task row
-    budget; correctness is partition-count-invariant by the argument
-    above (property-tested), so the knob is pure performance.
-    """
-    n_parts = n_parts or max(2, min(default_parallelism(), 8))
-    # Collision-proof working-column names (the bloom_prefilter device,
-    # r7 self-review): a caller whose frame already carries `_pid` etc.
-    # must get it back untouched. `rank`/`cum` are the documented OUTPUT
-    # columns and deliberately replace same-named inputs.
-    suffix = "2pr"
-    while any(c.endswith(suffix) for c in df.columns):
-        suffix += "x"
-    pid, lrank, lcum = f"_pid_{suffix}", f"_lrank_{suffix}", f"_lcum_{suffix}"
-    roff, coff, cnt, psum = (
-        f"_roff_{suffix}",
-        f"_coff_{suffix}",
-        f"_cnt_{suffix}",
-        f"_psum_{suffix}",
-    )
-    lmax, pmax, moff = f"_lmax_{suffix}", f"_pmax_{suffix}", f"_moff_{suffix}"
-    # A str entry means ascending; a Column entry is taken as-is, so
-    # callers can rank descending (F.desc("metric")) — the range
-    # partitioner and the local window share whatever direction is
-    # given, which is all the correctness argument needs.
-    order = [F.asc(c) if isinstance(c, str) else c for c in order_cols]
-    parts = df.repartitionByRange(n_parts, *order).withColumn(
-        pid, F.spark_partition_id()
-    )
-    wl = Window.partitionBy(pid).orderBy(*order)
-    staged = parts.withColumn(lrank, F.row_number().over(wl))
-    if cum_col is not None:
-        staged = staged.withColumn(
-            lcum,
-            F.sum(cum_col).over(
-                wl.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        )
-    if max_col is not None:
-        staged = staged.withColumn(
-            lmax,
-            F.max(max_col).over(
-                wl.rowsBetween(Window.unboundedPreceding, -1)
-            ),
-        )
-    # ONE materialization of the range-partitioned, locally-ranked rows.
-    # Load-bearing, not an optimization: RangePartitioner SAMPLES its
-    # boundaries, so two independent executions of the same
-    # repartitionByRange lineage (one for the ranks, one for the
-    # offsets) may split rows differently — offsets computed from a
-    # second execution could disagree with the _pid each row got in the
-    # first. The checkpoint pins a single partitioning that both
-    # consumers read.
-    local = staged.localCheckpoint(eager=True)
-    # P rows of control data: per-partition aggregates -> exclusive
-    # prefix offsets. r15 (guide §2.4; VERDICT r14 item 5/7): the
-    # offsets used to ride a no-partition window (an Exchange
-    # SinglePartition + Sort + Window + BroadcastExchange + join in
-    # EVERY consumer plan — the single largest source of advisor WARNs,
-    # 40 registry paths). They are P-row CONTROL data bounded by the
-    # n_parts knob, so collect them once (the coverage/hits bounded-
-    # collect device: one bounded row per range partition, never
-    # data-sized) and attach them as a dense literal array indexed by
-    # _pid — a pure projection, no exchange, no window, no join.
-    # Bit-identity: the prefix accumulators run in ascending-pid order,
-    # the exact order the replaced window accumulated in; `F.get` (not
-    # element_at) so an out-of-range pid yields NULL, not an ANSI error
-    # (cannot happen — every data row's pid appears in the aggregate —
-    # but the expression must not be able to raise).
-    aggs = [F.count("*").alias(cnt)]
-    if cum_col is not None:
-        aggs.append(F.sum(cum_col).alias(psum))
-    if max_col is not None:
-        aggs.append(F.max(max_col).alias(pmax))
-    offsets_df = local.groupBy(pid).agg(*aggs)
-    types = {f.name: f.dataType.simpleString() for f in offsets_df.schema.fields}
-    rows = sorted(offsets_df.collect(), key=lambda r: r[pid])
-    n_slots = (rows[-1][pid] + 1) if rows else 1
-
-    def _lit(value, type_str):
-        return (
-            F.lit(None).cast(type_str)
-            if value is None
-            else F.lit(value).cast(type_str)
-        )
-
-    def _prefix_array(field, combine):
-        """Dense pid-indexed literal array of the exclusive prefix of
-        ``field`` in ascending-pid order — the first group's slot is
-        NULL, exactly like the replaced UNBOUNDED-PRECEDING..-1 window
-        frame (the accumulator folds x0, x0+x1, ... — not 0+x0 —
-        so float edge cases like -0.0 keep the window's bit pattern).
-        Missing pids keep NULL: no data row carries them, so the slot
-        is never read."""
-        vals = [None] * n_slots
-        acc = None
-        for r in rows:
-            vals[r[pid]] = acc
-            v = r[field]
-            if v is not None:  # window aggregates skip NULLs
-                acc = v if acc is None else combine(acc, v)
-        return F.array(*[_lit(v, types[field]) for v in vals])
-
-    idx = F.col(pid)
-    _add = lambda a, b: a + b  # noqa: E731
-    # coalesce(prefix, 0) mirrors the replaced coalesce(window_sum, 0)
-    out = local.withColumn(
-        "rank",
-        (
-            F.col(lrank)
-            + F.coalesce(F.get(_prefix_array(cnt, _add), idx), F.lit(0))
-        ).cast("long"),
-    )
-    if cum_col is not None:
-        out = out.withColumn(
-            "cum",
-            (
-                F.col(lcum)
-                + F.coalesce(F.get(_prefix_array(psum, _add), idx), F.lit(0))
-            ).cast("long"),
-        )
-    if max_col is not None:
-        # greatest() skips NULLs: first partition has no prefix max, a
-        # partition-local first row has no lmax; all-NULL (the global
-        # first row) stays NULL — the exclusive-prefix contract.
-        out = out.withColumn(
-            "cum_max_excl",
-            F.greatest(F.col(lmax), F.get(_prefix_array(pmax, max), idx)),
-        )
-    return out.drop(pid, lrank, lcum, roff, coff, lmax, moff)
-
-
-def collected_offsets(
-    counts: DataFrame,
-    order_cols: "list[str]",
-    sums: "list[tuple[str, str]]",
-) -> DataFrame:
-    """Driver-literal exclusive prefix sums over a CONTROL-SIZED
-    aggregate frame (r15): collect ``counts`` (bounded by the caller's
-    contract — dims, statuses, depth levels, …), running-sum each
-    ``(src, out)`` in ascending ``order_cols`` order (first row 0, the
-    ``coalesce(sum() OVER (... ROWS UNBOUNDED PRECEDING TO -1), 0)``
-    contract; NULL keys first, like NULLS FIRST), and return the rows +
-    long offset columns as a driver-local literal frame. Replaces the
-    no-partition offsets window — an Exchange SinglePartition + Sort +
-    Window in every consumer plan — with a LocalTableScan. Exactness:
-    all summed inputs are longs (asserted), so the Python running sum
-    is the identical integer the window computed."""
-    for src, _ in sums:
-        dt = counts.schema[src].dataType.simpleString()
-        if dt != "bigint":
-            raise TypeError(
-                f"collected_offsets: {src} must be bigint (exact running "
-                f"sums), got {dt}"
-            )
-    rows = sorted(
-        counts.collect(),
-        key=lambda r: tuple((r[c] is not None, r[c]) for c in order_cols),
-    )
-    acc = {src: 0 for src, _ in sums}
-    out_rows = []
-    for r in rows:
-        out_rows.append(tuple(r) + tuple(acc[src] for src, _ in sums))
-        for src, _ in sums:
-            if r[src] is not None:  # window sums skip NULLs
-                acc[src] += r[src]
-    schema = T.StructType(
-        list(counts.schema.fields)
-        + [T.StructField(out, T.LongType(), False) for _, out in sums]
-    )
-    return counts.sparkSession.createDataFrame(out_rows, schema)
-
-
-def grouped_two_phase_rank(
-    df: DataFrame,
-    group_cols: list,
-    order_cols: list,
-    n_col: str = "n_in_group",
-) -> DataFrame:
-    """Per-group ``row_number`` WITHOUT a per-group fat-partition
-    window (round 10): one GLOBAL :func:`two_phase_rank` over the
-    composite (group, order) total order, then
-    ``rank_in_group = global rank − the group's exclusive offset``,
-    where the offsets are a G-row broadcast of per-group counts
-    prefix-summed in group order.
-
-    Contract: **group CARDINALITY must be control-sized** (enumeration-
-    bounded keys — statuses, priorities, a few dozen sources); each
-    group's DATA may be arbitrarily large. This is the mirror image of
-    ``Window.partitionBy(group)``: that plan is right for millions of
-    SMALL groups (spread evenly, no funnel) and catastrophically wrong
-    for a few huge ones (each group = one task); this device is right
-    for a few huge groups (the range exchange splits every group
-    across partitions) and wrong for millions of tiny ones (the G-row
-    offset window would itself become data-sized).
-
-    Adds ``rank_in_group`` (1-based within group) and ``n_col`` (the
-    group size); ``group_cols`` must be plain column-name strings.
-    """
-    # r15 (guide §2.4; VERDICT r14 item 7): the G-row offsets formerly
-    # rode a no-partition window (an Exchange SinglePartition in every
-    # consumer plan). The counts are G-row CONTROL data by this
-    # helper's own contract (enumeration-bounded group keys), so
-    # collect them and ship the prefix sums back as a driver-local
-    # literal frame (collected_offsets: UTF-8 byte order == code-point
-    # order, so the Python tuple sort reproduces the window's ORDER BY;
-    # None sorts first like NULLS FIRST) — the same broadcast join, no
-    # window, no exchange.
-    counts = df.groupBy(*group_cols).agg(F.count("*").cast("long").alias(n_col))
-    offsets = F.broadcast(
-        collected_offsets(counts, list(group_cols), [(n_col, "_goff_g2pr")])
-    )
-    ranked = two_phase_rank(df, [*group_cols, *order_cols])
-    return (
-        ranked.join(offsets, list(group_cols))
-        .withColumn("rank_in_group", (F.col("rank") - F.col("_goff_g2pr")).cast("long"))
-        .drop("rank", "_goff_g2pr")
-    )
 
 
 def _embedding_dim_m2_mad4(emb: DataFrame) -> "tuple[DataFrame, DataFrame, DataFrame]":
@@ -292,15 +39,9 @@ def _embedding_dim_m2_mad4(emb: DataFrame) -> "tuple[DataFrame, DataFrame, DataF
         ).alias("_d", "_x"),
     )
 
-    def med2(df: DataFrame, vcol: str) -> DataFrame:
-        r = two_phase_rank(df, ["_d", vcol, "vec_id"])
-        cnt = r.groupBy("_d").agg(F.count("*").cast("long").alias("_n"))
-        # 64-dim control frame: prefix offsets ride a driver literal
-        # (r15 — no offsets window / SinglePartition exchange)
-        off = collected_offsets(cnt, ["_d"], [("_n", "_off")])
-        j = r.join(F.broadcast(off), "_d")
-        lr = F.col("rank") - F.col("_off")
-        mid = j.filter(
+    def middle_pair_sum(df: DataFrame, vcol: str) -> DataFrame:
+        lr = F.col("rank_in_group")
+        mid = grouped_two_phase_rank(df, ["_d"], [vcol, "vec_id"], n_col="_n").filter(
             (lr == F.floor((F.col("_n") + 1) / 2))
             | (lr == F.floor((F.col("_n") + 2) / 2))
         )
@@ -309,13 +50,13 @@ def _embedding_dim_m2_mad4(emb: DataFrame) -> "tuple[DataFrame, DataFrame, DataF
             (F.min(vcol) + F.max(vcol)).cast("long").alias("m2"),
         )
 
-    meds = med2(pts, "_x")
+    meds = middle_pair_sum(pts, "_x")
     dev = pts.join(F.broadcast(meds.select("_d", "m2")), "_d").select(
         "vec_id",
         "_d",
         F.abs(F.lit(2) * F.col("_x") - F.col("m2")).cast("long").alias("_dev2"),
     )
-    mads = med2(dev, "_dev2").select(F.col("_d"), F.col("m2").alias("mad4"))
+    mads = middle_pair_sum(dev, "_dev2").select(F.col("_d"), F.col("m2").alias("mad4"))
     return meds, mads, pts
 
 
@@ -328,7 +69,7 @@ def q_embedding_dim_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scalable exact GROUPED median: instead of a per-group window sort
     (one task per dimension holding corpus/64 rows — the ceiling the
     exact_median_by_group tier documents), rows range-partition
-    GLOBALLY on (dim, value, id) via :func:`two_phase_rank`; the
+    GLOBALLY on (dim, value, id) via :func:`.ranking.two_phase_rank`; the
     per-dim rank is the global rank minus a broadcast per-dim offset
     (64-row control frame), and the median is the classic middle-rank
     selection. MAD repeats the same machinery on |2x − median·2| —
@@ -400,15 +141,14 @@ def q_embedding_outlier_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_price_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact percentile banding at scale: every order assigned its
     ntile(100) price percentile band WITHOUT a single-task global sort
-    — global rank via :func:`two_phase_rank` (balanced range
+    — global rank via :func:`.ranking.two_phase_rank` (balanced range
     exchanges), band via the exact front-loaded tile rule
-    (analytics_queries._ntile_exact, bit-identical to the oracle's
+    (ranking.ntile_exact, bit-identical to the oracle's
     ntile(100)), n from a one-row broadcast of the max rank. Per band:
     order count, min/max price (raw stored doubles — bit-equal on both
     engines) and the exact-decimal price sum. The distributed twin of
     the quantile table every data-quality / pricing dashboard wants,
     at the cardinality (100 bands) a 100 TB fact still supports."""
-    from kickstarter_etl_pipeline_spark.operators.analytics_queries import _ntile_exact
 
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     ranked = two_phase_rank(orders, ["o_totalprice", "o_orderkey"])
@@ -416,7 +156,7 @@ def q_price_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ranked.crossJoin(n_row)
         .select(
-            _ntile_exact(F.col("rank"), F.col("_n"), 100).alias("band"),
+            ntile_exact(F.col("rank"), F.col("_n"), 100).alias("band"),
             "o_totalprice",
         )
         .groupBy("band")
@@ -433,7 +173,7 @@ def q_price_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_scalable_rank_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every user's event-count rank ascending (count, then user_id)
-    via :func:`two_phase_rank` — bit-identical to a plain global
+    via :func:`.ranking.two_phase_rank` — bit-identical to a plain global
     row_number, which is exactly what the oracle replays."""
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(F.count("*").cast("long").alias("n"))
@@ -752,13 +492,12 @@ def q_ccnet_quality_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: per-doc mean surprisal is snapped to an exact
     integer MICRO-nat grid before any cross-doc aggregation, so tier
     sums are exact and order-free; the tile over the unique
-    (m6, doc_id) order is engine-identical (_ntile_exact, bit-equal to
+    (m6, doc_id) order is engine-identical (ntile_exact, bit-equal to
     the oracle's ntile(3)). Shuffles (upgraded round 10): the
     surprisal pass (two uniform-key) + grouped_two_phase_rank's
     composite range exchange — a web-scale source no longer funnels
     into a single task the way the old per-source ntile window did.
     """
-    from kickstarter_etl_pipeline_spark.operators.analytics_queries import _ntile_exact
     from kickstarter_etl_pipeline_spark.operators.text import unigram_surprisal
 
     docs = load_table(spark, sf_dir, "documents")
@@ -775,7 +514,7 @@ def q_ccnet_quality_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored, ["source"], ["_m6", "doc_id"], n_col="_n_src"
     )
     tiers = ranked.withColumn(
-        "tier", _ntile_exact(F.col("rank_in_group"), F.col("_n_src"), 3).cast("int")
+        "tier", ntile_exact(F.col("rank_in_group"), F.col("_n_src"), 3).cast("int")
     )
     return tiers.groupBy("source", "tier").agg(
         F.count("*").cast("long").alias("n_docs"),
@@ -1664,7 +1403,7 @@ def q_weighted_median_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact WEIGHTED median price per return flag (weight = quantity)
     at scale: the grouped two-phase selection device
     (embedding_dim_robust_stats) extended to weighted quantiles —
-    :func:`two_phase_rank` with ``cum_col`` carries the GLOBAL running
+    :func:`.ranking.two_phase_rank` with ``cum_col`` carries the GLOBAL running
     weight over the (group, value, id) total order in balanced range
     exchanges; subtracting each group's broadcast offset (the exact sum
     of preceding groups' weights) turns it into the per-group
@@ -1710,30 +1449,25 @@ def q_trimmed_mean_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mean against outlier prices the way the median does without
     giving up efficiency.
 
-    Same grouped two-phase selection shape as weighted_median: ONE
-    global range-partitioned rank over (group, value, id) minus
-    broadcast per-group offsets gives the per-group rank; the trim is
+    Same grouped two-phase selection shape as weighted_median:
+    :func:`.ranking.grouped_two_phase_rank` (ONE global range-partitioned rank
+    over (group, value, id) minus broadcast per-group offsets) gives
+    the per-group rank; the trim is
     then a rank-band filter (k < rank ≤ n−k) — an integer rule — and
     the mean is an exact DECIMAL(18,2) sum divided once. No per-group
     window ever holds a group's full column."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_extendedprice", "l_orderkey", "l_linenumber"
     )
-    ranked = two_phase_rank(
-        li, ["l_returnflag", "l_extendedprice", "l_orderkey", "l_linenumber"]
-    )
-    gt = li.groupBy("l_returnflag").agg(F.count("*").cast("long").alias("_n_g"))
-    # 3-row control frame: prefix offsets ride a driver literal (r15 —
-    # no offsets window / SinglePartition exchange)
-    offs = collected_offsets(gt, ["l_returnflag"], [("_n_g", "_off")]).withColumn(
-        "_k", F.floor(F.col("_n_g") / 10).cast("long")
-    )
-    j = ranked.join(F.broadcast(offs), "l_returnflag").withColumn(
-        "_grank", F.col("rank") - F.col("_off")
-    )
+    j = grouped_two_phase_rank(
+        li,
+        ["l_returnflag"],
+        ["l_extendedprice", "l_orderkey", "l_linenumber"],
+        n_col="_n_g",
+    ).withColumn("_k", F.floor(F.col("_n_g") / 10).cast("long"))
     kept = j.filter(
-        (F.col("_grank") > F.col("_k"))
-        & (F.col("_grank") <= F.col("_n_g") - F.col("_k"))
+        (F.col("rank_in_group") > F.col("_k"))
+        & (F.col("rank_in_group") <= F.col("_n_g") - F.col("_k"))
     )
     return kept.groupBy("l_returnflag").agg(
         F.max("_n_g").cast("long").alias("n_total"),

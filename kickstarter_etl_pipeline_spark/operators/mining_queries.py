@@ -15,6 +15,11 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from kickstarter_etl_pipeline_spark.operators import events as EV
 from kickstarter_etl_pipeline_spark.operators import text as TX
+from kickstarter_etl_pipeline_spark.operators.ranking import (
+    collected_offsets,
+    grouped_two_phase_rank,
+    two_phase_rank,
+)
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
 
@@ -114,7 +119,6 @@ def q_quality_percentile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the corpus is split across partitions instead of landing on
     one task, which is exactly the skew profile domain-sourced
     corpora have."""
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import grouped_two_phase_rank
 
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
@@ -276,7 +280,6 @@ def q_priority_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     key9 = F.floor(
         F.log(u) / F.greatest(F.col("n_chars"), F.lit(1)) * 1e9 + 0.5
     ).cast("long")
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import grouped_two_phase_rank
 
     # round-10 upgrade: per-source ranks ride grouped_two_phase_rank,
     # so a source holding most of the corpus is range-split across
@@ -788,7 +791,7 @@ def q_lorenz_curve_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape (round-7 rewrite): the rank AND the running event total come
     from the distributed two-phase prefix machinery
-    (lm_queries.two_phase_rank — range split, local rank+cum, P-row
+    (ranking.two_phase_rank — range split, local rank+cum, P-row
     offset broadcast; no single-partition sort anywhere), then the 10
     decile thresholds floor(N·d/10) equi-join the prefix-sum table on
     ``rank = thr`` — a broadcast hash join of a 10-row build side,
@@ -798,7 +801,6 @@ def q_lorenz_curve_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out; this shape has neither. Since ranks are dense 1..N, the
     cumulative user count at threshold t is t itself — no count(*)
     needed. Exact integers end-to-end."""
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import two_phase_rank
 
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(F.count("*").cast("long").alias("n"))
@@ -1140,8 +1142,6 @@ def q_t_closeness_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r15 (VERDICT r14 item 7): the 10-row global band cumulative rides
     # a driver literal (collected_offsets) instead of a no-partition
     # window (SinglePartition exchange)
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import collected_offsets
-
     gcum = F.broadcast(
         collected_offsets(gfilled, ["band"], [("_g", "_goff")]).withColumn(
             "_cumg", (F.col("_goff") + F.col("_g")).cast("long")

@@ -5,6 +5,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from kickstarter_etl_pipeline_spark.operators import events as EV
+from kickstarter_etl_pipeline_spark.operators.ranking import (
+    grouped_two_phase_rank,
+    two_phase_rank,
+)
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
 
@@ -235,7 +239,6 @@ def q_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one uniform part-keyed aggregate + the two-phase global
     rank; the grand total is a one-row broadcast."""
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import two_phase_rank
 
     li = load_table(spark, sf_dir, "lineitem")
     rev = li.groupBy("l_partkey").agg(
@@ -351,7 +354,6 @@ def q_interpurchase_gap_percentiles(spark: SparkSession, sf_dir: str) -> DataFra
     rides two_phase_rank's range exchange; each percentile is one
     rank-equality pick against a broadcast count — no global sort ever
     lands on a single task."""
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import two_phase_rank
 
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
     p = ev.filter(F.col("event_type") == "purchase").select(
@@ -523,7 +525,6 @@ def q_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two part-keyed aggregates + the two-phase global rank for
     the ABC cum; the final rollup has ≤9 groups."""
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import two_phase_rank
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey",
@@ -603,7 +604,6 @@ def q_price_quartiles_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     has 25 groups. Provenance: extends the reference's
     value-distribution reporting surface (src/etl_pipeline.py's
     groupby aggregates) to exact distributional statistics."""
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import grouped_two_phase_rank
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_extendedprice", "l_orderkey", "l_linenumber"

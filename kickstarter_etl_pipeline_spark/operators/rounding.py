@@ -27,7 +27,3 @@ def round_det(col: Column, k: int) -> Column:
     scale = 10**k
     return F.floor(col * scale + 0.5) / F.lit(float(scale))
 
-
-def sql_round_det(expr: str, k: int) -> str:
-    scale = 10**k
-    return f"floor(({expr}) * {scale} + 0.5) / {scale}.0"

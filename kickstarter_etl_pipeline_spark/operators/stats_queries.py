@@ -5,7 +5,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from kickstarter_etl_pipeline_spark.operators import events as EV
-from kickstarter_etl_pipeline_spark.operators.analytics_queries import _ntile_exact
+from kickstarter_etl_pipeline_spark.operators.ranking import (
+    grouped_two_phase_rank,
+    ntile_exact,
+    two_phase_rank,
+)
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
 
@@ -147,7 +151,6 @@ def q_pareto_frontier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream is integer comparison. ``price`` is emitted as
     cents/100.0 — an exact IEEE division by a power-of-two-free
     constant of an integer < 2^53, identical on both engines."""
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import two_phase_rank
 
     part = load_table(spark, sf_dir, "part")
     cents = F.floor(F.col("p_retailprice") * 100 + F.lit(0.5)).cast("long")
@@ -232,8 +235,6 @@ def q_kaplan_meier_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integer cumulatives either way (exclusive prefix = inclusive cum
     # minus the row's own value; inclusive max = greatest of the
     # exclusive prefix max and the row's own flag).
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import two_phase_rank
-
     at_risk = (
         two_phase_rank(days, ["_day"], cum_col="_c_all")
         .crossJoin(total)
@@ -287,7 +288,7 @@ def q_multitouch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     across the middles. Credit is summed per touch event_type.
 
     Exactness: NO floats anywhere — the split is integer basis points
-    with the front-loaded remainder rule (the _ntile_exact device):
+    with the front-loaded remainder rule (the ntile_exact device):
     n=1 → 10000; n=2 → 5000/5000; n≥3 → first/last 4000 each, middles
     get 2000 DIV (n−2) with the remainder going to the EARLIEST
     middles, so every conversion's credits sum to exactly 10000 and
@@ -473,7 +474,6 @@ def q_gini_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     upgrade — no status funnels into one task) + one aggregate;
     round 6 on the final fixed expression tree.
     """
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import grouped_two_phase_rank
 
     orders = load_table(spark, sf_dir, "orders")
     ranked = grouped_two_phase_rank(
@@ -504,7 +504,6 @@ def q_exact_quartiles_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     Complements q_exact_median_by_group (which uses the averaged-middle
     convention) and approx_aggregates (the sketch path at scale).
     """
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import grouped_two_phase_rank
 
     orders = load_table(spark, sf_dir, "orders")
     # round-10 upgrade: composite-key rank, no per-status fat partition
@@ -618,7 +617,6 @@ def q_funnel_latency_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     global rank rides two_phase_rank's range exchange, and each
     percentile is one rank-equality pick against a broadcast one-row
     count — no global sort ever lands on a single task."""
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import two_phase_rank
 
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
     v = (
@@ -804,7 +802,6 @@ def q_mann_whitney_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: group-by-value bounds the ranked frame by the price grid;
     the global prefix sum rides two_phase_rank's range exchange; the
     final statistics are a one-row aggregate."""
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import two_phase_rank
 
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority").isin("1-URGENT", "5-LOW")
@@ -915,7 +912,6 @@ def q_winsorized_mean_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     status ever funnels into a single task (the fat-partition plan a
     Window.partitionBy(status) rank would produce). Cuts ride a 3-row
     broadcast back onto the cent scan."""
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import grouped_two_phase_rank
 
     orders = load_table(spark, sf_dir, "orders")
     cents = orders.select(
@@ -1107,8 +1103,6 @@ def q_order_backlog_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # range-partitioned cum and the lead is a rank self-join over the
     # same checkpointed ranked frame (rank k joins rank k+1's day) —
     # exact integers either way.
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import two_phase_rank
-
     ranked = two_phase_rank(deltas, ["_day"], cum_col="_delta")
     nxt = ranked.select((F.col("rank") - 1).alias("rank"), F.col("_day").alias("_next"))
     cum = ranked.join(nxt, "rank", "left").select(
@@ -1157,7 +1151,6 @@ def q_mean_excess_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one ranked pass + three rank-equality picks against a
     broadcast count; the excess aggregate is one scan with map-side
     combine per threshold."""
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import two_phase_rank
 
     orders = load_table(spark, sf_dir, "orders")
     vals = orders.select(
@@ -1255,7 +1248,7 @@ def q_activity_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the base rate): "does activity predict purchasing, and how
     concentrated is the lift?".
 
-    Exactness: deciles come from _ntile_exact over two_phase_rank's
+    Exactness: deciles come from ntile_exact over two_phase_rank's
     (−n_events, user_id) total order (bit-equal to ntile(10) OVER the
     same order — the pinned device); counts are exact; rate is one
     division and lift is the cross-ratio of INTEGER products
@@ -1264,10 +1257,6 @@ def q_activity_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one user-keyed aggregate, the range-exchange rank, a
     ≤10-group rollup against a broadcast one-row global."""
-    from kickstarter_etl_pipeline_spark.operators.analytics_queries import (
-        _ntile_exact,
-    )
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import two_phase_rank
 
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
@@ -1289,7 +1278,7 @@ def q_activity_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     tiled = ranked.crossJoin(g).select(
-        _ntile_exact(F.col("rank"), F.col("_gu"), 10).alias("decile"),
+        ntile_exact(F.col("rank"), F.col("_gu"), 10).alias("decile"),
         "_resp",
         "_gu",
         "_gr",

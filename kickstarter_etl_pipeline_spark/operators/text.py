@@ -13,8 +13,8 @@ from pyspark.sql import Column, DataFrame, functions as F
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 
 #: Marker lists live in the engine-neutral constants module (shared
-#: with the DuckDB oracle ledgers); re-exported here for back-compat.
-from kickstarter_etl_pipeline_spark.constants import LANG_MARKERS  # noqa: F401
+#: with the DuckDB oracle ledgers).
+from kickstarter_etl_pipeline_spark.constants import LANG_MARKERS
 
 
 def let1(bound: Column, body) -> Column:
@@ -121,18 +121,6 @@ def quality_score(text_col: str = "text") -> Column:
         return round_det(length_ok * (0.5 + 0.5 * diversity) - punct_penalty, 6)
 
     return let1(tokens(text_col), _score)
-
-
-def lang_scores(text_col: str = "text") -> dict[str, Column]:
-    """Stopword-hit count per language over the token multiset."""
-    toks = tokens(text_col)
-    def _hits(words: list[str]):
-        marker_arr = F.array(*[F.lit(w) for w in words])
-        # NB: the lambda must be single-arg — a second parameter would be
-        # interpreted by Spark as the element index.
-        return F.size(F.filter(toks, lambda t: F.array_contains(marker_arr, t)))
-
-    return {lang: _hits(words) for lang, words in LANG_MARKERS.items()}
 
 
 def token_frequency(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from kickstarter_etl_pipeline_spark.operators import events as EV
+from kickstarter_etl_pipeline_spark.operators.ranking import two_phase_rank
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
 
@@ -90,7 +91,6 @@ def q_binseg_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the rank/prefix-sum is the range-exchange two-phase rank
     (never a single-task sort); the argmax is one one-row broadcast
     equality pick."""
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import two_phase_rank
 
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.to_date("ts").alias("_day")).agg(
@@ -321,7 +321,6 @@ def q_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     are ≤64 rows each (uniformly keyed by (scale, block)); per-scale
     sums are a 4-group aggregate; the final slope is a one-row
     pivot."""
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import two_phase_rank
 
     LN2 = 0.6931471805599453  # shared literal, mirrored in the twin
     orders = load_table(spark, sf_dir, "orders")

@@ -848,7 +848,7 @@ ORACLES_R12["atkinson_index"] = """
 """
 
 # FULL twin of q_activity_decile_lift: native ntile(10) over the
-# (−n_events, user_id) total order equals _ntile_exact by the pinned
+# (−n_events, user_id) total order equals ntile_exact by the pinned
 # device; the lift is the integer cross-ratio with one division.
 ORACLES_R12["activity_decile_lift"] = """
     WITH pu AS (

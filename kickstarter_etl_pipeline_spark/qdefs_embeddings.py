@@ -281,7 +281,7 @@ def q_window_ntile_percent(spark: SparkSession, sf_dir: str) -> DataFrame:
     order year — deliberately the NATIVE window-function surface
     (§2.7 coverage). Scale note: each year is one task under this
     plan; the distributed equivalents are the rfm_segments /
-    grouped_two_phase_rank + _ntile_exact composition (SCALE.md,
+    grouped_two_phase_rank + ntile_exact composition (SCALE.md,
     Grouped two-phase rank) — this query is the semantic reference
     the scale path is verified against, like the exact-median pair."""
     orders = load_table(spark, sf_dir, "orders")

@@ -23,6 +23,7 @@ from kickstarter_etl_pipeline_spark.operators.multimodal import (  # noqa: F401
     documents_as_media,
     extract_features,
 )
+from kickstarter_etl_pipeline_spark.operators.ranking import grouped_two_phase_rank
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det  # noqa: F401
 from kickstarter_etl_pipeline_spark.operators.similarity import (  # noqa: F401
     brute_force_topk,
@@ -336,7 +337,6 @@ def q_exact_median_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     statuses on one task). approx_percentile (q_approx_aggregates)
     remains the sketch path; this operator is what you verify it
     against."""
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import grouped_two_phase_rank
 
     orders = load_table(spark, sf_dir, "orders")
     ranked = grouped_two_phase_rank(

@@ -121,6 +121,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in names)

@@ -12,6 +12,7 @@ from contextlib import redirect_stdout
 
 from pyspark.sql import functions as F
 
+from kickstarter_etl_pipeline_spark.operators.ranking import collected_offsets
 from kickstarter_etl_pipeline_spark.plans.tpch_queries import q_q1_pricing_summary
 from kickstarter_etl_pipeline_spark.qdefs_star_events import (
     q_fact_star,
@@ -290,7 +291,7 @@ def test_threshold_curve_queries_have_no_outer_bnlj(spark, sf_dir, monkeypatch):
     sums (collected_offsets), so its final plan is a driver-literal
     scan; its decile joins are checked on the frame handed to that
     collect."""
-    from kickstarter_etl_pipeline_spark.operators import lm_queries
+    from kickstarter_etl_pipeline_spark.operators import corpus_queries, mining_queries
     from kickstarter_etl_pipeline_spark.operators.corpus_queries import (
         q_vocab_growth_curve,
     )
@@ -299,13 +300,14 @@ def test_threshold_curve_queries_have_no_outer_bnlj(spark, sf_dir, monkeypatch):
     )
 
     collected = []
-    real_collected_offsets = lm_queries.collected_offsets
 
     def spy(counts, *args, **kwargs):
         collected.append(counts)
-        return real_collected_offsets(counts, *args, **kwargs)
+        return collected_offsets(counts, *args, **kwargs)
 
-    monkeypatch.setattr(lm_queries, "collected_offsets", spy)
+    # each consumer binds collected_offsets at import: patch its name
+    for consumer in (corpus_queries, mining_queries):
+        monkeypatch.setattr(consumer, "collected_offsets", spy)
 
     lorenz = explain_str(q_lorenz_curve_events(spark, sf_dir))
     assert not collected

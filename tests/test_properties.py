@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from kickstarter_etl_pipeline_spark.operators.dedup import minhash_dedup_pairs, ngram_jaccard_pairs
 from kickstarter_etl_pipeline_spark.operators.dims import dim_from_distinct
 from kickstarter_etl_pipeline_spark.operators.joins import asof_join_backward, salted_join
+from kickstarter_etl_pipeline_spark.operators.ranking import two_phase_rank
 from kickstarter_etl_pipeline_spark.operators.text import rolling_hash
 
 SETTINGS = settings(
@@ -397,7 +398,6 @@ def test_two_phase_rank_matches_row_number(rows):
     """Distributed two-phase rank + prefix sum must be bit-identical to
     the single-window reference on arbitrary (skewed, tied) inputs."""
     from pyspark.sql import Window, functions as F
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import two_phase_rank
 
     spark = _get_spark()
     uniq = {k: v for k, v in rows}.items()  # unique keys (last wins)

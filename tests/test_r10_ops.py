@@ -10,6 +10,8 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from kickstarter_etl_pipeline_spark.operators.ranking import grouped_two_phase_rank, two_phase_rank
+
 
 def test_fs_pattern_scores_match_their_derivation():
     """constants.FS_PATTERN_SCORES are precomputed literals; re-derive
@@ -176,7 +178,6 @@ def test_mann_whitney_symmetric_groups_z_zero(spark):
     """U statistic on two identical samples: U must equal n_a·n_b/2
     exactly (so z = 0, effect size 0) — replicated through the same
     group-by-value + prefix-sum tree the query uses."""
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import two_phase_rank
 
     vals = spark.createDataFrame(
         [(v, g) for v in (100, 200, 300) for g in (1, 0)], "_v long, _is_a long"
@@ -238,15 +239,20 @@ def test_grouped_two_phase_rank_matches_window_rank(spark, sf_dir):
     Window.partitionBy(group) row_number it replaces, and invariant to
     the input's partitioning (the range partitioner samples
     boundaries, so this is the property the checkpoint inside
-    two_phase_rank guarantees)."""
+    two_phase_rank guarantees). A NULL status is a group of its own,
+    as in partitionBy — its rows must not be dropped by the offsets
+    join."""
     from pyspark.sql import Window
 
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import grouped_two_phase_rank
     from kickstarter_etl_pipeline_spark.sources.readers import load_table
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderstatus", "o_orderkey", "o_totalprice"
     )
+    null_status = spark.createDataFrame(
+        [(None, -1, 5.0), (None, -2, 1.0), (None, -3, 5.0)], orders.schema
+    )
+    orders = orders.unionByName(null_status)
     w = Window.partitionBy("o_orderstatus").orderBy("o_totalprice", "o_orderkey")
     expect = {
         (r["o_orderkey"], r["rn"], r["n"])

@@ -15,6 +15,7 @@ from kickstarter_etl_pipeline_spark.operators.dedup import (
 )
 from kickstarter_etl_pipeline_spark.operators.events import sessionize, tumbling_agg
 from kickstarter_etl_pipeline_spark.operators.joins import asof_join_backward
+from kickstarter_etl_pipeline_spark.operators.ranking import two_phase_rank
 from kickstarter_etl_pipeline_spark.operators.similarity import brute_force_topk
 from kickstarter_etl_pipeline_spark.operators.text import rolling_hash, with_lang_id, with_text_stats
 
@@ -413,7 +414,6 @@ def test_pid_control_funnel_demotes_but_global_window_stays(spark, sf_dir):
     # ≤P per-partition offsets are collected once and ride a literal
     # array indexed by the partition id, so its plan carries no
     # SinglePartition exchange and the advisor has no funnel to flag.
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import two_phase_rank
 
     ranked = two_phase_rank(
         orders.select("o_orderkey", "o_totalprice"), ["o_totalprice", "o_orderkey"]

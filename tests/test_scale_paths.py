@@ -12,7 +12,12 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from kickstarter_etl_pipeline_spark.operators.dims import dim_from_distinct, dim_with_scalable_keys
+from kickstarter_etl_pipeline_spark.operators.dims import dim_from_distinct
+from kickstarter_etl_pipeline_spark.operators.ranking import (
+    CONTROL_ROWS_CAP,
+    collected_offsets,
+    two_phase_rank,
+)
 from kickstarter_etl_pipeline_spark.operators.similarity import brute_force_topk, ivf_topk
 from kickstarter_etl_pipeline_spark.sources.bucketing import colocated_join, write_bucketed
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
@@ -22,14 +27,17 @@ SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)
 
 
 def test_scalable_keys_equal_window_keys(spark):
-    """dim_with_scalable_keys must assign the same dense sorted keys as
-    the window implementation, without a global single-reducer sort."""
+    """two_phase_rank over the distinct frame must assign the same dense
+    sorted keys as the window implementation, without a global
+    single-reducer sort."""
     df = spark.createDataFrame(
         [(f"name_{i % 37:03d}",) for i in range(1000)], ["state_name"]
     ).repartition(7)
     scalable = {
-        (int(r["state_key"]), r["state_name"])
-        for r in dim_with_scalable_keys(df, ["state_name"], "state_key").collect()
+        (int(r["rank"]), r["state_name"])
+        for r in two_phase_rank(
+            df.select("state_name").distinct(), ["state_name"]
+        ).collect()
     }
     window = {
         (int(r["state_key"]), r["state_name"])
@@ -39,23 +47,32 @@ def test_scalable_keys_equal_window_keys(spark):
 
 
 def test_scalable_keys_dense_at_256_partitions(spark):
-    """At ≥256 range partitions the offset map is applied via a
-    broadcast (pid, offset) join — constant-depth plan at any partition
+    """At 256 range partitions the offsets are a 256-slot literal array
+    indexed by partition id — a constant-depth plan at any partition
     count — and keys must still be the dense 1..N global-sort numbering
     the window variant assigns."""
     df = spark.createDataFrame(
         [(f"val_{i:05d}",) for i in range(3000)], ["v"]
     ).repartition(300)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "256")
-    try:
-        got = sorted(
-            (int(r["k"]), r["v"])
-            for r in dim_with_scalable_keys(df, ["v"], "k").collect()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    got = sorted(
+        (int(r["rank"]), r["v"])
+        for r in two_phase_rank(df.distinct(), ["v"], n_parts=256).collect()
+    )
     assert got == [(i + 1, f"val_{i:05d}") for i in range(3000)]
+
+
+def test_control_collect_refuses_frame_over_cap(spark):
+    """The one driver-side prefix fold refuses a frame one row over
+    CONTROL_ROWS_CAP, naming the cap; a frame at the cap still folds."""
+    def counts(n_rows):
+        return spark.range(n_rows).select(
+            F.col("id").alias("k"), F.lit(1).cast("long").alias("n")
+        )
+
+    offs = collected_offsets(counts(CONTROL_ROWS_CAP), ["k"], [("n", "off")])
+    assert offs.agg(F.max("off")).first()[0] == CONTROL_ROWS_CAP - 1
+    with pytest.raises(ValueError, match=f"CONTROL_ROWS_CAP={CONTROL_ROWS_CAP}"):
+        collected_offsets(counts(CONTROL_ROWS_CAP + 1), ["k"], [("n", "off")])
 
 
 def test_connected_components_nonconvergence_raises(spark):
@@ -852,7 +869,6 @@ def test_two_phase_rank_max_col_matches_plain_window(spark):
     running max bit-for-bit at any partition count (the skyline
     operator's correctness rests on it)."""
     from pyspark.sql import Window
-    from kickstarter_etl_pipeline_spark.operators.lm_queries import two_phase_rank
 
     rows = [(i, (i * 37) % 19) for i in range(200)]
     df = spark.createDataFrame(rows, ["k", "v"])
