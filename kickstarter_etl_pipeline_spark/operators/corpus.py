@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from kickstarter_etl_pipeline_spark.operators.partitioning import loop_frame
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.operators.text import tokens
 
@@ -183,7 +184,6 @@ def greedy_max_coverage(
     k: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    loop_partitions: int = 8,
 ) -> DataFrame:
     """Greedy maximum-coverage document selection (the Nemhauser-
     Wolsey-Fisher 1978 submodular greedy, the (1 − 1/e) classic behind
@@ -214,7 +214,6 @@ def greedy_max_coverage(
     side is the pair set — linear per round.
     """
     from kickstarter_etl_pipeline_spark.operators.dedup import shingle_table
-    from kickstarter_etl_pipeline_spark.operators.partitioning import loop_frame
 
     # shingle_table spreads the scan first (ensure_min_partitions) —
     # a single-row-group fixture file would otherwise tokenize the
@@ -229,7 +228,7 @@ def greedy_max_coverage(
         .select("_doc", F.col("shingle").alias("_tok"))
         .distinct()
     )
-    pairs = loop_frame(pairs, loop_partitions, "_tok")
+    pairs = loop_frame(pairs)
     # r14 restructure (guide §1/§2.4 — the profiled cost was 135 jobs of
     # scheduling, not data): each round is now exactly ONE action — a
     # one-row argmax collect over (pairs minus already-covered tokens).

@@ -246,9 +246,8 @@ def _prefix_candidates(
     """Candidate (id_a, id_b) pairs from the checkpointed
     (id, shingle-array, size) frame via prefix + length + positional
     filtering. ``positional=False`` exists ONLY for the pruning-power
-    measurement in tests/test_scale_paths.py (the betweenness
-    check_bound convention); production callers always take the full
-    PPJoin filter stack.
+    measurement in tests/test_scale_paths.py; production callers always
+    take the full PPJoin filter stack.
 
     Positional filter (PPJoin proper, Xiao et al. 2008 §3.2,
     integerized): a true match needs overlap
@@ -586,7 +585,6 @@ def connected_components(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iter: int = 20,
-    loop_partitions: int | None = None,
 ) -> DataFrame:
     """Connected components by iterative min-label propagation — the
     dedup-group resolver: near-dup PAIRS become clusters, each labeled
@@ -617,16 +615,6 @@ def connected_components(
     min-of-3). The Hamming-≤8 SimHash graph (diameter ≥ 8, measured
     r14) routes to :func:`connected_components_star` instead.
     """
-    # Size the per-round exchanges to LABEL-TABLE cardinality, not
-    # the session default — the loop's cost at fixture scale is
-    # task scheduling (rounds x stages x partitions), the exact
-    # overhead profile measured for the r8 streaming state-store
-    # win (NOTES.md r8). Data-sized knob: like pagerank's and
-    # kcore's, size to vertex cardinality on a real cluster. Pure
-    # integer min-label arithmetic — partitioning provably cannot
-    # move any label (regression-tested). Pinned per-frame via
-    # loop_frame (round 11) — no session state is touched.
-    #
     # The edge list is checkpointed ONCE before the loop (round 11):
     # the input is typically a LAZY candidate pipeline (banded SimHash
     # / MinHash joins), and an un-materialized `sym` re-executed that
@@ -639,15 +627,11 @@ def connected_components(
         edges.select(F.col(src_col).alias("_a"), F.col(dst_col).alias("_b")).union(
             edges.select(F.col(dst_col).alias("_a"), F.col(src_col).alias("_b"))
         ),
-        loop_partitions,
-        "_b",
     )
     labels = loop_frame(
         nodes.select(F.col(id_col).alias("_id"))
         .distinct()
         .withColumn("component_id", F.col("_id")),
-        loop_partitions,
-        "_id",
     )
     changed = 0
     for _ in range(max_iter):
@@ -671,8 +655,6 @@ def connected_components(
                     F.coalesce("_nmin", F.col("component_id")) < F.col("component_id")
                 ).alias("_chg"),
             ),
-            loop_partitions,
-            "_id",
         )
         changed = new_labels.filter(F.col("_chg")).count()
         labels = new_labels.drop("_chg")
@@ -695,7 +677,6 @@ def connected_components_star(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iter: int = 25,
-    loop_partitions: int | None = None,
 ) -> DataFrame:
     """Connected components via alternating large-star/small-star edge
     rewriting (Kiveris et al., "Connected Components in MapReduce and
@@ -714,18 +695,12 @@ def connected_components_star(
     (count, hash-checksum) signature stops changing; the signature is
     engine-internal, used only for loop control.
     """
-    # Same data-sized exchange knob as connected_components / kcore /
-    # pagerank: size per-round shuffles to vertex cardinality instead
-    # of the session default. Pinned per-frame via loop_frame
-    # (round 11) — no session state is touched.
     u, v, m = F.col("_u"), F.col("_v"), F.col("_m")
     # Canonical undirected edge list, self-loops dropped.
     e = loop_frame(
         edges.select(F.col(src_col).alias("_u"), F.col(dst_col).alias("_v"))
         .filter(u != v)
         .distinct(),
-        loop_partitions,
-        "_u",
     )
 
     def _signature(frame: DataFrame) -> tuple:
@@ -768,7 +743,7 @@ def connected_components_star(
     sig = _signature(e)
     converged = False
     for _ in range(max_iter):
-        e = loop_frame(_small_star(_large_star(e)), loop_partitions, "_u")
+        e = loop_frame(_small_star(_large_star(e)))
         new_sig = _signature(e)
         if new_sig == sig:
             converged = True

@@ -202,13 +202,35 @@ def clustering_coefficients(edges: DataFrame, u: str = "u", v: str = "v") -> Dat
     )
 
 
+def _both_directions(edges: DataFrame, u: str, v: str) -> DataFrame:
+    """Every edge as ``(src, dst)`` in both directions, duplicates and
+    self-loops kept."""
+    return edges.select(F.col(u).alias("src"), F.col(v).alias("dst")).unionAll(
+        edges.select(F.col(v).alias("src"), F.col(u).alias("dst"))
+    )
+
+
+def _undirected_edges(edges: DataFrame, u: str, v: str) -> DataFrame:
+    """Distinct long ``(_u, _v)`` pairs holding every non-self-loop edge
+    in both directions."""
+    return (
+        edges.select(F.col(u).cast("long").alias("_u"), F.col(v).cast("long").alias("_v"))
+        .unionByName(
+            edges.select(
+                F.col(v).cast("long").alias("_u"), F.col(u).cast("long").alias("_v")
+            )
+        )
+        .filter(F.col("_u") != F.col("_v"))
+        .distinct()
+    )
+
+
 def pagerank(
     edges: DataFrame,
     iterations: int = 10,
     damping: float = 0.85,
     u: str = "u",
     v: str = "v",
-    loop_partitions: int = 8,
 ) -> DataFrame:
     """PageRank over an undirected edge list (each edge contributes in
     both directions), FULLY oracle-able despite being iterative.
@@ -233,26 +255,9 @@ def pagerank(
     """
     from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 
-    # Loop partition sizing: unlike the IVF/PCA control loops (whose
-    # per-round aggregates land on ≤ clusters×dim control-sized
-    # groups), pagerank's per-iteration exchange is keyed by VERTEX ID
-    # over the full rank vector — it is DATA-sized. ``loop_partitions``
-    # must therefore be sized to vertex cardinality: the default 8 fits
-    # the bench fixtures (where 10 rounds × 32-partition shuffles were
-    # mostly task-scheduling overhead, measured in NOTES), but a
-    # billion-vertex graph needs thousands. Partition count does not
-    # move results in the shipped configs: the per-iteration 1e-9 grid
-    # sits ~10 orders above the ulp-level contribution-sum order noise,
-    # and every partition-count change is re-verified by driver
-    # re-grade (the grid argument is an engineering margin, not a
-    # theorem — a sum landing within one ulp of a grid boundary could
-    # in principle flip a snap). Loop frames are pinned per-frame via
-    # loop_frame (round 11) — no session state is touched.
-    directed = edges.select(F.col(u).alias("src"), F.col(v).alias("dst")).unionAll(
-        edges.select(F.col(v).alias("src"), F.col(u).alias("dst"))
-    )
+    directed = _both_directions(edges, u, v)
     deg = directed.groupBy("src").agg(F.count("*").cast("long").alias("_deg"))
-    directed = loop_frame(directed.join(deg, "src"), loop_partitions, "src")
+    directed = loop_frame(directed.join(deg, "src"))
     verts = directed.select(F.col("src").alias("id")).distinct()
     # r14: the vertex count is ONE bounded control-plane scalar; the old
     # broadcast one-row frame re-ran its distinct+agg subplan inside
@@ -269,11 +274,7 @@ def pagerank(
             "id", F.lit(None).cast("double").alias("pr_permille")
         )
     n_lit = F.lit(n).cast("long")
-    pr = loop_frame(
-        verts.select("id", round_det(F.lit(1.0) / n_lit, 9).alias("pr")),
-        loop_partitions,
-        "id",
-    )
+    pr = loop_frame(verts.select("id", round_det(F.lit(1.0) / n_lit, 9).alias("pr")))
     for _ in range(iterations):
         contribs = (
             directed.join(pr.withColumnRenamed("id", "src"), "src")
@@ -287,8 +288,6 @@ def pagerank(
                     (1.0 - damping) / n_lit + damping * F.col("_in"), 9
                 ).alias("pr"),
             ),
-            loop_partitions,
-            "id",
         )
     return pr.select("id", round_det(F.col("pr") * 1000, 6).alias("pr_permille"))
 
@@ -299,7 +298,6 @@ def personalized_pagerank(
     damping: float = 0.85,
     u: str = "u",
     v: str = "v",
-    loop_partitions: int = 8,
 ) -> DataFrame:
     """Personalized PageRank (random walk with restart) from ONE
     md5-chosen seed vertex — the "related entities" recommender
@@ -319,11 +317,9 @@ def personalized_pagerank(
     """
     from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 
-    directed = edges.select(F.col(u).alias("src"), F.col(v).alias("dst")).unionAll(
-        edges.select(F.col(v).alias("src"), F.col(u).alias("dst"))
-    )
+    directed = _both_directions(edges, u, v)
     deg = directed.groupBy("src").agg(F.count("*").cast("long").alias("_deg"))
-    directed = loop_frame(directed.join(deg, "src"), loop_partitions, "src")
+    directed = loop_frame(directed.join(deg, "src"))
     seed = (
         directed.select(F.col("src").alias("id"))
         .distinct()
@@ -360,8 +356,6 @@ def personalized_pagerank(
                     9,
                 ).alias("pr"),
             ),
-            loop_partitions,
-            "id",
         )
     return pr.select("id", round_det(F.col("pr") * 1000, 6).alias("ppr_permille"))
 
@@ -385,9 +379,7 @@ def label_propagation(
     round count makes that a defined, replayable outcome rather than a
     hang.
     """
-    directed = edges.select(F.col(u).alias("src"), F.col(v).alias("dst")).unionAll(
-        edges.select(F.col(v).alias("src"), F.col(u).alias("dst"))
-    ).localCheckpoint(eager=True)
+    directed = _both_directions(edges, u, v).localCheckpoint(eager=True)
     labels = (
         directed.select(F.col("src").alias("id")).distinct()
         .select("id", F.col("id").alias("community"))
@@ -502,7 +494,6 @@ def hits(
     iterations: int = 4,
     c: str = "c",
     s: str = "s",
-    loop_partitions: int = 8,
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) over a bipartite
     edge list (hub side ``c`` → authority side ``s``), fully
@@ -519,11 +510,8 @@ def hits(
     cross-engine equality is arithmetic identity, not an engineering
     margin. Fixed iteration count keeps the SQL replay finite.
 
-    ``loop_partitions`` sizes the per-round vertex-keyed exchanges —
-    DATA-sized (the score vectors), like pagerank's, unlike the
-    IVF/PCA control loops; default 8 fits bench fixtures, size to
-    vertex cardinality on a real cluster. The per-round driver state
-    is ONE scalar (the squared norm) — control data.
+    The per-round driver state is ONE scalar (the squared norm) —
+    control data.
 
     Returns (role ∈ {'hub','authority'}, id, score) with score = the
     9-dp unit-norm value rounded to 6 dp.
@@ -556,7 +544,7 @@ def hits(
         # consumer is the next half-round's join, and a projection over
         # a checkpointed scan adds no second execution. Identical
         # arithmetic — same raw sums, same s2, same snap expression.
-        raw = loop_frame(raw, loop_partitions, key)
+        raw = loop_frame(raw)
         s2 = raw.agg(
             F.sum(F.col("_raw").cast("decimal(38,0)") * F.col("_raw")).alias("_s2")
         ).collect()[0]["_s2"]
@@ -573,8 +561,6 @@ def hits(
 
     h = loop_frame(
         e.select("_c").distinct().select("_c", F.lit(NANO).cast("long").alias("_hn")),
-        loop_partitions,
-        "_c",
     )
     a = None
     for _ in range(iterations):
@@ -612,7 +598,6 @@ def kcore(
     rounds: int = 6,
     u: str = "u",
     v: str = "v",
-    loop_partitions: int = 8,
 ) -> DataFrame:
     """k-core decomposition by bounded-round peeling (Seidman 1983;
     the distributed formulation of Montresor et al.): repeat ``rounds``
@@ -626,10 +611,7 @@ def kcore(
 
     Scale: each round is one degree aggregate plus two left-semi joins,
     every exchange keyed by vertex id — shuffle O(E) per round, never
-    all-pairs. ``loop_partitions`` sizes those DATA-sized exchanges
-    (like pagerank's, unlike the IVF/PCA control loops): default 8 for
-    bench fixtures, size to vertex cardinality on a real cluster.
-    Per-round lineage is truncated with localCheckpoint; nothing but
+    all-pairs. Per-round lineage is truncated with localCheckpoint; nothing but
     the loop counter lives on the driver.
 
     Returns (id, core_degree) for every vertex surviving round
@@ -657,8 +639,6 @@ def kcore(
         e = loop_frame(
             e.join(keep.withColumnRenamed("_id", "_u"), "_u", "left_semi")
             .join(keep.withColumnRenamed("_id", "_v"), "_v", "left_semi"),
-            loop_partitions,
-            "_u",
         )
     return _degrees(e, "core_degree").select(
         F.col("_id").alias("id"), "core_degree"
@@ -670,7 +650,6 @@ def transitive_closure(
     rounds: int = 5,
     anc: str = "anc",
     des: str = "des",
-    loop_partitions: int = 8,
 ) -> DataFrame:
     """Reachability closure by repeated squaring (the classic
     O(log diameter) distributed formulation — Valiant-style path
@@ -686,15 +665,13 @@ def transitive_closure(
     vertex plus one distinct — all exchanges hash-partitioned on
     vertex ids, never all-pairs. Output size is Σ_v depth(v) (for a
     tree: N·avg-depth ≈ N·log_arity N) — the closure itself, not an
-    intermediate blow-up. ``loop_partitions`` sizes the per-round
-    exchanges (data-sized, like pagerank's); per-round
-    localCheckpoint truncates lineage, and only the loop counter
-    lives on the driver.
+    intermediate blow-up. Per-round localCheckpoint truncates lineage,
+    and only the loop counter lives on the driver.
     """
     clo = edges.select(
         F.col(anc).cast("long").alias("anc"), F.col(des).cast("long").alias("des")
     ).distinct()
-    clo = loop_frame(clo, loop_partitions, "des")
+    clo = loop_frame(clo)
     # r14 fixpoint early exit (the ktruss device): the closure only
     # grows, so an unchanged row count means C ∘ C added nothing and
     # every remaining round is a no-op — identical result, rounds ×
@@ -707,7 +684,7 @@ def transitive_closure(
             .join(clo.alias("b"), F.col("a.des") == F.col("b.anc"))
             .select(F.col("a.anc").alias("anc"), F.col("b.des").alias("des"))
         )
-        clo = loop_frame(clo.unionByName(step).distinct(), loop_partitions, "des")
+        clo = loop_frame(clo.unionByName(step).distinct())
         n_new = clo.count()
         if n_new == n_clo:
             break
@@ -720,7 +697,6 @@ def bfs_depths(
     rounds: int = 8,
     u: str = "u",
     v: str = "v",
-    loop_partitions: int = 8,
 ) -> DataFrame:
     """Single-source BFS shortest-path depths over an undirected edge
     list — the distance primitive the graph tier's centrality/peeling
@@ -734,23 +710,15 @@ def bfs_depths(
 
     Each round is one frontier⋈edges expansion (keyed by vertex id)
     plus one left-anti against the visited set — shuffle O(E) per
-    round, never all-pairs; ``loop_partitions`` sizes the DATA-sized
-    exchanges exactly like kcore's. Pure integer arithmetic — depths
-    are loop counters; cross-engine equality is set identity.
+    round, never all-pairs. Pure integer arithmetic — depths are loop
+    counters; cross-engine equality is set identity. An edge list with
+    no non-self-loop edge has no source and returns no rows.
     """
-    sym = (
-        edges.select(F.col(u).cast("long").alias("_u"), F.col(v).cast("long").alias("_v"))
-        .unionByName(
-            edges.select(
-                F.col(v).cast("long").alias("_u"), F.col(u).cast("long").alias("_v")
-            )
-        )
-        .filter(F.col("_u") != F.col("_v"))
-        .distinct()
-    )
-    sym = loop_frame(sym, loop_partitions, "_u")
-    src = sym.agg(F.min("_u").alias("_id")).select(
-        "_id", F.lit(0).cast("long").alias("depth")
+    sym = loop_frame(_undirected_edges(edges, u, v))
+    src = (
+        sym.agg(F.min("_u").alias("_id"))
+        .filter(F.col("_id").isNotNull())
+        .select("_id", F.lit(0).cast("long").alias("depth"))
     )
     visited = src.localCheckpoint(eager=True)
     # r14 (guide §2.4/§1): ONE action per round instead of two — the
@@ -769,7 +737,7 @@ def bfs_depths(
             .join(visited.select("_id"), "_id", "left_anti")
             .select("_id", F.lit(t).cast("long").alias("depth"))
         )
-        visited = loop_frame(visited.unionByName(nxt), loop_partitions, "_id")
+        visited = loop_frame(visited.unionByName(nxt))
     return visited.select(F.col("_id").alias("id"), "depth")
 
 
@@ -779,7 +747,6 @@ def _multi_source_bfs(
     rounds: int,
     u: str = "u",
     v: str = "v",
-    loop_partitions: int = 8,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared frontier expansion for the pivot-sampled centralities:
     returns (sym, visited) where sym is the checkpointed symmetrized
@@ -794,17 +761,7 @@ def _multi_source_bfs(
     State is bounded by pivots × vertices; each round is one
     frontier⋈edges expansion plus one (pivot, vertex)-keyed
     anti-join."""
-    sym = (
-        edges.select(F.col(u).cast("long").alias("_u"), F.col(v).cast("long").alias("_v"))
-        .unionByName(
-            edges.select(
-                F.col(v).cast("long").alias("_u"), F.col(u).cast("long").alias("_v")
-            )
-        )
-        .filter(F.col("_u") != F.col("_v"))
-        .distinct()
-    )
-    sym = loop_frame(sym, loop_partitions, "_u")
+    sym = loop_frame(_undirected_edges(edges, u, v))
     piv = (
         sym.select(F.col("_u").alias("_p"))
         .distinct()
@@ -836,7 +793,7 @@ def _multi_source_bfs(
             .join(visited.select("_p", "_id"), ["_p", "_id"], "left_anti")
             .select("_p", "_id", F.lit(t).cast("long").alias("depth"), "sigma")
         )
-        visited = loop_frame(visited.unionByName(nxt), loop_partitions, "_id")
+        visited = loop_frame(visited.unionByName(nxt))
     return sym, visited
 
 
@@ -846,7 +803,6 @@ def harmonic_centrality(
     rounds: int = 6,
     u: str = "u",
     v: str = "v",
-    loop_partitions: int = 8,
 ) -> DataFrame:
     """Pivot-sampled harmonic centrality (Boldi & Vigna, "Axioms for
     Centrality", 2014; the HyperBall estimand) — the closeness-family
@@ -872,10 +828,9 @@ def harmonic_centrality(
     Scale: state is bounded by pivots × vertices and each round is one
     frontier⋈edges expansion plus one (pivot, vertex)-keyed anti-join —
     exactly ``pivots`` copies of the bfs_depths cost with K fixed and
-    small, never all-pairs. ``loop_partitions`` sizes the carried
-    frames as in bfs_depths/kcore.
+    small, never all-pairs.
     """
-    sym, visited = _multi_source_bfs(edges, pivots, rounds, u, v, loop_partitions)
+    sym, visited = _multi_source_bfs(edges, pivots, rounds, u, v)
     return (
         visited.filter(F.col("depth") > 0)
         .groupBy(F.col("_id").alias("id"))
@@ -941,9 +896,7 @@ def edge_support(edges: DataFrame) -> DataFrame:
     return pairs.groupBy("u", "v").agg(F.count("*").cast("long").alias("support"))
 
 
-def ktruss(
-    edges: DataFrame, k: int = 4, rounds: int = 4, loop_partitions: int = 8
-) -> DataFrame:
+def ktruss(edges: DataFrame, k: int = 4, rounds: int = 4) -> DataFrame:
     """k-truss (Cohen 2008) by fixed-round support peeling — the
     triangle-cohesion upgrade of the k-core: every surviving edge must
     sit in ≥ k−2 triangles OF THE SURVIVING SUBGRAPH. Same fixed-round
@@ -960,8 +913,6 @@ def ktruss(
     the edge set only shrinking."""
     cur = loop_frame(
         edges.select(F.col("u").cast("long").alias("u"), F.col("v").cast("long").alias("v")),
-        loop_partitions,
-        "u",
     )
     thr = k - 2
     n_cur = cur.count()  # bounded control-plane scalar (loop budget)
@@ -969,13 +920,11 @@ def ktruss(
     for _ in range(rounds):
         # Materialize support once per round: it feeds both the peel
         # filter and (on convergence) the final report.
-        supp = loop_frame(edge_support(cur), loop_partitions, "u")
+        supp = loop_frame(edge_support(cur))
         nxt = loop_frame(
             cur.join(supp, ["u", "v"], "left")
             .filter(F.coalesce(F.col("support"), F.lit(0).cast("long")) >= thr)
             .select("u", "v"),
-            loop_partitions,
-            "u",
         )
         n_nxt = nxt.count()
         if n_nxt == n_cur:
@@ -1031,8 +980,6 @@ def betweenness_sampled(
     rounds: int = 6,
     u: str = "u",
     v: str = "v",
-    loop_partitions: int = 8,
-    check_bound: bool = True,
 ) -> DataFrame:
     """Pivot-sampled betweenness centrality — Brandes' algorithm
     (Brandes 2001; the sampled estimator of Brandes & Pich 2007)
@@ -1075,18 +1022,14 @@ def betweenness_sampled(
     # the per-round σ-sum replaces the frontier distinct) — see
     # _multi_source_bfs. Level frames are slices of the checkpointed
     # visited table.
-    sym, visited = _multi_source_bfs(edges, pivots, rounds, u, v, loop_partitions)
+    sym, visited = _multi_source_bfs(edges, pivots, rounds, u, v)
     # count(*) over (pivot, vertex) rows upper-bounds the per-pivot
     # reached-vertex count (no countDistinct — that would add an
     # exchange; this agg is one map-side-combinable pass).
-    # check_bound=False exists ONLY for guard-cost measurement (the r13
-    # bench-attribution alternation); every production/graded path
-    # keeps the default.
-    if check_bound:
-        _max_sigma, _n_reached = visited.agg(
-            F.max("sigma").cast("long"), F.count("*").cast("long")
-        ).first()
-        _guard_betweenness_bound(_max_sigma or 0, _n_reached or 0)
+    _max_sigma, _n_reached = visited.agg(
+        F.max("sigma").cast("long"), F.count("*").cast("long")
+    ).first()
+    _guard_betweenness_bound(_max_sigma or 0, _n_reached or 0)
     sig_lvls: list[DataFrame] = [
         visited.filter(F.col("depth") == t).select("_p", "_id", "sigma")
         for t in range(rounds + 1)
@@ -1127,8 +1070,6 @@ def betweenness_sampled(
                 "sigma",
                 F.coalesce(F.col("_dn"), F.lit(0).cast("long")).alias("dnano"),
             ),
-            loop_partitions,
-            "_id",
         )
     acc = full_delta[1]
     for t in range(2, rounds + 1):
@@ -1146,7 +1087,6 @@ def rotor_walks(
     steps: int = 4,
     u: str = "u",
     v: str = "v",
-    loop_partitions: int = 8,
 ) -> DataFrame:
     """Deterministic hash-greedy walk corpus — the reproducible stand-in
     for node2vec/DeepWalk random-walk sampling when training data must
@@ -1165,17 +1105,7 @@ def rotor_walks(
     keys on both engines); the DuckDB twin unrolls one next-hop CTE +
     one hop CTE per step (device 7).
     """
-    sym = (
-        edges.select(F.col(u).cast("long").alias("_u"), F.col(v).cast("long").alias("_v"))
-        .unionByName(
-            edges.select(
-                F.col(v).cast("long").alias("_u"), F.col(u).cast("long").alias("_v")
-            )
-        )
-        .filter(F.col("_u") != F.col("_v"))
-        .distinct()
-    )
-    sym = loop_frame(sym, loop_partitions, "_u")
+    sym = loop_frame(_undirected_edges(edges, u, v))
     verts = sym.select(F.col("_u").alias("_id")).distinct()
     walks = verts.select(
         F.col("_id").alias("_start"), F.col("_id").alias("_cur")
@@ -1199,8 +1129,6 @@ def rotor_walks(
             walks.join(nxt, "_cur").select(
                 "_start", F.col("_nxt").alias("_cur")
             ),
-            loop_partitions,
-            "_cur",
         )
         out = out.unionByName(
             walks.select("_start", F.lit(t).cast("long").alias("step"), "_cur")
@@ -1215,7 +1143,6 @@ def spectral_coordinate(
     rounds: int = 8,
     u: str = "u",
     v: str = "v",
-    loop_partitions: int = 8,
 ) -> DataFrame:
     """Deterministic spectral-bipartition coordinate by centered power
     iteration on the random-walk matrix P = D⁻¹A: iterate
@@ -1236,20 +1163,12 @@ def spectral_coordinate(
     contribution-sum order noise ~10 orders below them; partition-count
     changes are re-verified by driver re-grade).
 
-    ``loop_partitions`` sizes the per-round vertex-keyed exchanges —
-    DATA-sized (the full coordinate vector), size to vertex cardinality
-    at scale. The ∞-norm (not L2) is deliberate: a max of grid values
+    The ∞-norm (not L2) is deliberate: a max of grid values
     is exact on any engine, while an L2 norm would need another
     rounding stage."""
     from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 
-    directed = loop_frame(
-        edges.select(F.col(u).alias("src"), F.col(v).alias("dst")).unionAll(
-            edges.select(F.col(v).alias("src"), F.col(u).alias("dst"))
-        ),
-        loop_partitions,
-        "src",
-    )
+    directed = loop_frame(_both_directions(edges, u, v))
     h = F.conv(
         F.substring(F.md5(F.col("id").cast("string")), 1, 15), 16, 10
     ).cast("long")
@@ -1257,8 +1176,6 @@ def spectral_coordinate(
         directed.select(F.col("src").alias("id"))
         .distinct()
         .select("id", round_det((h % 2001 - 1000) / F.lit(1000.0), 9).alias("x")),
-        loop_partitions,
-        "id",
     )
     for _ in range(rounds):
         # P·x at i = (Σ_{j~i} x_j) / d_i; each dst appears exactly
@@ -1279,8 +1196,6 @@ def spectral_coordinate(
             directed.join(x.withColumnRenamed("id", "src"), "src")
             .groupBy(F.col("dst").alias("id"))
             .agg(round_det(F.sum("x") / F.count("*"), 9).alias("y")),
-            loop_partitions,
-            "id",
         )
         m = y.agg(round_det(F.sum("y") / F.count("*"), 9).alias("_m")).collect()[0][
             "_m"
@@ -1308,7 +1223,6 @@ def bellman_ford_distances(
     u: str = "u",
     v: str = "v",
     w: str = "w",
-    loop_partitions: int = 8,
 ) -> DataFrame:
     """Single-source WEIGHTED shortest-path distances by fixed-round
     Bellman-Ford relaxation (min-plus) over an undirected weighted edge
@@ -1323,8 +1237,8 @@ def bellman_ford_distances(
     distances are integer sums; the min is set selection) — no
     rounding device exists anywhere, the same strength as kcore/BFS.
     Per round: one vertex-keyed dist⋈edges relaxation + one
-    vertex-keyed min — shuffle O(E), never all-pairs;
-    ``loop_partitions`` sizes the data-sized exchanges."""
+    vertex-keyed min — shuffle O(E), never all-pairs. An edge list with
+    no non-self-loop edge has no source and returns no rows."""
     sym = (
         edges.select(
             F.col(u).cast("long").alias("_u"),
@@ -1340,9 +1254,10 @@ def bellman_ford_distances(
         )
         .filter(F.col("_u") != F.col("_v"))
     )
-    sym = loop_frame(sym, loop_partitions, "_u")
+    sym = loop_frame(sym)
     dist = (
         sym.agg(F.min("_u").alias("_id"))
+        .filter(F.col("_id").isNotNull())
         .select("_id", F.lit(0).cast("long").alias("dist"))
         .localCheckpoint(eager=True)
     )
@@ -1354,7 +1269,5 @@ def bellman_ford_distances(
         )
         dist = loop_frame(
             dist.unionByName(relaxed).groupBy("_id").agg(F.min("dist").alias("dist")),
-            loop_partitions,
-            "_id",
         )
     return dist.select(F.col("_id").alias("id"), "dist")

@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from kickstarter_etl_pipeline_spark.operators import events as EV
+from kickstarter_etl_pipeline_spark.operators.partitioning import loop_frame
 from kickstarter_etl_pipeline_spark.operators.ranking import collected_offsets
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
@@ -97,12 +98,9 @@ def q_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         degree_table,
         label_propagation,
     )
-    from kickstarter_etl_pipeline_spark.operators.partitioning import loop_frame
 
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
-    edges = loop_frame(
-        cooccurrence_edges(ev, event_type="error", bucket_seconds=1800), 8, "u"
-    )
+    edges = loop_frame(cooccurrence_edges(ev, event_type="error", bucket_seconds=1800))
     lab = label_propagation(edges, iterations=5).select("id", "community")
     m_df = F.broadcast(edges.agg(F.count("*").cast("long").alias("_m")))
     deg = degree_table(edges)

@@ -87,46 +87,49 @@ def ensure_min_partitions(
     return df
 
 
-def loop_frame(df: DataFrame, n: int | None, *keys: str) -> DataFrame:
-    """Pin an iterative loop-carried frame to ``n`` stored partitions
-    with a NARROW coalesce, then eagerly localCheckpoint it.
+# Stored partition count of every loop-carried frame (loop_frame): the
+# rank, label, frontier and edge frames carried round to round by
+# graph.py's loops, dedup's connected-components loops and
+# corpus.greedy_max_coverage. The stage feeding each checkpoint runs at
+# this many tasks. These frames are DATA-sized (keyed by vertex, label
+# or token), unlike the control-sized IVF/PCA loops.
+#
+# 8 is the measured fixture optimum: at bench scale, session-width
+# rounds were mostly task-scheduling overhead (NOTES.md). On a cluster,
+# set it to the carried frame's rows divided by the per-task row
+# budget; a billion-vertex graph needs thousands. No result depends on
+# it: the loops are integer-exact, or (pagerank, personalized pagerank,
+# spectral) snap each round to a 1e-9 grid ~10 orders above the
+# sum-order noise. That grid is an engineering margin, so re-grade the
+# oracles after changing the width. tests/test_scale_paths.py runs the
+# loops at width 3.
+LOOP_PARTITIONS = 8
 
-    This replaces the retired ``loop_shuffle_partitions`` context
-    manager (round 11): that device scoped a small
-    ``spark.sql.shuffle.partitions`` over a loop body by MUTATING
-    session-global state — correct for a serial driver, but any query
-    planned concurrently on the same SparkSession silently inherited
-    the tiny partition count. Per-frame pinning has no shared state.
 
-    r15 (guide §2.4): the pin is a ``coalesce(n)``, not a
-    ``repartition(n, keys)``. The round-11 plan probe already
-    established that partitioning INFO does not survive the checkpoint
-    (the LogicalRDD scan reports unknown partitioning, so next-round
-    joins re-exchange at session width regardless) — the hash exchange
-    was paying a full shuffle per round for NOTHING but the stored
-    partition COUNT, which the narrow coalesce pins for free by
-    merging the preceding stage's shuffle-read partitions down to
-    ``n``. Interleaved A/B at sf0.1 across the seven graph-loop bench
-    queries: every one improved, 1.06×–1.83× (plans/r15/ab_graph2.py;
-    results cell-identical). ``keys`` are kept as call-site
-    documentation of the loop key — they no longer force an exchange.
+def loop_frame(df: DataFrame) -> DataFrame:
+    """Pin an iterative loop-carried frame to ``LOOP_PARTITIONS`` stored
+    partitions with a NARROW coalesce, then eagerly localCheckpoint it.
 
-    Scope notes: coalesce only SHRINKS — a frame already narrower than
-    ``n`` keeps its width (every call site feeds a post-shuffle frame
-    at session width; a narrow frame that needs SPREADING is
-    ensure_min_partitions' job, not this helper's). The stage feeding
-    the checkpoint now runs at ``n`` tasks; ``n`` is the data-sized
-    knob the operators document (default 8 fits bench fixtures, a
-    billion-vertex graph needs thousands), so that width is the
-    intended per-round processing width at any scale. ``n=None``
-    skips the pin and just checkpoints (the caller opted out).
-    Partition count provably cannot move any result — the iterative
-    operators are integer-exact or per-round grid-snapped — and
-    partition-invariance is regression-tested.
+    The pin is per frame, so it touches no session state: scoping a
+    small ``spark.sql.shuffle.partitions`` over a loop body would leak
+    the tiny width into any query planned concurrently on the shared
+    session. It is a ``coalesce``, not a hash ``repartition``:
+    partitioning INFO does not survive the checkpoint (the LogicalRDD
+    scan reports unknown partitioning, so next-round joins re-exchange
+    at session width regardless), so a hash exchange would pay a full
+    shuffle per round for nothing but the stored partition COUNT, which
+    the coalesce pins for free by merging the preceding stage's
+    shuffle-read partitions. Interleaved A/B at sf0.1 across the seven
+    graph-loop bench queries: 1.06×–1.83× faster than the hash
+    exchange, results cell-identical (plans/r15/ab_graph2.py).
+
+    Coalesce only SHRINKS: a frame already narrower than the constant
+    keeps its width. Every call site feeds a post-shuffle frame at
+    session width; a narrow frame that needs SPREADING is
+    ensure_min_partitions' job, not this helper's. The constant is read
+    at call time, so tests can narrow it with ``monkeypatch``.
     """
-    if n:
-        df = df.coalesce(int(n))
-    return df.localCheckpoint(eager=True)
+    return df.coalesce(LOOP_PARTITIONS).localCheckpoint(eager=True)
 
 
 def isolated_session(spark: SparkSession, confs: dict[str, str]) -> SparkSession:

@@ -106,8 +106,8 @@ def two_phase_rank(
     Over a distinct frame ordered by all its columns, ``rank`` is the
     reference's dense surrogate key, with no single-task stage.
 
-    ``n_parts`` sizes the range split and is a DATA-sized knob, like
-    the graph loops' ``loop_partitions``: the default (≤8) is the
+    ``n_parts`` sizes the range split and is a DATA-sized knob: the
+    default (≤8, and below 8 on hosts with fewer cores) is the
     measured fixture optimum — the frames ranked here are usually
     post-aggregation and small, and a wider split only adds task
     dispatch (probed round 10: a partition-count-tracking default

@@ -832,7 +832,8 @@ def _bfs_oracle_sql(rounds: int = 8) -> str:
     head = f"""
         WITH {cooccurrence_edge_ctes(600000000, nodes="n", edges="e0", materialized=True)},
         sym AS MATERIALIZED (SELECT u, v FROM e0 UNION SELECT v, u FROM e0),
-        v0 AS MATERIALIZED (SELECT min(u) AS id, CAST(0 AS BIGINT) AS depth FROM sym),
+        v0 AS MATERIALIZED (SELECT min(u) AS id, CAST(0 AS BIGINT) AS depth FROM sym
+                            HAVING min(u) IS NOT NULL),
         f0 AS MATERIALIZED (SELECT id FROM v0)"""
     steps = []
     for t in range(1, rounds + 1):
@@ -953,7 +954,8 @@ def _bellman_ford_oracle_sql(rounds: int = 6) -> str:
       SELECT u AS src, v AS dst, greatest(CAST(1 AS BIGINT), 10000 // cnt) AS w FROM pairs
       UNION ALL
       SELECT v, u, greatest(CAST(1 AS BIGINT), 10000 // cnt) FROM pairs),
-    d0 AS (SELECT min(src) AS id, CAST(0 AS BIGINT) AS dist FROM wedges)"""
+    d0 AS (SELECT min(src) AS id, CAST(0 AS BIGINT) AS dist FROM wedges
+           HAVING min(src) IS NOT NULL)"""
     steps = []
     for k in range(1, rounds + 1):
         steps.append(f""",

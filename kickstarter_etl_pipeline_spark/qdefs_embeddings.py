@@ -358,7 +358,6 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id"),
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
         id_col="doc_id",
-        loop_partitions=8,
     )
     sizes = comp.groupBy("component_id").agg(F.count("*").alias("n_members"))
     return comp.join(sizes, on="component_id").select("doc_id", "component_id", "n_members")
@@ -378,7 +377,6 @@ def q_dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id"),
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
         id_col="doc_id",
-        loop_partitions=8,
     )
     sizes = comp.groupBy("component_id").agg(F.count("*").alias("n_members"))
     return comp.join(sizes, on="component_id").select("doc_id", "component_id", "n_members")
@@ -433,7 +431,6 @@ def q_dedup_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id"),
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
         id_col="doc_id",
-        loop_partitions=8,
     )
     sized = comp.join(docs.select("doc_id", "n_chars"), on="doc_id")
     w = Window.partitionBy("component_id").orderBy(F.desc("n_chars"), F.asc("doc_id"))

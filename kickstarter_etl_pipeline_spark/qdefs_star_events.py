@@ -668,7 +668,6 @@ def q_simhash_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         id_col="doc_id",
         src_col="src",
         dst_col="dst",
-        loop_partitions=8,
     )
     sizes = comp.groupBy("component_id").agg(F.count("*").alias("n_members"))
     return comp.join(sizes, on="component_id").select(

@@ -16,7 +16,7 @@ from kickstarter_etl_pipeline_spark.queries import _resolve, oracle_sql, queries
 # registry order, and of the JSON list of (name, sql) oracle items.
 # Update only together with a deliberate registry change.
 QUERIES_DIGEST = "1099092054ce3d98f2447de91344245d6ff773a3927c15dd72c76668c3443c89"
-ORACLES_DIGEST = "4c641a515260e8ba9957130fea78af83b76daf78a2d38e85b15cd67d4bbd5734"
+ORACLES_DIGEST = "60c919530e387418bc73e44ef04e24bb294f4a779ab2f3a4eb5722eb1a0fdff2"
 
 
 def _digest(obj) -> str:

@@ -12,7 +12,9 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from kickstarter_etl_pipeline_spark.operators import partitioning
 from kickstarter_etl_pipeline_spark.operators.dims import dim_from_distinct
+from kickstarter_etl_pipeline_spark.operators.partitioning import loop_frame
 from kickstarter_etl_pipeline_spark.operators.ranking import (
     CONTROL_ROWS_CAP,
     collected_offsets,
@@ -24,6 +26,22 @@ from kickstarter_etl_pipeline_spark.sources.readers import load_table
 from kickstarter_etl_pipeline_spark.streaming.events_stream import stream_events_to_parquet
 
 SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
+
+
+@pytest.fixture
+def narrow_loops(spark, monkeypatch):
+    """Call to run every later loop_frame pin at 3 partitions instead of
+    LOOP_PARTITIONS, for the partition-invariance checks (restored after
+    the test). It first checks that the pin stores exactly the constant's
+    width for a wider frame and keeps a narrower frame's width."""
+
+    def narrow():
+        monkeypatch.setattr(partitioning, "LOOP_PARTITIONS", 3)
+        wide, thin = spark.range(12).repartition(5), spark.range(12).repartition(2)
+        assert loop_frame(wide).rdd.getNumPartitions() == 3
+        assert loop_frame(thin).rdd.getNumPartitions() == 2
+
+    return narrow
 
 
 def test_scalable_keys_equal_window_keys(spark):
@@ -473,13 +491,13 @@ def test_q18_bucketed_no_fact_shuffle(spark, sf_dir):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
 
 
-def test_hits_partition_invariant(spark, sf_dir):
+def test_hits_partition_invariant(spark, sf_dir, narrow_loops):
     """graph.hits claims an EXACT integer spine (edge sums are long
     aggregates, the only float is the fixed normalize-and-snap tree) —
     so unlike pagerank's grid-margin argument, partition count must
     provably not move ANY score. Pin it: 3-partition vs 17-partition
-    edge inputs and a different loop_partitions must produce the
-    identical score table."""
+    edge inputs and a different loop width must produce the identical
+    score table."""
     from kickstarter_etl_pipeline_spark.operators.graph import hits
     from kickstarter_etl_pipeline_spark.operators.graph_queries import q_graph_hits
 
@@ -499,8 +517,9 @@ def test_hits_partition_invariant(spark, sf_dir):
         .select(F2.col("o_custkey").alias("c"), F2.col("l_suppkey").alias("s"))
         .repartition(17)
     )
+    narrow_loops()
     again = {(r["role"], r["id"], r["score"])
-             for r in hits(edges, iterations=4, loop_partitions=3).collect()}
+             for r in hits(edges, iterations=4).collect()}
     assert again == base
 
 
@@ -519,12 +538,12 @@ def test_bm25_partition_invariant(spark, sf_dir):
     assert rows1 == rows2 and len(rows1) == 10
 
 
-def test_kcore_synthetic_and_partition_invariant(spark):
+def test_kcore_synthetic_and_partition_invariant(spark, narrow_loops):
     """graph.kcore is pure integer arithmetic — partition count must
     provably not move the result. Pin both the semantics (a 5-clique
     survives k=4 peeling; a pendant chain and a degree-3 satellite do
     not) and the invariance (repartitioned edges + a different
-    loop_partitions produce the identical table)."""
+    loop width produce the identical table)."""
     from kickstarter_etl_pipeline_spark.operators.graph import kcore
 
     clique = [(a, b) for a in range(1, 6) for b in range(1, 6) if a < b]
@@ -533,11 +552,10 @@ def test_kcore_synthetic_and_partition_invariant(spark):
     expect = {(i, 4) for i in range(1, 6)}
     got = {(r["id"], r["core_degree"]) for r in kcore(edges, k=4, rounds=6).collect()}
     assert got == expect
+    narrow_loops()
     again = {
         (r["id"], r["core_degree"])
-        for r in kcore(
-            edges.repartition(13), k=4, rounds=6, loop_partitions=3
-        ).collect()
+        for r in kcore(edges.repartition(13), k=4, rounds=6).collect()
     }
     assert again == expect
 
@@ -566,11 +584,11 @@ def test_jsd_partition_invariant(spark, sf_dir):
     assert rows2 == rows1
 
 
-def test_transitive_closure_synthetic_and_partition_invariant(spark):
+def test_transitive_closure_synthetic_and_partition_invariant(spark, narrow_loops):
     """graph.transitive_closure by path doubling: pin the semantics on
     a known tree (every ancestor pair, nothing else) and the partition
     invariance (pure set algebra — repartitioned edges + a different
-    loop_partitions produce the identical closure)."""
+    loop width produce the identical closure)."""
     from kickstarter_etl_pipeline_spark.operators.graph import transitive_closure
 
     # 0 -> 1 -> 2 -> 3 -> 4 chain plus a branch 1 -> 5
@@ -584,11 +602,10 @@ def test_transitive_closure_synthetic_and_partition_invariant(spark):
     }
     got = {(r["anc"], r["des"]) for r in transitive_closure(edges, rounds=3).collect()}
     assert got == expect
+    narrow_loops()
     again = {
         (r["anc"], r["des"])
-        for r in transitive_closure(
-            edges.repartition(11), rounds=5, loop_partitions=3
-        ).collect()
+        for r in transitive_closure(edges.repartition(11), rounds=5).collect()
     }
     assert again == expect
 
@@ -711,9 +728,10 @@ def test_round9_new_queries_plan_contracts(spark, sf_dir):
         assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan or "ShuffledHashJoin" in plan, q.__name__
 
 
-def test_bfs_depths_synthetic_and_partition_invariant(spark):
+def test_bfs_depths_synthetic_and_partition_invariant(spark, narrow_loops):
     """graph.bfs_depths: exact depths on a known graph (source = min
-    id), fixed-round truncation honored, and partition invariance
+    id), fixed-round truncation honored, no rows (no invented source)
+    for an empty or self-loop-only edge list, and partition invariance
     (pure set algebra)."""
     from kickstarter_etl_pipeline_spark.operators.graph import bfs_depths
 
@@ -728,9 +746,14 @@ def test_bfs_depths_synthetic_and_partition_invariant(spark):
     # rounds=2 truncates at distance 2 — the fixed-round contract.
     got2 = {(r["id"], r["depth"]) for r in bfs_depths(edges, rounds=2).collect()}
     assert got2 == {(1, 0), (2, 1), (6, 1), (3, 2)}
+    empty = spark.createDataFrame([], "u long, v long")
+    loops = spark.createDataFrame([(1, 1), (2, 2)], ["u", "v"])
+    assert bfs_depths(empty, rounds=8).collect() == []
+    assert bfs_depths(loops, rounds=8).collect() == []
+    narrow_loops()
     again = {
         (r["id"], r["depth"])
-        for r in bfs_depths(edges.repartition(9), rounds=8, loop_partitions=3).collect()
+        for r in bfs_depths(edges.repartition(9), rounds=8).collect()
     }
     assert again == expect
 
@@ -1005,7 +1028,7 @@ def test_bleu_overlap_bounds_and_totals(spark, sf_dir):
     assert saw_scored, "fixture contains no benchmark-overlapping doc"
 
 
-def test_spectral_coordinate_separates_two_cliques(spark):
+def test_spectral_coordinate_separates_two_cliques(spark, narrow_loops):
     """spectral_coordinate: on two 4-cliques joined by a single bridge
     edge, the sign of the coordinate must separate the cliques (the
     classic spectral-bipartition sanity case), and the result must be
@@ -1020,8 +1043,9 @@ def test_spectral_coordinate_separates_two_cliques(spark):
     sides_a = {rows1[i][1] for i in range(4)}
     sides_b = {rows1[i][1] for i in range(10, 14)}
     assert len(sides_a) == 1 and len(sides_b) == 1 and sides_a != sides_b
+    narrow_loops()
     rows2 = {r["id"]: (r["spectral_x"], r["side"]) for r in
-             spectral_coordinate(edges, rounds=8, loop_partitions=3).collect()}
+             spectral_coordinate(edges, rounds=8).collect()}
     assert rows1 == rows2
 
 
@@ -1089,10 +1113,11 @@ def test_capped_balance_floor_binds(spark):
     assert got == {1: (7.0, 10.0)}
 
 
-def test_bellman_ford_prefers_cheaper_multihop(spark):
+def test_bellman_ford_prefers_cheaper_multihop(spark, narrow_loops):
     """bellman_ford_distances on a graph where the weighted shortest
     path differs from the hop-shortest one (direct edge 10 vs 3+3 via
-    a middle vertex), plus fixed-round truncation and partition
+    a middle vertex), plus fixed-round truncation, no rows (no invented
+    source) for an empty or self-loop-only edge list, and partition
     invariance (pure integer min-plus)."""
     from kickstarter_etl_pipeline_spark.operators.graph import bellman_ford_distances
 
@@ -1104,9 +1129,14 @@ def test_bellman_ford_prefers_cheaper_multihop(spark):
     # one round only relaxes direct neighbors: 3 keeps the direct 10.
     got1 = {r["id"]: r["dist"] for r in bellman_ford_distances(edges, rounds=1).collect()}
     assert got1 == {1: 0, 2: 3, 3: 10}
+    empty = spark.createDataFrame([], "u long, v long, w long")
+    loops = spark.createDataFrame([(1, 1, 5), (2, 2, 5)], ["u", "v", "w"])
+    assert bellman_ford_distances(empty, rounds=6).collect() == []
+    assert bellman_ford_distances(loops, rounds=6).collect() == []
+    narrow_loops()
     got_p = {
         r["id"]: r["dist"]
-        for r in bellman_ford_distances(edges, rounds=6, loop_partitions=3).collect()
+        for r in bellman_ford_distances(edges, rounds=6).collect()
     }
     assert got_p == got
 
@@ -1154,7 +1184,7 @@ def _md5s(x) -> str:
     return hashlib.md5(str(x).encode()).hexdigest()
 
 
-def test_harmonic_centrality_matches_reference_and_partitions(spark):
+def test_harmonic_centrality_matches_reference_and_partitions(spark, narrow_loops):
     """harmonic_centrality on a hand-sized graph equals a pure-Python
     replay of the contract (md5-ordered pivots, BFS depths, exact
     60 DIV d inverse-distance mass), and a different partitioning
@@ -1185,16 +1215,15 @@ def test_harmonic_centrality_matches_reference_and_partitions(spark):
         for r in harmonic_centrality(edges, pivots=2, rounds=3).collect()
     }
     assert got == want
+    narrow_loops()
     again = {
         (r["id"], r["n_pivots_reached"], r["_harmonic_raw"])
-        for r in harmonic_centrality(
-            edges.repartition(9), pivots=2, rounds=3, loop_partitions=3
-        ).collect()
+        for r in harmonic_centrality(edges.repartition(9), pivots=2, rounds=3).collect()
     }
     assert again == want
 
 
-def test_betweenness_matches_reference_and_partitions(spark):
+def test_betweenness_matches_reference_and_partitions(spark, narrow_loops):
     """betweenness_sampled equals a pure-Python Brandes replay under
     the integer-nano contract (per-term (σv·(10⁹+δ̂w)) // σw, exact
     sums), including σ_total; partition-invariant."""
@@ -1241,16 +1270,17 @@ def test_betweenness_matches_reference_and_partitions(spark):
         for r in betweenness_sampled(edges, pivots=2, rounds=rounds).collect()
     }
     assert got == want
+    narrow_loops()
     again = {
         (r["id"], r["sigma_total"], r["_betweenness_raw"])
         for r in betweenness_sampled(
-            edges.repartition(7), pivots=2, rounds=rounds, loop_partitions=3
+            edges.repartition(7), pivots=2, rounds=rounds
         ).collect()
     }
     assert again == want
 
 
-def test_rotor_walks_matches_reference_and_partitions(spark):
+def test_rotor_walks_matches_reference_and_partitions(spark, narrow_loops):
     """rotor_walks equals a pure-Python replay of the hash-greedy next
     hop (argmin of (md5('t:c:v'), v) over neighbors — a pure function
     of (step, vertex), so co-located walks merge); partition-invariant."""
@@ -1274,14 +1304,15 @@ def test_rotor_walks_matches_reference_and_partitions(spark):
         for r in rotor_walks(edges, steps=4).collect()
     }
     assert got == want
+    narrow_loops()
     again = {
         (r["start_id"], r["step"], r["id"])
-        for r in rotor_walks(edges.repartition(5), steps=4, loop_partitions=3).collect()
+        for r in rotor_walks(edges.repartition(5), steps=4).collect()
     }
     assert again == want
 
 
-def test_ktruss_peels_to_known_core_and_partitions(spark):
+def test_ktruss_peels_to_known_core_and_partitions(spark, narrow_loops):
     """ktruss(k=4): a K4 survives (every edge in 2 triangles of the
     survivor set), a lone triangle and a pendant edge peel away;
     partition-invariant."""
@@ -1298,9 +1329,10 @@ def test_ktruss_peels_to_known_core_and_partitions(spark):
         (r["u"], r["v"], r["support"]) for r in ktruss(edges, k=4, rounds=4).collect()
     }
     assert got == want
+    narrow_loops()
     again = {
         (r["u"], r["v"], r["support"])
-        for r in ktruss(edges.repartition(7), k=4, rounds=4, loop_partitions=3).collect()
+        for r in ktruss(edges.repartition(7), k=4, rounds=4).collect()
     }
     assert again == want
 
