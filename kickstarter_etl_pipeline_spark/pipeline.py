@@ -2,8 +2,9 @@
 
 Mirrors the reference ``__main__`` flow (``src/etl_pipeline.py:285-315``)
 including its logging narrative, against a Spark warehouse instead of
-SQLite. One lazy plan per phase; the only actions are the logged counts
-and the warehouse writes.
+SQLite. One lazy plan per phase; the only actions are the logged counts,
+the warehouse writes and the sampling job that sets the fact's range
+bounds.
 """
 
 from __future__ import annotations

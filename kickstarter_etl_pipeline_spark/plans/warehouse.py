@@ -8,6 +8,12 @@ against the session catalog (parquet-backed managed tables), and the
 load is a set-based write. ``IF NOT EXISTS`` maps 1:1; PK/FK/UNIQUE are
 not enforced by Spark — they hold by construction (distinct + window
 keys upstream, SURVEY.md §1.1).
+
+The fact table is unpartitioned and range-clustered on
+``launched_date_key`` (``sources.bucketing.range_clustered``): one file
+per write task, each covering a disjoint date range, so the file count
+does not grow with the number of launch dates and a date-range read
+skips files and row groups from their parquet footer min/max stats.
 """
 
 from __future__ import annotations
@@ -15,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from kickstarter_etl_pipeline_spark.plans.star import StarSchema
+from kickstarter_etl_pipeline_spark.sources.bucketing import range_clustered
 
 #: Star-schema DDL (mirrors reference sql/create_tables.sql:1-43; types
 #: per SURVEY.md §1.2 mapping — INTEGER→INT/BIGINT, REAL→DOUBLE, TEXT→STRING).
@@ -57,7 +64,6 @@ WAREHOUSE_DDL: dict[str, str] = {
             category_key INT,
             launched_date_key INT
         ) USING parquet
-        PARTITIONED BY (launched_date_key)
     """,
 }
 
@@ -71,8 +77,17 @@ def create_warehouse_schema(spark: SparkSession, db: str = "kickstarter_wh") -> 
 
 def load_warehouse(spark: SparkSession, star: StarSchema, db: str = "kickstarter_wh") -> dict[str, int]:
     """Load a built star schema into the warehouse tables (overwrite —
-    the reference's fresh-database run). The fact table is partitioned
-    by date key so date-range queries prune partitions at 100 TB."""
+    the reference's fresh-database run).
+
+    The fact is range-clustered on ``launched_date_key`` into
+    ``spark.sql.shuffle.partitions`` files (the session's core-sized
+    width, read here). That adds a sampling job for the range bounds
+    and one shuffle. At 100 TB the scan cost of a date-range query is
+    then set by bytes per file and footer skipping: a file whose
+    min/max date bounds miss the range is skipped, and inside a file
+    the date sort keeps every row group's bounds tight, so only the
+    row groups overlapping the range are read — with no directory per
+    date to list or write."""
     create_warehouse_schema(spark, db)
     counts = {}
     for name, df in (
@@ -82,9 +97,13 @@ def load_warehouse(spark: SparkSession, star: StarSchema, db: str = "kickstarter
     ):
         df.write.mode("overwrite").insertInto(f"{db}.{name}", overwrite=True)
         counts[name] = spark.table(f"{db}.{name}").count()
-    star.fact.select(
+    fact = star.fact.select(
         "campaign_id", "name", "backers", "pledged_usd", "goal_usd",
         "duration_days", "state_key", "category_key", "launched_date_key",
-    ).write.mode("overwrite").insertInto(f"{db}.fact_campaigns", overwrite=True)
+    )
+    n_files = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    range_clustered(fact, "launched_date_key", n_files).write.mode("overwrite").insertInto(
+        f"{db}.fact_campaigns", overwrite=True
+    )
     counts["fact_campaigns"] = spark.table(f"{db}.fact_campaigns").count()
     return counts

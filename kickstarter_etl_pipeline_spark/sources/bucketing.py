@@ -37,6 +37,27 @@ def colocated_join(
     return spark.table(left_table).join(spark.table(right_table), on=keys, how=how)
 
 
+def range_clustered(df: DataFrame, cols: str | list[str], num_files: int) -> DataFrame:
+    """Range-clustered layout: the data-skipping twin of bucketing.
+
+    ``repartitionByRange`` range-partitions on ``cols`` (sampled global
+    bounds) and ``sortWithinPartitions`` orders rows inside each
+    partition, so every file written from the result covers a DISJOINT
+    value range and its parquet footer min/max stats are tight. Any
+    later scan with a predicate on ``cols`` prunes whole files/row
+    groups from the footer alone — bucketing pays one shuffle at ingest
+    to kill JOIN exchanges, this pays one shuffle at ingest to kill SCAN
+    volume. At 100 TB this (or its multi-column Z-order refinement in
+    lake formats) is the difference between a date-range query reading
+    a day and reading the table. ``num_files`` is explicit because
+    without it AQE coalesces a small input to one file and the skipping
+    is gone. Disjointness is asserted from real footers in
+    tests/test_range_clustering.py and tests/test_warehouse.py.
+    """
+    keys = [cols] if isinstance(cols, str) else cols
+    return df.repartitionByRange(num_files, *keys).sortWithinPartitions(*keys)
+
+
 def write_range_clustered(
     df: DataFrame,
     path: str,
@@ -44,24 +65,5 @@ def write_range_clustered(
     num_files: int = 8,
     mode: str = "overwrite",
 ) -> None:
-    """Range-clustered layout: the data-skipping twin of bucketing.
-
-    ``repartitionByRange`` range-partitions on ``cols`` (sampled global
-    bounds) and ``sortWithinPartitions`` orders rows inside each file,
-    so every output file covers a DISJOINT value range and its parquet
-    footer min/max stats are tight. Any later scan with a predicate on
-    ``cols`` prunes whole files/row groups from the footer alone —
-    bucketing pays one shuffle at ingest to kill JOIN exchanges, this
-    pays one shuffle at ingest to kill SCAN volume. At 100 TB this (or
-    its multi-column Z-order refinement in lake formats) is the
-    difference between a date-range query reading a day and reading
-    the table. Disjointness is asserted from real footers in
-    tests/test_range_clustering.py.
-    """
-    keys = [cols] if isinstance(cols, str) else cols
-    (
-        df.repartitionByRange(num_files, *keys)
-        .sortWithinPartitions(*keys)
-        .write.mode(mode)
-        .parquet(path)
-    )
+    """Write :func:`range_clustered` ``df`` as parquet at ``path``."""
+    range_clustered(df, cols, num_files).write.mode(mode).parquet(path)

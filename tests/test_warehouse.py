@@ -2,17 +2,19 @@
 
 from __future__ import annotations
 
+import glob
 import logging
-import os
-
 import shutil
+from datetime import date, timedelta
 
 import pytest
+from pyspark.sql import Row, functions as F
 
 from kickstarter_etl_pipeline_spark.logging_config import configure_logger
 from kickstarter_etl_pipeline_spark.pipeline import run_pipeline
 from kickstarter_etl_pipeline_spark.plans.star import kickstarter_star
 from kickstarter_etl_pipeline_spark.plans.warehouse import create_warehouse_schema, load_warehouse
+from tests.test_range_clustering import _file_ranges
 from tests.test_transform_kickstarter import raw_rows
 
 
@@ -51,6 +53,60 @@ def test_warehouse_load_and_query(spark):
     assert [(r["state_name"], r["n"]) for r in res] == [("failed", 1), ("successful", 2)]
 
 
+def _dated_raw_rows(spark, n_rows: int, n_dates: int):
+    """``raw_rows``-shaped campaigns spread round-robin over ``n_dates``
+    launch dates."""
+    start = date(2016, 1, 1)
+    rows = []
+    for i in range(n_rows):
+        launched = start + timedelta(days=i % n_dates)
+        rows.append(Row(
+            ID=i, name=f"c{i}", category=("Rock", "Indie", "Shorts")[i % 3],
+            main_category=("Music", "Music", "Film")[i % 3], currency="USD",
+            deadline=str(launched + timedelta(days=30)), goal=100.0 + i,
+            launched=f"{launched} 12:00:00", pledged=float(i % 97),
+            state=("successful", "failed")[i % 2], backers=i % 7, country="US",
+            **{"usd pledged": float(i % 97)}, usd_pledged_real=float(i % 97),
+            usd_goal_real=100.0 + i,
+        ))
+    return spark.createDataFrame(rows)
+
+
+def _scan_output_rows(df) -> int:
+    """Rows the parquet scan of an executed exchange-free plan emitted."""
+    leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
+    scans = [leaves.apply(i) for i in range(leaves.size())]
+    assert [s.nodeName() for s in scans] == ["Scan parquet spark_catalog.wh_test.fact_campaigns"]
+    return scans[0].metrics().apply("numOutputRows").value()
+
+
+def test_fact_range_clustered_and_footer_pruned(spark):
+    """The fact is one file per write task (``spark.sql.shuffle.partitions``
+    of them, however many dates), the files' launched_date_key footer
+    ranges never interleave, and a narrow date-range read skips files
+    from those footers yet returns exactly the star's rows."""
+    n_files = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_dates = max(48, 4 * n_files)  # every range partition gets dates
+    star = kickstarter_star(_dated_raw_rows(spark, 10 * n_dates, n_dates))
+    counts = load_warehouse(spark, star, db="wh_test")
+    assert counts["fact_campaigns"] == 10 * n_dates and counts["dim_date"] == n_dates
+
+    warehouse_dir = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    fact_dir = f"{warehouse_dir}/wh_test.db/fact_campaigns"
+    assert len(glob.glob(f"{fact_dir}/part-*.parquet")) == n_files
+    ranges = sorted(_file_ranges(fact_dir, "launched_date_key"))
+    assert len(ranges) == n_files and sum(r[2] for r in ranges) == counts["fact_campaigns"]
+    for (lo_a, hi_a, _), (lo_b, hi_b, _) in zip(ranges, ranges[1:]):
+        assert lo_b >= hi_a, f"interleaved file ranges: ({lo_a},{hi_a}) vs ({lo_b},{hi_b})"
+
+    lo, hi = 20160110, 20160114
+    in_range = F.col("launched_date_key").between(lo, hi)
+    read = spark.table("wh_test.fact_campaigns").filter(in_range)
+    got = read.collect()
+    want = star.fact.select(*read.columns).filter(in_range).collect()
+    assert len(want) == 50 and sorted(got) == sorted(want)
+    assert len(want) <= _scan_output_rows(read) < counts["fact_campaigns"]
+
 
 def test_run_pipeline_end_to_end(spark, tmp_path, caplog):
     """extract → inspect → transform → load on a 4-row CSV: the load
@@ -85,22 +141,26 @@ def test_run_pipeline_end_to_end(spark, tmp_path, caplog):
     assert logged()[-1] == ("CRITICAL", "Extraction failed — terminating execution.")
 
 
-def test_configure_logger_rotating(tmp_path=None):
-    scratch = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
-    log_file = os.path.join(scratch, "logs", "etl.log")
-    logger = configure_logger("WhTestLogger", log_file=log_file)
-    logger.info("hello warehouse")
-    logger2 = configure_logger("WhTestLogger", log_file=log_file)  # idempotent
-    assert logger is logger2 and len(logger.handlers) == 2
-    for h in logger.handlers:
-        h.flush()
-    with open(log_file) as fh:
-        line = fh.read()
-    assert "WhTestLogger - INFO - hello warehouse" in line
-    assert any(
-        isinstance(h, logging.handlers.RotatingFileHandler) and h.maxBytes == 5 * 1024 * 1024
-        for h in logger.handlers
-    )
+def test_configure_logger_rotating(tmp_path):
+    log_file = str(tmp_path / "logs" / "etl.log")
+    logger = configure_logger("WhTestLogger.rotating", log_file=log_file)
+    try:
+        logger.info("hello warehouse")
+        logger2 = configure_logger("WhTestLogger.rotating", log_file=log_file)  # idempotent
+        assert logger is logger2 and len(logger.handlers) == 2
+        for h in logger.handlers:
+            h.flush()
+        with open(log_file) as fh:
+            line = fh.read()
+        assert "WhTestLogger.rotating - INFO - hello warehouse" in line
+        assert any(
+            isinstance(h, logging.handlers.RotatingFileHandler) and h.maxBytes == 5 * 1024 * 1024
+            for h in logger.handlers
+        )
+    finally:
+        for h in list(logger.handlers):
+            logger.removeHandler(h)
+            h.close()
 
 
 def test_snapshot_crash_safety(spark, tmp_path):
