@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from kickstarter_etl_pipeline_spark.constants import BENFORD_P, RAKE_STOPWORDS
 from kickstarter_etl_pipeline_spark.operators import text as TX
 from kickstarter_etl_pipeline_spark.operators.ranking import (
+    bigint,
+    collect_control,
     collected_offsets,
     grouped_two_phase_rank,
     ntile_exact,
@@ -1672,8 +1674,13 @@ def _bt_contests_and_fit(spark: SparkSession, sf_dir: str, rounds: int = 8):
     q_preference_dataset_manifest reuses the IDENTICAL contest build
     and MM fit the way curation_pack_manifest reuses clean_corpus).
     Returns (lagd contests frame with user_id/event_id for split keys,
-    wl winner/loser cells, games symmetric game counts, wins per-type
-    win totals, s fitted integer-micro strengths after ``rounds``)."""
+    games symmetric game counts, wins per-type win totals, s fitted
+    integer-micro strengths after ``rounds``).
+
+    The ≤ T² winner/loser cells are collected once (``collect_control``);
+    games, wins and the MM rounds are Python ints on the driver, every
+    product and sum checked against the BIGINT range (``bigint``), and
+    the three results come back as small local frames."""
     from kickstarter_etl_pipeline_spark.operators.events import with_unix_micros
 
     ev = with_unix_micros(load_table(spark, sf_dir, "events"))
@@ -1699,68 +1706,33 @@ def _bt_contests_and_fit(spark: SparkSession, sf_dir: str, rounds: int = 8):
         )
         .groupBy("_w", "_l")
         .agg(F.count("*").cast("long").alias("_n"))
-        .localCheckpoint(eager=True)
     )
-    games = (
-        wl.select(F.col("_w").alias("_i"), F.col("_l").alias("_j"), "_n")
-        .unionByName(wl.select(F.col("_l").alias("_i"), F.col("_w").alias("_j"), "_n"))
-        .groupBy("_i", "_j")
-        .agg(F.sum("_n").cast("long").alias("_g"))
-        .localCheckpoint(eager=True)
-    )
-    types = games.select(F.col("_i").alias("_t")).distinct()
-    wins = (
-        types.join(
-            wl.groupBy("_w").agg(F.sum("_n").cast("long").alias("_wi")),
-            types["_t"] == F.col("_w"),
-            "left",
-        )
-        .select("_t", F.coalesce("_wi", F.lit(0).cast("long")).alias("_wi"))
-        .localCheckpoint(eager=True)
-    )
-    ns = F.broadcast(types.agg(F.count("*").cast("long").alias("_ns")))
-    s = types.select("_t", F.lit(1_000_000).cast("long").alias("_s")).localCheckpoint(
-        eager=True
-    )
+    games, wins = {}, {}
+    for win, lose, n in collect_control(wl):
+        for ij in ((win, lose), (lose, win)):
+            games[ij] = bigint(games.get(ij, 0) + n)
+        wins[win] = bigint(wins.get(win, 0) + n)
+        wins.setdefault(lose, 0)
+    ns = len(wins)  # the types: every type in some contest
+    s = dict.fromkeys(wins, 1_000_000)
     for _ in range(rounds):
-        d = (
-            games.join(
-                s.select(F.col("_t").alias("_i"), F.col("_s").alias("_si")), "_i"
-            )
-            .join(s.select(F.col("_t").alias("_j"), F.col("_s").alias("_sj")), "_j")
-            .select(
-                "_i", F.expr("(_g * 1000000000000) DIV (_si + _sj)").alias("_term")
-            )
-            .groupBy(F.col("_i").alias("_t"))
-            .agg(F.sum("_term").cast("long").alias("_d"))
-        )
-        # checkpoint: _sr feeds BOTH the normalizer total and the next
-        # s — lazy, the whole round would execute twice (the coverage
-        # pick_doc lesson).
-        sraw = (
-            wins.join(d, "_t")
-            .select(
-                "_t",
-                F.greatest(
-                    F.lit(1).cast("long"), F.expr("(_wi * 1000000000000) DIV _d")
-                ).alias("_sr"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        tot = F.broadcast(sraw.agg(F.sum("_sr").cast("long").alias("_tot")))
-        s = (
-            sraw.crossJoin(tot)
-            .crossJoin(ns)
-            .select(
-                "_t",
-                F.greatest(
-                    F.lit(1).cast("long"),
-                    F.expr("(_sr * _ns * 1000000) DIV _tot"),
-                ).alias("_s"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return lagd, wl, games, wins, s
+        d = {}
+        for (i, j), g in games.items():
+            d[i] = bigint(d.get(i, 0) + bigint(g * 10**12) // bigint(s[i] + s[j]))
+        sraw = {t: max(1, bigint(wi * 10**12) // d[t]) for t, wi in wins.items()}
+        tot = bigint(sum(sraw.values()))
+        s = {
+            t: max(1, bigint(bigint(sr * ns) * 1_000_000) // tot)
+            for t, sr in sraw.items()
+        }
+    return (
+        lagd,
+        spark.createDataFrame(
+            [(i, j, g) for (i, j), g in games.items()], "_i string, _j string, _g bigint"
+        ),
+        spark.createDataFrame(list(wins.items()), "_t string, _wi bigint"),
+        spark.createDataFrame(list(s.items()), "_t string, _s bigint"),
+    )
 
 
 def q_preference_bt_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1791,10 +1763,11 @@ def q_preference_bt_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization s ≤ NS·10⁶ + NS, so s'·NS·10⁶ stays ≤ ~10¹⁴.
 
     Scale: the contest build is ONE user-keyed lag window over events
-    (data-sized); everything after runs on ≤ T² rows (T = event types,
-    ~7) — constant-size frames with broadcast one-row totals, the
-    markov_stationary posture exactly."""
-    _lagd, _wl, games, wins, s = _bt_contests_and_fit(spark, sf_dir)
+    (data-sized); its ≤ T² winner/loser cells (T = event types, ~7)
+    are collected once and the 8 rounds run on the driver with
+    overflow-checked Python ints — the markov_stationary posture
+    exactly. The joins below read three small local frames."""
+    _lagd, games, wins, s = _bt_contests_and_fit(spark, sf_dir)
     g_tot = games.groupBy(F.col("_i").alias("_t")).agg(
         F.sum("_g").cast("long").alias("n_games")
     )
@@ -1837,7 +1810,7 @@ def q_preference_dataset_manifest(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Scale: the only data-sized stage is the shared user-keyed lag
     window; cells/games/strengths are ≤ T² rows (T = event types)."""
-    lagd, _wl, games, _wins, s = _bt_contests_and_fit(spark, sf_dir)
+    lagd, games, _wins, s = _bt_contests_and_fit(spark, sf_dir)
     contests = lagd.select(
         F.when(F.col("value") > F.col("_pv"), F.col("event_type"))
         .otherwise(F.col("_pt"))

@@ -17,9 +17,12 @@ the driver:
 - :func:`ntile_exact` — ``ntile(k)`` recovered arithmetically from a
   global rank and the row count.
 
-Every driver collect goes through :func:`_collect_prefix`, the one
-exclusive-prefix fold, which refuses frames above
-:data:`CONTROL_ROWS_CAP` rows.
+:func:`collect_control` is the one capped driver collect: it refuses
+frames above :data:`CONTROL_ROWS_CAP` rows. :func:`_collect_prefix`,
+the one exclusive-prefix fold, collects through it, and so do the
+integer control loops that iterate on collected rows
+(markov_stationary, the Bradley–Terry fit), which check every product
+and sum with :func:`bigint`.
 """
 
 from __future__ import annotations
@@ -39,16 +42,8 @@ from kickstarter_etl_pipeline_spark.session import default_parallelism
 CONTROL_ROWS_CAP = 4096
 
 
-def _collect_prefix(df: DataFrame, key, folds) -> "tuple[list, dict]":
-    """Collect the control-sized ``df``, sort its rows by ``key`` and
-    fold the exclusive prefix of each ``(field, combine)`` in ``folds``.
-
-    Returns ``(rows, prefix)`` where ``prefix[field][i]`` combines the
-    non-NULL ``field`` values of ``rows[:i]`` — NULL on the first row
-    and while only NULLs precede, exactly like the oracles'
-    ``agg(field) OVER (... ROWS UNBOUNDED PRECEDING AND 1 PRECEDING)``
-    window frame. The accumulator folds x0, x0+x1, ... (not 0+x0), so
-    float edge cases like -0.0 keep the window's bit pattern.
+def collect_control(df: DataFrame) -> list:
+    """Collect the control-sized ``df`` to the driver.
 
     Raises ``ValueError`` past :data:`CONTROL_ROWS_CAP` rows: a frame
     that large is data, not control, and belongs in a distributed plan.
@@ -60,6 +55,32 @@ def _collect_prefix(df: DataFrame, key, folds) -> "tuple[list, dict]":
             f"{CONTROL_ROWS_CAP}: a data-sized frame must not be collected "
             "to the driver"
         )
+    return rows
+
+
+def bigint(x: int) -> int:
+    """``x`` when it fits Spark's signed 64-bit BIGINT, else
+    ``ArithmeticError``: the overflow an ANSI-mode plan raises, kept
+    for the integer control loops that run on the driver with Python
+    ints, which never overflow."""
+    if not -(2**63) <= x < 2**63:
+        raise ArithmeticError(f"BIGINT overflow: {x} is outside the signed 64-bit range")
+    return x
+
+
+def _collect_prefix(df: DataFrame, key, folds) -> "tuple[list, dict]":
+    """Collect the control-sized ``df``, sort its rows by ``key`` and
+    fold the exclusive prefix of each ``(field, combine)`` in ``folds``.
+
+    Returns ``(rows, prefix)`` where ``prefix[field][i]`` combines the
+    non-NULL ``field`` values of ``rows[:i]`` — NULL on the first row
+    and while only NULLs precede, exactly like the oracles'
+    ``agg(field) OVER (... ROWS UNBOUNDED PRECEDING AND 1 PRECEDING)``
+    window frame. The accumulator folds x0, x0+x1, ... (not 0+x0), so
+    float edge cases like -0.0 keep the window's bit pattern. The
+    collect is :func:`collect_control`'s, so it carries the same cap.
+    """
+    rows = collect_control(df)
     rows.sort(key=key)
     prefix = {}
     for field, combine in folds:

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from kickstarter_etl_pipeline_spark.operators.ranking import collect_control
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 
 
@@ -762,6 +763,26 @@ def ivf_lloyd_topk(
     )
 
 
+def _pca_projection(w: "list[float]") -> Column:
+    """The per-row projection ``floor(Σ_d _cv[d]·w[d] + 0.5)`` as a
+    BIGINT, the sum folded left in dimension order, built as ONE SQL
+    expression. ``w`` is written as DOUBLE literals: ``repr`` gives the
+    shortest string that round-trips a finite double, and Spark parses
+    it back to the same bits. A NaN or infinity has no SQL literal and
+    raises ``ValueError``."""
+    import math
+
+    bad = [x for x in w if not math.isfinite(x)]
+    if bad:
+        raise ValueError(f"non-finite projection weight {bad[0]!r} has no SQL literal")
+    w_sql = ", ".join(f"{float(x)!r}D" for x in w)
+    return F.expr(
+        "CAST(floor(aggregate("
+        f"zip_with(_cv, array({w_sql}), (c, ww) -> CAST(c AS DOUBLE) * ww), "
+        "0.0D, (acc, x) -> acc + x) + 0.5D) AS BIGINT)"
+    )
+
+
 def pca_top_component(
     corpus: DataFrame,
     n_iters: int = 8,
@@ -817,12 +838,11 @@ def pca_top_component(
     # combine + a narrow coalesce(1) collapse each reduce to one task
     # without the retired session-global partitions override (the
     # ivf_lloyd_topk rationale — see that loop's comment).
-    mean_rows = (
+    mean_rows = collect_control(
         base.select(F.posexplode("_iv").alias("_d", "_x"))
         .groupBy("_d")
         .agg(F.sum("_x").alias("_s"), F.count("*").alias("_n"))
         .coalesce(1)
-        .collect()
     )
     n_rows = mean_rows[0]["_n"]
     dim = len(mean_rows)
@@ -834,39 +854,30 @@ def pca_top_component(
         # DuckDB twin uses the matching exact-integer formulation).
         mu[r["_d"]] = r["_s"] // r["_n"]
 
-    mu_arr = F.array(*[F.lit(int(m)).cast("long") for m in mu])
+    mu_sql = ", ".join(f"{int(m)}L" for m in mu)
     centered = base.select(
-        "_id", F.zip_with("_iv", mu_arr, lambda v, m: v - m).alias("_cv")
+        "_id", F.expr(f"zip_with(_iv, array({mu_sql}), (v, m) -> v - m)").alias("_cv")
     ).localCheckpoint(eager=True)
 
-    # r15 probe (plans/r15/ab_vector.py): an Arrow-kernel projection
-    # was interleave-A/B'd here and
-    # REVERTED — per round it swapped ~0.19 s of well-parallelized HOF
-    # CPU for an ArrowEvalPython round trip that cost more at bench
-    # scale (pca min 4.40 → 5.38 s over 8 rounds). The w-literal array
-    # constant-folds to a single array literal, so the fresh-plan cost
-    # per round is the same either way; the HOF keeps the work in the
-    # fused JVM stage.
+    # Each round plans a fresh aggregate, so its driver cost is the
+    # plan build: _pca_projection writes the round's w as ONE SQL
+    # expression (one parse), where 64 F.lit Columns and two Python
+    # lambdas cost 45-95 ms of py4j calls per ~0.2 s round. r15 probe
+    # (plans/r15/ab_vector.py): an Arrow-kernel projection was
+    # interleave-A/B'd here and REVERTED — per round it swapped ~0.19 s
+    # of well-parallelized HOF CPU for an ArrowEvalPython round trip
+    # that cost more at bench scale (pca min 4.40 → 5.38 s over 8
+    # rounds); the HOF keeps the work in the fused JVM stage.
     w = [0.125] * dim
     for _ in range(n_iters):
-        w_arr = F.array(*[F.lit(float(x)) for x in w])
-        proj = F.floor(
-            F.aggregate(
-                F.zip_with("_cv", w_arr, lambda c, ww: c.cast("double") * ww),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            + F.lit(0.5)
-        ).cast("long")
-        sums = (
-            centered.select(proj.alias("_q"), "_cv")
+        sums = collect_control(
+            centered.select(_pca_projection(w).alias("_q"), "_cv")
             .select("_q", F.posexplode("_cv").alias("_d", "_c"))
             .groupBy("_d")
             .agg(
                 F.sum((F.col("_c") * F.col("_q")).cast("decimal(38,0)")).alias("_ax")
             )
             .coalesce(1)
-            .collect()
         )
         x = [0.0] * dim
         for r in sums:

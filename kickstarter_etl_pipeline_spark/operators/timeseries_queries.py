@@ -9,7 +9,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from kickstarter_etl_pipeline_spark.operators import events as EV
-from kickstarter_etl_pipeline_spark.operators.ranking import two_phase_rank
+from kickstarter_etl_pipeline_spark.operators.ranking import (
+    bigint,
+    collect_control,
+    two_phase_rank,
+)
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
 
@@ -168,9 +172,13 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaks ≤ n_states nano-units per round by design.
 
     Scale: the transition matrix build is the data-sized work (one
-    user-keyed lag window + a ≤25-group aggregate); the iteration
-    runs on the ≤25-row matrix and a ≤5-row vector — constant-size
-    frames at any sf."""
+    user-keyed lag window + a ≤25-group aggregate). The ≤25 counts are
+    then collected once (bounded by ``collect_control``) and the row
+    totals, the state count and the 8 rounds run on the driver with
+    Python ints — a vector of ≤5 numbers needs no plan, optimize and
+    schedule cycle per round. Every product and sum is checked against
+    the BIGINT range (``bigint``), so an overflow still raises as the
+    ANSI Spark arithmetic did."""
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
     w = Window.partitionBy("user_id").orderBy("_us", "event_id")
     steps = (
@@ -181,32 +189,21 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     trans = steps.groupBy(
         F.col("event_type").alias("_i"), F.col("_next").alias("_j")
     ).agg(F.count("*").cast("long").alias("_nij"))
-    row_tot = trans.groupBy("_i").agg(F.sum("_nij").cast("long").alias("_ni"))
-    tm = trans.join(row_tot, "_i").localCheckpoint(eager=True)
-    n_states = F.broadcast(
-        tm.select("_i").distinct().agg(F.count("*").cast("long").alias("_ns"))
-    )
-    v = (
-        tm.select(F.col("_i").alias("_state"))
-        .distinct()
-        .crossJoin(n_states)
-        .select("_state", F.expr("CAST(1000000000 AS BIGINT) DIV _ns").alias("_v"))
-        .localCheckpoint(eager=True)
-    )
+    # a NULL current state never joins its row total (the twin's USING join)
+    tm = [r for r in collect_control(trans) if r["_i"] is not None]
+    ni = {}
+    for i, _, nij in tm:
+        ni[i] = bigint(ni.get(i, 0) + nij)
+    v = dict.fromkeys(ni, 1_000_000_000 // len(ni)) if ni else {}
     for _ in range(8):
-        v = (
-            tm.join(v, tm["_i"] == v["_state"])
-            .select(
-                F.col("_j"),
-                F.expr("(_v * _nij) DIV _ni").alias("_term"),
-            )
-            .groupBy(F.col("_j").alias("_state"))
-            .agg(F.sum("_term").cast("long").alias("_v"))
-            .localCheckpoint(eager=True)
-        )
-    return v.select(
-        F.col("_state").alias("event_type"),
-        (F.col("_v").cast("double") / 1e9).alias("stationary_share"),
+        nxt = {}
+        for i, j, nij in tm:  # // is DIV on these non-negative ints
+            if i in v:  # the join on the previous round's states
+                nxt[j] = bigint(nxt.get(j, 0) + bigint(v[i] * nij) // ni[i])
+        v = nxt
+    return spark.createDataFrame(
+        [(state, float(x) / 1e9) for state, x in v.items()],
+        "event_type string, stationary_share double",
     )
 
 

@@ -2,16 +2,16 @@
 
 Mirrors the reference ``__main__`` flow (``src/etl_pipeline.py:285-315``)
 including its logging narrative, against a Spark warehouse instead of
-SQLite. One lazy plan per phase; the only actions are the logged counts,
-the warehouse writes and the sampling job that sets the fact's range
-bounds.
+SQLite. One lazy plan per phase; the only actions are one aggregate
+behind every logged count, the warehouse writes (which count their own
+rows) and the sampling job that sets the fact's range bounds.
 """
 
 from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from kickstarter_etl_pipeline_spark import schemas
 from kickstarter_etl_pipeline_spark.logging_config import configure_logger
@@ -21,12 +21,13 @@ from kickstarter_etl_pipeline_spark.plans.warehouse import load_warehouse
 from kickstarter_etl_pipeline_spark.sources.readers import read_csv
 
 
-def inspect_data(df: DataFrame, logger: logging.Logger) -> None:
-    """V1/V2/A1: schema + state distribution, logged (reference :66-81)."""
+def inspect_data(df: DataFrame, per_state: list, logger: logging.Logger) -> None:
+    """V1/V2/A1: schema + state distribution, logged (reference :66-81);
+    ``per_state`` rows carry ``state`` and its count ``n``, in order."""
     logger.info("--- Starting Initial Data Inspection ---")
     logger.info("Schema: %s", df.schema.simpleString())
-    for row in X.state_distribution(df).collect():
-        logger.info("state %s: %d", row[0], row["count"])
+    for r in per_state:
+        logger.info("state %s: %d", r["state"], r["n"])
     logger.info("Initial data inspection completed.")
 
 
@@ -51,16 +52,25 @@ def run_pipeline(
     if raw is None:
         logger.critical("Extraction failed — terminating execution.")
         return None
-    n_raw = raw.count()
+    # one pass for every logged count: the transform keeps non-null
+    # names, and its pledged_usd is usd_pledged_real renamed
+    kept = F.col("name").isNotNull()
+    per_state = raw.groupBy("state").agg(
+        F.count("*").alias("n"),
+        F.count_if(kept).alias("kept"),
+        F.count_if(kept & F.col("usd_pledged_real").isNull()).alias("null_pledged"),
+    ).collect()
+    per_state.sort(key=lambda r: (-r["n"], r["state"] is not None, r["state"]))
+    n_raw = sum(r["n"] for r in per_state)
     logger.info("Extraction completed: %d rows, %d columns", n_raw, len(raw.columns))
-    inspect_data(raw, logger)
+    inspect_data(raw, per_state, logger)  # X.state_distribution's order
 
     transformed = X.transform_kickstarter(raw)
-    n_kept = transformed.count()
+    n_kept = sum(r["kept"] for r in per_state)
     if n_raw - n_kept:
         logger.warning("Removed %d rows with null 'name' (NOT NULL constraint).", n_raw - n_kept)
     logger.info("Transformation completed: %d rows, %d columns", n_kept, len(transformed.columns))
-    logger.info("Null values in 'pledged_usd': %d", X.null_count(transformed, "pledged_usd"))
+    logger.info("Null values in 'pledged_usd': %d", sum(r["null_pledged"] for r in per_state))
 
     star = kickstarter_star(raw)
     counts = load_warehouse(spark, star, db=db)

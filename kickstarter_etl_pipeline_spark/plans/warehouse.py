@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from kickstarter_etl_pipeline_spark.operators.quality import observe_quality
 from kickstarter_etl_pipeline_spark.plans.star import StarSchema
 from kickstarter_etl_pipeline_spark.sources.bucketing import range_clustered
 
@@ -87,23 +88,27 @@ def load_warehouse(spark: SparkSession, star: StarSchema, db: str = "kickstarter
     min/max date bounds miss the range is skipped, and inside a file
     the date sort keeps every row group's bounds tight, so only the
     row groups overlapping the range are read — with no directory per
-    date to list or write."""
+    date to list or write.
+
+    The returned counts are the rows each write job wrote, taken from
+    an ``observe_quality`` observation on the written frame: no table
+    is re-scanned to count it."""
     create_warehouse_schema(spark, db)
+    n_files = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    fact = star.fact.select(
+        "campaign_id", "name", "backers", "pledged_usd", "goal_usd",
+        "duration_days", "state_key", "category_key", "launched_date_key",
+    )
     counts = {}
     for name, df in (
         ("dim_state", star.dim_state),
         ("dim_category", star.dim_category),
         ("dim_date", star.dim_date),
+        # observed above the range clustering, so the bounds-sampling
+        # job does not count the fact's rows
+        ("fact_campaigns", range_clustered(fact, "launched_date_key", n_files)),
     ):
-        df.write.mode("overwrite").insertInto(f"{db}.{name}", overwrite=True)
-        counts[name] = spark.table(f"{db}.{name}").count()
-    fact = star.fact.select(
-        "campaign_id", "name", "backers", "pledged_usd", "goal_usd",
-        "duration_days", "state_key", "category_key", "launched_date_key",
-    )
-    n_files = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    range_clustered(fact, "launched_date_key", n_files).write.mode("overwrite").insertInto(
-        f"{db}.fact_campaigns", overwrite=True
-    )
-    counts["fact_campaigns"] = spark.table(f"{db}.fact_campaigns").count()
+        observed, obs = observe_quality(df, [], name)
+        observed.write.mode("overwrite").insertInto(f"{db}.{name}", overwrite=True)
+        counts[name] = obs.get["n_rows"]
     return counts

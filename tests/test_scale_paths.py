@@ -17,6 +17,7 @@ from kickstarter_etl_pipeline_spark.operators.dims import dim_from_distinct
 from kickstarter_etl_pipeline_spark.operators.partitioning import loop_frame
 from kickstarter_etl_pipeline_spark.operators.ranking import (
     CONTROL_ROWS_CAP,
+    collect_control,
     collected_offsets,
     two_phase_rank,
 )
@@ -80,17 +81,20 @@ def test_scalable_keys_dense_at_256_partitions(spark):
 
 
 def test_control_collect_refuses_frame_over_cap(spark):
-    """The one driver-side prefix fold refuses a frame one row over
-    CONTROL_ROWS_CAP, naming the cap; a frame at the cap still folds."""
+    """collect_control, and the driver-side prefix fold on top of it,
+    refuse a frame one row over CONTROL_ROWS_CAP, naming the cap; a
+    frame of exactly the cap is still returned and folds."""
     def counts(n_rows):
         return spark.range(n_rows).select(
             F.col("id").alias("k"), F.lit(1).cast("long").alias("n")
         )
 
+    assert len(collect_control(counts(CONTROL_ROWS_CAP))) == CONTROL_ROWS_CAP
     offs = collected_offsets(counts(CONTROL_ROWS_CAP), ["k"], [("n", "off")])
     assert offs.agg(F.max("off")).first()[0] == CONTROL_ROWS_CAP - 1
-    with pytest.raises(ValueError, match=f"CONTROL_ROWS_CAP={CONTROL_ROWS_CAP}"):
-        collected_offsets(counts(CONTROL_ROWS_CAP + 1), ["k"], [("n", "off")])
+    for over_cap in (collect_control, lambda df: collected_offsets(df, ["k"], [("n", "off")])):
+        with pytest.raises(ValueError, match=f"CONTROL_ROWS_CAP={CONTROL_ROWS_CAP}"):
+            over_cap(counts(CONTROL_ROWS_CAP + 1))
 
 
 def test_connected_components_nonconvergence_raises(spark):

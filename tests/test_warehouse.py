@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from kickstarter_etl_pipeline_spark.logging_config import configure_logger
+from kickstarter_etl_pipeline_spark.operators import transform as X
 from kickstarter_etl_pipeline_spark.pipeline import run_pipeline
 from kickstarter_etl_pipeline_spark.plans.star import kickstarter_star
 from kickstarter_etl_pipeline_spark.plans.warehouse import create_warehouse_schema, load_warehouse
@@ -135,6 +136,12 @@ def test_run_pipeline_end_to_end(spark, tmp_path, caplog):
         ("INFO", "fact_campaigns loaded with 3 records."),
     ):
         assert line in lines, lines
+    # the state lines come from the one counting aggregate, in
+    # state_distribution's order
+    raw = spark.read.csv(csv_path, header=True)
+    assert [m for _, m in lines if m.startswith("state ")] == [
+        f"state {r[0]}: {r['count']}" for r in X.state_distribution(raw).collect()
+    ]
 
     caplog.clear()
     assert run_pipeline(spark, str(tmp_path / "missing.csv"), logger=logger) is None
