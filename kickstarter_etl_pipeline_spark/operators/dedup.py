@@ -116,7 +116,7 @@ def ngram_jaccard_pairs(
 
     Set-similarity self-join: explode shingles, join on shingle with
     id_a < id_b, count intersections, Jaccard = |∩| / (|A|+|B|−|∩|).
-    Exact but worst-case quadratic — use minhash_lsh_candidates at scale
+    Exact but worst-case quadratic — use minhash_dedup_pairs at scale
     and reserve this for verification of candidate pairs.
     """
     sh = shingle_table(df, text_col, id_col, n)
@@ -471,20 +471,6 @@ def _candidates_from_staged(
         .select("id_a", "id_b")
         .distinct()
     )
-
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 16,
-    n: int = 3,
-) -> DataFrame:
-    """Candidate near-dup pairs via banded MinHash-LSH (see
-    _candidates_from_staged for the S-curve math)."""
-    staged = with_shingles(ensure_min_partitions(df), text_col, "_sh", n)
-    return _candidates_from_staged(staged, id_col, num_hashes, bands)
 
 
 def minhash_dedup_pairs(

@@ -12,45 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def free_local_checkpoints(spark: SparkSession) -> int:
-    """Unpersist locally-checkpointed RDDs — deterministic storage
-    reclamation for batch drivers.
-
-    Checkpoint blocks are normally reclaimed by the ContextCleaner once
-    the owning frames are garbage-collected, but that path is
-    best-effort from Python: py4j's detach of the Java-side reference
-    can be silently dropped under load, leaving blocks pinned
-    indefinitely. A driver that fully materializes each query before
-    moving to the next (ETL schedulers, long sessions) can call this
-    between queries for a hard guarantee.
-
-    Scope: ONLY RDDs that are locally checkpointed (the kind this
-    library creates via :func:`ensure_min_partitions`) are touched —
-    caches the host application created with ``cache()``/``persist()``
-    are left alone, so calling this cannot destroy a cache it does not
-    own. Blocking (``unpersist(True)``) so reclamation is complete when
-    the call returns, not racing the next query's job submission.
-
-    SAFE ONLY between fully-materialized queries: a local checkpoint's
-    blocks ARE its data (lineage is truncated), so re-executing a frame
-    whose blocks were freed here will fail — don't call it while lazy
-    results from earlier operators are still pending.
-
-    Returns the number of RDDs unpersisted.
-    """
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    n = 0
-    for rdd in list(jmap.values()):
-        try:
-            checkpointed = rdd.rdd().isLocallyCheckpointed()
-        except Exception:
-            checkpointed = False
-        if checkpointed:
-            rdd.unpersist(True)
-            n += 1
-    return n
-
-
 def ensure_min_partitions(
     df: DataFrame, min_partitions: int | None = None, barrier: bool = True
 ) -> DataFrame:
@@ -121,7 +82,7 @@ def loop_frame(df: DataFrame) -> DataFrame:
     the coalesce pins for free by merging the preceding stage's
     shuffle-read partitions. Interleaved A/B at sf0.1 across the seven
     graph-loop bench queries: 1.06×–1.83× faster than the hash
-    exchange, results cell-identical (plans/r15/ab_graph2.py).
+    exchange, results cell-identical (r15).
 
     Coalesce only SHRINKS: a frame already narrower than the constant
     keeps its width. Every call site feeds a post-shuffle frame at
@@ -130,6 +91,20 @@ def loop_frame(df: DataFrame) -> DataFrame:
     at call time, so tests can narrow it with ``monkeypatch``.
     """
     return df.coalesce(LOOP_PARTITIONS).localCheckpoint(eager=True)
+
+
+# State-store partition count of the stateful streaming queries that
+# pin it on an isolated_session: the tws_sessionize operators,
+# tws_recovery.tws_state_at_rest and the chained hourly -> daily rollup.
+# Streaming reads it from spark.sql.shuffle.partitions when the
+# checkpoint is created. Like LOOP_PARTITIONS it is DATA-sized: it
+# tracks open state keys ((window, event_type) groups, live users), not
+# input volume or cores. Each state partition pays a commit per
+# micro-batch, so at 32 the rollup's two stateful operators were mostly
+# commit overhead (4.2 s -> 1.5 s at sf0.1 going 32 -> 8, byte-identical
+# 145 rows). On a cluster, raise it only when the open-key count needs
+# it. No emitted row depends on it: every operator is a per-key fold.
+STATE_PARTITIONS = 8
 
 
 def isolated_session(spark: SparkSession, confs: dict[str, str]) -> SparkSession:

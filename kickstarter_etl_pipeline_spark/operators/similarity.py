@@ -12,8 +12,8 @@ Two tiers, per the standard ANN playbook:
   Hyperplanes are derived deterministically from xxhash64 so runs are
   reproducible without a driver-side RNG.
 
-Embedding-cosine near-dup detection (dedup use-case) reuses the same
-scoring with a threshold instead of top-k.
+Embedding-cosine near-dup detection (dedup use-case) is
+:func:`semantic_dedup`.
 """
 
 from __future__ import annotations
@@ -117,25 +117,6 @@ def _plane_component(plane: int, j: int) -> float:
 
     h = int.from_bytes(hashlib.md5(f"plane_{plane}_{j}".encode()).digest()[:8], "big")
     return (h % 200_007) / 100_003.0 - 1.0
-
-
-def _hyperplane(dim: int, plane: int) -> Column:
-    """Deterministic pseudo-random hyperplane, materialized as LITERALS:
-    the components are constants, so hashing them driver-side turns the
-    per-row cost into plain mul-adds (hashing row-side via xxhash64
-    expressions re-evaluated dim × planes hashes per ROW — measured 5×
-    slower end-to-end on the multi-table variant). Reproducible across
-    runs and executors with zero driver-side RNG state."""
-    return F.array(*[F.lit(_plane_component(plane, j)) for j in range(dim)])
-
-
-def with_lsh_bucket(df: DataFrame, vec_col: str, dim: int, num_planes: int = 8) -> DataFrame:
-    """Sign-pattern bucket id from ``num_planes`` random hyperplanes."""
-    bucket = F.lit(0).cast("long")
-    for p in range(num_planes):
-        sign_bit = F.when(dot(F.col(vec_col), _hyperplane(dim, p)) >= 0, 1).otherwise(0)
-        bucket = F.shiftleft(bucket, 1) + sign_bit
-    return df.withColumn("_bucket", bucket)
 
 
 def with_lsh_probe_keys(
@@ -323,85 +304,6 @@ def lsh_topk(
     )
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_clusters: int = 8,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF (inverted-file) ANN: k-means partitions the corpus into
-    cells; each query scans only its ``n_probe`` nearest cells.
-
-    The index build is a seeded pyspark.ml KMeans fit; the only
-    driver-side state is the K centroid vectors (tiny), embedded as
-    literals in the query-side cell scorer. Approximate by design →
-    rows-only verification; recall rises with n_probe.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    corpus_ml = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cvec"),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("_mlvec"),
-    )
-    model = KMeans(k=n_clusters, seed=42, featuresCol="_mlvec", predictionCol="_cell").fit(corpus_ml)
-    # Norm staged per row, not per candidate pair (same reasoning as
-    # lsh_topk: a probed cell holds ~corpus/K rows per query, and
-    # cosine() inline would redo both norms for every pair).
-    assigned = model.transform(corpus_ml).select(
-        "neighbor_id", "_cvec", "_cell"
-    ).withColumn("_cnorm", norm(F.col("_cvec")))
-    centroids = [list(map(float, c)) for c in model.clusterCenters()]
-
-    # Query-side: distance to every centroid from literals, take n_probe cells.
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec"))
-    dists = F.array(
-        *[
-            F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("_qvec"),
-                        F.array(*[F.lit(x) for x in centroid]),
-                        lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("dist"),
-                F.lit(cell).alias("cell"),
-            )
-            for cell, centroid in enumerate(centroids)
-        ]
-    )
-    probed = q.withColumn(
-        "_cell", F.explode(F.slice(F.array_sort(dists), 1, n_probe).getField("cell"))
-    ).withColumn("_qnorm", norm(F.col("_qvec")))
-    scored = (
-        assigned.join(F.broadcast(probed), on=assigned["_cell"] == probed["_cell"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                F.try_divide(
-                    dot(F.col("_qvec"), F.col("_cvec")),
-                    F.col("_qnorm") * F.col("_cnorm"),
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
-
-
 def quantization_profile(
     df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
@@ -445,41 +347,6 @@ def quantization_profile(
     )
 
 
-def cosine_near_dup_pairs(
-    df: DataFrame,
-    threshold: float = 0.95,
-    dim: int = 64,
-    num_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (id_a < id_b, sim ≥ threshold),
-    LSH-bucketed so the self-join is per-bucket rather than all-pairs."""
-    bucketed = with_lsh_bucket(
-        df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")),
-        "_vec",
-        dim,
-        num_planes,
-    )
-    # Both self-join sides read the bucketed vectors; checkpoint so the
-    # num_planes × dim hyperplane dots run once per row, not twice
-    # (blocks auto-released by the ContextCleaner — see operators.dedup).
-    bucketed = bucketed.localCheckpoint(eager=True)
-    a = bucketed.select(F.col("_id").alias("id_a"), F.col("_vec").alias("_vec_a"), "_bucket")
-    b = bucketed.select(F.col("_id").alias("id_b"), F.col("_vec").alias("_vec_b"), "_bucket")
-    return (
-        a.join(b, on="_bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(cosine(F.col("_vec_a"), F.col("_vec_b")), 6).alias("cosine_sim"),
-        )
-        .filter(F.col("cosine_sim") >= threshold)
-        .distinct()
-    )
-
-
 def ivf_anchor_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -489,8 +356,8 @@ def ivf_anchor_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF ANN with DETERMINISTIC anchor centroids — the fully-oracle'd
-    sibling of :func:`ivf_topk`.
+    """IVF ANN with DETERMINISTIC anchor centroids — the untrained
+    sibling of :func:`ivf_lloyd_topk`.
 
     Instead of a k-means training pass, the cell "centroids" are the
     ``n_cells`` corpus vectors with the lexically-smallest
@@ -516,7 +383,7 @@ def ivf_anchor_topk(
 
     spark = corpus.sparkSession
     # Anchor selection: a driver-side top-K of (md5(id), id) — K vectors
-    # of control data, same posture as ivf_topk's centroid literals.
+    # of control data, same posture as ivf_lloyd_topk's driver-side centroids.
     anchor_rows = (
         corpus.select(
             F.md5(F.col(id_col).cast("string")).alias("_h"),

@@ -77,9 +77,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension-wise floor-mean updates — similarity.ivf_lloyd_topk), so
     the DuckDB twin unrolls the 5 assignment/update rounds as CTEs and
     replays the identical index, probe fan-out and rounded-cosine
-    re-rank. The seeded pyspark.ml variant (similarity.ivf_topk) stays
-    as the alternative production path, contract-tested in
-    tests/test_ann_partial_oracle.py."""
+    re-rank."""
     from kickstarter_etl_pipeline_spark.operators.similarity import ivf_lloyd_topk
 
     emb = load_table(spark, sf_dir, "embeddings")

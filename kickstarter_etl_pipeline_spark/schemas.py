@@ -112,13 +112,6 @@ def events_schema(ts_dtype: str = "timestamp_ntz") -> T.StructType:
     )
 
 
-#: Legacy fixture layout (int64 nanoseconds) — kept for old-layout inputs.
-EVENTS = events_schema("bigint")
-
-#: Kafka wire payload schema: JSON with ``ts`` as int64 MICROseconds
-#: since epoch (matches the current fixture precision).
-EVENTS_WIRE = events_schema("bigint")
-
 DOCUMENTS = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

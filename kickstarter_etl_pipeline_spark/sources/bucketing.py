@@ -1,40 +1,15 @@
-"""Bucketed tables: co-located joins with zero shuffle.
+"""Clustered table layouts: pay one shuffle at ingest, save it per query.
 
-At 100 TB the lineitem⋈orders join is the one shuffle left in the fact
-build. Bucketing both tables by the join key at write time
-(`bucketBy` + `sortBy`) makes every subsequent build a zero-exchange
-sort-merge join: each bucket pair joins locally. This is the standard
-amortize-the-shuffle trade — pay it once at ingest, never per query.
+The one layout the engine writes is range clustering
+(:func:`range_clustered`): every file covers a disjoint key range, so
+footer min/max stats let later range scans skip files. The warehouse
+fact is loaded this way (plans/warehouse.py). Spark's ``bucketBy`` is
+the join-side analog; no production table uses it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    num_buckets: int = 32,
-    mode: str = "overwrite",
-) -> None:
-    (
-        df.write.mode(mode)
-        .bucketBy(num_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
-def colocated_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str | list[str], how: str = "inner"
-) -> DataFrame:
-    """Join two same-bucketed tables; with matching bucket specs Spark
-    plans a sort-merge join with NO exchange on either side."""
-    keys = [on] if isinstance(on, str) else on
-    return spark.table(left_table).join(spark.table(right_table), on=keys, how=how)
+from pyspark.sql import DataFrame
 
 
 def range_clustered(df: DataFrame, cols: str | list[str], num_files: int) -> DataFrame:

@@ -60,25 +60,6 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def read_parquet_resilient(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet read that SKIPS corrupt or concurrently-deleted files
-    instead of failing the job.
-
-    On a long-lived 100 TB table a single truncated upload or a file
-    compacted away mid-scan would otherwise kill a thousand-executor
-    job at 99%. Deliberately opt-in, never the default reader: silent
-    row loss is worse than failure for correctness-tier pipelines, so
-    pair this with a downstream row-count DQ check (operators.quality)
-    and alert on the delta.
-    """
-    ensure_runtime_confs(spark)
-    return (
-        spark.read.option("ignoreCorruptFiles", True)
-        .option("ignoreMissingFiles", True)
-        .parquet(path)
-    )
-
-
 def read_parquet_evolved(spark: SparkSession, path: str) -> DataFrame:
     """Read a parquet dataset whose files were written under EVOLVING
     schemas (columns added over time): ``mergeSchema`` unions the file
@@ -120,4 +101,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_dtype == "timestamp":
             df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     return df
-

@@ -205,60 +205,6 @@ def incremental_rollup_update(
     return materialized
 
 
-def jdbc_options(
-    url: str,
-    table: str,
-    batchsize: int = 10_000,
-    isolation_level: str = "READ_COMMITTED",
-    num_partitions: int | None = None,
-    driver: str | None = None,
-) -> dict[str, str]:
-    """Writer options for the JDBC warehouse sink (pure, unit-testable).
-
-    ``batchsize`` is the executemany analog (reference S3 loads the fact
-    via ``cursor.executemany``, ``src/etl_pipeline.py:272-277``);
-    ``numPartitions`` caps concurrent connections so a 1000-executor
-    write doesn't open 1000 sessions against the warehouse.
-    """
-    opts = {
-        "url": url,
-        "dbtable": table,
-        "batchsize": str(batchsize),
-        "isolationLevel": isolation_level,
-    }
-    if num_partitions is not None:
-        opts["numPartitions"] = str(num_partitions)
-    if driver is not None:
-        opts["driver"] = driver
-    return opts
-
-
-def write_jdbc(
-    df: DataFrame,
-    url: str,
-    table: str,
-    mode: str = "append",
-    batchsize: int = 10_000,
-    isolation_level: str = "READ_COMMITTED",
-    num_partitions: int | None = None,
-    driver: str | None = None,
-) -> None:
-    """RDBMS warehouse sink — the direct analog of the reference's
-    sqlite3 ``executemany`` load (S3, ``src/etl_pipeline.py:272-277``),
-    parallel per partition instead of single-threaded.
-
-    Environment note: this container ships no JDBC driver jar, so the
-    call surface is exercised in tests only up to the driver-resolution
-    error; against a real warehouse, put the driver jar on the
-    classpath (``spark.jars``) and pass ``driver=`` if the URL scheme
-    isn't auto-registered.
-    """
-    writer = df.write.format("jdbc").mode(mode)
-    for k, v in jdbc_options(url, table, batchsize, isolation_level, num_partitions, driver).items():
-        writer = writer.option(k, v)
-    writer.save()
-
-
 def incremental_distinct_rollup(
     spark: SparkSession,
     path: str,

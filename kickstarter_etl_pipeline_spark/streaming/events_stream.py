@@ -23,7 +23,10 @@ def _checkpoint_dir(prefix: str) -> str:
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from kickstarter_etl_pipeline_spark import schemas
-from kickstarter_etl_pipeline_spark.operators.partitioning import isolated_session
+from kickstarter_etl_pipeline_spark.operators.partitioning import (
+    STATE_PARTITIONS,
+    isolated_session,
+)
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.session import ensure_runtime_confs
 
@@ -407,39 +410,6 @@ def streaming_purchase_click_join(
     return spark.table(name)
 
 
-def streaming_dedup_events(
-    spark: SparkSession,
-    sf_dir: str,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Within-watermark dedup on (user_id, event_type) — the streaming
-    dedup primitive (dropDuplicatesWithinWatermark). Returns the
-    deduplicated event count per type, materialized via AvailableNow.
-
-    FIXTURE-VERIFICATION TIER ONLY (complete+memory) — production would
-    write the deduped stream through an append-mode file sink as in
-    :func:`stream_tumbling_append_parquet`."""
-    stream = read_events_stream(spark, sf_dir)
-    deduped = (
-        stream.withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(["user_id", "event_type"])
-        .groupBy("event_type")
-        .agg(F.count("*").alias("n_unique_user_events"))
-    )
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    checkpoint = _checkpoint_dir("ks_stream_ckpt_")
-    query = (
-        deduped.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
-
-
 def stream_upsert_rollup(
     spark: SparkSession,
     src_dir: str,
@@ -508,7 +478,6 @@ def streaming_hourly_daily_rollup(
     spark: SparkSession,
     sf_dir: str,
     watermark: str = "2 hours",
-    state_partitions: int = 8,
 ) -> DataFrame:
     """CHAINED stateful operators in one streaming query (Spark ≥ 3.5
     multiple-stateful-operator support): a watermarked hourly tumbling
@@ -530,22 +499,13 @@ def streaming_hourly_daily_rollup(
     (window, event_type) — uniform. The memory sink is the
     fixture-verification tier, as everywhere in this module.
 
-    ``state_partitions`` sizes the stateful shuffles (pinned by
+    The stateful shuffles run at ``STATE_PARTITIONS`` (pinned by
     ``spark.sql.shuffle.partitions`` at checkpoint creation, applied
     on an ISOLATED child session — ``isolated_session`` /
     ``newSession()`` — so the caller's shared session conf is never
-    touched and no concurrent batch query can inherit the override;
-    the round-11 set/restore bracket is retired). Unlike a batch shuffle,
-    the right count here tracks STATE cardinality, not input volume:
-    map-side partial aggregation means the exchange carries
-    (partitions × open-group) partial rows, and the state itself is
-    bounded by open (window, event_type) groups — dozens, regardless
-    of input scale. 32 state-store partitions × 2 stateful operators
-    was pure per-batch commit overhead (measured 4.2 s → 1.5 s at
-    sf0.1 going 32 → 8, byte-identical 145-row result; the no-data
-    watermark-flush batch alone cost 1.7 s at 32). At 100 TB the same
-    reasoning holds — raise it only if open-window × type cardinality
-    grows to need it.
+    touched and no concurrent batch query can inherit the override).
+    The state is bounded by open (window, event_type) groups — dozens,
+    regardless of input scale; see the constant for how to size it.
     """
     # Streaming pins its state partitioning from the session conf at
     # query start (fresh checkpoint every call, so it always applies).
@@ -553,9 +513,7 @@ def streaming_hourly_daily_rollup(
     # session so the shared session's conf is never mutated; the memory
     # sink's temp view is per-session, so the result is read back
     # through the child too.
-    child = isolated_session(
-        spark, {"spark.sql.shuffle.partitions": str(state_partitions)}
-    )
+    child = isolated_session(spark, {"spark.sql.shuffle.partitions": str(STATE_PARTITIONS)})
     stream = read_events_stream(child, sf_dir)
     hourly = (
         stream.withWatermark("ts", watermark)
@@ -594,63 +552,6 @@ def streaming_hourly_daily_rollup(
     )
     query.awaitTermination()
     return child.table(name)
-
-
-def stream_hourly_daily_append_parquet(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    watermark: str = "2 hours",
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
-    """PRODUCTION TIER of the chained rollup: the hourly → daily
-    two-stage stateful pipeline of :func:`streaming_hourly_daily_rollup`
-    writing APPEND-mode to an exactly-once parquet sink instead of the
-    fixture memory sink. Both states stay bounded (hours and days evict
-    at their watermark); restarts resume from the checkpoint without
-    duplicating any emitted day (exactly-once-per-window contract,
-    assert-tested). Returns the sink contents read back as a batch
-    frame.
-    """
-    stream = read_events_raw_stream(
-        spark, src_dir, glob="*.parquet", max_files_per_trigger=max_files_per_trigger
-    )
-    hourly = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-    )
-    daily = (
-        hourly.groupBy(F.window(F.window_time("w"), "1 day").alias("d"), "event_type")
-        .agg(
-            F.max("n_events").alias("max_hourly_events"),
-            F.count("*").cast("long").alias("n_hours"),
-            F.sum("n_events").alias("total_events"),
-            F.round(F.sum("sum_value"), 4).alias("total_value"),
-        )
-        .select(
-            F.date_format("d.start", "yyyy-MM-dd").alias("day"),
-            "event_type",
-            "max_hourly_events",
-            "n_hours",
-            "total_events",
-            "total_value",
-        )
-    )
-    query = (
-        daily.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.read.parquet(out_dir)
 
 
 def streaming_dedup_counts(
@@ -693,52 +594,3 @@ def streaming_dedup_counts(
         .groupBy("event_type")
         .agg(F.count("*").cast("long").alias("n_distinct_keys"))
     )
-
-
-def stream_with_observed_metrics(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, list[dict]]:
-    """Streaming observability: ``Dataset.observe`` on a STREAMING
-    frame surfaces per-micro-batch metrics in each progress event's
-    ``observedMetrics`` — the production freshness/volume monitor that
-    costs NO extra pass and no extra stateful operator (accumulator-
-    backed, rides the batch's existing job, exactly like the batch
-    observe_quality device in operators/quality.py).
-
-    Runs the events stream to completion (AvailableNow) counting rows
-    and null values per batch; returns (final rows frame, one metrics
-    dict per micro-batch that processed data). At scale this is how a
-    pipeline alerts on a silent upstream drop: the metric arrives with
-    the batch, not from a later audit query."""
-    import json
-    import uuid as _uuid
-
-    stream = read_events_stream(spark, sf_dir).observe(
-        "io_volume",
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("value").isNull().cast("long")).alias("value_nulls"),
-        F.min("ts").alias("min_ts"),
-        F.max("ts").alias("max_ts"),
-    )
-    name = f"observed_{_uuid.uuid4().hex[:8]}"
-    query = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", _checkpoint_dir("ks_observe_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    metrics = []
-    for progress in query.recentProgress:
-        # recentProgress entries are JSON strings on some API paths and
-        # StreamingQueryProgress objects on others — normalize.
-        if isinstance(progress, str):
-            progress = json.loads(progress)
-        else:
-            progress = json.loads(progress.prettyJson)
-        om = progress.get("observedMetrics", {}).get("io_volume")
-        if om and om.get("n_rows"):
-            metrics.append(om)
-    return spark.table(name), metrics

@@ -2,9 +2,9 @@
 
 A production streaming job's state store is where incidents hide:
 watermark stuck, state leaking, a window that never emits. Spark 4's
-``state-metadata`` / ``statestore`` batch sources read a checkpoint's
-state directly — no stopping the query, no log spelunking. This module
-wraps them for the engine's streaming operators.
+``statestore`` batch source reads a checkpoint's state directly — no
+stopping the query, no log spelunking. This module wraps it for the
+engine's streaming operators.
 
 The invariant the readers make checkable (asserted in
 tests/test_state_inspect.py): for an append-mode windowed aggregation,
@@ -20,12 +20,6 @@ state row count ≈ open windows (bounded), not ever-growing.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def state_metadata(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
-    """Operator-level view of a checkpoint: operator ids/names, store
-    names, partition counts, min/max batch ids."""
-    return spark.read.format("state-metadata").load(checkpoint_dir)
 
 
 def state_rows(

@@ -56,16 +56,16 @@ from pyspark.sql import types as T
 
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
+from kickstarter_etl_pipeline_spark.operators.partitioning import (
+    STATE_PARTITIONS,
+    isolated_session,
+)
 from kickstarter_etl_pipeline_spark.scratch import run_scratch_dir
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
 from kickstarter_etl_pipeline_spark.streaming.events_stream import (
     read_events_raw_stream,
 )
-
-# _STATE_PARTITIONS is defined ONCE in tws_sessionize (r15, ADVICE r14 —
-# the duplicated env read here could silently drift).
 from kickstarter_etl_pipeline_spark.streaming.tws_sessionize import (
-    _STATE_PARTITIONS,
     _export_worker_pythonpath,
     tws_available,
 )
@@ -271,10 +271,6 @@ def _two_phase_tws(
             "neither the real package nor the vendored shim is importable."
         )
     _export_worker_pythonpath(spark)
-    from kickstarter_etl_pipeline_spark.operators.partitioning import (
-        isolated_session,
-    )
-
     confs = {
         "spark.sql.streaming.stateStore.providerClass": (
             "org.apache.spark.sql.execution.streaming.state."
@@ -408,10 +404,6 @@ def tws_state_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
             "neither the real package nor the vendored shim is importable."
         )
     _export_worker_pythonpath(spark)
-    from kickstarter_etl_pipeline_spark.operators.partitioning import (
-        isolated_session,
-    )
-
     child = isolated_session(
         spark,
         {
@@ -419,17 +411,7 @@ def tws_state_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "org.apache.spark.sql.execution.streaming.state."
                 "RocksDBStateStoreProvider"
             ),
-            # r14: size the stateful shuffle / state-store partition
-            # count to STATE cardinality instead of inheriting the
-            # session's core count — the streaming_hourly_daily_rollup
-            # device, verbatim (see its docstring for the scale
-            # argument: the exchange carries map-side-combined partial
-            # rows and the per-key user state is what the count must
-            # track, so the knob is data-sized, not core-sized). 32
-            # RocksDB instances per micro-batch were pure commit
-            # overhead at fixture scale; results are per-key folds,
-            # partition-count-invariant by construction.
-            "spark.sql.shuffle.partitions": str(_STATE_PARTITIONS),
+            "spark.sql.shuffle.partitions": str(STATE_PARTITIONS),
         },
     )
     src, _staged_b, _n_a, _n_b = _split_events_by_midpoint(child, sf_dir)

@@ -49,6 +49,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
+from kickstarter_etl_pipeline_spark.operators.partitioning import (
+    STATE_PARTITIONS,
+    isolated_session,
+)
 from kickstarter_etl_pipeline_spark.streaming.events_stream import (
     _checkpoint_dir,
     read_events_stream,
@@ -60,15 +64,6 @@ from kickstarter_etl_pipeline_spark.streaming.stateful import (
     TIMEOUT_SESSION_SCHEMA,
 )
 
-
-#: State-store / stateful-shuffle partition count for the TWS queries
-#: (r14). Data-sized knob — tracks per-key STATE cardinality, not the
-#: host core count (see streaming_hourly_daily_rollup's state_partitions
-#: for the full scale argument). Local default 8 fits the fixture's
-#: ~150 user keys; size up via SPARK_GRAFT_STATE_PARTITIONS on a real
-#: cluster. Partition count cannot move any emitted row: every operator
-#: here is a per-key fold.
-_STATE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "8"))
 
 _OUT_COLS = [f.name for f in SESSION_SCHEMA.fields]
 _TIMEOUT_COLS = [f.name for f in TIMEOUT_SESSION_SCHEMA.fields]
@@ -222,10 +217,6 @@ def tws_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Plan the whole query on an isolated child session pinning the
     # RocksDB provider — the shared session conf is never mutated
     # (the streaming_hourly_daily_rollup device).
-    from kickstarter_etl_pipeline_spark.operators.partitioning import (
-        isolated_session,
-    )
-
     child = isolated_session(
         spark,
         {
@@ -233,17 +224,7 @@ def tws_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "org.apache.spark.sql.execution.streaming.state."
                 "RocksDBStateStoreProvider"
             ),
-            # r14: size the stateful shuffle / state-store partition
-            # count to STATE cardinality instead of inheriting the
-            # session's core count — the streaming_hourly_daily_rollup
-            # device, verbatim (see its docstring for the scale
-            # argument: the exchange carries map-side-combined partial
-            # rows and the per-key user state is what the count must
-            # track, so the knob is data-sized, not core-sized). 32
-            # RocksDB instances per micro-batch were pure commit
-            # overhead at fixture scale; results are per-key folds,
-            # partition-count-invariant by construction.
-            "spark.sql.shuffle.partitions": str(_STATE_PARTITIONS),
+            "spark.sql.shuffle.partitions": str(STATE_PARTITIONS),
         },
     )
     stream = read_events_stream(child, sf_dir)
@@ -349,10 +330,6 @@ def tws_sessionize_with_timeout(
             "neither the real package nor the vendored shim is importable."
         )
     _export_worker_pythonpath(spark)
-    from kickstarter_etl_pipeline_spark.operators.partitioning import (
-        isolated_session,
-    )
-
     child = isolated_session(
         spark,
         {
@@ -360,17 +337,7 @@ def tws_sessionize_with_timeout(
                 "org.apache.spark.sql.execution.streaming.state."
                 "RocksDBStateStoreProvider"
             ),
-            # r14: size the stateful shuffle / state-store partition
-            # count to STATE cardinality instead of inheriting the
-            # session's core count — the streaming_hourly_daily_rollup
-            # device, verbatim (see its docstring for the scale
-            # argument: the exchange carries map-side-combined partial
-            # rows and the per-key user state is what the count must
-            # track, so the knob is data-sized, not core-sized). 32
-            # RocksDB instances per micro-batch were pure commit
-            # overhead at fixture scale; results are per-key folds,
-            # partition-count-invariant by construction.
-            "spark.sql.shuffle.partitions": str(_STATE_PARTITIONS),
+            "spark.sql.shuffle.partitions": str(STATE_PARTITIONS),
         },
     )
     stream = read_events_stream(child, sf_dir).withWatermark("ts", watermark)
@@ -488,10 +455,6 @@ def tws_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             "neither the real package nor the vendored shim is importable."
         )
     _export_worker_pythonpath(spark)
-    from kickstarter_etl_pipeline_spark.operators.partitioning import (
-        isolated_session,
-    )
-
     child = isolated_session(
         spark,
         {
@@ -499,17 +462,7 @@ def tws_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "org.apache.spark.sql.execution.streaming.state."
                 "RocksDBStateStoreProvider"
             ),
-            # r14: size the stateful shuffle / state-store partition
-            # count to STATE cardinality instead of inheriting the
-            # session's core count — the streaming_hourly_daily_rollup
-            # device, verbatim (see its docstring for the scale
-            # argument: the exchange carries map-side-combined partial
-            # rows and the per-key user state is what the count must
-            # track, so the knob is data-sized, not core-sized). 32
-            # RocksDB instances per micro-batch were pure commit
-            # overhead at fixture scale; results are per-key folds,
-            # partition-count-invariant by construction.
-            "spark.sql.shuffle.partitions": str(_STATE_PARTITIONS),
+            "spark.sql.shuffle.partitions": str(STATE_PARTITIONS),
         },
     )
     stream = read_events_stream(child, sf_dir)
@@ -586,9 +539,6 @@ def tws_warm_start_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     _export_worker_pythonpath(spark)
     from pyspark.sql import functions as F
 
-    from kickstarter_etl_pipeline_spark.operators.partitioning import (
-        isolated_session,
-    )
     from kickstarter_etl_pipeline_spark.sources.readers import load_table
 
     child = isolated_session(
@@ -598,17 +548,7 @@ def tws_warm_start_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "org.apache.spark.sql.execution.streaming.state."
                 "RocksDBStateStoreProvider"
             ),
-            # r14: size the stateful shuffle / state-store partition
-            # count to STATE cardinality instead of inheriting the
-            # session's core count — the streaming_hourly_daily_rollup
-            # device, verbatim (see its docstring for the scale
-            # argument: the exchange carries map-side-combined partial
-            # rows and the per-key user state is what the count must
-            # track, so the knob is data-sized, not core-sized). 32
-            # RocksDB instances per micro-batch were pure commit
-            # overhead at fixture scale; results are per-key folds,
-            # partition-count-invariant by construction.
-            "spark.sql.shuffle.partitions": str(_STATE_PARTITIONS),
+            "spark.sql.shuffle.partitions": str(STATE_PARTITIONS),
         },
     )
     seed = (

@@ -231,25 +231,3 @@ def test_observe_quality_rides_the_job(spark, tmp_path):
     assert m["n_rows"] == 4
     assert m["v_nulls"] == 1
     assert m["v_min"] == -5.0 and m["v_max"] == 99.5
-
-
-def test_streaming_observed_metrics_match_batch(spark):
-    """Streaming Dataset.observe: the per-batch observedMetrics row and
-    null counts must equal the batch aggregates over the same fixture —
-    the no-extra-pass freshness monitor works end to end."""
-    from pyspark.sql import functions as F2
-
-    from kickstarter_etl_pipeline_spark.sources.readers import load_table
-    from kickstarter_etl_pipeline_spark.streaming.events_stream import (
-        stream_with_observed_metrics,
-    )
-    from tests.conftest import SF_SMOKE
-
-    rows, metrics = stream_with_observed_metrics(spark, SF_SMOKE)
-    batch = load_table(spark, SF_SMOKE, "events").agg(
-        F2.count("*").alias("n"),
-        F2.sum(F2.col("value").isNull().cast("long")).alias("nulls"),
-    ).first()
-    assert rows.count() == batch["n"]
-    assert sum(m["n_rows"] for m in metrics) == batch["n"]
-    assert sum(m["value_nulls"] for m in metrics) == (batch["nulls"] or 0)

@@ -159,28 +159,6 @@ def test_plan_summary_reports_scale_facts(spark, sf_dir):
     assert s2["n_broadcast_joins"] >= 3 and not s2["has_cartesian"]
 
 
-def test_ignore_corrupt_files(spark, tmp_path):
-    """Bit rot happens at 100 TB: the resilient reader skips the damaged
-    file (per-read option, no session-conf mutation) and returns every
-    readable row, while the strict default reader still fails loudly —
-    both contracts matter."""
-    import os
-
-    import pytest
-
-    from kickstarter_etl_pipeline_spark.sources.readers import read_parquet_resilient
-
-    path = str(tmp_path / "rotten")
-    spark.createDataFrame([(i, f"v{i}") for i in range(100)], ["k", "v"]).coalesce(
-        2
-    ).write.parquet(path)
-    with open(os.path.join(path, "zz-corrupt.parquet"), "wb") as fh:
-        fh.write(b"PAR1 this is not a real parquet file")
-    assert read_parquet_resilient(spark, path).count() == 100
-    with pytest.raises(Exception, match="(?i)parquet|footer|corrupt"):
-        spark.read.parquet(path).count()
-
-
 def test_curation_ops_on_degenerate_docs(spark):
     """pii_scrub / oov_rate / unigram_surprisal must survive empty,
     whitespace-only, null, and unicode text without errors, and null

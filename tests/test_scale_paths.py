@@ -1,5 +1,5 @@
-"""Scale-path operators: scalable dim keys, bucketed co-located joins,
-exactly-once streaming sink, IVF ANN."""
+"""Scale-path operators: scalable dim keys, loop widths, ranking
+offsets, exactly-once streaming sink."""
 
 from __future__ import annotations
 
@@ -21,8 +21,7 @@ from kickstarter_etl_pipeline_spark.operators.ranking import (
     collected_offsets,
     two_phase_rank,
 )
-from kickstarter_etl_pipeline_spark.operators.similarity import brute_force_topk, ivf_topk
-from kickstarter_etl_pipeline_spark.sources.bucketing import colocated_join, write_bucketed
+from kickstarter_etl_pipeline_spark.operators.similarity import brute_force_topk
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
 from kickstarter_etl_pipeline_spark.streaming.events_stream import stream_events_to_parquet
 
@@ -127,113 +126,6 @@ def test_connected_components_star_logn_on_long_chain(spark):
     }
     assert all(got[i] == 0 for i in range(n))
     assert all(got[i] == i for i in range(n, n + 3))  # singletons self-labeled
-
-
-def test_bucketed_join_has_no_exchange(spark, sf_dir):
-    """Same-bucketed tables join with zero shuffle (the pay-once trade)."""
-    spark.sql("DROP TABLE IF EXISTS b_lineitem")
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-    warehouse_dir = spark.conf.get("spark.sql.warehouse.dir", "").removeprefix("file:")
-    for t in ("b_lineitem", "b_orders"):
-        shutil.rmtree(f"{warehouse_dir}/{t}", ignore_errors=True)
-    write_bucketed(
-        load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice"),
-        "b_lineitem",
-        "l_orderkey",
-        num_buckets=8,
-    )
-    write_bucketed(
-        load_table(spark, sf_dir, "orders").selectExpr("o_orderkey AS l_orderkey", "o_orderstatus"),
-        "b_orders",
-        "l_orderkey",
-        num_buckets=8,
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = colocated_join(spark, "b_lineitem", "b_orders", on="l_orderkey")
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # bucketed reads satisfy the join distribution
-        assert joined.count() == load_table(spark, sf_dir, "lineitem").count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_q7_bucketed_single_shuffle(spark, sf_dir):
-    """The q7 multi-join shape on PRE-BUCKETED lineitem/orders: the
-    li⋈orders shuffle disappears (bucketed sort-merge join), dims ride
-    broadcasts, and the ONLY shuffle exchange left in the plan is the
-    final aggregate's — the pay-once-at-ingest pattern that makes the
-    Q7/Q8 family viable at 100 TB. Results must equal the plain query."""
-    from kickstarter_etl_pipeline_spark.plans.tpch_queries import q_q7_nation_volume
-
-    warehouse_dir = spark.conf.get("spark.sql.warehouse.dir", "").removeprefix("file:")
-    for t in ("b7_lineitem", "b7_orders"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"{warehouse_dir}/{t}", ignore_errors=True)
-    write_bucketed(
-        load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount", "l_shipdate"
-        ),
-        "b7_lineitem",
-        "l_orderkey",
-        num_buckets=8,
-    )
-    write_bucketed(
-        load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey"),
-        "b7_orders",
-        "o_orderkey",
-        num_buckets=8,
-    )
-    customer = load_table(spark, sf_dir, "customer")
-    supplier = load_table(spark, sf_dir, "supplier")
-    nation = load_table(spark, sf_dir, "nation")
-    n_cust = nation.select(F.col("n_nationkey").alias("_ck"), F.col("n_name").alias("cust_nation"))
-    n_supp = nation.select(F.col("n_nationkey").alias("_sk"), F.col("n_name").alias("supp_nation"))
-    li, orders = spark.table("b7_lineitem"), spark.table("b7_orders")
-    prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    # Auto-broadcast off so the li⋈orders join can't be rescued by a
-    # broadcast at fixture scale — at 100 TB both sides are huge and
-    # bucketing is the only non-shuffle plan. Dims keep explicit hints.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = (
-            li.join(orders, li.l_orderkey == orders.o_orderkey)
-            .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-            .join(F.broadcast(supplier), li.l_suppkey == supplier.s_suppkey)
-            .join(F.broadcast(n_cust), customer.c_nationkey == F.col("_ck"))
-            .join(F.broadcast(n_supp), supplier.s_nationkey == F.col("_sk"))
-            .filter(F.col("cust_nation") != F.col("supp_nation"))
-        )
-        result = joined.groupBy(
-            "supp_nation", "cust_nation", F.year("l_shipdate").cast("int").alias("l_year")
-        ).agg(
-            F.round(
-                F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")),
-                2,
-            )
-            .cast("double")
-            .alias("revenue"),
-            F.count("*").alias("n_items"),
-        )
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            result.explain("formatted")
-        plan = buf.getvalue()
-        assert "SortMergeJoin" in plan
-        import re
-
-        shuffles = len(re.findall(r"\(\d+\) Exchange\b", plan))
-        assert shuffles == 1, f"expected only the final-agg shuffle, plan has {shuffles}:\n{plan}"
-        expected = {tuple(r) for r in q_q7_nation_volume(spark, sf_dir).collect()}
-        got = {tuple(r) for r in result.collect()}
-        assert got == expected
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
 
 
 def test_streaming_parquet_sink_exactly_once(spark, sf_dir):
@@ -348,45 +240,6 @@ def test_connected_components_clusters(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 7, 8: 8}
 
 
-def test_ivf_recall_against_bruteforce(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    exact = {
-        (r["query_id"], r["neighbor_id"])
-        for r in brute_force_topk(emb, queries, k=5).collect()
-    }
-    approx_rows = ivf_topk(emb, queries, k=5, n_clusters=8, n_probe=4).collect()
-    approx = {(r["query_id"], r["neighbor_id"]) for r in approx_rows}
-    # Approximate: reasonable recall with n_probe=4 of 8 cells, and every
-    # returned similarity must agree with the exact scorer's ranking rules.
-    recall = len(approx & exact) / len(exact)
-    assert recall >= 0.5, recall
-    assert all(r["rank"] <= 5 for r in approx_rows)
-
-
-def test_chained_rollup_append_sink_exactly_once(spark, sf_dir, tmp_path):
-    """The production chained (hourly → daily) append pipeline: sink
-    contents equal the memory-sink twin, and a RESTART from the same
-    checkpoint with no new data appends nothing (exactly-once per
-    window)."""
-    from kickstarter_etl_pipeline_spark.streaming.events_stream import (
-        stream_hourly_daily_append_parquet,
-        streaming_hourly_daily_rollup,
-    )
-
-    out = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    got = stream_hourly_daily_append_parquet(spark, sf_dir, out, ckpt).collect()
-    want = streaming_hourly_daily_rollup(spark, sf_dir).collect()
-    key = lambda r: (r["day"], r["event_type"])
-    assert sorted(map(key, got)) == sorted(map(key, want))
-    assert {key(r): (r["max_hourly_events"], r["n_hours"], r["total_events"]) for r in got} \
-        == {key(r): (r["max_hourly_events"], r["n_hours"], r["total_events"]) for r in want}
-    # restart: same checkpoint, same source — nothing new to emit
-    again = stream_hourly_daily_append_parquet(spark, sf_dir, out, ckpt).collect()
-    assert len(again) == len(got)
-
-
 def test_ivf_lloyd_deterministic_and_recall(spark, sf_dir):
     """The integer-grid Lloyd IVF must be bit-deterministic across
     independent builds (the whole point of replacing the seeded ml
@@ -424,75 +277,6 @@ def test_pca_power_degenerate_zero_matrix(spark):
     rows = pca_top_component(emb, n_iters=3).collect()
     assert len(rows) == 8
     assert all(r["pc1_weight"] == 0.0 and r["pc1_variance"] == 0.0 for r in rows)
-
-
-def test_q18_bucketed_no_fact_shuffle(spark, sf_dir):
-    """The q18 HAVING join-back shape on PRE-BUCKETED lineitem/orders —
-    the hardest fact-to-fact shape SCALE.md claims goes shuffle-free on
-    orderkey buckets (r7 verdict task 6: only q7 had the plan proof).
-    Bucketing must satisfy BOTH the pre-join aggregate's distribution
-    (groupBy l_orderkey needs no exchange) and the agg⋈orders join-back
-    (bucketed sort-merge join); the customer dim rides a broadcast. At
-    fixture scale we pin ZERO shuffle exchanges; results must equal the
-    plain query's."""
-    import re
-
-    from kickstarter_etl_pipeline_spark.plans.tpch_queries import q_q18_large_orders
-
-    warehouse_dir = spark.conf.get("spark.sql.warehouse.dir", "").removeprefix("file:")
-    for t in ("b18_lineitem", "b18_orders"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"{warehouse_dir}/{t}", ignore_errors=True)
-    write_bucketed(
-        load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity"),
-        "b18_lineitem",
-        "l_orderkey",
-        num_buckets=8,
-    )
-    write_bucketed(
-        load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
-        ),
-        "b18_orders",
-        "o_orderkey",
-        num_buckets=8,
-    )
-    customer = load_table(spark, sf_dir, "customer")
-    li, orders = spark.table("b18_lineitem"), spark.table("b18_orders")
-    prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    # Auto-broadcast off: at 100 TB neither fact side fits a broadcast,
-    # so the plan must stand on bucketing alone (dim keeps its hint).
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        big = (
-            li.groupBy("l_orderkey")
-            .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("_qty"))
-            .filter(F.col("_qty") > 250)
-        )
-        result = (
-            big.join(orders, big.l_orderkey == orders.o_orderkey)
-            .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-            .select(
-                "c_custkey",
-                "c_name",
-                "o_orderkey",
-                F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"),
-                "o_totalprice",
-                F.col("_qty").cast("double").alias("sum_qty"),
-            )
-        )
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            result.explain("formatted")
-        plan = buf.getvalue()
-        assert "SortMergeJoin" in plan  # the bucket-co-located join-back
-        shuffles = len(re.findall(r"\(\d+\) Exchange\b", plan))
-        assert shuffles == 0, f"expected a shuffle-free plan, got {shuffles}:\n{plan}"
-        expected = {tuple(r) for r in q_q18_large_orders(spark, sf_dir).collect()}
-        got = {tuple(r) for r in result.collect()}
-        assert got == expected
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
 
 
 def test_hits_partition_invariant(spark, sf_dir, narrow_loops):

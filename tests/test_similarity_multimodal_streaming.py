@@ -11,12 +11,10 @@ from pyspark.sql import functions as F
 from kickstarter_etl_pipeline_spark.operators.multimodal import documents_as_media, extract_features
 from kickstarter_etl_pipeline_spark.operators.similarity import (
     brute_force_topk,
-    cosine_near_dup_pairs,
     lsh_topk,
 )
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
 from kickstarter_etl_pipeline_spark.streaming.events_stream import (
-    streaming_dedup_events,
     streaming_tumbling_counts,
 )
 
@@ -51,13 +49,6 @@ def test_lsh_topk_subset_of_exact(spark):
     assert (1, 2) in approx
 
 
-def test_cosine_near_dup_pairs(spark):
-    pairs = {(r["id_a"], r["id_b"]): r["cosine_sim"] for r in
-             cosine_near_dup_pairs(_vecs(spark), threshold=0.95, dim=3).collect()}
-    assert pairs.get((1, 2)) == 1.0
-    assert all(not (a == 4 or b == 4) for a, b in pairs)
-
-
 def test_multimodal_feature_extraction(spark):
     docs = spark.createDataFrame([(7, "héllo wörld")], ["doc_id", "text"])
     feats = extract_features(documents_as_media(docs)).collect()
@@ -77,18 +68,6 @@ def test_streaming_tumbling_matches_batch(spark, sf_dir):
     s = {tuple(r) for r in stream.collect()}
     b = {tuple(r) for r in batch.select(*stream.columns).collect()}
     assert s == b
-
-
-def test_streaming_dedup_matches_distinct(spark, sf_dir):
-    stream = {tuple(r) for r in streaming_dedup_events(spark, sf_dir).collect()}
-    batch = {
-        tuple(r)
-        for r in load_table(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("n_unique_user_events"))
-        .collect()
-    }
-    assert stream == batch
 
 
 def test_stateful_timeout_sessionizer(spark, sf_dir):

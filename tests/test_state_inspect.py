@@ -14,10 +14,7 @@ from kickstarter_etl_pipeline_spark.sources.readers import load_table
 from kickstarter_etl_pipeline_spark.streaming.events_stream import (
     stream_tumbling_append_parquet,
 )
-from kickstarter_etl_pipeline_spark.streaming.state_inspect import (
-    open_window_state,
-    state_metadata,
-)
+from kickstarter_etl_pipeline_spark.streaming.state_inspect import open_window_state
 from tests.conftest import SF_SMOKE
 
 
@@ -52,13 +49,3 @@ def test_emitted_plus_state_equals_all_windows(spark):
     assert emitted_keys | held_keys == all_keys
     # State is bounded by OPEN windows, not history: far fewer than total.
     assert 0 < len(held_keys) < len(all_keys)
-
-
-def test_state_metadata_describes_operator(spark):
-    out = run_scratch_dir("state_out2_")
-    ckpt = run_scratch_dir("state_ckpt2_")
-    stream_tumbling_append_parquet(spark, SF_SMOKE, out, ckpt)
-    meta = state_metadata(spark, ckpt).collect()
-    assert len(meta) == 1
-    assert meta[0].operatorName == "stateStoreSave"
-    assert meta[0].maxBatchId >= meta[0].minBatchId >= 0

@@ -1,5 +1,6 @@
 """Production-tier surfaces: append-mode streaming with late-data drop,
-the JDBC warehouse sink, and run-scoped scratch hygiene."""
+stream-static joins, upsert rollups, partition pruning, and run-scoped
+scratch hygiene."""
 
 from __future__ import annotations
 
@@ -8,9 +9,7 @@ from datetime import datetime, timezone
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-import pytest
 
-from kickstarter_etl_pipeline_spark.sources.sinks import jdbc_options, write_jdbc
 from kickstarter_etl_pipeline_spark.streaming.events_stream import (
     stream_tumbling_append_parquet,
 )
@@ -146,24 +145,6 @@ def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
     assert part_lines and "order_year" in part_lines[0]
     expected = orders.filter(F.col("order_year") == 1998).count()
     assert filtered.count() == expected > 0
-
-
-def test_jdbc_sink_surface(spark):
-    """No JDBC driver jar ships in this container, so the surface is
-    verified up to config + driver resolution: options are exactly what
-    df.write.jdbc needs, and the save path reaches the JDBC source (it
-    fails on driver lookup, not on our wrapper)."""
-    assert jdbc_options("jdbc:postgresql://wh/dw", "fact", batchsize=5000, num_partitions=8) == {
-        "url": "jdbc:postgresql://wh/dw",
-        "dbtable": "fact",
-        "batchsize": "5000",
-        "isolationLevel": "READ_COMMITTED",
-        "numPartitions": "8",
-    }
-    df = spark.createDataFrame([(1, "a")], ["k", "v"])
-    with pytest.raises(Exception) as excinfo:
-        write_jdbc(df, "jdbc:postgresql://localhost:5432/none", "t")
-    assert "driver" in str(excinfo.value).lower()
 
 
 def test_scratch_dirs_are_run_scoped():
