@@ -6,6 +6,10 @@ keeping this module import-free keeps the oracle ledgers loadable
 without a Spark installation (r7 self-review finding: oracles_lm.py
 had started importing a pyspark-heavy operator module mid-file just to
 fetch two tuples).
+
+It also holds every algorithm constant a Spark operator and its DuckDB
+twin must agree on (round counts, k, pivots, caps, grid scale), so a
+drifted value cannot be written on one side only.
 """
 
 #: Tiny per-language stopword marker lists for the n-gram/stopword
@@ -73,3 +77,64 @@ FS_PATTERN_SCORES: dict[str, float] = {
     "1110": 12.205424,
     "1111": 18.677551,
 }
+
+
+# ---- Algorithm constants shared by a Spark operator and its DuckDB twin.
+
+#: Co-occurrence graph: max members per (bucket, sub-bucket) join key,
+#: and the shared-neighbor degree bound of the wedge joins.
+OCCUPANCY_CAP = 64
+WEDGE_DEGREE_CAP = 256
+
+#: PageRank continuation probability (global and personalized).
+DAMPING = 0.85
+#: Unrolled round counts of the graph loops and their twins.
+PAGERANK_ITERATIONS = 10
+PPR_ITERATIONS = 8
+LPA_ITERATIONS = 5
+HITS_ITERATIONS = 4
+KCORE_K = 4
+KCORE_ROUNDS = 6
+KTRUSS_K = 4
+KTRUSS_ROUNDS = 4
+BFS_ROUNDS = 8
+BELLMAN_FORD_ROUNDS = 6
+ROTOR_STEPS = 4
+SPECTRAL_ROUNDS = 8
+#: The md5-chosen pivots and BFS depth of harmonic centrality,
+#: betweenness and the distance distribution.
+GRAPH_PIVOTS = 8
+GRAPH_PIVOT_ROUNDS = 6
+
+#: Greedy max-coverage picks.
+MAX_COVERAGE_K = 8
+#: BPE merge rounds and Bradley–Terry fit rounds.
+BPE_ROUNDS = 8
+BT_ROUNDS = 8
+#: Quality perceptron: fixed epoch count, and the calibrated keep
+#: fraction in per-mille (the manifest keeps the top 600‰ by score, a
+#: keep RATE rather than raw sign, so the selection stays
+#: non-degenerate whatever the score distribution does).
+PERCEPTRON_EPOCHS = 8
+KEEP_PER_MILLE = 600
+
+#: Embedding width, and the integer grid vectors snap to (1e-6) for
+#: the exact PCA and Lloyd recurrences.
+EMBED_DIM = 64
+GRID_SCALE = 1_000_000
+PCA_ITERS = 8
+#: ANN top-k depth; LSH tables × planes; IVF cells, probes and rounds.
+ANN_K = 5
+LSH_NUM_PLANES = 3
+LSH_NUM_TABLES = 6
+#: LSH probes per table: the home bucket plus one bit-flip (the twin's
+#: SQL is written for exactly this).
+LSH_N_PROBE = 2
+IVF_CELLS = 16
+IVF_CLUSTERS = 8
+IVF_N_PROBE = 4
+IVF_ITERS = 5
+#: MMR re-rank: k picks from a pool of candidates, relevance weight lam.
+MMR_K = 5
+MMR_POOL = 20
+MMR_LAM = 0.7

@@ -20,12 +20,11 @@ _DATEFMT = "%Y-%m-%d %H:%M:%S"
 def configure_logger(
     name: str = "KickstarterETL",
     log_file: str | None = None,
-    level: int = logging.INFO,
 ) -> logging.Logger:
     logger = logging.getLogger(name)
     if logger.handlers:  # idempotent
         return logger
-    logger.setLevel(level)
+    logger.setLevel(logging.INFO)
     formatter = logging.Formatter(_FORMAT, datefmt=_DATEFMT)
     if log_file:
         os.makedirs(os.path.dirname(log_file), exist_ok=True)

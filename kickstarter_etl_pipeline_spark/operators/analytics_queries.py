@@ -4,6 +4,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from kickstarter_etl_pipeline_spark.constants import (
+    EMBED_DIM,
+    LSH_NUM_PLANES,
+    LSH_NUM_TABLES,
+    LSH_N_PROBE,
+)
 from kickstarter_etl_pipeline_spark.operators import events as EV
 from kickstarter_etl_pipeline_spark.operators import text as TX
 from kickstarter_etl_pipeline_spark.operators.dedup import (
@@ -1045,7 +1051,8 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = query_anchors(emb, 20)
     exact = brute_force_topk(emb, queries, k=5).select("query_id", "neighbor_id")
     approx = lsh_topk(
-        emb, queries, dim=64, k=5, num_planes=3, num_tables=6, n_probe=2
+        emb, queries, dim=EMBED_DIM, num_planes=LSH_NUM_PLANES,
+        num_tables=LSH_NUM_TABLES, n_probe=LSH_N_PROBE,
     ).select("query_id", "neighbor_id", F.lit(1).alias("_hit"))
     return (
         exact.join(approx, ["query_id", "neighbor_id"], "left")

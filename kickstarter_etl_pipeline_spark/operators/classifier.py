@@ -52,12 +52,9 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from kickstarter_etl_pipeline_spark.constants import KEEP_PER_MILLE, PERCEPTRON_EPOCHS
 from kickstarter_etl_pipeline_spark.operators.ranking import two_phase_rank
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
-
-#: Fixed epoch count, unrolled identically by the DuckDB twin
-#: (oracles_r14._perceptron_cte).
-PERCEPTRON_EPOCHS = 8
 
 #: (weight column, pretty output name) in fit order; x0 is the bias
 #: input pinned at 1000 so the bias moves on the same per-mille scale
@@ -200,14 +197,6 @@ def q_quality_perceptron_trajectory(spark: SparkSession, sf_dir: str) -> DataFra
         "n_mistakes",
         *[F.col(raw).alias(pretty) for raw, pretty in _WEIGHT_COLS],
     )
-
-
-#: Calibrated keep fraction, in per-mille: the manifest keeps the top
-#: 600‰ of documents by classifier score — the way production
-#: classifier filters are deployed (score the corpus, then threshold
-#: at a target keep RATE, not at raw sign, so the selection stays
-#: non-degenerate whatever the score distribution does).
-KEEP_PER_MILLE = 600
 
 
 def q_documents_stream_classifier_scores(

@@ -13,22 +13,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from kickstarter_etl_pipeline_spark.constants import MAX_COVERAGE_K
 from kickstarter_etl_pipeline_spark.operators.partitioning import loop_frame
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.operators.text import tokens
 
 
-def pack_sequences(
-    df: DataFrame,
-    context_tokens: int = 128,
-    shard_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def pack_sequences(df: DataFrame, context_tokens: int = 128) -> DataFrame:
     """Concat-and-split sequence packing: assign each document its
     position in the shard's fixed-size context-window stream.
 
-    Documents are concatenated per shard in deterministic ``id_col``
+    Documents are concatenated per shard in deterministic ``doc_id``
     order; window ``bin_id`` is where the document STARTS, at offset
     ``bin_offset``; ``spans_boundary`` marks documents split across a
     window edge (the concat-and-split regime — no padding, bounded
@@ -38,14 +33,14 @@ def pack_sequences(
     partition bounded; semantics are unchanged because packing never
     crosses a shard.
     """
-    n_tok = F.size(tokens(text_col))
-    w = Window.partitionBy(shard_col).orderBy(id_col)
+    n_tok = F.size(tokens("text"))
+    w = Window.partitionBy("source").orderBy("doc_id")
     cum = F.sum(n_tok.cast("long")).over(w)
     start = (cum - n_tok).cast("long")
     bin_id = F.floor(start / context_tokens)
     return df.select(
-        F.col(id_col),
-        F.col(shard_col),
+        F.col("doc_id"),
+        F.col("source"),
         n_tok.cast("long").alias("n_tokens"),
         bin_id.alias("bin_id"),
         (start % context_tokens).alias("bin_offset"),
@@ -53,12 +48,7 @@ def pack_sequences(
     )
 
 
-def source_mixing_weights(
-    df: DataFrame,
-    token_budget: int = 1_000_000,
-    shard_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def source_mixing_weights(df: DataFrame, token_budget: int = 1_000_000) -> DataFrame:
     """Temperature-based source mixing (alpha = 0.5, i.e. sqrt scaling):
     per-source sampling probabilities and the epoch count each source
     sustains under a token budget.
@@ -71,9 +61,9 @@ def source_mixing_weights(
     aggregate plus a broadcast one-row total — scales to any source
     count.
     """
-    per_source = df.groupBy(shard_col).agg(
+    per_source = df.groupBy("source").agg(
         F.count("*").alias("n_docs"),
-        F.sum(F.size(tokens(text_col)).cast("long")).alias("n_tokens"),
+        F.sum(F.size(tokens("text")).cast("long")).alias("n_tokens"),
     )
     totals = per_source.agg(
         F.sum("n_tokens").alias("_tot_tokens"),
@@ -82,7 +72,7 @@ def source_mixing_weights(
     return (
         per_source.crossJoin(F.broadcast(totals))
         .select(
-            shard_col,
+            "source",
             "n_docs",
             "n_tokens",
             round_det(F.col("n_tokens") / F.col("_tot_tokens"), 6).alias("p_uniform"),
@@ -95,13 +85,7 @@ def source_mixing_weights(
     )
 
 
-def boilerplate_stats(
-    df: DataFrame,
-    n: int = 5,
-    min_doc_freq: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def boilerplate_stats(df: DataFrame, min_doc_freq: int = 5) -> DataFrame:
     """Cross-document boilerplate detection: an n-gram appearing in at
     least ``min_doc_freq`` distinct documents is boilerplate (headers,
     footers, license blurbs, templated spans); each document reports
@@ -111,28 +95,28 @@ def boilerplate_stats(
     one explode + uniform-key groupBy for document frequencies, one
     shuffle join back on the shingle, one per-doc aggregate — every
     shuffle keyed by shingle or doc id, no skewed driver state, scales
-    linearly. Documents shorter than ``n`` tokens emit zero shingles
+    linearly. Documents shorter than 3 tokens emit zero shingles
     and a NULL ratio.
     """
     from kickstarter_etl_pipeline_spark.operators.dedup import shingles_from_tokens
 
     staged = (
-        df.select(F.col(id_col), tokens(text_col).alias("_t"))
-        .withColumn("_sh", shingles_from_tokens("_t", n))
+        df.select(F.col("doc_id"), tokens("text").alias("_t"))
+        .withColumn("_sh", shingles_from_tokens("_t", 3))
         .localCheckpoint(eager=False)
     )
-    sh = staged.select(F.col(id_col), F.explode("_sh").alias("_s"))
+    sh = staged.select(F.col("doc_id"), F.explode("_sh").alias("_s"))
     doc_freq = sh.groupBy("_s").agg(F.count("*").alias("_df"))
     boiler = (
         sh.join(doc_freq.filter(F.col("_df") >= min_doc_freq), "_s")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count("*").alias("_n_boiler"))
     )
-    totals = staged.select(F.col(id_col), F.size("_sh").cast("long").alias("n_shingles"))
+    totals = staged.select(F.col("doc_id"), F.size("_sh").cast("long").alias("n_shingles"))
     return (
-        totals.join(boiler, on=id_col, how="left")
+        totals.join(boiler, on="doc_id", how="left")
         .select(
-            id_col,
+            "doc_id",
             "n_shingles",
             F.coalesce(F.col("_n_boiler"), F.lit(0)).cast("long").alias("n_boilerplate"),
             round_det(
@@ -146,8 +130,6 @@ def chunk_documents(
     df: DataFrame,
     chunk_tokens: int = 64,
     stride: int = 48,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Sliding-window chunking (chunk_tokens window, stride overlap) —
     the RAG/embedding preprocessing shape.
@@ -159,7 +141,7 @@ def chunk_documents(
     rows JVM-side; the shingle array is materialized once per doc.
     """
     with_toks = df.select(
-        F.col(id_col), tokens(text_col).alias("_t")
+        F.col("doc_id"), tokens("text").alias("_t")
     ).withColumn("_n", F.size("_t").cast("long"))
     n_chunks = F.when(F.col("_n") <= chunk_tokens, F.lit(1).cast("long")).otherwise(
         1 + F.floor((F.col("_n") - chunk_tokens + stride - 1) / stride)
@@ -170,7 +152,7 @@ def chunk_documents(
     start = (F.col("chunk_id") * stride).cast("long")
     chunk_len = F.least(F.lit(chunk_tokens).cast("long"), F.col("_n") - start)
     return exploded.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("chunk_id"),
         start.alias("start_tok"),
         chunk_len.alias("chunk_len"),
@@ -179,15 +161,10 @@ def chunk_documents(
     )
 
 
-def greedy_max_coverage(
-    docs: DataFrame,
-    k: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def greedy_max_coverage(docs: DataFrame) -> DataFrame:
     """Greedy maximum-coverage document selection (the Nemhauser-
     Wolsey-Fisher 1978 submodular greedy, the (1 − 1/e) classic behind
-    coreset / demonstration-set selection): pick ``k`` documents one at
+    coreset / demonstration-set selection): pick ``MAX_COVERAGE_K`` documents one at
     a time, each maximizing the count of vocabulary tokens not yet
     covered by earlier picks (ties broken by smallest doc id — a total
     order, so the whole trajectory is deterministic).
@@ -195,7 +172,7 @@ def greedy_max_coverage(
     Output: one row per pick — (step, doc_id, marginal_gain,
     covered_total), all exact integers. SATURATION: once every shingle
     is covered the round's gain table is empty and no further row is
-    emitted, so the result may have FEWER than ``k`` rows (zero-gain
+    emitted, so the result may have FEWER than ``MAX_COVERAGE_K`` rows (zero-gain
     picks are meaningless under max-coverage; the DuckDB twin stops at
     the same point, and the pure-Python reference in
     tests/test_r12_ops.py encodes the same stop-at-zero-gain rule).
@@ -220,8 +197,7 @@ def greedy_max_coverage(
     # whole corpus in ONE task (measured 30 s vs 2 s at sf0.1).
     pairs = (
         shingle_table(
-            docs.select(F.col(id_col).cast("long").alias("_doc"), text_col),
-            text_col=text_col,
+            docs.select(F.col("doc_id").cast("long").alias("_doc"), "text"),
             id_col="_doc",
             n=5,
         )
@@ -256,7 +232,7 @@ def greedy_max_coverage(
     picked: list[int] = []
     rows: list[tuple[int, int, int, int]] = []
     covered_total = 0
-    for t in range(1, k + 1):
+    for t in range(1, MAX_COVERAGE_K + 1):
         if picked:
             cov = pairs.filter(F.col("_doc").isin(picked)).select("_tok")
             remaining = pairs.join(cov, "_tok", "left_anti")
@@ -278,5 +254,5 @@ def greedy_max_coverage(
         covered_total += gain
         picked.append(doc)
         rows.append((t, doc, gain, covered_total))
-    schema = f"step bigint, {id_col} bigint, marginal_gain bigint, covered_total bigint"
+    schema = "step bigint, doc_id bigint, marginal_gain bigint, covered_total bigint"
     return spark.createDataFrame(rows, schema)

@@ -152,7 +152,7 @@ def q_decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 10 == 0)
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
-    return benchmark_overlap(corpus, bench, n=5)
+    return benchmark_overlap(corpus, bench)
 
 
 def q_coverage_selection_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -166,7 +166,7 @@ def q_coverage_selection_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kickstarter_etl_pipeline_spark.operators.corpus import greedy_max_coverage
 
     docs = load_table(spark, sf_dir, "documents")
-    return greedy_max_coverage(docs, k=8)
+    return greedy_max_coverage(docs)
 
 
 def q_token_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -189,7 +189,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kickstarter_etl_pipeline_spark.operators.text import tfidf_top_terms
 
     docs = load_table(spark, sf_dir, "documents")
-    return tfidf_top_terms(docs, k=3)
+    return tfidf_top_terms(docs)
 
 
 def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -208,13 +208,13 @@ def q_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators chained lazily into a single plan."""
     docs = load_table(spark, sf_dir, "documents")
     with_lang = TX.with_lang_id(docs)
-    quality = TX.quality_score("text")
+    quality = TX.quality_score()
     filtered = with_lang.filter(F.col("lang_pred") == "en").withColumn(
         "quality", quality
     ).filter(F.col("quality") >= 0.5)
     from kickstarter_etl_pipeline_spark.operators.dedup import drop_exact_dupes
 
-    clean = drop_exact_dupes(filtered, "text", "doc_id")
+    clean = drop_exact_dupes(filtered)
     return clean.select("doc_id", "lang", "quality", F.col("n_chars").alias("n_chars"))
 
 
@@ -316,7 +316,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", TX.quality_score("text").alias("quality"))
+    return docs.select("doc_id", TX.quality_score().alias("quality"))
 
 
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -382,7 +382,7 @@ def q_char_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Character 5-gram Jaccard near-dup pairs (tokenization-free)."""
     from kickstarter_etl_pipeline_spark.operators.dedup import char_jaccard_pairs
 
-    return char_jaccard_pairs(load_table(spark, sf_dir, "documents"), threshold=0.8)
+    return char_jaccard_pairs(load_table(spark, sf_dir, "documents"))
 
 
 def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -406,7 +406,7 @@ def q_bigram_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 adjacent-token collocations with engine-deterministic lift."""
     from kickstarter_etl_pipeline_spark.operators.text import bigram_collocations
 
-    return bigram_collocations(load_table(spark, sf_dir, "documents"), top_k=50)
+    return bigram_collocations(load_table(spark, sf_dir, "documents"))
 
 
 def q_seq_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -494,7 +494,7 @@ def q_source_overlap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     fp = (
-        with_shingles(ensure_min_partitions(docs), "text", "_sh", 3)
+        with_shingles(ensure_min_partitions(docs), 3)
         .select("source", F.explode("_sh").alias("fp"))
         .distinct()
         .localCheckpoint(eager=True)
@@ -535,7 +535,7 @@ def q_skipgram_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     +/-2 window — the word2vec/GloVe training-pair table."""
     from kickstarter_etl_pipeline_spark.operators.text import skipgram_cooccurrence
 
-    return skipgram_cooccurrence(load_table(spark, sf_dir, "documents"), window=2, top_k=100)
+    return skipgram_cooccurrence(load_table(spark, sf_dir, "documents"))
 
 
 def q_curation_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -553,7 +553,7 @@ def q_curation_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     reps = repetition_stats(docs).select("doc_id", "top_token_ratio")
     staged = docs.select(
-        "doc_id", "n_chars", quality_score("text").alias("quality")
+        "doc_id", "n_chars", quality_score().alias("quality")
     ).join(reps, "doc_id")
     decision = (
         F.when(F.col("n_chars") < 100, "too_short")
@@ -1142,10 +1142,10 @@ def q_pretraining_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_lang = TX.with_lang_id(docs)
     filtered = (
         with_lang.filter(F.col("lang_pred") == "en")
-        .withColumn("quality", TX.quality_score("text"))
+        .withColumn("quality", TX.quality_score())
         .filter(F.col("quality") >= 0.5)
     )
-    clean = drop_exact_dupes(filtered, "text", "doc_id")
+    clean = drop_exact_dupes(filtered)
     shard = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
         .cast("long")
@@ -1216,10 +1216,10 @@ def q_curation_pack_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_lang = TX.with_lang_id(docs)
     filtered = (
         with_lang.filter(F.col("lang_pred") == "en")
-        .withColumn("quality", TX.quality_score("text"))
+        .withColumn("quality", TX.quality_score())
         .filter(F.col("quality") >= 0.5)
     )
-    clean = drop_exact_dupes(filtered, "text", "doc_id")
+    clean = drop_exact_dupes(filtered)
     corpus = (
         clean.filter(F.col("doc_id") % 10 != 0)
         .select("doc_id", "source", "text")
@@ -1227,12 +1227,12 @@ def q_curation_pack_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bench = docs.filter(F.col("doc_id") % 10 == 0)
     contaminated = (
-        benchmark_overlap(corpus, bench, n=5)
+        benchmark_overlap(corpus, bench)
         .select("doc_id")
         .localCheckpoint(eager=True)
     )
     survivors = corpus.join(contaminated, "doc_id", "left_anti")
-    packed = pack_sequences(survivors, context_tokens=128, shard_col="source")
+    packed = pack_sequences(survivors, context_tokens=128)
     per_source = (
         packed.groupBy("source")
         .agg(
@@ -1330,4 +1330,4 @@ def q_documents_stream_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash."""
     from kickstarter_etl_pipeline_spark.operators.dedup import stream_near_dup_pairs
 
-    return stream_near_dup_pairs(spark, sf_dir, threshold=0.8)
+    return stream_near_dup_pairs(spark, sf_dir)

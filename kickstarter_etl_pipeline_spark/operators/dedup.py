@@ -40,26 +40,40 @@ from kickstarter_etl_pipeline_spark.operators.partitioning import (
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.operators.text import fingerprint_md5, tokens
 
+#: Word-shingle width of the near-duplicate detectors.
+SHINGLE_N = 3
+#: MinHash signature length and LSH band count (16 bands × 4 rows).
+MINHASH_NUM_HASHES = 64
+MINHASH_BANDS = 16
+#: Signature length of the md5-MinHash estimate audit.
+MD5_NUM_HASHES = 16
+#: SimHash band count (the banded-Hamming candidate key).
+SIMHASH_BANDS = 4
+#: n-gram width of the benchmark-contamination check.
+CONTAMINATION_N = 5
+#: Token n-gram width of the duplicate-span statistics.
+SPAN_NGRAM = 8
 
-def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+
+def exact_dedup_groups(df: DataFrame) -> DataFrame:
     """Exact dedup via normalized-text fingerprint: one row per distinct
     content with the multiplicity and the keeper (min id)."""
     return (
-        df.select(fingerprint_md5(text_col).alias("fingerprint"), F.col(id_col))
+        df.select(fingerprint_md5("text").alias("fingerprint"), F.col("doc_id"))
         .groupBy("fingerprint")
         .agg(
             F.count("*").alias("n_copies"),
-            F.min(id_col).alias("keeper_id"),
+            F.min("doc_id").alias("keeper_id"),
         )
     )
 
 
-def drop_exact_dupes(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def drop_exact_dupes(df: DataFrame) -> DataFrame:
     """Keep only the min-id representative of each exact-duplicate group."""
-    keepers = exact_dedup_groups(df, text_col, id_col).select(
-        F.col("keeper_id").alias(id_col)
+    keepers = exact_dedup_groups(df).select(
+        F.col("keeper_id").alias("doc_id")
     )
-    return df.join(keepers, on=id_col, how="left_semi")
+    return df.join(keepers, on="doc_id", how="left_semi")
 
 
 def shingles_from_tokens(toks_col: Column | str, n: int = 3) -> Column:
@@ -78,9 +92,7 @@ def shingles_from_tokens(toks_col: Column | str, n: int = 3) -> Column:
     return F.when(F.size(toks) >= n, F.array_distinct(grams)).otherwise(empty)
 
 
-def with_shingles(
-    df: DataFrame, text_col: str = "text", out: str = "_sh", n: int = 3
-) -> DataFrame:
+def with_shingles(df: DataFrame, n: int = 3) -> DataFrame:
     """Tokens bound ONCE via the let1 lambda device, then shingles.
 
     The previous two-withColumn staging did not actually protect the
@@ -95,23 +107,17 @@ def with_shingles(
     from kickstarter_etl_pipeline_spark.operators.text import let1
 
     return df.withColumn(
-        out, let1(tokens(text_col), lambda tk: shingles_from_tokens(tk, n))
+        "_sh", let1(tokens("text"), lambda tk: shingles_from_tokens(tk, n))
     )
 
 
-def shingle_table(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:
+def shingle_table(df: DataFrame, id_col: str = "doc_id", n: int = 3) -> DataFrame:
     """Exploded (id, shingle) pairs — the join key table for set-similarity."""
-    staged = with_shingles(ensure_min_partitions(df), text_col, "_sh", n)
+    staged = with_shingles(ensure_min_partitions(df), n)
     return staged.select(F.col(id_col), F.explode("_sh").alias("shingle"))
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    threshold: float = 0.8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.8) -> DataFrame:
     """All document pairs with n-gram Jaccard ≥ threshold (exact).
 
     Set-similarity self-join: explode shingles, join on shingle with
@@ -119,50 +125,38 @@ def ngram_jaccard_pairs(
     Exact but worst-case quadratic — use minhash_dedup_pairs at scale
     and reserve this for verification of candidate pairs.
     """
-    sh = shingle_table(df, text_col, id_col, n)
-    return jaccard_pairs_from_shingle_table(sh, threshold, id_col)
+    sh = shingle_table(df, "doc_id", SHINGLE_N)
+    return jaccard_pairs_from_shingle_table(sh, threshold)
 
 
-def char_shingles(text_col: str = "text", n: int = 5) -> Column:
+def char_shingles() -> Column:
     """Distinct character n-gram shingles of the normalized text — the
     variant robust to tokenization differences (CJK, no-whitespace text)."""
     from kickstarter_etl_pipeline_spark.operators.text import let1, normalized
 
     def _grams(norm_text: Column) -> Column:
         grams = F.transform(
-            F.sequence(F.lit(1), F.length(norm_text) - (n - 1)),
+            F.sequence(F.lit(1), F.length(norm_text) - (5 - 1)),
             # Column.substr accepts Column offsets (F.substring needs ints)
-            lambda i: norm_text.substr(i, F.lit(n)),
+            lambda i: norm_text.substr(i, F.lit(5)),
         )
         empty = F.expr("CAST(array() AS ARRAY<STRING>)")
-        return F.when(F.length(norm_text) >= n, F.array_distinct(grams)).otherwise(empty)
+        return F.when(F.length(norm_text) >= 5, F.array_distinct(grams)).otherwise(empty)
 
     # let1: the normalize (trim+regexp_replace+lower) runs once per row,
     # not once per gram reference (r14 — the shingle-inlining fix).
-    return let1(normalized(text_col), _grams)
+    return let1(normalized("text"), _grams)
 
 
-def char_jaccard_pairs(
-    df: DataFrame,
-    threshold: float = 0.8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 5,
-) -> DataFrame:
+def char_jaccard_pairs(df: DataFrame) -> DataFrame:
     """Character n-gram Jaccard pairs (same join shape as the word-gram
     operator, different shingle definition)."""
-    staged = ensure_min_partitions(df).withColumn("_sh", char_shingles(text_col, n))
-    sh = staged.select(F.col(id_col), F.explode("_sh").alias("shingle"))
-    return jaccard_pairs_from_shingle_table(sh, threshold, id_col)
+    staged = ensure_min_partitions(df).withColumn("_sh", char_shingles())
+    sh = staged.select(F.col("doc_id"), F.explode("_sh").alias("shingle"))
+    return jaccard_pairs_from_shingle_table(sh, 0.8)
 
 
-def containment_pairs(
-    df: DataFrame,
-    threshold: float = 0.9,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
+def containment_pairs(df: DataFrame, threshold: float = 0.9) -> DataFrame:
     """n-gram containment pairs: overlap coefficient ≥ threshold, with
     both directed Broder containments emitted.
 
@@ -180,10 +174,10 @@ def containment_pairs(
     correctness/verification tier; at 100 TB run it only on MinHash-LSH
     candidate pairs.
     """
-    sh = shingle_table(df, text_col, id_col, n).localCheckpoint(eager=True)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("_size"))
-    a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("id_b"), "shingle")
+    sh = shingle_table(df, "doc_id", SHINGLE_N).localCheckpoint(eager=True)
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("_size"))
+    a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
+    b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
     common = (
         a.join(b, on="shingle")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -191,8 +185,8 @@ def containment_pairs(
         .agg(F.count("*").alias("n_common"))
     )
     return (
-        common.join(sizes.select(F.col(id_col).alias("id_a"), F.col("_size").alias("size_a")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("_size").alias("size_b")), "id_b")
+        common.join(sizes.select(F.col("doc_id").alias("id_a"), F.col("_size").alias("size_a")), "id_a")
+        .join(sizes.select(F.col("doc_id").alias("id_b"), F.col("_size").alias("size_b")), "id_b")
         .withColumn(
             "overlap_coef",
             round_det(F.col("n_common") / F.least("size_a", "size_b"), 6),
@@ -209,13 +203,13 @@ def containment_pairs(
     )
 
 
-def jaccard_pairs_from_shingle_table(sh: DataFrame, threshold: float, id_col: str = "doc_id") -> DataFrame:
+def jaccard_pairs_from_shingle_table(sh: DataFrame, threshold: float) -> DataFrame:
     """Exact Jaccard over an exploded (id, shingle) table (shared by the
     word-gram and char-gram operators)."""
     sh = sh.localCheckpoint(eager=True)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("_size"))
-    a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("id_b"), "shingle")
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("_size"))
+    a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
+    b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
     common = (
         a.join(b, on="shingle")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -223,8 +217,8 @@ def jaccard_pairs_from_shingle_table(sh: DataFrame, threshold: float, id_col: st
         .agg(F.count("*").alias("n_common"))
     )
     return (
-        common.join(sizes.select(F.col(id_col).alias("id_a"), F.col("_size").alias("size_a")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("_size").alias("size_b")), "id_b")
+        common.join(sizes.select(F.col("doc_id").alias("id_a"), F.col("_size").alias("size_a")), "id_a")
+        .join(sizes.select(F.col("doc_id").alias("id_b"), F.col("_size").alias("size_b")), "id_b")
         .withColumn(
             "jaccard",
             round_det(
@@ -240,7 +234,6 @@ def _prefix_candidates(
     staged: DataFrame,
     num: int,
     den: int,
-    id_col: str = "doc_id",
     positional: bool = True,
 ) -> DataFrame:
     """Candidate (id_a, id_b) pairs from the checkpointed
@@ -265,7 +258,7 @@ def _prefix_candidates(
     33,389 candidates at sf0.1, identical verified output."""
     from pyspark.sql import Window
 
-    sh = staged.select(F.col(id_col), F.explode("_sh").alias("shingle"))
+    sh = staged.select(F.col("doc_id"), F.explode("_sh").alias("shingle"))
     freq = sh.groupBy("shingle").agg(F.count("*").cast("long").alias("_df"))
     # prefix length p = size − ⌈t·size⌉ + 1 under the (freq, shingle)
     # order; ⌈t·n⌉ via exact integer DIV (not double floor-division,
@@ -275,22 +268,22 @@ def _prefix_candidates(
         - F.expr(f"(_size * {num} + {den - 1}) DIV {den}").cast("long")
         + 1
     )
-    w = Window.partitionBy(id_col).orderBy(F.asc("_df"), F.asc("shingle"))
+    w = Window.partitionBy("doc_id").orderBy(F.asc("_df"), F.asc("shingle"))
     prefix = (
         sh.join(freq, "shingle")
         .withColumn("_pos", F.row_number().over(w))
-        .join(staged.select(id_col, "_size"), id_col)
+        .join(staged.select("doc_id", "_size"), "doc_id")
         .filter(F.col("_pos") <= p_len)
-        .select(id_col, "shingle", "_size", F.col("_pos").cast("long").alias("_pos"))
+        .select("doc_id", "shingle", "_size", F.col("_pos").cast("long").alias("_pos"))
     )
     a = prefix.select(
-        F.col(id_col).alias("id_a"),
+        F.col("doc_id").alias("id_a"),
         "shingle",
         F.col("_size").alias("size_a"),
         F.col("_pos").alias("pos_a"),
     )
     b = prefix.select(
-        F.col(id_col).alias("id_b"),
+        F.col("doc_id").alias("id_b"),
         "shingle",
         F.col("_size").alias("size_b"),
         F.col("_pos").alias("pos_b"),
@@ -316,14 +309,7 @@ def _prefix_candidates(
     return joined.select("id_a", "id_b").distinct()
 
 
-def prefix_filtered_jaccard_pairs(
-    df: DataFrame,
-    threshold_num: int = 7,
-    threshold_den: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
+def prefix_filtered_jaccard_pairs(df: DataFrame) -> DataFrame:
     """Exact set-similarity self-join via PREFIX FILTERING — the
     deterministic, EXACT scale path for near-dup pairs, complementing
     the probabilistic MinHash-LSH tier (Chaudhuri et al., "A Primitive
@@ -358,16 +344,16 @@ def prefix_filtered_jaccard_pairs(
     (den·min ≥ num·max) AND the positional filter (PPJoin proper —
     see _prefix_candidates; measured 3.1× fewer candidates at sf0.1
     on the vocab-saturated fixture, identical verified output)."""
-    num, den = int(threshold_num), int(threshold_den)
+    num, den = 7, 10
     staged = (
-        with_shingles(ensure_min_partitions(df), text_col, "_sh", n)
-        .select(F.col(id_col), "_sh", F.size("_sh").cast("long").alias("_size"))
+        with_shingles(ensure_min_partitions(df), SHINGLE_N)
+        .select(F.col("doc_id"), "_sh", F.size("_sh").cast("long").alias("_size"))
         .filter(F.col("_size") >= 1)
         .localCheckpoint(eager=True)
     )
-    cands = _prefix_candidates(staged, num, den, id_col)
-    sets_a = staged.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sh_a"))
-    sets_b = staged.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sh_b"))
+    cands = _prefix_candidates(staged, num, den)
+    sets_a = staged.select(F.col("doc_id").alias("id_a"), F.col("_sh").alias("_sh_a"))
+    sets_b = staged.select(F.col("doc_id").alias("id_b"), F.col("_sh").alias("_sh_b"))
     verified = (
         cands.join(sets_a, "id_a")
         .join(sets_b, "id_b")
@@ -394,7 +380,7 @@ def prefix_filtered_jaccard_pairs(
 # --- MinHash + LSH ---
 
 
-def minhash_signature(shingle_col: Column | str, num_hashes: int = 64) -> Column:
+def minhash_signature(shingle_col: Column | str) -> Column:
     """MinHash signature: per seed i, min over shingles of xxhash64(shingle, i).
 
     One pass over the shingle array per document via higher-order
@@ -422,28 +408,24 @@ def minhash_signature(shingle_col: Column | str, num_hashes: int = 64) -> Column
             # position instead of the seed.
             return F.array_min(F.transform(sh, lambda s: F.xxhash64(s, F.lit(seed))))
 
-        return F.array(*[_min_hash(i) for i in range(num_hashes)])
+        return F.array(*[_min_hash(i) for i in range(MINHASH_NUM_HASHES)])
     return F.expr(
-        f"transform(sequence(0, {num_hashes - 1}), "
+        f"transform(sequence(0, {MINHASH_NUM_HASHES - 1}), "
         f"seed -> array_min(transform(`{shingle_col}`, s -> xxhash64(s, seed))))"
     )
 
 
-def _candidates_from_staged(
-    staged: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 16,
-) -> DataFrame:
+def _candidates_from_staged(staged: DataFrame) -> DataFrame:
     """Banded-LSH candidate pairs from a frame with a ``_sh`` shingle column.
 
-    Signature is split into ``bands`` rows of ``num_hashes/bands`` hashes;
+    Signature is split into ``MINHASH_BANDS`` rows of
+    ``MINHASH_NUM_HASHES/MINHASH_BANDS`` hashes;
     docs sharing any band hash become candidates. With r=4 rows/band and
     b=16 bands the S-curve crosses ~ (1/16)^(1/4) ≈ 0.5 Jaccard.
     Shuffle volume is O(docs × bands).
     """
-    rows_per_band = num_hashes // bands
-    sig = staged.withColumn("sig", minhash_signature("_sh", num_hashes)).select(id_col, "sig")
+    rows_per_band = MINHASH_NUM_HASHES // MINHASH_BANDS
+    sig = staged.withColumn("sig", minhash_signature("_sh")).select("doc_id", "sig")
     # One SQL expression for all bands (same driver-round-trip argument
     # as minhash_signature): band index rides as the transform lambda
     # variable — an INT like the old F.lit(b) — and element_at(sig,
@@ -452,19 +434,19 @@ def _candidates_from_staged(
         f"element_at(sig, b * {rows_per_band} + {r + 1})" for r in range(rows_per_band)
     )
     banded = sig.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.expr(
-                f"transform(sequence(0, {bands - 1}), "
+                f"transform(sequence(0, {MINHASH_BANDS - 1}), "
                 f"b -> named_struct('band', b, 'bucket', xxhash64({band_args})))"
             )
         ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
+    ).select("doc_id", "bb.band", "bb.bucket")
     # Both sides of the self-join read the banded signatures; checkpoint
     # so the shingle+signature pipeline runs once, not twice.
     banded = banded.localCheckpoint(eager=True)
-    a = banded.select(F.col(id_col).alias("id_a"), "band", "bucket")
-    b_side = banded.select(F.col(id_col).alias("id_b"), "band", "bucket")
+    a = banded.select(F.col("doc_id").alias("id_a"), "band", "bucket")
+    b_side = banded.select(F.col("doc_id").alias("id_b"), "band", "bucket")
     return (
         a.join(b_side, on=["band", "bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -473,16 +455,8 @@ def _candidates_from_staged(
     )
 
 
-def minhash_dedup_pairs(
-    df: DataFrame,
-    threshold: float = 0.8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 16,
-    n: int = 3,
-) -> DataFrame:
-    """LSH candidates verified with exact Jaccard ≥ threshold.
+def minhash_dedup_pairs(df: DataFrame) -> DataFrame:
+    """LSH candidates verified with exact Jaccard ≥ 0.8.
 
     The scale-path near-dup detector: LSH prunes the pair space, exact
     verification runs only on candidates.
@@ -499,40 +473,34 @@ def minhash_dedup_pairs(
     # storage spills rather than OOM at scale; ContextCleaner frees the
     # blocks when the frame is dropped.
     staged = with_shingles(
-        ensure_min_partitions(df, barrier=False), text_col, "_sh", n
-    ).select(id_col, "_sh").localCheckpoint(eager=True)
-    cands = _candidates_from_staged(staged, id_col, num_hashes, bands)
-    sh = staged.select(F.col(id_col), F.explode("_sh").alias("shingle"))
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("_size"))
+        ensure_min_partitions(df, barrier=False), SHINGLE_N
+    ).select("doc_id", "_sh").localCheckpoint(eager=True)
+    cands = _candidates_from_staged(staged)
+    sh = staged.select(F.col("doc_id"), F.explode("_sh").alias("shingle"))
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("_size"))
     # Intersection count: expand each candidate pair by A's shingles, then
     # equi-join on (id_b, shingle) — NOT a per-pair shingle cross product.
     pair_shingles = (
-        cands.join(sh.select(F.col(id_col).alias("id_a"), "shingle"), "id_a")
-        .join(sh.select(F.col(id_col).alias("id_b"), "shingle"), ["id_b", "shingle"])
+        cands.join(sh.select(F.col("doc_id").alias("id_a"), "shingle"), "id_a")
+        .join(sh.select(F.col("doc_id").alias("id_b"), "shingle"), ["id_b", "shingle"])
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_common"))
     )
     return (
         pair_shingles.join(
-            sizes.select(F.col(id_col).alias("id_a"), F.col("_size").alias("size_a")), "id_a"
+            sizes.select(F.col("doc_id").alias("id_a"), F.col("_size").alias("size_a")), "id_a"
         )
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("_size").alias("size_b")), "id_b")
+        .join(sizes.select(F.col("doc_id").alias("id_b"), F.col("_size").alias("size_b")), "id_b")
         .withColumn(
             "jaccard",
             round_det(F.col("n_common") / (F.col("size_a") + F.col("size_b") - F.col("n_common")), 6),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= 0.8)
         .select("id_a", "id_b", "jaccard")
     )
 
 
-def benchmark_overlap(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    n: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def benchmark_overlap(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Benchmark decontamination: for every corpus document, how much
     verbatim n-gram overlap it has with an evaluation/benchmark set —
     the pass a training pipeline runs before release so eval questions
@@ -547,13 +515,13 @@ def benchmark_overlap(
     ``n_bench_docs`` (how many benchmark docs it collides with);
     clean docs are absent (left-anti against this = the clean corpus).
     """
-    c_sh = shingle_table(corpus, text_col, id_col, n)
-    b_sh = shingle_table(benchmark, text_col, id_col, n).select(
-        F.col(id_col).alias("_bench_id"), "shingle"
+    c_sh = shingle_table(corpus, "doc_id", CONTAMINATION_N)
+    b_sh = shingle_table(benchmark, "doc_id", CONTAMINATION_N).select(
+        F.col("doc_id").alias("_bench_id"), "shingle"
     )
     return (
         c_sh.join(b_sh, on="shingle")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count_distinct("shingle").alias("n_shared_shingles"),
             F.count_distinct("_bench_id").alias("n_bench_docs"),
@@ -568,8 +536,6 @@ def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     id_col: str = "id",
-    src_col: str = "src",
-    dst_col: str = "dst",
     max_iter: int = 20,
 ) -> DataFrame:
     """Connected components by iterative min-label propagation — the
@@ -610,8 +576,8 @@ def connected_components(
     # expensive stage; re-running it per label round multiplies it by
     # the component diameter).
     sym = loop_frame(
-        edges.select(F.col(src_col).alias("_a"), F.col(dst_col).alias("_b")).union(
-            edges.select(F.col(dst_col).alias("_a"), F.col(src_col).alias("_b"))
+        edges.select(F.col("src").alias("_a"), F.col("dst").alias("_b")).union(
+            edges.select(F.col("dst").alias("_a"), F.col("src").alias("_b"))
         ),
     )
     labels = loop_frame(
@@ -660,8 +626,6 @@ def connected_components_star(
     nodes: DataFrame,
     edges: DataFrame,
     id_col: str = "id",
-    src_col: str = "src",
-    dst_col: str = "dst",
     max_iter: int = 25,
 ) -> DataFrame:
     """Connected components via alternating large-star/small-star edge
@@ -684,7 +648,7 @@ def connected_components_star(
     u, v, m = F.col("_u"), F.col("_v"), F.col("_m")
     # Canonical undirected edge list, self-loops dropped.
     e = loop_frame(
-        edges.select(F.col(src_col).alias("_u"), F.col(dst_col).alias("_v"))
+        edges.select(F.col("src").alias("_u"), F.col("dst").alias("_v"))
         .filter(u != v)
         .distinct(),
     )
@@ -768,8 +732,6 @@ def md5_token_hash(t: Column) -> Column:
 
 def with_simhash(
     df: DataFrame,
-    text_col: str = "text",
-    out: str = "simhash",
     hash_fn: Callable[[Column], Column] | None = None,
     bits: int = 64,
 ) -> DataFrame:
@@ -825,31 +787,28 @@ def with_simhash(
     # Each stage is now a transform lambda variable — bound once per
     # row, bit-identical packing.
     simhash = let1(
-        tokens(text_col),
+        tokens("text"),
         lambda tk: let1(
             F.transform(tk, hash_fn),
             lambda hs: let1(_bit_sums(hs), _pack),
         ),
     )
-    return df.withColumn(out, simhash)
+    return df.withColumn("simhash", simhash)
 
 
 def simhash_candidates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bands: int = 4,
     hash_fn: Callable[[Column], Column] | None = None,
     bits: int = 64,
 ) -> DataFrame:
-    """Near-dup candidates: docs whose SimHash matches on ≥1 of ``bands``
+    """Near-dup candidates: docs whose SimHash matches on ≥1 of ``SIMHASH_BANDS``
     (bits/bands)-bit bands (Hamming-distance blocking)."""
     sig = with_simhash(
-        ensure_min_partitions(df), text_col, hash_fn=hash_fn, bits=bits
-    ).select(F.col(id_col), "simhash")
-    width = bits // bands
+        ensure_min_partitions(df), hash_fn=hash_fn, bits=bits
+    ).select(F.col("doc_id"), "simhash")
+    width = bits // SIMHASH_BANDS
     banded = sig.select(
-        id_col,
+        "doc_id",
         "simhash",
         F.explode(
             F.array(
@@ -860,14 +819,14 @@ def simhash_candidates(
                         .bitwiseAND(F.lit((1 << width) - 1))
                         .alias("chunk"),
                     )
-                    for b in range(bands)
+                    for b in range(SIMHASH_BANDS)
                 ]
             )
         ).alias("bb"),
-    ).select(id_col, "simhash", F.col("bb.band").alias("band"), F.col("bb.chunk").alias("chunk"))
+    ).select("doc_id", "simhash", F.col("bb.band").alias("band"), F.col("bb.chunk").alias("chunk"))
     banded = banded.localCheckpoint(eager=True)
-    a = banded.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sim_a"), "band", "chunk")
-    b_side = banded.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sim_b"), "band", "chunk")
+    a = banded.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("sim_a"), "band", "chunk")
+    b_side = banded.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("sim_b"), "band", "chunk")
     pairs = (
         a.join(b_side, on=["band", "chunk"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -878,13 +837,11 @@ def simhash_candidates(
     return pairs.select("id_a", "id_b", hamming.cast("int").alias("hamming"))
 
 
-def duplicate_ngram_span_stats(
-    df: DataFrame, n: int = 8, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def duplicate_ngram_span_stats(df: DataFrame) -> DataFrame:
     """Exact substring-duplication statistics (the Lee et al. 2022
     "Deduplicating Training Data Makes Language Models Better" ExactSubstr
     measurement, re-expressed on token n-grams instead of suffix arrays):
-    for every document, the fraction of its token-``n``-gram POSITIONS
+    for every document, the fraction of its token-8-gram POSITIONS
     whose gram occurs more than once in the corpus (cross-document or
     repeated within a document).
 
@@ -892,30 +849,30 @@ def duplicate_ngram_span_stats(
     array_distinct) — a doc that repeats one slogan fifty times scores
     fifty duplicated positions. Two uniform-key shuffles (gram counts,
     per-doc rollup); the left join keeps zero-position docs (shorter
-    than ``n`` tokens) with NULL dup_ratio. At 100 TB the gram-count
+    than 8 tokens) with NULL dup_ratio. At 100 TB the gram-count
     table is the big intermediate — its key space is bounded by corpus
     positions, hash-partitioned, no skew beyond natural gram frequency
     (stop-gram heads are the hot keys; they are exactly the duplicated
     ones, and the count aggregate map-side combines).
     """
-    staged = ensure_min_partitions(df).withColumn("_toks", tokens(text_col))
+    staged = ensure_min_partitions(df).withColumn("_toks", tokens("text"))
     # checkpoint: both the gram-count aggregate and the per-doc join
     # read this table — without it the tokenize+explode (the dominant
     # cost) executes twice (module-standard pattern, see
     # jaccard_pairs_from_shingle_table)
-    pos = staged.filter(F.size("_toks") >= n).select(
-        F.col(id_col),
+    pos = staged.filter(F.size("_toks") >= SPAN_NGRAM).select(
+        F.col("doc_id"),
         F.explode(
             F.expr(
-                f"transform(sequence(1, size(_toks) - {n - 1}), "
-                f"i -> array_join(slice(_toks, i, {n}), ' '))"
+                f"transform(sequence(1, size(_toks) - {SPAN_NGRAM - 1}), "
+                f"i -> array_join(slice(_toks, i, {SPAN_NGRAM}), ' '))"
             )
         ).alias("gram"),
     ).localCheckpoint(eager=True)
     gram_counts = pos.groupBy("gram").agg(F.count("*").alias("_n_occ"))
     per_doc = (
         pos.join(gram_counts, on="gram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_positions"),
             F.sum(F.when(F.col("_n_occ") > 1, 1).otherwise(0)).cast("long").alias(
@@ -924,10 +881,10 @@ def duplicate_ngram_span_stats(
         )
     )
     return (
-        df.select(id_col)
-        .join(per_doc, on=id_col, how="left")
+        df.select("doc_id")
+        .join(per_doc, on="doc_id", how="left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce(F.col("n_positions"), F.lit(0)).cast("long").alias("n_positions"),
             F.coalesce(F.col("n_dup_positions"), F.lit(0)).cast("long").alias(
                 "n_dup_positions"
@@ -939,17 +896,10 @@ def duplicate_ngram_span_stats(
     )
 
 
-def minhash_md5_estimate_vs_exact(
-    df: DataFrame,
-    num_hashes: int = 16,
-    candidate_threshold: float = 0.3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
+def minhash_md5_estimate_vs_exact(df: DataFrame) -> DataFrame:
     """MinHash ESTIMATOR CALIBRATION: for every candidate pair (exact
-    word-n-gram Jaccard ≥ ``candidate_threshold``), compare the
-    ``num_hashes``-permutation MinHash estimate (fraction of agreeing
+    word-n-gram Jaccard ≥ 0.3), compare the
+    ``MD5_NUM_HASHES``-permutation MinHash estimate (fraction of agreeing
     signature slots — an unbiased estimator of Jaccard, Broder 1997)
     against the exact value and report the absolute error.
 
@@ -963,24 +913,24 @@ def minhash_md5_estimate_vs_exact(
     staged shingle array (no extra shuffle); the pair join reuses the
     exact-tier candidates.
     """
-    staged = with_shingles(ensure_min_partitions(df), text_col, "_sh", n).localCheckpoint(
+    staged = with_shingles(ensure_min_partitions(df), SHINGLE_N).localCheckpoint(
         eager=True
     )
     sig = staged.filter(F.size("_sh") > 0).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.expr(
-            f"transform(sequence(0, {num_hashes - 1}), i -> "
+            f"transform(sequence(0, {MD5_NUM_HASHES - 1}), i -> "
             "array_min(transform(_sh, s -> md5(concat(cast(i as string), ':', s)))))"
         ).alias("_sig"),
     )
-    sh = staged.select(F.col(id_col), F.explode("_sh").alias("shingle"))
-    pairs = jaccard_pairs_from_shingle_table(sh, candidate_threshold, id_col)
+    sh = staged.select(F.col("doc_id"), F.explode("_sh").alias("shingle"))
+    pairs = jaccard_pairs_from_shingle_table(sh, 0.3)
     est = F.expr(
         "size(filter(zip_with(_sig_a, _sig_b, (x, y) -> x = y), b -> b))"
-    ) / F.lit(float(num_hashes))
+    ) / F.lit(float(MD5_NUM_HASHES))
     return (
-        pairs.join(sig.select(F.col(id_col).alias("id_a"), F.col("_sig").alias("_sig_a")), "id_a")
-        .join(sig.select(F.col(id_col).alias("id_b"), F.col("_sig").alias("_sig_b")), "id_b")
+        pairs.join(sig.select(F.col("doc_id").alias("id_a"), F.col("_sig").alias("_sig_a")), "id_a")
+        .join(sig.select(F.col("doc_id").alias("id_b"), F.col("_sig").alias("_sig_b")), "id_b")
         .select(
             "id_a",
             "id_b",
@@ -991,9 +941,7 @@ def minhash_md5_estimate_vs_exact(
     )
 
 
-def _shingles_sig_buckets_expr(
-    num_hashes: int = 64, bands: int = 16, n: int = 3
-) -> Column:
+def _shingles_sig_buckets_expr() -> Column:
     """(shingles, per-band LSH bucket vector) computed from ``text`` in
     ONE let-bound expression — the 1-element-array lambda device:
     tokens, shingles, and the minhash signature are each bound ONCE as
@@ -1006,22 +954,22 @@ def _shingles_sig_buckets_expr(
     where this expression takes ~5 s. Bucket slots and xxhash64
     folding are bit-identical to _candidates_from_staged's banding
     (pinned by test)."""
-    rows_per_band = num_hashes // bands
+    rows_per_band = MINHASH_NUM_HASHES // MINHASH_BANDS
     sh_expr = (
-        f"CASE WHEN size(tk) >= {n} THEN array_distinct("
-        f"transform(sequence(1, size(tk) - {n - 1}), "
+        f"CASE WHEN size(tk) >= {SHINGLE_N} THEN array_distinct("
+        f"transform(sequence(1, size(tk) - {SHINGLE_N - 1}), "
         "i -> concat_ws(' ', "
-        + ", ".join(f"element_at(tk, i + {j})" for j in range(n))
+        + ", ".join(f"element_at(tk, i + {j})" for j in range(SHINGLE_N))
         + "))) ELSE CAST(array() AS ARRAY<STRING>) END"
     )
     sig_expr = (
-        f"transform(sequence(0, {num_hashes - 1}), "
+        f"transform(sequence(0, {MINHASH_NUM_HASHES - 1}), "
         "seed -> array_min(transform(shv, s -> xxhash64(s, seed))))"
     )
     band_args = ", ".join(
         f"element_at(sigv, b * {rows_per_band} + {r + 1})" for r in range(rows_per_band)
     )
-    buckets_expr = f"transform(sequence(0, {bands - 1}), b -> xxhash64({band_args}))"
+    buckets_expr = f"transform(sequence(0, {MINHASH_BANDS - 1}), b -> xxhash64({band_args}))"
     return F.expr(
         "element_at(transform(array(split(lower(trim(text)), '\\\\s+')), tk -> "
         f"element_at(transform(array({sh_expr}), shv -> "
@@ -1031,18 +979,11 @@ def _shingles_sig_buckets_expr(
     )
 
 
-def stream_near_dup_pairs(
-    spark,
-    sf_dir: str,
-    threshold: float = 0.8,
-    num_hashes: int = 64,
-    bands: int = 16,
-    n: int = 3,
-):
+def stream_near_dup_pairs(spark, sf_dir: str):
     """ONLINE near-dup detection — the production ingest pattern: new
     documents stream against a STATIC MinHash-LSH index of the
     existing corpus (even doc_ids indexed, odd doc_ids streamed), and
-    every (new, indexed) pair with exact Jaccard ≥ threshold is
+    every (new, indexed) pair with exact Jaccard ≥ 0.8 is
     emitted. The whole stream side is STATELESS: shingle → signature →
     per-band bucket join against the index → first-matching-band
     filter → exact verification, all per-row expressions and
@@ -1078,7 +1019,7 @@ def stream_near_dup_pairs(
 
     def staged_buckets(frame):
         st = frame.select(
-            "doc_id", _shingles_sig_buckets_expr(num_hashes, bands, n).alias("_st")
+            "doc_id", _shingles_sig_buckets_expr().alias("_st")
         )
         return st.select(
             "doc_id",
@@ -1125,7 +1066,7 @@ def stream_near_dup_pairs(
         .filter(
             F.col("band")
             == F.expr(
-                f"element_at(filter(sequence(0, {bands - 1}),"
+                f"element_at(filter(sequence(0, {MINHASH_BANDS - 1}),"
                 " b -> element_at(buckets_a, b + 1) = element_at(buckets_b, b + 1)), 1)"
             )
         )
@@ -1138,7 +1079,7 @@ def stream_near_dup_pairs(
                 6,
             ),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= 0.8)
         .select("id_a", "id_b", "jaccard")
     )
     name = f"stream_near_dup_{uuid.uuid4().hex[:8]}"

@@ -43,7 +43,7 @@ def _scored_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         "source",
-        TX.quality_score("text").alias("q"),
+        TX.quality_score().alias("q"),
     ).filter(F.col("q").isNotNull())
 
 

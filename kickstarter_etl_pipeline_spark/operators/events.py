@@ -13,19 +13,19 @@ from pyspark.sql import DataFrame, Window, functions as F
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 
 
-def with_unix_micros(df: DataFrame, ts_col: str = "ts", out: str = "_us") -> DataFrame:
+def with_unix_micros(df: DataFrame, out: str = "_us") -> DataFrame:
     # ts is TimestampNTZ; unix_micros needs an instant — with the UTC
     # session timezone the cast is wall-clock-identity and exact.
-    return df.withColumn(out, F.unix_micros(F.col(ts_col).cast("timestamp")))
+    return df.withColumn(out, F.unix_micros(F.col("ts").cast("timestamp")))
 
 
-def tumbling_agg(events: DataFrame, ts_col: str = "ts", duration: str = "1 hour") -> DataFrame:
+def tumbling_agg(events: DataFrame) -> DataFrame:
     """Tumbling-window counts/sums per event_type.
 
     Bucket start is emitted as a formatted string so results compare
     cleanly across engines (no tz-annotation mismatches).
     """
-    bucket = F.date_format(F.date_trunc("hour", F.col(ts_col)), "yyyy-MM-dd HH:mm:ss")
+    bucket = F.date_format(F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd HH:mm:ss")
     return (
         events.groupBy(bucket.alias("bucket_start"), "event_type")
         .agg(
@@ -40,10 +40,10 @@ def tumbling_agg(events: DataFrame, ts_col: str = "ts", duration: str = "1 hour"
     )
 
 
-def with_session_ids(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
+def with_session_ids(events: DataFrame) -> DataFrame:
     """Event-level gap sessionization: every event row gains ``_us``
     and a per-user ``session_id`` (a new session starts when the time
-    since the user's previous event exceeds ``gap_seconds``). Classic
+    since the user's previous event exceeds 1800 s). Classic
     lag + cumulative-sum construction; one shuffle on user_id; integer
     microseconds → exact.
 
@@ -54,7 +54,7 @@ def with_session_ids(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     """
     with_us = with_unix_micros(events)
     w = Window.partitionBy("user_id").orderBy("_us", "event_id")
-    gap_us = gap_seconds * 1_000_000
+    gap_us = 1800 * 1_000_000
     new_session = (
         F.when(
             F.lag("_us").over(w).isNull()
@@ -69,11 +69,11 @@ def with_session_ids(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     ).drop("_new")
 
 
-def sessionize(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Gap-based sessionization rollup: one row per (user, session)
     with count / duration / value aggregates (see with_session_ids for
     the session-id construction)."""
-    sessions = with_session_ids(events, gap_seconds)
+    sessions = with_session_ids(events)
     return sessions.groupBy("user_id", "session_id").agg(
         F.count("*").alias("n_events"),
         (F.max("_us") - F.min("_us")).alias("duration_us"),
@@ -81,18 +81,13 @@ def sessionize(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     )
 
 
-def sliding_window_agg(
-    events: DataFrame,
-    ts_col: str = "ts",
-    window: str = "1 hour",
-    slide: str = "30 minutes",
-) -> DataFrame:
+def sliding_window_agg(events: DataFrame) -> DataFrame:
     """Sliding (hopping) windows: each event lands in window/slide buckets.
 
     Spark's window() generates the overlapping buckets natively; start is
     emitted as a formatted string for engine-neutral comparison.
     """
-    win = F.window(F.col(ts_col).cast("timestamp"), window, slide)
+    win = F.window(F.col("ts").cast("timestamp"), "1 hour", "30 minutes")
     return (
         events.groupBy(win.alias("w"), "event_type")
         .agg(
@@ -113,9 +108,9 @@ def distinct_user_event_pairs(events: DataFrame) -> DataFrame:
     return events.select("user_id", "event_type").dropDuplicates()
 
 
-def json_field_agg(events: DataFrame, path: str = "$.k") -> DataFrame:
+def json_field_agg(events: DataFrame) -> DataFrame:
     """Extract an int field from the JSON props column, aggregate by it."""
-    k = F.get_json_object("props", path).cast("int")
+    k = F.get_json_object("props", "$.k").cast("int")
     return (
         events.groupBy(k.alias("k"))
         .agg(

@@ -18,17 +18,9 @@ from pyspark.sql import DataFrame, functions as F
 from kickstarter_etl_pipeline_spark.operators.dims import date_key
 
 
-def join_dim(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: list[str] | F.Column,
-    key_col: str | None = None,
-    broadcast: bool = True,
-) -> DataFrame:
+def join_dim(fact: DataFrame, dim: DataFrame, on: list[str] | F.Column) -> DataFrame:
     """Left join a (small) dimension onto a fact, keeping fact partitioning."""
-    build = F.broadcast(dim) if broadcast else dim
-    joined = fact.join(build, on=on, how="left")
-    return joined
+    return fact.join(F.broadcast(dim), on=on, how="left")
 
 
 def build_fact_campaigns(

@@ -31,16 +31,35 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from kickstarter_etl_pipeline_spark.constants import (
+    BELLMAN_FORD_ROUNDS,
+    BFS_ROUNDS,
+    DAMPING,
+    GRAPH_PIVOTS,
+    GRAPH_PIVOT_ROUNDS,
+    HITS_ITERATIONS,
+    KCORE_K,
+    KCORE_ROUNDS,
+    KTRUSS_K,
+    KTRUSS_ROUNDS,
+    LPA_ITERATIONS,
+    OCCUPANCY_CAP,
+    PAGERANK_ITERATIONS,
+    PPR_ITERATIONS,
+    ROTOR_STEPS,
+    SPECTRAL_ROUNDS,
+    WEDGE_DEGREE_CAP,
+)
 from kickstarter_etl_pipeline_spark.operators.partitioning import loop_frame
 
 
-def degree_table(edges: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
+def degree_table(edges: DataFrame) -> DataFrame:
     """Vertex degrees of an undirected, deduplicated edge list."""
-    ends = edges.select(F.col(u).alias("id")).unionAll(edges.select(F.col(v).alias("id")))
+    ends = edges.select(F.col("u").alias("id")).unionAll(edges.select(F.col("v").alias("id")))
     return ends.groupBy("id").agg(F.count("*").cast("long").alias("degree"))
 
 
-def orient_by_degree(edges: DataFrame, deg: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
+def orient_by_degree(edges: DataFrame, deg: DataFrame) -> DataFrame:
     """Orient each edge from lower (degree, id) to higher (degree, id).
 
     The degree table is corpus-scale but narrow (id, degree); both
@@ -49,28 +68,28 @@ def orient_by_degree(edges: DataFrame, deg: DataFrame, u: str = "u", v: str = "v
     it.
     """
     e = (
-        edges.join(deg.select(F.col("id").alias(u), F.col("degree").alias("_du")), u)
-        .join(deg.select(F.col("id").alias(v), F.col("degree").alias("_dv")), v)
+        edges.join(deg.select(F.col("id").alias("u"), F.col("degree").alias("_du")), "u")
+        .join(deg.select(F.col("id").alias("v"), F.col("degree").alias("_dv")), "v")
     )
-    rank_u = F.struct(F.col("_du").alias("d"), F.col(u).alias("i"))
-    rank_v = F.struct(F.col("_dv").alias("d"), F.col(v).alias("i"))
+    rank_u = F.struct(F.col("_du").alias("d"), F.col("u").alias("i"))
+    rank_v = F.struct(F.col("_dv").alias("d"), F.col("v").alias("i"))
     u_first = rank_u < rank_v
     return e.select(
-        F.when(u_first, F.col(u)).otherwise(F.col(v)).alias("src"),
-        F.when(u_first, F.col(v)).otherwise(F.col(u)).alias("dst"),
+        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
+        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
         F.when(u_first, rank_v).otherwise(rank_u).alias("dst_rank"),
     )
 
 
-def triangle_counts(edges: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-vertex triangle participation counts over an undirected,
     deduplicated (u < v) edge list.
 
     Returns (user-facing columns) one row per vertex that belongs to at
     least one triangle: ``(id, degree, n_triangles)``.
     """
-    deg = degree_table(edges, u, v)
-    oriented = orient_by_degree(edges, deg, u, v).localCheckpoint(eager=True)
+    deg = degree_table(edges)
+    oriented = orient_by_degree(edges, deg).localCheckpoint(eager=True)
     e1 = oriented.select(
         F.col("src").alias("_a"), F.col("dst").alias("_b"), F.col("dst_rank").alias("_rb")
     )
@@ -88,19 +107,7 @@ def triangle_counts(edges: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
     return per_vertex.join(deg, on="id")
 
 
-# Hard per-join-key occupancy bound for the co-occurrence self-join.
-# Must stay in lockstep with oracles_graph_common.OCCUPANCY_CAP — the
-# DuckDB twins replay the identical sub-bucketing byte for byte.
-OCCUPANCY_CAP = 64
-
-
-def cooccurrence_nodes(
-    events: DataFrame,
-    event_type: str = "error",
-    bucket_seconds: int = 1800,
-    us_col: str = "_us",
-    occupancy_cap: int = OCCUPANCY_CAP,
-) -> DataFrame:
+def cooccurrence_nodes(events: DataFrame, bucket_seconds: int = 1800) -> DataFrame:
     """Distinct ``(_bucket, _sub, user_id)`` node table feeding the
     co-occurrence self-join, with the per-join-key occupancy bound
     applied: within each time bucket, users are ranked by
@@ -123,9 +130,9 @@ def cooccurrence_nodes(
     same ranking, so cross-engine hashes agree at every scale.
     """
     nodes = (
-        events.filter(F.col("event_type") == event_type)
+        events.filter(F.col("event_type") == "error")
         .select(
-            (F.floor(F.col(us_col) / (bucket_seconds * 1_000_000))).alias("_bucket"),
+            (F.floor(F.col("_us") / (bucket_seconds * 1_000_000))).alias("_bucket"),
             "user_id",
         )
         .distinct()
@@ -135,34 +142,28 @@ def cooccurrence_nodes(
     )
     return nodes.select(
         "_bucket",
-        F.floor((F.row_number().over(w) - F.lit(1)) / F.lit(occupancy_cap))
+        F.floor((F.row_number().over(w) - F.lit(1)) / F.lit(OCCUPANCY_CAP))
         .cast("long")
         .alias("_sub"),
         "user_id",
     )
 
 
-def cooccurrence_edges(
-    events: DataFrame,
-    event_type: str = "error",
-    bucket_seconds: int = 1800,
-    us_col: str = "_us",
-    occupancy_cap: int = OCCUPANCY_CAP,
-) -> DataFrame:
+def cooccurrence_edges(events: DataFrame, bucket_seconds: int = 1800) -> DataFrame:
     """Undirected user co-occurrence edges: two users are connected iff
-    they both emitted ``event_type`` within the same ``bucket_seconds``
-    time bucket (and, above ``occupancy_cap`` distinct users in one
+    they both emitted an ``error`` event within the same ``bucket_seconds``
+    time bucket (and, above ``OCCUPANCY_CAP`` distinct users in one
     bucket, the same deterministic hash-ordered sub-bucket — see
     :func:`cooccurrence_nodes` for the full occupancy contract).
-    Input must carry exact integer microseconds in ``us_col``
+    Input must carry exact integer microseconds in ``_us``
     (operators.events.with_unix_micros).
 
     The self-join is keyed by ``(_bucket, _sub)`` — shuffle O(events),
-    per-key pair fan-out hard-bounded at C(occupancy_cap, 2), total
+    per-key pair fan-out hard-bounded at C(OCCUPANCY_CAP, 2), total
     pair count linear in bucket occupancy. No hot key can go
     quadratic.
     """
-    nodes = cooccurrence_nodes(events, event_type, bucket_seconds, us_col, occupancy_cap)
+    nodes = cooccurrence_nodes(events, bucket_seconds)
     a = nodes.select("_bucket", "_sub", F.col("user_id").alias("u"))
     b = nodes.select("_bucket", "_sub", F.col("user_id").alias("v"))
     return (
@@ -173,7 +174,7 @@ def cooccurrence_edges(
     )
 
 
-def clustering_coefficients(edges: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
+def clustering_coefficients(edges: DataFrame) -> DataFrame:
     """Local clustering coefficient per vertex:
     ``cc = 2·triangles / (degree·(degree−1))`` for degree ≥ 2, with
     vertices in no triangle reported as 0.0 (a LEFT join against the
@@ -184,8 +185,8 @@ def clustering_coefficients(edges: DataFrame, u: str = "u", v: str = "v") -> Dat
     """
     from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 
-    deg = degree_table(edges, u, v)
-    tri = triangle_counts(edges, u, v).select("id", "n_triangles")
+    deg = degree_table(edges)
+    tri = triangle_counts(edges).select("id", "n_triangles")
     return (
         deg.filter(F.col("degree") >= 2)
         .join(tri, on="id", how="left")
@@ -225,13 +226,7 @@ def _undirected_edges(edges: DataFrame, u: str, v: str) -> DataFrame:
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int = 10,
-    damping: float = 0.85,
-    u: str = "u",
-    v: str = "v",
-) -> DataFrame:
+def pagerank(edges: DataFrame) -> DataFrame:
     """PageRank over an undirected edge list (each edge contributes in
     both directions), FULLY oracle-able despite being iterative.
 
@@ -255,7 +250,7 @@ def pagerank(
     """
     from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 
-    directed = _both_directions(edges, u, v)
+    directed = _both_directions(edges, "u", "v")
     deg = directed.groupBy("src").agg(F.count("*").cast("long").alias("_deg"))
     directed = loop_frame(directed.join(deg, "src"))
     verts = directed.select(F.col("src").alias("id")).distinct()
@@ -275,7 +270,7 @@ def pagerank(
         )
     n_lit = F.lit(n).cast("long")
     pr = loop_frame(verts.select("id", round_det(F.lit(1.0) / n_lit, 9).alias("pr")))
-    for _ in range(iterations):
+    for _ in range(PAGERANK_ITERATIONS):
         contribs = (
             directed.join(pr.withColumnRenamed("id", "src"), "src")
             .groupBy(F.col("dst").alias("id"))
@@ -285,20 +280,14 @@ def pagerank(
             contribs.select(
                 "id",
                 round_det(
-                    (1.0 - damping) / n_lit + damping * F.col("_in"), 9
+                    (1.0 - DAMPING) / n_lit + DAMPING * F.col("_in"), 9
                 ).alias("pr"),
             ),
         )
     return pr.select("id", round_det(F.col("pr") * 1000, 6).alias("pr_permille"))
 
 
-def personalized_pagerank(
-    edges: DataFrame,
-    iterations: int = 8,
-    damping: float = 0.85,
-    u: str = "u",
-    v: str = "v",
-) -> DataFrame:
+def personalized_pagerank(edges: DataFrame) -> DataFrame:
     """Personalized PageRank (random walk with restart) from ONE
     md5-chosen seed vertex — the "related entities" recommender
     primitive (Jeh & Widom 2003), distinct from global pagerank in
@@ -317,7 +306,7 @@ def personalized_pagerank(
     """
     from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 
-    directed = _both_directions(edges, u, v)
+    directed = _both_directions(edges, "u", "v")
     deg = directed.groupBy("src").agg(F.count("*").cast("long").alias("_deg"))
     directed = loop_frame(directed.join(deg, "src"))
     seed = (
@@ -327,11 +316,11 @@ def personalized_pagerank(
         .limit(1)
         .localCheckpoint(eager=True)
     )
-    restart = round(1.0 - damping, 10)
+    restart = round(1.0 - DAMPING, 10)
     pr = seed.select("id", round_det(F.lit(1.0), 9).alias("pr")).localCheckpoint(
         eager=True
     )
-    for _ in range(iterations):
+    for _ in range(PPR_ITERATIONS):
         contribs = (
             directed.join(pr.withColumnRenamed("id", "src"), "src")
             .groupBy(F.col("dst").alias("id"))
@@ -352,7 +341,7 @@ def personalized_pagerank(
                     F.when(F.col("_is_seed").isNotNull(), F.lit(restart)).otherwise(
                         F.lit(0.0)
                     )
-                    + F.lit(damping) * F.col("_in"),
+                    + F.lit(DAMPING) * F.col("_in"),
                     9,
                 ).alias("pr"),
             ),
@@ -360,9 +349,7 @@ def personalized_pagerank(
     return pr.select("id", round_det(F.col("pr") * 1000, 6).alias("ppr_permille"))
 
 
-def label_propagation(
-    edges: DataFrame, iterations: int = 5, u: str = "u", v: str = "v"
-) -> DataFrame:
+def label_propagation(edges: DataFrame) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et
     al. 2007), made fully deterministic: labels start as vertex ids,
     each round every vertex adopts its neighbors' MAJORITY label with
@@ -379,13 +366,13 @@ def label_propagation(
     round count makes that a defined, replayable outcome rather than a
     hang.
     """
-    directed = _both_directions(edges, u, v).localCheckpoint(eager=True)
+    directed = _both_directions(edges, "u", "v").localCheckpoint(eager=True)
     labels = (
         directed.select(F.col("src").alias("id")).distinct()
         .select("id", F.col("id").alias("community"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(iterations):
+    for _ in range(LPA_ITERATIONS):
         votes = (
             directed.join(labels.withColumnRenamed("id", "src"), "src")
             .groupBy(F.col("dst").alias("id"), "community")
@@ -402,18 +389,12 @@ def label_propagation(
     return labels.join(sizes, "community").select("id", "community", "n_members")
 
 
-WEDGE_DEGREE_CAP = 256
-
-
 def common_neighbor_link_prediction(
     edges: DataFrame,
-    min_common: int = 2,
-    u: str = "u",
-    v: str = "v",
     wedge_degree_cap: int | None = WEDGE_DEGREE_CAP,
 ) -> DataFrame:
     """Link prediction by neighborhood overlap (Liben-Nowell & Kleinberg
-    2003): for every NON-adjacent vertex pair sharing ≥ ``min_common``
+    2003): for every NON-adjacent vertex pair sharing ≥ 2
     neighbors, emit the common-neighbor count and the neighborhood
     Jaccard score ``|N(u)∩N(v)| / |N(u)∪N(v)|`` — the classic
     "people you may know" / correlated-account candidate generator.
@@ -442,13 +423,13 @@ def common_neighbor_link_prediction(
     # inflate degrees / common-neighbor counts (round-6 self-review)
     edges = (
         edges.select(
-            F.least(F.col(u), F.col(v)).alias(u), F.greatest(F.col(u), F.col(v)).alias(v)
+            F.least(F.col("u"), F.col("v")).alias("u"), F.greatest(F.col("u"), F.col("v")).alias("v")
         )
-        .filter(F.col(u) != F.col(v))
+        .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    adj = edges.select(F.col(u).alias("a"), F.col(v).alias("n")).unionAll(
-        edges.select(F.col(v).alias("a"), F.col(u).alias("n"))
+    adj = edges.select(F.col("u").alias("a"), F.col("v").alias("n")).unionAll(
+        edges.select(F.col("v").alias("a"), F.col("u").alias("n"))
     )
     deg = adj.groupBy("a").agg(F.count("*").cast("long").alias("degree"))
     if wedge_degree_cap is not None:
@@ -467,10 +448,10 @@ def common_neighbor_link_prediction(
         .filter(F.col("u") < F.col("v"))
         .groupBy("u", "v")
         .agg(F.count("*").cast("long").alias("n_common"))
-        .filter(F.col("n_common") >= min_common)
+        .filter(F.col("n_common") >= 2)
     )
     existing = edges.select(
-        F.least(F.col(u), F.col(v)).alias("u"), F.greatest(F.col(u), F.col(v)).alias("v")
+        F.least(F.col("u"), F.col("v")).alias("u"), F.greatest(F.col("u"), F.col("v")).alias("v")
     )
     return (
         wedge.join(existing, on=["u", "v"], how="left_anti")
@@ -489,14 +470,9 @@ def common_neighbor_link_prediction(
     )
 
 
-def hits(
-    edges: DataFrame,
-    iterations: int = 4,
-    c: str = "c",
-    s: str = "s",
-) -> DataFrame:
+def hits(edges: DataFrame, iterations: int = HITS_ITERATIONS) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) over a bipartite
-    edge list (hub side ``c`` → authority side ``s``), fully
+    edge list (hub column ``c`` → authority column ``s``), fully
     oracle-able with an EXACT integer spine — a strictly stronger
     determinism story than pagerank's grid-margin argument:
 
@@ -523,7 +499,7 @@ def hits(
         raise ValueError(f"hits: iterations must be >= 1, got {iterations}")
     spark = edges.sparkSession
     e = (
-        edges.select(F.col(c).cast("long").alias("_c"), F.col(s).cast("long").alias("_s"))
+        edges.select(F.col("c").cast("long").alias("_c"), F.col("s").cast("long").alias("_s"))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -592,18 +568,12 @@ def hits(
     return hubs.unionByName(auths)
 
 
-def kcore(
-    edges: DataFrame,
-    k: int = 4,
-    rounds: int = 6,
-    u: str = "u",
-    v: str = "v",
-) -> DataFrame:
+def kcore(edges: DataFrame) -> DataFrame:
     """k-core decomposition by bounded-round peeling (Seidman 1983;
-    the distributed formulation of Montresor et al.): repeat ``rounds``
-    times — compute degrees, drop every vertex with degree < ``k``,
+    the distributed formulation of Montresor et al.): repeat ``KCORE_ROUNDS``
+    times — compute degrees, drop every vertex with degree < ``KCORE_K``,
     drop edges touching a dropped vertex. The contract is FIXED-round
-    ("the subgraph after ``rounds`` peels"), not run-to-convergence,
+    ("the subgraph after ``KCORE_ROUNDS`` peels"), not run-to-convergence,
     so the DuckDB twin replays it as an unrolled CTE and the result is
     well-defined even on fixtures where peeling hasn't reached the
     fixpoint. Pure integer arithmetic end to end — no rounding device
@@ -615,11 +585,11 @@ def kcore(
     the loop counter lives on the driver.
 
     Returns (id, core_degree) for every vertex surviving round
-    ``rounds``, with its degree inside the surviving subgraph.
+    ``KCORE_ROUNDS``, with its degree inside the surviving subgraph.
     """
     e = (
         edges.select(
-            F.col(u).cast("long").alias("_u"), F.col(v).cast("long").alias("_v")
+            F.col("u").cast("long").alias("_u"), F.col("v").cast("long").alias("_v")
         )
         .filter(F.col("_u") != F.col("_v"))
         .distinct()
@@ -634,8 +604,8 @@ def kcore(
             .agg(F.count("*").cast("long").alias(out))
         )
 
-    for _ in range(rounds):
-        keep = _degrees(e, "_d").filter(F.col("_d") >= k).select("_id")
+    for _ in range(KCORE_ROUNDS):
+        keep = _degrees(e, "_d").filter(F.col("_d") >= KCORE_K).select("_id")
         e = loop_frame(
             e.join(keep.withColumnRenamed("_id", "_u"), "_u", "left_semi")
             .join(keep.withColumnRenamed("_id", "_v"), "_v", "left_semi"),
@@ -645,12 +615,7 @@ def kcore(
     )
 
 
-def transitive_closure(
-    edges: DataFrame,
-    rounds: int = 5,
-    anc: str = "anc",
-    des: str = "des",
-) -> DataFrame:
+def transitive_closure(edges: DataFrame, rounds: int = 5) -> DataFrame:
     """Reachability closure by repeated squaring (the classic
     O(log diameter) distributed formulation — Valiant-style path
     doubling): C_1 = E; C_{j+1} = C_j ∪ (C_j ∘ C_j), deduplicated
@@ -669,7 +634,7 @@ def transitive_closure(
     and only the loop counter lives on the driver.
     """
     clo = edges.select(
-        F.col(anc).cast("long").alias("anc"), F.col(des).cast("long").alias("des")
+        F.col("anc").cast("long").alias("anc"), F.col("des").cast("long").alias("des")
     ).distinct()
     clo = loop_frame(clo)
     # r14 fixpoint early exit (the ktruss device): the closure only
@@ -692,12 +657,7 @@ def transitive_closure(
     return clo
 
 
-def bfs_depths(
-    edges: DataFrame,
-    rounds: int = 8,
-    u: str = "u",
-    v: str = "v",
-) -> DataFrame:
+def bfs_depths(edges: DataFrame, rounds: int = BFS_ROUNDS) -> DataFrame:
     """Single-source BFS shortest-path depths over an undirected edge
     list — the distance primitive the graph tier's centrality/peeling
     operators don't provide. The source is the MINIMUM vertex id (a
@@ -714,7 +674,7 @@ def bfs_depths(
     counters; cross-engine equality is set identity. An edge list with
     no non-self-loop edge has no source and returns no rows.
     """
-    sym = loop_frame(_undirected_edges(edges, u, v))
+    sym = loop_frame(_undirected_edges(edges, "u", "v"))
     src = (
         sym.agg(F.min("_u").alias("_id"))
         .filter(F.col("_id").isNotNull())
@@ -745,8 +705,6 @@ def _multi_source_bfs(
     edges: DataFrame,
     pivots: int,
     rounds: int,
-    u: str = "u",
-    v: str = "v",
 ) -> tuple[DataFrame, DataFrame]:
     """Shared frontier expansion for the pivot-sampled centralities:
     returns (sym, visited) where sym is the checkpointed symmetrized
@@ -761,7 +719,7 @@ def _multi_source_bfs(
     State is bounded by pivots × vertices; each round is one
     frontier⋈edges expansion plus one (pivot, vertex)-keyed
     anti-join."""
-    sym = loop_frame(_undirected_edges(edges, u, v))
+    sym = loop_frame(_undirected_edges(edges, "u", "v"))
     piv = (
         sym.select(F.col("_u").alias("_p"))
         .distinct()
@@ -799,10 +757,8 @@ def _multi_source_bfs(
 
 def harmonic_centrality(
     edges: DataFrame,
-    pivots: int = 8,
-    rounds: int = 6,
-    u: str = "u",
-    v: str = "v",
+    pivots: int = GRAPH_PIVOTS,
+    rounds: int = GRAPH_PIVOT_ROUNDS,
 ) -> DataFrame:
     """Pivot-sampled harmonic centrality (Boldi & Vigna, "Axioms for
     Centrality", 2014; the HyperBall estimand) — the closeness-family
@@ -830,7 +786,7 @@ def harmonic_centrality(
     exactly ``pivots`` copies of the bfs_depths cost with K fixed and
     small, never all-pairs.
     """
-    sym, visited = _multi_source_bfs(edges, pivots, rounds, u, v)
+    sym, visited = _multi_source_bfs(edges, pivots, rounds)
     return (
         visited.filter(F.col("depth") > 0)
         .groupBy(F.col("_id").alias("id"))
@@ -896,11 +852,11 @@ def edge_support(edges: DataFrame) -> DataFrame:
     return pairs.groupBy("u", "v").agg(F.count("*").cast("long").alias("support"))
 
 
-def ktruss(edges: DataFrame, k: int = 4, rounds: int = 4) -> DataFrame:
+def ktruss(edges: DataFrame) -> DataFrame:
     """k-truss (Cohen 2008) by fixed-round support peeling — the
     triangle-cohesion upgrade of the k-core: every surviving edge must
     sit in ≥ k−2 triangles OF THE SURVIVING SUBGRAPH. Same fixed-round
-    contract as kcore/bfs (after ``rounds`` peels the result is a
+    contract as kcore/bfs (after ``KTRUSS_ROUNDS`` peels the result is a
     supergraph of the true k-truss, well-defined on both engines);
     each round recomputes per-edge support with the degree-ordered
     triangle enumeration and drops light edges. Returns the surviving
@@ -914,10 +870,10 @@ def ktruss(edges: DataFrame, k: int = 4, rounds: int = 4) -> DataFrame:
     cur = loop_frame(
         edges.select(F.col("u").cast("long").alias("u"), F.col("v").cast("long").alias("v")),
     )
-    thr = k - 2
+    thr = KTRUSS_K - 2
     n_cur = cur.count()  # bounded control-plane scalar (loop budget)
     supp = None
-    for _ in range(rounds):
+    for _ in range(KTRUSS_ROUNDS):
         # Materialize support once per round: it feeds both the peel
         # filter and (on convergence) the final report.
         supp = loop_frame(edge_support(cur))
@@ -976,10 +932,8 @@ def _guard_betweenness_bound(max_sigma: int, n_reached: int) -> None:
 
 def betweenness_sampled(
     edges: DataFrame,
-    pivots: int = 8,
-    rounds: int = 6,
-    u: str = "u",
-    v: str = "v",
+    pivots: int = GRAPH_PIVOTS,
+    rounds: int = GRAPH_PIVOT_ROUNDS,
 ) -> DataFrame:
     """Pivot-sampled betweenness centrality — Brandes' algorithm
     (Brandes 2001; the sampled estimator of Brandes & Pich 2007)
@@ -1022,7 +976,7 @@ def betweenness_sampled(
     # the per-round σ-sum replaces the frontier distinct) — see
     # _multi_source_bfs. Level frames are slices of the checkpointed
     # visited table.
-    sym, visited = _multi_source_bfs(edges, pivots, rounds, u, v)
+    sym, visited = _multi_source_bfs(edges, pivots, rounds)
     # count(*) over (pivot, vertex) rows upper-bounds the per-pivot
     # reached-vertex count (no countDistinct — that would add an
     # exchange; this agg is one map-side-combinable pass).
@@ -1082,12 +1036,7 @@ def betweenness_sampled(
     )
 
 
-def rotor_walks(
-    edges: DataFrame,
-    steps: int = 4,
-    u: str = "u",
-    v: str = "v",
-) -> DataFrame:
+def rotor_walks(edges: DataFrame) -> DataFrame:
     """Deterministic hash-greedy walk corpus — the reproducible stand-in
     for node2vec/DeepWalk random-walk sampling when training data must
     be bit-stable across runs AND engines. One walk starts at every
@@ -1105,7 +1054,7 @@ def rotor_walks(
     keys on both engines); the DuckDB twin unrolls one next-hop CTE +
     one hop CTE per step (device 7).
     """
-    sym = loop_frame(_undirected_edges(edges, u, v))
+    sym = loop_frame(_undirected_edges(edges, "u", "v"))
     verts = sym.select(F.col("_u").alias("_id")).distinct()
     walks = verts.select(
         F.col("_id").alias("_start"), F.col("_id").alias("_cur")
@@ -1113,7 +1062,7 @@ def rotor_walks(
     out = walks.select(
         "_start", F.lit(0).cast("long").alias("step"), F.col("_cur")
     )
-    for t in range(1, steps + 1):
+    for t in range(1, ROTOR_STEPS + 1):
         key = F.md5(
             F.concat_ws(
                 ":",
@@ -1138,15 +1087,10 @@ def rotor_walks(
     )
 
 
-def spectral_coordinate(
-    edges: DataFrame,
-    rounds: int = 8,
-    u: str = "u",
-    v: str = "v",
-) -> DataFrame:
+def spectral_coordinate(edges: DataFrame) -> DataFrame:
     """Deterministic spectral-bipartition coordinate by centered power
     iteration on the random-walk matrix P = D⁻¹A: iterate
-    x ← snap(center(P·x)) / ∞-norm, ``rounds`` fixed times, from an
+    x ← snap(center(P·x)) / ∞-norm, ``SPECTRAL_ROUNDS`` fixed times, from an
     md5-derived start vector. The sign of the resulting coordinate is
     the classic spectral graph-partition heuristic (the constant vector
     is P's dominant right eigenvector — P·1 = 1 — so the per-round
@@ -1168,7 +1112,7 @@ def spectral_coordinate(
     rounding stage."""
     from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 
-    directed = loop_frame(_both_directions(edges, u, v))
+    directed = loop_frame(_both_directions(edges, "u", "v"))
     h = F.conv(
         F.substring(F.md5(F.col("id").cast("string")), 1, 15), 16, 10
     ).cast("long")
@@ -1177,7 +1121,7 @@ def spectral_coordinate(
         .distinct()
         .select("id", round_det((h % 2001 - 1000) / F.lit(1000.0), 9).alias("x")),
     )
-    for _ in range(rounds):
+    for _ in range(SPECTRAL_ROUNDS):
         # P·x at i = (Σ_{j~i} x_j) / d_i; each dst appears exactly
         # d_dst times in the symmetrized edge list, so the neighbor
         # AVERAGE (sum/count) is the random-walk step — no degree
@@ -1218,11 +1162,7 @@ def spectral_coordinate(
 
 
 def bellman_ford_distances(
-    edges: DataFrame,
-    rounds: int = 6,
-    u: str = "u",
-    v: str = "v",
-    w: str = "w",
+    edges: DataFrame, rounds: int = BELLMAN_FORD_ROUNDS
 ) -> DataFrame:
     """Single-source WEIGHTED shortest-path distances by fixed-round
     Bellman-Ford relaxation (min-plus) over an undirected weighted edge
@@ -1241,15 +1181,15 @@ def bellman_ford_distances(
     no non-self-loop edge has no source and returns no rows."""
     sym = (
         edges.select(
-            F.col(u).cast("long").alias("_u"),
-            F.col(v).cast("long").alias("_v"),
-            F.col(w).cast("long").alias("_w"),
+            F.col("u").cast("long").alias("_u"),
+            F.col("v").cast("long").alias("_v"),
+            F.col("w").cast("long").alias("_w"),
         )
         .unionByName(
             edges.select(
-                F.col(v).cast("long").alias("_u"),
-                F.col(u).cast("long").alias("_v"),
-                F.col(w).cast("long").alias("_w"),
+                F.col("v").cast("long").alias("_u"),
+                F.col("u").cast("long").alias("_v"),
+                F.col("w").cast("long").alias("_w"),
             )
         )
         .filter(F.col("_u") != F.col("_v"))

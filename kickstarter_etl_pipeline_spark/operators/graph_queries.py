@@ -4,6 +4,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from kickstarter_etl_pipeline_spark.constants import (
+    GRAPH_PIVOTS,
+    GRAPH_PIVOT_ROUNDS,
+    OCCUPANCY_CAP,
+    WEDGE_DEGREE_CAP,
+)
 from kickstarter_etl_pipeline_spark.operators import events as EV
 from kickstarter_etl_pipeline_spark.operators.partitioning import loop_frame
 from kickstarter_etl_pipeline_spark.operators.ranking import collected_offsets
@@ -19,8 +25,8 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kickstarter_etl_pipeline_spark.operators.graph import cooccurrence_edges, pagerank
 
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
-    edges = cooccurrence_edges(ev, event_type="error", bucket_seconds=1800)
-    return pagerank(edges, iterations=10).select(
+    edges = cooccurrence_edges(ev, bucket_seconds=1800)
+    return pagerank(edges).select(
         F.col("id").alias("user_id"), "pr_permille"
     )
 
@@ -35,8 +41,8 @@ def q_graph_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
-    edges = cooccurrence_edges(ev, event_type="error", bucket_seconds=1800)
-    return label_propagation(edges, iterations=5).select(
+    edges = cooccurrence_edges(ev, bucket_seconds=1800)
+    return label_propagation(edges).select(
         F.col("id").alias("user_id"), "community", "n_members"
     )
 
@@ -55,8 +61,8 @@ def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
-    edges = cooccurrence_edges(ev, event_type="error", bucket_seconds=1800)
-    return personalized_pagerank(edges, iterations=8).select(
+    edges = cooccurrence_edges(ev, bucket_seconds=1800)
+    return personalized_pagerank(edges).select(
         F.col("id").alias("user_id"), "ppr_permille"
     )
 
@@ -75,8 +81,8 @@ def q_graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
-    edges = cooccurrence_edges(ev, event_type="error", bucket_seconds=1800)
-    return ktruss(edges, k=4, rounds=4).select(
+    edges = cooccurrence_edges(ev, bucket_seconds=1800)
+    return ktruss(edges).select(
         F.col("u").alias("user_u"), F.col("v").alias("user_v"), "support"
     )
 
@@ -100,8 +106,8 @@ def q_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
-    edges = loop_frame(cooccurrence_edges(ev, event_type="error", bucket_seconds=1800))
-    lab = label_propagation(edges, iterations=5).select("id", "community")
+    edges = loop_frame(cooccurrence_edges(ev, bucket_seconds=1800))
+    lab = label_propagation(edges).select("id", "community")
     m_df = F.broadcast(edges.agg(F.count("*").cast("long").alias("_m")))
     deg = degree_table(edges)
     dc = (
@@ -159,7 +165,7 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = orders.join(li, orders.o_orderkey == li.l_orderkey).select(
         F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s")
     )
-    return hits(edges, iterations=4)
+    return hits(edges)
 
 
 def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -177,8 +183,8 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
-    edges = cooccurrence_edges(ev, event_type="error", bucket_seconds=600)
-    return kcore(edges, k=4, rounds=6).select(
+    edges = cooccurrence_edges(ev, bucket_seconds=600)
+    return kcore(edges).select(
         F.col("id").alias("user_id"), "core_degree"
     )
 
@@ -198,8 +204,8 @@ def q_graph_bfs_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
-    edges = cooccurrence_edges(ev, event_type="error", bucket_seconds=600)
-    return bfs_depths(edges, rounds=8).select(
+    edges = cooccurrence_edges(ev, bucket_seconds=600)
+    return bfs_depths(edges).select(
         F.col("id").alias("user_id"), "depth"
     )
 
@@ -221,8 +227,8 @@ def q_graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
-    edges = cooccurrence_edges(ev, event_type="error", bucket_seconds=600)
-    hc = harmonic_centrality(edges, pivots=8, rounds=6)
+    edges = cooccurrence_edges(ev, bucket_seconds=600)
+    hc = harmonic_centrality(edges)
     return hc.select(
         F.col("id").alias("user_id"),
         "n_pivots_reached",
@@ -245,8 +251,8 @@ def q_graph_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
-    edges = cooccurrence_edges(ev, event_type="error", bucket_seconds=600)
-    bc = betweenness_sampled(edges, pivots=8, rounds=6)
+    edges = cooccurrence_edges(ev, bucket_seconds=600)
+    bc = betweenness_sampled(edges)
     return bc.select(
         F.col("id").alias("user_id"),
         "sigma_total",
@@ -271,8 +277,8 @@ def q_graph_rotor_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
-    edges = cooccurrence_edges(ev, event_type="error", bucket_seconds=600)
-    w = rotor_walks(edges, steps=4)
+    edges = cooccurrence_edges(ev, bucket_seconds=600)
+    w = rotor_walks(edges)
     return w.select(
         F.col("start_id").alias("start_user_id"), "step", F.col("id").alias("user_id")
     )
@@ -294,8 +300,8 @@ def q_graph_distance_distribution(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
-    edges = cooccurrence_edges(ev, event_type="error", bucket_seconds=600)
-    _, visited = _multi_source_bfs(edges, pivots=8, rounds=6)
+    edges = cooccurrence_edges(ev, bucket_seconds=600)
+    _, visited = _multi_source_bfs(edges, GRAPH_PIVOTS, GRAPH_PIVOT_ROUNDS)
     per_depth = visited.groupBy("depth").agg(
         F.count("*").cast("long").alias("n_pairs")
     )
@@ -337,8 +343,8 @@ def q_walk_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
-    edges = cooccurrence_edges(ev, event_type="error", bucket_seconds=600)
-    w = rotor_walks(edges, steps=4)
+    edges = cooccurrence_edges(ev, bucket_seconds=600)
+    w = rotor_walks(edges)
     a = w.select(
         F.col("start_id").alias("_s"), F.col("step").alias("_i"), F.col("id").alias("center_id")
     )
@@ -370,8 +376,8 @@ def q_graph_spectral_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
-    edges = cooccurrence_edges(ev, event_type="error", bucket_seconds=600)
-    return spectral_coordinate(edges, rounds=8).select(
+    edges = cooccurrence_edges(ev, bucket_seconds=600)
+    return spectral_coordinate(edges).select(
         F.col("id").alias("user_id"), "spectral_x", "side"
     )
 
@@ -396,7 +402,7 @@ def q_graph_weighted_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is keyed by (_bucket, _sub) so per-key fan-out is hard-bounded
     # at C(OCCUPANCY_CAP, 2); _cnt counts shared (bucket, sub) keys —
     # identical to shared buckets at any occupancy ≤ cap
-    nodes = cooccurrence_nodes(ev, event_type="error", bucket_seconds=600)
+    nodes = cooccurrence_nodes(ev, bucket_seconds=600)
     a = nodes.select("_bucket", "_sub", F.col("user_id").alias("u"))
     b = nodes.select("_bucket", "_sub", F.col("user_id").alias("v"))
     pairs = (
@@ -410,7 +416,7 @@ def q_graph_weighted_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.lit(10000) - F.lit(10000) % F.col("_cnt")) / F.col("_cnt")).cast("long"),
     )
     wedges = pairs.select("u", "v", wexpr.alias("w"))
-    return bellman_ford_distances(wedges, rounds=6).select(
+    return bellman_ford_distances(wedges).select(
         F.col("id").alias("user_id"), "dist"
     )
 
@@ -502,7 +508,7 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kickstarter_etl_pipeline_spark.operators.graph import cooccurrence_edges, degree_table
 
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
-    edges = cooccurrence_edges(ev, event_type="error", bucket_seconds=1800)
+    edges = cooccurrence_edges(ev, bucket_seconds=1800)
     deg = degree_table(edges)
     sym = edges.select(F.col("u").alias("_a"), F.col("v").alias("_b")).unionAll(
         edges.select(F.col("v").alias("_a"), F.col("u").alias("_b"))
@@ -555,13 +561,12 @@ def q_adamic_adar_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf0.1) it is inert. The anti-join removes existing edges; the
     report is a TakeOrdered."""
     from kickstarter_etl_pipeline_spark.operators.graph import (
-        WEDGE_DEGREE_CAP,
         cooccurrence_edges,
         degree_table,
     )
 
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
-    edges = cooccurrence_edges(ev, event_type="error", bucket_seconds=600)
+    edges = cooccurrence_edges(ev, bucket_seconds=600)
     deg = degree_table(edges)
     adj = edges.select(F.col("u").alias("_a"), F.col("v").alias("_n")).unionAll(
         edges.select(F.col("v").alias("_a"), F.col("u").alias("_n"))
@@ -626,7 +631,7 @@ def q_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kickstarter_etl_pipeline_spark.operators.graph import cooccurrence_edges, degree_table
 
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
-    edges = cooccurrence_edges(ev, event_type="error", bucket_seconds=1800)
+    edges = cooccurrence_edges(ev, bucket_seconds=1800)
     deg = degree_table(edges)
     return (
         deg.select(
@@ -662,8 +667,6 @@ def q_cooccurrence_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-keyed count (uniform key, no fan-out: this audit never
     builds pairs, so it is safe to run at ANY occupancy — including
     the storms the cap exists for) → single-row rollup."""
-    from kickstarter_etl_pipeline_spark.operators.graph import OCCUPANCY_CAP
-
     cap = OCCUPANCY_CAP
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
     nodes = (

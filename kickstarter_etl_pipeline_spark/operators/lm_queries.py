@@ -11,7 +11,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from kickstarter_etl_pipeline_spark.constants import BENFORD_P, RAKE_STOPWORDS
+from kickstarter_etl_pipeline_spark.constants import (
+    BENFORD_P,
+    BT_ROUNDS,
+    RAKE_STOPWORDS,
+)
 from kickstarter_etl_pipeline_spark.operators import text as TX
 from kickstarter_etl_pipeline_spark.operators.ranking import (
     bigint,
@@ -1038,7 +1042,7 @@ def q_media_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    frames = sample_frames(documents_as_media(docs), every_n_bytes=64, max_frames=8)
+    frames = sample_frames(documents_as_media(docs))
     return frames.groupBy("media_id").agg(
         F.count("*").cast("long").alias("n_frames"),
         F.sum(F.length("frame_payload")).cast("long").alias("total_frame_bytes"),
@@ -1623,7 +1627,7 @@ def q_frame_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    frames = sample_frames(documents_as_media(docs), every_n_bytes=64, max_frames=8)
+    frames = sample_frames(documents_as_media(docs))
     return (
         frames.groupBy("frame_md5")
         .agg(
@@ -1668,14 +1672,14 @@ def q_image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decode_image_stats(documents_as_ppm_images(docs))
 
 
-def _bt_contests_and_fit(spark: SparkSession, sf_dir: str, rounds: int = 8):
+def _bt_contests_and_fit(spark: SparkSession, sf_dir: str):
     """Shared Bradley-Terry machinery (the q_preference_bt_strengths
     derivation, verbatim — extracted so the composed
     q_preference_dataset_manifest reuses the IDENTICAL contest build
     and MM fit the way curation_pack_manifest reuses clean_corpus).
     Returns (lagd contests frame with user_id/event_id for split keys,
     games symmetric game counts, wins per-type win totals, s fitted
-    integer-micro strengths after ``rounds``).
+    integer-micro strengths after ``BT_ROUNDS``).
 
     The ≤ T² winner/loser cells are collected once (``collect_control``);
     games, wins and the MM rounds are Python ints on the driver, every
@@ -1715,7 +1719,7 @@ def _bt_contests_and_fit(spark: SparkSession, sf_dir: str, rounds: int = 8):
         wins.setdefault(lose, 0)
     ns = len(wins)  # the types: every type in some contest
     s = dict.fromkeys(wins, 1_000_000)
-    for _ in range(rounds):
+    for _ in range(BT_ROUNDS):
         d = {}
         for (i, j), g in games.items():
             d[i] = bigint(d.get(i, 0) + bigint(g * 10**12) // bigint(s[i] + s[j]))

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from kickstarter_etl_pipeline_spark.constants import BPE_ROUNDS
 from kickstarter_etl_pipeline_spark.operators import events as EV
 from kickstarter_etl_pipeline_spark.operators import text as TX
 from kickstarter_etl_pipeline_spark.operators.ranking import (
@@ -30,7 +31,7 @@ def q_duplicate_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction of gram positions occurring >1 time in the corpus."""
     from kickstarter_etl_pipeline_spark.operators.dedup import duplicate_ngram_span_stats
 
-    return duplicate_ngram_span_stats(load_table(spark, sf_dir, "documents"), n=8)
+    return duplicate_ngram_span_stats(load_table(spark, sf_dir, "documents"))
 
 
 def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -122,7 +123,7 @@ def q_quality_percentile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
-        "doc_id", "source", TX.quality_score("text").alias("quality")
+        "doc_id", "source", TX.quality_score().alias("quality")
     )
     ranked = grouped_two_phase_rank(
         scored, ["source"], [F.desc("quality"), F.asc("doc_id")], n_col="_n"
@@ -185,8 +186,8 @@ def q_graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
-    edges = cooccurrence_edges(ev, event_type="error", bucket_seconds=600)
-    preds = common_neighbor_link_prediction(edges, min_common=2)
+    edges = cooccurrence_edges(ev, bucket_seconds=600)
+    preds = common_neighbor_link_prediction(edges)
     # top-100 by (score, u, v): the candidate table is corpus-sized at
     # scale (677k pairs at sf0.1) — a TakeOrdered bounds the report
     # without a density-sensitive score floor (which empties as the
@@ -206,7 +207,7 @@ def q_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kickstarter_etl_pipeline_spark.operators.dedup import minhash_md5_estimate_vs_exact
 
     return minhash_md5_estimate_vs_exact(
-        load_table(spark, sf_dir, "documents"), num_hashes=16, candidate_threshold=0.3
+        load_table(spark, sf_dir, "documents")
     )
 
 
@@ -385,7 +386,7 @@ def q_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return mmr_diversified_topk(emb, query_anchors(emb, 20), k=5, pool=20)
+    return mmr_diversified_topk(emb, query_anchors(emb, 20))
 
 
 def q_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -440,7 +441,7 @@ def _bpe_apply_merge(seq, lhs: str, rhs: str):
     )
 
 
-def _bpe_fit(spark: SparkSession, sf_dir: str, rounds: int = 8):
+def _bpe_fit(spark: SparkSession, sf_dir: str):
     """Shared BPE training loop (Sennrich et al. 2016) — extracted so
     the composed q_bpe_tokenized_stats reuses the IDENTICAL fit the
     way curation_pack_manifest reuses clean_corpus. Returns
@@ -473,7 +474,7 @@ def _bpe_fit(spark: SparkSession, sf_dir: str, rounds: int = 8):
         .localCheckpoint(eager=True)
     )
     merges: list[tuple] = []
-    for r in range(1, rounds + 1):
+    for r in range(1, BPE_ROUNDS + 1):
         pairs = vocab.select(
             "freq",
             F.explode(
@@ -516,7 +517,7 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     total symbol count AFTER applying the rule). `symbols_after`
     forces the oracle to replay the merge APPLICATIONS exactly, not
     just the selections."""
-    _, merges = _bpe_fit(spark, sf_dir, rounds=8)
+    _, merges = _bpe_fit(spark, sf_dir)
     return spark.createDataFrame(
         merges,
         "merge_rank int, lhs string, rhs string, merged string,"
@@ -540,7 +541,7 @@ def q_bpe_tokenized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the vocab, one map-side-combined aggregate on the enumeration-
     bounded (lang, source) grid. Exact-BIGINT ratios via the micro
     grid (the BT-MM discipline)."""
-    vocab, _ = _bpe_fit(spark, sf_dir, rounds=8)
+    vocab, _ = _bpe_fit(spark, sf_dir)
     lut = F.broadcast(
         vocab.select(
             "w", F.size(F.split("seq", " ")).cast("long").alias("n_toks")
@@ -586,7 +587,7 @@ def q_bpe_pack_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-join + a map-side-combined per-doc sum; packing is one
     shuffle on the shard key + an in-shard running sum (shards are
     the parallelism unit, as in pack_sequences)."""
-    vocab, _ = _bpe_fit(spark, sf_dir, rounds=8)
+    vocab, _ = _bpe_fit(spark, sf_dir)
     lut = F.broadcast(
         vocab.select("w", F.size(F.split("seq", " ")).cast("long").alias("_bt"))
     )

@@ -21,24 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-#: Canonical multimodal record schema: payload + typed metadata.
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("mime", T.StringType()),
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("duration_ms", T.LongType()),
-                ]
-            ),
-        ),
-    ]
-)
+#: Byte stride between sampled frames.
+FRAME_STRIDE_BYTES = 64
 
 FEATURE_SCHEMA = T.StructType(
     [
@@ -243,15 +227,15 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def sample_frames(media: DataFrame, every_n_bytes: int = 64, max_frames: int = 8) -> DataFrame:
-    """Frame sampling: explode each payload into up to ``max_frames``
+def sample_frames(media: DataFrame) -> DataFrame:
+    """Frame sampling: explode each payload into up to 8
     evenly-spaced chunks — the video/audio frame-extraction shape
     (1 input row → N output rows through a single mapInPandas pass).
 
     The chunker is the deterministic stand-in for a real ffmpeg
     keyframe/stride sampler (no media libs in this environment); the
     production swap happens inside the same batch loop with identical
-    schema and fan-out behavior. Fan-out is bounded (``max_frames``) so
+    schema and fan-out behavior. Fan-out is bounded (8 per payload) so
     output size stays a constant factor of input — the property that
     keeps the operator safe at 100 TB.
     """
@@ -261,9 +245,9 @@ def sample_frames(media: DataFrame, every_n_bytes: int = 64, max_frames: int = 8
             out_ids, out_idx, out_payload, out_md5 = [], [], [], []
             for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
                 raw = bytes(payload)
-                n_frames = min(max_frames, max(1, len(raw) // every_n_bytes))
+                n_frames = min(8, max(1, len(raw) // FRAME_STRIDE_BYTES))
                 for i in range(n_frames):
-                    chunk = raw[i * every_n_bytes : (i + 1) * every_n_bytes]
+                    chunk = raw[i * FRAME_STRIDE_BYTES : (i + 1) * FRAME_STRIDE_BYTES]
                     out_ids.append(media_id)
                     out_idx.append(i)
                     out_payload.append(chunk)

@@ -12,9 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def ensure_min_partitions(
-    df: DataFrame, min_partitions: int | None = None, barrier: bool = True
-) -> DataFrame:
+def ensure_min_partitions(df: DataFrame, barrier: bool = True) -> DataFrame:
     """Repartition only if the plan currently has fewer partitions.
 
     With ``barrier=True`` the repartition is followed by an eager
@@ -41,7 +39,7 @@ def ensure_min_partitions(
     On already-parallel input — any real-scale table — this is a no-op.
     """
     spark = df.sparkSession
-    target = min_partitions or spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         out = df.repartition(target)
         return out.localCheckpoint(eager=True) if barrier else out

@@ -20,6 +20,18 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from kickstarter_etl_pipeline_spark.constants import (
+    ANN_K,
+    GRID_SCALE,
+    IVF_CELLS,
+    IVF_CLUSTERS,
+    IVF_ITERS,
+    IVF_N_PROBE,
+    MMR_K,
+    MMR_LAM,
+    MMR_POOL,
+    PCA_ITERS,
+)
 from kickstarter_etl_pipeline_spark.operators.ranking import collect_control
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 
@@ -44,26 +56,20 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
-def query_anchors(emb: DataFrame, n: int, key: str = "vec_id") -> DataFrame:
-    """The first ``n`` corpus vectors (``key < n``) as the query/anchor
+def query_anchors(emb: DataFrame, n: int) -> DataFrame:
+    """The first ``n`` corpus vectors (``vec_id < n``) as the query/anchor
     frame for the ANN/top-k tiers, with a PLAN-PROVABLE hard bound:
-    ``key`` is the table's primary key, so the trailing ``.limit(n)``
+    ``vec_id`` is the table's primary key, so the trailing ``.limit(n)``
     drops nothing — it stamps a ``GlobalLimit n`` into the plan that
     the scale advisor (plans.inspect._one_row_subtree) can prove bounds
     the broadcast side of the downstream anchor crossJoin, and that
     HARD-caps the broadcast at runtime even against a pathological
     input where the key filter alone would not (r13 ADVICE: a bare
     ``limit`` is only as bounded as its literal)."""
-    return emb.filter(F.col(key) < n).limit(n)
+    return emb.filter(F.col("vec_id") < n).limit(n)
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact cosine top-k neighbors for each query vector.
 
     Broadcast the (small) query set against the corpus; rank on the
@@ -75,12 +81,12 @@ def brute_force_topk(
     # Norms are precomputed per row — computing them inside the pair
     # scoring would redo each row's norm once per counterpart.
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qvec"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("_qvec"),
     ).withColumn("_qnorm", norm(F.col("_qvec")))
     c = ensure_min_partitions(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cvec"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("_cvec"),
     ).withColumn("_cnorm", norm(F.col("_cvec")))
     # r15 probe (plans/r15/ab_vector.py): the Arrow dot kernel was
     # interleave-A/B'd here and REVERTED — at bench scale the pair scan
@@ -227,12 +233,10 @@ def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     dim: int,
-    k: int = 5,
+    k: int = ANN_K,
     num_planes: int = 8,
     num_tables: int = 1,
     n_probe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: exact cosine, but only within the query's LSH
     bucket(s). At 100 TB the bucket join replaces the full cross
@@ -257,7 +261,7 @@ def lsh_topk(
     c = with_lsh_probe_keys(
         ensure_min_partitions(
             corpus.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvec")
+                F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_cvec")
             ),
             barrier=False,
         ).withColumn("_cnorm", norm(F.col("_cvec"))),
@@ -269,7 +273,7 @@ def lsh_topk(
     )
     q = with_lsh_probe_keys(
         queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qvec")
         ).withColumn("_qnorm", norm(F.col("_qvec"))),
         "_qvec",
         dim,
@@ -304,9 +308,7 @@ def lsh_topk(
     )
 
 
-def quantization_profile(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def quantization_profile(df: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 quantization profile — the storage
     planning pass for an embedding corpus (int8 cuts an ANN index to a
     quarter of float32; this measures what that costs per vector).
@@ -324,8 +326,8 @@ def quantization_profile(
     staged = (
         ensure_min_partitions(df)
         .select(
-            F.col(id_col),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
+            F.col("vec_id"),
+            F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("_v"),
         )
         .withColumn("_scale", F.array_max(F.transform(F.col("_v"), lambda x: F.abs(x))))
     )
@@ -338,7 +340,7 @@ def quantization_profile(
         F.zip_with(F.col("_q"), F.col("_v"), lambda qq, x: F.abs(qq * F.col("_scale") / 127 - x))
     )
     return staged.select(
-        id_col,
+        "vec_id",
         round_det(F.col("_scale"), 6).alias("scale_q"),
         F.aggregate(F.col("_q"), F.lit(0).cast("long"), lambda a, b: a + b).alias("q_sum"),
         round_det(F.when(F.col("_scale") == 0, F.lit(0.0)).otherwise(err), 6).alias(
@@ -347,36 +349,28 @@ def quantization_profile(
     )
 
 
-def ivf_anchor_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_anchor_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """IVF ANN with DETERMINISTIC anchor centroids — the untrained
     sibling of :func:`ivf_lloyd_topk`.
 
     Instead of a k-means training pass, the cell "centroids" are the
-    ``n_cells`` corpus vectors with the lexically-smallest
+    ``IVF_CELLS`` corpus vectors with the lexically-smallest
     ``md5(cast(id as string))`` — a deterministic uniform sample of the
     corpus (md5 is an unbiased order scrambler), so the whole index
     build is replayable by any engine with md5: no RNG, no iterative
     fit, no driver-side model state. Every corpus vector joins the cell
     of its nearest anchor (squared-L2, anchor-rank tie-break); each
-    query probes its ``n_probe`` nearest cells and exact rounded-cosine
+    query probes its ``IVF_N_PROBE`` nearest cells and exact rounded-cosine
     re-ranks the candidates.
 
-    Scale posture (100 TB): anchor selection is a top-``n_cells``
+    Scale posture (100 TB): anchor selection is a top-``IVF_CELLS``
     aggregate (tiny result, one pass); the anchor matrix rides as a
     ONE-ROW broadcast frame (same plan-size reasoning as
     with_lsh_probe_keys' plane matrix); assignment is per-row mul-adds
     with no shuffle; the probe join is an equi-join on the cell id, so
     shuffle volume is O(corpus) — never a scan per query. Trade-off vs
     trained k-means: cells are Voronoi around random corpus points, so
-    occupancy is less balanced (mitigate with a larger ``n_cells``),
+    occupancy is less balanced (mitigate with a larger ``IVF_CELLS``),
     in exchange for a reproducible, SQL-checkable index.
     """
     from kickstarter_etl_pipeline_spark.operators.partitioning import ensure_min_partitions
@@ -386,12 +380,12 @@ def ivf_anchor_topk(
     # of control data, same posture as ivf_lloyd_topk's driver-side centroids.
     anchor_rows = (
         corpus.select(
-            F.md5(F.col(id_col).cast("string")).alias("_h"),
-            F.col(id_col).alias("_aid"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_av"),
+            F.md5(F.col("vec_id").cast("string")).alias("_h"),
+            F.col("vec_id").alias("_aid"),
+            F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("_av"),
         )
         .orderBy("_h", "_aid")
-        .limit(n_cells)
+        .limit(IVF_CELLS)
         .collect()
     )
     anchor_mat = [list(r["_av"]) for r in anchor_rows]
@@ -424,17 +418,17 @@ def ivf_anchor_topk(
 
     c = _with_cells(
         ensure_min_partitions(
-            corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvec")),
+            corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_cvec")),
             barrier=False,
         ).withColumn("_cnorm", norm(F.col("_cvec"))),
         "_cvec",
         probes=1,
     )
     q = _with_cells(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec"))
+        queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qvec"))
         .withColumn("_qnorm", norm(F.col("_qvec"))),
         "_qvec",
-        probes=n_probe,
+        probes=IVF_N_PROBE,
     )
     scored = (
         c.join(F.broadcast(q), on="_cell")
@@ -456,22 +450,12 @@ def ivf_anchor_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= ANN_K)
         .select("query_id", "neighbor_id", "cosine_sim", "rank")
     )
 
 
-def ivf_lloyd_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_clusters: int = 8,
-    n_probe: int = 4,
-    n_iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 1_000_000,
-) -> DataFrame:
+def ivf_lloyd_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """IVF ANN over a TRAINED k-means index whose training is fully
     deterministic and SQL-replayable — the round-8 replacement for the
     seeded ``pyspark.ml`` fit that kept ``ann_ivf_topk`` rows-only.
@@ -481,10 +465,10 @@ def ivf_lloyd_topk(
 
     - vectors are snapped once to a 1e-6 grid (``floor(x·1e6 + 0.5)``
       as BIGINT — the module's round-before-compare discipline);
-    - init: centroids = the ``n_clusters`` corpus vectors with the
+    - init: centroids = the ``IVF_CLUSTERS`` corpus vectors with the
       lexically-smallest ``(md5(id), id)`` (the ivf_anchor_topk
       device — an unbiased deterministic sample);
-    - each of ``n_iters`` Lloyd steps assigns every vector to its
+    - each of ``IVF_ITERS`` Lloyd steps assigns every vector to its
       nearest centroid by EXACT integer squared-L2 (cell-index
       tie-break) and recomputes each centroid dimension-wise as
       ``floor(Σx / n)`` — integer sums are order-independent, so the
@@ -497,7 +481,7 @@ def ivf_lloyd_topk(
     Candidate generation (n_probe nearest cells) and the exact
     rounded-cosine re-rank over the ORIGINAL float vectors mirror
     :func:`ivf_anchor_topk` verbatim. The DuckDB twin unrolls the
-    ``n_iters`` assignment/update rounds as CTEs — the same device as
+    ``IVF_ITERS`` assignment/update rounds as CTEs — the same device as
     the PageRank/LPA/MMR oracles.
 
     Scale posture (100 TB): each Lloyd step is one corpus map
@@ -512,13 +496,13 @@ def ivf_lloyd_topk(
     from kickstarter_etl_pipeline_spark.operators.partitioning import ensure_min_partitions
 
     int_vec = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * scale + F.lit(0.5)).cast("long"),
+        F.col("embedding"),
+        lambda x: F.floor(x.cast("double") * GRID_SCALE + F.lit(0.5)).cast("long"),
     )
     base = ensure_min_partitions(
         corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_cvec"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("_cvec"),
             int_vec.alias("_iv"),
         ),
         barrier=False,
@@ -531,7 +515,7 @@ def ivf_lloyd_topk(
             "_iv",
         )
         .orderBy("_h", "neighbor_id")
-        .limit(n_clusters)
+        .limit(IVF_CLUSTERS)
         .collect()
     )
     centroids = [list(r["_iv"]) for r in init_rows]
@@ -568,7 +552,7 @@ def ivf_lloyd_topk(
     # size (the collect funnels the same rows to the driver anyway).
     # A repartition-before-groupBy would instead ship the RAW exploded
     # rows — losing the combine that makes this loop corpus-scale-safe.
-    for _ in range(n_iters):
+    for _ in range(IVF_ITERS):
         stats = (
             _assign(base, centroids)
             .select("_cell", F.posexplode("_iv").alias("_d", "_x"))
@@ -590,8 +574,8 @@ def ivf_lloyd_topk(
     cass = _assign(base, centroids).withColumn("_cnorm", norm(F.col("_cvec")))
     q = (
         queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("_qvec"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("_qvec"),
             int_vec.alias("_qiv"),
         )
         .withColumn("_qnorm", norm(F.col("_qvec")))
@@ -600,7 +584,7 @@ def ivf_lloyd_topk(
             # explode(slice(array_sort(_cd), 1, n_probe).c) on a null
             # distance array.
             "_cell",
-            F.explode(probe_cells_int(centroids, n_probe)(F.col("_qiv"))),
+            F.explode(probe_cells_int(centroids, IVF_N_PROBE)(F.col("_qiv"))),
         )
         .drop("_qiv")
     )
@@ -625,7 +609,7 @@ def ivf_lloyd_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= ANN_K)
         .select("query_id", "neighbor_id", "cosine_sim", "rank")
     )
 
@@ -650,13 +634,7 @@ def _pca_projection(w: "list[float]") -> Column:
     )
 
 
-def pca_top_component(
-    corpus: DataFrame,
-    n_iters: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 1_000_000,
-) -> DataFrame:
+def pca_top_component(corpus: DataFrame, n_iters: int = PCA_ITERS) -> DataFrame:
     """Top principal component of an embedding corpus by power
     iteration — the embedding-drift / whitening / anisotropy monitor an
     LM-data pipeline runs over its vector tables — made bit-deterministic
@@ -693,11 +671,11 @@ def pca_top_component(
     from kickstarter_etl_pipeline_spark.operators.partitioning import ensure_min_partitions
 
     int_vec = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * scale + F.lit(0.5)).cast("long"),
+        F.col("embedding"),
+        lambda x: F.floor(x.cast("double") * GRID_SCALE + F.lit(0.5)).cast("long"),
     )
     base = ensure_min_partitions(
-        corpus.select(F.col(id_col).alias("_id"), int_vec.alias("_iv")), barrier=False
+        corpus.select(F.col("vec_id").alias("_id"), int_vec.alias("_iv")), barrier=False
     ).localCheckpoint(eager=True)
 
     spark = corpus.sparkSession
@@ -777,8 +755,6 @@ def semantic_dedup(
     corpus: DataFrame,
     threshold: float = 0.9,
     n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup: embedding-space semantic deduplication (Abbas et al.
     2023, arXiv:2303.09540) — cluster the corpus, then inside each
@@ -806,9 +782,9 @@ def semantic_dedup(
 
     anchor_rows = (
         corpus.select(
-            F.md5(F.col(id_col).cast("string")).alias("_h"),
-            F.col(id_col).alias("_aid"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_av"),
+            F.md5(F.col("vec_id").cast("string")).alias("_h"),
+            F.col("vec_id").alias("_aid"),
+            F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("_av"),
         )
         .orderBy("_h", "_aid")
         .limit(n_cells)
@@ -830,7 +806,7 @@ def semantic_dedup(
     )
 
     assigned = ensure_min_partitions(
-        corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")),
+        corpus.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_vec")),
         barrier=False,
     ).withColumn("cell", assign_cell_nano(anchor_mat)(F.col("_vec")))
     # Both pair-scan sides read the assignment; checkpoint so the
@@ -864,7 +840,7 @@ def semantic_dedup(
     return (
         assigned.join(dup_counts, assigned._id == dup_counts.id_b, "left")
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("vec_id"),
             "cell",
             F.coalesce(F.col("_n_near"), F.lit(0)).cast("long").alias("n_near_dups"),
             F.when(F.col("_n_near").isNull(), 1).otherwise(0).cast("int").alias("is_kept"),
@@ -872,14 +848,7 @@ def semantic_dedup(
     )
 
 
-def quantized_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    shortlist: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def quantized_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """SQ8 ANN: int8-quantized scan + exact float rescore — the
     production "scalar quantization + rescoring" retrieval pattern
     (a quarter of float32 memory traffic on the scan, full precision
@@ -907,8 +876,8 @@ def quantized_topk(
     from kickstarter_etl_pipeline_spark.operators.partitioning import ensure_min_partitions
 
     def _quantize(df: DataFrame, prefix: str) -> DataFrame:
-        v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        staged = df.select(F.col(id_col).alias(f"{prefix}_id"), v.alias("_v"))
+        v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+        staged = df.select(F.col("vec_id").alias(f"{prefix}_id"), v.alias("_v"))
         scale = F.array_max(F.transform(F.col("_v"), lambda x: F.abs(x)))
         staged = staged.withColumn("_scale", scale)
         q = F.transform(
@@ -953,13 +922,13 @@ def quantized_topk(
     w_short = Window.partitionBy("query_id").orderBy(F.desc("approx_sim"), F.asc("neighbor_id"))
     shortlisted = (
         scored.withColumn("_srank", F.row_number().over(w_short))
-        .filter(F.col("_srank") <= shortlist)
+        .filter(F.col("_srank") <= 20)
         .withColumn("cosine_sim", F.round(cosine(F.col("q_v"), F.col("c_v")), 6))
     )
     w_final = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
     return (
         shortlisted.withColumn("rank", F.row_number().over(w_final).cast("int"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .select("query_id", "neighbor_id", "approx_sim", "cosine_sim", "rank")
     )
 
@@ -967,11 +936,9 @@ def quantized_topk(
 def mmr_diversified_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 5,
-    pool: int = 20,
-    lam: float = 0.7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    k: int = MMR_K,
+    pool: int = MMR_POOL,
+    lam: float = MMR_LAM,
 ) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein
     1998): from each query's ``pool``-size exact-cosine candidate set,
@@ -1006,10 +973,10 @@ def mmr_diversified_topk(
     import pandas as pd
     from pyspark.sql import types as T
 
-    cands = brute_force_topk(corpus, queries, k=pool, id_col=id_col, vec_col=vec_col)
+    cands = brute_force_topk(corpus, queries, k=pool)
     vecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("_v"),
     ).withColumn("_nv", norm(F.col("_v")))
     cands = cands.join(vecs, "neighbor_id").select(
         "query_id", "neighbor_id", F.col("cosine_sim").alias("_rel"), "_v", "_nv"

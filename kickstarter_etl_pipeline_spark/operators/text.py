@@ -16,6 +16,9 @@ from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 #: with the DuckDB oracle ledgers).
 from kickstarter_etl_pipeline_spark.constants import LANG_MARKERS
 
+#: Skip-gram co-occurrence window, in tokens on each side.
+SKIPGRAM_WINDOW = 2
+
 
 def let1(bound: Column, body) -> Column:
     """Evaluate ``bound`` ONCE per row and let ``body`` reference it many
@@ -52,10 +55,10 @@ def fingerprint_md5(text: Column | str) -> Column:
     return F.md5(normalized(text))
 
 
-def rolling_hash(text: Column | str, base: int = 31, mod: int = 1_000_000_007) -> Column:
+def rolling_hash(text: Column | str) -> Column:
     """Polynomial rolling hash over the document's characters.
 
-    h = Σ c_i · base^(n−i) mod p, folded left-to-right with a per-step
+    h = Σ c_i · 31^(n−i) mod (10^9 + 7), folded left-to-right with a per-step
     modulo so every intermediate stays < 2^35 (no ANSI overflow). Pure
     higher-order expressions — one pass per document, JVM-side.
     """
@@ -64,12 +67,12 @@ def rolling_hash(text: Column | str, base: int = 31, mod: int = 1_000_000_007) -
     folded = F.aggregate(
         codes,
         F.lit(0).cast("long"),
-        lambda acc, c: (acc * base + c) % mod,
+        lambda acc, c: (acc * 31 + c) % 1_000_000_007,
     )
     return F.when(F.length(col) == 0, F.lit(0).cast("long")).otherwise(folded)
 
 
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_text_stats(df: DataFrame) -> DataFrame:
     """Per-document stats: chars, tokens, distinct tokens, punctuation &
     stopword ratios — the quality-scoring feature vector.
 
@@ -84,13 +87,13 @@ def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     def _stats(toks: Column) -> Column:
         n_tokens = F.size(toks)
         n_stop = F.size(F.filter(toks, lambda t: F.array_contains(en_stop, t)))
-        n_punct = F.length(F.regexp_replace(F.col(text_col), r"[^.,;:!?]", ""))
+        n_punct = F.length(F.regexp_replace(F.col("text"), r"[^.,;:!?]", ""))
         return F.struct(
-            F.length(text_col).cast("long").alias("n_chars_calc"),
+            F.length("text").cast("long").alias("n_chars_calc"),
             n_tokens.cast("long").alias("n_tokens"),
             F.size(F.array_distinct(toks)).cast("long").alias("n_unique_tokens"),
             # nullif guards: ANSI mode (Spark 4 default) errors on x/0.
-            round_det(n_punct / F.nullif(F.length(text_col), F.lit(0)), 6).alias(
+            round_det(n_punct / F.nullif(F.length("text"), F.lit(0)), 6).alias(
                 "punct_ratio"
             ),
             round_det(n_stop / F.nullif(n_tokens, F.lit(0)), 6).alias("stopword_ratio"),
@@ -100,10 +103,10 @@ def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     # through inline() — a 1-element Generate — so neither the split nor
     # the struct is re-evaluated per output column (CollapseProject
     # cannot inline through a Generate). Identical rows/schema.
-    return staged.select("doc_id", F.inline(F.array(let1(tokens(text_col), _stats))))
+    return staged.select("doc_id", F.inline(F.array(let1(tokens("text"), _stats))))
 
 
-def quality_score(text_col: str = "text") -> Column:
+def quality_score() -> Column:
     """Composite 0..1 quality heuristic: length band + lexical diversity −
     punctuation noise. Deterministic, expression-only. Token array bound
     once via let1 (r14) — the split no longer re-runs per reference."""
@@ -112,18 +115,18 @@ def quality_score(text_col: str = "text") -> Column:
         n_tokens = F.size(toks)
         diversity = F.size(F.array_distinct(toks)) / n_tokens
         length_ok = F.when(
-            (F.length(text_col) >= 100) & (F.length(text_col) <= 10000), 1.0
+            (F.length("text") >= 100) & (F.length("text") <= 10000), 1.0
         ).otherwise(0.5)
-        n_punct = F.length(F.regexp_replace(F.col(text_col), r"[^.,;:!?]", ""))
+        n_punct = F.length(F.regexp_replace(F.col("text"), r"[^.,;:!?]", ""))
         punct_penalty = F.least(
-            n_punct / F.greatest(F.length(text_col), F.lit(1)) * 5, F.lit(0.5)
+            n_punct / F.greatest(F.length("text"), F.lit(1)) * 5, F.lit(0.5)
         )
         return round_det(length_ok * (0.5 + 0.5 * diversity) - punct_penalty, 6)
 
-    return let1(tokens(text_col), _score)
+    return let1(tokens("text"), _score)
 
 
-def token_frequency(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def token_frequency(df: DataFrame) -> DataFrame:
     """Corpus-wide token frequency table — the vocabulary-building pass
     of a training-data pipeline (BPE/unigram tokenizer training starts
     from exactly this table).
@@ -136,18 +139,16 @@ def token_frequency(df: DataFrame, text_col: str = "text", id_col: str = "doc_id
 
     tok = (
         ensure_min_partitions(df)
-        .withColumn("_toks", tokens(text_col))
-        .select(F.col(id_col), F.explode("_toks").alias("token"))
+        .withColumn("_toks", tokens("text"))
+        .select(F.col("doc_id"), F.explode("_toks").alias("token"))
     )
     return tok.groupBy("token").agg(
         F.count("*").alias("n_occurrences"),
-        F.count_distinct(id_col).alias("n_docs"),
+        F.count_distinct("doc_id").alias("n_docs"),
     )
 
 
-def tfidf_top_terms(
-    df: DataFrame, k: int = 3, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def tfidf_top_terms(df: DataFrame) -> DataFrame:
     """Per-document top-k terms by TF·IDF — the keyword/topic-surface
     extraction pass.
 
@@ -171,26 +172,26 @@ def tfidf_top_terms(
 
     tok = (
         ensure_min_partitions(df)
-        .withColumn("_toks", tokens(text_col))
-        .select(F.col(id_col), F.explode("_toks").alias("term"))
+        .withColumn("_toks", tokens("text"))
+        .select(F.col("doc_id"), F.explode("_toks").alias("term"))
     )
-    tf = tok.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
+    tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
-    n_docs = df.select(F.count_distinct(id_col).alias("n_corpus"))
+    n_docs = df.select(F.count_distinct("doc_id").alias("n_corpus"))
     scored = (
         tf.join(dfreq, on="term")
         .crossJoin(F.broadcast(n_docs))
         .withColumn("tfidf", round_det(F.col("tf") * F.col("n_corpus") / F.col("df"), 6))
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("tfidf"), F.asc("term"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("term"))
     return (
         scored.withColumn("term_rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("term_rank") <= k)
-        .select(id_col, "term", "tf", "df", "tfidf", "term_rank")
+        .filter(F.col("term_rank") <= 3)
+        .select("doc_id", "term", "tf", "df", "tfidf", "term_rank")
     )
 
 
-def repetition_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Per-document repetition signals (the Gopher-style quality rules):
     most-frequent-token share and 1 − unique/total ratio. High values
     flag boilerplate/spam for the cleaning filter.
@@ -202,11 +203,11 @@ def repetition_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
 
     tok = (
         ensure_min_partitions(df)
-        .withColumn("_toks", tokens(text_col))
-        .select(F.col(id_col), F.explode("_toks").alias("token"))
+        .withColumn("_toks", tokens("text"))
+        .select(F.col("doc_id"), F.explode("_toks").alias("token"))
     )
-    per_token = tok.groupBy(id_col, "token").agg(F.count("*").alias("_tc"))
-    return per_token.groupBy(id_col).agg(
+    per_token = tok.groupBy("doc_id", "token").agg(F.count("*").alias("_tc"))
+    return per_token.groupBy("doc_id").agg(
         F.sum("_tc").cast("long").alias("n_tokens"),
         F.count("*").cast("long").alias("n_unique_tokens"),
         F.max("_tc").cast("long").alias("top_token_count"),
@@ -215,7 +216,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     )
 
 
-def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_lang_id(df: DataFrame) -> DataFrame:
     """Heuristic language ID: CJK character presence, else stopword argmax
     (ties → alphabetical lang order; all-zero → 'und').
 
@@ -237,7 +238,7 @@ def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
         return F.array(*[_hits(LANG_MARKERS[lang]) for lang in langs])
 
     def _pick(sc: Column) -> Column:
-        has_cjk = F.length(F.regexp_replace(F.col(text_col), r"[^一-鿿]", "")) > 0
+        has_cjk = F.length(F.regexp_replace(F.col("text"), r"[^一-鿿]", "")) > 0
         best = F.array_max(sc)
         pred = F.when(has_cjk, F.lit("zh")).when(best == 0, F.lit("und"))
         for i, lang in enumerate(langs):
@@ -245,7 +246,7 @@ def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
         return pred
 
     return df.withColumn(
-        "lang_pred", let1(tokens(text_col), lambda tk: let1(_score_arr(tk), _pick))
+        "lang_pred", let1(tokens("text"), lambda tk: let1(_score_arr(tk), _pick))
     )
 
 
@@ -260,7 +261,7 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
 ]
 
 
-def pii_scrub(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def pii_scrub(df: DataFrame) -> DataFrame:
     """Redact URL / email / phone patterns from a text column — the
     PII-scrubbing pass every training corpus runs before tokenization.
 
@@ -273,25 +274,20 @@ def pii_scrub(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     from kickstarter_etl_pipeline_spark.operators.partitioning import ensure_min_partitions
 
     staged = ensure_min_partitions(df)
-    scrubbed = F.col(text_col)
+    scrubbed = F.col("text")
     counts = {}
     for name, pattern, repl in PII_PATTERNS:
         counts[name] = F.regexp_count(scrubbed, F.lit(pattern))
         scrubbed = F.regexp_replace(scrubbed, pattern, repl)
     return staged.select(
-        id_col,
+        "doc_id",
         *[counts[name].cast("long").alias(f"n_{name}s") for name, _, _ in PII_PATTERNS],
         F.md5(scrubbed).alias("scrubbed_md5"),
         F.length(scrubbed).cast("long").alias("scrubbed_len"),
     )
 
 
-def oov_rate(
-    df: DataFrame,
-    vocab: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def oov_rate(df: DataFrame, vocab: DataFrame) -> DataFrame:
     """Per-document out-of-vocabulary rate against a vocabulary frame
     (one ``token`` column) — the tokenizer-fit metric: how much of each
     document a fixed vocab fails to cover.
@@ -304,15 +300,15 @@ def oov_rate(
 
     tok = (
         ensure_min_partitions(df)
-        .withColumn("_toks", tokens(text_col))
-        .select(F.col(id_col), F.explode("_toks").alias("token"))
+        .withColumn("_toks", tokens("text"))
+        .select(F.col("doc_id"), F.explode("_toks").alias("token"))
     )
     marked = tok.join(
         F.broadcast(vocab.select("token").withColumn("_in_vocab", F.lit(1))),
         on="token",
         how="left",
     )
-    return marked.groupBy(id_col).agg(
+    return marked.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_tokens"),
         F.sum(F.when(F.col("_in_vocab").isNull(), 1).otherwise(0)).cast("long").alias("n_oov"),
         round_det(
@@ -321,9 +317,7 @@ def oov_rate(
     )
 
 
-def unigram_surprisal(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def unigram_surprisal(df: DataFrame) -> DataFrame:
     """Per-document mean unigram surprisal (−ln p(token) under the
     corpus's own unigram LM) and its exp — the CCNet-style
     perplexity-proxy quality filter: word-soup scores low, rare-token
@@ -349,8 +343,8 @@ def unigram_surprisal(
 
     tok = (
         ensure_min_partitions(df)
-        .withColumn("_toks", tokens(text_col))
-        .select(F.col(id_col), F.explode("_toks").alias("token"))
+        .withColumn("_toks", tokens("text"))
+        .select(F.col("doc_id"), F.explode("_toks").alias("token"))
     )
     lm = tok.groupBy("token").agg(F.count("*").alias("_tf"))
     total = lm.agg(F.sum("_tf").cast("double").alias("_total"))
@@ -364,16 +358,14 @@ def unigram_surprisal(
     mean_nats = round_det(
         F.sum("_s9").cast("double") / (F.count("*") * F.lit(1e9)), 6
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_tokens"),
         mean_nats.alias("mean_surprisal_nats"),
         round_det(F.exp(mean_nats), 2).alias("ppl_proxy"),
     )
 
 
-def bigram_collocations(
-    df: DataFrame, top_k: int = 50, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def bigram_collocations(df: DataFrame) -> DataFrame:
     """Top-k adjacent-token bigram collocations with lift.
 
     The classic collocation-extraction pass over a corpus: count every
@@ -389,7 +381,7 @@ def bigram_collocations(
     Two uniform-key shuffles (bigram counts, unigram counts); the
     unigram table broadcasts into the bigram side.
     """
-    staged = df.withColumn("_toks", tokens(text_col))
+    staged = df.withColumn("_toks", tokens("text"))
     bigrams = (
         staged.filter(F.size("_toks") >= 2)
         .select(
@@ -436,17 +428,11 @@ def bigram_collocations(
             ).alias("lift"),
         )
         .orderBy(F.desc("n_pair"), F.asc("tok_a"), F.asc("tok_b"))
-        .limit(top_k)
+        .limit(50)
     )
 
 
-def skipgram_cooccurrence(
-    df: DataFrame,
-    window: int = 2,
-    top_k: int = 100,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def skipgram_cooccurrence(df: DataFrame) -> DataFrame:
     """Skip-gram co-occurrence counts — the (center, context) pair table
     that seeds word2vec/GloVe-style embedding training.
 
@@ -459,8 +445,8 @@ def skipgram_cooccurrence(
     One explode (bounded fan-out ≤ 2·window per token) and one
     uniform-key shuffle for the counts.
     """
-    staged = df.withColumn("_toks", tokens(text_col)).filter(F.size("_toks") >= 2)
-    offsets = [o for o in range(-window, window + 1) if o != 0]
+    staged = df.withColumn("_toks", tokens("text")).filter(F.size("_toks") >= 2)
+    offsets = [o for o in range(-SKIPGRAM_WINDOW, SKIPGRAM_WINDOW + 1) if o != 0]
     pairs = staged.select(
         F.explode(
             F.flatten(
@@ -478,5 +464,5 @@ def skipgram_cooccurrence(
         pairs.groupBy("center", "context")
         .agg(F.count("*").cast("long").alias("n_cooc"))
         .orderBy(F.desc("n_cooc"), F.asc("center"), F.asc("context"))
-        .limit(top_k)
+        .limit(100)
     )

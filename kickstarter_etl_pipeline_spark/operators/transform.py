@@ -39,15 +39,15 @@ FINAL_COLUMNS = [
 ]
 
 
-def parse_event_times(df: DataFrame, launched: str = "launched", deadline: str = "deadline") -> DataFrame:
+def parse_event_times(df: DataFrame) -> DataFrame:
     """F1: string→timestamp for launch/deadline (src/etl_pipeline.py:91-92).
 
     ``launched`` is 'yyyy-MM-dd HH:mm:ss'; ``deadline`` is 'yyyy-MM-dd'.
     Spark's default parser handles both; formats are not pinned so the
     operator also accepts already-typed timestamp columns.
     """
-    return df.withColumn("launched_at", F.to_timestamp(launched)).withColumn(
-        "deadline_at", F.to_timestamp(deadline)
+    return df.withColumn("launched_at", F.to_timestamp("launched")).withColumn(
+        "deadline_at", F.to_timestamp("deadline")
     )
 
 
@@ -66,8 +66,8 @@ def fractional_days(end: Column | str, start: Column | str) -> Column:
     ) / F.lit(86400.0)
 
 
-def with_duration_days(df: DataFrame, end: str = "deadline_at", start: str = "launched_at") -> DataFrame:
-    return df.withColumn("duration_days", fractional_days(end, start))
+def with_duration_days(df: DataFrame) -> DataFrame:
+    return df.withColumn("duration_days", fractional_days("deadline_at", "launched_at"))
 
 
 def rename_monetary(df: DataFrame) -> DataFrame:
@@ -77,14 +77,14 @@ def rename_monetary(df: DataFrame) -> DataFrame:
     )
 
 
-def success_flag(state: Column | str, success_states: list[str] | None = None) -> Column:
+def success_flag(state: Column | str) -> Column:
     """F3: 1 iff state ∈ SUCCESS_STATES else 0 (src/etl_pipeline.py:106-110)."""
     col = F.col(state) if isinstance(state, str) else state
-    return F.when(col.isin(*(success_states or SUCCESS_STATES)), 1).otherwise(0).cast("int")
+    return F.when(col.isin(*SUCCESS_STATES), 1).otherwise(0).cast("int")
 
 
-def with_success_flag(df: DataFrame, state: str = "state") -> DataFrame:
-    return df.withColumn("success_flag", success_flag(state))
+def with_success_flag(df: DataFrame) -> DataFrame:
+    return df.withColumn("success_flag", success_flag("state"))
 
 
 def drop_null(df: DataFrame, subset: list[str]) -> DataFrame:
@@ -92,9 +92,9 @@ def drop_null(df: DataFrame, subset: list[str]) -> DataFrame:
     return df.na.drop(subset=subset)
 
 
-def project_final(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
+def project_final(df: DataFrame) -> DataFrame:
     """P1: fixed-order projection (src/etl_pipeline.py:123-138)."""
-    return df.select(*(columns or FINAL_COLUMNS))
+    return df.select(*FINAL_COLUMNS)
 
 
 def transform_kickstarter(df: DataFrame) -> DataFrame:

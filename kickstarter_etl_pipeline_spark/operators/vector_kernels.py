@@ -150,12 +150,12 @@ def dot_arrow(a: Column, b: Column) -> Column:
     return _dot_f64(a, b)
 
 
-def _argmin_scan(dists: "list[np.ndarray]", dtype=np.int64):
+def _argmin_scan(dists: "list[np.ndarray]"):
     """First-index argmin over a list of per-cell distance vectors —
     the array_sort((d, c))[0].c tie-break (strict-less keeps the
     earlier cell on ties)."""
     best_d = dists[0]
-    best_c = np.zeros(len(dists[0]), dtype=dtype)
+    best_c = np.zeros(len(dists[0]), dtype=np.int64)
     for ci in range(1, len(dists)):
         lt = dists[ci] < best_d
         best_d = np.where(lt, dists[ci], best_d)

@@ -4,8 +4,32 @@ final merged dict the driver contract exposes. Split out of
 queries.py in round 6.
 """
 
+from kickstarter_etl_pipeline_spark.constants import (
+    ANN_K,
+    BELLMAN_FORD_ROUNDS,
+    BFS_ROUNDS,
+    DAMPING,
+    EMBED_DIM,
+    GRID_SCALE,
+    HITS_ITERATIONS,
+    IVF_CELLS,
+    IVF_CLUSTERS,
+    IVF_ITERS,
+    IVF_N_PROBE,
+    KCORE_K,
+    KCORE_ROUNDS,
+    LPA_ITERATIONS,
+    LSH_NUM_PLANES,
+    LSH_NUM_TABLES,
+    MMR_K,
+    MMR_LAM,
+    MMR_POOL,
+    PAGERANK_ITERATIONS,
+    PCA_ITERS,
+    SPECTRAL_ROUNDS,
+)
 from kickstarter_etl_pipeline_spark.oracles_analytics import ORACLES_ANALYTICS
-from kickstarter_etl_pipeline_spark.oracles_core import ORACLES_CORE
+from kickstarter_etl_pipeline_spark.oracles_core import ORACLES_CORE, _NORM
 from kickstarter_etl_pipeline_spark.oracles_eval import ORACLES_EVAL
 from kickstarter_etl_pipeline_spark.oracles_ext import ORACLES_EXT
 from kickstarter_etl_pipeline_spark.oracles_graph_common import (
@@ -64,7 +88,7 @@ _ORACLES["jsonl_pyds_roundtrip_agg"] = """
 """
 
 
-def _ann_lsh_oracle_sql(dim: int = 64, k: int = 5, num_planes: int = 3, num_tables: int = 6) -> str:
+def _ann_lsh_oracle_sql() -> str:
     """FULL DuckDB twin of q_ann_lsh_topk — possible because every stage
     of the LSH pipeline is deterministic: the hyperplanes are md5-derived
     constants (similarity._plane_component), bucketing is pure sign
@@ -77,11 +101,11 @@ def _ann_lsh_oracle_sql(dim: int = 64, k: int = 5, num_planes: int = 3, num_tabl
     from kickstarter_etl_pipeline_spark.operators.similarity import _plane_component
 
     rows = []
-    for g in range(num_tables * num_planes):
-        comps = ", ".join(repr(_plane_component(g, j)) for j in range(dim))
-        rows.append(f"({g // num_planes}, {g % num_planes}, [{comps}]::DOUBLE[])")
+    for g in range(LSH_NUM_TABLES * LSH_NUM_PLANES):
+        comps = ", ".join(repr(_plane_component(g, j)) for j in range(EMBED_DIM))
+        rows.append(f"({g // LSH_NUM_PLANES}, {g % LSH_NUM_PLANES}, [{comps}]::DOUBLE[])")
     values = ",\n".join(rows)
-    kp = num_planes
+    kp = LSH_NUM_PLANES
     return f"""
         WITH planes(tbl, p, pl) AS (VALUES {values}),
         c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
@@ -122,14 +146,14 @@ def _ann_lsh_oracle_sql(dim: int = 64, k: int = 5, num_planes: int = 3, num_tabl
                      PARTITION BY query_id
                      ORDER BY cosine_sim DESC, neighbor_id) AS INTEGER) AS rank
                    FROM scored)
-        SELECT query_id, neighbor_id, cosine_sim, rank FROM ranked WHERE rank <= {k}
+        SELECT query_id, neighbor_id, cosine_sim, rank FROM ranked WHERE rank <= {ANN_K}
     """
 
 
 _ORACLES["ann_lsh_topk"] = _ann_lsh_oracle_sql()
 
 
-def _ann_ivf_anchor_oracle_sql(k: int = 5, n_cells: int = 16, n_probe: int = 4) -> str:
+def _ann_ivf_anchor_oracle_sql() -> str:
     """FULL DuckDB twin of q_ann_ivf_anchor_topk (see
     similarity.ivf_anchor_topk): anchors are the n_cells corpus vectors
     with the lexically-smallest md5(cast(id as string)) (id tie-break),
@@ -146,7 +170,7 @@ def _ann_ivf_anchor_oracle_sql(k: int = 5, n_cells: int = 16, n_probe: int = 4) 
                    row_number() OVER (
                      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
             FROM embeddings)
-          WHERE rn <= {n_cells}),
+          WHERE rn <= {IVF_CELLS}),
         c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
         q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
               FROM embeddings WHERE vec_id < 20),
@@ -165,7 +189,7 @@ def _ann_ivf_anchor_oracle_sql(k: int = 5, n_cells: int = 16, n_probe: int = 4) 
                                       ORDER BY CAST(floor(list_reduce(list_transform(range(1, len(q.qv) + 1), i -> (q.qv[i] - a.av[i]) * (q.qv[i] - a.av[i])), (acc, x) -> acc + x) * 1000000000 + 0.5) AS BIGINT),
                                       a.ci) AS rn
             FROM q CROSS JOIN anchors a)
-          WHERE rn <= {n_probe}),
+          WHERE rn <= {IVF_N_PROBE}),
         scored AS (
           SELECT qp.query_id, ca.neighbor_id,
                  round(list_cosine_similarity(qp.qv, ca.cv), 6) AS cosine_sim
@@ -175,21 +199,14 @@ def _ann_ivf_anchor_oracle_sql(k: int = 5, n_cells: int = 16, n_probe: int = 4) 
                      PARTITION BY query_id
                      ORDER BY cosine_sim DESC, neighbor_id) AS INTEGER) AS rank
                    FROM scored)
-        SELECT query_id, neighbor_id, cosine_sim, rank FROM ranked WHERE rank <= {k}
+        SELECT query_id, neighbor_id, cosine_sim, rank FROM ranked WHERE rank <= {ANN_K}
     """
 
 
 _ORACLES["ann_ivf_anchor_topk"] = _ann_ivf_anchor_oracle_sql()
 
 
-def _ann_ivf_lloyd_oracle_sql(
-    k: int = 5,
-    n_clusters: int = 8,
-    n_probe: int = 4,
-    n_iters: int = 5,
-    dim: int = 64,
-    scale: int = 1_000_000,
-) -> str:
+def _ann_ivf_lloyd_oracle_sql() -> str:
     """FULL DuckDB twin of q_ann_ivf_topk (similarity.ivf_lloyd_topk):
     the TRAINED k-means IVF, replayable because the whole Lloyd
     recurrence is integer-exact — vectors snapped once to the 1e-6
@@ -213,18 +230,18 @@ def _ann_ivf_lloyd_oracle_sql(
         WITH iv AS (
           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS fv,
                  list_transform(CAST(embedding AS DOUBLE[]),
-                                x -> CAST(floor(x * {float(scale)!r} + 0.5) AS BIGINT)) AS v
+                                x -> CAST(floor(x * {float(GRID_SCALE)!r} + 0.5) AS BIGINT)) AS v
           FROM embeddings),
-        dims AS (SELECT unnest(range(1, {dim} + 1)) AS d),
+        dims AS (SELECT unnest(range(1, {EMBED_DIM} + 1)) AS d),
         c0 AS (
           SELECT rn - 1 AS ci, v AS cv FROM (
             SELECT v, row_number() OVER (
                      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
             FROM iv)
-          WHERE rn <= {n_clusters})"""
+          WHERE rn <= {IVF_CLUSTERS})"""
     steps = []
-    for t in range(1, n_iters + 1):
-        d_expr = dist.format(dim=dim, v="iv.v", c="c.cv")
+    for t in range(1, IVF_ITERS + 1):
+        d_expr = dist.format(dim=EMBED_DIM, v="iv.v", c="c.cv")
         steps.append(
             f""",
         a{t} AS (
@@ -246,24 +263,24 @@ def _ann_ivf_lloyd_oracle_sql(
           SELECT p.ci, COALESCE(m.cv, p.cv) AS cv
           FROM c{t - 1} p LEFT JOIN m{t} m ON m.cell = p.ci)"""
         )
-    cd = dist.format(dim=dim, v="i2.v", c="c.cv")
-    qd = dist.format(dim=dim, v="i2.v", c="c.cv")
+    cd = dist.format(dim=EMBED_DIM, v="i2.v", c="c.cv")
+    qd = dist.format(dim=EMBED_DIM, v="i2.v", c="c.cv")
     tail = f""",
         cass AS (
           SELECT vec_id AS neighbor_id, fv AS cv, ci AS cell FROM (
             SELECT i2.vec_id, i2.fv, c.ci,
                    row_number() OVER (PARTITION BY i2.vec_id
                                       ORDER BY {cd}, c.ci) AS rn
-            FROM iv i2 CROSS JOIN c{n_iters} c)
+            FROM iv i2 CROSS JOIN c{IVF_ITERS} c)
           WHERE rn = 1),
         qprobe AS (
           SELECT vec_id AS query_id, fv AS qv, ci AS cell FROM (
             SELECT i2.vec_id, i2.fv, c.ci,
                    row_number() OVER (PARTITION BY i2.vec_id
                                       ORDER BY {qd}, c.ci) AS rn
-            FROM iv i2 CROSS JOIN c{n_iters} c
+            FROM iv i2 CROSS JOIN c{IVF_ITERS} c
             WHERE i2.vec_id < 20)
-          WHERE rn <= {n_probe}),
+          WHERE rn <= {IVF_N_PROBE}),
         scored AS (
           SELECT qp.query_id, ca.neighbor_id,
                  round(list_cosine_similarity(qp.qv, ca.cv), 6) AS cosine_sim
@@ -273,7 +290,7 @@ def _ann_ivf_lloyd_oracle_sql(
                      PARTITION BY query_id
                      ORDER BY cosine_sim DESC, neighbor_id) AS INTEGER) AS rank
                    FROM scored)
-        SELECT query_id, neighbor_id, cosine_sim, rank FROM ranked WHERE rank <= {k}
+        SELECT query_id, neighbor_id, cosine_sim, rank FROM ranked WHERE rank <= {ANN_K}
     """
     return head + "".join(steps) + tail
 
@@ -433,7 +450,7 @@ _ORACLES["simhash_near_dup_clusters"] = f"""
     SELECT doc_id, component_id, n_members FROM comp JOIN szs USING (component_id)
 """
 
-def _hits_oracle_sql(iterations: int = 4) -> str:
+def _hits_oracle_sql() -> str:
     """FULL DuckDB twin of q_graph_hits (graph.hits): the
     hubs-and-authorities recurrence unrolls as CTE pairs — possible
     because the implementation keeps an EXACT integer spine: scores in
@@ -458,7 +475,7 @@ def _hits_oracle_sql(iterations: int = 4) -> str:
                    FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
         h0 AS (SELECT DISTINCT c, CAST(1000000000 AS BIGINT) AS hn FROM e)"""
     steps = []
-    for t in range(1, iterations + 1):
+    for t in range(1, HITS_ITERATIONS + 1):
         steps.append(
             f""",
         ar{t} AS MATERIALIZED (SELECT s, sum(hn) AS arn FROM e JOIN h{t - 1} USING (c) GROUP BY s),
@@ -477,11 +494,11 @@ def _hits_oracle_sql(iterations: int = 4) -> str:
     tail = f"""
         SELECT 'hub' AS role, c AS id,
                floor(hn / 1000000000.0 * 1000000 + 0.5) / 1000000.0 AS score
-        FROM h{iterations}
+        FROM h{HITS_ITERATIONS}
         UNION ALL
         SELECT 'authority' AS role, s AS id,
                floor(an / 1000000000.0 * 1000000 + 0.5) / 1000000.0 AS score
-        FROM a{iterations}
+        FROM a{HITS_ITERATIONS}
     """
     return head + "".join(steps) + tail
 
@@ -513,7 +530,7 @@ _ORACLES["blocking_quality_report"] = f"""
 """
 
 
-def _pca_power_oracle_sql(n_iters: int = 8, dim: int = 64, scale: int = 1_000_000) -> str:
+def _pca_power_oracle_sql() -> str:
     """FULL DuckDB twin of q_embedding_pca_top
     (similarity.pca_top_component): the power iteration unrolls as CTE
     pairs (projection snap → per-dim integer accumulation → driver-free
@@ -522,12 +539,12 @@ def _pca_power_oracle_sql(n_iters: int = 8, dim: int = 64, scale: int = 1_000_00
     every float stage is a fixed expression tree: the projection fold
     and the norm fold run in array order via ``list_reduce`` — the same
     left fold the engine runs (F.aggregate / driver loop)."""
-    dd = f"range(1, {dim} + 1)"
+    dd = f"range(1, {EMBED_DIM} + 1)"
     head = f"""
         WITH iv AS (
           SELECT vec_id,
                  list_transform(CAST(embedding AS DOUBLE[]),
-                                x -> CAST(floor(x * {float(scale)!r} + 0.5) AS BIGINT)) AS v
+                                x -> CAST(floor(x * {float(GRID_SCALE)!r} + 0.5) AS BIGINT)) AS v
           FROM embeddings),
         dims AS (SELECT unnest({dd}) AS d),
         mu0 AS (
@@ -541,7 +558,7 @@ def _pca_power_oracle_sql(n_iters: int = 8, dim: int = 64, scale: int = 1_000_00
                FROM iv CROSS JOIN mu),
         w0 AS (SELECT list_transform({dd}, i -> 0.125) AS wv)"""
     steps = []
-    for t in range(1, n_iters + 1):
+    for t in range(1, PCA_ITERS + 1):
         steps.append(
             f""",
         q{t} AS (
@@ -567,7 +584,7 @@ def _pca_power_oracle_sql(n_iters: int = 8, dim: int = 64, scale: int = 1_000_00
                w.wv[d] AS pc1_weight,
                floor(sqrt(list_reduce(list_transform(x.xs, v -> v * v), (a, b) -> a + b))
                      / mu.n / 1e12 * 1e6 + 0.5) / 1e6 AS pc1_variance
-        FROM dims CROSS JOIN mu CROSS JOIN w{n_iters} w CROSS JOIN x{n_iters} x
+        FROM dims CROSS JOIN mu CROSS JOIN w{PCA_ITERS} w CROSS JOIN x{PCA_ITERS} x
     """
     return head + "".join(steps) + tail
 
@@ -613,7 +630,7 @@ _ORACLES["ann_recall_report"] = f"""
 
 
 
-def _pagerank_oracle_sql(iterations: int = 10) -> str:
+def _pagerank_oracle_sql() -> str:
     """Unrolled 10-iteration PageRank recurrence — possible because the
     Spark side rounds the rank vector to a 1e-9 grid each iteration
     (graph.pagerank), so contribution-sum order noise (~1e-17) never
@@ -627,12 +644,12 @@ def _pagerank_oracle_sql(iterations: int = 10) -> str:
     pr0 AS (SELECT s.src AS id, """ + rd9.format(expr="1.0 / n.n") + """ AS pr
             FROM (SELECT DISTINCT src FROM dedges) s CROSS JOIN n)"""
     steps = []
-    for k in range(iterations):
+    for k in range(PAGERANK_ITERATIONS):
         steps.append(
             f""",
     pr{k + 1} AS (
       SELECT dedges.dst AS id, """
-            + rd9.format(expr=f"(1.0 - 0.85) / n.n + 0.85 * sum(p.pr / deg.d)")
+            + rd9.format(expr=f"(1.0 - {DAMPING}) / n.n + {DAMPING} * sum(p.pr / deg.d)")
             + f""" AS pr
       FROM dedges JOIN pr{k} p ON p.id = dedges.src
                   JOIN deg ON deg.src = dedges.src
@@ -642,7 +659,7 @@ def _pagerank_oracle_sql(iterations: int = 10) -> str:
     tail = f"""
     SELECT id AS user_id,
            floor((pr * 1000) * 1000000 + 0.5) / 1000000.0 AS pr_permille
-    FROM pr{iterations}
+    FROM pr{PAGERANK_ITERATIONS}
     """
     return head + "".join(steps) + tail
 
@@ -650,16 +667,16 @@ def _pagerank_oracle_sql(iterations: int = 10) -> str:
 _ORACLES["graph_pagerank"] = _pagerank_oracle_sql()
 
 
-def _lpa_ctes(iterations: int = 5) -> str:
+def _lpa_ctes() -> str:
     """The unrolled synchronous label-propagation CTE chain (integer
-    votes, (count desc, label asc) argmax) through ``lp{iterations}``
+    votes, (count desc, label asc) argmax) through ``lp{LPA_ITERATIONS}``
     — shared by the communities twin and the modularity twin."""
     head = f"""
     WITH {cooccurrence_edge_ctes(1800000000, nodes="nodes", edges="edges")},
     dedges AS (SELECT u AS src, v AS dst FROM edges UNION ALL SELECT v, u FROM edges),
     lp0 AS (SELECT DISTINCT src AS id, src AS community FROM dedges)"""
     steps = []
-    for k in range(iterations):
+    for k in range(5):
         steps.append(
             f""",
     lp{k + 1} AS (
@@ -674,17 +691,17 @@ def _lpa_ctes(iterations: int = 5) -> str:
     return head + "".join(steps)
 
 
-def _lpa_oracle_sql(iterations: int = 5) -> str:
+def _lpa_oracle_sql() -> str:
     """Unrolled synchronous label propagation — integer votes with a
     (count desc, label asc) argmax; replayable because every step is
     exact and the schedule is fixed."""
     return (
-        _lpa_ctes(iterations)
+        _lpa_ctes()
         + f""",
     sizes AS (SELECT community, CAST(count(*) AS BIGINT) AS n_members
-              FROM lp{iterations} GROUP BY community)
+              FROM lp{LPA_ITERATIONS} GROUP BY community)
     SELECT l.id AS user_id, l.community, s.n_members
-    FROM lp{iterations} l JOIN sizes s USING (community)
+    FROM lp{LPA_ITERATIONS} l JOIN sizes s USING (community)
     """
     )
 
@@ -699,7 +716,7 @@ _ORACLES["graph_communities"] = _lpa_oracle_sql()
 # distinct undirected capped edges with both endpoints labeled c; d_c
 # sums member degrees over the same edge set.
 _ORACLES["community_modularity"] = (
-    _lpa_ctes(5)
+    _lpa_ctes()
     + """,
     lab AS (SELECT id, community FROM lp5),
     m AS (SELECT CAST(count(*) AS BIGINT) AS m FROM edges),
@@ -729,7 +746,7 @@ _ORACLES["community_modularity"] = (
 ALL_ORACLES = _ORACLES
 
 
-def _mmr_oracle_sql(k: int = 5, pool: int = 20, lam: float = 0.7) -> str:
+def _mmr_oracle_sql() -> str:
     """FULL DuckDB twin of q_mmr_diversified_topk
     (similarity.mmr_diversified_topk): the greedy selection is unrolled
     into k−1 CTE rounds — possible because every round's argmax is a
@@ -740,7 +757,7 @@ def _mmr_oracle_sql(k: int = 5, pool: int = 20, lam: float = 0.7) -> str:
     which is 0.30000000000000004)."""
     rounds = []
     sel_union = "SELECT query_id, rank, neighbor_id, mmr_score, cv FROM sel1"
-    for t in range(2, k + 1):
+    for t in range(2, MMR_K + 1):
         prev_union = f"selu{t - 1}"
         rounds.append(f"""
     {prev_union} AS ({sel_union}),
@@ -751,7 +768,7 @@ def _mmr_oracle_sql(k: int = 5, pool: int = 20, lam: float = 0.7) -> str:
                         max(round(list_cosine_similarity(r.cv, s.cv), 6)) AS max_sel
                  FROM rem{t} r JOIN {prev_union} s ON r.query_id = s.query_id
                  GROUP BY r.query_id, r.neighbor_id, r.rel, r.cv),
-    scored{t} AS (SELECT *, floor(({lam} * rel - {round(1 - lam, 10)} * max_sel)
+    scored{t} AS (SELECT *, floor(({MMR_LAM} * rel - {round(1 - MMR_LAM, 10)} * max_sel)
                                   * 1000000 + 0.5) / 1000000.0 AS mmr
                   FROM pairs{t}),
     sel{t} AS (SELECT query_id, CAST({t} AS INTEGER) AS rank, neighbor_id,
@@ -772,7 +789,7 @@ def _mmr_oracle_sql(k: int = 5, pool: int = 20, lam: float = 0.7) -> str:
              FROM (SELECT *, row_number() OVER (PARTITION BY query_id
                             ORDER BY rel DESC, neighbor_id) AS rn
                    FROM scored0)
-             WHERE rn <= {pool}),
+             WHERE rn <= {MMR_POOL}),
     sel1 AS (SELECT query_id, CAST(1 AS INTEGER) AS rank, neighbor_id,
                     rel AS mmr_score, cv
              FROM (SELECT *, row_number() OVER (PARTITION BY query_id
@@ -787,7 +804,7 @@ def _mmr_oracle_sql(k: int = 5, pool: int = 20, lam: float = 0.7) -> str:
 _ORACLES["mmr_diversified_topk"] = _mmr_oracle_sql()
 
 
-def _kcore_oracle_sql(k: int = 4, rounds: int = 6) -> str:
+def _kcore_oracle_sql() -> str:
     """FULL DuckDB twin of q_graph_kcore (graph.kcore): the
     fixed-round peel unrolls as one MATERIALIZED CTE triple (degrees,
     keep-set, surviving edges) per round — materialization is load-
@@ -800,20 +817,20 @@ def _kcore_oracle_sql(k: int = 4, rounds: int = 6) -> str:
     head = f"""
         WITH {cooccurrence_edge_ctes(600000000, nodes="n", edges="e0", materialized=True)}"""
     steps = []
-    for t in range(1, rounds + 1):
+    for t in range(1, KCORE_ROUNDS + 1):
         steps.append(
             f""",
         d{t} AS MATERIALIZED (SELECT id, count(*) AS d FROM (
                    SELECT u AS id FROM e{t - 1}
                    UNION ALL SELECT v FROM e{t - 1}) GROUP BY id),
-        k{t} AS (SELECT id FROM d{t} WHERE d >= {k}),
+        k{t} AS (SELECT id FROM d{t} WHERE d >= {KCORE_K}),
         e{t} AS MATERIALIZED (SELECT u, v FROM e{t - 1}
                  WHERE u IN (SELECT id FROM k{t})
                    AND v IN (SELECT id FROM k{t}))"""
         )
     tail = f"""
         SELECT id AS user_id, CAST(count(*) AS BIGINT) AS core_degree FROM (
-          SELECT u AS id FROM e{rounds} UNION ALL SELECT v FROM e{rounds})
+          SELECT u AS id FROM e{KCORE_ROUNDS} UNION ALL SELECT v FROM e{KCORE_ROUNDS})
         GROUP BY id
     """
     return head + "".join(steps) + tail
@@ -821,7 +838,7 @@ def _kcore_oracle_sql(k: int = 4, rounds: int = 6) -> str:
 
 _ORACLES["graph_kcore"] = _kcore_oracle_sql()
 
-def _bfs_oracle_sql(rounds: int = 8) -> str:
+def _bfs_oracle_sql() -> str:
     """FULL DuckDB twin of q_graph_bfs_depths (graph.bfs_depths): the
     fixed-round frontier expansion unrolls as one MATERIALIZED CTE
     pair (frontier, visited) per round. MATERIALIZED is load-bearing
@@ -836,7 +853,7 @@ def _bfs_oracle_sql(rounds: int = 8) -> str:
                             HAVING min(u) IS NOT NULL),
         f0 AS MATERIALIZED (SELECT id FROM v0)"""
     steps = []
-    for t in range(1, rounds + 1):
+    for t in range(1, BFS_ROUNDS + 1):
         steps.append(
             f""",
         f{t} AS MATERIALIZED (
@@ -848,7 +865,7 @@ def _bfs_oracle_sql(rounds: int = 8) -> str:
           UNION ALL SELECT id, CAST({t} AS BIGINT) FROM f{t})"""
         )
     tail = f"""
-        SELECT id AS user_id, depth FROM v{rounds}
+        SELECT id AS user_id, depth FROM v{BFS_ROUNDS}
     """
     return head + "".join(steps) + tail
 
@@ -862,13 +879,12 @@ _ORACLES["graph_bfs_depths"] = _bfs_oracle_sql()
 # total order, the two_phase_rank contract), in-window pairs for
 # w = 6 via rank-difference 1..5, metrics mirroring the
 # blocking_quality_report tree shapes exactly (verified pair).
-_SNM_NORM = "lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
 _ORACLES["snm_blocking_report"] = f"""
     WITH keyed AS (
       SELECT doc_id,
-             substr({_SNM_NORM}, 1, 16) AS k1,
+             substr({_NORM}, 1, 16) AS k1,
              lpad(CAST(n_chars AS VARCHAR), 8, '0')
-               || substr({_SNM_NORM}, 1, 8) AS k2
+               || substr({_NORM}, 1, 8) AS k2
       FROM documents),
     p1 AS (SELECT doc_id, row_number() OVER (ORDER BY k1, doc_id) AS rk
            FROM keyed),
@@ -899,7 +915,7 @@ _ORACLES["snm_blocking_report"] = f"""
 """
 
 
-def _spectral_oracle_sql(rounds: int = 8) -> str:
+def _spectral_oracle_sql() -> str:
     """Unrolled centered power iteration (graph.spectral_coordinate):
     every stage snaps to the 1e-9 grid, so the replay holds
     bit-identical iterates (the pagerank device). y/c are MATERIALIZED
@@ -917,7 +933,7 @@ def _spectral_oracle_sql(rounds: int = 8) -> str:
                   {rd9("(CAST(concat('0x', substr(md5(CAST(s.src AS VARCHAR)), 1, 15)) AS BIGINT) % 2001 - 1000) / 1000.0")} AS x
            FROM (SELECT DISTINCT src FROM dedges) s)"""
     steps = []
-    for k in range(1, rounds + 1):
+    for k in range(1, SPECTRAL_ROUNDS + 1):
         steps.append(f""",
     y{k} AS MATERIALIZED (SELECT dst AS id, {rd9("sum(p.x) / count(*)")} AS y
                           FROM dedges JOIN x{k - 1} p ON p.id = dedges.src
@@ -931,7 +947,7 @@ def _spectral_oracle_sql(rounds: int = 8) -> str:
     SELECT id AS user_id,
            floor(x * 1000000 + 0.5) / 1000000.0 AS spectral_x,
            CASE WHEN x > 0 THEN 1 ELSE 0 END AS side
-    FROM x{rounds}
+    FROM x{SPECTRAL_ROUNDS}
     """
     return head + "".join(steps) + tail
 
@@ -939,7 +955,7 @@ def _spectral_oracle_sql(rounds: int = 8) -> str:
 _ORACLES["graph_spectral_partition"] = _spectral_oracle_sql()
 
 
-def _bellman_ford_oracle_sql(rounds: int = 6) -> str:
+def _bellman_ford_oracle_sql() -> str:
     """Unrolled fixed-round Bellman-Ford (graph_weighted_distances):
     pure integer min-plus, so the replay is exact set arithmetic. Each
     round's distance vector is referenced twice (carry + relax) —
@@ -957,7 +973,7 @@ def _bellman_ford_oracle_sql(rounds: int = 6) -> str:
     d0 AS (SELECT min(src) AS id, CAST(0 AS BIGINT) AS dist FROM wedges
            HAVING min(src) IS NOT NULL)"""
     steps = []
-    for k in range(1, rounds + 1):
+    for k in range(1, BELLMAN_FORD_ROUNDS + 1):
         steps.append(f""",
     d{k} AS MATERIALIZED (
       SELECT id, min(dist) AS dist FROM (
@@ -967,7 +983,7 @@ def _bellman_ford_oracle_sql(rounds: int = 6) -> str:
         FROM wedges JOIN d{k - 1} ON d{k - 1}.id = wedges.src)
       GROUP BY id)""")
     tail = f"""
-    SELECT id AS user_id, dist FROM d{rounds}
+    SELECT id AS user_id, dist FROM d{BELLMAN_FORD_ROUNDS}
     """
     return head + "".join(steps) + tail
 

@@ -2,16 +2,15 @@
 
 Split out of queries.py (VERDICT r04 #8: keep the registry module
 lean). Same contract as every oracle in queries.py: DuckDB SQL that is
-value-hash-identical to the Spark query post-rounding. _TOKS/_NORM are
-the shared tokenization constants.
+value-hash-identical to the Spark query post-rounding. _TOKS (oracles_core's)
+is the shared tokenizer.
 """
 
 from __future__ import annotations
 
 from kickstarter_etl_pipeline_spark.oracles_graph_common import cooccurrence_edge_ctes
+from kickstarter_etl_pipeline_spark.oracles_core import _TOKS
 
-_TOKS = "string_split_regex(lower(trim(text)), '\\s+')"
-_NORM = "lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
 
 # the occupancy-capped 30-minute error co-occurrence edge CTEs shared
 # by the triangle/clustering twins (mirrors graph.cooccurrence_edges)

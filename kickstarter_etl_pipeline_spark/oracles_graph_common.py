@@ -20,21 +20,17 @@ string order); ``(rank - 1) // cap`` on BIGINT equals Spark's
 hash is injective per bucket (users are distinct), but user_id stays
 as an explicit tie-break on both engines anyway.
 
-This module must import nothing from the package (every oracles_*
-ledger imports it, so any package import here risks a cycle).
+This module imports nothing from the package but the import-free
+``constants`` (every oracles_* ledger imports it, so any other package
+import here risks a cycle).
 """
 
 from __future__ import annotations
 
-# Must stay in lockstep with operators.graph.OCCUPANCY_CAP /
-# WEDGE_DEGREE_CAP (asserted equal in tests/test_graph_scale.py).
-OCCUPANCY_CAP = 64
-WEDGE_DEGREE_CAP = 256
+from kickstarter_etl_pipeline_spark.constants import OCCUPANCY_CAP, WEDGE_DEGREE_CAP
 
 
-def ranked_cooccurrence_nodes(
-    width_us: int, name: str = "n", cap: int = OCCUPANCY_CAP
-) -> str:
+def ranked_cooccurrence_nodes(width_us: int, name: str = "n") -> str:
     """One CTE body: distinct (b, sb, user_id) error-event nodes with
     the hash-ordered sub-bucket column. Splice as
     ``WITH {ranked_cooccurrence_nodes(...)}, edges AS (...)`` and join
@@ -44,7 +40,7 @@ def ranked_cooccurrence_nodes(
       SELECT b, user_id,
              (row_number() OVER (PARTITION BY b
                                  ORDER BY md5(CAST(user_id AS VARCHAR)), user_id)
-              - 1) // {cap} AS sb
+              - 1) // {OCCUPANCY_CAP} AS sb
       FROM (SELECT DISTINCT CAST(floor(epoch_us(ts) / {width_us}) AS BIGINT) AS b,
                             user_id
             FROM events WHERE event_type = 'error'))"""
@@ -54,12 +50,11 @@ def cooccurrence_edge_ctes(
     width_us: int,
     nodes: str = "n",
     edges: str = "edges",
-    cap: int = OCCUPANCY_CAP,
     materialized: bool = False,
 ) -> str:
     """The full node + distinct-edge CTE pair most graph twins need."""
     mat = " MATERIALIZED" if materialized else ""
-    return f"""{ranked_cooccurrence_nodes(width_us, nodes, cap)},
+    return f"""{ranked_cooccurrence_nodes(width_us, nodes)},
     {edges} AS{mat} (
       SELECT DISTINCT a.user_id AS u, c.user_id AS v
       FROM {nodes} a JOIN {nodes} c

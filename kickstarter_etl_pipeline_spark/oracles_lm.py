@@ -9,10 +9,9 @@ from kickstarter_etl_pipeline_spark.constants import (
     BENFORD_P as _BENFORD_P,
     RAKE_STOPWORDS as _RAKE_STOPS,
 )
+from kickstarter_etl_pipeline_spark.oracles_core import _TOKS
 
 ORACLES_LM: dict[str, str] = {}
-
-_TOKS = "string_split_regex(lower(trim(text)), '\\s+')"
 
 # FULL twin of q_scalable_rank_events: the two-phase distributed rank
 # must be bit-identical to a plain global row_number over the same

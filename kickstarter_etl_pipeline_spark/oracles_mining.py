@@ -4,11 +4,9 @@ other oracle module: exact integer/decimal aggregation, fixed-grid
 transcendentals, (value, id) total orders.
 """
 
+from kickstarter_etl_pipeline_spark.constants import WEDGE_DEGREE_CAP
 from kickstarter_etl_pipeline_spark.oracles_core import _TOKS
-from kickstarter_etl_pipeline_spark.oracles_graph_common import (
-    WEDGE_DEGREE_CAP,
-    cooccurrence_edge_ctes,
-)
+from kickstarter_etl_pipeline_spark.oracles_graph_common import cooccurrence_edge_ctes
 
 ORACLES_MINING: dict[str, str] = {}
 

@@ -8,10 +8,7 @@ floor(x·10^k + 0.5)/10^k rule (operators.rounding).
 
 from __future__ import annotations
 
-from kickstarter_etl_pipeline_spark.oracles_graph_common import (
-    WEDGE_DEGREE_CAP,
-    cooccurrence_edge_ctes,
-)
+from kickstarter_etl_pipeline_spark.oracles_graph_common import cooccurrence_edge_ctes
 
 ORACLES_R10: dict[str, str] = {}
 
@@ -358,7 +355,7 @@ ORACLES_R10["embedding_similarity_histogram"] = """
 # FULL twin of q_fellegi_sunter_linkage: identical blocking, pattern
 # bits, and the SAME precomputed score literals (constants module —
 # single definition site, no query-time transcendental either side).
-from kickstarter_etl_pipeline_spark.constants import FS_PATTERN_SCORES  # noqa: E402
+from kickstarter_etl_pipeline_spark.constants import FS_PATTERN_SCORES, WEDGE_DEGREE_CAP
 
 _FS_CASES = " ".join(
     f"WHEN '{p}' THEN {s!r}" for p, s in FS_PATTERN_SCORES.items()

@@ -8,7 +8,19 @@ column names and bit-identical values under the driver normalization
 
 from __future__ import annotations
 
-from kickstarter_etl_pipeline_spark.oracles_graph_common import OCCUPANCY_CAP
+from kickstarter_etl_pipeline_spark.constants import (
+    DAMPING,
+    GRAPH_PIVOTS,
+    GRAPH_PIVOT_ROUNDS,
+    KTRUSS_K,
+    KTRUSS_ROUNDS,
+    MAX_COVERAGE_K,
+    OCCUPANCY_CAP,
+    PPR_ITERATIONS,
+    ROTOR_STEPS,
+)
+from kickstarter_etl_pipeline_spark.oracles_core import _TOKS
+
 
 ORACLES_R12: dict[str, str] = {}
 
@@ -138,7 +150,7 @@ ORACLES_R12["holt_linear_forecast"] = """
 # uses. Inverse distances are carried as exact integers (60 // depth,
 # 60 = lcm(1..6)); the final division and 6-dp snap are the only
 # float ops.
-def _harmonic_oracle_sql(pivots: int = 8, rounds: int = 6) -> str:
+def _harmonic_oracle_sql() -> str:
     from kickstarter_etl_pipeline_spark.oracles_graph_common import (
         cooccurrence_edge_ctes,
     )
@@ -148,12 +160,12 @@ def _harmonic_oracle_sql(pivots: int = 8, rounds: int = 6) -> str:
         sym AS MATERIALIZED (SELECT u, v FROM he0 UNION SELECT v, u FROM he0),
         piv AS MATERIALIZED (
           SELECT p FROM (SELECT DISTINCT u AS p FROM sym)
-          ORDER BY md5(CAST(p AS VARCHAR)), p LIMIT {pivots}),
+          ORDER BY md5(CAST(p AS VARCHAR)), p LIMIT {GRAPH_PIVOTS}),
         v0 AS MATERIALIZED (
           SELECT p, p AS id, CAST(0 AS BIGINT) AS depth FROM piv),
         f0 AS MATERIALIZED (SELECT p, id FROM v0)"""
     steps = []
-    for t in range(1, rounds + 1):
+    for t in range(1, GRAPH_PIVOT_ROUNDS + 1):
         steps.append(
             f""",
         f{t} AS MATERIALIZED (
@@ -170,7 +182,7 @@ def _harmonic_oracle_sql(pivots: int = 8, rounds: int = 6) -> str:
                CAST(count(*) AS BIGINT) AS n_pivots_reached,
                floor(CAST(sum(60 // depth) AS DOUBLE) / 60.0 * 1000000 + 0.5)
                  / 1000000.0 AS harmonic
-        FROM v{rounds} WHERE depth > 0 GROUP BY id
+        FROM v{GRAPH_PIVOT_ROUNDS} WHERE depth > 0 GROUP BY id
     """
     return head + "".join(steps) + tail
 
@@ -252,7 +264,7 @@ ORACLES_R12["holt_winters_forecast"] = _holt_winters_oracle_sql()
 # vertex id as explicit tie-break) and one hop CTE per step, unrolled
 # (device 7). The concat key is ':'-joined decimal renderings, the
 # same strings Spark's concat_ws produces for BIGINTs.
-def _rotor_walks_oracle_sql(steps: int = 4) -> str:
+def _rotor_walks_oracle_sql() -> str:
     from kickstarter_etl_pipeline_spark.oracles_graph_common import (
         cooccurrence_edge_ctes,
     )
@@ -263,7 +275,7 @@ def _rotor_walks_oracle_sql(steps: int = 4) -> str:
         w0 AS MATERIALIZED (
           SELECT u AS start, u AS cur FROM (SELECT DISTINCT u FROM sym))"""
     steps_sql = []
-    for t in range(1, steps + 1):
+    for t in range(1, ROTOR_STEPS + 1):
         steps_sql.append(
             f""",
         n{t} AS MATERIALIZED (
@@ -281,7 +293,7 @@ def _rotor_walks_oracle_sql(steps: int = 4) -> str:
     unions = "\n        UNION ALL ".join(
         f"SELECT start AS start_user_id, CAST({t} AS BIGINT) AS step, "
         f"cur AS user_id FROM w{t}"
-        for t in range(0, steps + 1)
+        for t in range(0, ROTOR_STEPS + 1)
     )
     return head + "".join(steps_sql) + "\n        " + unions
 
@@ -297,7 +309,7 @@ ORACLES_R12["graph_rotor_walks"] = _rotor_walks_oracle_sql()
 # integer sum, LEFT-joined back onto the level's σ frame so
 # childless vertices carry δ̂ = 0. Only depth ≥ 1 rows aggregate into
 # the output (δ̂(p, p) is excluded, as in Brandes).
-def _betweenness_oracle_sql(pivots: int = 8, rounds: int = 6) -> str:
+def _betweenness_oracle_sql() -> str:
     from kickstarter_etl_pipeline_spark.oracles_graph_common import (
         cooccurrence_edge_ctes,
     )
@@ -307,12 +319,12 @@ def _betweenness_oracle_sql(pivots: int = 8, rounds: int = 6) -> str:
         sym AS MATERIALIZED (SELECT u, v FROM be0 UNION SELECT v, u FROM be0),
         piv AS MATERIALIZED (
           SELECT p FROM (SELECT DISTINCT u AS p FROM sym)
-          ORDER BY md5(CAST(p AS VARCHAR)), p LIMIT {pivots}),
+          ORDER BY md5(CAST(p AS VARCHAR)), p LIMIT {GRAPH_PIVOTS}),
         v0 AS MATERIALIZED (
           SELECT p, p AS id, CAST(0 AS BIGINT) AS depth FROM piv),
         f0 AS MATERIALIZED (SELECT p, id FROM v0)"""
     bfs = []
-    for t in range(1, rounds + 1):
+    for t in range(1, GRAPH_PIVOT_ROUNDS + 1):
         bfs.append(
             f""",
         f{t} AS MATERIALIZED (
@@ -328,24 +340,24 @@ def _betweenness_oracle_sql(pivots: int = 8, rounds: int = 6) -> str:
         f""",
         s0 AS MATERIALIZED (
           SELECT p, id, CAST(1 AS BIGINT) AS sigma
-          FROM v{rounds} WHERE depth = 0)"""
+          FROM v{GRAPH_PIVOT_ROUNDS} WHERE depth = 0)"""
     ]
-    for t in range(1, rounds + 1):
+    for t in range(1, GRAPH_PIVOT_ROUNDS + 1):
         sig.append(
             f""",
         s{t} AS MATERIALIZED (
           SELECT l.p, l.id, CAST(sum(sp.sigma) AS BIGINT) AS sigma
-          FROM (SELECT p, id FROM v{rounds} WHERE depth = {t}) l
+          FROM (SELECT p, id FROM v{GRAPH_PIVOT_ROUNDS} WHERE depth = {t}) l
           JOIN sym e ON e.v = l.id
           JOIN s{t - 1} sp ON sp.p = l.p AND sp.id = e.u
           GROUP BY l.p, l.id)"""
         )
     dl = [
         f""",
-        d{rounds} AS MATERIALIZED (
-          SELECT p, id, sigma, CAST(0 AS BIGINT) AS dnano FROM s{rounds})"""
+        d{GRAPH_PIVOT_ROUNDS} AS MATERIALIZED (
+          SELECT p, id, sigma, CAST(0 AS BIGINT) AS dnano FROM s{GRAPH_PIVOT_ROUNDS})"""
     ]
-    for t in range(rounds - 1, -1, -1):
+    for t in range(GRAPH_PIVOT_ROUNDS - 1, -1, -1):
         dl.append(
             f""",
         d{t} AS MATERIALIZED (
@@ -362,7 +374,7 @@ def _betweenness_oracle_sql(pivots: int = 8, rounds: int = 6) -> str:
           ON x.p = s.p AND x.id = s.id)"""
         )
     unions = "\n          UNION ALL ".join(
-        f"SELECT * FROM d{t}" for t in range(1, rounds + 1)
+        f"SELECT * FROM d{t}" for t in range(1, GRAPH_PIVOT_ROUNDS + 1)
     )
     tail = f"""
         SELECT id AS user_id,
@@ -387,12 +399,11 @@ ORACLES_R12["graph_betweenness"] = _betweenness_oracle_sql()
 # 5-gram shingle (the decontaminate_overlap construction, verbatim);
 # the empty seed CTE is typed explicitly so the chain of unions stays
 # VARCHAR.
-_TOKS12 = "string_split_regex(lower(trim(text)), '\\s+')"
 
 
-def _max_coverage_oracle_sql(k: int = 8) -> str:
+def _max_coverage_oracle_sql() -> str:
     head = f"""
-        WITH tk AS (SELECT doc_id, {_TOKS12} AS t FROM documents),
+        WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
         toks AS MATERIALIZED (
           SELECT DISTINCT doc_id, tok FROM (
             SELECT doc_id,
@@ -402,7 +413,7 @@ def _max_coverage_oracle_sql(k: int = 8) -> str:
             FROM tk)),
         c0 AS (SELECT CAST(NULL AS VARCHAR) AS tok WHERE 1 = 0)"""
     steps = []
-    for t in range(1, k + 1):
+    for t in range(1, MAX_COVERAGE_K + 1):
         steps.append(
             f""",
         g{t} AS MATERIALIZED (
@@ -420,7 +431,7 @@ def _max_coverage_oracle_sql(k: int = 8) -> str:
     unions = "\n        UNION ALL ".join(
         f"SELECT CAST({t} AS BIGINT) AS step, doc_id, gain AS marginal_gain, "
         f"(SELECT CAST(count(*) AS BIGINT) FROM c{t}) AS covered_total FROM p{t}"
-        for t in range(1, k + 1)
+        for t in range(1, MAX_COVERAGE_K + 1)
     )
     return head + "".join(steps) + "\n        " + unions
 
@@ -448,7 +459,7 @@ ORACLES_R12["walk_skipgram_pairs"] = f"""
 # window over the ≤ rounds+1 row frame; the effective-diameter flag
 # is the integer comparison cum·10 ≥ total·9 (no float threshold) and
 # the 6-dp share is the only float.
-def _distance_distribution_oracle_sql(pivots: int = 8, rounds: int = 6) -> str:
+def _distance_distribution_oracle_sql() -> str:
     from kickstarter_etl_pipeline_spark.oracles_graph_common import (
         cooccurrence_edge_ctes,
     )
@@ -458,12 +469,12 @@ def _distance_distribution_oracle_sql(pivots: int = 8, rounds: int = 6) -> str:
         sym AS MATERIALIZED (SELECT u, v FROM de0 UNION SELECT v, u FROM de0),
         piv AS MATERIALIZED (
           SELECT p FROM (SELECT DISTINCT u AS p FROM sym)
-          ORDER BY md5(CAST(p AS VARCHAR)), p LIMIT {pivots}),
+          ORDER BY md5(CAST(p AS VARCHAR)), p LIMIT {GRAPH_PIVOTS}),
         v0 AS MATERIALIZED (
           SELECT p, p AS id, CAST(0 AS BIGINT) AS depth FROM piv),
         f0 AS MATERIALIZED (SELECT p, id FROM v0)"""
     steps = []
-    for t in range(1, rounds + 1):
+    for t in range(1, GRAPH_PIVOT_ROUNDS + 1):
         steps.append(
             f""",
         f{t} AS MATERIALIZED (
@@ -477,7 +488,7 @@ def _distance_distribution_oracle_sql(pivots: int = 8, rounds: int = 6) -> str:
         )
     tail = f""",
         pd AS (SELECT depth, CAST(count(*) AS BIGINT) AS n_pairs
-               FROM v{rounds} GROUP BY depth),
+               FROM v{GRAPH_PIVOT_ROUNDS} GROUP BY depth),
         cm AS (SELECT depth, n_pairs,
                       CAST(sum(n_pairs) OVER (ORDER BY depth
                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -575,12 +586,12 @@ ORACLES_R12["weekday_seasonal_decomposition"] = """
 # twin — tuple comparisons (d, id) mirror the Spark rank structs —
 # and per-edge support via the three least/greatest unordered pairs
 # of each triangle. Support is recomputed on the final edge set.
-def _ktruss_oracle_sql(k: int = 4, rounds: int = 4) -> str:
+def _ktruss_oracle_sql() -> str:
     from kickstarter_etl_pipeline_spark.oracles_graph_common import (
         cooccurrence_edge_ctes,
     )
 
-    thr = k - 2
+    thr = KTRUSS_K - 2
 
     def block(r: int) -> str:
         return f""",
@@ -607,7 +618,7 @@ def _ktruss_oracle_sql(k: int = 4, rounds: int = 4) -> str:
     head = f"""
         WITH {cooccurrence_edge_ctes(1800000000, nodes="kn", edges="e0", materialized=True)}"""
     parts = []
-    for r in range(rounds):
+    for r in range(KTRUSS_ROUNDS):
         parts.append(block(r))
         parts.append(
             f""",
@@ -616,12 +627,12 @@ def _ktruss_oracle_sql(k: int = 4, rounds: int = 4) -> str:
           LEFT JOIN sp{r} s ON s.u = e.u AND s.v = e.v
           WHERE COALESCE(s.sup, 0) >= {thr})"""
         )
-    parts.append(block(rounds))
+    parts.append(block(KTRUSS_ROUNDS))
     tail = f"""
         SELECT e.u AS user_u, e.v AS user_v,
                COALESCE(s.sup, CAST(0 AS BIGINT)) AS support
-        FROM e{rounds} e
-        LEFT JOIN sp{rounds} s ON s.u = e.u AND s.v = e.v
+        FROM e{KTRUSS_ROUNDS} e
+        LEFT JOIN sp{KTRUSS_ROUNDS} s ON s.u = e.u AND s.v = e.v
     """
     return head + "".join(parts) + tail
 
@@ -636,7 +647,7 @@ ORACLES_R12["graph_ktruss"] = _ktruss_oracle_sql()
 # seed's zero row unioned in before the round aggregate so the seed
 # survives rounds with no incoming mass, exactly as the Spark side
 # unions it.
-def _ppr_oracle_sql(iterations: int = 8) -> str:
+def _ppr_oracle_sql() -> str:
     from kickstarter_etl_pipeline_spark.oracles_graph_common import (
         cooccurrence_edge_ctes,
     )
@@ -653,7 +664,7 @@ def _ppr_oracle_sql(iterations: int = 8) -> str:
           ORDER BY md5(CAST(src AS VARCHAR)), src LIMIT 1),
         p0 AS (SELECT id, """ + rd9.format(expr="1.0") + """ AS pr FROM seed)"""
     steps = []
-    for k in range(iterations):
+    for k in range(PPR_ITERATIONS):
         steps.append(
             f""",
         a{k} AS (
@@ -668,7 +679,7 @@ def _ppr_oracle_sql(iterations: int = 8) -> str:
           SELECT a.id, """
             + rd9.format(
                 expr="CASE WHEN sd.id IS NOT NULL THEN 0.15 ELSE 0.0 END"
-                " + 0.85 * a.mi"
+                f" + {DAMPING} * a.mi"
             )
             + f""" AS pr
           FROM a{k} a LEFT JOIN seed sd ON sd.id = a.id)"""
@@ -676,7 +687,7 @@ def _ppr_oracle_sql(iterations: int = 8) -> str:
     tail = f"""
         SELECT id AS user_id,
                floor((pr * 1000) * 1000000 + 0.5) / 1000000.0 AS ppr_permille
-        FROM p{iterations}
+        FROM p{PPR_ITERATIONS}
     """
     return head + "".join(steps) + tail
 

@@ -7,12 +7,11 @@ column names and bit-identical values under the driver normalization
 """
 
 from __future__ import annotations
+from kickstarter_etl_pipeline_spark.constants import BT_ROUNDS
+from kickstarter_etl_pipeline_spark.oracles_core import _TOKS
 
 ORACLES_R13: dict[str, str] = {}
 
-# The shared whitespace tokenizer literal (oracles_core._TOKS, repeated
-# here verbatim so the ledgers stay independently readable).
-_TOKS13 = "string_split_regex(lower(trim(text)), '\\s+')"
 
 
 # FULL twin of q_curation_pack_manifest — the composed
@@ -50,7 +49,7 @@ def _curation_pack_oracle_sql() -> str:
                             i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2],
                                            toks[i+3], toks[i+4]))) AS s
               FROM corpus)),
-    bt AS (SELECT doc_id, {_TOKS13} AS t FROM documents WHERE doc_id % 10 = 0),
+    bt AS (SELECT doc_id, {_TOKS} AS t FROM documents WHERE doc_id % 10 = 0),
     bsh AS (SELECT DISTINCT s FROM (
               SELECT unnest(list_transform(range(1, len(t) - 3),
                      i -> concat_ws(' ', t[i], t[i+1], t[i+2], t[i+3],
@@ -186,7 +185,7 @@ ORACLES_R13["events_tws_warm_start"] = """
 # the same max(1,·) floors. DuckDB // == Spark DIV on non-negative
 # operands; every sum is an exact BIGINT sum, so the engines land on
 # identical micros.
-def _bt_oracle_cte(rounds: int = 8) -> str:
+def _bt_oracle_cte() -> str:
     """The shared Bradley-Terry WITH-block (contest derivation + the
     unrolled integer-micro MM rounds), reused by BOTH preference twins:
     preference_bt_strengths appends its strengths tail here, and
@@ -219,7 +218,7 @@ def _bt_oracle_cte(rounds: int = 8) -> str:
     ns AS (SELECT CAST(count(*) AS BIGINT) AS ns FROM types),
     s0 AS (SELECT t, CAST(1000000 AS BIGINT) AS s FROM types)"""
     steps = []
-    for r in range(1, rounds + 1):
+    for r in range(1, BT_ROUNDS + 1):
         steps.append(f""",
     d{r} AS MATERIALIZED (
       SELECT g.i AS t,
@@ -242,14 +241,14 @@ def _bt_oracle_cte(rounds: int = 8) -> str:
     return head + "".join(steps)
 
 
-def _bt_oracle_sql(rounds: int = 8) -> str:
+def _bt_oracle_sql() -> str:
     tail = f"""
     SELECT s.t AS event_type, w.wi AS n_wins,
            (SELECT CAST(sum(g) AS BIGINT) FROM games WHERE i = s.t) AS n_games,
            floor(CAST(s.s AS DOUBLE) / 1000000.0 * 1000000 + 0.5) / 1000000.0
              AS strength
-    FROM s{rounds} s JOIN wins w ON w.t = s.t"""
-    return _bt_oracle_cte(rounds) + tail
+    FROM s{BT_ROUNDS} s JOIN wins w ON w.t = s.t"""
+    return _bt_oracle_cte() + tail
 
 
 ORACLES_R13["preference_bt_strengths"] = _bt_oracle_sql()

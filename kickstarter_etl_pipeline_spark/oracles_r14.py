@@ -8,6 +8,12 @@ column names and bit-identical values under the driver normalization
 
 from __future__ import annotations
 
+from kickstarter_etl_pipeline_spark.constants import (
+    BT_ROUNDS,
+    KEEP_PER_MILLE,
+    PERCEPTRON_EPOCHS,
+)
+
 ORACLES_R14: dict[str, str] = {}
 
 
@@ -60,10 +66,10 @@ ORACLES_R14["events_tws_ttl_counts"] = """
 # train/val split on the contest key user_id:event_id, and the
 # BIGINT-exact calibration micros (empirical n_pref·10⁶ // n_games vs
 # fitted s_w·10⁶ // (s_w + s_l), plus their signed gap).
-def _preference_manifest_oracle_sql(rounds: int = 8) -> str:
+def _preference_manifest_oracle_sql() -> str:
     from kickstarter_etl_pipeline_spark.oracles_r13 import _bt_oracle_cte
 
-    return _bt_oracle_cte(rounds) + f""",
+    return _bt_oracle_cte() + f""",
     contests AS (
       SELECT CASE WHEN value > pv THEN event_type ELSE pt END AS w,
              CASE WHEN value > pv THEN pt ELSE event_type END AS l,
@@ -86,8 +92,8 @@ def _preference_manifest_oracle_sql(rounds: int = 8) -> str:
              / 1000000.0 AS chosen_strength
     FROM cells c
     JOIN games g ON g.i = c.w AND g.j = c.l
-    JOIN s{rounds} sw ON sw.t = c.w
-    JOIN s{rounds} sl ON sl.t = c.l"""
+    JOIN s{BT_ROUNDS} sw ON sw.t = c.w
+    JOIN s{BT_ROUNDS} sl ON sl.t = c.l"""
 
 
 ORACLES_R14["preference_dataset_manifest"] = _preference_manifest_oracle_sql()
@@ -104,7 +110,7 @@ ORACLES_R14["preference_dataset_manifest"] = _preference_manifest_oracle_sql()
 # epoch snapshots; the manifest twin appends the score+select tail to
 # the IDENTICAL CTE chain, so a drifting constituent fails both loudly
 # (the curation_pack / preference_manifest reuse discipline).
-def _perceptron_cte(epochs: int = 8) -> str:
+def _perceptron_cte() -> str:
     head = """
     WITH lowd AS (
       SELECT doc_id, lang, source, n_chars, lower(text) AS low
@@ -130,7 +136,7 @@ def _perceptron_cte(epochs: int = 8) -> str:
                    CAST(0 AS BIGINT) AS w2, CAST(0 AS BIGINT) AS w3,
                    CAST(0 AS BIGINT) AS w4)"""
     steps = []
-    for r in range(1, epochs + 1):
+    for r in range(1, PERCEPTRON_EPOCHS + 1):
         prev = "w0_" if r == 1 else f"w{r - 1}_"
         steps.append(f""",
     m{r} AS (
@@ -153,31 +159,31 @@ def _perceptron_cte(epochs: int = 8) -> str:
     return head + "".join(steps)
 
 
-def _perceptron_trajectory_sql(epochs: int = 8) -> str:
+def _perceptron_trajectory_sql() -> str:
     rows = "\n    UNION ALL ".join(
         f"""SELECT CAST({r} AS BIGINT) AS epoch, nm AS n_mistakes,
            w0 AS w_bias, w1 AS w_vowel, w2 AS w_space,
            w3 AS w_rare, w4 AS w_e FROM w{r}_"""
-        for r in range(1, epochs + 1)
+        for r in range(1, PERCEPTRON_EPOCHS + 1)
     )
-    return _perceptron_cte(epochs) + "\n    " + rows
+    return _perceptron_cte() + "\n    " + rows
 
 
-def _classifier_manifest_sql(epochs: int = 8, keep_pm: int = 600) -> str:
+def _classifier_manifest_sql() -> str:
     # Percentile-calibrated selection, like the Spark side: global
     # (margin DESC, doc_id) total order, keep rank <= (N*600)//1000.
-    return _perceptron_cte(epochs) + f""",
+    return _perceptron_cte() + f""",
     scored AS (
       SELECT f.lang, f.source, f.n_chars,
              row_number() OVER (
                ORDER BY w.w0 * f.x0 + w.w1 * f.x1 + w.w2 * f.x2
                         + w.w3 * f.x3 + w.w4 * f.x4 DESC, f.doc_id
              ) AS rk
-      FROM f, w{epochs}_ w),
+      FROM f, w{PERCEPTRON_EPOCHS}_ w),
     kept AS (
       SELECT lang, source, n_chars,
              CASE WHEN rk <= ((SELECT CAST(count(*) AS BIGINT) FROM f)
-                              * {keep_pm}) // 1000
+                              * {KEEP_PER_MILLE}) // 1000
                   THEN 1 ELSE 0 END AS keep
       FROM scored)
     SELECT lang, source,
@@ -201,13 +207,13 @@ ORACLES_R14["classifier_curation_manifest"] = _classifier_manifest_sql()
 # (lang, source) grid. The streaming side must land on identical
 # BIGINT margin sums or the stream-side feature expressions / weight
 # hand-off drifted from the batch fit.
-def _stream_scores_oracle_sql(epochs: int = 8) -> str:
-    return _perceptron_cte(epochs) + f""",
+def _stream_scores_oracle_sql() -> str:
+    return _perceptron_cte() + f""",
     smargins AS (
       SELECT f.lang, f.source,
              w.w0 * f.x0 + w.w1 * f.x1 + w.w2 * f.x2
                + w.w3 * f.x3 + w.w4 * f.x4 AS mar
-      FROM f, w{epochs}_ w)
+      FROM f, w{PERCEPTRON_EPOCHS}_ w)
     SELECT lang, source,
            CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(mar) AS BIGINT) AS margin_sum,

@@ -10,6 +10,8 @@ column names and bit-identical values under the driver normalization
 
 from __future__ import annotations
 
+from kickstarter_etl_pipeline_spark.constants import BPE_ROUNDS
+
 ORACLES_R15: dict[str, str] = {}
 
 
@@ -26,7 +28,7 @@ ORACLES_R15: dict[str, str] = {}
 # symbols_after from v{r}, so a selection-only replay that skipped the
 # application step cannot hash-match. v{r} is MATERIALIZED because it
 # feeds both p{r+1} and m{r}'s scalar subquery (device 7).
-def _bpe_train_cte(rounds: int = 8) -> str:
+def _bpe_train_cte() -> str:
     """The shared WITH chain: toks → v0 (word-frequency table, each
     word as a space-joined symbol string, carrying the word itself so
     the tokenized-stats tail can join the corpus back to its
@@ -42,7 +44,7 @@ def _bpe_train_cte(rounds: int = 8) -> str:
              trim(regexp_replace(w, '(.)', '\\1 ', 'g')) AS seq
       FROM toks WHERE length(w) >= 2 GROUP BY w)"""
     steps = []
-    for r in range(1, rounds + 1):
+    for r in range(1, BPE_ROUNDS + 1):
         steps.append(f""",
     p{r} AS (
       SELECT syms[i] AS lhs, syms[i + 1] AS rhs,
@@ -69,11 +71,11 @@ def _bpe_train_cte(rounds: int = 8) -> str:
     return head + "".join(steps)
 
 
-def _bpe_train_oracle_sql(rounds: int = 8) -> str:
+def _bpe_train_oracle_sql() -> str:
     return (
-        _bpe_train_cte(rounds)
+        _bpe_train_cte()
         + "\n    SELECT * FROM ("
-        + " UNION ALL ".join(f"SELECT * FROM m{r}" for r in range(1, rounds + 1))
+        + " UNION ALL ".join(f"SELECT * FROM m{r}" for r in range(1, BPE_ROUNDS + 1))
         + ") ORDER BY merge_rank"
     )
 
@@ -88,8 +90,8 @@ ORACLES_R15["bpe_train_merges"] = _bpe_train_oracle_sql()
 # tokenization, and aggregates the tokenizer-quality grid. The micro
 # ratios use `//` on non-negative BIGINTs (== Spark DIV); DuckDB
 # sum(BIGINT) → HUGEINT is cast back per the r13 gotcha.
-def _bpe_stats_oracle_sql(rounds: int = 8) -> str:
-    return _bpe_train_cte(rounds) + f""",
+def _bpe_stats_oracle_sql() -> str:
+    return _bpe_train_cte() + f""",
     docw AS (
       SELECT lang, source, w FROM (
         SELECT lang, source,
@@ -101,7 +103,7 @@ def _bpe_stats_oracle_sql(rounds: int = 8) -> str:
              CAST(count(*) AS BIGINT) AS n_words,
              CAST(sum(len(string_split(v.seq, ' '))) AS BIGINT) AS bpe_tokens,
              CAST(sum(length(docw.w)) AS BIGINT) AS n_chars
-      FROM docw JOIN v{rounds} v USING (w)
+      FROM docw JOIN v{BPE_ROUNDS} v USING (w)
       GROUP BY 1, 2)
     SELECT lang, source, n_words, bpe_tokens, n_chars,
            (bpe_tokens * 1000000) // n_words AS fertility_micro,
@@ -118,8 +120,8 @@ ORACLES_R15["bpe_tokenized_stats"] = _bpe_stats_oracle_sql()
 # v8; sub-2-char words count 1 symbol via the LEFT join coalesce) and
 # replays the concat-and-split packing rule (the pack_sequences
 # window arithmetic) under those counts.
-def _bpe_pack_oracle_sql(rounds: int = 8) -> str:
-    return _bpe_train_cte(rounds) + f""",
+def _bpe_pack_oracle_sql() -> str:
+    return _bpe_train_cte() + f""",
     dw AS (
       SELECT doc_id, source,
              unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
@@ -128,7 +130,7 @@ def _bpe_pack_oracle_sql(rounds: int = 8) -> str:
       SELECT doc_id, any_value(source) AS source,
              CAST(sum(coalesce(len(string_split(v.seq, ' ')), 1)) AS BIGINT)
                AS n_bpe_tokens
-      FROM dw LEFT JOIN v{rounds} v USING (w)
+      FROM dw LEFT JOIN v{BPE_ROUNDS} v USING (w)
       GROUP BY doc_id),
     c AS (
       SELECT *, sum(n_bpe_tokens) OVER (PARTITION BY source ORDER BY doc_id

@@ -18,10 +18,10 @@ from contextlib import redirect_stdout
 from pyspark.sql import DataFrame
 
 
-def explain_text(df: DataFrame, mode: str = "formatted") -> str:
+def explain_text(df: DataFrame) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
-        df.explain(mode)
+        df.explain("formatted")
     return buf.getvalue()
 
 

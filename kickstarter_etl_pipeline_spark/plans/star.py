@@ -11,7 +11,8 @@ Two variants of the reference's extract→transform→load flow
   date-dim from ``o_orderdate``, fact = ``lineitem ⋈ orders ⋈ part``.
 
 Both produce the dims + keyed fact lazily; the caller decides when/where
-to materialize (tests collect; sinks write partitioned parquet).
+to materialize (tests collect; ``plans.warehouse.load_warehouse`` writes
+the range-clustered warehouse).
 """
 
 from __future__ import annotations

@@ -170,7 +170,7 @@ def q_dpp_join_prune_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "order_year", F.year("o_orderdate").cast("int")
     )
     path = run_scratch_dir("dpp_orders_") + "/t"
-    write_parquet(orders, path, partition_by=["order_year"])
+    write_parquet(orders, path)
     dim = (
         orders.groupBy(F.col("order_year").alias("dim_year"))
         .agg(F.count("*").cast("long").alias("n_year"))
@@ -204,7 +204,7 @@ def q_partitioned_prune_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "order_year", F.year("o_orderdate").cast("int")
     )
     path = run_scratch_dir("part_orders_") + "/t"
-    write_parquet(orders, path, partition_by=["order_year"])
+    write_parquet(orders, path)
     return (
         spark.read.parquet(path)
         .filter(F.col("order_year") == 1998)

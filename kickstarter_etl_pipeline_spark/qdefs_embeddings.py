@@ -9,6 +9,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from kickstarter_etl_pipeline_spark.constants import (
+    EMBED_DIM,
+    LSH_NUM_PLANES,
+    LSH_NUM_TABLES,
+    LSH_N_PROBE,
+)
 from kickstarter_etl_pipeline_spark.operators import events as EV  # noqa: F401
 from kickstarter_etl_pipeline_spark.operators import text as TX  # noqa: F401
 from kickstarter_etl_pipeline_spark.operators.dedup import (  # noqa: F401
@@ -65,8 +71,8 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-rescored bit-equal, recall ≥ 0.8 vs exact top-k."""
     emb = load_table(spark, sf_dir, "embeddings")
     return lsh_topk(
-        emb, query_anchors(emb, 20), dim=64, k=5,
-        num_planes=3, num_tables=6, n_probe=2,
+        emb, query_anchors(emb, 20), dim=EMBED_DIM,
+        num_planes=LSH_NUM_PLANES, num_tables=LSH_NUM_TABLES, n_probe=LSH_N_PROBE,
     )
 
 
@@ -82,7 +88,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return ivf_lloyd_topk(
-        emb, query_anchors(emb, 20), k=5, n_clusters=8, n_probe=4, n_iters=5
+        emb, query_anchors(emb, 20)
     )
 
 
@@ -104,7 +110,7 @@ def q_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = query_anchors(emb, 20)
     exact = brute_force_topk(emb, queries, k=5).select("query_id", "neighbor_id")
     approx = ivf_lloyd_topk(
-        emb, queries, k=5, n_clusters=8, n_probe=4, n_iters=5
+        emb, queries
     ).select("query_id", "neighbor_id", F.lit(1).alias("_hit"))
     return (
         exact.join(approx, ["query_id", "neighbor_id"], "left")
@@ -143,7 +149,7 @@ def q_ann_ivf_anchor_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return ivf_anchor_topk(
-        emb, query_anchors(emb, 20), k=5, n_cells=16, n_probe=4
+        emb, query_anchors(emb, 20)
     )
 
 

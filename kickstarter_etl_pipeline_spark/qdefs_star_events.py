@@ -365,7 +365,7 @@ def q_user_clustering_coeffs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
-    edges = cooccurrence_edges(ev, event_type="error", bucket_seconds=1800)
+    edges = cooccurrence_edges(ev, bucket_seconds=1800)
     return clustering_coefficients(edges).select(
         F.col("id").alias("user_id"), "degree", "n_triangles", "clustering_coeff"
     )
@@ -380,7 +380,7 @@ def q_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kickstarter_etl_pipeline_spark.operators.similarity import quantized_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return quantized_topk(emb, query_anchors(emb, 20), k=5, shortlist=20)
+    return quantized_topk(emb, query_anchors(emb, 20))
 
 
 def q_user_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -395,7 +395,7 @@ def q_user_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
-    edges = cooccurrence_edges(ev, event_type="error", bucket_seconds=1800)
+    edges = cooccurrence_edges(ev, bucket_seconds=1800)
     return triangle_counts(edges).select(
         F.col("id").alias("user_id"), "degree", "n_triangles"
     )
@@ -538,7 +538,7 @@ def q_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return prefix_filtered_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"), threshold_num=7, threshold_den=10
+        load_table(spark, sf_dir, "documents")
     )
 
 
@@ -553,7 +553,7 @@ def q_minhash_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold boundary (far lower for the higher-Jaccard pairs the
     fixture contains). Verified equal to the exact tier at sf0.001,
     0.01 and 0.1; the equality invariant is also pinned in pytest."""
-    return minhash_dedup_pairs(load_table(spark, sf_dir, "documents"), threshold=0.8)
+    return minhash_dedup_pairs(load_table(spark, sf_dir, "documents"))
 
 
 def q_simhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -666,8 +666,6 @@ def q_simhash_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id"),
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
         id_col="doc_id",
-        src_col="src",
-        dst_col="dst",
     )
     sizes = comp.groupBy("component_id").agg(F.count("*").alias("n_members"))
     return comp.join(sizes, on="component_id").select(
@@ -755,7 +753,7 @@ def q_boilerplate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kickstarter_etl_pipeline_spark.operators.corpus import boilerplate_stats
 
     return boilerplate_stats(
-        load_table(spark, sf_dir, "documents"), n=3, min_doc_freq=5
+        load_table(spark, sf_dir, "documents"), min_doc_freq=5
     )
 
 

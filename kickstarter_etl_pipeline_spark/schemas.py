@@ -1,10 +1,11 @@
-"""Explicit schemas for every source and warehouse table.
+"""Explicit schemas for the sources read without a footer to trust: the
+raw Kickstarter CSV and the events stream.
 
 The reference infers all types from CSV (reference ``src/etl_pipeline.py:53``
-— pandas ``read_csv`` with no dtype) and declares only the warehouse DDL
-(reference ``sql/create_tables.sql:1-43``). At 100 TB, inference is slow and
-nondeterministic, so the engine declares StructTypes for everything and keeps
-inference as an opt-in parity mode (sources.readers.read_csv).
+— pandas ``read_csv`` with no dtype). At 100 TB, inference is slow and
+nondeterministic, so the engine declares the CSV's StructType and keeps
+inference as an opt-in parity mode (sources.readers.read_csv). The
+warehouse tables take their schema from the transforms that build them.
 
 Types follow SURVEY.md §1.2: money stays DoubleType (the reference and its
 SQLite warehouse use float64/REAL, and the DuckDB oracle hashes doubles);
@@ -38,50 +39,6 @@ KICKSTARTER_RAW = T.StructType(
     ]
 )
 
-# --- Warehouse star schema (reference sql/create_tables.sql:1-43) ---
-DIM_STATE = T.StructType(
-    [
-        T.StructField("state_key", T.IntegerType(), False),
-        T.StructField("state_name", T.StringType(), False),
-        T.StructField("is_successful", T.IntegerType(), False),
-    ]
-)
-
-DIM_CATEGORY = T.StructType(
-    [
-        T.StructField("category_key", T.IntegerType(), False),
-        T.StructField("main_category_name", T.StringType(), False),
-        T.StructField("sub_category_name", T.StringType(), False),
-    ]
-)
-
-DIM_DATE = T.StructType(
-    [
-        T.StructField("date_key", T.IntegerType(), False),
-        T.StructField("full_date", T.StringType(), False),
-        T.StructField("year", T.IntegerType(), False),
-        T.StructField("quarter", T.IntegerType(), False),
-        T.StructField("month", T.IntegerType(), False),
-        T.StructField("day", T.IntegerType(), False),
-        T.StructField("day_of_week", T.StringType(), False),
-        T.StructField("is_weekend", T.IntegerType(), False),
-    ]
-)
-
-FACT_CAMPAIGNS = T.StructType(
-    [
-        T.StructField("campaign_id", T.LongType(), False),
-        T.StructField("name", T.StringType(), False),
-        T.StructField("backers", T.LongType()),
-        T.StructField("pledged_usd", T.DoubleType()),
-        T.StructField("goal_usd", T.DoubleType()),
-        T.StructField("duration_days", T.DoubleType()),
-        T.StructField("state_key", T.IntegerType()),
-        T.StructField("category_key", T.IntegerType()),
-        T.StructField("launched_date_key", T.IntegerType()),
-    ]
-)
-
 # --- Driver fixture tables (/root/testdata/sf*/; FIXTURES.md §B) ---
 # The physical layout of events.ts has varied across fixture generations
 # (int64 nanoseconds in early rounds; parquet TIMESTAMP(µs) currently), so
@@ -111,35 +68,3 @@ def events_schema(ts_dtype: str = "timestamp_ntz") -> T.StructType:
         ]
     )
 
-
-DOCUMENTS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ]
-)
-
-EMBEDDINGS = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        T.StructField("label", T.IntegerType()),
-    ]
-)
-
-#: All fixture table names shipped by the driver (TESTDATA.md).
-FIXTURE_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)

@@ -38,7 +38,6 @@ def write_range_clustered(
     path: str,
     cols: str | list[str],
     num_files: int = 8,
-    mode: str = "overwrite",
 ) -> None:
     """Write :func:`range_clustered` ``df`` as parquet at ``path``."""
-    range_clustered(df, cols, num_files).write.mode(mode).parquet(path)
+    range_clustered(df, cols, num_files).write.mode("overwrite").parquet(path)

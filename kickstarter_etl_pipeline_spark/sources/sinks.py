@@ -1,4 +1,4 @@
-"""Sinks: Parquet/table append, idempotent append, partitioned fact layout.
+"""Sinks: Parquet/table append, idempotent append, the partitioned writer.
 
 The reference loads via sqlite3 ``executemany`` (S3, ``src/etl_pipeline.py:
 197-201,272-277``) and relies on ``INSERT OR IGNORE`` for idempotency (S4,
@@ -6,7 +6,9 @@ The reference loads via sqlite3 ``executemany`` (S3, ``src/etl_pipeline.py:
 
 - plain append       → ``df.write.mode('append')`` (parallel, partitioned)
 - INSERT OR IGNORE   → left-anti join against the existing keys, then append
-- fact layout        → partition by the date key so date-range queries prune
+- partitioned write  → ``write_parquet`` partitions by ``order_year``; it backs
+  the two ``warehouse_queries`` partition-pruning queries (the warehouse
+  fact itself is range-clustered, see ``bucketing``)
 """
 
 from __future__ import annotations
@@ -14,11 +16,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+def write_parquet(df: DataFrame, path: str) -> None:
+    """Overwrite ``path`` with ``df`` partitioned by ``order_year``."""
+    df.write.mode("overwrite").partitionBy("order_year").parquet(path)
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -122,10 +122,9 @@ def compact_parquet(
     spark: SparkSession,
     path: str,
     target_files: int | None = None,
-    target_mb: int = 128,
 ) -> int:
     """Small-file compaction: rewrite a parquet dataset into
-    ``target_files`` files (default: sized so each is ~``target_mb``).
+    ``target_files`` files (default: sized so each is ~128 MB).
 
     Streaming appends and fine-grained idempotent inserts accumulate
     small files; at object-store scale the per-file overhead (listing,
@@ -149,7 +148,7 @@ def compact_parquet(
     jvm = spark._jvm
     if target_files is None:
         total_bytes = fs.getContentSummary(src).getLength()
-        target_files = max(1, int(total_bytes // (target_mb * 1024 * 1024)) + 1)
+        target_files = max(1, int(total_bytes // (128 * 1024 * 1024)) + 1)
     tmp = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "_compact_tmp")
     backup = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "_compact_backup")
     df = spark.read.parquet(path)
@@ -211,7 +210,6 @@ def incremental_distinct_rollup(
     batch: DataFrame,
     keys: list[str],
     distinct_col: str,
-    lg_k: int = 12,
 ) -> DataFrame:
     """Incrementally maintain a stored COUNT(DISTINCT) rollup with
     mergeable HyperLogLog sketch partials (Apache DataSketches via
@@ -220,7 +218,7 @@ def incremental_distinct_rollup(
     Exact distinct counts are NOT monoids — they can't be maintained by
     :func:`incremental_rollup_update`'s count/sum folding without
     keeping every member. Sketches restore the monoid property: each
-    batch contributes a fixed-size (2^lg_k registers) binary partial
+    batch contributes a fixed-size (2^12 registers) binary partial
     per key, stored partials and batch partials merge associatively,
     and the estimate is read off the merged sketch. This is the 100 TB
     pattern for "distinct users per day, updated nightly": the nightly
@@ -231,7 +229,7 @@ def incremental_distinct_rollup(
     Returns the updated rollup (keys + ``hll_sketch`` binary).
     """
     partial = batch.groupBy(*keys).agg(
-        F.hll_sketch_agg(F.col(distinct_col).cast("string"), lg_k).alias("hll_sketch")
+        F.hll_sketch_agg(F.col(distinct_col).cast("string"), 12).alias("hll_sketch")
     )
     existing = _read_existing(spark, path)
     if existing is not None:
@@ -260,8 +258,6 @@ def apply_cdc_batch(
     path: str,
     changes: DataFrame,
     keys: list[str],
-    seq_col: str = "seq",
-    op_col: str = "op",
 ) -> DataFrame:
     """Apply a CDC change batch (Debezium-style rows tagged I/U/D with a
     monotonically increasing sequence) to a stored table: per key, the
@@ -279,14 +275,14 @@ def apply_cdc_batch(
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(*keys).orderBy(F.desc(seq_col))
+    w = Window.partitionBy(*keys).orderBy(F.desc("seq"))
     latest = (
         changes.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    data_cols = [c for c in latest.columns if c not in (seq_col, op_col)]
-    upserts = latest.filter(F.col(op_col).isin("I", "U")).select(*data_cols)
+    data_cols = [c for c in latest.columns if c not in ("seq", "op")]
+    upserts = latest.filter(F.col("op").isin("I", "U")).select(*data_cols)
     removed_or_replaced = latest.select(*keys)  # D keys vanish; I/U keys are replaced
     existing = _read_existing(spark, path)
     if existing is None:
@@ -354,26 +350,17 @@ def _latest_committed_by_scan(spark: SparkSession, table_dir: str) -> int | None
     return best
 
 
-def snapshot_version(
-    spark: SparkSession, table_dir: str, scan_recovery: bool = True
-) -> int | None:
+def snapshot_version(spark: SparkSession, table_dir: str) -> int | None:
     """Current committed version, or None for an empty table. The
     pointer is read through the Hadoop FileSystem stream (Spark's text
     reader silently skips ``_``-prefixed metadata files), so the same
     code path works on any filesystem scheme the session can reach.
     A missing pointer falls back to scanning committed ``v=K``
     directories so a crash inside the pointer swap window (or a lost
-    pointer file) never makes committed data unreadable.
-
-    ``scan_recovery=False`` opts into strictly pointer-committed
-    semantics: a missing pointer then reads as an empty table instead
-    of silently rolling FORWARD to a data-committed-but-unpublished
-    snapshot (the r6 ADVICE distinction). The scan path, when taken,
+    pointer file) never makes committed data unreadable. The scan path, when taken,
     logs a WARNING so crash recovery is observable, never silent."""
     fs, ptr = _version_pointer(spark, table_dir)
     if not fs.exists(ptr):
-        if not scan_recovery:
-            return None
         recovered = _latest_committed_by_scan(spark, table_dir)
         if recovered is not None:
             import logging

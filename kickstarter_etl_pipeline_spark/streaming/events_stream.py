@@ -30,6 +30,9 @@ from kickstarter_etl_pipeline_spark.operators.partitioning import (
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.session import ensure_runtime_confs
 
+#: Event-time watermark delay of the memory-sink streaming queries.
+WATERMARK = "2 hours"
+
 
 def _probe_events_ts_dtype(spark: SparkSession, src_dir: str, glob: str) -> str:
     """One driver-side footer read: the dtype Spark's batch reader infers
@@ -84,12 +87,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_events_raw_stream(spark, sf_dir, glob="events.parquet")
 
 
-def streaming_tumbling_counts(
-    spark: SparkSession,
-    sf_dir: str,
-    window_duration: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling-window aggregation, run to completion with
     AvailableNow against the fixture, returning the final batch result.
 
@@ -105,8 +103,8 @@ def streaming_tumbling_counts(
     """
     stream = read_events_stream(spark, sf_dir)
     agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_duration).alias("w"), "event_type")
+        stream.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 4).alias("sum_value"),
@@ -134,13 +132,7 @@ def streaming_tumbling_counts(
     return spark.table(name)
 
 
-def streaming_sliding_counts(
-    spark: SparkSession,
-    sf_dir: str,
-    window_duration: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked sliding-window aggregation (AvailableNow); semantics
     match operators.events.sliding_window_agg so the batch oracle
     verifies the streaming path.
@@ -150,8 +142,8 @@ def streaming_sliding_counts(
     production append-mode pattern."""
     stream = read_events_stream(spark, sf_dir)
     agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_duration, slide).alias("w"), "event_type")
+        stream.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 4).alias("sum_value"),
@@ -177,12 +169,7 @@ def streaming_sliding_counts(
     return spark.table(name)
 
 
-def streaming_session_windows(
-    spark: SparkSession,
-    sf_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native session windows (gap-merged) per user — the custom-stateful
     streaming operator the reference has no analog for. AvailableNow +
     memory sink; approximate-by-watermark, so checked rows-only.
@@ -192,8 +179,8 @@ def streaming_session_windows(
     production append-mode pattern."""
     stream = read_events_stream(spark, sf_dir)
     agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        stream.withWatermark("ts", WATERMARK)
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 4).alias("sum_value"))
         .select(
             "user_id",
@@ -246,9 +233,6 @@ def stream_tumbling_append_parquet(
     src_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    window_duration: str = "1 hour",
-    watermark: str = "1 hour",
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """PRODUCTION TIER: watermarked tumbling aggregation in APPEND mode
     to an exactly-once parquet sink.
@@ -258,18 +242,18 @@ def stream_tumbling_append_parquet(
     evicted, so state size stays bounded by open windows and nothing
     materializes on the driver. Events arriving later than the
     watermark allows are DROPPED (the late-data contract; assert-tested
-    in tests). ``max_files_per_trigger`` splits a file-source backlog
+    in tests). One file per trigger splits a file-source backlog
     into multiple micro-batches so watermark progression between
     batches is observable with AvailableNow.
 
     Returns the sink contents read back as a batch frame.
     """
     events = read_events_raw_stream(
-        spark, src_dir, glob="*.parquet", max_files_per_trigger=max_files_per_trigger
+        spark, src_dir, glob="*.parquet", max_files_per_trigger=1
     )
     agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_duration).alias("w"), "event_type")
+        events.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 4).alias("sum_value"),
@@ -297,7 +281,6 @@ def streaming_static_enrich(
     spark: SparkSession,
     sf_dir: str,
     dim: DataFrame,
-    on: str = "event_type",
 ) -> DataFrame:
     """Stream-static join: enrich the event stream with a static
     dimension (broadcast per micro-batch — the static side never
@@ -308,7 +291,7 @@ def streaming_static_enrich(
     FIXTURE-VERIFICATION TIER (complete+memory); equals the batch join
     by construction, asserted in tests."""
     stream = read_events_stream(spark, sf_dir)
-    enriched = stream.join(F.broadcast(dim), on=on)
+    enriched = stream.join(F.broadcast(dim), on="event_type")
     agg = enriched.groupBy("category").agg(
         F.count("*").alias("n_events"),
         F.round(F.sum("value"), 4).alias("sum_value"),
@@ -330,15 +313,13 @@ def streaming_static_enrich(
 def streaming_purchase_click_join(
     spark: SparkSession,
     sf_dir: str,
-    watermark: str = "2 hours",
-    lookback: str = "1 hour",
     how: str = "inner",
     unmatched_only: bool = False,
 ) -> DataFrame:
     """Stream-stream self-join: each purchase matched to the same
-    user's clicks within the preceding ``lookback`` — the attribution
+    user's clicks within the preceding hour — the attribution
     join, expressed as Structured Streaming's watermarked interval
-    join. Both sides buffer only ``watermark + lookback`` of state; the
+    join. Both sides buffer only ``WATERMARK`` + 1 hour of state; the
     time-range condition is what lets Spark evict — an unconstrained
     stream-stream join would buffer forever.
 
@@ -368,7 +349,7 @@ def streaming_purchase_click_join(
             F.col("ts").alias("p_ts"),
             F.col("event_id").alias("purchase_id"),
         )
-        .withWatermark("p_ts", watermark)
+        .withWatermark("p_ts", WATERMARK)
     )
     clicks = (
         ev.filter(F.col("event_type") == "click")
@@ -377,13 +358,13 @@ def streaming_purchase_click_join(
             F.col("ts").alias("c_ts"),
             F.col("event_id").alias("click_id"),
         )
-        .withWatermark("c_ts", watermark)
+        .withWatermark("c_ts", WATERMARK)
     )
     joined = purchases.join(
         clicks,
         (F.col("user_id") == F.col("c_user_id"))
         & (F.col("c_ts") <= F.col("p_ts"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {lookback}")),
+        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 hour")),
         how,
     ).select(
         # full_outer adds right-only rows whose purchase side is NULL —
@@ -415,8 +396,6 @@ def stream_upsert_rollup(
     src_dir: str,
     table_path: str,
     checkpoint_dir: str,
-    window_duration: str = "1 hour",
-    watermark: str = "1 hour",
     max_files_per_trigger: int = 0,
     path_glob: str = "*.parquet",
 ) -> DataFrame:
@@ -444,8 +423,8 @@ def stream_upsert_rollup(
         spark, src_dir, glob=path_glob, max_files_per_trigger=max_files_per_trigger
     )
     agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_duration).alias("w"), "event_type")
+        events.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 4).alias("sum_value"),
@@ -474,11 +453,7 @@ def stream_upsert_rollup(
     return spark.read.parquet(table_path)
 
 
-def streaming_hourly_daily_rollup(
-    spark: SparkSession,
-    sf_dir: str,
-    watermark: str = "2 hours",
-) -> DataFrame:
+def streaming_hourly_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CHAINED stateful operators in one streaming query (Spark ≥ 3.5
     multiple-stateful-operator support): a watermarked hourly tumbling
     aggregation feeds a SECOND windowed aggregation that rolls the
@@ -516,7 +491,7 @@ def streaming_hourly_daily_rollup(
     child = isolated_session(spark, {"spark.sql.shuffle.partitions": str(STATE_PARTITIONS)})
     stream = read_events_stream(child, sf_dir)
     hourly = (
-        stream.withWatermark("ts", watermark)
+        stream.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
@@ -554,11 +529,7 @@ def streaming_hourly_daily_rollup(
     return child.table(name)
 
 
-def streaming_dedup_counts(
-    spark: SparkSession,
-    sf_dir: str,
-    delay: str = "24 hours",
-) -> DataFrame:
+def streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """At-least-once replay collapse: dropDuplicatesWithinWatermark on
     the (user_id, event_type, minute-bucket) key, then a BATCH rollup of
     the deduplicated stream — per event_type, how many distinct keys
@@ -574,7 +545,7 @@ def streaming_dedup_counts(
     stream = read_events_stream(spark, sf_dir)
     deduped = (
         stream.withColumn("minute_bucket", F.date_trunc("minute", F.col("ts")))
-        .withWatermark("ts", delay)
+        .withWatermark("ts", "24 hours")
         .dropDuplicatesWithinWatermark(["user_id", "event_type", "minute_bucket"])
         .select("user_id", "event_type", "minute_bucket")
     )

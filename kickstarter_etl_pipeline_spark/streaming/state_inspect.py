@@ -22,18 +22,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def state_rows(
-    spark: SparkSession,
-    checkpoint_dir: str,
-    batch_id: int | None = None,
-    operator_id: int = 0,
-) -> DataFrame:
-    """Raw key/value state rows of one operator at one batch (latest
-    committed batch when ``batch_id`` is None)."""
-    reader = spark.read.format("statestore").option("operatorId", str(operator_id))
-    if batch_id is not None:
-        reader = reader.option("batchId", str(batch_id))
-    return reader.load(checkpoint_dir)
+def state_rows(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
+    """Raw key/value state rows of operator 0 at the latest committed
+    batch."""
+    return spark.read.format("statestore").option("operatorId", "0").load(checkpoint_dir)
 
 
 def open_window_state(spark: SparkSession, checkpoint_dir: str) -> DataFrame:

@@ -139,13 +139,11 @@ def _session_timeout_fn(
         yield pd.DataFrame(rows, columns=cols)
 
 
-def stateful_sessionize_with_timeout(
-    spark: SparkSession, sf_dir: str, watermark: str = "1 minute"
-) -> DataFrame:
+def stateful_sessionize_with_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the event-time-timeout sessionizer over the events fixture
     (AvailableNow) and return the emitted rows. Production eviction
     semantics — see module docstring."""
-    stream = read_events_stream(spark, sf_dir).withWatermark("ts", watermark)
+    stream = read_events_stream(spark, sf_dir).withWatermark("ts", "1 minute")
     sessions = stream.groupBy("user_id").applyInPandasWithState(
         _session_timeout_fn,
         outputStructType=TIMEOUT_SESSION_SCHEMA,

@@ -318,9 +318,7 @@ class TimeoutSessionProcessor(StatefulProcessor):
         pass
 
 
-def tws_sessionize_with_timeout(
-    spark: SparkSession, sf_dir: str, watermark: str = "1 minute"
-) -> DataFrame:
+def tws_sessionize_with_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the event-time-timer sessionizer (StatefulProcessor API)
     over the events fixture with AvailableNow; emitted rows equal
     stateful_sessionize_with_timeout's exactly (same oracle)."""
@@ -340,7 +338,7 @@ def tws_sessionize_with_timeout(
             "spark.sql.shuffle.partitions": str(STATE_PARTITIONS),
         },
     )
-    stream = read_events_stream(child, sf_dir).withWatermark("ts", watermark)
+    stream = read_events_stream(child, sf_dir).withWatermark("ts", "1 minute")
     sessions = stream.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=TimeoutSessionProcessor(),
         outputStructType=TIMEOUT_SESSION_SCHEMA,

@@ -104,7 +104,7 @@ def test_boilerplate_stats_shared_vs_unique(spark):
     rows = [(i, f"{shared} suffix{i} word{i} tail{i}") for i in range(1, 4)]
     rows += [(4, "completely different unrelated text here now"), (5, "tiny doc")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in boilerplate_stats(docs, n=3, min_doc_freq=3).collect()}
+    out = {r["doc_id"]: r for r in boilerplate_stats(docs, min_doc_freq=3).collect()}
     # The 3 shared-prefix docs each contain the 3 boilerplate trigrams
     # of "the quick brown fox jumps".
     for i in (1, 2, 3):
@@ -160,7 +160,7 @@ def test_bigram_collocation_lift_is_exact(spark):
     docs = spark.createDataFrame(
         [(1, "a b c a b c"), (2, "a x y z b x")], "doc_id long, text string"
     )
-    out = {(r["tok_a"], r["tok_b"]): r for r in bigram_collocations(docs, top_k=50).collect()}
+    out = {(r["tok_a"], r["tok_b"]): r for r in bigram_collocations(docs).collect()}
     r = out[("a", "b")]
     assert r["n_pair"] == 2 and r["n_a"] == 3 and r["n_b"] == 3
     # lift = (2/10) / ((3/12)*(3/12)) = 0.2 / 0.0625 = 3.2
@@ -189,7 +189,7 @@ def test_pagerank_star_graph(spark):
     from kickstarter_etl_pipeline_spark.operators.graph import pagerank
 
     edges = spark.createDataFrame([(0, i) for i in range(1, 6)], "u long, v long")
-    out = {r["id"]: r["pr_permille"] for r in pagerank(edges, iterations=10).collect()}
+    out = {r["id"]: r["pr_permille"] for r in pagerank(edges).collect()}
     assert len(out) == 6
     hub, leaves = out[0], [out[i] for i in range(1, 6)]
     assert all(hub > l for l in leaves)

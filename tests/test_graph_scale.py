@@ -54,7 +54,7 @@ def test_hot_bucket_pair_count_is_linear(spark):
     the quadratic C(1000,2) = 499,500 the unsalted key produces."""
     n = 1000
     ev = EV.with_unix_micros(_hot_bucket_events(spark, n))
-    edges = cooccurrence_edges(ev, event_type="error", bucket_seconds=1800)
+    edges = cooccurrence_edges(ev, bucket_seconds=1800)
     full, rem = divmod(n, OCCUPANCY_CAP)
     expected = full * (OCCUPANCY_CAP * (OCCUPANCY_CAP - 1) // 2) + rem * (rem - 1) // 2
     assert expected == 31020  # the arithmetic the docstring promises
@@ -78,7 +78,7 @@ def test_below_cap_identical_to_unsalted_join(spark):
     ev = EV.with_unix_micros(load_table(spark, SF, "events"))
     capped = {
         (r["u"], r["v"])
-        for r in cooccurrence_edges(ev, event_type="error", bucket_seconds=1800).collect()
+        for r in cooccurrence_edges(ev, bucket_seconds=1800).collect()
     }
     nodes = (
         ev.filter(F.col("event_type") == "error")
@@ -103,7 +103,7 @@ def test_duckdb_twin_replays_identical_edges(spark):
     ev = EV.with_unix_micros(load_table(spark, SF, "events"))
     spark_edges = {
         (r["u"], r["v"])
-        for r in cooccurrence_edges(ev, event_type="error", bucket_seconds=600).collect()
+        for r in cooccurrence_edges(ev, bucket_seconds=600).collect()
     }
     con = duckdb.connect()
     con.execute(
@@ -125,10 +125,10 @@ def test_wedge_degree_cap_excludes_hubs(spark):
     leaves = list(range(10_000, 10_300))
     rows = [(1, leaf) for leaf in leaves] + [(2, leaf) for leaf in leaves]
     edges = spark.createDataFrame(rows, ["u", "v"])
-    capped = common_neighbor_link_prediction(edges, min_common=2)
+    capped = common_neighbor_link_prediction(edges)
     assert {(r["u"], r["v"]) for r in capped.collect()} == {(1, 2)}
     uncapped = common_neighbor_link_prediction(
-        edges, min_common=2, wedge_degree_cap=None
+        edges, wedge_degree_cap=None
     )
     assert uncapped.count() == 300 * 299 // 2 + 1
 
@@ -139,12 +139,12 @@ def test_wedge_degree_cap_inert_below_cap(spark):
     rows = [(1, 10), (1, 11), (2, 10), (2, 11), (3, 10), (3, 11)]
     edges = spark.createDataFrame(rows, ["u", "v"])
     capped = {
-        tuple(r) for r in common_neighbor_link_prediction(edges, min_common=2).collect()
+        tuple(r) for r in common_neighbor_link_prediction(edges).collect()
     }
     uncapped = {
         tuple(r)
         for r in common_neighbor_link_prediction(
-            edges, min_common=2, wedge_degree_cap=None
+            edges, wedge_degree_cap=None
         ).collect()
     }
     assert capped == uncapped and len(capped) > 0
@@ -209,7 +209,7 @@ def test_cap_report_matches_actual_edge_count(spark):
 
     n = 150
     ev = EV.with_unix_micros(_hot_bucket_events(spark, n))
-    actual_edges = cooccurrence_edges(ev, event_type="error", bucket_seconds=1800).count()
+    actual_edges = cooccurrence_edges(ev, bucket_seconds=1800).count()
 
     # Drive the report over the same events by writing them as a
     # one-table sf dir the query loader can read.

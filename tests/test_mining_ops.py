@@ -55,7 +55,7 @@ def test_duplicate_ngram_spans_edges(spark):
         [(1, base), (2, base), (3, "too short"), (4, "u v w x y z q r s t")],
         "doc_id long, text string",
     )
-    out = {r["doc_id"]: r for r in duplicate_ngram_span_stats(docs, n=8).collect()}
+    out = {r["doc_id"]: r for r in duplicate_ngram_span_stats(docs).collect()}
     assert out[1]["n_positions"] == 3 and out[1]["n_dup_positions"] == 3
     assert out[1]["dup_ratio"] == 1.0 and out[2]["dup_ratio"] == 1.0
     assert out[3]["n_positions"] == 0 and out[3]["dup_ratio"] is None
@@ -87,7 +87,7 @@ def test_minhash_estimate_identical_docs(spark):
 
     text = "the quick brown fox jumps over the lazy dog again and again"
     docs = spark.createDataFrame([(1, text), (2, text)], "doc_id long, text string")
-    rows = minhash_md5_estimate_vs_exact(docs, num_hashes=16, candidate_threshold=0.3).collect()
+    rows = minhash_md5_estimate_vs_exact(docs).collect()
     assert len(rows) == 1
     r = rows[0]
     assert r["exact_jaccard"] == 1.0 and r["est_jaccard"] == 1.0 and r["abs_err"] == 0.0

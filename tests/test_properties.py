@@ -86,7 +86,7 @@ def test_minhash_pairs_subset_of_exact(docs):
     spark = _get_spark()
     df = spark.createDataFrame(list(enumerate(docs)), ["doc_id", "text"])
     exact = {(r["id_a"], r["id_b"]) for r in ngram_jaccard_pairs(df, threshold=0.8).collect()}
-    lsh = {(r["id_a"], r["id_b"]) for r in minhash_dedup_pairs(df, threshold=0.8).collect()}
+    lsh = {(r["id_a"], r["id_b"]) for r in minhash_dedup_pairs(df).collect()}
     assert lsh <= exact
     # identical docs are always caught (every band collides)
     identical = {

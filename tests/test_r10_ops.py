@@ -170,7 +170,7 @@ def test_assortativity_bounds(spark, sf_dir):
     row = q_graph_assortativity(spark, sf_dir).collect()[0]
     assert -1.0 <= row["assortativity"] <= 1.0
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
-    m = cooccurrence_edges(ev, event_type="error", bucket_seconds=1800).count()
+    m = cooccurrence_edges(ev, bucket_seconds=1800).count()
     assert row["n_endpoint_pairs"] == 2 * m
 
 

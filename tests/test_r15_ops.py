@@ -179,8 +179,8 @@ def test_let_bound_shingle_expr_matches_reference(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50)
     ref = (
-        with_shingles(docs, "text", "_sh", 3)
-        .withColumn("sig", minhash_signature("_sh", 64))
+        with_shingles(docs, 3)
+        .withColumn("sig", minhash_signature("_sh"))
         .select("doc_id", "_sh", "sig")
         .localCheckpoint(eager=True)
     )
@@ -234,7 +234,7 @@ def test_stream_near_dup_degenerate_docs(spark, tmp_path):
 
     from kickstarter_etl_pipeline_spark.operators.dedup import stream_near_dup_pairs
 
-    got = stream_near_dup_pairs(spark, str(tmp_path), threshold=0.8).collect()
+    got = stream_near_dup_pairs(spark, str(tmp_path)).collect()
     pairs = [(r["id_a"], r["id_b"], r["jaccard"]) for r in got]
     assert pairs == [(1, 0, 1.0)], pairs
 

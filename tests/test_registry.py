@@ -2,7 +2,8 @@
 oracle SQL are frozen by digest, so a refactor of how the registry is
 assembled cannot silently reorder, rebind or drop a query. The package
 itself must not carry definitions that nothing in production reaches,
-and COVERAGE.md's code references must resolve."""
+nor parameters that production only ever gives one value, and
+COVERAGE.md's code references must resolve."""
 
 from __future__ import annotations
 
@@ -25,6 +26,7 @@ ORACLES_DIGEST = "60c919530e387418bc73e44ef04e24bb294f4a779ab2f3a4eb5722eb1a0fdf
 
 ROOT = Path(__file__).resolve().parents[1]
 PKG = ROOT / "kickstarter_etl_pipeline_spark"
+PROD_FILES = sorted(PKG.rglob("*.py")) + [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
 DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 # Unreferenced on purpose: the reference-parity operators whose counts
@@ -100,25 +102,207 @@ def _references(node: ast.AST):
             yield n.value
 
 
+def _module_name(path: Path) -> str:
+    parts = path.relative_to(ROOT).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _imported_modules(tree: ast.Module) -> set[str]:
+    """Every module a file imports: ``import m`` and ``from m import n``
+    (m, and m.n in case n is a module). The package uses absolute
+    imports only."""
+    out = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Import):
+            out.update(a.name for a in n.names)
+        elif isinstance(n, ast.ImportFrom):
+            out.add(n.module)
+            out.update(f"{n.module}.{a.name}" for a in n.names)
+    return out
+
+
+def _top_level_names(top: ast.stmt) -> list[str]:
+    """Names a top-level def, class or assignment binds (dunders aside)."""
+    if isinstance(top, DEFS):
+        return [top.name]
+    if isinstance(top, (ast.Assign, ast.AnnAssign)):
+        targets = top.targets if isinstance(top, ast.Assign) else [top.target]
+        return [
+            n.id
+            for t in targets
+            for n in ast.walk(t)
+            if isinstance(n, ast.Name) and not n.id.startswith("__")
+        ]
+    return []
+
+
 def test_every_definition_has_a_production_reference():
-    """Every top-level def or class in the package is referenced from
-    the package, bench.py or __spark_entry__.py outside its own body.
-    Registry queries (``q_*``) are bound by name in queries.py."""
-    files = sorted(PKG.rglob("*.py")) + [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
-    defined, referenced = [], set()
-    for path in files:
-        for top in ast.parse(path.read_text()).body:
-            own = None
-            if isinstance(top, DEFS):
-                own = top.name
-                defined.append((own, f"{path.relative_to(ROOT)}:{top.lineno}"))
-            referenced.update(r for r in _references(top) if r != own)
-    unreached = [
-        f"{where} {name}"
-        for name, where in defined
-        if name not in referenced and not name.startswith("q_") and name not in TEST_ONLY_DEFS
-    ]
+    """Every top-level def, class or assignment in the package is
+    referenced from production code outside its own statement: from its
+    own module, or from a file in the package, bench.py or
+    __spark_entry__.py that imports that module. Registry queries
+    (``q_*``) are bound by name in queries.py."""
+    files = {}
+    for path in PROD_FILES:
+        tree = ast.parse(path.read_text())
+        files[_module_name(path)] = (path, tree, _imported_modules(tree), set(_references(tree)))
+    unreached = []
+    for module, (path, tree, _, _) in files.items():
+        if not path.is_relative_to(PKG):
+            continue
+        importers = [
+            refs for other, (_, _, imports, refs) in files.items() if module in imports and other != module
+        ]
+        stmt_refs = [set(_references(top)) for top in tree.body]
+        for i, top in enumerate(tree.body):
+            own = set().union(*stmt_refs[:i], *stmt_refs[i + 1 :])
+            for name in _top_level_names(top):
+                if name.startswith("q_") or name in TEST_ONLY_DEFS:
+                    continue
+                if name not in own and not any(name in refs for refs in importers):
+                    unreached.append(f"{path.relative_to(ROOT)}:{top.lineno} {name}")
     assert unreached == []
+
+
+# Defaulted parameters that production only ever gives one value, kept
+# because the named test passes another. Fix one by dropping its entry;
+# never add one: a new one-value parameter becomes a literal or a
+# constant instead.
+ONE_VALUE_PINS = {
+    "_prefix_candidates.positional": "test_scale_paths.py::test_positional_filter_prunes_without_losing_pairs",
+    "asof_join_forward.tolerance_us": "test_properties.py::test_asof_forward_matches_bruteforce",
+    "bellman_ford_distances.rounds": "test_scale_paths.py::test_bellman_ford_prefers_cheaper_multihop",
+    "betweenness_sampled.pivots": "test_scale_paths.py::test_betweenness_matches_reference_and_partitions",
+    "betweenness_sampled.rounds": "test_scale_paths.py::test_betweenness_matches_reference_and_partitions",
+    "bfs_depths.rounds": "test_scale_paths.py::test_bfs_depths_synthetic_and_partition_invariant",
+    "bloom_prefilter.n_bits": "test_mining_ops.py::test_bloom_prefilter_preserves_caller_columns",
+    "boilerplate_stats.min_doc_freq": "test_corpus_ops.py::test_boilerplate_stats_shared_vs_unique",
+    "chunk_documents.chunk_tokens": "test_corpus_ops.py::test_chunk_documents_short_and_strided",
+    "chunk_documents.stride": "test_corpus_ops.py::test_chunk_documents_short_and_strided",
+    "common_neighbor_link_prediction.wedge_degree_cap": "test_graph_scale.py::test_wedge_degree_cap_excludes_hubs",
+    "compact_parquet.target_files": "test_scale_paths.py::test_compact_parquet_reduces_files",
+    "configure_logger.name": "test_warehouse.py::test_configure_logger_rotating",
+    "connected_components.id_col": "test_properties.py::test_connected_components_match_union_find",
+    "connected_components.max_iter": "test_scale_paths.py::test_connected_components_nonconvergence_raises",
+    "connected_components_star.id_col": "test_properties.py::test_connected_components_star_match_union_find",
+    "connected_components_star.max_iter": "test_scale_paths.py::test_connected_components_star_logn_on_long_chain",
+    "containment_pairs.threshold": "test_corpus_ops.py::test_containment_vs_jaccard_subset_doc",
+    "get_spark.master": "conftest.py::spark",
+    "harmonic_centrality.pivots": "test_scale_paths.py::test_harmonic_centrality_matches_reference_and_partitions",
+    "harmonic_centrality.rounds": "test_scale_paths.py::test_harmonic_centrality_matches_reference_and_partitions",
+    "hits.iterations": "test_scale_paths.py::test_hits_degenerate_inputs",
+    "lsh_topk.k": "test_similarity_multimodal_streaming.py::test_lsh_topk_subset_of_exact",
+    "lsh_topk.n_probe": "test_scale_paths.py::test_multiprobe_lsh_recall_uplift",
+    "lsh_topk.num_planes": "test_similarity_multimodal_streaming.py::test_lsh_topk_subset_of_exact",
+    "lsh_topk.num_tables": "test_scale_paths.py::test_multiprobe_lsh_recall_uplift",
+    "mmr_diversified_topk.k": "test_mining_ops.py::test_mmr_prefers_diverse_over_duplicate",
+    "mmr_diversified_topk.lam": "test_vector_kernels.py::test_mmr_grouped_pass_matches_legacy_plan",
+    "mmr_diversified_topk.pool": "test_mining_ops.py::test_mmr_prefers_diverse_over_duplicate",
+    "pack_sequences.context_tokens": "test_corpus_ops.py::test_pack_sequences_offsets_and_boundaries",
+    "pca_top_component.n_iters": "test_scale_paths.py::test_pca_power_degenerate_zero_matrix",
+    "perceptron_fit.epochs": "test_classifier.py::test_first_epoch_update_is_exact_batch_sum",
+    "salted_join.how": "test_sinks_and_dedup.py::test_salted_join_rejects_outer",
+    "salted_join.salt_buckets": "test_properties.py::test_salted_join_equals_plain_join",
+    "semantic_dedup.n_cells": "test_corpus_ops.py::test_semantic_dedup_keeps_one_per_clique",
+    "semantic_dedup.threshold": "test_corpus_ops.py::test_semantic_dedup_keeps_one_per_clique",
+    "source_mixing_weights.token_budget": "test_corpus_ops.py::test_source_mixing_sqrt_damping",
+    "stream_upsert_rollup.max_files_per_trigger": "test_streaming_append_and_jdbc.py::test_upsert_rollup_refines_open_windows_and_drops_late",
+    "stream_upsert_rollup.path_glob": "test_streaming_append_and_jdbc.py::test_upsert_rollup_refines_open_windows_and_drops_late",
+    "transitive_closure.rounds": "test_scale_paths.py::test_transitive_closure_synthetic_and_partition_invariant",
+    "two_phase_rank.n_parts": "test_properties.py::test_two_phase_rank_matches_row_number",
+    "write_range_clustered.num_files": "test_range_clustering.py::test_range_clustered_files_are_disjoint_and_complete",
+}
+
+
+def _constants() -> dict[str, str | None]:
+    """Module-level literal constants of the package by name (None where
+    two modules bind the name to different values)."""
+    consts: dict[str, str | None] = {}
+    for path in PKG.rglob("*.py"):
+        for top in ast.parse(path.read_text()).body:
+            if isinstance(top, ast.Assign) and len(top.targets) == 1:
+                target = top.targets[0]
+                try:
+                    value = repr(ast.literal_eval(top.value))
+                except (ValueError, TypeError, SyntaxError):
+                    continue
+                if isinstance(target, ast.Name):
+                    prior = consts.setdefault(target.id, value)
+                    consts[target.id] = value if prior == value else None
+    return consts
+
+
+def _value(node: ast.expr, consts: dict[str, str | None]) -> tuple[bool, str]:
+    """(known, value): a literal or a named package constant is known by
+    its value; any other expression only by its source text."""
+    try:
+        return True, repr(ast.literal_eval(node))
+    except (ValueError, TypeError, SyntaxError):
+        text = ast.unparse(node)
+        if isinstance(node, (ast.Name, ast.Attribute)) and consts.get(text.rsplit(".", 1)[-1]):
+            return True, consts[text.rsplit(".", 1)[-1]]
+        return False, text
+
+
+def one_value_parameters() -> set[str]:
+    """``fn.param`` for every defaulted parameter of a uniquely named,
+    non-``q_*`` top-level package function that all production calls
+    leave at (or set to) one and the same value."""
+    funcs: dict[str, ast.FunctionDef | None] = {}
+    for path in PKG.rglob("*.py"):
+        for top in ast.parse(path.read_text()).body:
+            if isinstance(top, ast.FunctionDef) and not top.name.startswith("q_"):
+                funcs[top.name] = None if top.name in funcs else top
+    consts = _constants()
+    values: dict[tuple[str, str], tuple] = {}
+    for path in PROD_FILES:
+        tree = ast.parse(path.read_text())
+        alias = {
+            a.asname: a.name
+            for n in ast.walk(tree)
+            if isinstance(n, ast.ImportFrom)
+            for a in n.names
+            if a.asname
+        }
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            name = getattr(call.func, "id", None) or getattr(call.func, "attr", None)
+            fn = funcs.get(alias.get(name, name))
+            if fn is None:
+                continue
+            args = fn.args
+            positional = args.posonlyargs + args.args
+            defaults = list(zip(positional[len(positional) - len(args.defaults) :], args.defaults))
+            defaults += [(a, d) for a, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None]
+            star = any(isinstance(a, ast.Starred) for a in call.args) or any(
+                k.arg is None for k in call.keywords
+            )
+            given = {a.arg: v for a, v in zip(positional, call.args)}
+            given.update({k.arg: k.value for k in call.keywords if k.arg})
+            for arg, default in defaults:
+                node = given.get(arg.arg)
+                dflt, seen = values.setdefault((fn.name, arg.arg), (_value(default, consts), set()))
+                if node is None and star:
+                    seen.add((False, "*"))
+                else:
+                    seen.add(dflt if node is None else _value(node, consts))
+    return {
+        f"{fn}.{param}"
+        for (fn, param), (dflt, seen) in values.items()
+        if len(seen) == 1 and (next(iter(seen))[0] or seen == {dflt})
+    }
+
+
+def test_no_new_one_value_parameters():
+    """A parameter production never varies is a constant in disguise:
+    only the pinned ones, each still varied by its named test, remain."""
+    found = one_value_parameters()
+    assert sorted(found - ONE_VALUE_PINS.keys()) == []
+    assert sorted(ONE_VALUE_PINS.keys() - found) == []  # the pin list only shrinks
+    for pin, test in ONE_VALUE_PINS.items():
+        path, name = test.split("::")
+        assert f"def {name}(" in (ROOT / "tests" / path).read_text(), pin
 
 
 def test_coverage_code_references_resolve():

@@ -254,8 +254,8 @@ def test_ivf_lloyd_deterministic_and_recall(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 20)
     key = lambda r: (r["query_id"], r["neighbor_id"], r["cosine_sim"], r["rank"])
-    run1 = sorted(map(key, ivf_lloyd_topk(emb, queries, k=5).collect()))
-    run2 = sorted(map(key, ivf_lloyd_topk(emb, queries, k=5).collect()))
+    run1 = sorted(map(key, ivf_lloyd_topk(emb, queries).collect()))
+    run2 = sorted(map(key, ivf_lloyd_topk(emb, queries).collect()))
     assert run1 == run2  # bit-identical across independent index builds
     exact = {(r["query_id"], r["neighbor_id"])
              for r in brute_force_topk(emb, queries, k=5).collect()}
@@ -338,12 +338,12 @@ def test_kcore_synthetic_and_partition_invariant(spark, narrow_loops):
     extra = [(5, 6), (6, 7), (1, 8), (2, 8), (3, 8)]
     edges = spark.createDataFrame(clique + extra, ["u", "v"])
     expect = {(i, 4) for i in range(1, 6)}
-    got = {(r["id"], r["core_degree"]) for r in kcore(edges, k=4, rounds=6).collect()}
+    got = {(r["id"], r["core_degree"]) for r in kcore(edges).collect()}
     assert got == expect
     narrow_loops()
     again = {
         (r["id"], r["core_degree"])
-        for r in kcore(edges.repartition(13), k=4, rounds=6).collect()
+        for r in kcore(edges.repartition(13)).collect()
     }
     assert again == expect
 
@@ -568,7 +568,7 @@ def test_prefix_join_equals_exact_and_synthetic(spark, sf_dir):
     )
     got = {
         (r["id_a"], r["id_b"])
-        for r in prefix_filtered_jaccard_pairs(docs, 7, 10).collect()
+        for r in prefix_filtered_jaccard_pairs(docs).collect()
     }
     # docs 1/2 share 7 of their 8+8 distinct 3-shingles each:
     # J = 7/9 >= 7/10; doc 3 shares nothing.
@@ -577,7 +577,7 @@ def test_prefix_join_equals_exact_and_synthetic(spark, sf_dir):
     fixture = load_table(spark, sf_dir, "documents")
     got_fix = {
         (r["id_a"], r["id_b"])
-        for r in prefix_filtered_jaccard_pairs(fixture, 7, 10).collect()
+        for r in prefix_filtered_jaccard_pairs(fixture).collect()
     }
     brute = {
         (r["id_a"], r["id_b"])
@@ -610,7 +610,7 @@ def test_positional_filter_prunes_without_losing_pairs(spark):
 
     docs = load_table(spark, SF_CORRECT, "documents")
     staged = (
-        with_shingles(ensure_min_partitions(docs), "text", "_sh", 3)
+        with_shingles(ensure_min_partitions(docs), 3)
         .select("doc_id", "_sh", F.size("_sh").cast("long").alias("_size"))
         .filter(F.col("_size") >= 1)
         .localCheckpoint(eager=True)
@@ -827,13 +827,13 @@ def test_spectral_coordinate_separates_two_cliques(spark, narrow_loops):
     clique_b = [(i, j) for i in range(10, 14) for j in range(i + 1, 14)]
     edges = spark.createDataFrame(clique_a + clique_b + [(0, 10)], ["u", "v"])
     rows1 = {r["id"]: (r["spectral_x"], r["side"]) for r in
-             spectral_coordinate(edges, rounds=8).collect()}
+             spectral_coordinate(edges).collect()}
     sides_a = {rows1[i][1] for i in range(4)}
     sides_b = {rows1[i][1] for i in range(10, 14)}
     assert len(sides_a) == 1 and len(sides_b) == 1 and sides_a != sides_b
     narrow_loops()
     rows2 = {r["id"]: (r["spectral_x"], r["side"]) for r in
-             spectral_coordinate(edges, rounds=8).collect()}
+             spectral_coordinate(edges).collect()}
     assert rows1 == rows2
 
 
@@ -1089,13 +1089,13 @@ def test_rotor_walks_matches_reference_and_partitions(spark, narrow_loops):
             want.add((start, t, cur))
     got = {
         (r["start_id"], r["step"], r["id"])
-        for r in rotor_walks(edges, steps=4).collect()
+        for r in rotor_walks(edges).collect()
     }
     assert got == want
     narrow_loops()
     again = {
         (r["start_id"], r["step"], r["id"])
-        for r in rotor_walks(edges.repartition(5), steps=4).collect()
+        for r in rotor_walks(edges.repartition(5)).collect()
     }
     assert again == want
 
@@ -1114,13 +1114,13 @@ def test_ktruss_peels_to_known_core_and_partitions(spark, narrow_loops):
     edges = spark.createDataFrame(raw, ["u", "v"])
     want = {(u, v, 2) for u, v in raw[:6]}
     got = {
-        (r["u"], r["v"], r["support"]) for r in ktruss(edges, k=4, rounds=4).collect()
+        (r["u"], r["v"], r["support"]) for r in ktruss(edges).collect()
     }
     assert got == want
     narrow_loops()
     again = {
         (r["u"], r["v"], r["support"])
-        for r in ktruss(edges.repartition(7), k=4, rounds=4).collect()
+        for r in ktruss(edges.repartition(7)).collect()
     }
     assert again == want
 

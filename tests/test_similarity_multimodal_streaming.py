@@ -158,7 +158,7 @@ def test_frame_sampling_fanout(spark, sf_dir):
     from pyspark.sql import functions as F
 
     media = documents_as_media(load_table(spark, sf_dir, "documents"))
-    frames = sample_frames(media, every_n_bytes=64, max_frames=8)
+    frames = sample_frames(media)
     per_media = frames.groupBy("media_id").agg(F.count("*").alias("n")).collect()
     assert all(1 <= r["n"] <= 8 for r in per_media)
     assert len(per_media) == media.count()  # every payload produced frames

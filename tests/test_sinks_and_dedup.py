@@ -92,7 +92,7 @@ def test_dedup_storage_released(spark):
     and not asserted here.
     """
     for _ in range(3):
-        minhash_dedup_pairs(_docs(spark), threshold=0.8).collect()
+        minhash_dedup_pairs(_docs(spark)).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
@@ -125,7 +125,7 @@ def test_ngram_jaccard_finds_near_dup(spark):
 
 def test_minhash_agrees_with_exact_on_high_threshold(spark):
     exact = {(r["id_a"], r["id_b"]) for r in ngram_jaccard_pairs(_docs(spark), threshold=0.8).collect()}
-    lsh = {(r["id_a"], r["id_b"]) for r in minhash_dedup_pairs(_docs(spark), threshold=0.8).collect()}
+    lsh = {(r["id_a"], r["id_b"]) for r in minhash_dedup_pairs(_docs(spark)).collect()}
     # LSH verifies with exact Jaccard, so it can only miss candidates,
     # never add false positives; identical texts always collide.
     assert lsh <= exact
@@ -142,7 +142,7 @@ def test_minhash_equals_exact_on_fixture(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     exact = {tuple(r) for r in ngram_jaccard_pairs(docs, threshold=0.8).select("id_a", "id_b", "jaccard").collect()}
-    lsh = {tuple(r) for r in minhash_dedup_pairs(docs, threshold=0.8).select("id_a", "id_b", "jaccard").collect()}
+    lsh = {tuple(r) for r in minhash_dedup_pairs(docs).select("id_a", "id_b", "jaccard").collect()}
     assert lsh == exact
     assert len(exact) > 0
 

@@ -79,9 +79,6 @@ def test_append_mode_drops_late_events(spark, tmp_path):
         str(src),
         str(tmp_path / "out"),
         str(tmp_path / "ckpt"),
-        window_duration="1 hour",
-        watermark="1 hour",
-        max_files_per_trigger=1,
     )
     collected = result.collect()
     ten_oclock = [r for r in collected if r["bucket_start"] == "2024-01-01 10:00:00"]
@@ -202,8 +199,6 @@ def test_upsert_rollup_refines_open_windows_and_drops_late(spark, tmp_path):
         str(src),
         str(tmp_path / "rollup"),
         str(tmp_path / "ckpt"),
-        window_duration="1 hour",
-        watermark="1 hour",
         max_files_per_trigger=1,
     )
     rows = {r["bucket_start"]: r for r in result.collect()}
