@@ -86,8 +86,11 @@ FS_PATTERN_SCORES: dict[str, float] = {
 OCCUPANCY_CAP = 64
 WEDGE_DEGREE_CAP = 256
 
-#: PageRank continuation probability (global and personalized).
+#: PageRank continuation probability (global and personalized), and the
+#: personalized walk's restart mass: a literal, not a derived 1 - DAMPING
+#: (0.15000000000000002 in binary floating point).
 DAMPING = 0.85
+PPR_RESTART = 0.15
 #: Unrolled round counts of the graph loops and their twins.
 PAGERANK_ITERATIONS = 10
 PPR_ITERATIONS = 8

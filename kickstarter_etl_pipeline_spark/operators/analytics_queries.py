@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from kickstarter_etl_pipeline_spark.constants import (
+    ANN_K,
     EMBED_DIM,
     LSH_NUM_PLANES,
     LSH_NUM_TABLES,
@@ -20,6 +21,7 @@ from kickstarter_etl_pipeline_spark.operators.dedup import (
 )
 from kickstarter_etl_pipeline_spark.operators.dims import build_dim_date
 from kickstarter_etl_pipeline_spark.operators.multimodal import documents_as_media, extract_features
+from kickstarter_etl_pipeline_spark.operators.partitioning import materialize
 from kickstarter_etl_pipeline_spark.operators.ranking import ntile_exact, two_phase_rank
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.operators.similarity import (
@@ -776,11 +778,9 @@ def q_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged over the window (distinct_users_rollup shows that merge).
     """
     ev = EV.with_unix_micros(load_table(spark, sf_dir, "events"))
-    day_user = (
-        ev.select(F.floor(F.col("_us") / 86_400_000_000).alias("day"), "user_id")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    day_user = ev.select(
+        F.floor(F.col("_us") / 86_400_000_000).alias("day"), "user_id"
+    ).distinct()
     days = day_user.select("day").distinct()
     contrib = day_user.select(
         F.explode(F.sequence(F.col("day"), F.col("day") + 6)).alias("g_day"),
@@ -931,12 +931,12 @@ def q_session_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("_us").over(w).isNull() | ((F.col("_us") - F.lag("_us").over(w)) > gap_us), 1
     ).otherwise(0)
     cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sess_types = (
+    # Materialized: the session, type and per-session aggregates all read it.
+    sess_types = materialize(
         ev.withColumn("_new", new_session)
         .withColumn("_sid", F.sum("_new").over(cum).cast("long"))
         .select("user_id", "_sid", "event_type")
         .distinct()
-        .localCheckpoint(eager=True)
     )
     totals = F.broadcast(
         sess_types.select("user_id", "_sid").distinct().agg(
@@ -1005,7 +1005,7 @@ def q_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (here 50 × 5), k-bounded at any scale, so IT carries the hint
     # and the label lookups stay shuffle-free without risking an OOM.
     labels = emb.select("vec_id", "label")
-    nn = brute_force_topk(emb, query_anchors(emb, 50), k=5)
+    nn = brute_force_topk(emb, query_anchors(emb, 50), k=ANN_K)
     votes = (
         F.broadcast(nn)
         .join(labels.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
@@ -1049,7 +1049,7 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = query_anchors(emb, 20)
-    exact = brute_force_topk(emb, queries, k=5).select("query_id", "neighbor_id")
+    exact = brute_force_topk(emb, queries, k=ANN_K).select("query_id", "neighbor_id")
     approx = lsh_topk(
         emb, queries, dim=EMBED_DIM, num_planes=LSH_NUM_PLANES,
         num_tables=LSH_NUM_TABLES, n_probe=LSH_N_PROBE,
@@ -1061,7 +1061,7 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "n_hits",
-            round_det(F.col("n_hits") / 5.0, 6).alias("recall_at_5"),
+            round_det(F.col("n_hits") / float(ANN_K), 6).alias("recall_at_5"),
         )
     )
 

@@ -53,7 +53,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from kickstarter_etl_pipeline_spark.constants import KEEP_PER_MILLE, PERCEPTRON_EPOCHS
-from kickstarter_etl_pipeline_spark.operators.ranking import two_phase_rank
+from kickstarter_etl_pipeline_spark.operators.partitioning import loop_frame, materialize
+from kickstarter_etl_pipeline_spark.operators.ranking import collect_control, two_phase_rank
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
 
 #: (weight column, pretty output name) in fit order; x0 is the bias
@@ -123,9 +124,7 @@ def doc_feature_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch feature frame, checkpointed: ONE scan of documents feeds
     all 8 fit epochs and the scoring pass (see _featurize for the
     feature definitions shared with the streaming scorer)."""
-    return _featurize(load_table(spark, sf_dir, "documents")).localCheckpoint(
-        eager=True
-    )
+    return materialize(_featurize(load_table(spark, sf_dir, "documents")))
 
 
 _MARGIN = "w0*x0 + w1*x1 + w2*x2 + w3*x3 + w4*x4"
@@ -145,9 +144,10 @@ def perceptron_fit(
     both engines (y·margin ≤ 0 breaks the tie identically).
     """
     spark = feats.sparkSession
-    w = spark.createDataFrame(
-        [(0, 0, 0, 0, 0)], "w0 long, w1 long, w2 long, w3 long, w4 long"
-    ).localCheckpoint(eager=True)
+    # Materialized: epoch 1's margins and its snapshot both read it.
+    w = materialize(
+        spark.createDataFrame([(0, 0, 0, 0, 0)], "w0 long, w1 long, w2 long, w3 long, w4 long")
+    )
     snaps: list[DataFrame] = []
     zero = F.lit(0).cast("long")
     for ep in range(1, epochs + 1):
@@ -164,7 +164,7 @@ def perceptron_fit(
         # 1-row × 1-row crossJoin: both sides bounded (the plan prover
         # demotes this shape); checkpoint so the snapshot feeds BOTH
         # the trajectory and the next epoch without re-running the agg.
-        snap = (
+        snap = loop_frame(
             upd.crossJoin(F.broadcast(w))
             .select(
                 F.lit(ep).cast("long").alias("epoch"),
@@ -176,7 +176,6 @@ def perceptron_fit(
                     for k in range(5)
                 ],
             )
-            .localCheckpoint(eager=True)
         )
         snaps.append(snap)
         w = snap.select("w0", "w1", "w2", "w3", "w4")
@@ -228,7 +227,7 @@ def q_documents_stream_classifier_scores(
 
     feats = doc_feature_frame(spark, sf_dir)
     w, _ = perceptron_fit(feats)
-    wr = w.collect()[0]  # 1 row, 5 BIGINTs — bounded by construction
+    wr = collect_control(w)[0]
     margin_lit = " + ".join(
         f"CAST({int(wr[f'w{k}'])} AS BIGINT) * x{k}" for k in range(5)
     )

@@ -14,7 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from kickstarter_etl_pipeline_spark.constants import MAX_COVERAGE_K
-from kickstarter_etl_pipeline_spark.operators.partitioning import loop_frame
+from kickstarter_etl_pipeline_spark.operators.partitioning import loop_frame, materialize
+from kickstarter_etl_pipeline_spark.operators.ranking import collect_control
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.operators.text import tokens
 
@@ -33,7 +34,7 @@ def pack_sequences(df: DataFrame, context_tokens: int = 128) -> DataFrame:
     partition bounded; semantics are unchanged because packing never
     crosses a shard.
     """
-    n_tok = F.size(tokens("text"))
+    n_tok = F.size(tokens())
     w = Window.partitionBy("source").orderBy("doc_id")
     cum = F.sum(n_tok.cast("long")).over(w)
     start = (cum - n_tok).cast("long")
@@ -63,7 +64,7 @@ def source_mixing_weights(df: DataFrame, token_budget: int = 1_000_000) -> DataF
     """
     per_source = df.groupBy("source").agg(
         F.count("*").alias("n_docs"),
-        F.sum(F.size(tokens("text")).cast("long")).alias("n_tokens"),
+        F.sum(F.size(tokens()).cast("long")).alias("n_tokens"),
     )
     totals = per_source.agg(
         F.sum("n_tokens").alias("_tot_tokens"),
@@ -100,10 +101,11 @@ def boilerplate_stats(df: DataFrame, min_doc_freq: int = 5) -> DataFrame:
     """
     from kickstarter_etl_pipeline_spark.operators.dedup import shingles_from_tokens
 
-    staged = (
-        df.select(F.col("doc_id"), tokens("text").alias("_t"))
+    # Materialized: the shingle explode and the totals both read it, and it
+    # keeps the shingle expression from being inlined into each consumer.
+    staged = materialize(
+        df.select(F.col("doc_id"), tokens().alias("_t"))
         .withColumn("_sh", shingles_from_tokens("_t", 3))
-        .localCheckpoint(eager=False)
     )
     sh = staged.select(F.col("doc_id"), F.explode("_sh").alias("_s"))
     doc_freq = sh.groupBy("_s").agg(F.count("*").alias("_df"))
@@ -141,7 +143,7 @@ def chunk_documents(
     rows JVM-side; the shingle array is materialized once per doc.
     """
     with_toks = df.select(
-        F.col("doc_id"), tokens("text").alias("_t")
+        F.col("doc_id"), tokens().alias("_t")
     ).withColumn("_n", F.size("_t").cast("long"))
     n_chunks = F.when(F.col("_n") <= chunk_tokens, F.lit(1).cast("long")).otherwise(
         1 + F.floor((F.col("_n") - chunk_tokens + stride - 1) / stride)
@@ -238,7 +240,7 @@ def greedy_max_coverage(docs: DataFrame) -> DataFrame:
             remaining = pairs.join(cov, "_tok", "left_anti")
         else:
             remaining = pairs
-        best = (
+        best = collect_control(
             remaining.groupBy("_doc")
             .agg(F.count("*").cast("long").alias("_gain"))
             .agg(
@@ -246,8 +248,7 @@ def greedy_max_coverage(docs: DataFrame) -> DataFrame:
                     F.struct(F.col("_gain").alias("g"), (-F.col("_doc")).alias("nid"))
                 ).alias("_b")
             )
-            .collect()[0]["_b"]
-        )
+        )[0]["_b"]
         if best is None:
             break
         gain, doc = int(best["g"]), -int(best["nid"])

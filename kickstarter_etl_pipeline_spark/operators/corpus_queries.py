@@ -14,6 +14,7 @@ from kickstarter_etl_pipeline_spark.operators.dedup import (
 )
 from kickstarter_etl_pipeline_spark.operators.dims import build_dim_date
 from kickstarter_etl_pipeline_spark.operators.multimodal import documents_as_media, extract_features
+from kickstarter_etl_pipeline_spark.operators.partitioning import materialize
 from kickstarter_etl_pipeline_spark.operators.ranking import (
     collected_offsets,
     grouped_two_phase_rank,
@@ -293,7 +294,7 @@ def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
     return docs.select(
         "doc_id",
-        F.size(TX.tokens("text")).cast("long").alias("n_ws_tokens"),
+        F.size(TX.tokens()).cast("long").alias("n_ws_tokens"),
         F.size(F.regexp_extract_all("text", F.lit(pattern), F.lit(0))).cast("long").alias(
             "n_bpeish_tokens"
         ),
@@ -304,7 +305,7 @@ def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        TX.fingerprint_md5("text").alias("fingerprint"),
+        TX.fingerprint_md5().alias("fingerprint"),
         TX.rolling_hash("text").alias("rolling_hash"),
     )
 
@@ -336,7 +337,7 @@ def q_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     one fixed IEEE tree over exact integer counts, 4-dp grid. Pure
     Column expressions, one pass, no shuffle."""
     docs = load_table(spark, sf_dir, "documents")
-    n_words = F.size(TX.tokens("text")).cast("long")
+    n_words = F.size(TX.tokens()).cast("long")
     n_sentences = F.greatest(
         F.size(F.regexp_extract_all(F.col("text"), F.lit(r"[.!?]+"), 0)), F.lit(1)
     ).cast("long")
@@ -421,7 +422,7 @@ def q_seq_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single reducer.
     """
     docs = load_table(spark, sf_dir, "documents")
-    t = docs.select(F.size(TX.tokens("text")).cast("long").alias("_n"))
+    t = docs.select(F.size(TX.tokens()).cast("long").alias("_n"))
     buckets = (
         t.withColumn("bucket_start", (F.col("_n") - F.col("_n") % 32))
         .groupBy("bucket_start")
@@ -459,7 +460,7 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     secondary bucket key on floor(doc_id / block)."""
     docs = load_table(spark, sf_dir, "documents")
     tf = (
-        docs.select("doc_id", F.explode(TX.tokens("text")).alias("token"))
+        docs.select("doc_id", F.explode(TX.tokens()).alias("token"))
         .groupBy("token", "doc_id")
         .agg(F.count("*").cast("long").alias("tf"))
     )
@@ -493,11 +494,11 @@ def q_source_overlap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kickstarter_etl_pipeline_spark.operators.partitioning import ensure_min_partitions
 
     docs = load_table(spark, sf_dir, "documents")
-    fp = (
+    # Materialized: the sizes and both sides of the self-join read it.
+    fp = materialize(
         with_shingles(ensure_min_partitions(docs), 3)
         .select("source", F.explode("_sh").alias("fp"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     sizes = fp.groupBy("source").agg(F.count("*").cast("long").alias("_n"))
     a = fp.select(F.col("source").alias("source_a"), "fp")
@@ -626,11 +627,9 @@ def q_vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ten tiny threshold aggregates over those compact tables — never ten
     scans of the corpus."""
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(TX.tokens("text")).alias("token"))
-    first_doc = tok.groupBy("token").agg(F.min("doc_id").alias("_first")).localCheckpoint(
-        eager=True
-    )
-    doc_tokens = tok.groupBy("doc_id").agg(F.count("*").alias("_n")).localCheckpoint(eager=True)
+    tok = docs.select("doc_id", F.explode(TX.tokens()).alias("token"))
+    first_doc = tok.groupBy("token").agg(F.min("doc_id").alias("_first"))
+    doc_tokens = tok.groupBy("doc_id").agg(F.count("*").alias("_n"))
     max_id = F.broadcast(docs.agg(F.max("doc_id").alias("_max")))
     deciles = spark.range(1, 11).select((F.col("id") * 10).cast("int").alias("pct"))
     thresholds = deciles.crossJoin(max_id).select(
@@ -715,7 +714,7 @@ def q_js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     source taxonomy, which is small by construction."""
     LN2_9 = 693147181  # floor(ln(2)·1e9 + 0.5); same literal in the twin
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select("source", F.explode(TX.tokens("text")).alias("token"))
+    tok = docs.select("source", F.explode(TX.tokens()).alias("token"))
     counts = tok.groupBy("source", "token").agg(
         F.count("*").cast("long").alias("c")
     )
@@ -856,10 +855,10 @@ def q_bleu_overlap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     side is one row per (n, gram) (a max-reduction), so the join is
     bounded fan-out, not a pair blow-up; R and B ride one-row
     broadcasts."""
-    docs = (
+    # Materialized: the gram table of every n-gram order reads it.
+    docs = materialize(
         load_table(spark, sf_dir, "documents")
-        .select("doc_id", TX.tokens("text").alias("_tk"))
-        .localCheckpoint(eager=True)
+        .select("doc_id", TX.tokens().alias("_tk"))
     )
 
     def grams(n: int):
@@ -967,10 +966,10 @@ def q_phrase_search_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     each leg is pre-shrunk to a single token's postings list (the
     inverted-index access path, not a corpus scan per leg after
     pushdown). Pure integer counting end to end."""
-    docs = (
+    # Materialized: the gram count and the postings scan both read it.
+    docs = materialize(
         load_table(spark, sf_dir, "documents")
-        .select("doc_id", TX.tokens("text").alias("_tk"))
-        .localCheckpoint(eager=True)
+        .select("doc_id", TX.tokens().alias("_tk"))
     )
     g3 = F.transform(
         F.sequence(F.lit(1), F.size("_tk") - 2),
@@ -1091,7 +1090,7 @@ def q_token_length_quartiles_by_source(spark: SparkSession, sf_dir: str) -> Data
     from kickstarter_etl_pipeline_spark.operators.text import tokens
 
     docs = load_table(spark, sf_dir, "documents").select(
-        "source", "doc_id", F.size(tokens("text")).cast("long").alias("_nt")
+        "source", "doc_id", F.size(tokens()).cast("long").alias("_nt")
     )
     ranked = grouped_two_phase_rank(
         docs, ["source"], ["_nt", "doc_id"], n_col="_n"
@@ -1153,7 +1152,7 @@ def q_pretraining_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     staged = clean.select(
         shard.alias("shard"),
-        F.size(tokens("text")).cast("long").alias("_nt"),
+        F.size(tokens()).cast("long").alias("_nt"),
         F.floor(F.col("quality") * 1e6 + F.lit(0.5)).cast("long").alias("_q6"),
     )
     return (
@@ -1199,9 +1198,8 @@ def q_curation_pack_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: filters + one dedup aggregate + one shingle-keyed
     decontamination join (shuffle keyed by shingle text, never
     doc×doc) + one per-source packing window + a ~20-group rollup
-    with a broadcast one-row total. The cleaned corpus and the
-    contaminated-id set are localCheckpointed ONCE each: three
-    consumers read the cleaned corpus (shingles, survivors, removed)
+    with a broadcast one-row total. The cleaned corpus is materialized
+    ONCE: three consumers read it (shingles, survivors, removed)
     and without the barrier each re-executed the whole lang→quality→
     dedup chain (measured 9.0 → 5.3 s at sf0.1; at 100 TB a real job
     persists the cleaned corpus to storage at exactly this point).
@@ -1220,17 +1218,13 @@ def q_curation_pack_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("quality") >= 0.5)
     )
     clean = drop_exact_dupes(filtered)
-    corpus = (
+    # Materialized: three consumers read it (see the docstring).
+    corpus = materialize(
         clean.filter(F.col("doc_id") % 10 != 0)
         .select("doc_id", "source", "text")
-        .localCheckpoint(eager=True)
     )
     bench = docs.filter(F.col("doc_id") % 10 == 0)
-    contaminated = (
-        benchmark_overlap(corpus, bench)
-        .select("doc_id")
-        .localCheckpoint(eager=True)
-    )
+    contaminated = benchmark_overlap(corpus, bench).select("doc_id")
     survivors = corpus.join(contaminated, "doc_id", "left_anti")
     packed = pack_sequences(survivors, context_tokens=128)
     per_source = (

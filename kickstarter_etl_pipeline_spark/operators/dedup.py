@@ -15,16 +15,6 @@ Scale design:
 
 All hashing uses Spark-native ``xxhash64`` (JVM-side, codegen'd) — no
 Python in the hot path.
-
-Intermediate reuse (shingle tables, banded signatures) is materialized
-with ``localCheckpoint(eager=True)`` rather than ``cache()``: cached
-DataFrames stay pinned in the session's CacheManager until an explicit
-unpersist nobody is positioned to issue (the query registry returns lazy
-frames), which accretes storage memory across a long-lived session. A
-local checkpoint is released by the ContextCleaner as soon as the frame
-goes out of scope — no bookkeeping, bounded storage. Trade-off: local
-checkpoints don't survive executor loss; for a several-minute dedup
-query that's an accepted restart cost, not a correctness risk.
 """
 
 from __future__ import annotations
@@ -36,7 +26,9 @@ from pyspark.sql import Column, DataFrame, functions as F
 from kickstarter_etl_pipeline_spark.operators.partitioning import (
     ensure_min_partitions,
     loop_frame,
+    materialize,
 )
+from kickstarter_etl_pipeline_spark.operators.ranking import collect_control
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.operators.text import fingerprint_md5, tokens
 
@@ -59,7 +51,7 @@ def exact_dedup_groups(df: DataFrame) -> DataFrame:
     """Exact dedup via normalized-text fingerprint: one row per distinct
     content with the multiplicity and the keeper (min id)."""
     return (
-        df.select(fingerprint_md5("text").alias("fingerprint"), F.col("doc_id"))
+        df.select(fingerprint_md5().alias("fingerprint"), F.col("doc_id"))
         .groupBy("fingerprint")
         .agg(
             F.count("*").alias("n_copies"),
@@ -107,7 +99,7 @@ def with_shingles(df: DataFrame, n: int = 3) -> DataFrame:
     from kickstarter_etl_pipeline_spark.operators.text import let1
 
     return df.withColumn(
-        "_sh", let1(tokens("text"), lambda tk: shingles_from_tokens(tk, n))
+        "_sh", let1(tokens(), lambda tk: shingles_from_tokens(tk, n))
     )
 
 
@@ -145,7 +137,7 @@ def char_shingles() -> Column:
 
     # let1: the normalize (trim+regexp_replace+lower) runs once per row,
     # not once per gram reference (r14 — the shingle-inlining fix).
-    return let1(normalized("text"), _grams)
+    return let1(normalized(), _grams)
 
 
 def char_jaccard_pairs(df: DataFrame) -> DataFrame:
@@ -174,7 +166,8 @@ def containment_pairs(df: DataFrame, threshold: float = 0.9) -> DataFrame:
     correctness/verification tier; at 100 TB run it only on MinHash-LSH
     candidate pairs.
     """
-    sh = shingle_table(df, "doc_id", SHINGLE_N).localCheckpoint(eager=True)
+    # Materialized: the sizes and both sides of the self-join read it.
+    sh = materialize(shingle_table(df, "doc_id", SHINGLE_N))
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("_size"))
     a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
@@ -206,7 +199,8 @@ def containment_pairs(df: DataFrame, threshold: float = 0.9) -> DataFrame:
 def jaccard_pairs_from_shingle_table(sh: DataFrame, threshold: float) -> DataFrame:
     """Exact Jaccard over an exploded (id, shingle) table (shared by the
     word-gram and char-gram operators)."""
-    sh = sh.localCheckpoint(eager=True)
+    # Materialized: the sizes and both sides of the self-join read it.
+    sh = materialize(sh)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("_size"))
     a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
@@ -345,11 +339,11 @@ def prefix_filtered_jaccard_pairs(df: DataFrame) -> DataFrame:
     see _prefix_candidates; measured 3.1× fewer candidates at sf0.1
     on the vocab-saturated fixture, identical verified output)."""
     num, den = 7, 10
-    staged = (
+    # Materialized: the candidates and both set sides read it.
+    staged = materialize(
         with_shingles(ensure_min_partitions(df), SHINGLE_N)
         .select(F.col("doc_id"), "_sh", F.size("_sh").cast("long").alias("_size"))
         .filter(F.col("_size") >= 1)
-        .localCheckpoint(eager=True)
     )
     cands = _prefix_candidates(staged, num, den)
     sets_a = staged.select(F.col("doc_id").alias("id_a"), F.col("_sh").alias("_sh_a"))
@@ -380,14 +374,15 @@ def prefix_filtered_jaccard_pairs(df: DataFrame) -> DataFrame:
 # --- MinHash + LSH ---
 
 
-def minhash_signature(shingle_col: Column | str) -> Column:
-    """MinHash signature: per seed i, min over shingles of xxhash64(shingle, i).
+def minhash_signature() -> Column:
+    """MinHash signature of the ``_sh`` shingle array: per seed i, min
+    over shingles of xxhash64(shingle, i).
 
     One pass over the shingle array per document via higher-order
-    functions — no explode, no shuffle, pure codegen. ``shingle_col``
-    must be a MATERIALIZED column (withColumn the shingle array first):
-    passing the raw shingles() expression would inline the tokenize +
-    n-gram work ``num_hashes`` times over.
+    functions — no explode, no shuffle, pure codegen. ``_sh`` must be a
+    MATERIALIZED column (withColumn the shingle array first): the raw
+    shingles() expression would inline the tokenize + n-gram work
+    ``num_hashes`` times over.
 
     Built as ONE SQL expression string, not ``num_hashes`` Column
     objects: each py4j Column call is a driver round trip, and the
@@ -396,22 +391,9 @@ def minhash_signature(shingle_col: Column | str) -> Column:
     transform's lambda variable — an INT, matching the old
     ``F.lit(seed)`` literal type, so xxhash64 output is bit-identical.
     """
-    if not isinstance(shingle_col, str):
-        # Column input: keep the (slower-to-build) Column formulation —
-        # the expression can't be spliced into a SQL string safely.
-        sh = shingle_col
-
-        def _min_hash(seed: int) -> Column:
-            # MUST stay a one-argument lambda: F.transform passes the
-            # array INDEX to a two-argument lambda, so the
-            # `lambda s, i=i:` idiom silently hashes with the element
-            # position instead of the seed.
-            return F.array_min(F.transform(sh, lambda s: F.xxhash64(s, F.lit(seed))))
-
-        return F.array(*[_min_hash(i) for i in range(MINHASH_NUM_HASHES)])
     return F.expr(
         f"transform(sequence(0, {MINHASH_NUM_HASHES - 1}), "
-        f"seed -> array_min(transform(`{shingle_col}`, s -> xxhash64(s, seed))))"
+        "seed -> array_min(transform(`_sh`, s -> xxhash64(s, seed))))"
     )
 
 
@@ -425,7 +407,7 @@ def _candidates_from_staged(staged: DataFrame) -> DataFrame:
     Shuffle volume is O(docs × bands).
     """
     rows_per_band = MINHASH_NUM_HASHES // MINHASH_BANDS
-    sig = staged.withColumn("sig", minhash_signature("_sh")).select("doc_id", "sig")
+    sig = staged.withColumn("sig", minhash_signature()).select("doc_id", "sig")
     # One SQL expression for all bands (same driver-round-trip argument
     # as minhash_signature): band index rides as the transform lambda
     # variable — an INT like the old F.lit(b) — and element_at(sig,
@@ -444,7 +426,7 @@ def _candidates_from_staged(staged: DataFrame) -> DataFrame:
     ).select("doc_id", "bb.band", "bb.bucket")
     # Both sides of the self-join read the banded signatures; checkpoint
     # so the shingle+signature pipeline runs once, not twice.
-    banded = banded.localCheckpoint(eager=True)
+    banded = materialize(banded)
     a = banded.select(F.col("doc_id").alias("id_a"), "band", "bucket")
     b_side = banded.select(F.col("doc_id").alias("id_b"), "band", "bucket")
     return (
@@ -472,9 +454,9 @@ def minhash_dedup_pairs(df: DataFrame) -> DataFrame:
     # re-derive in one cheap pass from this one.) MEMORY_AND_DISK
     # storage spills rather than OOM at scale; ContextCleaner frees the
     # blocks when the frame is dropped.
-    staged = with_shingles(
-        ensure_min_partitions(df, barrier=False), SHINGLE_N
-    ).select("doc_id", "_sh").localCheckpoint(eager=True)
+    staged = materialize(
+        with_shingles(ensure_min_partitions(df, barrier=False), SHINGLE_N).select("doc_id", "_sh")
+    )
     cands = _candidates_from_staged(staged)
     sh = staged.select(F.col("doc_id"), F.explode("_sh").alias("shingle"))
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("_size"))
@@ -656,10 +638,12 @@ def connected_components_star(
     def _signature(frame: DataFrame) -> tuple:
         # bit_xor: order-independent, overflow-free (an ANSI sum of
         # full-range xxhash64 values would overflow bigint).
-        row = frame.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(_u, _v))"), F.lit(0)).alias("h"),
-        ).collect()[0]
+        row = collect_control(
+            frame.agg(
+                F.count("*").alias("n"),
+                F.coalesce(F.expr("bit_xor(xxhash64(_u, _v))"), F.lit(0)).alias("h"),
+            )
+        )[0]
         return row["n"], row["h"]
 
     def _large_star(frame: DataFrame) -> DataFrame:
@@ -787,7 +771,7 @@ def with_simhash(
     # Each stage is now a transform lambda variable — bound once per
     # row, bit-identical packing.
     simhash = let1(
-        tokens("text"),
+        tokens(),
         lambda tk: let1(
             F.transform(tk, hash_fn),
             lambda hs: let1(_bit_sums(hs), _pack),
@@ -824,7 +808,7 @@ def simhash_candidates(
             )
         ).alias("bb"),
     ).select("doc_id", "simhash", F.col("bb.band").alias("band"), F.col("bb.chunk").alias("chunk"))
-    banded = banded.localCheckpoint(eager=True)
+    banded = materialize(banded)
     a = banded.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("sim_a"), "band", "chunk")
     b_side = banded.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("sim_b"), "band", "chunk")
     pairs = (
@@ -855,20 +839,22 @@ def duplicate_ngram_span_stats(df: DataFrame) -> DataFrame:
     (stop-gram heads are the hot keys; they are exactly the duplicated
     ones, and the count aggregate map-side combines).
     """
-    staged = ensure_min_partitions(df).withColumn("_toks", tokens("text"))
+    staged = ensure_min_partitions(df).withColumn("_toks", tokens())
     # checkpoint: both the gram-count aggregate and the per-doc join
     # read this table — without it the tokenize+explode (the dominant
     # cost) executes twice (module-standard pattern, see
     # jaccard_pairs_from_shingle_table)
-    pos = staged.filter(F.size("_toks") >= SPAN_NGRAM).select(
-        F.col("doc_id"),
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, size(_toks) - {SPAN_NGRAM - 1}), "
-                f"i -> array_join(slice(_toks, i, {SPAN_NGRAM}), ' '))"
-            )
-        ).alias("gram"),
-    ).localCheckpoint(eager=True)
+    pos = materialize(
+        staged.filter(F.size("_toks") >= SPAN_NGRAM).select(
+            F.col("doc_id"),
+            F.explode(
+                F.expr(
+                    f"transform(sequence(1, size(_toks) - {SPAN_NGRAM - 1}), "
+                    f"i -> array_join(slice(_toks, i, {SPAN_NGRAM}), ' '))"
+                )
+            ).alias("gram"),
+        )
+    )
     gram_counts = pos.groupBy("gram").agg(F.count("*").alias("_n_occ"))
     per_doc = (
         pos.join(gram_counts, on="gram")
@@ -913,9 +899,8 @@ def minhash_md5_estimate_vs_exact(df: DataFrame) -> DataFrame:
     staged shingle array (no extra shuffle); the pair join reuses the
     exact-tier candidates.
     """
-    staged = with_shingles(ensure_min_partitions(df), SHINGLE_N).localCheckpoint(
-        eager=True
-    )
+    # Materialized: the signatures and the exact shingle pairs both read it.
+    staged = materialize(with_shingles(ensure_min_partitions(df), SHINGLE_N))
     sig = staged.filter(F.size("_sh") > 0).select(
         F.col("doc_id"),
         F.expr(
@@ -1027,7 +1012,9 @@ def stream_near_dup_pairs(spark, sf_dir: str):
             F.col("_st.buckets").alias("buckets"),
         )
 
-    idx = (
+    # Materialized: the static side of a stream-static join, which every
+    # micro-batch reads.
+    idx = materialize(
         staged_buckets(docs.filter(F.col("doc_id") % 2 == 0))
         .select(
             F.col("doc_id").alias("id_b"),
@@ -1035,7 +1022,6 @@ def stream_near_dup_pairs(spark, sf_dir: str):
             F.col("buckets").alias("buckets_b"),
         )
         .select("id_b", "_sh_b", "buckets_b", F.posexplode("buckets_b").alias("band", "bucket"))
-        .localCheckpoint(eager=True)
     )
 
     stream = (

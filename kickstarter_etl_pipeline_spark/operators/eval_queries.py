@@ -409,7 +409,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k1, b, k = 1.2, 0.75, 10
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", tokens("text").alias("_toks")
+        "doc_id", tokens().alias("_toks")
     )
     tf = (
         docs.select("doc_id", F.explode("_toks").alias("term"))
@@ -515,7 +515,7 @@ def q_snm_blocking_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     W = 6
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", TX.normalized("text").alias("_norm"), "n_chars"
+        "doc_id", TX.normalized().alias("_norm"), "n_chars"
     )
     keyed = docs.select(
         "doc_id",
@@ -605,7 +605,7 @@ def q_rrf_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     RRF_K = 60
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", tokens("text").alias("_toks")
+        "doc_id", tokens().alias("_toks")
     )
     tf = (
         docs.select("doc_id", F.explode("_toks").alias("term"))

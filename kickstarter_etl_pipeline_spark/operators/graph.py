@@ -46,11 +46,13 @@ from kickstarter_etl_pipeline_spark.constants import (
     OCCUPANCY_CAP,
     PAGERANK_ITERATIONS,
     PPR_ITERATIONS,
+    PPR_RESTART,
     ROTOR_STEPS,
     SPECTRAL_ROUNDS,
     WEDGE_DEGREE_CAP,
 )
-from kickstarter_etl_pipeline_spark.operators.partitioning import loop_frame
+from kickstarter_etl_pipeline_spark.operators.partitioning import loop_frame, materialize
+from kickstarter_etl_pipeline_spark.operators.ranking import collect_control
 
 
 def degree_table(edges: DataFrame) -> DataFrame:
@@ -89,7 +91,8 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     least one triangle: ``(id, degree, n_triangles)``.
     """
     deg = degree_table(edges)
-    oriented = orient_by_degree(edges, deg).localCheckpoint(eager=True)
+    # Materialized: the wedge join and the closing probe read it.
+    oriented = materialize(orient_by_degree(edges, deg))
     e1 = oriented.select(
         F.col("src").alias("_a"), F.col("dst").alias("_b"), F.col("dst_rank").alias("_rb")
     )
@@ -203,22 +206,22 @@ def clustering_coefficients(edges: DataFrame) -> DataFrame:
     )
 
 
-def _both_directions(edges: DataFrame, u: str, v: str) -> DataFrame:
-    """Every edge as ``(src, dst)`` in both directions, duplicates and
-    self-loops kept."""
-    return edges.select(F.col(u).alias("src"), F.col(v).alias("dst")).unionAll(
-        edges.select(F.col(v).alias("src"), F.col(u).alias("dst"))
+def _both_directions(edges: DataFrame) -> DataFrame:
+    """Every ``(u, v)`` edge as ``(src, dst)`` in both directions,
+    duplicates and self-loops kept."""
+    return edges.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
+        edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     )
 
 
-def _undirected_edges(edges: DataFrame, u: str, v: str) -> DataFrame:
-    """Distinct long ``(_u, _v)`` pairs holding every non-self-loop edge
-    in both directions."""
+def _undirected_edges(edges: DataFrame) -> DataFrame:
+    """Distinct long ``(_u, _v)`` pairs holding every non-self-loop
+    ``(u, v)`` edge in both directions."""
     return (
-        edges.select(F.col(u).cast("long").alias("_u"), F.col(v).cast("long").alias("_v"))
+        edges.select(F.col("u").cast("long").alias("_u"), F.col("v").cast("long").alias("_v"))
         .unionByName(
             edges.select(
-                F.col(v).cast("long").alias("_u"), F.col(u).cast("long").alias("_v")
+                F.col("v").cast("long").alias("_u"), F.col("u").cast("long").alias("_v")
             )
         )
         .filter(F.col("_u") != F.col("_v"))
@@ -250,7 +253,7 @@ def pagerank(edges: DataFrame) -> DataFrame:
     """
     from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 
-    directed = _both_directions(edges, "u", "v")
+    directed = _both_directions(edges)
     deg = directed.groupBy("src").agg(F.count("*").cast("long").alias("_deg"))
     directed = loop_frame(directed.join(deg, "src"))
     verts = directed.select(F.col("src").alias("id")).distinct()
@@ -259,7 +262,7 @@ def pagerank(edges: DataFrame) -> DataFrame:
     # every round's checkpoint job. Collected once, inlined as a long
     # literal — the per-row arithmetic (1.0/_n, (1-d)/_n) is the same
     # double division over the same long value, bit-equal.
-    n = verts.agg(F.count("*").cast("long").alias("_n")).collect()[0]["_n"]
+    n = collect_control(verts.agg(F.count("*").cast("long").alias("_n")))[0]["_n"]
     # Degenerate-input guard (r15, ADVICE r14): with n == 0 the foldable
     # literal division 1.0/0 would raise DIVIDE_BY_ZERO at optimization
     # time under ANSI, where the old crossJoin form simply produced an
@@ -295,8 +298,8 @@ def personalized_pagerank(edges: DataFrame) -> DataFrame:
     and cost (the rank frame is SPARSE: only vertices the walk has
     reached carry rows, so early rounds touch a neighborhood, not the
     graph). Same determinism device as pagerank: the rank vector
-    snaps to the 1e-9 grid each round, restart mass is the literal
-    0.15 on both engines (never a derived 1−0.85), and the iteration
+    snaps to the 1e-9 grid each round, restart mass is the one
+    constant ``PPR_RESTART`` on both engines, and the iteration
     count is fixed — the DuckDB twin is the literal unrolled
     recurrence.
 
@@ -306,20 +309,17 @@ def personalized_pagerank(edges: DataFrame) -> DataFrame:
     """
     from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 
-    directed = _both_directions(edges, "u", "v")
+    directed = _both_directions(edges)
     deg = directed.groupBy("src").agg(F.count("*").cast("long").alias("_deg"))
     directed = loop_frame(directed.join(deg, "src"))
-    seed = (
+    # Materialized: the first rank frame and every round's restart read it.
+    seed = materialize(
         directed.select(F.col("src").alias("id"))
         .distinct()
         .orderBy(F.md5(F.col("id").cast("string")), F.col("id"))
         .limit(1)
-        .localCheckpoint(eager=True)
     )
-    restart = round(1.0 - DAMPING, 10)
-    pr = seed.select("id", round_det(F.lit(1.0), 9).alias("pr")).localCheckpoint(
-        eager=True
-    )
+    pr = seed.select("id", round_det(F.lit(1.0), 9).alias("pr"))
     for _ in range(PPR_ITERATIONS):
         contribs = (
             directed.join(pr.withColumnRenamed("id", "src"), "src")
@@ -338,7 +338,7 @@ def personalized_pagerank(edges: DataFrame) -> DataFrame:
             flagged.select(
                 "id",
                 round_det(
-                    F.when(F.col("_is_seed").isNotNull(), F.lit(restart)).otherwise(
+                    F.when(F.col("_is_seed").isNotNull(), F.lit(PPR_RESTART)).otherwise(
                         F.lit(0.0)
                     )
                     + F.lit(DAMPING) * F.col("_in"),
@@ -361,16 +361,16 @@ def label_propagation(edges: DataFrame) -> DataFrame:
 
     Returns (id, community, n_members). Per round: one vertex-keyed
     join + one (vertex, label) aggregate + one per-vertex argmax
-    window; lineage kept flat with a localCheckpoint per round.
+    window; lineage kept flat with a loop_frame per round.
     Synchronous LPA can oscillate on bipartite structures — the fixed
     round count makes that a defined, replayable outcome rather than a
     hang.
     """
-    directed = _both_directions(edges, "u", "v").localCheckpoint(eager=True)
+    # Materialized: the initial labels and every round's votes read it.
+    directed = materialize(_both_directions(edges))
     labels = (
         directed.select(F.col("src").alias("id")).distinct()
         .select("id", F.col("id").alias("community"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(LPA_ITERATIONS):
         votes = (
@@ -379,11 +379,10 @@ def label_propagation(edges: DataFrame) -> DataFrame:
             .agg(F.count("*").alias("_n"))
         )
         w = Window.partitionBy("id").orderBy(F.desc("_n"), F.asc("community"))
-        labels = (
+        labels = loop_frame(
             votes.withColumn("_r", F.row_number().over(w))
             .filter(F.col("_r") == 1)
             .select("id", "community")
-            .localCheckpoint(eager=True)
         )
     sizes = labels.groupBy("community").agg(F.count("*").cast("long").alias("n_members"))
     return labels.join(sizes, "community").select("id", "community", "n_members")
@@ -498,10 +497,10 @@ def hits(edges: DataFrame, iterations: int = HITS_ITERATIONS) -> DataFrame:
         # a must be computed at least once before the final projection
         raise ValueError(f"hits: iterations must be >= 1, got {iterations}")
     spark = edges.sparkSession
-    e = (
+    # Materialized: the emptiness check and every round read it.
+    e = materialize(
         edges.select(F.col("c").cast("long").alias("_c"), F.col("s").cast("long").alias("_s"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     if e.limit(1).count() == 0:
         # empty edge set: _normalize's collected squared norm would be
@@ -521,9 +520,9 @@ def hits(edges: DataFrame, iterations: int = HITS_ITERATIONS) -> DataFrame:
         # a checkpointed scan adds no second execution. Identical
         # arithmetic — same raw sums, same s2, same snap expression.
         raw = loop_frame(raw)
-        s2 = raw.agg(
-            F.sum(F.col("_raw").cast("decimal(38,0)") * F.col("_raw")).alias("_s2")
-        ).collect()[0]["_s2"]
+        s2 = collect_control(
+            raw.agg(F.sum(F.col("_raw").cast("decimal(38,0)") * F.col("_raw")).alias("_s2"))
+        )[0]["_s2"]
         nrm = math.sqrt(float(s2))  # float(int) == DuckDB CAST(HUGEINT AS DOUBLE)
         return raw.select(
             key,
@@ -587,13 +586,13 @@ def kcore(edges: DataFrame) -> DataFrame:
     Returns (id, core_degree) for every vertex surviving round
     ``KCORE_ROUNDS``, with its degree inside the surviving subgraph.
     """
-    e = (
+    # Materialized: the first round's degrees and semi-join both read it.
+    e = materialize(
         edges.select(
             F.col("u").cast("long").alias("_u"), F.col("v").cast("long").alias("_v")
         )
         .filter(F.col("_u") != F.col("_v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     def _degrees(g: DataFrame, out: str) -> DataFrame:
@@ -674,13 +673,12 @@ def bfs_depths(edges: DataFrame, rounds: int = BFS_ROUNDS) -> DataFrame:
     counters; cross-engine equality is set identity. An edge list with
     no non-self-loop edge has no source and returns no rows.
     """
-    sym = loop_frame(_undirected_edges(edges, "u", "v"))
-    src = (
+    sym = loop_frame(_undirected_edges(edges))
+    visited = (
         sym.agg(F.min("_u").alias("_id"))
         .filter(F.col("_id").isNotNull())
         .select("_id", F.lit(0).cast("long").alias("depth"))
     )
-    visited = src.localCheckpoint(eager=True)
     # r14 (guide §2.4/§1): ONE action per round instead of two — the
     # frontier is re-derived from the checkpointed visited table by a
     # depth filter (a narrow scan of the 8-partition checkpoint), so
@@ -719,19 +717,19 @@ def _multi_source_bfs(
     State is bounded by pivots × vertices; each round is one
     frontier⋈edges expansion plus one (pivot, vertex)-keyed
     anti-join."""
-    sym = loop_frame(_undirected_edges(edges, "u", "v"))
+    sym = loop_frame(_undirected_edges(edges))
     piv = (
         sym.select(F.col("_u").alias("_p"))
         .distinct()
         .orderBy(F.md5(F.col("_p").cast("string")), F.col("_p"))
         .limit(pivots)
     )
-    lvl0 = piv.select(
+    visited = piv.select(
         "_p",
         F.col("_p").alias("_id"),
         F.lit(0).cast("long").alias("depth"),
         F.lit(1).cast("long").alias("sigma"),
-    ).localCheckpoint(eager=True)
+    )
     # r14 (guide §2.4/§1): ONE action per round instead of two — the
     # frontier is re-derived from the checkpointed visited table by a
     # depth filter, so the σ-summing expansion, anti-join, union and
@@ -739,7 +737,6 @@ def _multi_source_bfs(
     # the old separate nxt checkpoint. (A fully-lazy visited union was
     # also probed and REGRESSED — the growing union's per-leg stage
     # materializations under AQE cost more than the checkpoint.)
-    visited = lvl0
     for t in range(1, rounds + 1):
         nxt = (
             visited.filter(F.col("depth") == t - 1)
@@ -810,7 +807,7 @@ def edge_support(edges: DataFrame) -> DataFrame:
     at its minimum-rank apex, O(√m) wedge fan-out), then explodes each
     triangle into its three unordered edges and counts."""
     deg = degree_table(edges)
-    oriented = orient_by_degree(edges, deg).localCheckpoint(eager=True)
+    oriented = orient_by_degree(edges, deg)
     # r14 (guide §2.5): the wedge self-join is byte-light (the fixture
     # edge list shuffles ~1.7 MB) but its output stage does the whole
     # C(deg,2) wedge fan-out + closing probe — AQE's byte-based
@@ -980,9 +977,9 @@ def betweenness_sampled(
     # count(*) over (pivot, vertex) rows upper-bounds the per-pivot
     # reached-vertex count (no countDistinct — that would add an
     # exchange; this agg is one map-side-combinable pass).
-    _max_sigma, _n_reached = visited.agg(
-        F.max("sigma").cast("long"), F.count("*").cast("long")
-    ).first()
+    _max_sigma, _n_reached = collect_control(
+        visited.agg(F.max("sigma").cast("long"), F.count("*").cast("long"))
+    )[0]
     _guard_betweenness_bound(_max_sigma or 0, _n_reached or 0)
     sig_lvls: list[DataFrame] = [
         visited.filter(F.col("depth") == t).select("_p", "_id", "sigma")
@@ -992,7 +989,7 @@ def betweenness_sampled(
     full_delta: dict[int, DataFrame] = {
         rounds: sig_lvls[rounds].select(
             "_p", "_id", "sigma", F.lit(0).cast("long").alias("dnano")
-        ).localCheckpoint(eager=True)
+        )
     }
     for t in range(rounds - 1, -1, -1):
         succ = full_delta[t + 1].select(
@@ -1054,7 +1051,7 @@ def rotor_walks(edges: DataFrame) -> DataFrame:
     keys on both engines); the DuckDB twin unrolls one next-hop CTE +
     one hop CTE per step (device 7).
     """
-    sym = loop_frame(_undirected_edges(edges, "u", "v"))
+    sym = loop_frame(_undirected_edges(edges))
     verts = sym.select(F.col("_u").alias("_id")).distinct()
     walks = verts.select(
         F.col("_id").alias("_start"), F.col("_id").alias("_cur")
@@ -1112,7 +1109,7 @@ def spectral_coordinate(edges: DataFrame) -> DataFrame:
     rounding stage."""
     from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 
-    directed = loop_frame(_both_directions(edges, "u", "v"))
+    directed = loop_frame(_both_directions(edges))
     h = F.conv(
         F.substring(F.md5(F.col("id").cast("string")), 1, 15), 16, 10
     ).cast("long")
@@ -1141,11 +1138,9 @@ def spectral_coordinate(edges: DataFrame) -> DataFrame:
             .groupBy(F.col("dst").alias("id"))
             .agg(round_det(F.sum("x") / F.count("*"), 9).alias("y")),
         )
-        m = y.agg(round_det(F.sum("y") / F.count("*"), 9).alias("_m")).collect()[0][
-            "_m"
-        ]
+        m = collect_control(y.agg(round_det(F.sum("y") / F.count("*"), 9).alias("_m")))[0]["_m"]
         c = y.select("id", round_det(F.col("y") - F.lit(m), 9).alias("c"))
-        s = c.agg(F.max(F.abs(F.col("c"))).alias("_s")).collect()[0]["_s"]
+        s = collect_control(c.agg(F.max(F.abs(F.col("c"))).alias("_s")))[0]["_s"]
         scale = (
             round_det(F.col("c") / F.lit(s), 9)
             if s is not None and s > 0
@@ -1199,7 +1194,6 @@ def bellman_ford_distances(
         sym.agg(F.min("_u").alias("_id"))
         .filter(F.col("_id").isNotNull())
         .select("_id", F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(rounds):
         relaxed = (

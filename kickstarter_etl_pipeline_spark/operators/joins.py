@@ -49,41 +49,33 @@ def salted_join(
     return salted_large.join(replicated_small, on=on + ["_salt"], how=how).drop("_salt")
 
 
-def asof_join_backward(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    right_value_cols: list[str],
-    left_id: str,
-    right_id: str,
-) -> DataFrame:
-    """For each left row, attach the most recent right row of the same key
-    with right_ts <= left_ts (backward as-of, tie → right wins).
+def asof_join_backward(left: DataFrame, right: DataFrame) -> DataFrame:
+    """For each left event, attach the most recent right event of the
+    same ``user_id`` with right ``ts`` <= left ``ts`` (backward as-of,
+    tie → right wins). Both frames are events-shaped: ``user_id``,
+    ``ts``, ``event_id`` and ``value``.
 
-    Output: all left columns + ``asof_<col>`` for each right value column
-    + ``asof_<right_id>`` + ``asof_ts_us`` (exact microseconds of the
-    matched right row; null when no prior right row exists).
+    Output: ``user_id``, ``event_id``, ``left_ts_us`` + ``asof_right_id``,
+    ``asof_ts_us`` (exact microseconds of the matched right row) and
+    ``asof_value``; null when no prior right row exists.
     """
-    l_us = F.unix_micros(F.col(left_ts).cast("timestamp"))
-    r_us = F.unix_micros(F.col(right_ts).cast("timestamp"))
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
 
     tagged_right = right.select(
-        F.col(on).alias("_key"),
-        r_us.alias("_us"),
+        F.col("user_id").alias("_key"),
+        us.alias("_us"),
         F.lit(0).alias("_tag"),  # right sorts before left at equal ts → <= semantics
-        F.col(right_id).cast("long").alias("_rid"),
-        *[F.col(c).alias(f"_rv_{c}") for c in right_value_cols],
+        F.col("event_id").cast("long").alias("_rid"),
+        F.col("value").alias("_rv_value"),
         F.lit(None).cast("long").alias("_lid"),
     )
     tagged_left = left.select(
-        F.col(on).alias("_key"),
-        l_us.alias("_us"),
+        F.col("user_id").alias("_key"),
+        us.alias("_us"),
         F.lit(1).alias("_tag"),
         F.lit(None).cast("long").alias("_rid"),
-        *[F.lit(None).cast(dict(right.dtypes)[c]).alias(f"_rv_{c}") for c in right_value_cols],
-        F.col(left_id).cast("long").alias("_lid"),
+        F.lit(None).cast(dict(right.dtypes)["value"]).alias("_rv_value"),
+        F.col("event_id").cast("long").alias("_lid"),
     )
     merged = tagged_right.unionByName(tagged_left)
     w = (
@@ -105,7 +97,7 @@ def asof_join_backward(
         F.struct(
             F.col("_us").alias("ts"),
             F.col("_rid").alias("rid"),
-            *[F.col(f"_rv_{c}").alias(c) for c in right_value_cols],
+            F.col("_rv_value").alias("value"),
         ),
     )
     carried = merged.select(
@@ -116,28 +108,21 @@ def asof_join_backward(
         F.last(right_struct, ignorenulls=True).over(w).alias("_carry"),
     )
     return carried.filter(F.col("_tag") == 1).select(
-        F.col("_key").alias(on),
-        F.col("_lid").alias(left_id),
+        F.col("_key").alias("user_id"),
+        F.col("_lid").alias("event_id"),
         F.col("_us").alias("left_ts_us"),
         F.col("_carry.rid").alias("asof_right_id"),
         F.col("_carry.ts").alias("asof_ts_us"),
-        *[F.col(f"_carry.{c}").alias(f"asof_{c}") for c in right_value_cols],
+        F.col("_carry.value").alias("asof_value"),
     )
 
 
 def asof_join_forward(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    right_value_cols: list[str],
-    left_id: str,
-    right_id: str,
-    tolerance_us: int | None = None,
+    left: DataFrame, right: DataFrame, tolerance_us: int | None = None
 ) -> DataFrame:
-    """For each left row, attach the EARLIEST right row of the same key
-    with right_ts >= left_ts (forward as-of, tie → right wins), nulled
+    """For each left event, attach the EARLIEST right event of the same
+    ``user_id`` with right ``ts`` >= left ``ts`` (forward as-of, tie →
+    right wins; frames shaped as in :func:`asof_join_backward`), nulled
     out when the gap exceeds ``tolerance_us`` — the "next purchase
     within the attribution window" shape, the time-mirror of
     :func:`asof_join_backward` and the same single-shuffle union +
@@ -150,28 +135,28 @@ def asof_join_forward(
     id-descending so the carried winner is the SMALLEST id — matching
     the (ts, id) ascending argmin any SQL twin computes.
 
-    Output: key, left id/ts + ``asof_<col>``/``asof_right_id``/
+    Output: ``user_id``, ``event_id``, ``left_ts_us`` +
+    ``asof_value``/``asof_right_id``/
     ``asof_ts_us``/``gap_us`` (all null when no following right row
     exists inside the tolerance).
     """
-    l_us = F.unix_micros(F.col(left_ts).cast("timestamp"))
-    r_us = F.unix_micros(F.col(right_ts).cast("timestamp"))
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
 
     tagged_right = right.select(
-        F.col(on).alias("_key"),
-        r_us.alias("_us"),
+        F.col("user_id").alias("_key"),
+        us.alias("_us"),
         F.lit(0).alias("_tag"),  # right before left at equal ts → >= semantics
-        F.col(right_id).cast("long").alias("_rid"),
-        *[F.col(c).alias(f"_rv_{c}") for c in right_value_cols],
+        F.col("event_id").cast("long").alias("_rid"),
+        F.col("value").alias("_rv_value"),
         F.lit(None).cast("long").alias("_lid"),
     )
     tagged_left = left.select(
-        F.col(on).alias("_key"),
-        l_us.alias("_us"),
+        F.col("user_id").alias("_key"),
+        us.alias("_us"),
         F.lit(1).alias("_tag"),
         F.lit(None).cast("long").alias("_rid"),
-        *[F.lit(None).cast(dict(right.dtypes)[c]).alias(f"_rv_{c}") for c in right_value_cols],
-        F.col(left_id).cast("long").alias("_lid"),
+        F.lit(None).cast(dict(right.dtypes)["value"]).alias("_rv_value"),
+        F.col("event_id").cast("long").alias("_lid"),
     )
     merged = tagged_right.unionByName(tagged_left)
     w = (
@@ -187,7 +172,7 @@ def asof_join_forward(
         F.struct(
             F.col("_us").alias("ts"),
             F.col("_rid").alias("rid"),
-            *[F.col(f"_rv_{c}").alias(c) for c in right_value_cols],
+            F.col("_rv_value").alias("value"),
         ),
     )
     carried = merged.select(
@@ -198,23 +183,23 @@ def asof_join_forward(
         F.last(right_struct, ignorenulls=True).over(w).alias("_carry"),
     )
     out = carried.filter(F.col("_tag") == 1).select(
-        F.col("_key").alias(on),
-        F.col("_lid").alias(left_id),
+        F.col("_key").alias("user_id"),
+        F.col("_lid").alias("event_id"),
         F.col("_us").alias("left_ts_us"),
         F.col("_carry.rid").alias("asof_right_id"),
         F.col("_carry.ts").alias("asof_ts_us"),
-        *[F.col(f"_carry.{c}").alias(f"asof_{c}") for c in right_value_cols],
+        F.col("_carry.value").alias("asof_value"),
     )
     gap = F.col("asof_ts_us") - F.col("left_ts_us")
     if tolerance_us is not None:
         inside = gap <= F.lit(tolerance_us)
         out = out.select(
-            on,
-            left_id,
+            "user_id",
+            "event_id",
             "left_ts_us",
             F.when(inside, F.col("asof_right_id")).alias("asof_right_id"),
             F.when(inside, F.col("asof_ts_us")).alias("asof_ts_us"),
-            *[F.when(inside, F.col(f"asof_{c}")).alias(f"asof_{c}") for c in right_value_cols],
+            F.when(inside, F.col("asof_value")).alias("asof_value"),
         )
         gap = F.col("asof_ts_us") - F.col("left_ts_us")
     return out.withColumn("gap_us", gap)

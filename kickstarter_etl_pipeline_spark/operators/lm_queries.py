@@ -17,6 +17,7 @@ from kickstarter_etl_pipeline_spark.constants import (
     RAKE_STOPWORDS,
 )
 from kickstarter_etl_pipeline_spark.operators import text as TX
+from kickstarter_etl_pipeline_spark.operators.partitioning import materialize
 from kickstarter_etl_pipeline_spark.operators.ranking import (
     bigint,
     collect_control,
@@ -345,7 +346,7 @@ def q_kneser_ney_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # size >= 2 guard: ANSI sequence(1, 0) counts DOWN (the r5 shingle
     # trap) — single-token docs must contribute no pairs, not a reversed
     # range.
-    toks = docs.select(TX.tokens("text").alias("_t")).filter(F.expr("size(_t) >= 2"))
+    toks = docs.select(TX.tokens().alias("_t")).filter(F.expr("size(_t) >= 2"))
     bigrams = toks.select(
         F.explode(
             F.expr(
@@ -445,8 +446,9 @@ def q_ngram_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n = 8
     docs = load_table(spark, sf_dir, "documents")
-    staged = ensure_min_partitions(docs).withColumn("_toks", TX.tokens("text"))
-    pos = (
+    staged = ensure_min_partitions(docs).withColumn("_toks", TX.tokens())
+    # Materialized: the first-doc aggregate and its join back both read it.
+    pos = materialize(
         staged.filter(F.size("_toks") >= n)
         .select(
             "doc_id",
@@ -457,7 +459,6 @@ def q_ngram_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("gram"),
         )
-        .localCheckpoint(eager=True)
     )
     first_doc = pos.groupBy("gram").agg(F.min("doc_id").alias("_first"))
     per_doc = (
@@ -724,7 +725,7 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
     per_doc = docs.select(
         "lang",
-        F.size(TX.tokens("text")).cast("long").alias("_ws"),
+        F.size(TX.tokens()).cast("long").alias("_ws"),
         F.size(F.regexp_extract_all("text", F.lit(pattern), F.lit(0)))
         .cast("long")
         .alias("_bpe"),
@@ -965,13 +966,12 @@ def q_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join back → phrase-text aggregate → TakeOrdered(30)."""
     docs = load_table(spark, sf_dir, "documents")
     words = (
-        docs.select("doc_id", F.posexplode(TX.tokens("text")).alias("pos", "token"))
+        docs.select("doc_id", F.posexplode(TX.tokens()).alias("pos", "token"))
         .filter(~F.col("token").isin(*RAKE_STOPWORDS) & (F.col("token") != ""))
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
-    member = words.withColumn(
-        "_isl", F.col("pos") - F.row_number().over(w)
-    ).localCheckpoint(eager=True)
+    # Materialized: the phrase lengths and their join back both read it.
+    member = materialize(words.withColumn("_isl", F.col("pos") - F.row_number().over(w)))
     phrase_len = member.groupBy("doc_id", "_isl").agg(
         F.count("*").cast("long").alias("_plen")
     )
@@ -1075,11 +1075,11 @@ def q_session_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kickstarter_etl_pipeline_spark.operators import events as EV
 
     bucket_us = 1_800_000_000  # bucket width; happens to equal the gap
-    iv = (
+    # Materialized: both sides of the bucket self-join read it.
+    iv = materialize(
         EV.with_session_ids(load_table(spark, sf_dir, "events"))
         .groupBy("user_id", "session_id")
         .agg(F.min("_us").alias("start_us"), F.max("_us").alias("end_us"))
-        .localCheckpoint(eager=True)
     )
     bucketed = iv.select(
         "user_id",
@@ -1258,7 +1258,7 @@ def q_bigram_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     table joined back (AQE broadcasts it when small) + a scalar
     aggregate."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(TX.tokens("text").alias("_t")).filter(F.expr("size(_t) >= 2"))
+    toks = docs.select(TX.tokens().alias("_t")).filter(F.expr("size(_t) >= 2"))
     bigrams = toks.select(
         F.explode(
             F.expr(
@@ -1303,7 +1303,7 @@ def q_lexical_diversity_by_source(spark: SparkSession, sf_dir: str) -> DataFrame
     6-dp snap. One explode + one (source, token) aggregate + one
     per-source rollup — uniform keys, map-side combined."""
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select("source", F.explode(TX.tokens("text")).alias("token"))
+    tok = docs.select("source", F.explode(TX.tokens()).alias("token"))
     per_tok = tok.groupBy("source", "token").agg(
         F.count("*").cast("long").alias("_n")
     )
@@ -1519,7 +1519,7 @@ def q_dsir_selection_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, all keyed by doc_id."""
     B = 128
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", "lang", TX.tokens("text").alias("_tk"))
+    toks = docs.select("doc_id", "lang", TX.tokens().alias("_tk"))
     uni = toks.select("doc_id", "lang", F.explode("_tk").alias("_feat"))
     # size >= 2 guard: ANSI sequence(1, 0) counts DOWN (the r5 trap).
     bi = toks.filter(F.expr("size(_tk) >= 2")).select(

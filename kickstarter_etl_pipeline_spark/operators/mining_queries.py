@@ -16,7 +16,9 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from kickstarter_etl_pipeline_spark.constants import BPE_ROUNDS
 from kickstarter_etl_pipeline_spark.operators import events as EV
 from kickstarter_etl_pipeline_spark.operators import text as TX
+from kickstarter_etl_pipeline_spark.operators.partitioning import loop_frame, materialize
 from kickstarter_etl_pipeline_spark.operators.ranking import (
+    collect_control,
     collected_offsets,
     grouped_two_phase_rank,
     two_phase_rank,
@@ -397,7 +399,7 @@ def q_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     TB the pair key space is tiny (charset²), so the aggregate
     map-side-combines to almost nothing."""
     docs = load_table(spark, sf_dir, "documents")
-    words = docs.select(F.explode(TX.tokens("text")).alias("w")).filter(
+    words = docs.select(F.explode(TX.tokens()).alias("w")).filter(
         F.length("w") >= 2
     )
     pairs = words.select(
@@ -456,13 +458,14 @@ def _bpe_fit(spark: SparkSession, sf_dir: str):
     ∪ merges|² keys), a 1-row argmax collect (the BT-MM bounded-
     scalar-collect device — the merge literal must parametrize the
     next round's fold), and a narrow per-row map over the vocab.
-    localCheckpoint per round truncates the 8-deep fold lineage.
+    A loop_frame per round truncates the 8-deep fold lineage.
 
     Determinism: counts are exact BIGINT; the argmax total order is
     (count DESC, lhs ASC, rhs ASC); no floats anywhere."""
     docs = load_table(spark, sf_dir, "documents")
-    vocab = (
-        docs.select(F.explode(TX.tokens("text")).alias("w"))
+    # Materialized: round 1's pair count and merge both read it.
+    vocab = materialize(
+        docs.select(F.explode(TX.tokens()).alias("w"))
         .filter(F.length("w") >= 2)
         .groupBy("w")
         .agg(F.count("*").cast("long").alias("freq"))
@@ -471,7 +474,6 @@ def _bpe_fit(spark: SparkSession, sf_dir: str):
             "freq",
             F.trim(F.regexp_replace("w", "(.)", "$1 ")).alias("seq"),
         )
-        .localCheckpoint(eager=True)
     )
     merges: list[tuple] = []
     for r in range(1, BPE_ROUNDS + 1):
@@ -485,22 +487,21 @@ def _bpe_fit(spark: SparkSession, sf_dir: str):
                 )
             ).alias("p"),
         ).select("freq", "p.lhs", "p.rhs")
-        best = (
+        best = collect_control(
             pairs.groupBy("lhs", "rhs")
             .agg(F.sum("freq").cast("long").alias("pair_count"))
             .orderBy(F.desc("pair_count"), F.asc("lhs"), F.asc("rhs"))
             .limit(1)
-            .collect()
         )
         if not best:  # vocabulary fully collapsed (unreachable on fixtures)
             break
         lhs, rhs, cnt = best[0].lhs, best[0].rhs, best[0].pair_count
-        vocab = vocab.select(
-            "w", "freq", _bpe_apply_merge(F.col("seq"), lhs, rhs).alias("seq")
-        ).localCheckpoint(eager=True)
-        total = vocab.agg(
-            F.sum(F.col("freq") * F.size(F.split("seq", " "))).cast("long").alias("t")
-        ).collect()[0].t
+        vocab = loop_frame(
+            vocab.select("w", "freq", _bpe_apply_merge(F.col("seq"), lhs, rhs).alias("seq"))
+        )
+        total = collect_control(
+            vocab.agg(F.sum(F.col("freq") * F.size(F.split("seq", " "))).cast("long").alias("t"))
+        )[0].t
         merges.append((r, lhs, rhs, lhs + rhs, cnt, total))
     return vocab, merges
 
@@ -549,7 +550,7 @@ def q_bpe_tokenized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
-        "lang", "source", F.explode(TX.tokens("text")).alias("w")
+        "lang", "source", F.explode(TX.tokens()).alias("w")
     ).filter(F.length("w") >= 2)
     return (
         words.join(lut, "w")
@@ -593,7 +594,7 @@ def q_bpe_pack_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     docs = load_table(spark, sf_dir, "documents")
     sized = (
-        docs.select("doc_id", "source", F.explode(TX.tokens("text")).alias("w"))
+        docs.select("doc_id", "source", F.explode(TX.tokens()).alias("w"))
         .join(lut, "w", "left")
         .groupBy("doc_id", "source")
         .agg(F.sum(F.coalesce("_bt", F.lit(1).cast("long"))).cast("long").alias("n_bpe_tokens"))
@@ -903,8 +904,8 @@ def q_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def hll_registers(keys: DataFrame, key_col: str, m: int = 256) -> DataFrame:
-    """The HLL register table: (reg, _m) with register = low 8 md5 bits
+def hll_registers(keys: DataFrame, m: int = 256) -> DataFrame:
+    """The HLL register table of the ``user_id`` keys: (reg, _m) with register = low 8 md5 bits
     and _m = max rank over the register's keys. Factored out of
     :func:`q_hll_manual_report` so the merge semantics are testable in
     isolation: a MAX per register is associative/commutative, so the
@@ -921,7 +922,7 @@ def hll_registers(keys: DataFrame, key_col: str, m: int = 256) -> DataFrame:
         raise ValueError(f"m must be a power of two, got {m}")
     max_rank = 60 - shift + 1  # all-zero w ranks one past the top bit
     h = F.conv(
-        F.substring(F.md5(F.col(key_col).cast("string")), 1, 15), 16, 10
+        F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10
     ).cast("long")
     return (
         keys.select(
@@ -967,7 +968,7 @@ def q_hll_manual_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     alpha = 0.7213 / (1.0 + 1.079 / m)  # 0.7182725932495458, same literal in SQL
     events = load_table(spark, sf_dir, "events")
     users = events.select("user_id").distinct()
-    regs = hll_registers(users, "user_id", m)
+    regs = hll_registers(users, m)
     # exact integer harmonic spine: empty registers contribute 2^54
     folded = regs.agg(
         F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), CAST(54 - _m AS INT))"))
@@ -1040,12 +1041,7 @@ def q_bloom_fpr_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             % m_bits
         )
 
-    bits = (
-        members.select("key", jarr)
-        .select(bloom_bit(F.col("key")).alias("bit"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    bits = members.select("key", jarr).select(bloom_bit(F.col("key")).alias("bit")).distinct()
     maxk = F.broadcast(members.agg(F.max("key").alias("_maxk")))
     probes = (
         spark.range(1, n_probes + 1)
@@ -1209,7 +1205,7 @@ def q_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kickstarter_etl_pipeline_spark.operators.partitioning import ensure_min_partitions
 
     docs = load_table(spark, sf_dir, "documents")
-    staged = ensure_min_partitions(docs).withColumn("_toks", TX.tokens("text"))
+    staged = ensure_min_partitions(docs).withColumn("_toks", TX.tokens())
     # k=5 token grams; windows of w=4 gram hashes need >= k+w-1 = 8 tokens
     grams = (
         staged.filter(F.size("_toks") >= 8)

@@ -12,25 +12,43 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
+def materialize(df: DataFrame) -> DataFrame:
+    """Store ``df``'s rows and return a frame that reads them back: the
+    package's one way to materialize an intermediate, and its one
+    ``localCheckpoint`` call. Materialize only where a step needs it —
+    a frame two consumers read, a loop carry, an optimizer barrier, a
+    range partitioning sampled once, or files the same call overwrites
+    — and name that rule at the call.
+
+    - Eager, never lazy. A lazy checkpoint materializes mid-job inside
+      whichever action first touches it, and its cleanup races
+      DAGScheduler accumulator updates: every bench run ended with
+      thousands of "attempted to access non-existent accumulator" ERROR
+      lines. Checkpointing in its own job up front is race-free.
+    - A local checkpoint, never ``cache()``. A cached frame stays pinned
+      in the session's CacheManager until an explicit unpersist that
+      nobody is positioned to issue (the query registry returns lazy
+      frames), so storage accretes across a long-lived session. The
+      ContextCleaner releases checkpoint blocks as soon as the frame
+      goes out of scope: no bookkeeping, bounded storage.
+    - The trade-off: local checkpoint blocks do not survive executor
+      loss, so a query that loses one restarts. Whether a reliable
+      checkpoint is needed at 100 TB is decided here, for every caller.
+    """
+    return df.localCheckpoint(eager=True)
+
+
 def ensure_min_partitions(df: DataFrame, barrier: bool = True) -> DataFrame:
     """Repartition only if the plan currently has fewer partitions.
 
-    With ``barrier=True`` the repartition is followed by an eager
-    localCheckpoint as an optimizer barrier: without it, Catalyst pushes
-    downstream expression-heavy Projects/Filters below the Exchange
+    With ``barrier=True`` the repartitioned frame is materialized as an
+    optimizer barrier: without it, Catalyst pushes downstream
+    expression-heavy Projects/Filters below the Exchange
     (e.g. the not-empty filter InferFiltersFromGenerate derives from an
     explode, with the full shingle expression inlined), putting all the
     compute back into the single pre-shuffle partition. Measured on the
     5k-doc fixture: 27.6s single-threaded → 3.9s with the barrier on
     local[32]. The checkpoint stores only the raw repartitioned rows.
-
-    Eager (not lazy) on purpose: a lazy localCheckpoint materializes
-    mid-job inside whichever action first touches it, and its cleanup
-    races DAGScheduler accumulator updates — every bench run ended with
-    thousands of "attempted to access non-existent accumulator" ERROR
-    lines. Checkpointing in its own tiny job up front is race-free, and
-    the checkpoint blocks are released by the ContextCleaner when the
-    DataFrame goes out of scope (no unpersist bookkeeping).
 
     Use ``barrier=False`` when the expensive downstream work is a join
     or aggregation — those can't sink below the exchange, and skipping
@@ -42,7 +60,7 @@ def ensure_min_partitions(df: DataFrame, barrier: bool = True) -> DataFrame:
     target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         out = df.repartition(target)
-        return out.localCheckpoint(eager=True) if barrier else out
+        return materialize(out) if barrier else out
     return df
 
 
@@ -67,7 +85,7 @@ LOOP_PARTITIONS = 8
 
 def loop_frame(df: DataFrame) -> DataFrame:
     """Pin an iterative loop-carried frame to ``LOOP_PARTITIONS`` stored
-    partitions with a NARROW coalesce, then eagerly localCheckpoint it.
+    partitions with a NARROW coalesce, then :func:`materialize` it.
 
     The pin is per frame, so it touches no session state: scoping a
     small ``spark.sql.shuffle.partitions`` over a loop body would leak
@@ -88,7 +106,7 @@ def loop_frame(df: DataFrame) -> DataFrame:
     ensure_min_partitions' job, not this helper's. The constant is read
     at call time, so tests can narrow it with ``monkeypatch``.
     """
-    return df.coalesce(LOOP_PARTITIONS).localCheckpoint(eager=True)
+    return materialize(df.coalesce(LOOP_PARTITIONS))
 
 
 # State-store partition count of the stateful streaming queries that

@@ -32,6 +32,7 @@ import operator
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
+from kickstarter_etl_pipeline_spark.operators.partitioning import materialize
 from kickstarter_etl_pipeline_spark.session import default_parallelism
 
 # Control frames collected to the driver: P range partitions (8 by
@@ -180,7 +181,7 @@ def two_phase_rank(
     # second execution could disagree with the _pid each row got in the
     # first. The checkpoint pins a single partitioning that both
     # consumers read.
-    local = staged.localCheckpoint(eager=True)
+    local = materialize(staged)
     # P rows of control data: per-partition aggregates -> exclusive
     # prefix offsets, collected once and attached as a dense literal
     # array indexed by _pid — a pure projection, no exchange, no window,

@@ -32,6 +32,7 @@ from kickstarter_etl_pipeline_spark.constants import (
     MMR_POOL,
     PCA_ITERS,
 )
+from kickstarter_etl_pipeline_spark.operators.partitioning import materialize
 from kickstarter_etl_pipeline_spark.operators.ranking import collect_control
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 
@@ -69,7 +70,7 @@ def query_anchors(emb: DataFrame, n: int) -> DataFrame:
     return emb.filter(F.col("vec_id") < n).limit(n)
 
 
-def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     """Exact cosine top-k neighbors for each query vector.
 
     Broadcast the (small) query set against the corpus; rank on the
@@ -378,7 +379,7 @@ def ivf_anchor_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     spark = corpus.sparkSession
     # Anchor selection: a driver-side top-K of (md5(id), id) — K vectors
     # of control data, same posture as ivf_lloyd_topk's driver-side centroids.
-    anchor_rows = (
+    anchor_rows = collect_control(
         corpus.select(
             F.md5(F.col("vec_id").cast("string")).alias("_h"),
             F.col("vec_id").alias("_aid"),
@@ -386,7 +387,6 @@ def ivf_anchor_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
         )
         .orderBy("_h", "_aid")
         .limit(IVF_CELLS)
-        .collect()
     )
     anchor_mat = [list(r["_av"]) for r in anchor_rows]
 
@@ -499,16 +499,20 @@ def ivf_lloyd_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
         F.col("embedding"),
         lambda x: F.floor(x.cast("double") * GRID_SCALE + F.lit(0.5)).cast("long"),
     )
-    base = ensure_min_partitions(
-        corpus.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("_cvec"),
-            int_vec.alias("_iv"),
-        ),
-        barrier=False,
-    ).localCheckpoint(eager=True)
+    # Materialized: the initial centroids, every Lloyd round and the final
+    # assignment read it.
+    base = materialize(
+        ensure_min_partitions(
+            corpus.select(
+                F.col("vec_id").alias("neighbor_id"),
+                F.col("embedding").alias("_cvec"),
+                int_vec.alias("_iv"),
+            ),
+            barrier=False,
+        )
+    )
 
-    init_rows = (
+    init_rows = collect_control(
         base.select(
             F.md5(F.col("neighbor_id").cast("string")).alias("_h"),
             "neighbor_id",
@@ -516,7 +520,6 @@ def ivf_lloyd_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
         )
         .orderBy("_h", "neighbor_id")
         .limit(IVF_CLUSTERS)
-        .collect()
     )
     centroids = [list(r["_iv"]) for r in init_rows]
 
@@ -553,13 +556,12 @@ def ivf_lloyd_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     # A repartition-before-groupBy would instead ship the RAW exploded
     # rows — losing the combine that makes this loop corpus-scale-safe.
     for _ in range(IVF_ITERS):
-        stats = (
+        stats = collect_control(
             _assign(base, centroids)
             .select("_cell", F.posexplode("_iv").alias("_d", "_x"))
             .groupBy("_cell", "_d")
             .agg(F.sum("_x").alias("_s"), F.count("*").alias("_n"))
             .coalesce(1)
-            .collect()
         )
         by_cell: dict[int, dict[int, tuple[int, int]]] = {}
         for r in stats:
@@ -584,7 +586,7 @@ def ivf_lloyd_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
             # explode(slice(array_sort(_cd), 1, n_probe).c) on a null
             # distance array.
             "_cell",
-            F.explode(probe_cells_int(centroids, IVF_N_PROBE)(F.col("_qiv"))),
+            F.explode(probe_cells_int(centroids)(F.col("_qiv"))),
         )
         .drop("_qiv")
     )
@@ -674,9 +676,12 @@ def pca_top_component(corpus: DataFrame, n_iters: int = PCA_ITERS) -> DataFrame:
         F.col("embedding"),
         lambda x: F.floor(x.cast("double") * GRID_SCALE + F.lit(0.5)).cast("long"),
     )
-    base = ensure_min_partitions(
-        corpus.select(F.col("vec_id").alias("_id"), int_vec.alias("_iv")), barrier=False
-    ).localCheckpoint(eager=True)
+    # Materialized: the mean pass and the centering both read it.
+    base = materialize(
+        ensure_min_partitions(
+            corpus.select(F.col("vec_id").alias("_id"), int_vec.alias("_iv")), barrier=False
+        )
+    )
 
     spark = corpus.sparkSession
     # Control-loop aggregates land on <= dim or <= 64 groups: map-side
@@ -700,9 +705,12 @@ def pca_top_component(corpus: DataFrame, n_iters: int = PCA_ITERS) -> DataFrame:
         mu[r["_d"]] = r["_s"] // r["_n"]
 
     mu_sql = ", ".join(f"{int(m)}L" for m in mu)
-    centered = base.select(
-        "_id", F.expr(f"zip_with(_iv, array({mu_sql}), (v, m) -> v - m)").alias("_cv")
-    ).localCheckpoint(eager=True)
+    # Materialized: every power-iteration round reads it.
+    centered = materialize(
+        base.select(
+            "_id", F.expr(f"zip_with(_iv, array({mu_sql}), (v, m) -> v - m)").alias("_cv")
+        )
+    )
 
     # Each round plans a fresh aggregate, so its driver cost is the
     # plan build: _pca_projection writes the round's w as ONE SQL
@@ -780,7 +788,7 @@ def semantic_dedup(
     """
     from kickstarter_etl_pipeline_spark.operators.partitioning import ensure_min_partitions
 
-    anchor_rows = (
+    anchor_rows = collect_control(
         corpus.select(
             F.md5(F.col("vec_id").cast("string")).alias("_h"),
             F.col("vec_id").alias("_aid"),
@@ -788,7 +796,6 @@ def semantic_dedup(
         )
         .orderBy("_h", "_aid")
         .limit(n_cells)
-        .collect()
     )
     anchor_mat = [list(r["_av"]) for r in anchor_rows]
 
@@ -809,13 +816,12 @@ def semantic_dedup(
         corpus.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_vec")),
         barrier=False,
     ).withColumn("cell", assign_cell_nano(anchor_mat)(F.col("_vec")))
-    # Both pair-scan sides read the assignment; checkpoint so the
-    # n_cells × dim distance work runs once per row (released by the
-    # ContextCleaner — see operators.dedup module docstring). The norm
+    # Both pair-scan sides read the assignment; materialize so the
+    # n_cells × dim distance work runs once per row. The norm
     # is staged per ROW here so the per-candidate-pair work inside the
     # join is the dot product alone (the ann_lsh_topk lesson: cosine()
     # inline redoes two dim-length norm aggregates per pair).
-    assigned = assigned.withColumn("_nrm", norm(F.col("_vec"))).localCheckpoint(eager=True)
+    assigned = materialize(assigned.withColumn("_nrm", norm(F.col("_vec"))))
     a = assigned.select(
         F.col("_id").alias("id_a"), F.col("_vec").alias("_va"), F.col("_nrm").alias("_na"), "cell"
     )

@@ -38,21 +38,20 @@ def let1(bound: Column, body) -> Column:
     return F.element_at(F.transform(F.array(bound), body), 1)
 
 
-def normalized(text: Column | str) -> Column:
-    """Canonical form for hashing/dedup: trim, collapse whitespace, lowercase."""
-    col = F.col(text) if isinstance(text, str) else text
-    return F.lower(F.regexp_replace(F.trim(col), r"\s+", " "))
+def normalized() -> Column:
+    """Canonical form of ``text`` for hashing/dedup: trim, collapse
+    whitespace, lowercase."""
+    return F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
 
 
-def tokens(text: Column | str) -> Column:
-    """Whitespace tokenization of the trimmed, lowercased text."""
-    col = F.col(text) if isinstance(text, str) else text
-    return F.split(F.lower(F.trim(col)), r"\s+")
+def tokens() -> Column:
+    """Whitespace tokenization of the trimmed, lowercased ``text``."""
+    return F.split(F.lower(F.trim(F.col("text"))), r"\s+")
 
 
-def fingerprint_md5(text: Column | str) -> Column:
-    """Deterministic document fingerprint: md5 of the normalized text."""
-    return F.md5(normalized(text))
+def fingerprint_md5() -> Column:
+    """Deterministic document fingerprint: md5 of the normalized ``text``."""
+    return F.md5(normalized())
 
 
 def rolling_hash(text: Column | str) -> Column:
@@ -103,7 +102,7 @@ def with_text_stats(df: DataFrame) -> DataFrame:
     # through inline() — a 1-element Generate — so neither the split nor
     # the struct is re-evaluated per output column (CollapseProject
     # cannot inline through a Generate). Identical rows/schema.
-    return staged.select("doc_id", F.inline(F.array(let1(tokens("text"), _stats))))
+    return staged.select("doc_id", F.inline(F.array(let1(tokens(), _stats))))
 
 
 def quality_score() -> Column:
@@ -123,7 +122,7 @@ def quality_score() -> Column:
         )
         return round_det(length_ok * (0.5 + 0.5 * diversity) - punct_penalty, 6)
 
-    return let1(tokens("text"), _score)
+    return let1(tokens(), _score)
 
 
 def token_frequency(df: DataFrame) -> DataFrame:
@@ -139,7 +138,7 @@ def token_frequency(df: DataFrame) -> DataFrame:
 
     tok = (
         ensure_min_partitions(df)
-        .withColumn("_toks", tokens("text"))
+        .withColumn("_toks", tokens())
         .select(F.col("doc_id"), F.explode("_toks").alias("token"))
     )
     return tok.groupBy("token").agg(
@@ -172,7 +171,7 @@ def tfidf_top_terms(df: DataFrame) -> DataFrame:
 
     tok = (
         ensure_min_partitions(df)
-        .withColumn("_toks", tokens("text"))
+        .withColumn("_toks", tokens())
         .select(F.col("doc_id"), F.explode("_toks").alias("term"))
     )
     tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
@@ -203,7 +202,7 @@ def repetition_stats(df: DataFrame) -> DataFrame:
 
     tok = (
         ensure_min_partitions(df)
-        .withColumn("_toks", tokens("text"))
+        .withColumn("_toks", tokens())
         .select(F.col("doc_id"), F.explode("_toks").alias("token"))
     )
     per_token = tok.groupBy("doc_id", "token").agg(F.count("*").alias("_tc"))
@@ -246,7 +245,7 @@ def with_lang_id(df: DataFrame) -> DataFrame:
         return pred
 
     return df.withColumn(
-        "lang_pred", let1(tokens("text"), lambda tk: let1(_score_arr(tk), _pick))
+        "lang_pred", let1(tokens(), lambda tk: let1(_score_arr(tk), _pick))
     )
 
 
@@ -300,7 +299,7 @@ def oov_rate(df: DataFrame, vocab: DataFrame) -> DataFrame:
 
     tok = (
         ensure_min_partitions(df)
-        .withColumn("_toks", tokens("text"))
+        .withColumn("_toks", tokens())
         .select(F.col("doc_id"), F.explode("_toks").alias("token"))
     )
     marked = tok.join(
@@ -343,7 +342,7 @@ def unigram_surprisal(df: DataFrame) -> DataFrame:
 
     tok = (
         ensure_min_partitions(df)
-        .withColumn("_toks", tokens("text"))
+        .withColumn("_toks", tokens())
         .select(F.col("doc_id"), F.explode("_toks").alias("token"))
     )
     lm = tok.groupBy("token").agg(F.count("*").alias("_tf"))
@@ -381,7 +380,7 @@ def bigram_collocations(df: DataFrame) -> DataFrame:
     Two uniform-key shuffles (bigram counts, unigram counts); the
     unigram table broadcasts into the bigram side.
     """
-    staged = df.withColumn("_toks", tokens("text"))
+    staged = df.withColumn("_toks", tokens())
     bigrams = (
         staged.filter(F.size("_toks") >= 2)
         .select(
@@ -445,7 +444,7 @@ def skipgram_cooccurrence(df: DataFrame) -> DataFrame:
     One explode (bounded fan-out ≤ 2·window per token) and one
     uniform-key shuffle for the counts.
     """
-    staged = df.withColumn("_toks", tokens("text")).filter(F.size("_toks") >= 2)
+    staged = df.withColumn("_toks", tokens()).filter(F.size("_toks") >= 2)
     offsets = [o for o in range(-SKIPGRAM_WINDOW, SKIPGRAM_WINDOW + 1) if o != 0]
     pairs = staged.select(
         F.explode(

@@ -77,19 +77,18 @@ def rename_monetary(df: DataFrame) -> DataFrame:
     )
 
 
-def success_flag(state: Column | str) -> Column:
+def success_flag() -> Column:
     """F3: 1 iff state ∈ SUCCESS_STATES else 0 (src/etl_pipeline.py:106-110)."""
-    col = F.col(state) if isinstance(state, str) else state
-    return F.when(col.isin(*SUCCESS_STATES), 1).otherwise(0).cast("int")
+    return F.when(F.col("state").isin(*SUCCESS_STATES), 1).otherwise(0).cast("int")
 
 
 def with_success_flag(df: DataFrame) -> DataFrame:
-    return df.withColumn("success_flag", success_flag("state"))
+    return df.withColumn("success_flag", success_flag())
 
 
-def drop_null(df: DataFrame, subset: list[str]) -> DataFrame:
-    """P3: dropna(subset=...) (src/etl_pipeline.py:112-119)."""
-    return df.na.drop(subset=subset)
+def drop_null(df: DataFrame) -> DataFrame:
+    """P3: drop rows with a null ``name`` (src/etl_pipeline.py:112-119)."""
+    return df.na.drop(subset=["name"])
 
 
 def project_final(df: DataFrame) -> DataFrame:
@@ -108,7 +107,7 @@ def transform_kickstarter(df: DataFrame) -> DataFrame:
     out = with_duration_days(out)
     out = rename_monetary(out)
     out = with_success_flag(out)
-    out = drop_null(out, ["name"])
+    out = drop_null(out)
     return project_final(out)
 
 

@@ -59,6 +59,8 @@ import pandas as pd
 from pyspark.sql import Column, functions as F
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType
 
+from kickstarter_etl_pipeline_spark.constants import IVF_N_PROBE
+
 
 def _rows_matrix(s: pd.Series, dim: int, dtype) -> "tuple[np.ndarray, np.ndarray]":
     """(valid_mask, X): X stacks the valid rows as ``dtype`` (rows that
@@ -187,9 +189,9 @@ def assign_cell_int(cents: "list[list[int]]"):
     return lambda vec: _assign(vec)
 
 
-def probe_cells_int(cents: "list[list[int]]", n_probe: int):
+def probe_cells_int(cents: "list[list[int]]"):
     """Kernel twin of the query-side ``slice(array_sort(_cd), 1,
-    n_probe).c``: the ``n_probe`` nearest cells by (exact int64
+    IVF_N_PROBE).c``: the ``IVF_N_PROBE`` nearest cells by (exact int64
     distance, cell index) ascending."""
     C = np.asarray(cents, dtype=np.int64)
     k, dim = C.shape
@@ -206,7 +208,7 @@ def probe_cells_int(cents: "list[list[int]]", n_probe: int):
         for i in range(len(valid)):
             if valid[i]:
                 order = sorted(range(k), key=lambda c: (dists[j, c], c))
-                out[i] = np.asarray(order[:n_probe], dtype=np.int32)
+                out[i] = np.asarray(order[:IVF_N_PROBE], dtype=np.int32)
                 j += 1
         return pd.Series(out, dtype=object)
 

@@ -304,7 +304,7 @@ _ORACLES["ann_ivf_topk"] = _ann_ivf_lloyd_oracle_sql()
 _ORACLES["ivf_recall_report"] = f"""
     SELECT ex.query_id,
            CAST(count(l.neighbor_id) AS BIGINT) AS n_hits,
-           floor(count(l.neighbor_id) / 5.0 * 1000000 + 0.5) / 1000000.0 AS recall_at_5
+           floor(count(l.neighbor_id) / {float(ANN_K)} * 1000000 + 0.5) / 1000000.0 AS recall_at_5
     FROM ({ORACLES_CORE['embedding_topk']}) ex
     LEFT JOIN ({_ann_ivf_lloyd_oracle_sql()}) l
       ON ex.query_id = l.query_id AND ex.neighbor_id = l.neighbor_id
@@ -620,7 +620,7 @@ _ORACLES.update(ORACLES_EXT)
 _ORACLES["ann_recall_report"] = f"""
     SELECT ex.query_id,
            CAST(count(l.neighbor_id) AS BIGINT) AS n_hits,
-           floor(count(l.neighbor_id) / 5.0 * 1000000 + 0.5) / 1000000.0 AS recall_at_5
+           floor(count(l.neighbor_id) / {float(ANN_K)} * 1000000 + 0.5) / 1000000.0 AS recall_at_5
     FROM ({_ORACLES['embedding_topk']}) ex
     LEFT JOIN ({_ORACLES['ann_lsh_topk']}) l
       ON ex.query_id = l.query_id AND ex.neighbor_id = l.neighbor_id

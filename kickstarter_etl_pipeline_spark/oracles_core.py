@@ -4,6 +4,8 @@ Values must stay bit-comparable with the Spark twins — see the
 determinism rules in queries.py. Split out of queries.py in round 6.
 """
 
+from kickstarter_etl_pipeline_spark.constants import ANN_K
+
 _DIM_STATE_SQL = """
   SELECT CAST(row_number() OVER (ORDER BY state_name) AS INTEGER) AS state_key,
          state_name,
@@ -723,7 +725,7 @@ ORACLES_CORE: dict[str, str] = {
         FROM v a JOIN v b ON a.vec_id < b.vec_id
         WHERE round(list_cosine_similarity(a.e, b.e), 6) >= 0.9
     """,
-    "embedding_topk": """
+    "embedding_topk": f"""
         WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
                    FROM embeddings WHERE vec_id < 20),
         c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
@@ -733,7 +735,7 @@ ORACLES_CORE: dict[str, str] = {
         ranked AS (SELECT *, CAST(row_number() OVER (
                      PARTITION BY query_id ORDER BY cosine_sim DESC, neighbor_id) AS INTEGER) AS rank
                    FROM scored)
-        SELECT query_id, neighbor_id, cosine_sim, rank FROM ranked WHERE rank <= 5
+        SELECT query_id, neighbor_id, cosine_sim, rank FROM ranked WHERE rank <= {ANN_K}
     """,
     "range_join_price_bands": """
         SELECT band, count(*) AS n_orders,

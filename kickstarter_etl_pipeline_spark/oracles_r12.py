@@ -17,6 +17,7 @@ from kickstarter_etl_pipeline_spark.constants import (
     MAX_COVERAGE_K,
     OCCUPANCY_CAP,
     PPR_ITERATIONS,
+    PPR_RESTART,
     ROTOR_STEPS,
 )
 from kickstarter_etl_pipeline_spark.oracles_core import _TOKS
@@ -678,7 +679,7 @@ def _ppr_oracle_sql() -> str:
         p{k + 1} AS (
           SELECT a.id, """
             + rd9.format(
-                expr="CASE WHEN sd.id IS NOT NULL THEN 0.15 ELSE 0.0 END"
+                expr=f"CASE WHEN sd.id IS NOT NULL THEN {PPR_RESTART} ELSE 0.0 END"
                 f" + {DAMPING} * a.mi"
             )
             + f""" AS pr

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from kickstarter_etl_pipeline_spark import schemas
 from kickstarter_etl_pipeline_spark.logging_config import configure_logger
 from kickstarter_etl_pipeline_spark.operators import transform as X
+from kickstarter_etl_pipeline_spark.operators.ranking import collect_control
 from kickstarter_etl_pipeline_spark.plans.star import kickstarter_star
 from kickstarter_etl_pipeline_spark.plans.warehouse import load_warehouse
 from kickstarter_etl_pipeline_spark.sources.readers import read_csv
@@ -39,7 +40,12 @@ def run_pipeline(
     logger: logging.Logger | None = None,
 ) -> dict[str, int] | None:
     """Returns per-table load counts, or None when extraction failed
-    (the reference's None contract, src/etl_pipeline.py:289-291)."""
+    (the reference's None contract, src/etl_pipeline.py:289-291).
+
+    The per-state counts reach the driver through
+    ``ranking.collect_control``: a CSV with more than
+    ``CONTROL_ROWS_CAP`` distinct ``state`` values raises ``ValueError``
+    naming the cap."""
     logger = logger or configure_logger()
     logger.info("START OF KICKSTARTER ETL PIPELINE")
 
@@ -55,11 +61,13 @@ def run_pipeline(
     # one pass for every logged count: the transform keeps non-null
     # names, and its pledged_usd is usd_pledged_real renamed
     kept = F.col("name").isNotNull()
-    per_state = raw.groupBy("state").agg(
-        F.count("*").alias("n"),
-        F.count_if(kept).alias("kept"),
-        F.count_if(kept & F.col("usd_pledged_real").isNull()).alias("null_pledged"),
-    ).collect()
+    per_state = collect_control(
+        raw.groupBy("state").agg(
+            F.count("*").alias("n"),
+            F.count_if(kept).alias("kept"),
+            F.count_if(kept & F.col("usd_pledged_real").isNull()).alias("null_pledged"),
+        )
+    )
     per_state.sort(key=lambda r: (-r["n"], r["state"] is not None, r["state"]))
     n_raw = sum(r["n"] for r in per_state)
     logger.info("Extraction completed: %d rows, %d columns", n_raw, len(raw.columns))

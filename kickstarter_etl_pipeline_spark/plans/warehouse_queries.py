@@ -236,7 +236,6 @@ def q_incremental_rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             path,
             orders.filter(F.col("o_orderkey") % 3 == i),
             keys=["o_orderpriority"],
-            sum_cols=["o_totalprice"],
         )
     stored = spark.read.parquet(path)
     total = F.col("sum_o_totalprice")

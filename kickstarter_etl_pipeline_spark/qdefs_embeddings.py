@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from kickstarter_etl_pipeline_spark.constants import (
+    ANN_K,
     EMBED_DIM,
     LSH_NUM_PLANES,
     LSH_NUM_TABLES,
@@ -55,7 +56,7 @@ from kickstarter_etl_pipeline_spark.streaming.events_stream import (  # noqa: F4
 
 def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return brute_force_topk(emb, query_anchors(emb, 20), k=5)
+    return brute_force_topk(emb, query_anchors(emb, 20), k=ANN_K)
 
 
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -108,7 +109,7 @@ def q_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = query_anchors(emb, 20)
-    exact = brute_force_topk(emb, queries, k=5).select("query_id", "neighbor_id")
+    exact = brute_force_topk(emb, queries, k=ANN_K).select("query_id", "neighbor_id")
     approx = ivf_lloyd_topk(
         emb, queries
     ).select("query_id", "neighbor_id", F.lit(1).alias("_hit"))
@@ -119,7 +120,7 @@ def q_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "n_hits",
-            round_det(F.col("n_hits") / 5.0, 6).alias("recall_at_5"),
+            round_det(F.col("n_hits") / float(ANN_K), 6).alias("recall_at_5"),
         )
     )
 
@@ -472,8 +473,6 @@ def q_distinct_users_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark,
             path,
             events.filter(F.col("event_id") % 3 == i),
-            keys=["event_type"],
-            distinct_col="user_id",
         )
     return distinct_rollup_estimates(rollup)
 
@@ -505,11 +504,11 @@ def q_matryoshka_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF tier per dimension budget — the report's job is to justify
     that swap with a graded number."""
     emb = load_table(spark, sf_dir, "embeddings")
-    exact = brute_force_topk(emb, query_anchors(emb, 20), k=5).select(
+    exact = brute_force_topk(emb, query_anchors(emb, 20), k=ANN_K).select(
         "query_id", "neighbor_id"
     )
     t16 = emb.select("vec_id", F.slice("embedding", 1, 16).alias("embedding"))
-    trunc = brute_force_topk(t16, query_anchors(t16, 20), k=5).select(
+    trunc = brute_force_topk(t16, query_anchors(t16, 20), k=ANN_K).select(
         "query_id", "neighbor_id", F.lit(1).alias("_hit")
     )
     return (
@@ -519,7 +518,7 @@ def q_matryoshka_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "n_hits",
-            round_det(F.col("n_hits") / 5.0, 6).alias("recall_at_5"),
+            round_det(F.col("n_hits") / float(ANN_K), 6).alias("recall_at_5"),
         )
     )
 

@@ -408,16 +408,7 @@ def q_events_asof_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     purchases = events.filter(F.col("event_type") == "purchase")
     clicks = events.filter(F.col("event_type") == "click")
-    res = asof_join_backward(
-        purchases,
-        clicks,
-        on="user_id",
-        left_ts="ts",
-        right_ts="ts",
-        right_value_cols=["value"],
-        left_id="event_id",
-        right_id="event_id",
-    )
+    res = asof_join_backward(purchases, clicks)
     return res.select(
         "user_id",
         F.col("event_id").alias("purchase_event_id"),
@@ -616,17 +607,7 @@ def q_events_asof_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     clicks = events.filter(F.col("event_type") == "click")
     purchases = events.filter(F.col("event_type") == "purchase")
-    res = asof_join_forward(
-        clicks,
-        purchases,
-        on="user_id",
-        left_ts="ts",
-        right_ts="ts",
-        right_value_cols=["value"],
-        left_id="event_id",
-        right_id="event_id",
-        tolerance_us=3_600_000_000,
-    )
+    res = asof_join_forward(clicks, purchases, tolerance_us=3_600_000_000)
     return res.select(
         "user_id",
         F.col("event_id").alias("click_event_id"),

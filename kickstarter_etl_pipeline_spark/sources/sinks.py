@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from kickstarter_etl_pipeline_spark.operators.partitioning import materialize
+
 
 def write_parquet(df: DataFrame, path: str) -> None:
     """Overwrite ``path`` with ``df`` partitioned by ``order_year``."""
@@ -106,7 +108,8 @@ def merge_upsert(spark: SparkSession, df: DataFrame, path: str, keys: list[str])
         fresh.write.mode("overwrite").parquet(path)
         return {"updated": 0, "inserted": n, "carried": 0}
     carried = existing.join(fresh.select(*keys), on=keys, how="left_anti")
-    merged = carried.unionByName(fresh.select(*existing.columns)).localCheckpoint(eager=True)
+    # never read files being overwritten
+    merged = materialize(carried.unionByName(fresh.select(*existing.columns)))
     n_carried = carried.count()
     n_existing = existing.count()
     n_fresh = fresh.count()
@@ -169,10 +172,9 @@ def incremental_rollup_update(
     path: str,
     batch: DataFrame,
     keys: list[str],
-    sum_cols: list[str],
 ) -> DataFrame:
-    """Incrementally maintain a stored rollup: fold a new fact batch
-    into persisted per-key partials (count + sums) WITHOUT rescanning
+    """Incrementally maintain a stored rollup: fold a new orders batch
+    into persisted per-key partials (count + ``o_totalprice`` sum) WITHOUT rescanning
     history — the materialized-view maintenance pattern. At 100 TB the
     nightly batch touches only its own rows plus the (key-cardinality-
     sized) stored aggregate; a full recompute would rescan the fact.
@@ -185,7 +187,7 @@ def incremental_rollup_update(
     """
     partial = batch.groupBy(*keys).agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
-        *[F.sum(F.col(c).cast("decimal(28,4)")).alias(f"sum_{c}") for c in sum_cols],
+        F.sum(F.col("o_totalprice").cast("decimal(28,4)")).alias("sum_o_totalprice"),
     )
     existing = _read_existing(spark, path)
     if existing is not None:
@@ -194,12 +196,12 @@ def incremental_rollup_update(
             .groupBy(*keys)
             .agg(
                 F.sum("n_rows").cast("long").alias("n_rows"),
-                *[F.sum(f"sum_{c}").cast("decimal(28,4)").alias(f"sum_{c}") for c in sum_cols],
+                F.sum("sum_o_totalprice").cast("decimal(28,4)").alias("sum_o_totalprice"),
             )
         )
     else:
         merged = partial
-    materialized = merged.localCheckpoint(eager=True)  # never read files being overwritten
+    materialized = materialize(merged)  # never read files being overwritten
     materialized.write.mode("overwrite").parquet(path)
     return materialized
 
@@ -208,10 +210,9 @@ def incremental_distinct_rollup(
     spark: SparkSession,
     path: str,
     batch: DataFrame,
-    keys: list[str],
-    distinct_col: str,
 ) -> DataFrame:
-    """Incrementally maintain a stored COUNT(DISTINCT) rollup with
+    """Incrementally maintain a stored per-``event_type`` COUNT(DISTINCT
+    user_id) rollup with
     mergeable HyperLogLog sketch partials (Apache DataSketches via
     ``hll_sketch_agg`` / ``hll_union_agg``).
 
@@ -226,21 +227,21 @@ def incremental_distinct_rollup(
     never the member history. Merge-order invariance (batched folds ==
     one-shot sketch, exactly) is asserted in tests.
 
-    Returns the updated rollup (keys + ``hll_sketch`` binary).
+    Returns the updated rollup (``event_type`` + ``hll_sketch`` binary).
     """
-    partial = batch.groupBy(*keys).agg(
-        F.hll_sketch_agg(F.col(distinct_col).cast("string"), 12).alias("hll_sketch")
+    partial = batch.groupBy("event_type").agg(
+        F.hll_sketch_agg(F.col("user_id").cast("string"), 12).alias("hll_sketch")
     )
     existing = _read_existing(spark, path)
     if existing is not None:
         merged = (
             existing.unionByName(partial)
-            .groupBy(*keys)
+            .groupBy("event_type")
             .agg(F.hll_union_agg("hll_sketch", True).alias("hll_sketch"))
         )
     else:
         merged = partial
-    materialized = merged.localCheckpoint(eager=True)
+    materialized = materialize(merged)  # never read files being overwritten
     materialized.write.mode("overwrite").parquet(path)
     return materialized
 
@@ -291,7 +292,7 @@ def apply_cdc_batch(
         merged = existing.join(removed_or_replaced, on=keys, how="left_anti").unionByName(
             upserts
         )
-    materialized = merged.localCheckpoint(eager=True)
+    materialized = materialize(merged)  # never read files being overwritten
     materialized.write.mode("overwrite").parquet(path)
     return materialized
 

@@ -60,6 +60,7 @@ from kickstarter_etl_pipeline_spark.operators.partitioning import (
     STATE_PARTITIONS,
     isolated_session,
 )
+from kickstarter_etl_pipeline_spark.operators.ranking import collect_control
 from kickstarter_etl_pipeline_spark.scratch import run_scratch_dir
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
 from kickstarter_etl_pipeline_spark.streaming.events_stream import (
@@ -227,7 +228,7 @@ def _split_events_by_midpoint(spark: SparkSession, sf_dir: str):
     row count of half A, row count of half B)."""
     ev = load_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
-    row = ev.select(F.min(us).alias("mn"), F.max(us).alias("mx")).first()
+    row = collect_control(ev.select(F.min(us).alias("mn"), F.max(us).alias("mx")))[0]
     cut = (int(row["mn"]) + int(row["mx"])) // 2
 
     root = run_scratch_dir("ks_tws_split_")

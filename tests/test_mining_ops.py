@@ -277,17 +277,17 @@ def test_hll_registers_partition_and_merge_invariant(spark, sf_dir):
     from kickstarter_etl_pipeline_spark.sources.readers import load_table
 
     users = load_table(spark, sf_dir, "events").select("user_id").distinct()
-    base = {(r["reg"], r["_m"]) for r in hll_registers(users, "user_id").collect()}
+    base = {(r["reg"], r["_m"]) for r in hll_registers(users).collect()}
     assert base  # non-degenerate fixture
 
-    repart = hll_registers(users.repartition(7), "user_id").collect()
+    repart = hll_registers(users.repartition(7)).collect()
     assert {(r["reg"], r["_m"]) for r in repart} == base
 
     # sharded build: split by a hash unrelated to the register hash,
     # build one register table per shard, merge with groupBy-max
     shard = F.pmod(F.xxhash64(F.col("user_id").cast("string")), F.lit(3))
     shards = [
-        hll_registers(users.filter(shard == i), "user_id") for i in range(3)
+        hll_registers(users.filter(shard == i)) for i in range(3)
     ]
     merged = shards[0]
     for s in shards[1:]:

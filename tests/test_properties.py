@@ -59,10 +59,7 @@ def test_asof_join_matches_bruteforce(events):
     right = df.filter(F.col("side") == "r")
     got = {
         (r["user_id"], r["event_id"]): r["asof_right_id"]
-        for r in asof_join_backward(
-            left, right, on="user_id", left_ts="ts", right_ts="ts",
-            right_value_cols=["value"], left_id="event_id", right_id="event_id",
-        ).collect()
+        for r in asof_join_backward(left, right).collect()
     }
     # Brute force in Python: latest right with ts <= left ts; tie → max id at that ts
     rights = [(k, t, i) for i, (k, t, s) in enumerate(events) if s == "r"]
@@ -444,11 +441,7 @@ def test_asof_forward_matches_bruteforce(events, tol):
     right = df.filter(F.col("side") == "r")
     got = {
         (r["user_id"], r["event_id"]): (r["asof_right_id"], r["gap_us"])
-        for r in asof_join_forward(
-            left, right, on="user_id", left_ts="ts", right_ts="ts",
-            right_value_cols=["value"], left_id="event_id", right_id="event_id",
-            tolerance_us=tol,
-        ).collect()
+        for r in asof_join_forward(left, right, tolerance_us=tol).collect()
     }
     # Brute force: earliest right with ts >= left ts; tie -> MIN id at
     # that ts; dropped when outside the tolerance.

@@ -114,7 +114,7 @@ def test_winnowing_known_document(spark):
 
     doc = spark.createDataFrame(
         [(1, "a b c d e f g h i")], "doc_id long, text string"
-    ).withColumn("_toks", TX.tokens("text"))
+    ).withColumn("_toks", TX.tokens())
     grams = doc.select(
         "doc_id",
         F.explode(

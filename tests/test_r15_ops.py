@@ -180,7 +180,7 @@ def test_let_bound_shingle_expr_matches_reference(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50)
     ref = (
         with_shingles(docs, 3)
-        .withColumn("sig", minhash_signature("_sh"))
+        .withColumn("sig", minhash_signature())
         .select("doc_id", "_sh", "sig")
         .localCheckpoint(eager=True)
     )

@@ -164,17 +164,21 @@ def test_every_definition_has_a_production_reference():
     assert unreached == []
 
 
-# Defaulted parameters that production only ever gives one value, kept
-# because the named test passes another. Fix one by dropping its entry;
+# Parameters that production only ever gives one value, kept because
+# the named test passes another. Fix one by dropping its entry;
 # never add one: a new one-value parameter becomes a literal or a
 # constant instead.
 ONE_VALUE_PINS = {
     "_prefix_candidates.positional": "test_scale_paths.py::test_positional_filter_prunes_without_losing_pairs",
+    "append_ignore_existing.keys": "test_sinks_and_dedup.py::test_append_ignore_existing",
+    "apply_cdc_batch.keys": "test_sinks_and_dedup.py::test_apply_cdc_batch_last_writer_wins",
     "asof_join_forward.tolerance_us": "test_properties.py::test_asof_forward_matches_bruteforce",
     "bellman_ford_distances.rounds": "test_scale_paths.py::test_bellman_ford_prefers_cheaper_multihop",
     "betweenness_sampled.pivots": "test_scale_paths.py::test_betweenness_matches_reference_and_partitions",
     "betweenness_sampled.rounds": "test_scale_paths.py::test_betweenness_matches_reference_and_partitions",
     "bfs_depths.rounds": "test_scale_paths.py::test_bfs_depths_synthetic_and_partition_invariant",
+    "bloom_prefilter.dim_key": "test_mining_ops.py::test_bloom_prefilter_superset_and_transparency",
+    "bloom_prefilter.fact_key": "test_mining_ops.py::test_bloom_prefilter_superset_and_transparency",
     "bloom_prefilter.n_bits": "test_mining_ops.py::test_bloom_prefilter_preserves_caller_columns",
     "boilerplate_stats.min_doc_freq": "test_corpus_ops.py::test_boilerplate_stats_shared_vs_unique",
     "chunk_documents.chunk_tokens": "test_corpus_ops.py::test_chunk_documents_short_and_strided",
@@ -187,10 +191,13 @@ ONE_VALUE_PINS = {
     "connected_components_star.id_col": "test_properties.py::test_connected_components_star_match_union_find",
     "connected_components_star.max_iter": "test_scale_paths.py::test_connected_components_star_logn_on_long_chain",
     "containment_pairs.threshold": "test_corpus_ops.py::test_containment_vs_jaccard_subset_doc",
+    "count_nulls.cols": "test_robustness.py::test_quality_checks_catch_seeded_violations",
     "get_spark.master": "conftest.py::spark",
     "harmonic_centrality.pivots": "test_scale_paths.py::test_harmonic_centrality_matches_reference_and_partitions",
     "harmonic_centrality.rounds": "test_scale_paths.py::test_harmonic_centrality_matches_reference_and_partitions",
     "hits.iterations": "test_scale_paths.py::test_hits_degenerate_inputs",
+    "incremental_rollup_update.keys": "test_sinks_and_dedup.py::test_incremental_rollup_equals_full_recompute",
+    "lsh_topk.dim": "test_similarity_multimodal_streaming.py::test_lsh_topk_subset_of_exact",
     "lsh_topk.k": "test_similarity_multimodal_streaming.py::test_lsh_topk_subset_of_exact",
     "lsh_topk.n_probe": "test_scale_paths.py::test_multiprobe_lsh_recall_uplift",
     "lsh_topk.num_planes": "test_similarity_multimodal_streaming.py::test_lsh_topk_subset_of_exact",
@@ -198,11 +205,17 @@ ONE_VALUE_PINS = {
     "mmr_diversified_topk.k": "test_mining_ops.py::test_mmr_prefers_diverse_over_duplicate",
     "mmr_diversified_topk.lam": "test_vector_kernels.py::test_mmr_grouped_pass_matches_legacy_plan",
     "mmr_diversified_topk.pool": "test_mining_ops.py::test_mmr_prefers_diverse_over_duplicate",
+    "observe_quality.cols": "test_r13_ops.py::test_observe_quality_rides_the_job",
     "pack_sequences.context_tokens": "test_corpus_ops.py::test_pack_sequences_offsets_and_boundaries",
     "pca_top_component.n_iters": "test_scale_paths.py::test_pca_power_degenerate_zero_matrix",
     "perceptron_fit.epochs": "test_classifier.py::test_first_epoch_update_is_exact_batch_sum",
+    "rolling_hash.text": "test_properties.py::test_rolling_hash_matches_python",
     "salted_join.how": "test_sinks_and_dedup.py::test_salted_join_rejects_outer",
+    "salted_join.on": "test_properties.py::test_salted_join_equals_plain_join",
     "salted_join.salt_buckets": "test_properties.py::test_salted_join_equals_plain_join",
+    "scd2_history.id_col": "test_properties.py::test_scd2_versions_partition_timeline",
+    "scd2_history.key_cols": "test_properties.py::test_scd2_versions_partition_timeline",
+    "scd2_history.ts_col": "test_properties.py::test_scd2_versions_partition_timeline",
     "semantic_dedup.n_cells": "test_corpus_ops.py::test_semantic_dedup_keeps_one_per_clique",
     "semantic_dedup.threshold": "test_corpus_ops.py::test_semantic_dedup_keeps_one_per_clique",
     "source_mixing_weights.token_budget": "test_corpus_ops.py::test_source_mixing_sqrt_damping",
@@ -210,6 +223,7 @@ ONE_VALUE_PINS = {
     "stream_upsert_rollup.path_glob": "test_streaming_append_and_jdbc.py::test_upsert_rollup_refines_open_windows_and_drops_late",
     "transitive_closure.rounds": "test_scale_paths.py::test_transitive_closure_synthetic_and_partition_invariant",
     "two_phase_rank.n_parts": "test_properties.py::test_two_phase_rank_matches_row_number",
+    "write_range_clustered.cols": "test_range_clustering.py::test_range_clustered_readback_equals_source",
     "write_range_clustered.num_files": "test_range_clustering.py::test_range_clustered_files_are_disjoint_and_complete",
 }
 
@@ -245,9 +259,10 @@ def _value(node: ast.expr, consts: dict[str, str | None]) -> tuple[bool, str]:
 
 
 def one_value_parameters() -> set[str]:
-    """``fn.param`` for every defaulted parameter of a uniquely named,
-    non-``q_*`` top-level package function that all production calls
-    leave at (or set to) one and the same value."""
+    """``fn.param`` for every parameter of a uniquely named, non-``q_*``
+    top-level package function that all production calls leave at (or
+    set to) one and the same value: a default, a literal or a named
+    package constant."""
     funcs: dict[str, ast.FunctionDef | None] = {}
     for path in PKG.rglob("*.py"):
         for top in ast.parse(path.read_text()).body:
@@ -280,9 +295,12 @@ def one_value_parameters() -> set[str]:
             )
             given = {a.arg: v for a, v in zip(positional, call.args)}
             given.update({k.arg: k.value for k in call.keywords if k.arg})
-            for arg, default in defaults:
+            defaulted = {a.arg for a, _ in defaults}
+            required = [(a, None) for a in positional + args.kwonlyargs if a.arg not in defaulted]
+            for arg, default in defaults + required:
                 node = given.get(arg.arg)
-                dflt, seen = values.setdefault((fn.name, arg.arg), (_value(default, consts), set()))
+                dflt = None if default is None else _value(default, consts)
+                dflt, seen = values.setdefault((fn.name, arg.arg), (dflt, set()))
                 if node is None and star:
                     seen.add((False, "*"))
                 else:
@@ -303,6 +321,35 @@ def test_no_new_one_value_parameters():
     for pin, test in ONE_VALUE_PINS.items():
         path, name = test.split("::")
         assert f"def {name}(" in (ROOT / "tests" / path).read_text(), pin
+
+
+# Materializing an intermediate and collecting to the driver each have
+# one device: partitioning.materialize (the storage policy) and
+# ranking.collect_control (the row cap). certify.py compares results on
+# the driver by design.
+MATERIALIZE_HOME = {"operators/partitioning.py"}
+COLLECT_HOMES = {"operators/ranking.py", "certify.py"}
+DRIVER_ACTIONS = {"collect", "toPandas", "toLocalIterator", "take", "head", "tail"}
+
+
+def test_materialize_and_collect_only_through_their_devices():
+    """No ``.localCheckpoint(`` outside ``materialize``'s module, and no
+    driver collect (``collect``/``toPandas``/``toLocalIterator``/
+    ``take``/``head``/``tail`` or a zero-argument ``.first()``) outside
+    ``collect_control``'s module and the certifier."""
+    raw = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            attr = node.func.attr
+            if attr == "localCheckpoint" and rel not in MATERIALIZE_HOME:
+                raw.append(f"{rel}:{node.lineno} .localCheckpoint(")
+            first = attr == "first" and not node.args and not node.keywords
+            if (attr in DRIVER_ACTIONS or first) and rel not in COLLECT_HOMES:
+                raw.append(f"{rel}:{node.lineno} .{attr}(")
+    assert raw == []
 
 
 def test_coverage_code_references_resolve():

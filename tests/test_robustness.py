@@ -82,9 +82,7 @@ def test_asof_with_no_right_rows(spark):
         .withColumn("user_id", F.lit(1))
         .withColumn("value", F.lit(1.0))
     )
-    out = asof_join_backward(
-        ev, ev.filter(F.lit(False)), "user_id", "ts", "ts", ["value"], "event_id", "event_id"
-    ).collect()
+    out = asof_join_backward(ev, ev.filter(F.lit(False))).collect()
     assert len(out) == 1 and out[0]["asof_right_id"] is None
 
 
@@ -109,16 +107,12 @@ def test_asof_null_value_rides_with_its_own_row(spark):
     # backward: nearest prior right row (id=2, ts=40) has NULL value;
     # an older row (id=1, ts=30) has a non-null value that must NOT leak.
     right_b = ev([(1, 30, 7.0), (2, 40, None)])
-    out = asof_join_backward(
-        left, right_b, "user_id", "ts", "ts", ["value"], "event_id", "event_id"
-    ).collect()[0]
+    out = asof_join_backward(left, right_b).collect()[0]
     assert out["asof_right_id"] == 2 and out["asof_value"] is None
     # forward: nearest following right row (id=3, ts=60) has NULL value;
     # a later row (id=4, ts=70) has a non-null value that must NOT leak.
     right_f = ev([(3, 60, None), (4, 70, 9.0)])
-    out = asof_join_forward(
-        left, right_f, "user_id", "ts", "ts", ["value"], "event_id", "event_id"
-    ).collect()[0]
+    out = asof_join_forward(left, right_f).collect()[0]
     assert out["asof_right_id"] == 3 and out["asof_value"] is None
 
 

@@ -170,8 +170,8 @@ def test_incremental_rollup_equals_full_recompute(spark, sf_dir):
     orders = load_table(spark, sf_dir, "orders")
     b1 = orders.filter(F2.col("o_orderkey") % 2 == 0)
     b2 = orders.filter(F2.col("o_orderkey") % 2 == 1)
-    incremental_rollup_update(spark, path, b1, ["o_orderstatus"], ["o_totalprice"])
-    updated = incremental_rollup_update(spark, path, b2, ["o_orderstatus"], ["o_totalprice"])
+    incremental_rollup_update(spark, path, b1, ["o_orderstatus"])
+    updated = incremental_rollup_update(spark, path, b2, ["o_orderstatus"])
     got = {
         r["o_orderstatus"]: (r["n_rows"], r["sum_o_totalprice"]) for r in updated.collect()
     }
@@ -209,8 +209,6 @@ def test_incremental_distinct_rollup_merge_invariant(spark, sf_dir, tmp_path):
             spark,
             path,
             events.filter(F.col("event_id") % 3 == i),
-            keys=["event_type"],
-            distinct_col="user_id",
         )
     folded = {
         r["event_type"]: r["n_distinct_est"]

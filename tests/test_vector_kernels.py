@@ -107,7 +107,7 @@ def test_probe_cells_int_matches_hof(spark, int_df):
     kern = {
         r["id"]: r["cells"]
         for r in int_df.filter("id < 100")
-        .select("id", probe_cells_int(cents, 4)(F.col("v")).alias("cells"))
+        .select("id", probe_cells_int(cents)(F.col("v")).alias("cells"))
         .collect()
     }
     assert kern == hof

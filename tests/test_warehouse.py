@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import glob
 import logging
+import re
 import shutil
 from datetime import date, timedelta
 
@@ -12,6 +13,7 @@ from pyspark.sql import Row, functions as F
 
 from kickstarter_etl_pipeline_spark.logging_config import configure_logger
 from kickstarter_etl_pipeline_spark.operators import transform as X
+from kickstarter_etl_pipeline_spark.operators.ranking import CONTROL_ROWS_CAP
 from kickstarter_etl_pipeline_spark.pipeline import run_pipeline
 from kickstarter_etl_pipeline_spark.plans.star import kickstarter_star
 from kickstarter_etl_pipeline_spark.plans.warehouse import create_warehouse_schema, load_warehouse
@@ -146,6 +148,20 @@ def test_run_pipeline_end_to_end(spark, tmp_path, caplog):
     caplog.clear()
     assert run_pipeline(spark, str(tmp_path / "missing.csv"), logger=logger) is None
     assert logged()[-1] == ("CRITICAL", "Extraction failed — terminating execution.")
+
+
+def test_run_pipeline_refuses_data_sized_state_column(spark, tmp_path):
+    """The per-state counts are collected through collect_control, so a
+    CSV with CONTROL_ROWS_CAP + 1 distinct states raises ValueError
+    naming the cap instead of collecting a data-sized frame."""
+    one = raw_rows(spark).limit(1).toPandas()
+    rows = one.loc[one.index.repeat(CONTROL_ROWS_CAP + 1)].reset_index(drop=True)
+    rows["state"] = [f"s{i}" for i in range(CONTROL_ROWS_CAP + 1)]
+    csv_path = str(tmp_path / "states.csv")
+    rows.to_csv(csv_path, index=False)
+    logger = logging.getLogger("RunPipelineCapTest")
+    with pytest.raises(ValueError, match=re.escape(f"CONTROL_ROWS_CAP={CONTROL_ROWS_CAP}")):
+        run_pipeline(spark, csv_path, db="wh_test", logger=logger)
 
 
 def test_configure_logger_rotating(tmp_path):
