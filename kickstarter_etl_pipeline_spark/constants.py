@@ -1,11 +1,9 @@
 """Engine-neutral shared constants (ZERO imports, by design).
 
-Both the Spark operators and the DuckDB oracle ledgers consume these —
-a single definition site means the two engines can never drift — and
-keeping this module import-free keeps the oracle ledgers loadable
-without a Spark installation (r7 self-review finding: oracles_lm.py
-had started importing a pyspark-heavy operator module mid-file just to
-fetch two tuples).
+Both the Spark operators and their DuckDB twins consume these — a
+single definition site means the two engines can never drift — and
+keeping this module import-free lets any module import it (twin_sql
+and every query module do) without an import cycle.
 
 It also holds every algorithm constant a Spark operator and its DuckDB
 twin must agree on (round counts, k, pivots, caps, grid scale), so a

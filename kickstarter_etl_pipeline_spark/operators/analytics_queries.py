@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from kickstarter_etl_pipeline_spark import qdefs_embeddings
 from kickstarter_etl_pipeline_spark.constants import (
     ANN_K,
     EMBED_DIM,
@@ -12,15 +13,6 @@ from kickstarter_etl_pipeline_spark.constants import (
     LSH_N_PROBE,
 )
 from kickstarter_etl_pipeline_spark.operators import events as EV
-from kickstarter_etl_pipeline_spark.operators import text as TX
-from kickstarter_etl_pipeline_spark.operators.dedup import (
-    exact_dedup_groups,
-    minhash_dedup_pairs,
-    ngram_jaccard_pairs,
-    simhash_candidates,
-)
-from kickstarter_etl_pipeline_spark.operators.dims import build_dim_date
-from kickstarter_etl_pipeline_spark.operators.multimodal import documents_as_media, extract_features
 from kickstarter_etl_pipeline_spark.operators.partitioning import materialize
 from kickstarter_etl_pipeline_spark.operators.ranking import ntile_exact, two_phase_rank
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
@@ -29,16 +21,13 @@ from kickstarter_etl_pipeline_spark.operators.similarity import (
     lsh_topk,
     query_anchors,
 )
-from kickstarter_etl_pipeline_spark.operators.transform import fractional_days
-from kickstarter_etl_pipeline_spark.plans.star import (
-    tpch_dim_category,
-    tpch_dim_state,
-    tpch_fact,
-    tpch_star,
-)
-from kickstarter_etl_pipeline_spark.session import ensure_runtime_confs
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
-from kickstarter_etl_pipeline_spark.streaming.events_stream import streaming_tumbling_counts
+
+
+#: DuckDB twin of each query defined here, by query name: SQL that
+#: returns the same rows on the same parquet tables. Each entry sits
+#: after its ``q_<name>`` function; queries.oracle_sql() collects them.
+TWINS: dict[str, str] = {}
 
 
 def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -89,6 +78,24 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["events_funnel"] = """
+        WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
+        v AS (SELECT user_id, min(us) AS t1 FROM e WHERE event_type = 'view' GROUP BY 1),
+        c AS (SELECT e.user_id, min(us) AS t2 FROM e JOIN v USING (user_id)
+              WHERE event_type = 'click' AND us >= t1 AND us <= t1 + 3600000000 GROUP BY 1),
+        p AS (SELECT e.user_id, min(us) AS t3 FROM e JOIN c USING (user_id)
+              WHERE event_type = 'purchase' AND us >= t2 AND us <= t2 + 3600000000 GROUP BY 1)
+        SELECT (SELECT count(DISTINCT user_id) FROM e) AS n_users,
+               (SELECT count(*) FROM v) AS n_viewed,
+               (SELECT count(*) FROM c) AS n_clicked,
+               (SELECT count(*) FROM p) AS n_purchased,
+               floor(CAST((SELECT count(*) FROM c) AS BIGINT) / (SELECT count(*) FROM v)
+                     * 1000000 + 0.5) / 1000000.0 AS view_to_click,
+               floor(CAST((SELECT count(*) FROM p) AS BIGINT) / (SELECT count(*) FROM v)
+                     * 1000000 + 0.5) / 1000000.0 AS view_to_purchase
+    """
+
+
 def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention: users grouped by the week of their first
     'signup' event; for each (cohort_week, weeks_since) cell, how many
@@ -126,6 +133,25 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["cohort_retention"] = """
+        WITH e AS (SELECT user_id, event_type,
+                          CAST(floor(epoch_us(ts) / 604800000000) AS BIGINT) AS wk
+                   FROM events),
+        cohorts AS (SELECT user_id, min(wk) AS cohort_wk FROM e
+                    WHERE event_type = 'signup' GROUP BY 1),
+        sizes AS (SELECT cohort_wk, count(*) AS cohort_size FROM cohorts GROUP BY 1),
+        active AS (
+          SELECT cohort_wk, weeks_since, count(*) AS n_active FROM (
+            SELECT DISTINCT e.user_id, cohort_wk, wk - cohort_wk AS weeks_since
+            FROM e JOIN cohorts USING (user_id)
+            WHERE wk >= cohort_wk)
+          GROUP BY 1, 2)
+        SELECT cohort_wk, weeks_since, n_active, cohort_size,
+               floor(CAST(n_active AS BIGINT) / cohort_size * 1000000 + 0.5) / 1000000.0 AS retention
+        FROM active JOIN sizes USING (cohort_wk)
+    """
+
+
 def q_events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Volume-anomaly detection: hourly event counts per type, z-scored
     against that type's own hourly distribution, flagged at |z| > 2.
@@ -161,6 +187,27 @@ def q_events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.abs(F.col("zscore")) > 2.0)
         .select("event_type", "bucket_start", "n_events", "zscore")
     )
+
+
+TWINS["events_anomaly_zscore"] = """
+        WITH hourly AS (
+          SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS bucket_start,
+                 event_type, count(*) AS n_events
+          FROM events GROUP BY 1, 2),
+        stats AS (
+          SELECT event_type, count(*) AS n, sum(n_events) AS s1,
+                 sum(n_events * n_events) AS s2
+          FROM hourly GROUP BY 1)
+        SELECT event_type, bucket_start, n_events,
+               floor((CAST(n_events * n - s1 AS DOUBLE) / n)
+                     / sqrt(CAST(n * s2 - s1 * s1 AS DOUBLE) / CAST(n * (n - 1) AS DOUBLE))
+                     * 10000 + 0.5) / 10000.0 AS zscore
+        FROM hourly JOIN stats USING (event_type)
+        WHERE n > 1
+          AND abs(floor((CAST(n_events * n - s1 AS DOUBLE) / n)
+                        / sqrt(CAST(n * s2 - s1 * s1 AS DOUBLE) / CAST(n * (n - 1) AS DOUBLE))
+                        * 10000 + 0.5) / 10000.0) > 2.0
+    """
 
 
 def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -224,6 +271,26 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["rfm_segments"] = """
+        WITH per_cust AS (
+          SELECT o_custkey,
+                 max(strftime(o_orderdate, '%Y-%m-%d')) AS last_order_date,
+                 count(*) AS frequency,
+                 CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS monetary
+          FROM orders GROUP BY 1),
+        q AS (
+          SELECT *,
+                 CAST(ntile(4) OVER (ORDER BY last_order_date DESC, o_custkey) AS INTEGER) AS r_quartile,
+                 CAST(ntile(4) OVER (ORDER BY frequency DESC, o_custkey) AS INTEGER) AS f_quartile,
+                 CAST(ntile(4) OVER (ORDER BY monetary DESC, o_custkey) AS INTEGER) AS m_quartile
+          FROM per_cust)
+        SELECT o_custkey, last_order_date, frequency, monetary,
+               r_quartile, f_quartile, m_quartile,
+               CAST(r_quartile AS VARCHAR) || CAST(f_quartile AS VARCHAR) || CAST(m_quartile AS VARCHAR) AS segment
+        FROM q
+    """
+
+
 def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order behavior model input: counts of consecutive
     (prev_type → next_type) transitions within each user's event
@@ -248,6 +315,23 @@ def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_transitions",
         round_det(F.col("n_transitions") / F.col("_row_total"), 6).alias("p_next"),
     )
+
+
+TWINS["event_transition_matrix"] = """
+        WITH seq AS (
+          SELECT user_id, event_type,
+                 lag(event_type) OVER (PARTITION BY user_id
+                                       ORDER BY epoch_us(ts), event_id) AS prev_type
+          FROM events),
+        counts AS (
+          SELECT prev_type, event_type AS next_type, count(*) AS n_transitions
+          FROM seq WHERE prev_type IS NOT NULL
+          GROUP BY 1, 2),
+        totals AS (SELECT prev_type, sum(n_transitions) AS row_total FROM counts GROUP BY 1)
+        SELECT prev_type, next_type, n_transitions,
+               floor(CAST(n_transitions AS BIGINT) / row_total * 1000000 + 0.5) / 1000000.0 AS p_next
+        FROM counts JOIN totals USING (prev_type)
+    """
 
 
 def q_error_blast_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -294,6 +378,18 @@ def q_error_blast_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["error_blast_radius"] = """
+        WITH e AS (SELECT event_id, user_id, event_type, epoch_us(ts) AS us FROM events)
+        SELECT a.event_id, a.user_id, count(*) AS n_nearby
+        FROM e a JOIN e b
+          ON a.user_id = b.user_id
+         AND b.event_id <> a.event_id
+         AND abs(b.us - a.us) <= 300000000
+        WHERE a.event_type = 'error'
+        GROUP BY 1, 2
+    """
+
+
 def q_priority_mode_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group mode (most frequent order priority per status) with a
     deterministic tie-break (count desc, then priority asc) — the
@@ -314,6 +410,17 @@ def q_priority_mode_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").alias("mode_count"),
         )
     )
+
+
+TWINS["priority_mode_by_status"] = """
+        SELECT o_orderstatus, o_orderpriority AS mode_priority, n AS mode_count
+        FROM (
+          SELECT o_orderstatus, o_orderpriority, count(*) AS n,
+                 row_number() OVER (PARTITION BY o_orderstatus
+                                    ORDER BY count(*) DESC, o_orderpriority) AS rn
+          FROM orders GROUP BY 1, 2)
+        WHERE rn = 1
+    """
 
 
 def q_nation_share_of_region(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -340,6 +447,22 @@ def q_nation_share_of_region(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("_bal").cast("double") * 100.0 / region_total.cast("double"), 6
         ).alias("pct_of_region"),
     )
+
+
+TWINS["nation_share_of_region"] = """
+        WITH per_nation AS (
+          SELECT r_name, n_name, sum(CAST(c_acctbal AS DECIMAL(18,2))) AS bal
+          FROM customer
+          JOIN nation ON c_nationkey = n_nationkey
+          JOIN region ON n_regionkey = r_regionkey
+          GROUP BY 1, 2)
+        SELECT r_name, n_name,
+               CAST(round(bal, 2) AS DOUBLE) AS nation_balance,
+               floor(CAST(bal AS DOUBLE) * 100.0
+                     / CAST(sum(bal) OVER (PARTITION BY r_name) AS DOUBLE)
+                     * 1000000 + 0.5) / 1000000.0 AS pct_of_region
+        FROM per_nation
+    """
 
 
 def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -374,6 +497,20 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["shipping_priority"] = """
+        SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS order_date, o_orderpriority,
+               CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue
+        FROM customer
+        JOIN orders ON c_custkey = o_custkey
+        JOIN lineitem ON o_orderkey = l_orderkey
+        WHERE c_mktsegment = 'BUILDING'
+          AND o_orderdate < TIMESTAMP '1998-06-30 00:00:00'
+          AND l_shipdate > TIMESTAMP '1998-06-30 00:00:00'
+        GROUP BY 1, 2, 3
+        ORDER BY revenue DESC, o_orderkey LIMIT 10
+    """
+
+
 def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 6-way join through the region hierarchy; revenue
     from lineitems where supplier and customer share a nation."""
@@ -406,6 +543,21 @@ def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["local_supplier_volume"] = """
+        SELECT n_name,
+               CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue,
+               count(*) AS n_items
+        FROM lineitem
+        JOIN orders ON l_orderkey = o_orderkey
+        JOIN customer ON o_custkey = c_custkey
+        JOIN supplier ON l_suppkey = s_suppkey
+        JOIN nation ON c_nationkey = n_nationkey
+        JOIN region ON n_regionkey = r_regionkey
+        WHERE c_nationkey = s_nationkey AND r_name = 'ASIA'
+        GROUP BY n_name
+    """
+
+
 def q_above_avg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated-subquery shape: orders above their customer's average.
 
@@ -427,6 +579,18 @@ def q_above_avg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_totalprice") > F.col("_avg"))
         .select("o_orderkey", "o_custkey", "o_totalprice", display.alias("cust_avg_price"))
     )
+
+
+TWINS["above_avg_orders"] = """
+        SELECT o_orderkey, o_custkey, o_totalprice,
+               floor(a * 10000 + 0.5) / 10000.0 AS cust_avg_price
+        FROM (
+          SELECT o_orderkey, o_custkey, o_totalprice,
+                 round(sum(o_totalprice) OVER (PARTITION BY o_custkey), 2)
+                   / count(*) OVER (PARTITION BY o_custkey) AS a
+          FROM orders
+        ) WHERE o_totalprice > a
+    """
 
 
 def q_yoy_customer_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -465,6 +629,29 @@ def q_yoy_customer_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["yoy_customer_activity"] = """
+        WITH y96 AS (
+          SELECT o_custkey, count(*) AS n_1996 FROM orders
+          WHERE EXTRACT(year FROM o_orderdate) = 1996 GROUP BY o_custkey
+        ),
+        y97 AS (
+          SELECT o_custkey, count(*) AS n_1997 FROM orders
+          WHERE EXTRACT(year FROM o_orderdate) = 1997 GROUP BY o_custkey
+        ),
+        j AS (
+          SELECT CASE WHEN n_1996 IS NOT NULL AND n_1997 IS NOT NULL THEN 'retained'
+                      WHEN n_1996 IS NOT NULL THEN 'churned'
+                      ELSE 'new' END AS status,
+                 n_1996, n_1997
+          FROM y96 FULL OUTER JOIN y97 USING (o_custkey)
+        )
+        SELECT status, count(*) AS n_customers,
+               CAST(sum(coalesce(n_1996, 0)) AS BIGINT) AS orders_1996,
+               CAST(sum(coalesce(n_1997, 0)) AS BIGINT) AS orders_1997
+        FROM j GROUP BY status
+    """
+
+
 def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti join (the S4 idempotent-insert primitive)."""
     customer = load_table(spark, sf_dir, "customer")
@@ -472,6 +659,12 @@ def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return customer.join(
         orders.select(F.col("o_custkey").alias("c_custkey")), on="c_custkey", how="left_anti"
     ).select("c_custkey", "c_name")
+
+
+TWINS["customers_without_orders"] = """
+        SELECT c_custkey, c_name FROM customer
+        WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+    """
 
 
 def q_customers_with_orders_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -484,6 +677,12 @@ def q_customers_with_orders_count(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
+TWINS["customers_with_orders_count"] = """
+        SELECT count(*) AS n_customers FROM customer
+        WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+    """
+
+
 def q_custkeys_1998_not_1999(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set op: EXCEPT (distinct)."""
     orders = load_table(spark, sf_dir, "orders")
@@ -492,12 +691,26 @@ def q_custkeys_1998_not_1999(spark: SparkSession, sf_dir: str) -> DataFrame:
     return y98.subtract(y99)
 
 
+TWINS["custkeys_1998_not_1999"] = """
+        SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1998
+        EXCEPT
+        SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1999
+    """
+
+
 def q_custkeys_both_years(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set op: INTERSECT (distinct)."""
     orders = load_table(spark, sf_dir, "orders")
     y98 = orders.filter(F.year("o_orderdate") == 1998).select("o_custkey")
     y99 = orders.filter(F.year("o_orderdate") == 1999).select("o_custkey")
     return y98.intersect(y99)
+
+
+TWINS["custkeys_both_years"] = """
+        SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1998
+        INTERSECT
+        SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1999
+    """
 
 
 def q_price_stats_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -537,6 +750,25 @@ def q_price_stats_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["price_stats_by_status"] = """
+        SELECT o_orderstatus, p50, p90,
+               round(sqrt(CAST(n * s2 - s1 * s1 AS DOUBLE)
+                          / CAST(n * (n - 1) AS DOUBLE)), 4) AS price_stddev,
+               min_price, max_price
+        FROM (
+          SELECT o_orderstatus,
+                 round(quantile_cont(o_totalprice, 0.5), 4) AS p50,
+                 round(quantile_cont(o_totalprice, 0.9), 4) AS p90,
+                 count(*) AS n,
+                 sum(CAST(o_totalprice AS DECIMAL(18,2))) AS s1,
+                 sum(CAST(o_totalprice AS DECIMAL(18,2)) * CAST(o_totalprice AS DECIMAL(18,2))) AS s2,
+                 round(min(o_totalprice), 2) AS min_price,
+                 round(max(o_totalprice), 2) AS max_price
+          FROM orders GROUP BY o_orderstatus
+        )
+    """
+
+
 _PRICE_BANDS = [
     ("A_budget", 0.0, 50_000.0),
     ("B_mid", 50_000.0, 150_000.0),
@@ -569,6 +801,19 @@ def q_range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["range_join_price_bands"] = """
+        SELECT band, count(*) AS n_orders,
+               CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
+        FROM orders
+        JOIN (VALUES ('A_budget', 0.0, 50000.0),
+                     ('B_mid', 50000.0, 150000.0),
+                     ('C_high', 150000.0, 300000.0),
+                     ('D_jumbo', 300000.0, 1e12)) bands(band, lo, hi)
+          ON o_totalprice >= lo AND o_totalprice < hi
+        GROUP BY band
+    """
+
+
 def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-mitigating salted join, demonstrated on a deliberately skewed
     key: 90% of lineitem rows collapse onto skew_key=0. Unsalted, that
@@ -590,6 +835,22 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_items"),
         F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double").alias("total_price"),
     )
+
+
+TWINS["skew_salted_join"] = """
+        WITH tagged AS (
+          SELECT CASE WHEN l_orderkey % 10 <> 0 THEN 0 ELSE l_orderkey END AS skew_key,
+                 l_extendedprice
+          FROM lineitem
+        ),
+        dim AS (SELECT DISTINCT skew_key,
+                       CASE WHEN skew_key = 0 THEN 'hot' ELSE 'cold' END AS key_class
+                FROM tagged)
+        SELECT key_class, count(*) AS n_items,
+               CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
+        FROM tagged JOIN dim USING (skew_key)
+        GROUP BY key_class
+    """
 
 
 def q_null_safe_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -626,6 +887,21 @@ def q_null_safe_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["null_safe_join_agg"] = """
+        WITH cust AS (
+          SELECT c_custkey, c_acctbal,
+                 CASE WHEN c_custkey % 9 = 0 THEN NULL ELSE c_nationkey END AS nk
+          FROM customer),
+        dim AS (
+          SELECT n_nationkey AS nk, n_name AS nation_name FROM nation
+          UNION ALL SELECT NULL, 'UNKNOWN')
+        SELECT nation_name, count(*) AS n_customers,
+               CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,2))), 2) AS DOUBLE) AS balance_sum
+        FROM cust LEFT JOIN dim ON cust.nk IS NOT DISTINCT FROM dim.nk
+        GROUP BY 1
+    """
+
+
 def q_grouping_sets_status_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (beyond rollup/cube) + grouping() flags."""
     orders = load_table(spark, sf_dir, "orders")
@@ -645,6 +921,18 @@ def q_grouping_sets_status_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["grouping_sets_status_year"] = """
+        SELECT o_orderstatus, order_year, count(*) AS n_orders,
+               CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
+               CAST(GROUPING(o_orderstatus) AS INTEGER) AS g_status,
+               CAST(GROUPING(order_year) AS INTEGER) AS g_year
+        FROM (SELECT o_orderstatus, CAST(year(o_orderdate) AS INTEGER) AS order_year,
+                     o_totalprice
+              FROM orders)
+        GROUP BY GROUPING SETS ((o_orderstatus), (order_year), ())
+    """
+
+
 def q_cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE grouping sets over orders."""
     orders = load_table(spark, sf_dir, "orders")
@@ -652,6 +940,13 @@ def q_cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_orders"),
         F.round(F.sum("o_totalprice"), 2).alias("total_price"),
     )
+
+
+TWINS["cube_status_priority"] = """
+        SELECT o_orderstatus, o_orderpriority, count(*) AS n_orders,
+               round(sum(o_totalprice), 2) AS total_price
+        FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
+    """
 
 
 def q_pivot_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -668,6 +963,15 @@ def q_pivot_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("O"), F.lit(0)).cast("long").alias("n_o"),
         F.coalesce(F.col("P"), F.lit(0)).cast("long").alias("n_p"),
     )
+
+
+TWINS["pivot_status_priority"] = """
+        SELECT o_orderpriority,
+               count(*) FILTER (WHERE o_orderstatus = 'F') AS n_f,
+               count(*) FILTER (WHERE o_orderstatus = 'O') AS n_o,
+               count(*) FILTER (WHERE o_orderstatus = 'P') AS n_p
+        FROM orders GROUP BY o_orderpriority
+    """
 
 
 # ---------------------------------------------------------------------------
@@ -698,6 +1002,18 @@ def q_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["unpivot_metrics"] = """
+        WITH long AS (
+          SELECT 'quantity' AS metric, l_quantity AS value FROM lineitem
+          UNION ALL SELECT 'extendedprice', l_extendedprice FROM lineitem
+          UNION ALL SELECT 'discount', l_discount FROM lineitem
+        )
+        SELECT metric, count(*) AS n_values,
+               CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
+        FROM long GROUP BY metric
+    """
+
+
 def q_histogram_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-width histogram via bucket arithmetic (no window, one
     shuffle): 25k-wide price buckets with per-bucket count and range."""
@@ -713,6 +1029,15 @@ def q_histogram_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["histogram_price"] = """
+        SELECT CAST(floor(o_totalprice / 25000) AS BIGINT) AS price_bucket,
+               count(*) AS n_orders,
+               round(min(o_totalprice), 2) AS min_price,
+               round(max(o_totalprice), 2) AS max_price
+        FROM orders GROUP BY 1
+    """
+
+
 def q_except_all_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiset set op: EXCEPT ALL keeps multiplicity (1998 priorities
     minus 1999 priorities, bag semantics) — complements the distinct
@@ -721,6 +1046,13 @@ def q_except_all_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = orders.filter(F.year("o_orderdate") == 1998).select("o_orderpriority")
     b = orders.filter(F.year("o_orderdate") == 1999).select("o_orderpriority")
     return a.exceptAll(b)
+
+
+TWINS["except_all_priorities"] = """
+        SELECT o_orderpriority FROM orders WHERE year(o_orderdate) = 1998
+        EXCEPT ALL
+        SELECT o_orderpriority FROM orders WHERE year(o_orderdate) = 1999
+    """
 
 
 def q_part_string_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -736,6 +1068,15 @@ def q_part_string_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat_ws("/", "p_brand", "p_type").alias("brand_type"),
         )
     )
+
+
+TWINS["part_string_ops"] = """
+        SELECT p_partkey, upper(p_name) AS name_upper,
+               substring(p_name, 1, 3) AS name_prefix,
+               CAST(length(p_name) AS INTEGER) AS name_len,
+               concat_ws('/', p_brand, p_type) AS brand_type
+        FROM part WHERE p_name LIKE '%widget%'
+    """
 
 
 def q_topk_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -760,6 +1101,16 @@ def q_topk_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("c_custkey", "c_name", "total_spend", "n_orders")
         .orderBy(F.desc("total_spend"), "c_custkey")
     )
+
+
+TWINS["topk_customers"] = """
+        SELECT c_custkey, c_name, total_spend, n_orders
+        FROM (
+          SELECT o_custkey, round(sum(o_totalprice), 2) AS total_spend, count(*) AS n_orders
+          FROM orders GROUP BY o_custkey
+        ) JOIN customer ON o_custkey = c_custkey
+        ORDER BY total_spend DESC, c_custkey LIMIT 10
+    """
 
 
 def q_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -803,6 +1154,24 @@ def q_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             "active_7d",
         )
     )
+
+
+# FULL twin of q_rolling_active_users: distinct (day, user) pairs, the
+# same 7-day range self-join onto the day grid, distinct counts.
+TWINS["rolling_active_users"] = """
+    WITH du AS (SELECT DISTINCT CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS day,
+                                user_id
+                FROM events),
+    days AS (SELECT DISTINCT day FROM du),
+    hits AS (SELECT g.day AS gday, a.user_id
+             FROM days g JOIN du a ON a.day <= g.day AND a.day >= g.day - 6),
+    rolling AS (SELECT gday AS day, CAST(count(DISTINCT user_id) AS BIGINT) AS active_7d
+                FROM hits GROUP BY gday),
+    daily AS (SELECT day, CAST(count(DISTINCT user_id) AS BIGINT) AS active_1d
+              FROM du GROUP BY day)
+    SELECT rolling.day AS day_idx, daily.active_1d, rolling.active_7d
+    FROM rolling JOIN daily ON rolling.day = daily.day
+"""
 
 
 def q_events_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -851,6 +1220,22 @@ def q_events_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_events_ohlc_bars: arg_min/arg_max on the same
+# zero-padded (us, event_id) string key; rounding applied in the same places.
+TWINS["events_ohlc_bars"] = """
+    WITH e AS (SELECT CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS day_idx,
+                      event_type, value, epoch_us(ts) AS us, event_id
+               FROM events)
+    SELECT day_idx, event_type,
+           round(arg_min(value, lpad(CAST(us AS VARCHAR), 20, '0') || ':' || lpad(CAST(event_id AS VARCHAR), 12, '0')), 4) AS open,
+           round(max(value), 4) AS high,
+           round(min(value), 4) AS low,
+           round(arg_max(value, lpad(CAST(us AS VARCHAR), 20, '0') || ':' || lpad(CAST(event_id AS VARCHAR), 12, '0')), 4) AS close,
+           CAST(count(*) AS BIGINT) AS volume
+    FROM e GROUP BY day_idx, event_type
+"""
+
+
 def q_events_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-weighted average value (TWAP) per (event_type, day): each
     observation is weighted by its holding interval — the exact-µs gap
@@ -877,6 +1262,24 @@ def q_events_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("_dt").cast("long").alias("total_us"),
         F.round(F.sum(F.col("value") * F.col("_dt")) / F.sum("_dt"), 4).alias("twap"),
     )
+
+
+# FULL twin of q_events_twap: identical lead-gap weights over the
+# (us, event_id) order; identical weighted-sum / total-gap tree.
+TWINS["events_twap"] = """
+    WITH e AS (SELECT event_type, value, epoch_us(ts) AS us, event_id,
+                      CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS day_idx
+               FROM events),
+    g AS (SELECT *, lead(us) OVER (PARTITION BY event_type, day_idx
+                                   ORDER BY us, event_id) - us AS dt
+          FROM e)
+    SELECT day_idx, event_type,
+           CAST(count(*) AS BIGINT) AS n_intervals,
+           CAST(sum(dt) AS BIGINT) AS total_us,
+           round(sum(value * dt) / sum(dt), 4) AS twap
+    FROM g WHERE dt IS NOT NULL
+    GROUP BY day_idx, event_type
+"""
 
 
 def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -910,6 +1313,26 @@ def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("n_sessions"), F.asc("path"))
         .limit(20)
     )
+
+
+# FULL twin of q_session_paths: same 30-min gap sessionization (the
+# events_sessionize CTE chain), first-3 path via ORDER BY inside
+# list(), same top-k order.
+TWINS["session_paths"] = """
+    WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events),
+    lagd AS (SELECT *, lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) AS prev FROM e),
+    flagged AS (SELECT *, CASE WHEN prev IS NULL OR us - prev > 1800000000 THEN 1 ELSE 0 END AS new_s FROM lagd),
+    sess AS (SELECT *, CAST(sum(new_s) OVER (
+               PARTITION BY user_id ORDER BY us, event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id FROM flagged),
+    paths AS (SELECT user_id, session_id,
+                     array_to_string(list_slice(list(event_type ORDER BY us, event_id), 1, 3), '>') AS path
+              FROM sess GROUP BY user_id, session_id)
+    SELECT path, CAST(count(*) AS BIGINT) AS n_sessions
+    FROM paths GROUP BY path
+    ORDER BY n_sessions DESC, path
+    LIMIT 20
+"""
 
 
 def q_session_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -986,6 +1409,35 @@ def q_session_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_session_basket_lift: same sessionization CTE chain,
+# per-session distinct type sets, in-list pair generation, identical
+# lift tree over the one-row session total.
+TWINS["session_basket_lift"] = """
+    WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events),
+    lagd AS (SELECT *, lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) AS prev FROM e),
+    flagged AS (SELECT *, CASE WHEN prev IS NULL OR us - prev > 1800000000 THEN 1 ELSE 0 END AS new_s FROM lagd),
+    sess AS (SELECT *, CAST(sum(new_s) OVER (
+               PARTITION BY user_id ORDER BY us, event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sid FROM flagged),
+    st AS (SELECT DISTINCT user_id, sid, event_type FROM sess),
+    ns AS (SELECT CAST(count(*) AS BIGINT) AS n FROM (SELECT DISTINCT user_id, sid FROM st)),
+    tc AS (SELECT event_type, CAST(count(*) AS BIGINT) AS tn FROM st GROUP BY event_type),
+    ps AS (SELECT user_id, sid, list_sort(list(event_type)) AS types FROM st GROUP BY user_id, sid),
+    pr AS (SELECT unnest(flatten(list_transform(types, (a, i) ->
+             list_transform(list_slice(types, i + 1, len(types)), b ->
+               {'type_a': a, 'type_b': b})))) AS p
+           FROM ps),
+    pc AS (SELECT p.type_a AS type_a, p.type_b AS type_b, CAST(count(*) AS BIGINT) AS n_both
+           FROM pr GROUP BY 1, 2)
+    SELECT pc.type_a, pc.type_b, pc.n_both, ta.tn AS n_a, tb.tn AS n_b,
+           floor((pc.n_both / ns.n) / ((ta.tn / ns.n) * (tb.tn / ns.n))
+                 * 1000000 + 0.5) / 1000000.0 AS lift
+    FROM pc JOIN tc ta ON ta.event_type = pc.type_a
+            JOIN tc tb ON tb.event_type = pc.type_b
+            CROSS JOIN ns
+"""
+
+
 def q_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN classification eval over the embeddings: every vector with
     vec_id < 50 is classified by the majority label of its 5 exact
@@ -1034,6 +1486,32 @@ def q_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_knn_label_vote: the embedding_topk oracle pipeline at
+# vec_id < 50, label-joined, identical (votes desc, label asc) vote.
+TWINS["knn_label_vote"] = """
+    WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
+               FROM embeddings WHERE vec_id < 50),
+    c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv, label FROM embeddings),
+    scored AS (SELECT query_id, neighbor_id,
+                      round(list_cosine_similarity(qv, cv), 6) AS cosine_sim
+               FROM q, c WHERE neighbor_id <> query_id),
+    ranked AS (SELECT *, row_number() OVER (
+                 PARTITION BY query_id ORDER BY cosine_sim DESC, neighbor_id) AS rank
+               FROM scored),
+    nn AS (SELECT query_id, neighbor_id FROM ranked WHERE rank <= 5),
+    votes AS (SELECT nn.query_id, c.label, CAST(count(*) AS BIGINT) AS n_votes
+              FROM nn JOIN c ON c.neighbor_id = nn.neighbor_id
+              GROUP BY 1, 2),
+    pred AS (SELECT query_id, label AS pred_label, n_votes FROM (
+               SELECT *, row_number() OVER (PARTITION BY query_id
+                                            ORDER BY n_votes DESC, label) AS r
+               FROM votes) WHERE r = 1)
+    SELECT p.query_id, t.label AS true_label, p.pred_label, p.n_votes,
+           CAST(CASE WHEN p.pred_label = t.label THEN 1 ELSE 0 END AS INTEGER) AS is_correct
+    FROM pred p JOIN (SELECT vec_id AS query_id, label FROM embeddings) t USING (query_id)
+"""
+
+
 def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the LSH ANN tier against exact brute force, PER
     QUERY — the index-quality report a retrieval deployment watches.
@@ -1064,6 +1542,20 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             round_det(F.col("n_hits") / float(ANN_K), 6).alias("recall_at_5"),
         )
     )
+
+
+# FULL twin of q_ann_recall_report: the two verified pipelines
+# (embedding_topk exact, ann_lsh_topk approximate — identical query
+# set and k) composed; recall@5 = hits / 5 per query.
+TWINS["ann_recall_report"] = f"""
+    SELECT ex.query_id,
+           CAST(count(l.neighbor_id) AS BIGINT) AS n_hits,
+           floor(count(l.neighbor_id) / {float(ANN_K)} * 1000000 + 0.5) / 1000000.0 AS recall_at_5
+    FROM ({qdefs_embeddings.TWINS['embedding_topk']}) ex
+    LEFT JOIN ({qdefs_embeddings.TWINS['ann_lsh_topk']}) l
+      ON ex.query_id = l.query_id AND ex.neighbor_id = l.neighbor_id
+    GROUP BY ex.query_id
+"""
 
 
 def q_events_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1102,6 +1594,22 @@ def q_events_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_events_ewma: same ordered value list, same rounded
+# fold (DuckDB list_reduce seeds with the first element, matching the
+# Spark aggregate's explicit seed + tail slice).
+TWINS["events_ewma"] = """
+    WITH l AS (
+      SELECT user_id,
+             list(CAST(value AS DOUBLE) ORDER BY epoch_us(ts), event_id) AS vals
+      FROM events GROUP BY user_id)
+    SELECT user_id, CAST(len(vals) AS BIGINT) AS n_events,
+           floor(list_reduce(vals, (acc, x) ->
+                   floor((acc * 0.75 + x * 0.25) * 1000000000 + 0.5) / 1000000000.0)
+                 * 1000000 + 0.5) / 1000000.0 AS ewma_value
+    FROM l
+"""
+
+
 def q_traffic_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Traffic seasonality heatmap: event counts per (day-of-week,
     hour-of-day) cell with each cell's share of total traffic — the
@@ -1121,6 +1629,20 @@ def q_traffic_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cells.crossJoin(total).select(
         "dow", "hour", "n_events", round_det(F.col("n_events") / F.col("_t"), 6).alias("share")
     )
+
+
+# FULL twin of q_traffic_seasonality: integer epoch dow/hour.
+TWINS["traffic_seasonality"] = """
+    WITH cells AS (
+      SELECT CAST((floor(epoch_us(ts) / 86400000000) + 4) % 7 AS INTEGER) AS dow,
+             CAST(floor(epoch_us(ts) / 3600000000) % 24 AS INTEGER) AS hour,
+             CAST(count(*) AS BIGINT) AS n_events
+      FROM events GROUP BY 1, 2),
+    t AS (SELECT sum(n_events) AS t FROM cells)
+    SELECT dow, hour, n_events,
+           floor(n_events / t.t * 1000000 + 0.5) / 1000000.0 AS share
+    FROM cells, t
+"""
 
 
 def q_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1150,6 +1672,27 @@ def q_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_supplier_hhi: identical decimal revenue sums, share
+# and squared-share trees (sum-order noise ~1e-13 relative, rounded at
+# 4 dp — the TWAP/Gini tolerance class, sf0.1-proven).
+TWINS["supplier_hhi"] = """
+    WITH rev AS (
+      SELECT n.n_name,
+             CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
+      FROM lineitem l
+      JOIN supplier s ON l.l_suppkey = s.s_suppkey
+      JOIN nation n ON s.s_nationkey = n.n_nationkey
+      GROUP BY n.n_name, l.l_suppkey),
+    nt AS (SELECT n_name, sum(rev) AS nt FROM rev GROUP BY n_name),
+    sh AS (SELECT rev.n_name, rev.rev / nt.nt * 100 AS sh
+           FROM rev JOIN nt ON rev.n_name = nt.n_name)
+    SELECT n_name, CAST(count(*) AS BIGINT) AS n_suppliers,
+           floor(sum(sh * sh) * 10000 + 0.5) / 10000.0 AS hhi,
+           floor(max(sh) * 10000 + 0.5) / 10000.0 AS top_share_pct
+    FROM sh GROUP BY n_name
+"""
+
+
 def q_intersect_all_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiset set-op surface completion: INTERSECT ALL keeps
     multiplicity (each 1998 priority row pairs off against one 1999
@@ -1162,3 +1705,8 @@ def q_intersect_all_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.intersectAll(b)
 
 
+TWINS["intersect_all_priorities"] = """
+        SELECT o_orderpriority FROM orders WHERE year(o_orderdate) = 1998
+        INTERSECT ALL
+        SELECT o_orderpriority FROM orders WHERE year(o_orderdate) = 1999
+    """

@@ -57,6 +57,12 @@ from kickstarter_etl_pipeline_spark.operators.partitioning import loop_frame, ma
 from kickstarter_etl_pipeline_spark.operators.ranking import collect_control, two_phase_rank
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
 
+
+#: DuckDB twin of each query defined here, by query name: SQL that
+#: returns the same rows on the same parquet tables. Each entry sits
+#: after its ``q_<name>`` function; queries.oracle_sql() collects them.
+TWINS: dict[str, str] = {}
+
 #: (weight column, pretty output name) in fit order; x0 is the bias
 #: input pinned at 1000 so the bias moves on the same per-mille scale
 #: as the other features.
@@ -187,7 +193,7 @@ def q_quality_perceptron_trajectory(spark: SparkSession, sf_dir: str) -> DataFra
     per-mille character-class features): one row per epoch with the
     update-set size (mistakes under the PRE-update weights) and the
     post-update weight vector — all BIGINT, graded bit-exact against
-    the twin's unrolled CTEs (oracles_r14). 8 rows at any sf."""
+    the twin's unrolled CTEs (TWINS, below). 8 rows at any sf."""
     feats = doc_feature_frame(spark, sf_dir)
     _, snaps = perceptron_fit(feats)
     out = reduce(DataFrame.unionByName, snaps)
@@ -196,6 +202,79 @@ def q_quality_perceptron_trajectory(spark: SparkSession, sf_dir: str) -> DataFra
         "n_mistakes",
         *[F.col(raw).alias(pretty) for raw, pretty in _WEIGHT_COLS],
     )
+
+
+# FULL twins of the model-based curation family
+# (operators/classifier.py): the shared WITH block builds the per-mille
+# integer feature frame and unrolls the SAME 8 batch-perceptron epochs
+# the Spark fit runs — every term an integer product and an exact
+# BIGINT sum, no floats anywhere, so the engines land on identical
+# weights (the BT-MM discipline; DuckDB sum(BIGINT) → HUGEINT is cast
+# back to BIGINT per the r13 gotcha, and every `//` operand is
+# non-negative so // == Spark DIV). The trajectory twin reads the
+# epoch snapshots; the manifest twin appends the score+select tail to
+# the IDENTICAL CTE chain, so a drifting constituent fails both loudly
+# (the curation_pack / preference_manifest reuse discipline).
+def _perceptron_cte() -> str:
+    head = """
+    WITH lowd AS (
+      SELECT doc_id, lang, source, n_chars, lower(text) AS low
+      FROM documents),
+    counted AS (
+      SELECT doc_id, lang, source, n_chars,
+             greatest(1, length(low)) AS d,
+             length(low) - length(regexp_replace(low, '[aeiou]', '', 'g')) AS nv,
+             length(low) - length(replace(low, ' ', '')) AS nsp,
+             length(low) - length(regexp_replace(low, '[jkqxz]', '', 'g')) AS nr,
+             length(low) - length(replace(low, 'e', '')) AS ne
+      FROM lowd),
+    f AS MATERIALIZED (
+      SELECT doc_id, lang, source, n_chars,
+             CAST(CASE WHEN lang = 'en' THEN 1 ELSE -1 END AS BIGINT) AS y,
+             CAST(1000 AS BIGINT) AS x0,
+             CAST((nv * 1000) // d AS BIGINT) AS x1,
+             CAST((nsp * 1000) // d AS BIGINT) AS x2,
+             CAST((nr * 1000) // d AS BIGINT) AS x3,
+             CAST((ne * 1000) // d AS BIGINT) AS x4
+      FROM counted),
+    w0_ AS (SELECT CAST(0 AS BIGINT) AS w0, CAST(0 AS BIGINT) AS w1,
+                   CAST(0 AS BIGINT) AS w2, CAST(0 AS BIGINT) AS w3,
+                   CAST(0 AS BIGINT) AS w4)"""
+    steps = []
+    for r in range(1, PERCEPTRON_EPOCHS + 1):
+        prev = "w0_" if r == 1 else f"w{r - 1}_"
+        steps.append(f""",
+    m{r} AS (
+      SELECT f.*, w.w0 * f.x0 + w.w1 * f.x1 + w.w2 * f.x2
+                  + w.w3 * f.x3 + w.w4 * f.x4 AS mar
+      FROM f, {prev} w),
+    u{r} AS (
+      SELECT CAST(count(*) AS BIGINT) AS nm,
+             CAST(coalesce(sum(y * x0), 0) AS BIGINT) AS d0,
+             CAST(coalesce(sum(y * x1), 0) AS BIGINT) AS d1,
+             CAST(coalesce(sum(y * x2), 0) AS BIGINT) AS d2,
+             CAST(coalesce(sum(y * x3), 0) AS BIGINT) AS d3,
+             CAST(coalesce(sum(y * x4), 0) AS BIGINT) AS d4
+      FROM m{r} WHERE y * mar <= 0),
+    w{r}_ AS MATERIALIZED (
+      SELECT u.nm, w.w0 + u.d0 AS w0, w.w1 + u.d1 AS w1,
+             w.w2 + u.d2 AS w2, w.w3 + u.d3 AS w3, w.w4 + u.d4 AS w4
+      FROM {prev} w, u{r} u)"""
+        )
+    return head + "".join(steps)
+
+
+def _perceptron_trajectory_sql() -> str:
+    rows = "\n    UNION ALL ".join(
+        f"""SELECT CAST({r} AS BIGINT) AS epoch, nm AS n_mistakes,
+           w0 AS w_bias, w1 AS w_vowel, w2 AS w_space,
+           w3 AS w_rare, w4 AS w_e FROM w{r}_"""
+        for r in range(1, PERCEPTRON_EPOCHS + 1)
+    )
+    return _perceptron_cte() + "\n    " + rows
+
+
+TWINS["quality_perceptron_trajectory"] = _perceptron_trajectory_sql()
 
 
 def q_documents_stream_classifier_scores(
@@ -218,7 +297,7 @@ def q_documents_stream_classifier_scores(
     FIXTURE-VERIFICATION TIER ONLY: ``complete`` + ``memory`` sink
     materialize the grid on the driver — fine at any sf (the grid is
     enumeration-bounded), and the oracle is the batch replay of the
-    same fit + scoring (oracles_r14)."""
+    same fit + scoring (TWINS, below)."""
     import uuid
 
     from kickstarter_etl_pipeline_spark.streaming.events_stream import (
@@ -262,6 +341,31 @@ def q_documents_stream_classifier_scores(
     )
     query.awaitTermination()
     return spark.table(name)
+
+
+# FULL twin of q_documents_stream_classifier_scores (train-offline /
+# score-online): the batch replay of the identical fit + scoring —
+# the SAME unrolled 8-epoch CTE chain (a drifting constituent fails
+# the whole family), margins under the epoch-8 weights, grouped on the
+# (lang, source) grid. The streaming side must land on identical
+# BIGINT margin sums or the stream-side feature expressions / weight
+# hand-off drifted from the batch fit.
+def _stream_scores_oracle_sql() -> str:
+    return _perceptron_cte() + f""",
+    smargins AS (
+      SELECT f.lang, f.source,
+             w.w0 * f.x0 + w.w1 * f.x1 + w.w2 * f.x2
+               + w.w3 * f.x3 + w.w4 * f.x4 AS mar
+      FROM f, w{PERCEPTRON_EPOCHS}_ w)
+    SELECT lang, source,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(mar) AS BIGINT) AS margin_sum,
+           CAST(sum(CASE WHEN mar > 0 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_positive
+    FROM smargins GROUP BY lang, source"""
+
+
+TWINS["documents_stream_classifier_scores"] = _stream_scores_oracle_sql()
 
 
 def q_classifier_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -314,3 +418,33 @@ def q_classifier_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFram
             F.expr("(n_kept * 1000) DIV n_docs").alias("kept_per_mille"),
         )
     )
+
+
+def _classifier_manifest_sql() -> str:
+    # Percentile-calibrated selection, like the Spark side: global
+    # (margin DESC, doc_id) total order, keep rank <= (N*600)//1000.
+    return _perceptron_cte() + f""",
+    scored AS (
+      SELECT f.lang, f.source, f.n_chars,
+             row_number() OVER (
+               ORDER BY w.w0 * f.x0 + w.w1 * f.x1 + w.w2 * f.x2
+                        + w.w3 * f.x3 + w.w4 * f.x4 DESC, f.doc_id
+             ) AS rk
+      FROM f, w{PERCEPTRON_EPOCHS}_ w),
+    kept AS (
+      SELECT lang, source, n_chars,
+             CASE WHEN rk <= ((SELECT CAST(count(*) AS BIGINT) FROM f)
+                              * {KEEP_PER_MILLE}) // 1000
+                  THEN 1 ELSE 0 END AS keep
+      FROM scored)
+    SELECT lang, source,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(keep) AS BIGINT) AS n_kept,
+           CAST(sum(CASE WHEN keep = 1 THEN n_chars ELSE 0 END) AS BIGINT)
+             AS kept_chars,
+           (CAST(sum(keep) AS BIGINT) * 1000) // CAST(count(*) AS BIGINT)
+             AS kept_per_mille
+    FROM kept GROUP BY lang, source"""
+
+
+TWINS["classifier_curation_manifest"] = _classifier_manifest_sql()

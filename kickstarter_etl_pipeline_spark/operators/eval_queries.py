@@ -8,9 +8,9 @@ source's score distribution drifted (KS statistic), does the cheap
 blocking stage actually find the true near-dup pairs (pairs
 completeness / reduction ratio)?  Each report here is built from
 already-verified pipeline signals, fully deterministic, and carries a
-full DuckDB oracle twin (oracles_eval.py), following the repo's rules:
-exact integer spines, one fixed IEEE tree per float output, rankings
-totally ordered with id tie-breaks.
+full DuckDB oracle twin (in TWINS, beside the query), following the
+repo's rules: exact integer spines, one fixed IEEE tree per float
+output, rankings totally ordered with id tie-breaks.
 
 Scale posture, shared by the score-distribution reports: scores live
 on the 1e-6 rounding grid, so the per-score aggregate has GRID-bounded
@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from kickstarter_etl_pipeline_spark import qdefs_star_events
 from kickstarter_etl_pipeline_spark.operators import events as EV
 from kickstarter_etl_pipeline_spark.operators import text as TX
 from kickstarter_etl_pipeline_spark.operators.ranking import (
@@ -33,6 +34,13 @@ from kickstarter_etl_pipeline_spark.operators.ranking import (
 )
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
+from kickstarter_etl_pipeline_spark.twin_sql import _NORM, _TOKS
+
+
+#: DuckDB twin of each query defined here, by query name: SQL that
+#: returns the same rows on the same parquet tables. Each entry sits
+#: after its ``q_<name>`` function; queries.oracle_sql() collects them.
+TWINS: dict[str, str] = {}
 
 
 def _scored_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -96,6 +104,46 @@ def q_quality_auc_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# (doc_id, lang, source, q) with q = the 6-dp quality score — the same
+# expression the verified quality_scores oracle uses, carried with the
+# label/source columns the eval tier needs.
+_QUAL = f"""
+  SELECT doc_id, lang, source,
+         floor((
+           (CASE WHEN length(text) >= 100 AND length(text) <= 10000 THEN 1.0 ELSE 0.5 END)
+           * (0.5 + 0.5 * (len(list_distinct(toks)) / nullif(len(toks), 0)))
+           - least(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
+                   / greatest(length(text), 1) * 5, 0.5)
+         ) * 1000000 + 0.5) / 1000000.0 AS q
+  FROM (SELECT doc_id, lang, source, text, {_TOKS} AS toks FROM documents)
+"""
+
+
+TWINS["quality_auc_report"] = f"""
+        WITH s AS ({_QUAL}),
+        f AS (SELECT q, CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos
+              FROM s WHERE q IS NOT NULL),
+        per AS (SELECT q, CAST(sum(pos) AS BIGINT) AS p,
+                       CAST(sum(1 - pos) AS BIGINT) AS n
+                FROM f GROUP BY q),
+        cumt AS (SELECT p, n,
+                        CAST(coalesce(sum(n) OVER (ORDER BY q
+                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                          AS BIGINT) AS cneg
+                 FROM per),
+        agg AS (SELECT CAST(sum(p * (2 * cneg + n)) AS BIGINT) AS u2,
+                       CAST(sum(p) AS BIGINT) AS n_pos,
+                       CAST(sum(n) AS BIGINT) AS n_neg
+                FROM cumt),
+        a AS (SELECT n_pos, n_neg,
+                     floor(u2 / (2.0 * n_pos * n_neg) * 1000000 + 0.5) / 1000000.0 AS auc
+              FROM agg)
+        SELECT n_pos, n_neg, auc,
+               floor((2 * auc - 1) * 1000000 + 0.5) / 1000000.0 AS gini
+        FROM a
+    """
+
+
 def q_quality_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability table for the quality score against lang = 'en':
     scores clamp-binned to deciles (floor(q·10) clamped to [−5, 9] —
@@ -120,6 +168,22 @@ def q_quality_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "mean_quality"
         ),
     )
+
+
+TWINS["quality_calibration_report"] = f"""
+        WITH s AS ({_QUAL}),
+        f AS (SELECT CAST(least(greatest(floor(q * 10), -5), 9) AS INTEGER) AS bin,
+                     CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos,
+                     CAST(floor(q * 1000000.0 + 0.5) AS BIGINT) AS q_micro
+              FROM s WHERE q IS NOT NULL)
+        SELECT bin,
+               CAST(count(*) AS BIGINT) AS n_docs,
+               CAST(sum(pos) AS BIGINT) AS n_pos,
+               floor(sum(pos) / count(*) * 1000000 + 0.5) / 1000000.0 AS frac_pos,
+               floor(sum(q_micro) / count(*) / 1000000.0 * 1000000 + 0.5) / 1000000.0
+                 AS mean_quality
+        FROM f GROUP BY bin
+    """
 
 
 def q_source_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -157,7 +221,7 @@ def q_source_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # device. The global ECDF was a SinglePartition funnel over the
     # grid-cardinality score table; the per-source one put each
     # source's ENTIRE grid on one task (enumeration-bounded keys — the
-    # ledger's fat-partition window trap). The per-source cumulative is
+    # repo's fat-partition window trap). The per-source cumulative is
     # recovered from the GLOBAL (source, q)-ordered running sum minus
     # the source's prefix offset (exact longs; the offsets ride a
     # driver literal — sources are control-sized by the same contract
@@ -204,6 +268,47 @@ def q_source_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ks_stat"),
         F.col("q").alias("at_quality"),
     )
+
+
+TWINS["source_ks_drift"] = f"""
+        WITH s AS ({_QUAL}),
+        f AS (SELECT source, q FROM s WHERE q IS NOT NULL),
+        per_sq AS (SELECT source, q, CAST(count(*) AS BIGINT) AS c
+                   FROM f GROUP BY 1, 2),
+        per_q AS (SELECT q, CAST(count(*) AS BIGINT) AS c_all FROM f GROUP BY 1),
+        totals AS (SELECT source, CAST(count(*) AS BIGINT) AS n_s
+                   FROM f GROUP BY 1),
+        tot AS (SELECT CAST(count(*) AS BIGINT) AS n_tot FROM f),
+        grid AS (SELECT t.source, p.q FROM totals t CROSS JOIN per_q p),
+        cum_all AS (SELECT q, CAST(sum(c_all) OVER (ORDER BY q
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                      AS BIGINT) AS cum_all
+                    FROM per_q),
+        cums AS (SELECT g.source, g.q,
+                        CAST(sum(coalesce(ps.c, 0)) OVER (PARTITION BY g.source
+                          ORDER BY g.q
+                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                          AS BIGINT) AS cum_s
+                 FROM grid g
+                 LEFT JOIN per_sq ps ON ps.source = g.source AND ps.q = g.q),
+        sweep AS (SELECT c.source, c.q, t.n_s, x.n_tot,
+                         abs(CAST(c.cum_s AS HUGEINT) * (x.n_tot - t.n_s)
+                             - CAST(a.cum_all - c.cum_s AS HUGEINT) * t.n_s)
+                           AS d_num
+                  FROM cums c
+                  JOIN cum_all a USING (q)
+                  JOIN totals t USING (source)
+                  CROSS JOIN tot x),
+        best AS (SELECT *, row_number() OVER (PARTITION BY source
+                   ORDER BY d_num DESC, q ASC) AS rn
+                 FROM sweep)
+        SELECT source, n_s AS n_docs,
+               floor(CAST(d_num AS DOUBLE)
+                     / (CAST(n_s AS DOUBLE) * CAST(n_tot - n_s AS DOUBLE))
+                     * 1000000 + 0.5) / 1000000.0 AS ks_stat,
+               q AS at_quality
+        FROM best WHERE rn = 1
+    """
 
 
 def q_blocking_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -267,6 +372,31 @@ def q_blocking_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_blocking_quality_report (round 9): the two standard
+# entity-resolution blocking metrics, composed from the verified
+# md5-SimHash candidate twin and the exact n-gram Jaccard >= 0.8 truth
+# twin (both in qdefs_star_events.TWINS). All counts exact;
+# C(n,2) is arithmetic (n(n-1) is always even, so /2 is an exact-valued
+# double on both engines before the BIGINT cast).
+TWINS["blocking_quality_report"] = f"""
+    WITH cand AS (SELECT id_a, id_b FROM ({qdefs_star_events.TWINS['simhash_md5_candidates']})),
+    truth AS (SELECT id_a, id_b FROM ({qdefs_star_events.TWINS['ngram_jaccard_pairs']})),
+    nd AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
+    nc AS (SELECT CAST(count(*) AS BIGINT) AS n_candidates FROM cand),
+    nt AS (SELECT CAST(count(*) AS BIGINT) AS n_true_pairs FROM truth),
+    nh AS (SELECT CAST(count(*) AS BIGINT) AS n_candidates_true
+           FROM cand JOIN truth USING (id_a, id_b))
+    SELECT n_docs,
+           CAST(n_docs * (n_docs - 1) / 2 AS BIGINT) AS n_possible_pairs,
+           n_candidates, n_true_pairs, n_candidates_true,
+           floor(n_candidates_true / nullif(n_true_pairs, 0) * 1000000 + 0.5)
+             / 1000000.0 AS pairs_completeness,
+           floor((1 - n_candidates / CAST(n_docs * (n_docs - 1) / 2 AS BIGINT))
+                 * 1000000 + 0.5) / 1000000.0 AS reduction_ratio
+    FROM nd CROSS JOIN nc CROSS JOIN nt CROSS JOIN nh
+"""
+
+
 def q_theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil-Sen robust trend slope of daily event volume: the median
     of all pairwise slopes (c_j − c_i)/(d_j − d_i) over day pairs —
@@ -311,6 +441,30 @@ def q_theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         round_det(F.sum("slope") / F.count("*"), 6).alias("ts_slope")
     )
     return n_days.crossJoin(med).select("n_days", "n_pairs", "ts_slope")
+
+
+TWINS["theil_sen_daily_trend"] = """
+        WITH daily AS (SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS d,
+                              CAST(count(*) AS BIGINT) AS c
+                       FROM events GROUP BY 1),
+        pairs AS (SELECT a.d AS da, b.d AS db,
+                         floor((b.c - a.c) / (b.d - a.d) * 1000000 + 0.5) / 1000000.0
+                           AS slope
+                  FROM daily a JOIN daily b ON a.d < b.d),
+        nd AS (SELECT CAST(count(*) AS BIGINT) AS n_days FROM daily),
+        np AS (SELECT CAST(count(*) AS BIGINT) AS n_pairs FROM pairs),
+        ranked AS (SELECT slope, row_number() OVER (ORDER BY slope, da, db) AS rn
+                   FROM pairs),
+        mids AS (SELECT r.slope, p.n_pairs
+                 FROM ranked r CROSS JOIN np p
+                 WHERE r.rn = floor((p.n_pairs + 1) / 2)
+                    OR r.rn = floor(p.n_pairs / 2) + 1),
+        med AS (SELECT n_pairs,
+                       floor(sum(slope) / count(*) * 1000000 + 0.5) / 1000000.0
+                         AS ts_slope
+                FROM mids GROUP BY n_pairs)
+        SELECT n_days, n_pairs, ts_slope FROM nd CROSS JOIN med
+    """
 
 
 def q_rank_correlation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -384,6 +538,46 @@ def q_rank_correlation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         corr_expr("x", "y", "pearson_r"),
         corr_expr("_r2x", "_r2y", "spearman_rho"),
     )
+
+
+TWINS["rank_correlation_report"] = f"""
+        WITH s AS ({_QUAL}),
+        j AS (SELECT CAST(d.n_chars AS BIGINT) AS x,
+                     CAST(floor(s.q * 1000000.0 + 0.5) AS BIGINT) AS y
+              FROM s JOIN documents d USING (doc_id) WHERE s.q IS NOT NULL),
+        rx AS (SELECT x, CAST(2 * coalesce(sum(c) OVER (ORDER BY x
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + c + 1
+                 AS BIGINT) AS r2x
+               FROM (SELECT x, CAST(count(*) AS BIGINT) AS c FROM j GROUP BY x)),
+        ry AS (SELECT y, CAST(2 * coalesce(sum(c) OVER (ORDER BY y
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + c + 1
+                 AS BIGINT) AS r2y
+               FROM (SELECT y, CAST(count(*) AS BIGINT) AS c FROM j GROUP BY y)),
+        r AS (SELECT j.x, j.y, rx.r2x, ry.r2y
+              FROM j JOIN rx USING (x) JOIN ry USING (y)),
+        agg AS (SELECT CAST(count(*) AS HUGEINT) AS n,
+                       sum(CAST(x AS HUGEINT)) AS sx,
+                       sum(CAST(y AS HUGEINT)) AS sy,
+                       sum(CAST(x AS HUGEINT) * y) AS sxy,
+                       sum(CAST(x AS HUGEINT) * x) AS sxx,
+                       sum(CAST(y AS HUGEINT) * y) AS syy,
+                       sum(CAST(r2x AS HUGEINT)) AS srx,
+                       sum(CAST(r2y AS HUGEINT)) AS sry,
+                       sum(CAST(r2x AS HUGEINT) * r2y) AS srxy,
+                       sum(CAST(r2x AS HUGEINT) * r2x) AS srxx,
+                       sum(CAST(r2y AS HUGEINT) * r2y) AS sryy
+                FROM r)
+        SELECT CAST(n AS BIGINT) AS n_docs,
+               floor(CAST(n * sxy - sx * sy AS DOUBLE)
+                     / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
+                            * CAST(n * syy - sy * sy AS DOUBLE))
+                     * 1000000 + 0.5) / 1000000.0 AS pearson_r,
+               floor(CAST(n * srxy - srx * sry AS DOUBLE)
+                     / sqrt(CAST(n * srxx - srx * srx AS DOUBLE)
+                            * CAST(n * sryy - sry * sry AS DOUBLE))
+                     * 1000000 + 0.5) / 1000000.0 AS spearman_rho
+        FROM agg
+    """
 
 
 def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -489,6 +683,39 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["bm25_topk"] = f"""
+        WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+        tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
+               FROM (SELECT doc_id, unnest(t) AS term FROM toks) GROUP BY 1, 2),
+        dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
+        n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
+        tt AS (SELECT CAST(sum(dl) AS BIGINT) AS t FROM dl),
+        dfr AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
+        q AS (SELECT term FROM (SELECT term, sum(tf) AS cnt FROM tf
+                                GROUP BY term ORDER BY cnt DESC, term LIMIT 5)),
+        qi AS (SELECT q.term, dfr.df,
+                      CAST(floor(ln((n.n - dfr.df + 0.5) / (dfr.df + 0.5) + 1.0)
+                                 * 1000000000 + 0.5) AS BIGINT) AS idf9
+               FROM q JOIN dfr USING (term) CROSS JOIN n),
+        sc AS (SELECT tf.doc_id,
+                      CAST(floor((qi.idf9 / 1000000000.0)
+                           * (tf.tf * 2.2)
+                           / (tf.tf + 1.2 * (0.25 + 0.75 * (dl.dl * n.n / tt.t)))
+                           * 1000000000 + 0.5) AS BIGINT) AS s9
+               FROM tf JOIN qi USING (term) JOIN dl USING (doc_id)
+               CROSS JOIN n CROSS JOIN tt),
+        pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms_matched,
+                      CAST(sum(s9) AS BIGINT) AS sum9
+               FROM sc GROUP BY doc_id),
+        ranked AS (SELECT *, CAST(row_number() OVER (ORDER BY sum9 DESC, doc_id)
+                     AS INTEGER) AS rank
+                   FROM pd)
+        SELECT rank, doc_id, n_terms_matched,
+               floor(sum9 / 1000000000.0 * 1000000 + 0.5) / 1000000.0 AS bm25_score
+        FROM ranked WHERE rank <= 10
+    """
+
+
 def q_snm_blocking_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted-neighborhood blocking (Hernández & Stolfo 1995, the
     multi-pass merge/purge method) audited with the same two metrics
@@ -579,6 +806,48 @@ def q_snm_blocking_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("reduction_ratio"),
         )
     )
+
+
+# FULL twin of q_snm_blocking_report (round 9, third session):
+# sorted-neighborhood blocking (Hernández & Stolfo 1995) — two passes
+# of row_number over pure-expression sort keys (doc_id tie-break =
+# total order, the two_phase_rank contract), in-window pairs for
+# w = 6 via rank-difference 1..5, metrics mirroring the
+# blocking_quality_report tree shapes exactly (verified pair).
+TWINS["snm_blocking_report"] = f"""
+    WITH keyed AS (
+      SELECT doc_id,
+             substr({_NORM}, 1, 16) AS k1,
+             lpad(CAST(n_chars AS VARCHAR), 8, '0')
+               || substr({_NORM}, 1, 8) AS k2
+      FROM documents),
+    p1 AS (SELECT doc_id, row_number() OVER (ORDER BY k1, doc_id) AS rk
+           FROM keyed),
+    p2 AS (SELECT doc_id, row_number() OVER (ORDER BY k2, doc_id) AS rk
+           FROM keyed),
+    c1 AS (SELECT least(a.doc_id, b.doc_id) AS id_a,
+                  greatest(a.doc_id, b.doc_id) AS id_b
+           FROM p1 a JOIN p1 b ON b.rk BETWEEN a.rk + 1 AND a.rk + 5),
+    c2 AS (SELECT least(a.doc_id, b.doc_id) AS id_a,
+                  greatest(a.doc_id, b.doc_id) AS id_b
+           FROM p2 a JOIN p2 b ON b.rk BETWEEN a.rk + 1 AND a.rk + 5),
+    cand AS (SELECT DISTINCT id_a, id_b
+             FROM (SELECT * FROM c1 UNION ALL SELECT * FROM c2)),
+    truth AS (SELECT id_a, id_b FROM ({qdefs_star_events.TWINS['ngram_jaccard_pairs']})),
+    nd AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
+    nc AS (SELECT CAST(count(*) AS BIGINT) AS n_candidates FROM cand),
+    nt AS (SELECT CAST(count(*) AS BIGINT) AS n_true_pairs FROM truth),
+    nh AS (SELECT CAST(count(*) AS BIGINT) AS n_candidates_true
+           FROM cand JOIN truth USING (id_a, id_b))
+    SELECT n_docs,
+           CAST(n_docs * (n_docs - 1) / 2 AS BIGINT) AS n_possible_pairs,
+           n_candidates, n_true_pairs, n_candidates_true,
+           floor(n_candidates_true / nullif(n_true_pairs, 0) * 1000000 + 0.5)
+             / 1000000.0 AS pairs_completeness,
+           floor((1 - n_candidates / CAST(n_docs * (n_docs - 1) / 2 AS BIGINT))
+                 * 1000000 + 0.5) / 1000000.0 AS reduction_ratio
+    FROM nd CROSS JOIN nc CROSS JOIN nt CROSS JOIN nh
+"""
 
 
 def q_rrf_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -695,6 +964,48 @@ def q_rrf_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["rrf_fusion_topk"] = f"""
+        WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+        tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
+               FROM (SELECT doc_id, unnest(t) AS term FROM toks) GROUP BY 1, 2),
+        dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
+        n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
+        tt AS (SELECT CAST(sum(dl) AS BIGINT) AS t FROM dl),
+        dfr AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
+        q AS (SELECT term FROM (SELECT term, sum(tf) AS cnt FROM tf
+                                GROUP BY term ORDER BY cnt DESC, term LIMIT 5)),
+        qi AS (SELECT q.term,
+                      CAST(floor(ln((n.n - dfr.df + 0.5) / (dfr.df + 0.5) + 1.0)
+                                 * 1000000000 + 0.5) AS BIGINT) AS idf9
+               FROM q JOIN dfr USING (term) CROSS JOIN n),
+        sc AS (SELECT tf.doc_id, tf.tf,
+                      CAST(floor((qi.idf9 / 1000000000.0)
+                           * (tf.tf * 2.2)
+                           / (tf.tf + 1.2 * (0.25 + 0.75 * (dl.dl * n.n / tt.t)))
+                           * 1000000000 + 0.5) AS BIGINT) AS s9
+               FROM tf JOIN qi USING (term) JOIN dl USING (doc_id)
+               CROSS JOIN n CROSS JOIN tt),
+        pd AS (SELECT doc_id, CAST(sum(s9) AS BIGINT) AS sum9,
+                      CAST(sum(tf) AS BIGINT) AS tfsum
+               FROM sc GROUP BY doc_id),
+        ra AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY sum9 DESC, doc_id)
+                 AS INTEGER) AS rank_bm25 FROM pd),
+        rb AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY tfsum DESC, doc_id)
+                 AS INTEGER) AS rank_tf FROM pd),
+        fused AS (SELECT ra.doc_id, rank_bm25, rank_tf,
+                         CAST(floor(1000000000.0 / (60 + rank_bm25) + 0.5)
+                              + floor(1000000000.0 / (60 + rank_tf) + 0.5)
+                              AS BIGINT) AS rrf9
+                  FROM ra JOIN rb USING (doc_id)),
+        ranked AS (SELECT *, CAST(row_number() OVER (ORDER BY rrf9 DESC, doc_id)
+                     AS INTEGER) AS rank
+                   FROM fused)
+        SELECT rank, doc_id, rank_bm25, rank_tf,
+               floor(rrf9 / 1000000000.0 * 1000000 + 0.5) / 1000000.0 AS rrf_score
+        FROM ranked WHERE rank <= 10
+    """
+
+
 #: NDCG position weights: w_i = floor(1e9 / log2(i+1) + 0.5) for
 #: positions 1..10, HARDCODED on both engines (the derived-constant
 #: lesson — computing log2 at runtime on each engine is a cross-libm
@@ -767,6 +1078,33 @@ def q_ndcg_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["ndcg_report"] = f"""
+        WITH s AS ({_QUAL}),
+        base AS (
+          SELECT s.doc_id, s.q,
+                 CAST(CASE WHEN d.n_chars >= 400 THEN 7
+                           WHEN d.n_chars >= 250 THEN 3
+                           WHEN d.n_chars >= 120 THEN 1
+                           ELSE 0 END AS BIGINT) AS gain
+          FROM s JOIN documents d USING (doc_id) WHERE s.q IS NOT NULL),
+        w AS (SELECT [1000000000, 630929754, 500000000, 430676558, 386852807,
+                      356207187, 333333333, 315464877, 301029996, 289064826] AS ws),
+        dtop AS (SELECT gain, row_number() OVER (ORDER BY q DESC, doc_id) AS pos
+                 FROM base ORDER BY q DESC, doc_id LIMIT 10),
+        itop AS (SELECT gain, row_number() OVER (ORDER BY gain DESC, doc_id) AS pos
+                 FROM base ORDER BY gain DESC, doc_id LIMIT 10),
+        d9 AS (SELECT CAST(sum(gain * ws[pos]) AS BIGINT) AS d FROM dtop CROSS JOIN w),
+        i9 AS (SELECT CAST(sum(gain * ws[pos]) AS BIGINT) AS i FROM itop CROSS JOIN w),
+        n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM base)
+        SELECT n_docs,
+               floor(d / 1000000000.0 * 1000000 + 0.5) / 1000000.0 AS dcg_at_10,
+               floor(i / 1000000000.0 * 1000000 + 0.5) / 1000000.0 AS idcg_at_10,
+               floor(CAST(d AS DOUBLE) / nullif(i, 0) * 1000000 + 0.5) / 1000000.0
+                 AS ndcg_at_10
+        FROM n CROSS JOIN d9 CROSS JOIN i9
+    """
+
+
 def q_welch_ttest_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Welch's unequal-variance t-test comparing mean order value
     between the 1997 and 1998 cohorts — the classical two-sample
@@ -835,6 +1173,37 @@ def q_welch_ttest_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_welch_ttest_report: exact integer sufficient stats
+# (n, sum cents, sum cents^2 — HUGEINT), then ONE fixed IEEE tree of
+# +,-,x,/,sqrt mirrored token for token from the Spark side (correctly
+# rounded IEEE ops on identical inputs are engine-identical, no grid).
+TWINS["welch_ttest_report"] = """
+    WITH g AS (SELECT year(o_orderdate) AS y, CAST(count(*) AS BIGINT) AS n,
+                      CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS HUGEINT) AS s,
+                      sum(CAST(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS HUGEINT)
+                          * CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS q
+               FROM orders WHERE year(o_orderdate) IN (1997, 1998) GROUP BY 1),
+    a AS (SELECT n AS n_a, s AS sa, q AS qa FROM g WHERE y = 1997),
+    b AS (SELECT n AS n_b, s AS sb, q AS qb FROM g WHERE y = 1998),
+    t AS (SELECT n_a, n_b, sa, sb,
+                 (CAST(qa AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE) / n_a)
+                   / (n_a - 1) AS va,
+                 (CAST(qb AS DOUBLE) - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE) / n_b)
+                   / (n_b - 1) AS vb
+          FROM a, b)
+    SELECT n_a, n_b,
+           CAST((sa * 10000) // n_a AS BIGINT) / 1000000.0 AS mean_a,
+           CAST((sb * 10000) // n_b AS BIGINT) / 1000000.0 AS mean_b,
+           floor((CAST(sa AS DOUBLE) / n_a - CAST(sb AS DOUBLE) / n_b)
+                 / sqrt(va / n_a + vb / n_b) * 1000000 + 0.5) / 1000000.0 AS t_stat,
+           floor(((va / n_a + vb / n_b) * (va / n_a + vb / n_b))
+                 / ((va / n_a) * (va / n_a) / (n_a - 1)
+                    + (vb / n_b) * (vb / n_b) / (n_b - 1))
+                 * 1000000 + 0.5) / 1000000.0 AS welch_df
+    FROM t
+"""
+
+
 def q_ols_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordinary-least-squares trend of daily event volume with R² —
     the classical companion to the robust Theil-Sen slope
@@ -893,6 +1262,37 @@ def q_ols_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_ols_daily_trend: exact HUGEINT sufficient statistics,
+# then the identical IEEE +,-,x,/ tree (the welch_ttest device).
+TWINS["ols_daily_trend"] = """
+    WITH daily AS (SELECT CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS x,
+                          CAST(count(*) AS BIGINT) AS y
+                   FROM events GROUP BY 1),
+    g AS (SELECT CAST(count(*) AS BIGINT) AS n,
+                 CAST(sum(x) AS HUGEINT) AS sx,
+                 CAST(sum(y) AS HUGEINT) AS sy,
+                 sum(CAST(x AS HUGEINT) * y) AS sxy,
+                 sum(CAST(x AS HUGEINT) * x) AS sxx,
+                 sum(CAST(y AS HUGEINT) * y) AS syy
+          FROM daily)
+    SELECT n,
+           floor((n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+                 / (n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+                 * 1000000 + 0.5) / 1000000.0 AS slope_per_day,
+           floor(((CAST(sy AS DOUBLE)
+                   - (n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+                     / (n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+                     * CAST(sx AS DOUBLE)) / n)
+                 * 1000000 + 0.5) / 1000000.0 AS intercept,
+           floor(((n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+                  * (n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)))
+                 / ((n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+                    * (n * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
+                 * 1000000 + 0.5) / 1000000.0 AS r_squared
+    FROM g
+"""
+
+
 def q_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user TIME-weighted average of the event value stream — the
     temporal integral (each value held until the next event, averaged
@@ -933,6 +1333,25 @@ def q_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         (twa_micro / F.lit(1e6)).alias("twa_value"),
     )
+
+
+# FULL twin of q_time_weighted_value: micro-unit values, exact integer
+# durations, HUGEINT numerator, exact floor division.
+TWINS["time_weighted_value"] = """
+    WITH ev AS (SELECT user_id, event_id, epoch_us(ts) AS us,
+                       CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vm
+                FROM events),
+    seg AS (SELECT user_id, vm,
+                   lead(us) OVER (PARTITION BY user_id ORDER BY us, event_id) - us AS dur
+            FROM ev),
+    g AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
+                 CAST(sum(CAST(vm AS HUGEINT) * dur) AS HUGEINT) AS num,
+                 CAST(sum(dur) AS BIGINT) AS den
+          FROM seg GROUP BY user_id)
+    SELECT user_id, n_events,
+           CAST(num // den AS BIGINT) / 1000000.0 AS twa_value
+    FROM g WHERE den > 0
+"""
 
 
 def q_conversion_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -992,6 +1411,36 @@ def q_conversion_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_conversion_wilson_ci: exact k/n, the identical Wilson
+# IEEE tree with the hardcoded z = 1.96 / z^2 = 3.8416 literals.
+TWINS["conversion_wilson_ci"] = """
+    WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
+    ft AS (SELECT user_id, event_type, min(us) AS t0 FROM ev
+           WHERE event_type IN ('click', 'view', 'signup')
+           GROUP BY 1, 2),
+    lp AS (SELECT user_id, max(us) AS tp_last FROM ev
+           WHERE event_type = 'purchase' GROUP BY 1),
+    per AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_users,
+                   CAST(sum(CASE WHEN tp_last >= t0 THEN 1 ELSE 0 END) AS BIGINT)
+                     AS n_converted
+            FROM ft LEFT JOIN lp USING (user_id)
+            GROUP BY event_type)
+    SELECT event_type AS touch_type, n_users, n_converted,
+           floor(n_converted / CAST(n_users AS DOUBLE) * 1000000 + 0.5) / 1000000.0 AS p_hat,
+           floor(((n_converted / CAST(n_users AS DOUBLE) + 3.8416 / (2 * n_users)
+                   - 1.96 * sqrt(n_converted / CAST(n_users AS DOUBLE)
+                                 * (1 - n_converted / CAST(n_users AS DOUBLE)) / n_users
+                                 + 3.8416 / (4 * n_users * n_users)))
+                  / (1 + 3.8416 / n_users)) * 1000000 + 0.5) / 1000000.0 AS wilson_lo,
+           floor(((n_converted / CAST(n_users AS DOUBLE) + 3.8416 / (2 * n_users)
+                   + 1.96 * sqrt(n_converted / CAST(n_users AS DOUBLE)
+                                 * (1 - n_converted / CAST(n_users AS DOUBLE)) / n_users
+                                 + 3.8416 / (4 * n_users * n_users)))
+                  / (1 + 3.8416 / n_users)) * 1000000 + 0.5) / 1000000.0 AS wilson_hi
+    FROM per
+"""
+
+
 def q_fd_violation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Functional-dependency profiling over the part catalog: for each
     candidate FD (name → size, name → price-cents, brand+type → size)
@@ -1020,6 +1469,30 @@ def q_fd_violation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = fd("p_name->price_cents", F.col("p_name"), cents)
     c = fd("brand_type->p_size", F.concat_ws("|", "p_brand", "p_type"), F.col("p_size"))
     return a.unionByName(b).unionByName(c)
+
+
+# FULL twin of q_fd_violation_report: pure integer FD profiling.
+TWINS["fd_violation_report"] = """
+    WITH a AS (SELECT 'p_name->p_size' AS fd,
+                      CAST(count(*) AS BIGINT) AS n_lhs_groups,
+                      CAST(sum(CASE WHEN d > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_violating,
+                      CAST(max(d) AS BIGINT) AS max_distinct_rhs
+               FROM (SELECT p_name, count(DISTINCT p_size) AS d FROM part GROUP BY 1)),
+    b AS (SELECT 'p_name->price_cents',
+                 CAST(count(*) AS BIGINT),
+                 CAST(sum(CASE WHEN d > 1 THEN 1 ELSE 0 END) AS BIGINT),
+                 CAST(max(d) AS BIGINT)
+          FROM (SELECT p_name,
+                       count(DISTINCT CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT)) AS d
+                FROM part GROUP BY 1)),
+    c AS (SELECT 'brand_type->p_size',
+                 CAST(count(*) AS BIGINT),
+                 CAST(sum(CASE WHEN d > 1 THEN 1 ELSE 0 END) AS BIGINT),
+                 CAST(max(d) AS BIGINT)
+          FROM (SELECT concat_ws('|', p_brand, p_type), count(DISTINCT p_size) AS d
+                FROM part GROUP BY 1))
+    SELECT * FROM a UNION ALL SELECT * FROM b UNION ALL SELECT * FROM c
+"""
 
 
 def q_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1079,6 +1552,44 @@ def q_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
+# FULL twin of q_correlation_matrix: exact integer sufficient stats in
+# one pass, the identical IEEE tree per pair.
+TWINS["correlation_matrix"] = """
+    WITH base AS (SELECT CAST(floor(l_quantity * 100 + 0.5) AS BIGINT) AS qty,
+                         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS pc,
+                         CAST(floor(l_discount * 10000 + 0.5) AS BIGINT) AS db
+                  FROM lineitem),
+    g AS (SELECT CAST(count(*) AS BIGINT) AS n,
+                 CAST(sum(qty) AS HUGEINT) AS s_q, sum(CAST(qty AS HUGEINT) * qty) AS q_q,
+                 CAST(sum(pc) AS HUGEINT) AS s_p, sum(CAST(pc AS HUGEINT) * pc) AS q_p,
+                 CAST(sum(db) AS HUGEINT) AS s_d, sum(CAST(db AS HUGEINT) * db) AS q_d,
+                 sum(CAST(qty AS HUGEINT) * pc) AS x_qp,
+                 sum(CAST(qty AS HUGEINT) * db) AS x_qd,
+                 sum(CAST(pc AS HUGEINT) * db) AS x_pd
+          FROM base)
+    SELECT 'quantity' AS col_a, 'price_cents' AS col_b, n,
+           floor((n * CAST(x_qp AS DOUBLE) - CAST(s_q AS DOUBLE) * CAST(s_p AS DOUBLE))
+                 / sqrt((n * CAST(q_q AS DOUBLE) - CAST(s_q AS DOUBLE) * CAST(s_q AS DOUBLE))
+                        * (n * CAST(q_p AS DOUBLE) - CAST(s_p AS DOUBLE) * CAST(s_p AS DOUBLE)))
+                 * 1000000 + 0.5) / 1000000.0 AS pearson_r
+    FROM g
+    UNION ALL
+    SELECT 'quantity', 'discount_bp', n,
+           floor((n * CAST(x_qd AS DOUBLE) - CAST(s_q AS DOUBLE) * CAST(s_d AS DOUBLE))
+                 / sqrt((n * CAST(q_q AS DOUBLE) - CAST(s_q AS DOUBLE) * CAST(s_q AS DOUBLE))
+                        * (n * CAST(q_d AS DOUBLE) - CAST(s_d AS DOUBLE) * CAST(s_d AS DOUBLE)))
+                 * 1000000 + 0.5) / 1000000.0
+    FROM g
+    UNION ALL
+    SELECT 'price_cents', 'discount_bp', n,
+           floor((n * CAST(x_pd AS DOUBLE) - CAST(s_p AS DOUBLE) * CAST(s_d AS DOUBLE))
+                 / sqrt((n * CAST(q_p AS DOUBLE) - CAST(s_p AS DOUBLE) * CAST(s_p AS DOUBLE))
+                        * (n * CAST(q_d AS DOUBLE) - CAST(s_d AS DOUBLE) * CAST(s_d AS DOUBLE)))
+                 * 1000000 + 0.5) / 1000000.0
+    FROM g
+"""
+
+
 def q_cramers_v_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cramér's V association between order status and priority — the
     normalized effect size on top of the chi-square machinery
@@ -1130,3 +1641,32 @@ def q_cramers_v_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         round_det(chi2, 6).alias("chi_square"),
         round_det(F.sqrt(chi2 / F.col("n") / F.col("_k")), 6).alias("cramers_v"),
     )
+
+
+# FULL twin of q_cramers_v_status_priority: nano-snapped chi-square
+# cell terms from HUGEINT products, one fixed tree for V.
+TWINS["cramers_v_status_priority"] = """
+    WITH cells AS (SELECT o_orderstatus AS s, o_orderpriority AS p,
+                          CAST(count(*) AS BIGINT) AS o
+                   FROM orders GROUP BY 1, 2),
+    rs AS (SELECT s, CAST(sum(o) AS BIGINT) AS r FROM cells GROUP BY s),
+    cs AS (SELECT p, CAST(sum(o) AS BIGINT) AS c FROM cells GROUP BY p),
+    tot AS (SELECT CAST(sum(o) AS BIGINT) AS n,
+                   CAST(count(DISTINCT s) AS BIGINT) AS nr,
+                   CAST(count(DISTINCT p) AS BIGINT) AS nc
+            FROM cells),
+    terms AS (SELECT CAST(floor(
+                CAST((CAST(o AS HUGEINT) * n - CAST(r AS HUGEINT) * c)
+                     * (CAST(o AS HUGEINT) * n - CAST(r AS HUGEINT) * c) AS DOUBLE)
+                / CAST(CAST(r AS HUGEINT) * c * n AS DOUBLE)
+                * 1000000000 + 0.5) AS BIGINT) AS t9,
+                     n, nr, nc
+              FROM cells JOIN rs USING (s) JOIN cs USING (p), tot),
+    g AS (SELECT CAST(sum(t9) AS BIGINT) AS chi9, max(n) AS n,
+                 max(least(nr - 1, nc - 1)) AS k
+          FROM terms)
+    SELECT n,
+           floor(chi9 / 1000000000.0 * 1000000 + 0.5) / 1000000.0 AS chi_square,
+           floor(sqrt(chi9 / 1000000000.0 / n / k) * 1000000 + 0.5) / 1000000.0 AS cramers_v
+    FROM g
+"""

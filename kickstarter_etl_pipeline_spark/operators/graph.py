@@ -129,7 +129,7 @@ def cooccurrence_nodes(events: DataFrame, bucket_seconds: int = 1800) -> DataFra
     hash-ordered so each sub-bucket is a uniform sample of the bucket,
     and it only engages above the cap — at any occupancy ≤ cap the
     edge set is bit-identical to the unsalted join. The DuckDB twins
-    (oracles_graph_common.ranked_cooccurrence_nodes) replay the exact
+    (twin_sql.ranked_cooccurrence_nodes) replay the exact
     same ranking, so cross-engine hashes agree at every scale.
     """
     nodes = (

@@ -1,16 +1,18 @@
 """Round-7 LM-data-prep and scale-infrastructure queries.
 
-Each query has a full DuckDB oracle twin (oracles_lm.py) and follows
-the repo's determinism rules: exact integer/decimal aggregation,
-transcendentals snapped to integer grids BEFORE aggregation (the
-two-level-grid recipe from NOTES.md), identical IEEE expression trees
-on both engines, rankings totally ordered by (value, id).
+Each query has a full DuckDB oracle twin (in TWINS, beside the query)
+and follows the repo's determinism rules: exact integer/decimal
+aggregation, transcendentals snapped to integer grids BEFORE
+aggregation (the two-level-grid recipe from NOTES.md), identical IEEE
+expression trees on both engines, rankings totally ordered by
+(value, id).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from kickstarter_etl_pipeline_spark import qdefs_embeddings
 from kickstarter_etl_pipeline_spark.constants import (
     BENFORD_P,
     BT_ROUNDS,
@@ -28,6 +30,13 @@ from kickstarter_etl_pipeline_spark.operators.ranking import (
 )
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
+from kickstarter_etl_pipeline_spark.twin_sql import _TOKS
+
+
+#: DuckDB twin of each query defined here, by query name: SQL that
+#: returns the same rows on the same parquet tables. Each entry sits
+#: after its ``q_<name>`` function; queries.oracle_sql() collects them.
+TWINS: dict[str, str] = {}
 
 
 def _embedding_dim_m2_mad4(emb: DataFrame) -> "tuple[DataFrame, DataFrame, DataFrame]":
@@ -104,6 +113,53 @@ def q_embedding_dim_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_embedding_dim_robust_stats: per-dim middle-rank
+# median + MAD, all comparisons exact long arithmetic on the 1e-6
+# embedding grid (median carried as min+max of the middle pair ×2,
+# deviations ×2 → mad4 = 4·MAD in grid units); the display divisions
+# are single fixed IEEE chains. The engine side ranks GLOBALLY with
+# two_phase_rank minus per-dim offsets; this per-dim window replay
+# must agree rank-for-rank.
+_ROBUST_SPINE = """
+    pts AS (
+      SELECT vec_id, d,
+             CAST(floor(e[d] * 1000000.0 + 0.5) AS BIGINT) AS x
+      FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
+      CROSS JOIN (SELECT unnest(range(1, 65)) AS d)),
+    r1 AS (SELECT vec_id, d, x,
+                  row_number() OVER (PARTITION BY d ORDER BY x, vec_id) AS rn,
+                  count(*) OVER (PARTITION BY d) AS n
+           FROM pts),
+    m1 AS (SELECT d, CAST(max(n) AS BIGINT) AS n,
+                  CAST(min(x) + max(x) AS BIGINT) AS m2
+           FROM r1
+           WHERE rn = floor((n + 1) / 2) OR rn = floor((n + 2) / 2)
+           GROUP BY d),
+    dev AS (SELECT p.vec_id, p.d,
+                   CAST(abs(2 * p.x - m1.m2) AS BIGINT) AS dev2
+            FROM pts p JOIN m1 ON m1.d = p.d),
+    r2 AS (SELECT d, dev2,
+                  row_number() OVER (PARTITION BY d ORDER BY dev2, vec_id) AS rn,
+                  count(*) OVER (PARTITION BY d) AS n
+           FROM dev),
+    m2t AS (SELECT d, CAST(min(dev2) + max(dev2) AS BIGINT) AS mad4
+            FROM r2
+            WHERE rn = floor((n + 1) / 2) OR rn = floor((n + 2) / 2)
+            GROUP BY d)"""
+
+
+TWINS["embedding_dim_robust_stats"] = f"""
+    WITH {_ROBUST_SPINE}
+    SELECT CAST(m1.d - 1 AS INTEGER) AS dim_idx,
+           m1.n AS n_vectors,
+           m1.m2 AS median_x2,
+           m2t.mad4 AS mad_x4,
+           CAST(m1.m2 AS DOUBLE) / 2.0 / 1000000.0 AS median_value,
+           CAST(m2t.mad4 AS DOUBLE) / 4.0 / 1000000.0 AS mad_value
+    FROM m1 JOIN m2t USING (d)
+"""
+
+
 def q_embedding_outlier_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust per-vector outlier screening — the corrupted-embedding
     detector run before ANN indexing / centroid training (mean/σ
@@ -145,6 +201,27 @@ def q_embedding_outlier_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_embedding_outlier_report: a dimension flags iff
+# 4*|2x - m2| > 7*mad4 (the exact-integer form of |x - med| >
+# 3.5*MAD); the max robust z is one IEEE division per dim with
+# NULLIF/try_divide parity on degenerate (mad4 = 0) dimensions.
+TWINS["embedding_outlier_report"] = f"""
+    WITH {_ROBUST_SPINE},
+    fl AS (SELECT p.vec_id,
+                  CAST(abs(2 * p.x - m1.m2) AS BIGINT) AS dev2,
+                  m2t.mad4
+           FROM pts p JOIN m1 ON m1.d = p.d JOIN m2t ON m2t.d = p.d)
+    SELECT vec_id,
+           CAST(sum(CASE WHEN 4 * dev2 > 7 * mad4 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_outlier_dims,
+           CAST(CASE WHEN sum(CASE WHEN 4 * dev2 > 7 * mad4 THEN 1 ELSE 0 END) >= 8
+                     THEN 1 ELSE 0 END AS INTEGER) AS is_outlier,
+           floor(max(2.0 * dev2 / NULLIF(mad4, 0)) * 1000000 + 0.5) / 1000000.0
+             AS max_robust_z
+    FROM fl GROUP BY vec_id
+"""
+
+
 def q_price_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact percentile banding at scale: every order assigned its
     ntile(100) price percentile band WITHOUT a single-task global sort
@@ -178,6 +255,24 @@ def q_price_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_price_percentile_bands: the two-phase rank + exact
+# tile arithmetic must reproduce a plain ntile(100) over the same
+# deterministic (price, orderkey) total order; band rollups are exact
+# (counts, raw stored doubles, decimal sums).
+TWINS["price_percentile_bands"] = """
+    WITH r AS (
+      SELECT o_totalprice,
+             ntile(100) OVER (ORDER BY o_totalprice, o_orderkey) AS band
+      FROM orders)
+    SELECT CAST(band AS INTEGER) AS band,
+           CAST(count(*) AS BIGINT) AS n_orders,
+           min(o_totalprice) AS min_price,
+           max(o_totalprice) AS max_price,
+           CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS sum_price
+    FROM r GROUP BY band
+"""
+
+
 def q_scalable_rank_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every user's event-count rank ascending (count, then user_id)
     via :func:`.ranking.two_phase_rank` — bit-identical to a plain global
@@ -185,6 +280,18 @@ def q_scalable_rank_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(F.count("*").cast("long").alias("n"))
     return two_phase_rank(per_user, ["n", "user_id"]).select("user_id", "n", "rank")
+
+
+# FULL twin of q_scalable_rank_events: the two-phase distributed rank
+# must be bit-identical to a plain global row_number over the same
+# total order — that equivalence IS the correctness contract.
+TWINS["scalable_rank_events"] = """
+    WITH per_user AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n
+                      FROM events GROUP BY user_id)
+    SELECT user_id, n,
+           CAST(row_number() OVER (ORDER BY n, user_id) AS BIGINT) AS rank
+    FROM per_user
+"""
 
 
 def q_token_coverage_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -226,6 +333,28 @@ def q_token_coverage_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             round_det(F.col("cum_occurrences") / F.col("_total"), 6).alias("cum_share"),
         )
     )
+
+
+# FULL twin of q_token_coverage_topk.
+TWINS["token_coverage_topk"] = f"""
+    WITH freq AS (SELECT token, CAST(count(*) AS BIGINT) AS n_occurrences
+                  FROM (SELECT unnest({_TOKS}) AS token FROM documents)
+                  GROUP BY token),
+    t AS (SELECT CAST(sum(n_occurrences) AS BIGINT) AS total FROM freq),
+    top AS (SELECT token, n_occurrences,
+                   CAST(row_number() OVER (ORDER BY n_occurrences DESC, token)
+                        AS INTEGER) AS rank
+            FROM freq
+            ORDER BY n_occurrences DESC, token LIMIT 25)
+    SELECT rank, token, n_occurrences,
+           CAST(sum(n_occurrences) OVER (ORDER BY rank
+                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+             AS cum_occurrences,
+           floor(sum(n_occurrences) OVER (ORDER BY rank
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                 / t.total * 1000000 + 0.5) / 1000000.0 AS cum_share
+    FROM top CROSS JOIN t
+"""
 
 
 def q_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -274,6 +403,35 @@ def q_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_touch_attribution.
+TWINS["touch_attribution"] = """
+    WITH marked AS (
+      SELECT event_type,
+             first_value(CASE WHEN event_type <> 'purchase' THEN event_type END
+                         IGNORE NULLS)
+               OVER (PARTITION BY user_id ORDER BY ts, event_id
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+               AS first_t,
+             last_value(CASE WHEN event_type <> 'purchase' THEN event_type END
+                        IGNORE NULLS)
+               OVER (PARTITION BY user_id ORDER BY ts, event_id
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+               AS last_t
+      FROM events),
+    purchases AS (SELECT coalesce(first_t, '(none)') AS first_touch,
+                         coalesce(last_t, '(none)') AS last_touch
+                  FROM marked WHERE event_type = 'purchase'),
+    f AS (SELECT first_touch AS channel, CAST(count(*) AS BIGINT) AS n_first_touch
+          FROM purchases GROUP BY 1),
+    l AS (SELECT last_touch AS channel, CAST(count(*) AS BIGINT) AS n_last_touch
+          FROM purchases GROUP BY 1)
+    SELECT coalesce(f.channel, l.channel) AS channel,
+           CAST(coalesce(n_first_touch, 0) AS BIGINT) AS n_first_touch,
+           CAST(coalesce(n_last_touch, 0) AS BIGINT) AS n_last_touch
+    FROM f FULL OUTER JOIN l ON f.channel = l.channel
+"""
+
+
 def q_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled source re-weighting (the T5/multilingual
     mixing rule, Raffel et al. 2020 §3.4.3: sample source s with
@@ -320,6 +478,27 @@ def q_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
             round_det(F.col("_w") / F.col("_wsum"), 6).alias("resample_share"),
         )
     )
+
+
+# FULL twin of q_temperature_resample. Grid bookkeeping matches the
+# Spark side symbol for symbol:
+#   L = floor(ln(n/N)*1e9 + 0.5); M = floor(7*L/10);
+#   W = floor(exp(M/1e9)*1e6 + 0.5); share = round6(W / sum(W)).
+TWINS["temperature_resample"] = """
+    WITH counts AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
+                    FROM documents GROUP BY source),
+    t AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
+    w AS (SELECT source, n_docs, t.n,
+                 CAST(floor(
+                   exp(floor(7 * floor(ln(n_docs / t.n) * 1000000000 + 0.5) / 10)
+                       / 1000000000.0) * 1000000 + 0.5) AS BIGINT) AS wgt
+          FROM counts CROSS JOIN t),
+    s AS (SELECT CAST(sum(wgt) AS BIGINT) AS wsum FROM w)
+    SELECT source, n_docs,
+           floor(n_docs / w.n * 1000000 + 0.5) / 1000000.0 AS corpus_share,
+           floor(wgt / s.wsum * 1000000 + 0.5) / 1000000.0 AS resample_share
+    FROM w CROSS JOIN s
+"""
 
 
 def q_kneser_ney_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -392,6 +571,38 @@ def q_kneser_ney_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_kneser_ney_bigrams. The discounted probability is a
+# pure ratio tree of exact BIGINT counts with D = 0.75 (exact binary):
+# both engines evaluate greatest(c12-0.75,0)/c1 + 0.75*n1f/c1*(nb/T)
+# left-associatively over IEEE doubles — bit-equal pre-grid.
+TWINS["kneser_ney_bigrams"] = f"""
+    WITH toks AS (SELECT {_TOKS} AS t FROM documents
+                  WHERE len({_TOKS}) >= 2),
+    bg AS (SELECT t[i] AS w1, t[i+1] AS w2
+           FROM toks, unnest(range(1, len(t))) AS r(i)),
+    c12 AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS n_bigram
+            FROM bg GROUP BY w1, w2),
+    by1 AS (SELECT w1, CAST(sum(n_bigram) AS BIGINT) AS c1,
+                   CAST(count(*) AS BIGINT) AS n1fwd
+            FROM c12 GROUP BY w1),
+    by2 AS (SELECT w2, CAST(count(*) AS BIGINT) AS nback FROM c12 GROUP BY w2),
+    ty AS (SELECT CAST(count(*) AS BIGINT) AS T FROM c12),
+    scored AS (
+      SELECT c12.w1, c12.w2, n_bigram,
+             floor((greatest(n_bigram - 0.75, 0.0) / c1
+                    + 0.75 * n1fwd / c1 * (nback / ty.T)) * 1000000 + 0.5)
+               / 1000000.0 AS p_kn
+      FROM c12 JOIN by1 ON c12.w1 = by1.w1
+               JOIN by2 ON c12.w2 = by2.w2
+               CROSS JOIN ty)
+    SELECT CAST(row_number() OVER (ORDER BY n_bigram DESC, w1, w2) AS INTEGER)
+             AS rank,
+           w1, w2, n_bigram, p_kn
+    FROM scored
+    ORDER BY n_bigram DESC, w1, w2 LIMIT 50
+"""
+
+
 def q_shard_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-shard balance audit: assign every document to one of 64
     shards by a stable content-independent hash (md5 of doc_id — the
@@ -425,6 +636,23 @@ def q_shard_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             round_det(F.col("n_docs") * 64 / F.col("_n"), 6).alias("skew_ratio"),
         )
     )
+
+
+# FULL twin of q_shard_balance_report (md5-digit shard key, the
+# hash_sample device — engine-portable unlike xxhash64).
+TWINS["shard_balance_report"] = """
+    WITH t AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
+    shards AS (
+      SELECT CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
+                  AS BIGINT) % 64 AS shard,
+             n_chars
+      FROM documents)
+    SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(n_chars) AS BIGINT) AS total_chars,
+           floor(count(*) * 64 / t.n * 1000000 + 0.5) / 1000000.0 AS skew_ratio
+    FROM shards CROSS JOIN t
+    GROUP BY shard, t.n
+"""
 
 
 def q_ngram_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -487,6 +715,29 @@ def q_ngram_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_ngram_novelty_curve (positional token 8-grams; DuckDB
+# range is end-exclusive, slices inclusive — same mapping as the
+# duplicate_ngram_spans twin).
+TWINS["ngram_novelty_curve"] = f"""
+    WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+    pos AS (SELECT doc_id,
+                   unnest(list_transform(range(1, len(t) - 6),
+                          i -> array_to_string(t[i:i+7], ' '))) AS gram
+            FROM toks WHERE len(t) >= 8),
+    fd AS (SELECT gram, min(doc_id) AS first_doc FROM pos GROUP BY gram),
+    pd AS (SELECT p.doc_id, CAST(count(*) AS BIGINT) AS n_positions,
+                  CAST(sum(CASE WHEN f.first_doc = p.doc_id THEN 1 ELSE 0 END)
+                       AS BIGINT) AS n_novel
+           FROM pos p JOIN fd f USING (gram) GROUP BY p.doc_id)
+    SELECT d.doc_id,
+           CAST(coalesce(pd.n_positions, 0) AS BIGINT) AS n_positions,
+           CAST(coalesce(pd.n_novel, 0) AS BIGINT) AS n_novel_positions,
+           floor(pd.n_novel / pd.n_positions * 1000000 + 0.5) / 1000000.0
+             AS novelty_ratio
+    FROM documents d LEFT JOIN pd USING (doc_id)
+"""
+
+
 def q_ccnet_quality_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style per-source quality tiers (Wenzek et al. 2020 §4.3:
     split each language's crawl into head/middle/tail by LM
@@ -529,6 +780,38 @@ def q_ccnet_quality_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
             "tier_mean_surprisal"
         ),
     )
+
+
+# FULL twin of q_ccnet_quality_tiers: replays the unigram_surprisal
+# nano-nat grid (identical to the perplexity_proxy twin), snaps the
+# per-doc mean to integer MICRO-nats, ntiles within source, and
+# aggregates exact integer sums per tier.
+TWINS["ccnet_quality_tiers"] = f"""
+    WITH tok AS (SELECT doc_id, unnest({_TOKS}) AS token FROM documents),
+    lm AS (SELECT token, count(*) AS tf FROM tok GROUP BY token),
+    t AS (SELECT CAST(sum(tf) AS DOUBLE) AS total FROM lm),
+    s9 AS (SELECT token,
+                  CAST(floor(-ln(tf / t.total) * 1000000000 + 0.5) AS BIGINT) AS s9
+           FROM lm CROSS JOIN t),
+    per_doc AS (SELECT tok.doc_id,
+                       CAST(count(*) AS BIGINT) AS n_tokens,
+                       CAST(sum(s9.s9) AS BIGINT) AS sum9
+                FROM tok JOIN s9 USING (token) GROUP BY tok.doc_id),
+    m6 AS (SELECT doc_id,
+                  CAST(floor(
+                    (floor(sum9 / (n_tokens * 1000000000.0) * 1000000 + 0.5)
+                     / 1000000.0) * 1000000 + 0.5) AS BIGINT) AS m6
+           FROM per_doc),
+    tiers AS (SELECT d.source, m6.m6,
+                     CAST(ntile(3) OVER (PARTITION BY d.source
+                                         ORDER BY m6.m6, m6.doc_id) AS INTEGER)
+                       AS tier
+              FROM m6 JOIN documents d USING (doc_id))
+    SELECT source, tier, CAST(count(*) AS BIGINT) AS n_docs,
+           floor(sum(m6) / (count(*) * 1000000.0) * 1000000 + 0.5) / 1000000.0
+             AS tier_mean_surprisal
+    FROM tiers GROUP BY source, tier
+"""
 
 
 def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -608,6 +891,42 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_ann_pq_topk: identical subspace slicing, identical
+# left-fold squared-distance tree snapped at nano-grid, identical
+# (d9, cid) argmin codes, exact BIGINT ADC sums.
+TWINS["ann_pq_topk"] = """
+    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+    sub AS (SELECT vec_id, CAST(r.s AS INTEGER) AS s,
+                   e[r.s*16+1 : r.s*16+16] AS sv
+            FROM v, unnest(range(0, 4)) AS r(s)),
+    cent AS (SELECT CAST(vec_id AS INTEGER) AS cid, s, sv AS cv
+             FROM sub WHERE vec_id < 16),
+    d AS (SELECT sub.vec_id, sub.s, cent.cid,
+                 CAST(floor(list_reduce(
+                   list_transform(range(1, 17),
+                     i -> (sub.sv[i] - cent.cv[i]) * (sub.sv[i] - cent.cv[i])),
+                   (acc, x) -> acc + x) * 1000000000 + 0.5) AS BIGINT) AS d9
+          FROM sub JOIN cent USING (s)),
+    codes AS (SELECT vec_id, s, cid FROM (
+                SELECT *, row_number() OVER (PARTITION BY vec_id, s
+                                             ORDER BY d9, cid) AS rn
+                FROM d) WHERE rn = 1),
+    lut AS (SELECT vec_id AS query_id, s, cid, d9 AS qd9
+            FROM d WHERE vec_id < 10),
+    scored AS (SELECT l.query_id, c.vec_id,
+                      CAST(sum(l.qd9) AS BIGINT) AS adc_d9
+               FROM codes c JOIN lut l USING (s, cid)
+               WHERE c.vec_id <> l.query_id
+               GROUP BY l.query_id, c.vec_id)
+    SELECT query_id,
+           CAST(row_number() OVER (PARTITION BY query_id
+                                   ORDER BY adc_d9, vec_id) AS INTEGER) AS rank,
+           vec_id, adc_d9
+    FROM scored
+    QUALIFY rank <= 5
+"""
+
+
 def q_pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the PQ/ADC tier against EXACT full-dimension squared
     L2 distance, per query — the compression-loss monitor a PQ
@@ -666,6 +985,53 @@ def q_pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_pq_recall_report: the PQ pipeline CTEs (identical to
+# the ann_pq_topk twin) composed with an exact full-dimension squared-
+# L2 top-5 — the same verified-composition device as ann_recall_report.
+TWINS["pq_recall_report"] = """
+    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+    sub AS (SELECT vec_id, CAST(r.s AS INTEGER) AS s,
+                   e[r.s*16+1 : r.s*16+16] AS sv
+            FROM v, unnest(range(0, 4)) AS r(s)),
+    cent AS (SELECT CAST(vec_id AS INTEGER) AS cid, s, sv AS cv
+             FROM sub WHERE vec_id < 16),
+    d AS (SELECT sub.vec_id, sub.s, cent.cid,
+                 CAST(floor(list_reduce(
+                   list_transform(range(1, 17),
+                     i -> (sub.sv[i] - cent.cv[i]) * (sub.sv[i] - cent.cv[i])),
+                   (acc, x) -> acc + x) * 1000000000 + 0.5) AS BIGINT) AS d9
+          FROM sub JOIN cent USING (s)),
+    codes AS (SELECT vec_id, s, cid FROM (
+                SELECT *, row_number() OVER (PARTITION BY vec_id, s
+                                             ORDER BY d9, cid) AS rn
+                FROM d) WHERE rn = 1),
+    lut AS (SELECT vec_id AS query_id, s, cid, d9 AS qd9
+            FROM d WHERE vec_id < 10),
+    pq AS (SELECT query_id, vec_id FROM (
+             SELECT l.query_id, c.vec_id,
+                    row_number() OVER (PARTITION BY l.query_id
+                                       ORDER BY sum(l.qd9), c.vec_id) AS rn
+             FROM codes c JOIN lut l USING (s, cid)
+             WHERE c.vec_id <> l.query_id
+             GROUP BY l.query_id, c.vec_id) WHERE rn <= 5),
+    exact AS (SELECT query_id, vec_id FROM (
+                SELECT q.vec_id AS query_id, c.vec_id,
+                       row_number() OVER (PARTITION BY q.vec_id ORDER BY
+                         CAST(floor(list_reduce(
+                           list_transform(range(1, len(c.e) + 1),
+                             i -> (c.e[i] - q.e[i]) * (c.e[i] - q.e[i])),
+                           (acc, x) -> acc + x) * 1000000000 + 0.5) AS BIGINT),
+                         c.vec_id) AS rn
+                FROM v c CROSS JOIN v q
+                WHERE q.vec_id < 10 AND c.vec_id <> q.vec_id) WHERE rn <= 5)
+    SELECT e.query_id,
+           CAST(count(p.vec_id) AS BIGINT) AS n_hits,
+           floor(count(p.vec_id) / 5.0 * 1000000 + 0.5) / 1000000.0 AS recall_at_5
+    FROM exact e LEFT JOIN pq p USING (query_id, vec_id)
+    GROUP BY e.query_id
+"""
+
+
 def q_negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """word2vec negative-sampling distribution (Mikolov et al. 2013
     §2.2: draw negatives ∝ count(w)^{3/4} — the flattening that keeps
@@ -714,6 +1080,27 @@ def q_negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_negative_sampling_table: count^{3/4} on the two-level
+# grid, full-vocabulary normalizer, top-50 by (count DESC, token).
+TWINS["negative_sampling_table"] = f"""
+    WITH tok AS (SELECT unnest({_TOKS}) AS token FROM documents),
+    freq AS (SELECT token, CAST(count(*) AS BIGINT) AS n FROM tok GROUP BY token),
+    w AS (SELECT token, n,
+                 CAST(floor(
+                   exp(floor(3 * floor(ln(n) * 1000000000 + 0.5) / 4)
+                       / 1000000000.0) * 1000000 + 0.5) AS BIGINT) AS wgt
+          FROM freq),
+    s AS (SELECT CAST(sum(wgt) AS BIGINT) AS wsum FROM w),
+    top AS (SELECT token, n, wgt,
+                   CAST(row_number() OVER (ORDER BY n DESC, token) AS INTEGER)
+                     AS rank
+            FROM w ORDER BY n DESC, token LIMIT 50)
+    SELECT rank, token, n AS n_occurrences,
+           floor(wgt / s.wsum * 1000000 + 0.5) / 1000000.0 AS neg_sampling_share
+    FROM top CROSS JOIN s
+"""
+
+
 def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer fertility by language: BPE-ish tokens per whitespace
     word (the cross-lingual cost metric every multilingual tokenizer
@@ -744,6 +1131,25 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
             "chars_per_token"
         ),
     )
+
+
+# FULL twin of q_tokenizer_fertility (regex identical to the
+# bpe_token_counts twin; RE2 and Java agree on this alternation).
+TWINS["tokenizer_fertility"] = f"""
+    SELECT lang,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(len({_TOKS})) AS BIGINT) AS n_ws_tokens,
+           CAST(sum(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')))
+             AS BIGINT) AS n_bpeish_tokens,
+           -- NULLIF mirrors Spark's try_divide (ADVICE r7): empty or
+           -- whitespace-only docs can zero either token denominator.
+           floor(sum(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')))
+                 / NULLIF(sum(len({_TOKS})), 0) * 1000000 + 0.5) / 1000000.0 AS fertility,
+           floor(sum(n_chars)
+                 / NULLIF(sum(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))), 0)
+                 * 1000000 + 0.5) / 1000000.0 AS chars_per_token
+    FROM documents GROUP BY lang
+"""
 
 
 def _daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -805,6 +1211,37 @@ def q_daily_trend_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_daily_trend_by_type: exact BIGINT OLS sums over
+# integer (day_index, count) pairs; identical division trees.
+TWINS["daily_trend_by_type"] = """
+    WITH daily AS (
+      SELECT event_type,
+             CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS day,
+             CAST(count(*) AS BIGINT) AS y
+      FROM events GROUP BY 1, 2),
+    b AS (SELECT min(day) AS d0 FROM daily),
+    g AS (SELECT event_type, CAST(day - b.d0 AS BIGINT) AS x, y
+          FROM daily CROSS JOIN b),
+    s AS (SELECT event_type,
+                 CAST(count(*) AS BIGINT) AS n_days,
+                 CAST(sum(x) AS BIGINT) AS sx,
+                 CAST(sum(y) AS BIGINT) AS sy,
+                 CAST(sum(x * x) AS BIGINT) AS sxx,
+                 CAST(sum(x * y) AS BIGINT) AS sxy
+          FROM g GROUP BY event_type)
+    -- NULLIF mirrors Spark's try_divide (ADVICE r7): a single-day
+    -- event type zeroes the OLS denominator and must yield NULL on
+    -- both engines — relying on DuckDB's integer x/0 -> NULL is
+    -- version-dependent (same guard as the traffic_burstiness twin).
+    SELECT event_type, n_days,
+           floor((n_days * sxy - sx * sy) / NULLIF(n_days * sxx - sx * sx, 0)
+                 * 1000000 + 0.5) / 1000000.0 AS slope_per_day,
+           floor((sy - (n_days * sxy - sx * sy) / NULLIF(n_days * sxx - sx * sx, 0) * sx)
+                 / n_days * 1000000 + 0.5) / 1000000.0 AS intercept
+    FROM s
+"""
+
+
 def q_events_mad_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust anomaly detection on daily traffic: per event type, the
     EXACT median and MAD (median absolute deviation) of daily counts,
@@ -862,6 +1299,48 @@ def q_events_mad_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_events_mad_anomaly: both medians via middle-rank
+# selection (the exact_median_by_group device) — every value on the
+# exact .5 grid, no interpolation semantics, no rounding needed.
+TWINS["events_mad_anomaly"] = """
+    WITH daily AS (
+      SELECT event_type,
+             CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS day,
+             CAST(count(*) AS BIGINT) AS y
+      FROM events GROUP BY 1, 2),
+    r1 AS (SELECT event_type, y,
+                  row_number() OVER (PARTITION BY event_type ORDER BY y, day) AS rn,
+                  count(*) OVER (PARTITION BY event_type) AS n
+           FROM daily),
+    med AS (SELECT event_type, (min(y) + max(y)) / 2 AS med,
+                   CAST(max(n) AS BIGINT) AS n_days
+            FROM r1
+            WHERE rn = CAST(floor((n + 1) / 2) AS BIGINT)
+               OR rn = CAST(floor((n + 2) / 2) AS BIGINT)
+            GROUP BY event_type),
+    dev AS (SELECT d.event_type, d.day, d.y, abs(d.y - m.med) AS dv
+            FROM daily d JOIN med m USING (event_type)),
+    r2 AS (SELECT event_type, dv,
+                  row_number() OVER (PARTITION BY event_type ORDER BY dv, day) AS rn,
+                  count(*) OVER (PARTITION BY event_type) AS n
+           FROM dev),
+    mad AS (SELECT event_type, (min(dv) + max(dv)) / 2 AS mad
+            FROM r2
+            WHERE rn = CAST(floor((n + 1) / 2) AS BIGINT)
+               OR rn = CAST(floor((n + 2) / 2) AS BIGINT)
+            GROUP BY event_type)
+    SELECT d.event_type,
+           CAST(count(*) AS BIGINT) AS n_days,
+           min(m.med) AS median_daily,
+           min(a.mad) AS mad_daily,
+           CAST(sum(CASE WHEN d.dv > 3 * a.mad THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_anomaly_days,
+           max(d.dv) AS max_abs_dev
+    FROM dev d JOIN med m USING (event_type) JOIN mad a USING (event_type)
+    GROUP BY d.event_type
+"""
+
+
 def q_user_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Longest consecutive-day activity streak per user — the classic
     gaps-and-islands shape (island key = day − dense_rank over the
@@ -908,6 +1387,33 @@ def q_user_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_user_activity_streaks (gaps-and-islands: island key =
+# day - row_number over the user's distinct days).
+TWINS["user_activity_streaks"] = """
+    WITH user_days AS (
+      SELECT DISTINCT user_id,
+             CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS day
+      FROM events),
+    islands AS (SELECT user_id, day,
+                       day - row_number() OVER (PARTITION BY user_id
+                                                ORDER BY day) AS isl
+                FROM user_days),
+    streaks AS (SELECT user_id, isl,
+                       CAST(count(*) AS BIGINT) AS streak_days,
+                       CAST(min(day) AS BIGINT) AS streak_start_day
+                FROM islands GROUP BY user_id, isl),
+    best AS (SELECT user_id, streak_days, streak_start_day FROM (
+               SELECT *, row_number() OVER (PARTITION BY user_id
+                        ORDER BY streak_days DESC, streak_start_day) AS rn
+               FROM streaks) WHERE rn = 1)
+    SELECT CAST(row_number() OVER (ORDER BY streak_days DESC, user_id)
+                AS INTEGER) AS rank,
+           user_id, streak_days, streak_start_day
+    FROM best
+    ORDER BY streak_days DESC, user_id LIMIT 100
+"""
+
+
 def q_traffic_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Traffic burstiness per event type: the Fano factor
     (variance/mean of daily counts; 1 = Poisson, >1 = bursty) — the
@@ -939,7 +1445,30 @@ def q_traffic_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
+# FULL twin of q_traffic_burstiness: exact BIGINT moment sums,
+# identical ratio trees. NULLIF guards the zero denominator explicitly
+# — relying on DuckDB's x/0→NULL is version-dependent (newer DuckDB's
+# ieee_floating_point_ops changes double semantics), and Spark's
+# try_divide yields NULL; the guard keeps both engines NULL forever.
+TWINS["traffic_burstiness"] = """
+    WITH daily AS (
+      SELECT event_type,
+             CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS day,
+             CAST(count(*) AS BIGINT) AS y
+      FROM events GROUP BY 1, 2),
+    s AS (SELECT event_type,
+                 CAST(count(*) AS BIGINT) AS n_days,
+                 CAST(sum(y) AS BIGINT) AS sy,
+                 CAST(sum(y * y) AS BIGINT) AS syy
+          FROM daily GROUP BY event_type)
+    SELECT event_type, n_days,
+           floor(sy / n_days * 1000000 + 0.5) / 1000000.0 AS mean_daily,
+           floor((n_days * syy - sy * sy) / nullif(n_days * (n_days - 1), 0)
+                 * 1000000 + 0.5) / 1000000.0 AS var_daily,
+           floor((n_days * syy - sy * sy) / nullif(n_days * (n_days - 1), 0)
+                 / (sy / n_days) * 1000000 + 0.5) / 1000000.0 AS fano_factor
+    FROM s
+"""
 
 
 def q_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1022,6 +1551,50 @@ def q_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_rake_keywords: same stopword delimiter set (imported
+# from the engine-neutral constants module so the two can never
+# drift), same island keys
+# (pos offsets differ by a constant 1 — 0- vs 1-based — which shifts
+# every island key uniformly and changes nothing), same 1e-6 integer
+# word-score grid making the per-phrase sum order-free.
+_STOPS_SQL = ", ".join(f"'{w}'" for w in RAKE_STOPWORDS)
+
+
+TWINS["rake_keywords"] = f"""
+    WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+    pos AS (SELECT doc_id, CAST(r.i AS BIGINT) AS pos, t[r.i] AS token
+            FROM toks, unnest(range(1, len(t) + 1)) AS r(i)),
+    words AS (SELECT * FROM pos
+              WHERE token NOT IN ({_STOPS_SQL}) AND token <> ''),
+    member AS (SELECT doc_id, pos, token,
+                      pos - row_number() OVER (PARTITION BY doc_id
+                                               ORDER BY pos) AS isl
+               FROM words),
+    plen AS (SELECT doc_id, isl, CAST(count(*) AS BIGINT) AS plen
+             FROM member GROUP BY doc_id, isl),
+    staged AS (SELECT m.doc_id, m.isl, m.pos, m.token, p.plen
+               FROM member m JOIN plen p USING (doc_id, isl)),
+    stats AS (SELECT token, CAST(count(*) AS BIGINT) AS freq,
+                     CAST(sum(plen) AS BIGINT) AS degree
+              FROM staged GROUP BY token),
+    sw AS (SELECT s.doc_id, s.isl, s.pos, s.token,
+                  CAST(floor(st.degree / st.freq * 1000000 + 0.5) AS BIGINT) AS w6
+           FROM staged s JOIN stats st USING (token)),
+    phr AS (SELECT doc_id, isl,
+                   array_to_string(list(token ORDER BY pos), ' ') AS phrase,
+                   CAST(count(*) AS BIGINT) AS n_words,
+                   CAST(sum(w6) AS BIGINT) AS score6
+            FROM sw GROUP BY doc_id, isl),
+    agg AS (SELECT phrase, CAST(max(n_words) AS BIGINT) AS n_words,
+                   CAST(count(*) AS BIGINT) AS n_occurrences,
+                   max(score6) AS s6
+            FROM phr GROUP BY phrase)
+    SELECT CAST(row_number() OVER (ORDER BY s6 DESC, phrase) AS INTEGER) AS rank,
+           phrase, n_words, n_occurrences, s6 / 1000000.0 AS rake_score
+    FROM agg ORDER BY s6 DESC, phrase LIMIT 30
+"""
+
+
 def q_media_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GRADED coverage for the multimodal 1→N frame-sampling path:
     documents as binary media → mapInPandas frame chunker
@@ -1051,6 +1624,31 @@ def q_media_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("first_frame_bytes"),
     )
+
+
+# FULL twin of q_media_frame_stats: replays the mapInPandas chunk
+# schedule (n = min(8, max(1, floor(bytes/64))), chunk i = bytes
+# [64i, 64i+64)). DuckDB has no BLOB substring/md5, so the replay
+# slices the VARCHAR — exact byte semantics BECAUSE the fixture text
+# is pure ASCII (verified: octet_length(encode(text)) = length(text)
+# for every doc at every SF; a non-ASCII corpus would need a
+# byte-level replay and would surface immediately as a grade
+# mismatch, not a silent pass).
+TWINS["media_frame_stats"] = """
+    WITH m AS (SELECT doc_id AS media_id, text,
+                      CAST(length(text) AS BIGINT) AS n_bytes
+               FROM documents),
+    fr AS (SELECT media_id, CAST(r.i AS INTEGER) AS frame_idx,
+                  substring(text, CAST(r.i * 64 + 1 AS BIGINT), 64) AS chunk
+           FROM m, unnest(range(0, least(8, greatest(1, n_bytes // 64)))) AS r(i))
+    SELECT media_id,
+           CAST(count(*) AS BIGINT) AS n_frames,
+           CAST(sum(length(chunk)) AS BIGINT) AS total_frame_bytes,
+           CAST(count(DISTINCT chunk) AS BIGINT) AS n_distinct_frames,
+           CAST(min(CASE WHEN frame_idx = 0 THEN length(chunk) END)
+                AS BIGINT) AS first_frame_bytes
+    FROM fr GROUP BY media_id
+"""
 
 
 def q_session_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1145,6 +1743,39 @@ def q_session_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_session_interval_overlap — the TRANSPARENCY device:
+# the oracle does the NAIVE non-equi interval self-join; the Spark side
+# does bucket decomposition + equi-join + canonical-bucket dedup. Equal
+# results prove the decomposition changes the plan, not the answer.
+TWINS["session_interval_overlap"] = """
+    WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
+    lagd AS (SELECT *, lag(us) OVER (PARTITION BY user_id
+                                     ORDER BY us, event_id) AS prev FROM e),
+    flagged AS (SELECT *, CASE WHEN prev IS NULL OR us - prev > 1800000000
+                               THEN 1 ELSE 0 END AS new_s FROM lagd),
+    sess AS (SELECT *, CAST(sum(new_s) OVER (
+               PARTITION BY user_id ORDER BY us, event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+               AS session_id FROM flagged),
+    iv AS (SELECT user_id, session_id,
+                  CAST(min(us) AS BIGINT) AS start_us,
+                  CAST(max(us) AS BIGINT) AS end_us
+           FROM sess GROUP BY user_id, session_id),
+    pairs AS (SELECT a.user_id AS user_a, a.session_id AS session_a,
+                     b.user_id AS user_b, b.session_id AS session_b,
+                     CAST(least(a.end_us, b.end_us)
+                          - greatest(a.start_us, b.start_us) AS BIGINT)
+                       AS overlap_us
+              FROM iv a JOIN iv b
+                ON a.user_id < b.user_id
+               AND a.start_us <= b.end_us AND b.start_us <= a.end_us)
+    SELECT CAST(row_number() OVER (ORDER BY overlap_us DESC, user_a,
+                session_a, user_b, session_b) AS INTEGER) AS rank,
+           user_a, session_a, user_b, session_b, overlap_us
+    FROM pairs
+    ORDER BY overlap_us DESC, user_a, session_a, user_b, session_b
+    LIMIT 100
+"""
 
 
 def q_benford_price_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1205,6 +1836,45 @@ def q_benford_price_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_benford_price_audit: same verbatim float constants
+# (imported from the Spark side so they cannot drift), same fixed
+# chi-square tree. First digit via the string head of the decimal
+# rendering — identical for the leading digit in any shortest-round-
+# trip rendering of values >= 1.
+# CAST each literal to DOUBLE: DuckDB would otherwise bind them as
+# DECIMAL(18,17) — which both overflows the grid multiply and departs
+# from the IEEE-double tree Spark evaluates.
+_BENFORD_CASE = "CASE digit " + " ".join(
+    f"WHEN {d} THEN CAST({p!r} AS DOUBLE)" for d, p in enumerate(BENFORD_P, start=1)
+) + " END"
+
+
+TWINS["benford_price_audit"] = f"""
+    WITH observed AS (
+      SELECT CAST(substring(CAST(o_totalprice AS VARCHAR), 1, 1) AS INTEGER)
+               AS digit,
+             CAST(count(*) AS BIGINT) AS n_obs
+      FROM orders WHERE o_totalprice >= 1 GROUP BY 1),
+    counts AS (
+      SELECT CAST(d.digit AS INTEGER) AS digit,
+             CAST(coalesce(o.n_obs, 0) AS BIGINT) AS n_obs
+      FROM (SELECT unnest(range(1, 10)) AS digit) d
+      LEFT JOIN observed o ON o.digit = d.digit),
+    t AS (SELECT CAST(sum(n_obs) AS BIGINT) AS n FROM counts)
+    -- NULLIF mirrors Spark's try_divide (ADVICE r7): an orders fixture
+    -- with no rows >= 1 gives n = 0 and must yield NULL shares on both
+    -- engines, never an engine-specific divide-by-zero behavior.
+    SELECT digit, n_obs,
+           floor(n_obs / NULLIF(t.n, 0) * 1000000 + 0.5) / 1000000.0 AS obs_share,
+           floor(({_BENFORD_CASE}) * 1000000 + 0.5) / 1000000.0 AS benford_share,
+           floor((n_obs - t.n * ({_BENFORD_CASE}))
+                 * (n_obs - t.n * ({_BENFORD_CASE}))
+                 / (NULLIF(t.n, 0) * ({_BENFORD_CASE})) * 1000000 + 0.5) / 1000000.0
+             AS chi2_contrib
+    FROM counts CROSS JOIN t
+"""
+
+
 def q_dedup_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster SIZE distribution — the one-page summary of a
     dedup run (how much of the corpus sits in 2-doc pairs vs big
@@ -1238,6 +1908,25 @@ def q_dedup_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("doc_share"),
         )
     )
+
+
+# FULL twin of q_dedup_cluster_histogram: composes the verified
+# recursive-CTE connected-components twin (read from qdefs_embeddings'
+# TWINS — one definition, zero drift) as a derived table, then the
+# identical histogram rollup.
+TWINS["dedup_cluster_histogram"] = f"""
+    WITH comp AS ({qdefs_embeddings.TWINS["dedup_components"]}),
+    clusters AS (SELECT component_id, CAST(count(*) AS BIGINT) AS cluster_size
+                 FROM comp GROUP BY component_id),
+    hist AS (SELECT cluster_size, CAST(count(*) AS BIGINT) AS n_clusters
+             FROM clusters GROUP BY cluster_size),
+    t AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM comp)
+    SELECT cluster_size, n_clusters,
+           CAST(cluster_size * n_clusters AS BIGINT) AS n_docs,
+           floor(cluster_size * n_clusters / t.n_docs * 1000000 + 0.5)
+             / 1000000.0 AS doc_share
+    FROM hist CROSS JOIN t
+"""
 
 
 def q_bigram_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1291,6 +1980,35 @@ def q_bigram_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_bigram_entropy_rate: exact-integer term spine
+# (c12 · nano-nat ln), 128-bit exact sum (DuckDB sums BIGINT into
+# HUGEINT), identical final divisions and grids.
+TWINS["bigram_entropy_rate"] = f"""
+    WITH toks AS (SELECT {_TOKS} AS t FROM documents
+                  WHERE len({_TOKS}) >= 2),
+    bg AS (SELECT t[i] AS w1, t[i+1] AS w2
+           FROM toks, unnest(range(1, len(t))) AS r(i)),
+    c12 AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12
+            FROM bg GROUP BY w1, w2),
+    c1 AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1 FROM c12 GROUP BY w1),
+    terms AS (SELECT c12.c12,
+                     c12.c12 * CAST(floor(ln(c12.c12 / c1.c1) * 1000000000 + 0.5)
+                                    AS BIGINT) AS term9
+              FROM c12 JOIN c1 USING (w1)),
+    agg AS (SELECT CAST(sum(c12) AS BIGINT) AS n_bigrams,
+                   CAST(count(*) AS BIGINT) AS n_bigram_types,
+                   sum(term9) AS sum9
+            FROM terms)
+    SELECT n_bigrams, n_bigram_types,
+           floor(-(CAST(sum9 AS DOUBLE)) / (n_bigrams * 1000000000.0)
+                 * 1000000 + 0.5) / 1000000.0 AS entropy_nats,
+           floor(exp(floor(-(CAST(sum9 AS DOUBLE)) / (n_bigrams * 1000000000.0)
+                           * 1000000 + 0.5) / 1000000.0) * 100 + 0.5) / 100.0
+             AS bigram_perplexity
+    FROM agg
+"""
+
+
 def q_lexical_diversity_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lexical diversity per source: type-token ratio and Guiraud's
     root TTR (types/√tokens — the length-corrected variant, Guiraud
@@ -1313,6 +2031,21 @@ def q_lexical_diversity_by_source(spark: SparkSession, sf_dir: str) -> DataFrame
         round_det(F.count("*") / F.sum("_n"), 6).alias("ttr"),
         round_det(F.count("*") / F.sqrt(F.sum("_n")), 6).alias("root_ttr"),
     )
+
+
+# FULL twin of q_lexical_diversity_by_source (sqrt is IEEE-correctly
+# rounded on both engines — no grid needed pre-snap).
+TWINS["lexical_diversity_by_source"] = f"""
+    WITH tok AS (SELECT source, unnest({_TOKS}) AS token FROM documents),
+    pt AS (SELECT source, token, CAST(count(*) AS BIGINT) AS n
+           FROM tok GROUP BY source, token)
+    SELECT source,
+           CAST(sum(n) AS BIGINT) AS n_tokens,
+           CAST(count(*) AS BIGINT) AS n_types,
+           floor(count(*) / sum(n) * 1000000 + 0.5) / 1000000.0 AS ttr,
+           floor(count(*) / sqrt(sum(n)) * 1000000 + 0.5) / 1000000.0 AS root_ttr
+    FROM pt GROUP BY source
+"""
 
 
 def q_char_entropy_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1364,6 +2097,31 @@ def q_char_entropy_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_char_entropy_per_doc: exact (doc, char) counts, the
+# same nano-nat term spine, the same verbatim 1/ln(2) literal
+# (CAST to DOUBLE — the Benford DECIMAL-binding lesson).
+TWINS["char_entropy_per_doc"] = """
+    WITH chars AS (SELECT doc_id, unnest(string_split(text, '')) AS ch
+                   FROM documents),
+    cc AS (SELECT doc_id, ch, CAST(count(*) AS BIGINT) AS c
+           FROM chars WHERE ch <> '' GROUP BY doc_id, ch),
+    staged AS (SELECT doc_id, c,
+                      CAST(sum(c) OVER (PARTITION BY doc_id) AS BIGINT) AS n
+               FROM cc),
+    pd AS (SELECT doc_id,
+                  CAST(max(n) AS BIGINT) AS n_chars_counted,
+                  CAST(count(*) AS BIGINT) AS n_distinct_chars,
+                  CAST(sum(c * CAST(floor(ln(c / n) * 1000000000 + 0.5)
+                                    AS BIGINT)) AS BIGINT) AS sum9
+           FROM staged GROUP BY doc_id)
+    SELECT doc_id, n_chars_counted, n_distinct_chars,
+           floor(-(CAST(sum9 AS DOUBLE)) / (n_chars_counted * 1000000000.0)
+                 * CAST(1.4426950408889634 AS DOUBLE) * 1000000 + 0.5)
+             / 1000000.0 AS char_entropy_bits
+    FROM pd
+"""
+
+
 def q_good_turing_unigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Good-Turing count-of-counts table with the adjusted counts
     r* = (r+1)·N_{r+1}/N_r — the smoother that reallocates probability
@@ -1403,6 +2161,20 @@ def q_good_turing_unigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("r_star"),
         )
     )
+
+
+TWINS["good_turing_unigrams"] = f"""
+        WITH toks AS (SELECT unnest({_TOKS}) AS token FROM documents),
+        freq AS (SELECT token, CAST(count(*) AS BIGINT) AS r FROM toks GROUP BY token),
+        cc AS (SELECT r, CAST(count(*) AS BIGINT) AS n_r FROM freq GROUP BY r),
+        gt AS (SELECT c1.r, c1.n_r,
+                      CASE WHEN c2.n_r IS NOT NULL THEN
+                        floor((c1.r + 1) * c2.n_r / c1.n_r * 1000000 + 0.5) / 1000000.0
+                      END AS r_star,
+                      row_number() OVER (ORDER BY c1.r) AS hr
+               FROM cc c1 LEFT JOIN cc c2 ON c2.r = c1.r + 1)
+        SELECT r, n_r, r_star FROM gt WHERE hr <= 30
+    """
 
 
 def q_weighted_median_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1448,6 +2220,24 @@ def q_weighted_median_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["weighted_median_by_group"] = """
+        WITH t AS (SELECT l_returnflag, l_extendedprice, l_orderkey, l_linenumber,
+                          CAST(l_quantity AS BIGINT) AS wt
+                   FROM lineitem),
+        c AS (SELECT l_returnflag, l_extendedprice,
+                     sum(wt) OVER (PARTITION BY l_returnflag
+                       ORDER BY l_extendedprice, l_orderkey, l_linenumber
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS gc,
+                     sum(wt) OVER (PARTITION BY l_returnflag) AS w
+              FROM t)
+        SELECT l_returnflag,
+               CAST(min(w) AS BIGINT) AS total_weight,
+               min(l_extendedprice) AS weighted_median_price
+        FROM c WHERE 2 * gc >= w
+        GROUP BY l_returnflag
+    """
+
+
 def q_trimmed_mean_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 10%-trimmed mean price per return flag at scale — the
     robust-location stat that discards floor(n/10) rows from EACH tail
@@ -1485,6 +2275,26 @@ def q_trimmed_mean_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("trimmed_mean_price"),
     )
+
+
+TWINS["trimmed_mean_by_group"] = """
+        WITH t AS (SELECT l_returnflag, l_extendedprice, l_orderkey, l_linenumber
+                   FROM lineitem),
+        r AS (SELECT l_returnflag, l_extendedprice,
+                     row_number() OVER (PARTITION BY l_returnflag
+                       ORDER BY l_extendedprice, l_orderkey, l_linenumber) AS rn,
+                     count(*) OVER (PARTITION BY l_returnflag) AS n_g
+              FROM t),
+        b AS (SELECT *, CAST(floor(n_g / 10) AS BIGINT) AS k FROM r)
+        SELECT l_returnflag,
+               CAST(max(n_g) AS BIGINT) AS n_total,
+               CAST(max(k) AS BIGINT) AS n_trimmed_each_side,
+               CAST(count(*) AS BIGINT) AS n_kept,
+               floor(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+                     / count(*) * 1000000 + 0.5) / 1000000.0 AS trimmed_mean_price
+        FROM b WHERE rn > k AND rn <= n_g - k
+        GROUP BY l_returnflag
+    """
 
 
 def q_dsir_selection_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1603,6 +2413,52 @@ def q_dsir_selection_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_dsir_selection_report (round 9, continued). The
+# importance-weight odds ratio (t+1)(R+B) / ((r+1)(T+B)) is a ratio of
+# exact HUGEINT products; its ln snaps to the nano-nat grid BEFORE the
+# per-document aggregate, so each document's log weight is an exact
+# integer sum and the top-100 cut is decided on integers with doc_id
+# tie-break. Bucket hash = the md5-prefix device (engine-portable).
+TWINS["dsir_selection_report"] = f"""
+    WITH toks AS (SELECT doc_id, lang, {_TOKS} AS t FROM documents),
+    uni AS (SELECT doc_id, lang, unnest(t) AS feat FROM toks),
+    bi AS (SELECT doc_id, lang, t[i] || ' ' || t[i+1] AS feat
+           FROM toks, unnest(range(1, len(t))) AS r(i)
+           WHERE len(t) >= 2),
+    feats AS (SELECT doc_id, lang,
+                     CAST(concat('0x', substr(md5(feat), 1, 15)) AS BIGINT)
+                       % 128 AS b
+              FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi)),
+    raw_b AS (SELECT b, CAST(count(*) AS BIGINT) AS r FROM feats GROUP BY b),
+    tgt_b AS (SELECT b, CAST(count(*) AS BIGINT) AS tt
+              FROM feats WHERE lang = 'en' GROUP BY b),
+    tot AS (SELECT (SELECT CAST(sum(r) AS BIGINT) FROM raw_b) AS R,
+                   (SELECT CAST(coalesce(sum(tt), 0) AS BIGINT) FROM tgt_b) AS T),
+    model AS (
+      SELECT raw_b.b,
+             CAST(floor(ln(CAST(CAST(coalesce(tgt_b.tt, 0) + 1 AS HUGEINT)
+                                * (tot.R + 128) AS DOUBLE)
+                           / CAST(CAST(raw_b.r + 1 AS HUGEINT)
+                                  * (tot.T + 128) AS DOUBLE))
+                        * 1000000000 + 0.5) AS BIGINT) AS lr9
+      FROM raw_b LEFT JOIN tgt_b ON raw_b.b = tgt_b.b CROSS JOIN tot),
+    per_doc AS (SELECT doc_id, b, CAST(count(*) AS BIGINT) AS c
+                FROM feats GROUP BY doc_id, b),
+    logw AS (SELECT doc_id,
+                    CAST(sum(c) AS BIGINT) AS n_feats,
+                    sum(CAST(c AS HUGEINT) * lr9) AS s
+             FROM per_doc JOIN model ON per_doc.b = model.b
+             GROUP BY doc_id)
+    SELECT CAST(row_number() OVER (ORDER BY s DESC, logw.doc_id) AS INTEGER)
+             AS rank,
+           logw.doc_id, d.lang, d.source, n_feats,
+           floor(CAST(s AS DOUBLE) / 1000000000.0 * 1000000 + 0.5)
+             / 1000000.0 AS logweight_nats
+    FROM logw JOIN documents d ON d.doc_id = logw.doc_id
+    ORDER BY s DESC, logw.doc_id LIMIT 100
+"""
+
+
 def q_frame_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-media FRAME-level exact dedup (round 12): the multimodal
     analog of document exact-dedup — identical sampled frames appearing
@@ -1643,6 +2499,29 @@ def q_frame_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_frame_dedup_report: replays the 64-byte stride / ≤8
+# frame chunk schedule on the source text (character slicing ==
+# byte slicing on the ASCII-safe fixtures, the media_frame_stats
+# convention) and hashes chunks with md5(VARCHAR) — equal to the Spark
+# side's hashlib.md5 over the UTF-8 chunk bytes.
+TWINS["frame_dedup_report"] = """
+    WITH m AS (SELECT doc_id AS media_id, text,
+                      CAST(length(text) AS BIGINT) AS n_bytes
+               FROM documents),
+    fr AS (SELECT media_id,
+                  substring(text, CAST(r.i * 64 + 1 AS BIGINT), 64) AS chunk
+           FROM m, unnest(range(0, least(8, greatest(1, n_bytes // 64)))) AS r(i))
+    SELECT md5(chunk) AS frame_md5,
+           CAST(count(*) AS BIGINT) AS n_occurrences,
+           CAST(count(DISTINCT media_id) AS BIGINT) AS n_media,
+           CAST(max(length(chunk)) AS BIGINT) AS frame_bytes
+    FROM fr GROUP BY md5(chunk)
+    HAVING count(*) > 1
+    ORDER BY n_occurrences DESC, n_media DESC, frame_md5
+    LIMIT 50
+"""
+
+
 def q_image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GRADED coverage for the REAL image-decode path: deterministic
     P6 PPM payloads built per document (multimodal.
@@ -1670,6 +2549,48 @@ def q_image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return decode_image_stats(documents_as_ppm_images(docs))
+
+
+# FULL twin of q_image_decode_stats: the Spark side PARSES deterministic
+# P6 PPM payloads byte-by-byte (real decode); this twin re-derives the
+# same stats arithmetically from the generating formula — width 16,
+# height clamp(len/48, 1, 32), raster = printable-ASCII-sanitized text
+# repeated and truncated to 48·h chars. Char==byte holds because the
+# sanitizer maps every non-[\x20-\x7E] codepoint to '?', so DuckDB's
+# md5(VARCHAR) (UTF-8 bytes) equals hashlib.md5 of the raster bytes and
+# ord() equals the byte value — the frame_dedup_report device, made
+# unconditional. Channel sums ride list_transform over stepped ranges
+# (no unnest fan-out; lists are ≤512 elements).
+TWINS["image_decode_stats"] = """
+    WITH m AS (
+      SELECT doc_id,
+             greatest(1, least(32, CAST(floor(length(t) / 48) AS INT))) AS h,
+             t
+      FROM (SELECT doc_id,
+                   regexp_replace(text, '[^\\x20-\\x7E]', '?', 'g') AS t
+            FROM documents)
+      WHERE length(t) > 0),
+    r AS (
+      SELECT doc_id, h,
+             substring(repeat(t, CAST(ceil(CAST(48 * h AS DOUBLE)
+                                           / length(t)) AS INT)),
+                       1, 48 * h) AS ps
+      FROM m)
+    SELECT doc_id AS media_id,
+           CAST(16 AS INT) AS width,
+           CAST(h AS INT) AS height,
+           CAST(list_aggregate(list_transform(range(0, 48 * h, 3),
+                i -> ord(substring(ps, CAST(i + 1 AS INT), 1))), 'sum')
+                AS BIGINT) AS sum_r,
+           CAST(list_aggregate(list_transform(range(1, 48 * h, 3),
+                i -> ord(substring(ps, CAST(i + 1 AS INT), 1))), 'sum')
+                AS BIGINT) AS sum_g,
+           CAST(list_aggregate(list_transform(range(2, 48 * h, 3),
+                i -> ord(substring(ps, CAST(i + 1 AS INT), 1))), 'sum')
+                AS BIGINT) AS sum_b,
+           md5(ps) AS raster_md5
+    FROM r
+"""
 
 
 def _bt_contests_and_fit(spark: SparkSession, sf_dir: str):
@@ -1789,6 +2710,83 @@ def q_preference_bt_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_preference_bt_strengths: identical contest derivation
+# (consecutive-event pairs per user in (us, event_id) order, higher
+# value wins, ties/same-type = no contest) and the identical 8 unrolled
+# MM rounds on the integer-micro grid — per-term (g·10¹²) // (s_i+s_j),
+# (W·10¹²) // D, then the mean-1 normalization (s'·NS·10⁶) // Σs' with
+# the same max(1,·) floors. DuckDB // == Spark DIV on non-negative
+# operands; every sum is an exact BIGINT sum, so the engines land on
+# identical micros.
+def _bt_oracle_cte() -> str:
+    """The shared Bradley-Terry WITH-block (contest derivation + the
+    unrolled integer-micro MM rounds), reused by BOTH preference twins:
+    preference_bt_strengths appends its strengths tail here, and
+    preference_dataset_manifest appends the per-pair
+    manifest tail — the curation_pack constituent-reuse discipline.
+    lagd carries user_id/event_id so the manifest's md5 split key can
+    be derived from the same frame."""
+    head = """
+    WITH e AS (SELECT user_id, event_id, event_type, value,
+                      epoch_us(ts) AS us FROM events),
+    lagd AS (SELECT user_id, event_id, event_type, value,
+                    lag(event_type) OVER w AS pt, lag(value) OVER w AS pv
+             FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
+    wl AS MATERIALIZED (
+      SELECT CASE WHEN value > pv THEN event_type ELSE pt END AS w,
+             CASE WHEN value > pv THEN pt ELSE event_type END AS l,
+             CAST(count(*) AS BIGINT) AS n
+      FROM lagd
+      WHERE pt IS NOT NULL AND value <> pv AND event_type <> pt
+      GROUP BY 1, 2),
+    games AS MATERIALIZED (
+      SELECT i, j, CAST(sum(n) AS BIGINT) AS g FROM (
+        SELECT w AS i, l AS j, n FROM wl
+        UNION ALL SELECT l AS i, w AS j, n FROM wl)
+      GROUP BY 1, 2),
+    types AS (SELECT DISTINCT i AS t FROM games),
+    wins AS MATERIALIZED (
+      SELECT t, CAST(coalesce(sum(n), 0) AS BIGINT) AS wi
+      FROM types LEFT JOIN wl ON wl.w = t GROUP BY t),
+    ns AS (SELECT CAST(count(*) AS BIGINT) AS ns FROM types),
+    s0 AS (SELECT t, CAST(1000000 AS BIGINT) AS s FROM types)"""
+    steps = []
+    for r in range(1, BT_ROUNDS + 1):
+        steps.append(f""",
+    d{r} AS MATERIALIZED (
+      SELECT g.i AS t,
+             CAST(sum((g.g * 1000000000000) // (si.s + sj.s)) AS BIGINT) AS d
+      FROM games g
+      JOIN s{r - 1} si ON si.t = g.i
+      JOIN s{r - 1} sj ON sj.t = g.j
+      GROUP BY g.i),
+    r{r} AS MATERIALIZED (
+      SELECT w.t,
+             greatest(CAST(1 AS BIGINT), (w.wi * 1000000000000) // d.d) AS sr
+      FROM wins w JOIN d{r} d ON d.t = w.t),
+    s{r} AS MATERIALIZED (
+      SELECT r.t,
+             greatest(CAST(1 AS BIGINT),
+                      (r.sr * ns.ns * 1000000)
+                        // (SELECT sum(sr) FROM r{r})) AS s
+      FROM r{r} r, ns)"""
+        )
+    return head + "".join(steps)
+
+
+def _bt_oracle_sql() -> str:
+    tail = f"""
+    SELECT s.t AS event_type, w.wi AS n_wins,
+           (SELECT CAST(sum(g) AS BIGINT) FROM games WHERE i = s.t) AS n_games,
+           floor(CAST(s.s AS DOUBLE) / 1000000.0 * 1000000 + 0.5) / 1000000.0
+             AS strength
+    FROM s{BT_ROUNDS} s JOIN wins w ON w.t = s.t"""
+    return _bt_oracle_cte() + tail
+
+
+TWINS["preference_bt_strengths"] = _bt_oracle_sql()
+
+
 def q_preference_dataset_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed RLHF/preference END-TO-END unit (contests → BT fit →
     per-pair preference-dataset manifest), graded as ONE query — the
@@ -1862,3 +2860,43 @@ def q_preference_dataset_manifest(spark: SparkSession, sf_dir: str) -> DataFrame
         )
     )
     return out
+
+
+# FULL twin of q_preference_dataset_manifest — the composed preference
+# unit. The contest derivation and the 8 unrolled integer-micro MM
+# rounds come from _bt_oracle_cte (the same WITH
+# block grading preference_bt_strengths), so a drifting constituent
+# twin fails both queries loudly; only the tail differs: per directed
+# (chosen, rejected) cell, pair counts, the last-two-md5-hex ~80/20
+# train/val split on the contest key user_id:event_id, and the
+# BIGINT-exact calibration micros (empirical n_pref·10⁶ // n_games vs
+# fitted s_w·10⁶ // (s_w + s_l), plus their signed gap).
+def _preference_manifest_oracle_sql() -> str:
+    return _bt_oracle_cte() + f""",
+    contests AS (
+      SELECT CASE WHEN value > pv THEN event_type ELSE pt END AS w,
+             CASE WHEN value > pv THEN pt ELSE event_type END AS l,
+             substring(md5(user_id || ':' || event_id), 31, 2) AS h2
+      FROM lagd
+      WHERE pt IS NOT NULL AND value <> pv AND event_type <> pt),
+    cells AS (
+      SELECT w, l, CAST(count(*) AS BIGINT) AS n_pref,
+             CAST(sum(CASE WHEN h2 < 'cc' THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_train
+      FROM contests GROUP BY 1, 2)
+    SELECT c.w AS chosen_type, c.l AS rejected_type,
+           c.n_pref, g.g AS n_games, c.n_train,
+           c.n_pref - c.n_train AS n_val,
+           (c.n_pref * 1000000) // g.g AS empirical_micro,
+           CAST((sw.s * 1000000) // (sw.s + sl.s) AS BIGINT) AS bt_micro,
+           CAST((c.n_pref * 1000000) // g.g
+             - (sw.s * 1000000) // (sw.s + sl.s) AS BIGINT) AS gap_micro,
+           floor(CAST(sw.s AS DOUBLE) / 1000000.0 * 1000000 + 0.5)
+             / 1000000.0 AS chosen_strength
+    FROM cells c
+    JOIN games g ON g.i = c.w AND g.j = c.l
+    JOIN s{BT_ROUNDS} sw ON sw.t = c.w
+    JOIN s{BT_ROUNDS} sl ON sl.t = c.l"""
+
+
+TWINS["preference_dataset_manifest"] = _preference_manifest_oracle_sql()

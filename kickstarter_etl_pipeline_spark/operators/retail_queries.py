@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from kickstarter_etl_pipeline_spark.constants import FS_PATTERN_SCORES
 from kickstarter_etl_pipeline_spark.operators import events as EV
 from kickstarter_etl_pipeline_spark.operators.ranking import (
     grouped_two_phase_rank,
@@ -11,6 +12,12 @@ from kickstarter_etl_pipeline_spark.operators.ranking import (
 )
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
+
+
+#: DuckDB twin of each query defined here, by query name: SQL that
+#: returns the same rows on the same parquet tables. Each entry sits
+#: after its ``q_<name>`` function; queries.oracle_sql() collects them.
+TWINS: dict[str, str] = {}
 
 
 def q_scd2_customer_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -66,6 +73,32 @@ def q_scd2_customer_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lead("valid_from").over(w_ep).isNull().alias("is_current"),
         "n_orders",
     )
+
+
+# FULL twin of q_scd2_customer_priority: identical gaps-and-islands
+# episode construction and half-open validity intervals.
+TWINS["scd2_customer_priority"] = """
+    WITH o AS (SELECT o_custkey, CAST(o_orderdate AS DATE) AS d, o_orderkey,
+                      o_orderpriority AS priority
+               FROM orders),
+    flagged AS (SELECT *,
+                       CASE WHEN lag(priority) OVER w IS NULL
+                             OR lag(priority) OVER w <> priority
+                            THEN 1 ELSE 0 END AS new_ep
+                FROM o WINDOW w AS (PARTITION BY o_custkey ORDER BY d, o_orderkey)),
+    eps0 AS (SELECT *, CAST(sum(new_ep) OVER (PARTITION BY o_custkey ORDER BY d, o_orderkey
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS ep
+             FROM flagged),
+    eps AS (SELECT o_custkey, ep AS version, max(priority) AS priority,
+                   min(d) AS valid_from, CAST(count(*) AS BIGINT) AS n_orders
+            FROM eps0 GROUP BY 1, 2)
+    SELECT o_custkey, version, priority,
+           strftime(valid_from, '%Y-%m-%d') AS valid_from,
+           strftime(lead(valid_from) OVER w2, '%Y-%m-%d') AS valid_to,
+           lead(valid_from) OVER w2 IS NULL AS is_current,
+           n_orders
+    FROM eps WINDOW w2 AS (PARTITION BY o_custkey ORDER BY version)
+"""
 
 
 def q_item_cooccurrence_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -127,6 +160,29 @@ def q_item_cooccurrence_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_item_cooccurrence_topk: exact counts, HUGEINT lift
+# products, total-order LIMIT boundary.
+TWINS["item_cooccurrence_topk"] = """
+    WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+    pairs AS (SELECT a.l_partkey AS id_a, b.l_partkey AS id_b,
+                     CAST(count(*) AS BIGINT) AS n_both
+              FROM li a JOIN li b
+                ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+              GROUP BY 1, 2),
+    freq AS (SELECT l_partkey, CAST(count(*) AS BIGINT) AS n FROM li GROUP BY 1),
+    tot AS (SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_ord FROM li)
+    SELECT id_a, id_b, n_both, fa.n AS n_a, fb.n AS n_b,
+           floor(CAST(CAST(n_both AS HUGEINT) * n_ord AS DOUBLE)
+                 / CAST(CAST(fa.n AS HUGEINT) * fb.n AS DOUBLE)
+                 * 1000000 + 0.5) / 1000000.0 AS lift
+    FROM pairs
+    JOIN freq fa ON fa.l_partkey = id_a
+    JOIN freq fb ON fb.l_partkey = id_b, tot
+    ORDER BY n_both DESC, id_a, id_b
+    LIMIT 50
+"""
+
+
 def q_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance fuzzy matching over the part-name vocabulary — the
     EDIT-distance member of the similarity family (set overlap =
@@ -173,6 +229,23 @@ def q_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("lev_dist") <= 5)
         .select("name_a", "name_b", "lev_dist", "n_parts_a", "n_parts_b")
     )
+
+
+# FULL twin of q_fuzzy_name_pairs: levenshtein() is the same integer DP
+# on both engines — no rounding device needed anywhere.
+TWINS["fuzzy_name_pairs"] = """
+    WITH names AS (SELECT p_name, CAST(count(*) AS BIGINT) AS n_parts,
+                          split_part(p_name, ' ', -1) AS block,
+                          length(p_name) AS len
+                   FROM part GROUP BY p_name)
+    SELECT a.p_name AS name_a, b.p_name AS name_b,
+           CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS lev_dist,
+           a.n_parts AS n_parts_a, b.n_parts AS n_parts_b
+    FROM names a JOIN names b
+      ON a.block = b.block AND a.p_name < b.p_name
+    WHERE abs(a.len - b.len) <= 5
+      AND levenshtein(a.p_name, b.p_name) <= 5
+"""
 
 
 def q_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -225,6 +298,32 @@ def q_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_cohort_ltv_curve: exact micro-unit cells, prefix sums
+# over the (cohort x age) week grid, exact floor-division per-user LTV.
+TWINS["cohort_ltv_curve"] = """
+    WITH base AS (SELECT user_id,
+                         CAST(floor(epoch_us(ts) / 604800000000.0) AS BIGINT) AS wk,
+                         CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vm
+                  FROM events),
+    first AS (SELECT user_id, min(wk) AS cohort FROM base GROUP BY user_id),
+    cells AS (SELECT cohort, wk - cohort AS age_weeks,
+                     CAST(sum(vm) AS HUGEINT) AS v,
+                     CAST(count(DISTINCT base.user_id) AS BIGINT) AS n_active_users
+              FROM base JOIN first USING (user_id)
+              GROUP BY 1, 2),
+    sizes AS (SELECT cohort, CAST(count(*) AS BIGINT) AS cohort_size
+              FROM first GROUP BY cohort),
+    cum AS (SELECT cohort, age_weeks, n_active_users,
+                   CAST(sum(v) OVER (PARTITION BY cohort ORDER BY age_weeks
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS HUGEINT) AS c
+            FROM cells)
+    SELECT cohort AS cohort_week, age_weeks, cohort_size, n_active_users,
+           CAST(c AS DOUBLE) / 1000000.0 AS cum_value,
+           CAST(c // cohort_size AS BIGINT) / 1000000.0 AS cum_value_per_user
+    FROM cum JOIN sizes USING (cohort)
+"""
+
+
 def q_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC / Pareto inventory classification of parts by revenue: rank
     parts by revenue descending, classify A while the cumulative share
@@ -260,6 +359,28 @@ def q_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rank"),
         abc.alias("abc_class"),
     )
+
+
+# FULL twin of q_abc_classification: exact cents, window rank + cum,
+# integer class boundaries.
+TWINS["abc_classification"] = """
+    WITH rev AS (SELECT l_partkey,
+                        CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS r
+                 FROM lineitem GROUP BY 1),
+    tot AS (SELECT CAST(sum(r) AS BIGINT) AS t FROM rev),
+    ranked AS (SELECT l_partkey, r,
+                      CAST(row_number() OVER (ORDER BY r DESC, l_partkey) AS BIGINT) AS rank,
+                      CAST(sum(r) OVER (ORDER BY r DESC, l_partkey
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
+               FROM rev)
+    SELECT l_partkey AS p_partkey,
+           r / 100.0 AS revenue,
+           rank,
+           CASE WHEN cum * 5 <= t * 4 THEN 'A'
+                WHEN cum * 20 <= t * 19 THEN 'B'
+                ELSE 'C' END AS abc_class
+    FROM ranked, tot
+"""
 
 
 def q_rolling_wau_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -311,6 +432,27 @@ def q_rolling_wau_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_rolling_wau_report: identical explode-to-window-end
+# construction; only observed-activity days emitted.
+TWINS["rolling_wau_report"] = """
+    WITH ud AS (SELECT DISTINCT user_id,
+                       CAST(floor(epoch_us(ts) / 86400000000.0) AS BIGINT) AS day
+                FROM events),
+    dau AS (SELECT day, CAST(count(DISTINCT user_id) AS BIGINT) AS dau
+            FROM ud GROUP BY day),
+    span AS (SELECT max(day) AS dmax FROM ud),
+    expl AS (SELECT DISTINCT user_id, wend FROM (
+               SELECT user_id, unnest(range(day, least(day + 6, dmax) + 1)) AS wend
+               FROM ud, span)),
+    wau AS (SELECT wend AS day, CAST(count(*) AS BIGINT) AS wau
+            FROM expl GROUP BY wend)
+    SELECT dau.day AS epoch_day, dau.dau, wau.wau,
+           floor(dau.dau / CAST(wau.wau AS DOUBLE) * 1000000 + 0.5) / 1000000.0
+             AS stickiness
+    FROM dau JOIN wau ON wau.day = dau.day
+"""
+
+
 def q_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark's NATIVE session_window() aggregation (the built-in the
     hand-rolled gaps-and-islands construction replaces at 100 TB
@@ -340,6 +482,28 @@ def q_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
+
+
+# FULL twin of q_session_window_native: gaps-and-islands replay of the
+# NATIVE session_window semantics (a new session when the gap is >= 30
+# minutes — note >=, the built-in's rule; the repo's lag-based
+# sessionizer uses strict >).
+TWINS["session_window_native"] = """
+    WITH e AS (SELECT user_id, event_id, value, ts, epoch_us(ts) AS us FROM events),
+    lagd AS (SELECT *, lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) AS prev
+             FROM e),
+    flagged AS (SELECT *, CASE WHEN prev IS NULL OR us - prev >= 1800000000
+                               THEN 1 ELSE 0 END AS new_s
+                FROM lagd),
+    sess AS (SELECT *, CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sid
+             FROM flagged)
+    SELECT user_id,
+           strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
+           CAST(count(*) AS BIGINT) AS n_events,
+           round(sum(value), 4) AS sum_value
+    FROM sess GROUP BY user_id, sid
+"""
 
 
 def q_interpurchase_gap_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -383,6 +547,28 @@ def q_interpurchase_gap_percentiles(spark: SparkSession, sf_dir: str) -> DataFra
         )
         picks = row if picks is None else picks.unionByName(row)
     return picks
+
+
+# FULL twin of q_interpurchase_gap_percentiles: same total order and
+# ceil-rank percentile_disc picks.
+TWINS["interpurchase_gap_percentiles"] = """
+    WITH p AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events
+               WHERE event_type = 'purchase'),
+    gaps AS (SELECT CAST(floor((us - prev) / 1000000.0) AS BIGINT) AS gap_s,
+                    user_id, us
+             FROM (SELECT *, lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) AS prev
+                   FROM p)
+             WHERE prev IS NOT NULL),
+    ranked AS (SELECT gap_s, CAST(row_number() OVER (ORDER BY gap_s, user_id, us) AS BIGINT) AS r
+               FROM gaps),
+    n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM gaps)
+    SELECT 'p50' AS quantile, n AS n_gaps, gap_s AS gap_seconds
+    FROM ranked, n WHERE r = (n * 1 + 1) // 2
+    UNION ALL
+    SELECT 'p90', n, gap_s FROM ranked, n WHERE r = (n * 9 + 9) // 10
+    UNION ALL
+    SELECT 'p99', n, gap_s FROM ranked, n WHERE r = (n * 99 + 99) // 100
+"""
 
 
 def q_fellegi_sunter_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -449,6 +635,36 @@ def q_fellegi_sunter_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_fellegi_sunter_linkage: identical blocking, pattern
+# bits, and the SAME precomputed score literals (constants module —
+# single definition site, no query-time transcendental either side).
+_FS_CASES = " ".join(
+    f"WHEN '{p}' THEN {s!r}" for p, s in FS_PATTERN_SCORES.items()
+)
+
+
+TWINS["fellegi_sunter_linkage"] = f"""
+    WITH names AS (SELECT p_name, min(p_brand) AS brand, min(p_type) AS typ,
+                          CAST(min(p_size) AS BIGINT) AS sz
+                   FROM part GROUP BY p_name),
+    blocked AS (SELECT *, string_split(p_name, ' ')[-1] AS block FROM names),
+    pairs AS (SELECT
+        (CASE WHEN levenshtein(a.p_name, b.p_name) <= 2 THEN '1' ELSE '0' END ||
+         CASE WHEN a.brand = b.brand THEN '1' ELSE '0' END ||
+         CASE WHEN a.typ = b.typ THEN '1' ELSE '0' END ||
+         CASE WHEN abs(a.sz - b.sz) <= 1 THEN '1' ELSE '0' END) AS pattern
+      FROM blocked a JOIN blocked b ON a.block = b.block AND a.p_name < b.p_name),
+    agg AS (SELECT pattern, CAST(count(*) AS BIGINT) AS n_pairs,
+                   CASE pattern {_FS_CASES} END AS score
+            FROM pairs GROUP BY pattern)
+    SELECT pattern, n_pairs, score,
+           CASE WHEN score >= 4.0 THEN 'MATCH'
+                WHEN score >= 0.0 THEN 'POSSIBLE'
+                ELSE 'NON_MATCH' END AS decision
+    FROM agg
+"""
+
+
 def q_association_rules_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed association rules a→b over order baskets: confidence
     n_ab/n_a, support, and lift — the rule-mining layer on top of the
@@ -503,6 +719,34 @@ def q_association_rules_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.orderBy(F.desc("confidence"), F.asc("id_a"), F.asc("id_b"))
         .limit(50)
     )
+
+
+# FULL twin of q_association_rules_topk: directed basket rules,
+# identical confidence/lift trees and the snapped-confidence total
+# order for the top-50 cut.
+TWINS["association_rules_topk"] = """
+    WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+    pairs AS (SELECT a.l_partkey AS id_a, b.l_partkey AS id_b,
+                     CAST(count(*) AS BIGINT) AS n_ab
+              FROM li a JOIN li b
+                ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
+              GROUP BY 1, 2 HAVING count(*) >= 2),
+    freq AS (SELECT l_partkey, CAST(count(*) AS BIGINT) AS f FROM li GROUP BY 1),
+    n AS (SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS N FROM li),
+    scored AS (SELECT id_a, id_b, fa.f AS n_a, fb.f AS n_b, n_ab,
+                      floor(CAST(n_ab AS DOUBLE) / CAST(fa.f AS DOUBLE)
+                            * 1000000 + 0.5) / 1000000.0 AS confidence,
+                      floor(CAST(CAST(n_ab AS HUGEINT) * N AS DOUBLE)
+                            / CAST(CAST(fa.f AS HUGEINT) * fb.f AS DOUBLE)
+                            * 1000000 + 0.5) / 1000000.0 AS lift
+               FROM pairs
+               JOIN freq fa ON fa.l_partkey = id_a
+               JOIN freq fb ON fb.l_partkey = id_b, n)
+    SELECT id_a, id_b, n_a, n_b, n_ab, confidence, lift
+    FROM scored
+    ORDER BY confidence DESC, id_a, id_b
+    LIMIT 50
+"""
 
 
 def q_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -582,6 +826,54 @@ def q_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_abc_xyz_matrix: identical integer ABC boundaries on
+# the cumulative revenue, identical CV tree micro-snapped before the
+# X/Y/Z thresholds, 9-cell rollup.
+TWINS["abc_xyz_matrix"] = """
+    WITH li AS (SELECT l_partkey,
+                       CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents,
+                       CAST(l_quantity AS BIGINT) AS q,
+                       epoch_us(l_shipdate) // 86400000000 // 7 AS wk
+                FROM lineitem),
+    rev AS (SELECT l_partkey, CAST(sum(cents) AS BIGINT) AS r FROM li GROUP BY 1),
+    ranked AS (SELECT l_partkey, r,
+                      CAST(sum(r) OVER (ORDER BY r DESC, l_partkey
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
+               FROM rev),
+    total AS (SELECT CAST(sum(r) AS BIGINT) AS tot FROM rev),
+    abc AS (SELECT l_partkey, r,
+                   CASE WHEN cum * 5 <= tot * 4 THEN 'A'
+                        WHEN cum * 20 <= tot * 19 THEN 'B'
+                        ELSE 'C' END AS abc_class
+            FROM ranked, total),
+    weekly AS (SELECT l_partkey, wk, CAST(sum(q) AS BIGINT) AS qw
+               FROM li GROUP BY 1, 2),
+    stats AS (SELECT l_partkey,
+                     CAST(count(*) AS BIGINT) AS W,
+                     sum(CAST(qw AS HUGEINT)) AS sq,
+                     sum(CAST(qw AS HUGEINT) * qw) AS sq2
+              FROM weekly GROUP BY 1),
+    xyz AS (SELECT l_partkey,
+                   CASE WHEN cvm < 500000 THEN 'X'
+                        WHEN cvm < 1000000 THEN 'Y'
+                        ELSE 'Z' END AS xyz_class
+            FROM (SELECT l_partkey,
+                         CAST(floor(sqrt(greatest((CAST(sq2 AS DOUBLE)
+                                          - CAST(W AS DOUBLE)
+                                            * (CAST(sq AS DOUBLE) / CAST(W AS DOUBLE))
+                                            * (CAST(sq AS DOUBLE) / CAST(W AS DOUBLE)))
+                                         / CAST(W AS DOUBLE), 0.0))
+                                    / (CAST(sq AS DOUBLE) / CAST(W AS DOUBLE))
+                                    * 1000000 + 0.5) AS BIGINT) AS cvm
+                  FROM stats))
+    SELECT a.abc_class, x.xyz_class,
+           CAST(count(*) AS BIGINT) AS n_parts,
+           CAST(sum(a.r) AS DOUBLE) / 100.0 AS total_revenue
+    FROM abc a JOIN xyz x USING (l_partkey)
+    GROUP BY a.abc_class, x.xyz_class
+"""
+
+
 def q_price_quartiles_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-brand price quartiles of shipped line items under the
     NEAREST-RANK convention (value at rank ceil(q·n) in the
@@ -644,6 +936,30 @@ def q_price_quartiles_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
             round_det(F.col("p75") - F.col("p25"), 2).alias("iqr"),
         )
     )
+
+
+# FULL twin of q_price_quartiles_by_brand: nearest-rank quantiles
+# (rank == ceil(q*n)) over the identical (price, orderkey, linenumber)
+# per-brand total order; the oracle uses a window rank (correctness
+# only — the Spark side uses the composite-key range exchange).
+TWINS["price_quartiles_by_brand"] = """
+    WITH j AS (SELECT p.p_brand, l.l_extendedprice, l.l_orderkey, l.l_linenumber
+               FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
+    ranked AS (
+      SELECT p_brand, l_extendedprice,
+             CAST(row_number() OVER (PARTITION BY p_brand
+                    ORDER BY l_extendedprice, l_orderkey, l_linenumber) AS BIGINT) AS rn,
+             CAST(count(*) OVER (PARTITION BY p_brand) AS BIGINT) AS n
+      FROM j)
+    SELECT p_brand, max(n) AS n_items,
+           max(CASE WHEN rn = ceil(0.25 * n) THEN l_extendedprice END) AS p25,
+           max(CASE WHEN rn = ceil(0.5 * n) THEN l_extendedprice END) AS p50,
+           max(CASE WHEN rn = ceil(0.75 * n) THEN l_extendedprice END) AS p75,
+           floor((max(CASE WHEN rn = ceil(0.75 * n) THEN l_extendedprice END)
+                  - max(CASE WHEN rn = ceil(0.25 * n) THEN l_extendedprice END))
+                 * 100 + 0.5) / 100.0 AS iqr
+    FROM ranked GROUP BY p_brand
+"""
 
 
 def q_price_index_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -709,3 +1025,41 @@ def q_price_index_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         round_det(paas, 6).alias("paasche"),
         round_det(F.sqrt(lasp * paas), 6).alias("fisher"),
     )
+
+
+# FULL twin of q_price_index_report: identical (part, year) exact
+# cent/centi-unit aggregates, the same per-term-floor integer cross
+# terms (`//` vs Spark DIV — all operands non-negative), and one IEEE
+# division per index; Fisher's sqrt is irrational (measure-zero tie
+# policy, rounding.py).
+TWINS["price_index_report"] = """
+    WITH py AS (
+      SELECT l_partkey, year(CAST(l_shipdate AS DATE)) AS yr,
+             CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) * 100 AS BIGINT)
+               AS revc,
+             CAST(sum(CAST(l_quantity AS DECIMAL(15,2))) * 100 AS BIGINT)
+               AS qcu
+      FROM lineitem
+      WHERE year(CAST(l_shipdate AS DATE)) IN (1997, 1998)
+      GROUP BY 1, 2),
+    both_y AS (
+      SELECT a.revc AS r0, a.qcu AS q0, b.revc AS r1, b.qcu AS q1,
+             (b.revc * a.qcu * 10000) // b.qcu AS tl,
+             (a.revc * b.qcu * 10000) // a.qcu AS tp
+      FROM (SELECT * FROM py WHERE yr = 1997) a
+      JOIN (SELECT * FROM py WHERE yr = 1998) b USING (l_partkey)),
+    agg AS (
+      SELECT CAST(count(*) AS BIGINT) AS n_parts_matched,
+             CAST(sum(r0) AS BIGINT) AS sr0, CAST(sum(r1) AS BIGINT) AS sr1,
+             CAST(sum(tl) AS BIGINT) AS stl, CAST(sum(tp) AS BIGINT) AS stp
+      FROM both_y)
+    SELECT n_parts_matched,
+           floor(CAST(stl AS DOUBLE) / CAST(sr0 * 10000 AS DOUBLE) * 1000000
+                 + 0.5) / 1000000.0 AS laspeyres,
+           floor(CAST(sr1 * 10000 AS DOUBLE) / CAST(stp AS DOUBLE) * 1000000
+                 + 0.5) / 1000000.0 AS paasche,
+           floor(sqrt((CAST(stl AS DOUBLE) / CAST(sr0 * 10000 AS DOUBLE))
+                      * (CAST(sr1 * 10000 AS DOUBLE) / CAST(stp AS DOUBLE)))
+                 * 1000000 + 0.5) / 1000000.0 AS fisher
+    FROM agg
+"""

@@ -14,6 +14,12 @@ from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
 
 
+#: DuckDB twin of each query defined here, by query name: SQL that
+#: returns the same rows on the same parquet tables. Each entry sits
+#: after its ``q_<name>`` function; queries.oracle_sql() collects them.
+TWINS: dict[str, str] = {}
+
+
 def q_bootstrap_ci_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poisson-bootstrap confidence intervals for the mean order value
     per priority class — THE bootstrap for data that doesn't fit on one
@@ -41,7 +47,7 @@ def q_bootstrap_ci_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     end to end, no float ever decides a bound. The per-priority rank
     window orders 32 rows per group — control-sized, not data-sized."""
     # floor(CDF_Poisson(1)(k) * 16^15), k = 0..5 — identical literals in
-    # the DuckDB twin (oracles_analytics.py).
+    # the DuckDB twin (TWINS, below).
     T = [
         424136118829305344,
         848272237658610688,
@@ -131,6 +137,53 @@ def q_bootstrap_ci_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_bootstrap_ci_report: Poisson(1) weights from the same
+# hardcoded 2^60-grid CDF thresholds over md5("orderkey:b"); replicate
+# means by exact HUGEINT floor division; CI = rank-2/rank-31 replicate
+# means ranked on (mean6, b).
+TWINS["bootstrap_ci_report"] = """
+    WITH base AS (SELECT o_orderkey, o_orderpriority AS priority,
+                         CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
+                  FROM orders),
+    rep AS (SELECT o_orderkey, priority, cents, unnest(range(0, 32)) AS b FROM base),
+    wt AS (SELECT priority, b, cents,
+                  CAST(concat('0x', substr(md5(concat(CAST(o_orderkey AS VARCHAR), ':',
+                                                      CAST(b AS VARCHAR))), 1, 15))
+                       AS BIGINT) AS u
+           FROM rep),
+    ww AS (SELECT priority, b, cents,
+                  CASE WHEN u < 424136118829305344 THEN 0
+                       WHEN u < 848272237658610688 THEN 1
+                       WHEN u < 1060340297073263360 THEN 2
+                       WHEN u < 1131029650211480960 THEN 3
+                       WHEN u < 1148701988496035328 THEN 4
+                       WHEN u < 1152236456152946176 THEN 5
+                       ELSE 6 END AS w
+           FROM wt),
+    reps AS (SELECT priority, b,
+                    CAST(sum(CAST(w AS HUGEINT) * cents) AS HUGEINT) AS s,
+                    CAST(sum(w) AS BIGINT) AS wsum
+             FROM ww GROUP BY 1, 2),
+    m AS (SELECT priority, b,
+                 CAST((s * 10000) // nullif(wsum, 0) AS BIGINT) AS m6,
+                 row_number() OVER (PARTITION BY priority
+                     ORDER BY CAST((s * 10000) // nullif(wsum, 0) AS BIGINT), b) AS rk
+          FROM reps),
+    ci AS (SELECT priority,
+                  max(CASE WHEN rk = 2 THEN m6 END) AS lo6,
+                  max(CASE WHEN rk = 31 THEN m6 END) AS hi6
+           FROM m GROUP BY priority),
+    pt AS (SELECT priority, CAST(count(*) AS BIGINT) AS n_orders,
+                  CAST((CAST(sum(cents) AS HUGEINT) * 10000) // count(*) AS BIGINT) AS p6
+           FROM base GROUP BY priority)
+    SELECT pt.priority AS o_orderpriority, n_orders,
+           p6 / 1000000.0 AS point_mean,
+           lo6 / 1000000.0 AS ci_lo,
+           hi6 / 1000000.0 AS ci_hi
+    FROM pt JOIN ci USING (priority)
+"""
+
+
 def q_pareto_frontier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skyline / Pareto frontier of the part catalog — the points where
     no other part is simultaneously cheaper AND larger (minimize
@@ -174,6 +227,26 @@ def q_pareto_frontier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_parts",
         )
     )
+
+
+# FULL twin of q_pareto_frontier_parts: the LITERAL quadratic dominance
+# definition (NOT EXISTS a strictly-better point) — Spark's prefix-max
+# reduction must reproduce it exactly, so the grade proves the skyline
+# reduction, not just the arithmetic.
+TWINS["pareto_frontier_parts"] = """
+    WITH pts AS (SELECT CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT) AS price_c,
+                        CAST(max(p_size) AS BIGINT) AS best
+                 FROM part GROUP BY 1),
+    sky AS (SELECT price_c, best FROM pts x
+            WHERE NOT EXISTS (SELECT 1 FROM pts o
+                              WHERE o.price_c < x.price_c AND o.best >= x.best)),
+    counts AS (SELECT CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT) AS price_c,
+                      CAST(p_size AS BIGINT) AS p_size,
+                      CAST(count(*) AS BIGINT) AS n_parts
+               FROM part GROUP BY 1, 2)
+    SELECT sky.price_c / 100.0 AS price, sky.best AS p_size, n_parts
+    FROM sky JOIN counts ON counts.price_c = sky.price_c AND counts.p_size = sky.best
+"""
 
 
 def q_kaplan_meier_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -279,6 +352,52 @@ def q_kaplan_meier_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_kaplan_meier_survival: same cohort rules (entry =
+# first view, event = first subsequent purchase, censor at global max
+# event time), day-grid risk sets by exclusive prefix subtraction,
+# per-event-day ln((n-d)/n) snapped to the nano-nat grid before the
+# prefix sum; d = n poisons the curve to NULL from that day on.
+TWINS["kaplan_meier_survival"] = """
+    WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
+    entry AS (SELECT user_id, min(us) AS t0 FROM ev
+              WHERE event_type = 'view' GROUP BY user_id),
+    purch AS (SELECT e.user_id, min(us) AS tp
+              FROM ev e JOIN entry USING (user_id)
+              WHERE event_type = 'purchase' AND us >= t0
+              GROUP BY e.user_id),
+    tend AS (SELECT max(us) AS te FROM ev),
+    subj AS (SELECT CAST(floor((coalesce(tp, te) - t0) / 86400000000.0) AS BIGINT) AS day,
+                    CASE WHEN tp IS NOT NULL THEN 1 ELSE 0 END AS is_event
+             FROM entry LEFT JOIN purch USING (user_id), tend),
+    days AS (SELECT day, CAST(sum(is_event) AS BIGINT) AS n_events,
+                    CAST(count(*) AS BIGINT) AS c_all
+             FROM subj GROUP BY day),
+    tot AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM subj),
+    risk AS (SELECT day, n_events,
+                    CAST(n_total - coalesce(sum(c_all) OVER (ORDER BY day
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                         AS BIGINT) AS n_at_risk
+             FROM days, tot),
+    evd AS (SELECT day, n_events, n_at_risk,
+                   CASE WHEN n_events < n_at_risk
+                        THEN CAST(floor(ln((n_at_risk - n_events) / CAST(n_at_risk AS DOUBLE))
+                                        * 1000000000 + 0.5) AS BIGINT)
+                   END AS term9
+            FROM risk WHERE n_events > 0),
+    curve AS (SELECT day, n_at_risk, n_events,
+                     max(CASE WHEN n_events >= n_at_risk THEN 1 ELSE 0 END)
+                       OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS hit0,
+                     sum(term9) OVER (ORDER BY day
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ln9
+              FROM evd)
+    SELECT day AS event_day, n_at_risk, n_events,
+           CASE WHEN hit0 = 0
+                THEN floor(ln9 / 1000000000.0 * 1000000 + 0.5) / 1000000.0
+           END AS log_survival
+    FROM curve
+"""
+
+
 def q_multitouch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Position-based (U-shaped) multi-touch attribution — the
     generalization of the last-touch view (events_asof_next_purchase):
@@ -345,6 +464,37 @@ def q_multitouch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_multitouch_attribution: same 7-day strict-before
+# window, same integer U-shaped split (front-loaded middle remainder);
+# no float exists on either side.
+TWINS["multitouch_attribution"] = """
+    WITH ev AS (SELECT event_id, user_id, event_type, epoch_us(ts) AS us FROM events),
+    p AS (SELECT user_id AS u, event_id AS pid, us AS pts FROM ev
+          WHERE event_type = 'purchase'),
+    t AS (SELECT user_id AS u, event_id AS tid, event_type AS touch_type, us AS tts
+          FROM ev WHERE event_type IN ('click', 'view', 'signup')),
+    j AS (SELECT pid, tid, touch_type, tts
+          FROM p JOIN t USING (u)
+          WHERE tts < pts AND tts >= pts - 604800000000),
+    pos AS (SELECT pid, touch_type,
+                   row_number() OVER (PARTITION BY pid ORDER BY tts, tid) AS r,
+                   count(*) OVER (PARTITION BY pid) AS n
+            FROM j),
+    c AS (SELECT pid, touch_type,
+                 CASE WHEN n = 1 THEN 10000
+                      WHEN n = 2 THEN 5000
+                      WHEN r = 1 OR r = n THEN 4000
+                      ELSE 2000 // (n - 2)
+                           + CASE WHEN r - 1 <= 2000 % (n - 2) THEN 1 ELSE 0 END
+                 END AS credit
+          FROM pos)
+    SELECT touch_type, CAST(sum(credit) AS BIGINT) AS credit_bp,
+           CAST(count(DISTINCT pid) AS BIGINT) AS n_conversions_touched,
+           CAST(count(*) AS BIGINT) AS n_touches
+    FROM c GROUP BY touch_type
+"""
+
+
 def q_did_estimate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Difference-in-differences estimate of mean order value —
     treatment = odd customer keys, post-period = orders from 1997-01-01
@@ -394,6 +544,31 @@ def q_did_estimate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_did_estimate_report: four exact floor-division cell
+# means, integer DiD.
+TWINS["did_estimate_report"] = """
+    WITH cells AS (SELECT (o_custkey % 2 = 1) AS treat,
+                          (CAST(o_orderdate AS DATE) >= DATE '1997-01-01') AS post,
+                          CAST(count(*) AS BIGINT) AS n,
+                          CAST((CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS HUGEINT)
+                                * 10000) // count(*) AS BIGINT) AS m6
+                   FROM orders GROUP BY 1, 2),
+    g AS (SELECT CAST(sum(n) AS BIGINT) AS n_orders,
+                 max(CASE WHEN treat AND post THEN m6 END) AS tp,
+                 max(CASE WHEN treat AND NOT post THEN m6 END) AS tb,
+                 max(CASE WHEN NOT treat AND post THEN m6 END) AS cp,
+                 max(CASE WHEN NOT treat AND NOT post THEN m6 END) AS cb
+          FROM cells)
+    SELECT n_orders,
+           tb / 1000000.0 AS treat_pre_mean,
+           tp / 1000000.0 AS treat_post_mean,
+           cb / 1000000.0 AS control_pre_mean,
+           cp / 1000000.0 AS control_post_mean,
+           ((tp - tb) - (cp - cb)) / 1000000.0 AS did_estimate
+    FROM g
+"""
+
+
 def q_chi2_type_by_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-square independence table for event_type × day-of-week:
     observed counts, expected counts under independence
@@ -440,6 +615,25 @@ def q_chi2_type_by_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_chi2_type_by_dow: same integer dow derivation
+# ((epoch_day + 4) % 7), same marginal/expected/contribution trees.
+TWINS["chi2_type_by_dow"] = """
+    WITH cells AS (
+      SELECT event_type,
+             CAST((floor(epoch_us(ts) / 86400000000) + 4) % 7 AS INTEGER) AS dow,
+             CAST(count(*) AS BIGINT) AS observed
+      FROM events GROUP BY 1, 2),
+    rt AS (SELECT event_type, sum(observed) AS r FROM cells GROUP BY event_type),
+    ct AS (SELECT dow, sum(observed) AS c FROM cells GROUP BY dow),
+    n AS (SELECT sum(observed) AS n FROM cells)
+    SELECT cells.event_type, cells.dow, cells.observed,
+           round(r * c / n, 6) AS expected,
+           round((observed - r * c / n) * (observed - r * c / n) / (r * c / n), 6)
+             AS chi2_contrib
+    FROM cells JOIN rt USING (event_type) JOIN ct USING (dow) CROSS JOIN n
+"""
+
+
 def q_ab_experiment_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A/B experimentation readout: users deterministically bucketed by
     the last md5 hex digit of user_id (0-7 → A, 8-f → B), then per
@@ -463,6 +657,20 @@ def q_ab_experiment_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "events_per_user", round_det(F.col("n_events") / F.col("n_users"), 6)
         )
     )
+
+
+# FULL twin of q_ab_experiment_report: identical md5 traffic split.
+TWINS["ab_experiment_report"] = """
+    SELECT CASE WHEN substr(md5(CAST(user_id AS VARCHAR)), 32, 1) < '8'
+                THEN 'A' ELSE 'B' END AS bucket,
+           event_type,
+           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
+           CAST(count(*) AS BIGINT) AS n_events,
+           round(sum(value), 4) AS sum_value,
+           floor(count(*) / count(DISTINCT user_id) * 1000000 + 0.5) / 1000000.0
+             AS events_per_user
+    FROM events GROUP BY 1, 2
+"""
 
 
 def q_gini_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -494,6 +702,21 @@ def q_gini_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("gini"),
     )
+
+
+# FULL twin of q_gini_by_status: ascending rank with orderkey
+# tie-break, identical Gini expression tree.
+TWINS["gini_by_status"] = """
+    WITH ranked AS (
+      SELECT o_orderstatus, o_totalprice,
+             CAST(row_number() OVER (PARTITION BY o_orderstatus
+                                     ORDER BY o_totalprice, o_orderkey) AS BIGINT) AS i
+      FROM orders)
+    SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n_orders,
+           round(2 * sum(i * o_totalprice) / (count(*) * sum(o_totalprice))
+                 - (count(*) + 1) / count(*), 6) AS gini
+    FROM ranked GROUP BY o_orderstatus
+"""
 
 
 def q_exact_quartiles_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -534,6 +757,25 @@ def q_exact_quartiles_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_exact_quartiles_by_status: nearest-rank quantiles
+# (rank == ceil(q*n)) over the same (price, orderkey) order.
+TWINS["exact_quartiles_by_status"] = """
+    WITH ranked AS (
+      SELECT o_orderstatus, o_totalprice,
+             CAST(row_number() OVER (PARTITION BY o_orderstatus
+                                     ORDER BY o_totalprice, o_orderkey) AS BIGINT) AS rn,
+             CAST(count(*) OVER (PARTITION BY o_orderstatus) AS BIGINT) AS n
+      FROM orders)
+    SELECT o_orderstatus, max(n) AS n_orders,
+           max(CASE WHEN rn = ceil(0.25 * n) THEN o_totalprice END) AS p25,
+           max(CASE WHEN rn = ceil(0.5 * n) THEN o_totalprice END) AS p50,
+           max(CASE WHEN rn = ceil(0.75 * n) THEN o_totalprice END) AS p75,
+           round(max(CASE WHEN rn = ceil(0.75 * n) THEN o_totalprice END)
+                 - max(CASE WHEN rn = ceil(0.25 * n) THEN o_totalprice END), 2) AS iqr
+    FROM ranked GROUP BY o_orderstatus
+"""
+
+
 def q_corr_price_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson correlation from exact-decimal sufficient statistics (the
     same engine-independence technique as price_stats_by_status: a
@@ -559,6 +801,23 @@ def q_corr_price_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corr = (n * sxy - sx * sy) / F.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
     return agg.select("l_returnflag", "n", round_det(corr, 6).alias("corr_qty_price"))
+
+
+TWINS["corr_price_quantity"] = """
+        SELECT l_returnflag, n,
+               floor((n * sxy - sx * sy)
+                     / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
+                     * 1000000 + 0.5) / 1000000.0 AS corr_qty_price
+        FROM (
+          SELECT l_returnflag, count(*) AS n,
+                 CAST(sum(CAST(l_quantity AS DECIMAL(15,2))) AS DOUBLE) AS sx,
+                 CAST(sum(CAST(l_extendedprice AS DECIMAL(15,2))) AS DOUBLE) AS sy,
+                 CAST(sum(CAST(l_quantity AS DECIMAL(15,2)) * CAST(l_quantity AS DECIMAL(15,2))) AS DOUBLE) AS sxx,
+                 CAST(sum(CAST(l_extendedprice AS DECIMAL(15,2)) * CAST(l_extendedprice AS DECIMAL(15,2))) AS DOUBLE) AS syy,
+                 CAST(sum(CAST(l_quantity AS DECIMAL(15,2)) * CAST(l_extendedprice AS DECIMAL(15,2))) AS DOUBLE) AS sxy
+          FROM lineitem GROUP BY l_returnflag
+        )
+    """
 
 
 def q_capped_running_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -605,6 +864,43 @@ def q_capped_running_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_capped_running_balance: the same pure-integer
+# non-associative fold, with the (balance, max) pair PACKED into one
+# HUGEINT accumulator (acc = m*2^62 + b). DuckDB 1.0's struct_pack
+# inside a list_reduce lambda mis-evaluates a field that references a
+# subexpression shared with an earlier field (observed live: m picked
+# up the post-update balance), so the struct-accumulator formulation
+# is NOT usable here — the packed scalar sidesteps it and stays exact
+# (b, m < 2^62 micro-units by construction).
+TWINS["capped_running_balance"] = """
+    WITH ev AS (SELECT user_id, epoch_us(ts) AS uss, event_id AS eid,
+                       CASE WHEN event_type = 'purchase'
+                            THEN -CAST(floor(value * 1000000 + 0.5) AS BIGINT)
+                            ELSE CAST(floor(value * 1000000 + 0.5) AS BIGINT)
+                       END AS dd
+                FROM events),
+    g AS (SELECT user_id,
+                 list_transform(list_sort(list(struct_pack(us := uss, event_id := eid, d := dd))),
+                                s -> s.d) AS deltas
+          FROM ev GROUP BY user_id),
+    f AS (SELECT user_id, CAST(len(deltas) AS BIGINT) AS n_events,
+                 list_reduce(
+                   list_prepend(CAST(0 AS HUGEINT), deltas::HUGEINT[]),
+                   (acc, x) -> greatest(acc // 4611686018427387904,
+                                        greatest(CAST(0 AS HUGEINT),
+                                                 acc % 4611686018427387904 + x))
+                               * 4611686018427387904
+                               + greatest(CAST(0 AS HUGEINT),
+                                          acc % 4611686018427387904 + x)
+                 ) AS st
+          FROM g)
+    SELECT user_id, n_events,
+           CAST(st % 4611686018427387904 AS BIGINT) / 1000000.0 AS final_balance,
+           CAST(st // 4611686018427387904 AS BIGINT) / 1000000.0 AS max_balance
+    FROM f
+"""
+
+
 def q_funnel_latency_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact p50 / p90 / p99 of a user's first-view → first-subsequent-
     purchase latency — the time-to-convert distribution behind funnel
@@ -648,6 +944,31 @@ def q_funnel_latency_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         picks = row if picks is None else picks.unionByName(row)
     return picks
+
+
+# FULL twin of q_funnel_latency_percentiles: first view → first
+# subsequent purchase per user, percentile_disc picks at ceil-rank
+# ((num·n + den−1) DIV den) over the (latency, user) total order.
+TWINS["funnel_latency_percentiles"] = """
+    WITH v AS (SELECT user_id, min(epoch_us(ts)) AS t1 FROM events
+               WHERE event_type = 'view' GROUP BY user_id),
+    p AS (SELECT e.user_id, v.t1, min(epoch_us(e.ts)) AS tp
+          FROM events e JOIN v ON e.user_id = v.user_id
+          WHERE e.event_type = 'purchase' AND epoch_us(e.ts) >= v.t1
+          GROUP BY e.user_id, v.t1),
+    lat AS (SELECT CAST(floor((tp - t1) / 1000000.0) AS BIGINT) AS lat_s, user_id
+            FROM p),
+    ranked AS (SELECT lat_s,
+                      CAST(row_number() OVER (ORDER BY lat_s, user_id) AS BIGINT) AS r
+               FROM lat),
+    n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM lat)
+    SELECT 'p50' AS quantile, n AS n_users, lat_s AS latency_seconds
+    FROM ranked, n WHERE r = (n * 1 + 1) // 2
+    UNION ALL
+    SELECT 'p90', n, lat_s FROM ranked, n WHERE r = (n * 9 + 9) // 10
+    UNION ALL
+    SELECT 'p99', n, lat_s FROM ranked, n WHERE r = (n * 99 + 99) // 100
+"""
 
 
 def q_kendall_tau_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -714,6 +1035,40 @@ def q_kendall_tau_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ties_y",
         round_det(tau, 6).alias("tau_b"),
     )
+
+
+# FULL twin of q_kendall_tau_nations: exact cent sums per (nation,
+# year), bounded 25-row pair self-join, τ-b from exact pair counts.
+TWINS["kendall_tau_nations"] = """
+    WITH rev AS (
+      SELECT n.n_name, year(o.o_orderdate) AS yr,
+             CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents
+      FROM orders o
+      JOIN customer c ON o.o_custkey = c.c_custkey
+      JOIN nation n ON c.c_nationkey = n.n_nationkey
+      WHERE year(o.o_orderdate) IN (1998, 1999)
+      GROUP BY n.n_name, year(o.o_orderdate)),
+    xy AS (SELECT a.n_name, a.cents AS x, b.cents AS y
+           FROM rev a JOIN rev b ON a.n_name = b.n_name
+           WHERE a.yr = 1998 AND b.yr = 1999),
+    pairs AS (SELECT p.x AS xa, p.y AS ya, q.x AS xb, q.y AS yb
+              FROM xy p JOIN xy q ON p.n_name < q.n_name),
+    agg AS (SELECT
+      CAST(count(*) AS BIGINT) AS n_pairs,
+      CAST(sum(CASE WHEN (xa - xb > 0 AND ya - yb > 0)
+                      OR (xa - xb < 0 AND ya - yb < 0) THEN 1 ELSE 0 END) AS BIGINT) AS concordant,
+      CAST(sum(CASE WHEN (xa - xb > 0 AND ya - yb < 0)
+                      OR (xa - xb < 0 AND ya - yb > 0) THEN 1 ELSE 0 END) AS BIGINT) AS discordant,
+      CAST(sum(CASE WHEN xa = xb THEN 1 ELSE 0 END) AS BIGINT) AS ties_x,
+      CAST(sum(CASE WHEN ya = yb THEN 1 ELSE 0 END) AS BIGINT) AS ties_y
+    FROM pairs)
+    SELECT n_pairs, concordant, discordant, ties_x, ties_y,
+           floor((CAST(concordant - discordant AS DOUBLE)
+                  / sqrt(CAST(n_pairs - ties_x AS DOUBLE)
+                         * CAST(n_pairs - ties_y AS DOUBLE))) * 1000000 + 0.5)
+             / 1000000.0 AS tau_b
+    FROM agg
+"""
 
 
 def q_psi_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -786,6 +1141,42 @@ def q_psi_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rows.unionByName(total)
 
 
+# FULL twin of q_psi_drift_report: identical integer-DIV bins, add-one
+# Laplace shares as single divisions, ln on the divided ratio, nano-
+# snapped contributions so the TOTAL row is an exact integer sum.
+TWINS["psi_drift_report"] = """
+    WITH binned AS (
+      SELECT year(o_orderdate) AS yr,
+             least(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) // 5000000, 9) AS bin_id
+      FROM orders WHERE year(o_orderdate) IN (1998, 1999)),
+    counts AS (SELECT bin_id,
+                      CAST(sum(CASE WHEN yr = 1998 THEN 1 ELSE 0 END) AS BIGINT) AS nb,
+                      CAST(sum(CASE WHEN yr = 1999 THEN 1 ELSE 0 END) AS BIGINT) AS nc
+               FROM binned GROUP BY bin_id),
+    bins AS (SELECT CAST(range AS BIGINT) AS bin_id FROM range(10)),
+    full_b AS (SELECT b.bin_id,
+                      CAST(coalesce(nb, 0) AS BIGINT) AS n_base,
+                      CAST(coalesce(nc, 0) AS BIGINT) AS n_curr
+               FROM bins b LEFT JOIN counts c ON b.bin_id = c.bin_id),
+    tot AS (SELECT CAST(sum(n_base) AS BIGINT) AS tb, CAST(sum(n_curr) AS BIGINT) AS tc
+            FROM full_b),
+    per AS (SELECT bin_id, n_base, n_curr,
+                   CAST(floor(((CAST(n_base + 1 AS DOUBLE) / CAST(tb + 10 AS DOUBLE))
+                               - (CAST(n_curr + 1 AS DOUBLE) / CAST(tc + 10 AS DOUBLE)))
+                              * ln((CAST(n_base + 1 AS DOUBLE) / CAST(tb + 10 AS DOUBLE))
+                                   / (CAST(n_curr + 1 AS DOUBLE) / CAST(tc + 10 AS DOUBLE)))
+                              * 1000000000 + 0.5) AS BIGINT) AS nano
+            FROM full_b, tot)
+    SELECT 'bin_' || bin_id AS bucket, n_base, n_curr,
+           CAST(nano AS DOUBLE) / 1000000000.0 AS psi_term
+    FROM per
+    UNION ALL
+    SELECT 'TOTAL', CAST(sum(n_base) AS BIGINT), CAST(sum(n_curr) AS BIGINT),
+           CAST(CAST(sum(nano) AS BIGINT) AS DOUBLE) / 1000000000.0
+    FROM per
+"""
+
+
 def q_mann_whitney_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Whitney U test comparing 1-URGENT vs 5-LOW order prices —
     the nonparametric two-sample location test (rank-based, so it
@@ -850,6 +1241,41 @@ def q_mann_whitney_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_mann_whitney_report: group-by-cent-value average
+# ranks (2·R_A kept integer), exact tie term, identical z tree.
+TWINS["mann_whitney_report"] = """
+    WITH vals AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v,
+                         CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS is_a
+                  FROM orders WHERE o_orderpriority IN ('1-URGENT', '5-LOW')),
+    by_val AS (SELECT v,
+                      CAST(sum(is_a) AS BIGINT) AS na,
+                      CAST(sum(1 - is_a) AS BIGINT) AS nb,
+                      CAST(count(*) AS BIGINT) AS t
+               FROM vals GROUP BY v),
+    ranked AS (SELECT *, CAST(sum(t) OVER (ORDER BY v
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
+               FROM by_val),
+    agg AS (SELECT CAST(sum(na) AS BIGINT) AS n_a,
+                   CAST(sum(nb) AS BIGINT) AS n_b,
+                   sum(CAST(na AS HUGEINT) * (2 * (cum - t) + t + 1)) AS twice_ra,
+                   sum(CAST(t AS HUGEINT) * t * t - t) AS tie_term
+            FROM ranked),
+    s AS (SELECT *,
+                 (CAST(twice_ra AS DOUBLE)
+                  - CAST(CAST(n_a AS HUGEINT) * (n_a + 1) AS DOUBLE)) / 2.0 AS u,
+                 CAST(CAST(n_a AS HUGEINT) * n_b AS DOUBLE) AS nanb,
+                 CAST(n_a + n_b AS DOUBLE) AS n
+          FROM agg)
+    SELECT n_a, n_b, u AS u_stat,
+           floor(((u - nanb / 2.0)
+                  / sqrt(nanb / 12.0
+                         * ((n + 1) - CAST(tie_term AS DOUBLE) / (n * (n - 1)))))
+                 * 1000000 + 0.5) / 1000000.0 AS z_score,
+           floor((1.0 - 2.0 * u / nanb) * 1000000 + 0.5) / 1000000.0 AS rank_biserial
+    FROM s
+"""
+
+
 def q_theil_index_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil T inequality index of order prices per order status —
     the decomposable inequality measure that complements the Gini
@@ -893,6 +1319,28 @@ def q_theil_index_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_theil_index_by_status: per-row (x/μ)·ln(x/μ) snapped
+# to the nano grid BEFORE aggregation (the zipf/perplexity device), so
+# the status sum is exact integer arithmetic.
+TWINS["theil_index_by_status"] = """
+    WITH cents AS (SELECT o_orderstatus,
+                          CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
+                   FROM orders),
+    stats AS (SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n,
+                     sum(CAST(c AS HUGEINT)) AS s
+              FROM cents GROUP BY 1),
+    per AS (SELECT c.o_orderstatus, s.n,
+                   CAST(floor((CAST(c.c AS DOUBLE)
+                               / (CAST(s.s AS DOUBLE) / CAST(s.n AS DOUBLE)))
+                              * ln(CAST(c.c AS DOUBLE)
+                                   / (CAST(s.s AS DOUBLE) / CAST(s.n AS DOUBLE)))
+                              * 1000000000 + 0.5) AS BIGINT) AS nano
+            FROM cents c JOIN stats s USING (o_orderstatus))
+    SELECT o_orderstatus, n AS n_orders,
+           floor(((CAST(CAST(sum(nano) AS BIGINT) AS DOUBLE) / 1000000000.0)
+                  / CAST(n AS DOUBLE)) * 1000000 + 0.5) / 1000000.0 AS theil_t
+    FROM per GROUP BY o_orderstatus, n
+"""
 
 
 def q_winsorized_mean_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -950,6 +1398,34 @@ def q_winsorized_mean_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_winsorized_mean_by_status: ceil-rank p05/p95 cuts
+# over the (cents, orderkey) total order, exact clamped decimal sum.
+TWINS["winsorized_mean_by_status"] = """
+    WITH cents AS (SELECT o_orderstatus, o_orderkey,
+                          CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
+                   FROM orders),
+    ranked AS (SELECT o_orderstatus, c,
+                      CAST(row_number() OVER (PARTITION BY o_orderstatus
+                        ORDER BY c, o_orderkey) AS BIGINT) AS rn,
+                      CAST(count(*) OVER (PARTITION BY o_orderstatus) AS BIGINT) AS n
+               FROM cents),
+    cuts AS (SELECT o_orderstatus, max(n) AS n_orders,
+                    max(CASE WHEN rn = (n * 5 + 99) // 100 THEN c END) AS lo,
+                    max(CASE WHEN rn = (n * 95 + 99) // 100 THEN c END) AS hi
+             FROM ranked GROUP BY o_orderstatus),
+    agg AS (SELECT c.o_orderstatus, t.n_orders, t.lo, t.hi,
+                   sum(CAST(greatest(least(c.c, t.hi), t.lo) AS HUGEINT)) AS ws
+            FROM cents c JOIN cuts t USING (o_orderstatus)
+            GROUP BY c.o_orderstatus, t.n_orders, t.lo, t.hi)
+    SELECT o_orderstatus, n_orders,
+           CAST(lo AS DOUBLE) / 100.0 AS p05_price,
+           CAST(hi AS DOUBLE) / 100.0 AS p95_price,
+           floor(CAST(ws AS DOUBLE) / CAST(n_orders AS DOUBLE) / 100.0 * 10000 + 0.5)
+             / 10000.0 AS winsorized_mean
+    FROM agg
+"""
+
+
 def q_elasticity_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log-log demand-curve slope per brand — OLS of ln(quantity) on
     ln(catalog price) over lineitems, the price-elasticity proxy a
@@ -998,6 +1474,28 @@ def q_elasticity_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_lines",
         F.when(den != 0.0, round_det(num / den, 6)).alias("elasticity_slope"),
     )
+
+
+# FULL twin of q_elasticity_by_brand: micro-nat log grids, exact
+# HUGEINT OLS moments, zero-variance guard identical on both engines.
+TWINS["elasticity_by_brand"] = """
+    WITH pts AS (SELECT p.p_brand,
+        CAST(floor(ln(CAST(CAST(CAST(p.p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+                           AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS x6,
+        CAST(floor(ln(CAST(l.l_quantity AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS y6
+      FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
+    agg AS (SELECT p_brand, CAST(count(*) AS BIGINT) AS n_lines,
+                   sum(CAST(x6 AS HUGEINT)) AS sx, sum(CAST(y6 AS HUGEINT)) AS sy,
+                   sum(CAST(x6 AS HUGEINT) * y6) AS sxy,
+                   sum(CAST(x6 AS HUGEINT) * x6) AS sxx
+            FROM pts GROUP BY p_brand)
+    SELECT p_brand, n_lines,
+           CASE WHEN CAST(n_lines * sxx - sx * sx AS DOUBLE) <> 0.0
+                THEN floor((CAST(n_lines * sxy - sx * sy AS DOUBLE)
+                            / CAST(n_lines * sxx - sx * sx AS DOUBLE))
+                           * 1000000 + 0.5) / 1000000.0 END AS elasticity_slope
+    FROM agg
+"""
 
 
 def q_tail_index_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1058,6 +1556,36 @@ def q_tail_index_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("tail_alpha"),
     )
+
+
+# FULL twin of q_tail_index_report: identical (price DESC, orderkey)
+# total order for the top-201 statistics, the nano-nat log-excess
+# grid per term, exact integer sum, single divisions. The CASE guard
+# mirrors the Spark when(): NULL alpha iff every top value ties the
+# threshold.
+TWINS["tail_index_report"] = """
+    WITH topv AS (
+      SELECT o_totalprice, o_orderkey FROM orders
+      ORDER BY o_totalprice DESC, o_orderkey LIMIT 201),
+    r AS (
+      SELECT o_totalprice,
+             row_number() OVER (ORDER BY o_totalprice DESC, o_orderkey) AS rn
+      FROM topv),
+    thr AS (SELECT o_totalprice AS tp FROM r WHERE rn = 201),
+    agg AS (
+      SELECT thr.tp,
+             CAST(sum(CAST(floor(ln(r.o_totalprice / thr.tp) * 1000000000
+                                 + 0.5) AS BIGINT)) AS BIGINT) AS s
+      FROM r CROSS JOIN thr WHERE rn <= 200 GROUP BY thr.tp)
+    SELECT CAST(200 AS BIGINT) AS k_top,
+           tp AS threshold_price,
+           floor(CAST(s AS DOUBLE) / 200000000000.0 * 1000000 + 0.5)
+             / 1000000.0 AS hill_mean_log_excess,
+           CASE WHEN s <> 0 THEN
+             floor(200000000000.0 / CAST(s AS DOUBLE) * 1000000 + 0.5)
+               / 1000000.0 END AS tail_alpha
+    FROM agg
+"""
 
 
 def q_order_backlog_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1135,6 +1663,46 @@ def q_order_backlog_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_order_backlog_profile: identical +1/−1 sweep —
+# per-day delta aggregate, cumulative sum over the day order, spans
+# to the next delta day (last span = 1), peak via max + min-day
+# tie-break, time-weighted mean as exact integer area / days.
+TWINS["order_backlog_profile"] = """
+    WITH closed AS (
+      SELECT l_orderkey, max(CAST(l_shipdate AS DATE)) AS ship
+      FROM lineitem GROUP BY l_orderkey),
+    spans AS (
+      SELECT CAST(o_orderdate AS DATE) AS s, ship
+      FROM orders JOIN closed ON o_orderkey = l_orderkey),
+    deltas AS (
+      SELECT day, CAST(sum(d) AS BIGINT) AS delta FROM (
+        SELECT s AS day, 1 AS d FROM spans
+        UNION ALL SELECT ship + CAST(1 AS INTEGER), -1 FROM spans)
+      GROUP BY day),
+    cum AS (
+      SELECT day,
+             CAST(sum(delta) OVER (ORDER BY day
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+               AS open_n,
+             CAST(COALESCE(lead(day) OVER (ORDER BY day) - day, 1) AS BIGINT)
+               AS span_days
+      FROM deltas),
+    stats AS (
+      SELECT max(open_n) AS mx,
+             CAST(sum(open_n * span_days) AS BIGINT) AS area,
+             CAST(sum(span_days) AS BIGINT) AS days
+      FROM cum)
+    SELECT stats.mx AS peak_open_orders,
+           strftime(min(cum.day), '%Y-%m-%d') AS peak_day,
+           stats.days AS n_profile_days,
+           floor(CAST(stats.area AS DOUBLE) / CAST(stats.days AS DOUBLE)
+                 * 1000000 + 0.5) / 1000000.0 AS mean_open_orders
+    FROM cum CROSS JOIN stats
+    WHERE cum.open_n = stats.mx
+    GROUP BY stats.mx, stats.area, stats.days
+"""
+
+
 def q_mean_excess_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mean-excess function at the p90/p95/p99 thresholds of order
     value — the peaks-over-threshold diagnostic companioning the Hill
@@ -1195,6 +1763,35 @@ def q_mean_excess_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
+# FULL twin of q_mean_excess_report: the funnel-latency percentile
+# pick (rank = ceil(q·n) over the (cents, orderkey) total order) per
+# threshold, then exact integer excess sums and one IEEE division
+# per mean.
+TWINS["mean_excess_report"] = """
+    WITH vals AS (
+      SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS c,
+             o_orderkey
+      FROM orders),
+    ranked AS (
+      SELECT c, row_number() OVER (ORDER BY c, o_orderkey) AS rank,
+             count(*) OVER () AS n
+      FROM vals),
+    thr AS (
+      SELECT q.label, r.c AS u
+      FROM (VALUES ('p90', 9, 10), ('p95', 19, 20), ('p99', 99, 100))
+        q(label, num, den)
+      JOIN ranked r ON r.rank = (r.n * q.num + q.den - 1) // q.den)
+    SELECT thr.label AS quantile,
+           CAST(thr.u AS DOUBLE) / 100.0 AS threshold,
+           CAST(count(*) AS BIGINT) AS n_exceed,
+           floor(CAST(sum(vals.c - thr.u) AS DOUBLE)
+                 / CAST(count(*) AS DOUBLE) / 100.0 * 1000000 + 0.5)
+             / 1000000.0 AS mean_excess
+    FROM vals JOIN thr ON vals.c > thr.u
+    GROUP BY thr.label, thr.u
+"""
+
+
 def q_atkinson_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Atkinson inequality index (ε = 1) of order values per status —
     A = 1 − geomean/mean, the third member of the inequality family
@@ -1239,6 +1836,34 @@ def q_atkinson_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         round_det(g6, 6).alias("geomean_price"),
         round_det(F.lit(1.0) - g6 / mean, 6).alias("atkinson_e1"),
     )
+
+
+# FULL twin of q_atkinson_index: identical nano-nat log sums, the
+# exp output snapped to 1e-6 BEFORE use (temperature_resample
+# device), exact cent means, one IEEE tree.
+TWINS["atkinson_index"] = """
+    WITH agg AS (
+      SELECT o_orderstatus,
+             CAST(count(*) AS BIGINT) AS n,
+             CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
+               AS sc,
+             CAST(sum(CAST(floor(ln(o_totalprice) * 1000000000 + 0.5)
+                           AS BIGINT)) AS BIGINT) AS sl
+      FROM orders GROUP BY o_orderstatus)
+    SELECT o_orderstatus,
+           n AS n_orders,
+           floor(CAST(sc AS DOUBLE) / CAST(n * 100 AS DOUBLE) * 1000000 + 0.5)
+             / 1000000.0 AS mean_price,
+           floor((floor(exp(CAST(sl AS DOUBLE) / CAST(n AS DOUBLE)
+                            / 1000000000.0) * 1000000.0 + 0.5) / 1000000.0)
+                 * 1000000 + 0.5) / 1000000.0 AS geomean_price,
+           floor((1.0 - (floor(exp(CAST(sl AS DOUBLE) / CAST(n AS DOUBLE)
+                                   / 1000000000.0) * 1000000.0 + 0.5)
+                         / 1000000.0)
+                       / (CAST(sc AS DOUBLE) / CAST(n * 100 AS DOUBLE)))
+                 * 1000000 + 0.5) / 1000000.0 AS atkinson_e1
+    FROM agg
+"""
 
 
 def q_activity_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1301,3 +1926,31 @@ def q_activity_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("lift"),
     )
+
+
+# FULL twin of q_activity_decile_lift: native ntile(10) over the
+# (−n_events, user_id) total order equals ntile_exact by the pinned
+# device; the lift is the integer cross-ratio with one division.
+TWINS["activity_decile_lift"] = """
+    WITH pu AS (
+      SELECT user_id, CAST(count(*) AS BIGINT) AS ne,
+             CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+                  AS BIGINT) AS resp
+      FROM events GROUP BY user_id),
+    g AS (SELECT CAST(count(*) AS BIGINT) AS gu,
+                 CAST(sum(resp) AS BIGINT) AS gr FROM pu),
+    tiled AS (
+      SELECT CAST(ntile(10) OVER (ORDER BY -ne, user_id) AS BIGINT) AS decile,
+             resp
+      FROM pu)
+    SELECT decile,
+           CAST(count(*) AS BIGINT) AS n_users,
+           CAST(sum(resp) AS BIGINT) AS n_responders,
+           floor(CAST(sum(resp) AS DOUBLE) / CAST(count(*) AS DOUBLE)
+                 * 1000000 + 0.5) / 1000000.0 AS response_rate,
+           floor(CAST(sum(resp) * g.gu AS DOUBLE)
+                 / CAST(count(*) * g.gr AS DOUBLE) * 1000000 + 0.5)
+             / 1000000.0 AS lift
+    FROM tiled CROSS JOIN g
+    GROUP BY decile, g.gu, g.gr
+"""

@@ -13,7 +13,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 
 #: Marker lists live in the engine-neutral constants module (shared
-#: with the DuckDB oracle ledgers).
+#: with the DuckDB twins).
 from kickstarter_etl_pipeline_spark.constants import LANG_MARKERS
 
 #: Skip-gram co-occurrence window, in tokens on each side.
@@ -335,7 +335,8 @@ def unigram_surprisal(df: DataFrame) -> DataFrame:
     6-dp rounding of the per-doc mean absorbs. Sums of integers are
     exact and order-independent, so the shuffle order can't perturb the
     result. ``exp`` is applied to the already-rounded mean and snapped
-    at 2 dp. DuckDB replays the identical arithmetic (oracles_ext).
+    at 2 dp. DuckDB replays the identical arithmetic
+    (corpus_queries.TWINS["perplexity_proxy"]).
     """
     from kickstarter_etl_pipeline_spark.operators.partitioning import ensure_min_partitions
     from kickstarter_etl_pipeline_spark.operators.rounding import round_det

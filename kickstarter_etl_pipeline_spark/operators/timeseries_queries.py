@@ -18,6 +18,12 @@ from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
 
 
+#: DuckDB twin of each query defined here, by query name: SQL that
+#: returns the same rows on the same parquet tables. Each entry sits
+#: after its ``q_<name>`` function; queries.oracle_sql() collects them.
+TWINS: dict[str, str] = {}
+
+
 def q_acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Autocorrelation of the daily order-revenue series at lags 1–7 —
     the weekly-seasonality diagnostic a forecasting pipeline inspects
@@ -78,6 +84,38 @@ def q_acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             round_det(num / den, 6).alias("acf"),
         )
     )
+
+
+# FULL twin of q_acf_daily_revenue: exact HUGEINT sufficient stats per
+# lag + global, the identical IEEE tree for x̄ and r_k.
+TWINS["acf_daily_revenue"] = """
+    WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS day,
+                          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents
+                   FROM orders GROUP BY 1),
+    g AS (SELECT CAST(count(*) AS BIGINT) AS n,
+                 sum(CAST(cents AS HUGEINT)) AS s1,
+                 sum(CAST(cents AS HUGEINT) * cents) AS s2
+          FROM daily),
+    ks AS (SELECT unnest(generate_series(1, 7)) AS lag),
+    pairs AS (SELECT ks.lag, d.cents AS x, e.cents AS y
+              FROM daily d JOIN ks ON TRUE
+              JOIN daily e ON e.day = d.day + CAST(ks.lag AS INTEGER)),
+    per AS (SELECT lag, CAST(count(*) AS BIGINT) AS n_pairs,
+                   sum(CAST(x AS HUGEINT)) AS sx,
+                   sum(CAST(y AS HUGEINT)) AS sy,
+                   sum(CAST(x AS HUGEINT) * y) AS sxy
+            FROM pairs GROUP BY lag)
+    SELECT CAST(lag AS BIGINT) AS lag, n_pairs,
+           floor(((CAST(sxy AS DOUBLE)
+                   - (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE)) * CAST(sx + sy AS DOUBLE)
+                   + CAST(n_pairs AS DOUBLE) * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))
+                     * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE)))
+                  / (CAST(s2 AS DOUBLE)
+                     - CAST(n AS DOUBLE) * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))
+                       * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))))
+                 * 1000000 + 0.5) / 1000000.0 AS acf
+    FROM per, g
+"""
 
 
 def q_binseg_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -149,6 +187,38 @@ def q_binseg_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_binseg_changepoint: same nano-snapped |CUSUM| total
+# order, argmax with smallest-day tie-break, identical mean trees.
+TWINS["binseg_changepoint"] = """
+    WITH daily AS (SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS BIGINT) AS x
+                   FROM events GROUP BY 1),
+    ranked AS (SELECT day, x,
+                      CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS r,
+                      CAST(sum(x) OVER (ORDER BY day
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
+               FROM daily),
+    g AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS total FROM daily),
+    staged AS (SELECT day, r, cum, n, total,
+                      CAST(floor(abs(CAST(cum AS DOUBLE)
+                                     - CAST(r AS DOUBLE)
+                                       * (CAST(total AS DOUBLE) / CAST(n AS DOUBLE)))
+                                 * 1000000000 + 0.5) AS BIGINT) AS nano
+               FROM ranked, g
+               WHERE r < n),
+    best AS (SELECT max(nano) AS b FROM staged),
+    pick AS (SELECT min(day) AS cday FROM staged, best WHERE nano = b)
+    SELECT strftime(s.day, '%Y-%m-%d') AS changepoint_day,
+           s.n AS n_days,
+           CAST(s.nano AS DOUBLE) / 1000000000.0 AS cusum_stat,
+           floor((CAST(s.cum AS DOUBLE) / CAST(s.r AS DOUBLE)) * 1000000 + 0.5)
+             / 1000000.0 AS mean_before,
+           floor((CAST(s.total - s.cum AS DOUBLE) / CAST(s.n - s.r AS DOUBLE)) * 1000000 + 0.5)
+             / 1000000.0 AS mean_after
+    FROM staged s, best, pick
+    WHERE s.nano = best.b AND s.day = pick.cday
+"""
+
+
 def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stationary distribution of the per-user event-type Markov chain
     (8 power-iteration rounds on the transition counts) — "where does
@@ -207,6 +277,39 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_markov_stationary: identical transition counts and 8
+# unrolled integer power-iteration rounds — per-term floor division
+# then exact integer sums (order-free).
+_MARKOV_STEP = """
+    SELECT t.j AS state, CAST(sum(({v}.v * t.nij) // t.ni) AS BIGINT) AS v
+    FROM t JOIN {v} ON t.i = {v}.state GROUP BY t.j
+"""
+
+
+TWINS["markov_stationary"] = (
+    """
+    WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us, event_id FROM events),
+    steps AS (SELECT event_type AS i,
+                     lead(event_type) OVER (PARTITION BY user_id ORDER BY us, event_id) AS j
+              FROM e),
+    tm AS (SELECT i, j, CAST(count(*) AS BIGINT) AS nij
+           FROM steps WHERE j IS NOT NULL GROUP BY i, j),
+    rt AS (SELECT i, CAST(sum(nij) AS BIGINT) AS ni FROM tm GROUP BY i),
+    t AS (SELECT tm.i, tm.j, tm.nij, rt.ni FROM tm JOIN rt USING (i)),
+    ns AS (SELECT CAST(count(DISTINCT i) AS BIGINT) AS n FROM t),
+    v0 AS (SELECT DISTINCT i AS state, CAST(1000000000 AS BIGINT) // ns.n AS v
+           FROM t, ns),
+"""
+    + ",\n".join(
+        f"    v{k} AS ({_MARKOV_STEP.format(v=f'v{k - 1}')})" for k in range(1, 9)
+    )
+    + """
+    SELECT state AS event_type, CAST(v AS DOUBLE) / 1000000000.0 AS stationary_share
+    FROM v8
+"""
+)
+
+
 def q_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional next-event entropy per current event type —
     H(next | current=i) = −Σ_j p_ij·ln p_ij in nats: how predictable
@@ -246,6 +349,28 @@ def q_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             round_det(-(F.col("_s").cast("double") / 1e9), 6).alias("next_entropy_nats"),
         )
     )
+
+
+# FULL twin of q_transition_entropy: p·ln p nano-snapped per cell
+# before the per-state sum.
+TWINS["transition_entropy"] = """
+    WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us, event_id FROM events),
+    steps AS (SELECT event_type AS i,
+                     lead(event_type) OVER (PARTITION BY user_id ORDER BY us, event_id) AS j
+              FROM e),
+    tm AS (SELECT i, j, CAST(count(*) AS BIGINT) AS nij
+           FROM steps WHERE j IS NOT NULL GROUP BY i, j),
+    rt AS (SELECT i, CAST(sum(nij) AS BIGINT) AS ni FROM tm GROUP BY i),
+    per AS (SELECT tm.i, rt.ni,
+                   CAST(floor((CAST(nij AS DOUBLE) / CAST(ni AS DOUBLE))
+                              * ln(CAST(nij AS DOUBLE) / CAST(ni AS DOUBLE))
+                              * 1000000000 + 0.5) AS BIGINT) AS nano
+            FROM tm JOIN rt USING (i))
+    SELECT i AS event_type, ni AS n_transitions,
+           floor((-(CAST(CAST(sum(nano) AS BIGINT) AS DOUBLE) / 1000000000.0))
+                 * 1000000 + 0.5) / 1000000.0 AS next_entropy_nats
+    FROM per GROUP BY i, ni
+"""
 
 
 def q_mase_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -291,6 +416,30 @@ def q_mase_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
         round_det(mae7, 4).alias("mae_naive7"),
         round_det(mae7 / mae1, 6).alias("seasonal_to_naive_ratio"),
     )
+
+
+# FULL twin of q_mase_seasonal_naive: exact |cent| diffs by calendar
+# pairing, identical MAE/ratio trees.
+TWINS["mase_seasonal_naive"] = """
+    WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS day,
+                          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents
+                   FROM orders GROUP BY 1),
+    l1 AS (SELECT CAST(count(*) AS BIGINT) AS n_pairs_lag1,
+                  sum(CAST(abs(b.cents - a.cents) AS HUGEINT)) AS sa1
+           FROM daily a JOIN daily b ON b.day = a.day + 1),
+    l7 AS (SELECT CAST(count(*) AS BIGINT) AS n_pairs_lag7,
+                  sum(CAST(abs(b.cents - a.cents) AS HUGEINT)) AS sa7
+           FROM daily a JOIN daily b ON b.day = a.day + 7)
+    SELECT n_pairs_lag1, n_pairs_lag7,
+           floor((CAST(sa1 AS DOUBLE) / CAST(n_pairs_lag1 AS DOUBLE) / 100.0)
+                 * 10000 + 0.5) / 10000.0 AS mae_naive1,
+           floor((CAST(sa7 AS DOUBLE) / CAST(n_pairs_lag7 AS DOUBLE) / 100.0)
+                 * 10000 + 0.5) / 10000.0 AS mae_naive7,
+           floor(((CAST(sa7 AS DOUBLE) / CAST(n_pairs_lag7 AS DOUBLE) / 100.0)
+                  / (CAST(sa1 AS DOUBLE) / CAST(n_pairs_lag1 AS DOUBLE) / 100.0))
+                 * 1000000 + 0.5) / 1000000.0 AS seasonal_to_naive_ratio
+    FROM l1, l7
+"""
 
 
 def q_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -408,6 +557,63 @@ def q_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_hurst_exponent: identical block decomposition, exact
+# integer prefix sums, nano-snapped demeaned deviations and ln(R/S),
+# the shared ln2 literal in the collapsed equal-spacing slope.
+TWINS["hurst_exponent"] = """
+    WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS day,
+                          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS x
+                   FROM orders GROUP BY 1),
+    nd AS (SELECT CAST(count(*) AS BIGINT) AS n_days FROM daily),
+    ranked AS (SELECT x, CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS t FROM daily),
+    scaled AS (SELECT sc.s, x, (t - 1) // sc.s AS b, (t - 1) % sc.s + 1 AS i
+               FROM ranked, (VALUES (8), (16), (32), (64)) sc(s)),
+    bstat AS (SELECT s, b, CAST(count(*) AS BIGINT) AS bn,
+                     sum(CAST(x AS HUGEINT)) AS bs,
+                     sum(CAST(x AS HUGEINT) * x) AS bs2
+              FROM scaled GROUP BY s, b),
+    pref AS (SELECT s, b, i,
+                    CAST(sum(x) OVER (PARTITION BY s, b ORDER BY i
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
+             FROM scaled),
+    dev AS (SELECT p.s, p.b, t.bs, t.bs2,
+                   CAST(floor((CAST(p.cum AS DOUBLE)
+                               - CAST(p.i AS DOUBLE)
+                                 * (CAST(t.bs AS DOUBLE) / CAST(p.s AS DOUBLE)))
+                              * 1000000000 + 0.5) AS BIGINT) AS d
+            FROM pref p JOIN bstat t ON p.s = t.s AND p.b = t.b AND t.bn = p.s),
+    per_block AS (SELECT s, b, bs, bs2, max(d) - min(d) AS r_nano
+                  FROM dev GROUP BY s, b, bs, bs2),
+    vb AS (SELECT s, r_nano,
+                  greatest((CAST(bs2 AS DOUBLE)
+                   - CAST(s AS DOUBLE) * (CAST(bs AS DOUBLE) / CAST(s AS DOUBLE))
+                     * (CAST(bs AS DOUBLE) / CAST(s AS DOUBLE))) / CAST(s AS DOUBLE),
+                   0.0) AS var
+           FROM per_block
+           WHERE r_nano > 0),
+    lrs AS (SELECT s,
+                   CAST(floor(ln((CAST(r_nano AS DOUBLE) / 1000000000.0) / sqrt(var))
+                              * 1000000000 + 0.5) AS BIGINT) AS l
+            FROM vb WHERE sqrt(var) > 0),
+    per_scale AS (SELECT s, CAST(count(*) AS BIGINT) AS m, CAST(sum(l) AS BIGINT) AS ls
+                  FROM lrs GROUP BY s),
+    ys AS (SELECT s, CAST(ls AS DOUBLE) / 1000000000.0 / CAST(m AS DOUBLE) AS y
+           FROM per_scale),
+    piv AS (SELECT max(CASE WHEN s = 8 THEN y END) AS y8,
+                   max(CASE WHEN s = 16 THEN y END) AS y16,
+                   max(CASE WHEN s = 32 THEN y END) AS y32,
+                   max(CASE WHEN s = 64 THEN y END) AS y64
+            FROM ys)
+    SELECT n_days,
+           floor(y8 * 1000000 + 0.5) / 1000000.0 AS mean_log_rs_8,
+           floor(y64 * 1000000 + 0.5) / 1000000.0 AS mean_log_rs_64,
+           floor(((-1.5 * y8 - 0.5 * y16 + 0.5 * y32 + 1.5 * y64)
+                  / (5.0 * 0.6931471805599453)) * 1000000 + 0.5) / 1000000.0
+             AS hurst_exponent
+    FROM piv, nd
+"""
+
+
 def q_holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt double exponential smoothing (level + trend, α = 0.3,
     β = 0.1) over each order priority's daily revenue series, with a
@@ -503,6 +709,51 @@ def q_holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("mae_one_step"),
     )
+
+
+# FULL twin of q_holt_linear_forecast: the two-BIGINT Holt state
+# (level, trend) that list_reduce's struct lambda could not carry
+# (the round-9 blocker) rides a recursive CTE over the per-priority
+# row_number spine instead — no lambda anywhere. Pure integer
+# micro-dollar arithmetic with truncating division: DuckDB `//`
+# truncates toward zero exactly like the Spark side's
+# (a − a % 10) / 10 decimal divide, and the subtraction makes the
+# quotient exact under either rounding. l₂'s expression is repeated
+# inside b₂ (a recursive SELECT cannot reference its own aliases);
+# both occurrences are the same integer expression, so the repeat is
+# value-identical, mirroring the Spark fold reusing the l2 Column.
+TWINS["holt_linear_forecast"] = """
+    WITH RECURSIVE daily AS MATERIALIZED (
+      SELECT o_orderpriority AS pri, CAST(o_orderdate AS DATE) AS d,
+             CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 1000000) AS BIGINT)
+               AS y
+      FROM orders GROUP BY 1, 2),
+    ord AS MATERIALIZED (
+      SELECT pri, y,
+             CAST(row_number() OVER (PARTITION BY pri ORDER BY d) AS BIGINT) AS t
+      FROM daily),
+    nd AS MATERIALIZED (SELECT pri, max(t) AS n_days FROM ord GROUP BY pri),
+    holt AS (
+      SELECT pri, t, y AS l, CAST(0 AS BIGINT) AS b, CAST(0 AS BIGINT) AS sae
+      FROM ord WHERE t = 1
+      UNION ALL
+      SELECT o.pri, o.t,
+             (3 * o.y + 7 * (h.l + h.b)) // 10,
+             ((3 * o.y + 7 * (h.l + h.b)) // 10 - h.l + 9 * h.b) // 10,
+             h.sae + abs(o.y - (h.l + h.b))
+      FROM holt h JOIN ord o ON o.pri = h.pri AND o.t = h.t + 1)
+    SELECT h.pri AS o_orderpriority,
+           nd.n_days,
+           floor(CAST(h.l AS DOUBLE) / 1000000.0 * 1000000 + 0.5) / 1000000.0
+             AS level,
+           floor(CAST(h.b AS DOUBLE) / 1000000.0 * 1000000 + 0.5) / 1000000.0
+             AS trend,
+           floor(CAST(h.l + 7 * h.b AS DOUBLE) / 1000000.0 * 1000000 + 0.5)
+             / 1000000.0 AS forecast_7d,
+           floor(CAST(h.sae AS DOUBLE) / NULLIF(CAST(nd.n_days - 1 AS DOUBLE), 0)
+                 / 1000000.0 * 1000000 + 0.5) / 1000000.0 AS mae_one_step
+    FROM holt h JOIN nd ON nd.pri = h.pri AND h.t = nd.n_days
+"""
 
 
 def q_holt_winters_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -618,6 +869,74 @@ def q_holt_winters_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_holt_winters_forecast: the recursive-CTE state spine
+# generalized to VECTOR state — level, trend, SAE and the seven
+# per-weekday seasonal registers ride as ten BIGINT columns. Every
+# occurrence of s_active / l2 below is the same integer expression
+# repeated (a recursive SELECT cannot reference its own aliases), so
+# the repeats are value-identical to the Spark fold reusing the
+# Columns. dow is pure epoch arithmetic ((days-since-1970 + 4) % 7,
+# the traffic_seasonality device). Truncating `//` mirrors the Spark
+# side's (a − a % k) decimal divide exactly (both toward zero; exact
+# either way after the remainder subtraction).
+def _holt_winters_oracle_sql() -> str:
+    s_active = "CASE " + " ".join(
+        f"WHEN o.dow = {k} THEN h.s{k}" for k in range(7)
+    ) + " END"
+    l2 = f"(3 * (o.y - ({s_active})) + 7 * (h.l + h.b)) // 10"
+    b2 = f"(({l2}) - h.l + 9 * h.b) // 10"
+    sae2 = f"h.sae + abs(o.y - (h.l + h.b + ({s_active})))"
+    seas = ",\n             ".join(
+        f"CASE WHEN o.dow = {k} THEN (o.y - ({l2}) + 4 * h.s{k}) // 5 "
+        f"ELSE h.s{k} END"
+        for k in range(7)
+    )
+    zeros = ", ".join(f"CAST(0 AS BIGINT) AS s{k}" for k in range(7))
+    s_cols = ", ".join(f"s{k}" for k in range(7))
+    peak = "greatest(" + ", ".join(f"h.s{k}" for k in range(7)) + ")"
+    trough = "least(" + ", ".join(f"h.s{k}" for k in range(7)) + ")"
+    return f"""
+    WITH RECURSIVE daily AS MATERIALIZED (
+      SELECT o_orderpriority AS pri, CAST(o_orderdate AS DATE) AS d,
+             CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 1000000) AS BIGINT)
+               AS y
+      FROM orders GROUP BY 1, 2),
+    ord AS MATERIALIZED (
+      SELECT pri, y,
+             (CAST(d - DATE '1970-01-01' AS BIGINT) + 4) % 7 AS dow,
+             CAST(row_number() OVER (PARTITION BY pri ORDER BY d) AS BIGINT) AS t
+      FROM daily),
+    nd AS MATERIALIZED (SELECT pri, max(t) AS n_days FROM ord GROUP BY pri),
+    hw AS (
+      SELECT pri, t, y AS l, CAST(0 AS BIGINT) AS b, CAST(0 AS BIGINT) AS sae,
+             {zeros}
+      FROM ord WHERE t = 1
+      UNION ALL
+      SELECT o.pri, o.t,
+             {l2},
+             {b2},
+             {sae2},
+             {seas}
+      FROM hw h JOIN ord o ON o.pri = h.pri AND o.t = h.t + 1)
+    SELECT h.pri AS o_orderpriority,
+           nd.n_days,
+           floor(CAST(h.l AS DOUBLE) / 1000000.0 * 1000000 + 0.5) / 1000000.0
+             AS level,
+           floor(CAST(h.b AS DOUBLE) / 1000000.0 * 1000000 + 0.5) / 1000000.0
+             AS trend,
+           floor(CAST({peak} AS DOUBLE) / 1000000.0 * 1000000 + 0.5)
+             / 1000000.0 AS season_peak,
+           floor(CAST({trough} AS DOUBLE) / 1000000.0 * 1000000 + 0.5)
+             / 1000000.0 AS season_trough,
+           floor(CAST(h.sae AS DOUBLE) / NULLIF(CAST(nd.n_days - 1 AS DOUBLE), 0)
+                 / 1000000.0 * 1000000 + 0.5) / 1000000.0 AS mae_one_step
+    FROM hw h JOIN nd ON nd.pri = h.pri AND h.t = nd.n_days
+"""
+
+
+TWINS["holt_winters_forecast"] = _holt_winters_oracle_sql()
+
+
 def q_croston_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Croston's method (Croston 1972; α = 1/5) for INTERMITTENT demand
     — the sparse-series companion to Holt: per part, two exponential
@@ -699,6 +1018,48 @@ def q_croston_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_croston_forecast: device-9 recursive CTE with the
+# (z, p, dprev) Croston state as BIGINT columns over the per-part
+# demand-day row_number spine; the pivot parts are the 5 smallest by
+# (md5(key-as-string), key). α = 1/5 exactly; `//` truncation mirrors
+# the Spark decimal divide; gaps are integer epoch-day differences.
+TWINS["croston_forecast"] = """
+    WITH RECURSIVE piv AS MATERIALIZED (
+      SELECT p_partkey FROM part
+      ORDER BY md5(CAST(p_partkey AS VARCHAR)), p_partkey LIMIT 5),
+    daily AS MATERIALIZED (
+      SELECT l_partkey AS k,
+             CAST(CAST(l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS d,
+             CAST(sum(CAST(l_quantity AS DECIMAL(15,2)) * 1000000) AS BIGINT)
+               AS y
+      FROM lineitem JOIN piv ON l_partkey = p_partkey
+      GROUP BY 1, 2),
+    ord AS MATERIALIZED (
+      SELECT k, d, y,
+             CAST(row_number() OVER (PARTITION BY k ORDER BY d) AS BIGINT) AS t
+      FROM daily),
+    nd AS MATERIALIZED (SELECT k, max(t) AS n FROM ord GROUP BY k),
+    cr AS (
+      SELECT k, t, y AS z, CAST(1000000 AS BIGINT) AS p, d AS dprev
+      FROM ord WHERE t = 1
+      UNION ALL
+      SELECT o.k, o.t,
+             (o.y + 4 * h.z) // 5,
+             ((o.d - h.dprev) * 1000000 + 4 * h.p) // 5,
+             o.d
+      FROM cr h JOIN ord o ON o.k = h.k AND o.t = h.t + 1)
+    SELECT h.k AS p_partkey,
+           nd.n AS n_demand_days,
+           floor(CAST(h.z AS DOUBLE) / 1000000.0 * 1000000 + 0.5) / 1000000.0
+             AS smoothed_demand,
+           floor(CAST(h.p AS DOUBLE) / 1000000.0 * 1000000 + 0.5) / 1000000.0
+             AS smoothed_interval_days,
+           floor(CAST(h.z AS DOUBLE) / CAST(h.p AS DOUBLE) * 1000000 + 0.5)
+             / 1000000.0 AS demand_rate_per_day
+    FROM cr h JOIN nd ON nd.k = h.k AND h.t = nd.n
+"""
+
+
 def q_weekday_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classical additive seasonal decomposition, weekday component —
     the descriptive counterpart of Holt-Winters' recursive registers:
@@ -747,3 +1108,34 @@ def q_weekday_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFr
             6,
         ).alias("seasonal_effect"),
     )
+
+
+# FULL twin of q_weekday_seasonal_decomposition: calendar-paired
+# centered 7-day windows (complete windows only), detrended values
+# carried as the INTEGER 7·x − Σ7, one IEEE division per weekday.
+# DATE + BIGINT is not a DuckDB function — the offset is cast to
+# INTEGER (the acf_daily_revenue lesson).
+TWINS["weekday_seasonal_decomposition"] = """
+    WITH daily AS (
+      SELECT CAST(o_orderdate AS DATE) AS d,
+             CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
+               AS cents
+      FROM orders GROUP BY 1),
+    offs AS (
+      SELECT d, d + CAST(r.o AS INTEGER) AS nd
+      FROM daily, unnest(range(-3, 4)) AS r(o)),
+    win AS (
+      SELECT offs.d, CAST(count(*) AS BIGINT) AS k,
+             CAST(sum(n.cents) AS BIGINT) AS s7
+      FROM offs JOIN daily n ON n.d = offs.nd
+      GROUP BY offs.d HAVING count(*) = 7),
+    centered AS (
+      SELECT (CAST(w.d - DATE '1970-01-01' AS BIGINT) + 4) % 7 AS dow,
+             7 * daily.cents - w.s7 AS detr7
+      FROM win w JOIN daily ON daily.d = w.d)
+    SELECT CAST(dow AS INTEGER) AS dow,
+           CAST(count(*) AS BIGINT) AS n_windows,
+           floor(CAST(sum(detr7) AS DOUBLE) / CAST(count(*) * 700 AS DOUBLE)
+                 * 1000000 + 0.5) / 1000000.0 AS seasonal_effect
+    FROM centered GROUP BY dow
+"""

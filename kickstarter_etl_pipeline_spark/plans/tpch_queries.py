@@ -1,32 +1,17 @@
-"""TPC-H query-shape wrappers (the 22 classic shapes adapted to the reduced schema). Moved verbatim from queries.py; the oracle SQL twins stay in the registry module."""
+"""TPC-H query-shape wrappers (the 22 classic shapes adapted to the reduced schema). Moved verbatim from queries.py; each DuckDB twin sits beside its query in TWINS."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from kickstarter_etl_pipeline_spark.operators import events as EV
-from kickstarter_etl_pipeline_spark.operators import text as TX
-from kickstarter_etl_pipeline_spark.operators.dedup import (
-    exact_dedup_groups,
-    minhash_dedup_pairs,
-    ngram_jaccard_pairs,
-    simhash_candidates,
-)
-from kickstarter_etl_pipeline_spark.operators.dims import build_dim_date
-from kickstarter_etl_pipeline_spark.operators.multimodal import documents_as_media, extract_features
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
-from kickstarter_etl_pipeline_spark.operators.similarity import brute_force_topk, lsh_topk
-from kickstarter_etl_pipeline_spark.operators.transform import fractional_days
-from kickstarter_etl_pipeline_spark.plans.star import (
-    tpch_dim_category,
-    tpch_dim_state,
-    tpch_fact,
-    tpch_star,
-)
-from kickstarter_etl_pipeline_spark.session import ensure_runtime_confs
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
-from kickstarter_etl_pipeline_spark.streaming.events_stream import streaming_tumbling_counts
 
+
+#: DuckDB twin of each query defined here, by query name: SQL that
+#: returns the same rows on the same parquet tables. Each entry sits
+#: after its ``q_<name>`` function; queries.oracle_sql() collects them.
+TWINS: dict[str, str] = {}
 
 
 def q_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -71,6 +56,28 @@ def q_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["q1_pricing_summary"] = """
+        SELECT l_returnflag, l_linestatus, sum_qty, sum_base_price, sum_disc_price,
+               sum_charge,
+               floor(sum_qty / count_order * 1000000 + 0.5) / 1000000.0 AS avg_qty,
+               floor(sum_base_price / count_order * 1000000 + 0.5) / 1000000.0 AS avg_price,
+               floor(sum_disc / count_order * 1000000 + 0.5) / 1000000.0 AS avg_disc,
+               count_order
+        FROM (
+          SELECT l_returnflag, l_linestatus,
+                 round(sum(l_quantity), 4) AS sum_qty,
+                 round(sum(l_extendedprice), 2) AS sum_base_price,
+                 CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_disc_price,
+                 CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_charge,
+                 round(sum(l_discount), 4) AS sum_disc,
+                 count(*) AS count_order
+          FROM lineitem
+          WHERE l_shipdate <= TIMESTAMP '2000-06-30 00:00:00'
+          GROUP BY l_returnflag, l_linestatus
+        )
+    """
+
+
 def q_q1_pricing_summary_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same Q1 via the SQL API (temp view + spark.sql) — Catalyst
     produces the identical plan; proves the engine's SQL surface."""
@@ -99,6 +106,11 @@ def q_q1_pricing_summary_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Identical semantics to q1_pricing_summary: the SQL-API variant must
+# hash-match the same twin.
+TWINS["q1_pricing_summary_sql"] = TWINS["q1_pricing_summary"]
+
+
 def q_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: EXISTS-style left-semi join with a non-equi
     residual condition (any lineitem shipped >60 days after order)."""
@@ -111,6 +123,16 @@ def q_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         "left_semi",
     )
     return late.groupBy("o_orderpriority").agg(F.count("*").alias("n_orders"))
+
+
+TWINS["q4_order_priority"] = """
+        SELECT o_orderpriority, count(*) AS n_orders
+        FROM orders o
+        WHERE EXISTS (SELECT 1 FROM lineitem l
+                      WHERE l.l_orderkey = o.o_orderkey
+                        AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
+        GROUP BY o_orderpriority
+    """
 
 
 def q_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -137,6 +159,20 @@ def q_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("_qty").cast("double").alias("sum_qty"),
         )
     )
+
+
+TWINS["q18_large_orders"] = """
+        WITH big AS (
+          SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(18,2))) AS qty
+          FROM lineitem GROUP BY l_orderkey HAVING qty > 250
+        )
+        SELECT c_custkey, c_name, o_orderkey,
+               strftime(o_orderdate, '%Y-%m-%d') AS order_date,
+               o_totalprice, CAST(qty AS DOUBLE) AS sum_qty
+        FROM big
+        JOIN orders ON l_orderkey = o_orderkey
+        JOIN customer ON o_custkey = c_custkey
+    """
 
 
 def q_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -176,6 +212,22 @@ def q_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["q7_nation_volume"] = """
+        SELECT n2.n_name AS supp_nation, n1.n_name AS cust_nation,
+               CAST(year(l_shipdate) AS INTEGER) AS l_year,
+               CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue,
+               count(*) AS n_items
+        FROM lineitem
+        JOIN orders ON l_orderkey = o_orderkey
+        JOIN customer ON o_custkey = c_custkey
+        JOIN supplier ON l_suppkey = s_suppkey
+        JOIN nation n1 ON c_nationkey = n1.n_nationkey
+        JOIN nation n2 ON s_nationkey = n2.n_nationkey
+        WHERE n1.n_name <> n2.n_name
+        GROUP BY 1, 2, 3
+    """
+
+
 def q_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: promo revenue share — conditional aggregation
     over a broadcast part join, one output row. The share is derived
@@ -201,6 +253,23 @@ def q_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["q14_promo_revenue"] = """
+        SELECT floor(CAST(promo AS DOUBLE) * 100.0 / CAST(total AS DOUBLE) * 1000000 + 0.5) / 1000000.0 AS promo_revenue_pct,
+               CAST(round(total, 2) AS DOUBLE) AS total_revenue,
+               n_items
+        FROM (
+          SELECT sum(CASE WHEN p_type = 'PROMO'
+                          THEN CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))
+                          ELSE CAST(0 AS DECIMAL(18,6)) END) AS promo,
+                 sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS total,
+                 count(*) AS n_items
+          FROM lineitem JOIN part ON l_partkey = p_partkey
+          WHERE l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
+            AND l_shipdate <  TIMESTAMP '1998-07-01 00:00:00'
+        )
+    """
+
+
 def q_q19_or_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: disjunction of conjunctive brand/quantity/size
     ranges — the OR-of-ANDs predicate exercises boolean pushdown through
@@ -224,6 +293,16 @@ def q_q19_or_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["q19_or_predicates"] = """
+        SELECT CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue,
+               count(*) AS n_items
+        FROM lineitem JOIN part ON l_partkey = p_partkey
+        WHERE (p_brand = 'Brand#12' AND l_quantity BETWEEN 1 AND 11 AND p_size BETWEEN 1 AND 5)
+           OR (p_brand = 'Brand#15' AND l_quantity BETWEEN 10 AND 20 AND p_size BETWEEN 1 AND 10)
+           OR (p_brand = 'Brand#17' AND l_quantity BETWEEN 20 AND 30 AND p_size BETWEEN 1 AND 15)
+    """
+
+
 def q_q22_idle_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: scalar subquery (global average balance) + anti
     join (customers with no 1999 orders), grouped by segment. The
@@ -245,6 +324,21 @@ def q_q22_idle_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_customers"),
         F.round(F.sum(F.col("c_acctbal").cast("decimal(18,2)")), 2).cast("double").alias("total_balance"),
     )
+
+
+TWINS["q22_idle_balances"] = """
+        WITH avg_bal AS (
+          SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS a
+          FROM customer WHERE c_acctbal > 0
+        )
+        SELECT c_mktsegment, count(*) AS n_customers,
+               CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,2))), 2) AS DOUBLE) AS total_balance
+        FROM customer, avg_bal
+        WHERE c_acctbal > a
+          AND NOT EXISTS (SELECT 1 FROM orders
+                          WHERE o_custkey = c_custkey AND year(o_orderdate) = 1999)
+        GROUP BY c_mktsegment
+    """
 
 
 def q_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -290,6 +384,28 @@ def q_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["q2_min_cost_supplier"] = """
+        WITH uc AS (SELECT l_partkey, l_suppkey,
+                           l_extendedprice / l_quantity AS _uc
+                    FROM lineitem),
+        ps AS (SELECT l_partkey, l_suppkey, min(_uc) AS supp_cost
+               FROM uc GROUP BY 1, 2),
+        pm AS (SELECT l_partkey, min(supp_cost) AS best FROM ps GROUP BY 1),
+        es AS (SELECT s_suppkey, s_name, n_name
+               FROM supplier
+               JOIN nation ON s_nationkey = n_nationkey
+               JOIN region ON n_regionkey = r_regionkey
+               WHERE r_name = 'EUROPE')
+        SELECT p_partkey, p_name, s_name, n_name AS supp_nation,
+               floor(supp_cost * 1000000 + 0.5) / 1000000.0 AS min_unit_cost
+        FROM ps
+        JOIN pm USING (l_partkey)
+        JOIN part ON l_partkey = p_partkey
+        JOIN es ON l_suppkey = s_suppkey
+        WHERE supp_cost = best AND p_size <= 10
+    """
+
+
 def q_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: forecast-revenue delta — a pure scan-filter-agg
     with range predicates on date, discount, and quantity, no joins.
@@ -309,6 +425,17 @@ def q_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("revenue"),
         F.count("*").alias("n_items"),
     )
+
+
+TWINS["q6_forecast_revenue"] = """
+        SELECT CAST(round(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue,
+               count(*) AS n_items
+        FROM lineitem
+        WHERE l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
+          AND l_shipdate <  TIMESTAMP '1999-01-01 00:00:00'
+          AND l_discount >= 0.02 AND l_discount <= 0.06
+          AND l_quantity < 24
+    """
 
 
 def q_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -340,6 +467,20 @@ def q_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["q9_product_profit"] = """
+        SELECT n_name AS nation, CAST(year(l_shipdate) AS INTEGER) AS o_year,
+               CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
+                                   - p_retailprice * l_quantity * 0.1 AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_profit,
+               count(*) AS n_items
+        FROM lineitem
+        JOIN part ON l_partkey = p_partkey
+        JOIN supplier ON l_suppkey = s_suppkey
+        JOIN nation ON s_nationkey = n_nationkey
+        WHERE p_name LIKE '%widget%'
+        GROUP BY 1, 2
+    """
+
+
 def q_q11_important_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape: per-part shipped value, kept only where the
     part's value exceeds 1.3× the average per-part share of the global
@@ -368,6 +509,16 @@ def q_q11_important_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["q11_important_values"] = """
+        WITH pp AS (SELECT l_partkey, sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS val
+                    FROM lineitem GROUP BY 1),
+        s AS (SELECT sum(val) AS total, count(*) AS nparts FROM pp)
+        SELECT l_partkey AS p_partkey, CAST(round(val, 2) AS DOUBLE) AS part_value
+        FROM pp CROSS JOIN s
+        WHERE CAST(val AS DOUBLE) > CAST(total AS DOUBLE) * 1.3 / nparts
+    """
+
+
 def q_q12_priority_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape: line counts by status split into high/low order
     priority for a one-year ship window (no l_shipmode in this schema;
@@ -385,6 +536,17 @@ def q_q12_priority_class(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(high, 1).otherwise(0)).cast("long").alias("high_line_count"),
         F.sum(F.when(high, 0).otherwise(1)).cast("long").alias("low_line_count"),
     )
+
+
+TWINS["q12_priority_class"] = """
+        SELECT l_linestatus,
+               CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+               CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
+        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        WHERE l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
+          AND l_shipdate <  TIMESTAMP '1999-01-01 00:00:00'
+        GROUP BY 1
+    """
 
 
 def q_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -417,6 +579,21 @@ def q_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["q15_top_supplier"] = """
+        WITH rev AS (SELECT l_suppkey,
+                            sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS r
+                     FROM lineitem
+                     WHERE l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
+                       AND l_shipdate <  TIMESTAMP '1998-07-01 00:00:00'
+                     GROUP BY 1),
+        m AS (SELECT max(r) AS mr FROM rev)
+        SELECT s_suppkey, s_name, CAST(round(r, 2) AS DOUBLE) AS total_revenue
+        FROM rev CROSS JOIN m
+        JOIN supplier ON l_suppkey = s_suppkey
+        WHERE r = mr
+    """
+
+
 def q_q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: distinct-supplier counts per (brand, type, size)
     for non-excluded parts, with bad suppliers (negative balance — the
@@ -437,6 +614,16 @@ def q_q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
     )
+
+
+TWINS["q16_supplier_part_counts"] = """
+        SELECT p_brand, p_type, p_size,
+               count(DISTINCT l_suppkey) AS supplier_cnt
+        FROM lineitem JOIN part ON l_partkey = p_partkey
+        WHERE p_brand <> 'Brand#15' AND p_type <> 'PROMO'
+          AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+        GROUP BY 1, 2, 3
+    """
 
 
 def q_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -468,6 +655,19 @@ def q_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_items"),
         )
     )
+
+
+TWINS["q17_small_qty_revenue"] = """
+        WITH th AS (SELECT l_partkey,
+                           0.2 * CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS t
+                    FROM lineitem GROUP BY 1)
+        SELECT floor(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 * 10000 + 0.5) / 10000.0 AS avg_yearly,
+               count(*) AS n_items
+        FROM lineitem
+        JOIN part ON l_partkey = p_partkey
+        JOIN th USING (l_partkey)
+        WHERE p_brand = 'Brand#3' AND l_quantity < t
+    """
 
 
 def q_q20_promo_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -507,6 +707,23 @@ def q_q20_promo_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["q20_promo_part_suppliers"] = """
+        WITH pq AS (SELECT l_suppkey, sum(CAST(l_quantity AS DECIMAL(18,2))) AS q
+                    FROM lineitem JOIN part ON l_partkey = p_partkey
+                    WHERE p_type = 'PROMO'
+                      AND l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
+                      AND l_shipdate <  TIMESTAMP '1999-01-01 00:00:00'
+                    GROUP BY 1),
+        s AS (SELECT sum(q) AS total, count(*) AS nsupp FROM pq)
+        SELECT s_suppkey, s_name, n_name AS supp_nation,
+               CAST(round(q, 2) AS DOUBLE) AS promo_qty
+        FROM pq CROSS JOIN s
+        JOIN supplier ON l_suppkey = s_suppkey
+        JOIN nation ON s_nationkey = n_nationkey
+        WHERE CAST(q AS DOUBLE) > CAST(total AS DOUBLE) * 0.5 / nsupp
+    """
+
+
 def q_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape: suppliers who single-handedly held up
     multi-supplier finalized orders — the EXISTS + NOT-EXISTS self-join
@@ -535,6 +752,23 @@ def q_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(supplier, F.col("l_suppkey") == supplier.s_suppkey)
         .select("s_suppkey", "s_name", "numwait")
     )
+
+
+TWINS["q21_waiting_suppliers"] = """
+        WITH po AS (SELECT l_orderkey, l_suppkey,
+                           max(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS has_ret
+                    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+                    WHERE o_orderstatus = 'F'
+                    GROUP BY 1, 2),
+        oo AS (SELECT l_orderkey, count(*) AS n_supp, sum(has_ret) AS n_ret
+               FROM po GROUP BY 1)
+        SELECT s_suppkey, s_name, count(*) AS numwait
+        FROM po
+        JOIN oo USING (l_orderkey)
+        JOIN supplier ON l_suppkey = s_suppkey
+        WHERE has_ret = 1 AND n_supp >= 2 AND n_ret = 1
+        GROUP BY 1, 2
+    """
 
 
 def q_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -570,6 +804,29 @@ def q_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["q8_market_share"] = """
+        SELECT o_year,
+               floor(CAST(n5 AS DOUBLE) / CAST(total AS DOUBLE) * 1000000 + 0.5) / 1000000.0 AS mkt_share,
+               CAST(round(total, 2) AS DOUBLE) AS region_revenue
+        FROM (
+          SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
+                 sum(CASE WHEN n2.n_name = 'NATION_5'
+                          THEN CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))
+                          ELSE CAST(0 AS DECIMAL(18,6)) END) AS n5,
+                 sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS total
+          FROM lineitem
+          JOIN orders ON l_orderkey = o_orderkey
+          JOIN customer ON o_custkey = c_custkey
+          JOIN supplier ON l_suppkey = s_suppkey
+          JOIN nation n1 ON c_nationkey = n1.n_nationkey
+          JOIN nation n2 ON s_nationkey = n2.n_nationkey
+          JOIN region ON n1.n_regionkey = r_regionkey
+          WHERE r_name = 'ASIA'
+          GROUP BY 1
+        )
+    """
+
+
 def q_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: revenue lost to returns per customer, top 20 —
     selective fact filter, join back to the customer dim, ranked."""
@@ -597,6 +854,19 @@ def q_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["q10_returned_items"] = """
+        SELECT c_custkey, c_name, c_mktsegment,
+               CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS lost_revenue,
+               count(*) AS n_items
+        FROM lineitem
+        JOIN orders ON l_orderkey = o_orderkey
+        JOIN customer ON o_custkey = c_custkey
+        WHERE l_returnflag = 'R'
+        GROUP BY 1, 2, 3
+        ORDER BY lost_revenue DESC, c_custkey LIMIT 20
+    """
+
+
 def q_q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: distribution of orders-per-customer INCLUDING
     zero-order customers (left join, count over nullable key, then a
@@ -609,6 +879,17 @@ def q_q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFram
         .agg(F.count("o_orderkey").alias("n_orders"))
     )
     return per_cust.groupBy("n_orders").agg(F.count("*").alias("n_customers"))
+
+
+TWINS["q13_order_count_distribution"] = """
+        SELECT n_orders, count(*) AS n_customers
+        FROM (
+          SELECT c_custkey, count(o_orderkey) AS n_orders
+          FROM customer LEFT JOIN orders ON c_custkey = o_custkey
+          GROUP BY c_custkey
+        )
+        GROUP BY n_orders
+    """
 
 
 def q_pipe_syntax_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -636,6 +917,21 @@ def q_pipe_syntax_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_pipe_syntax_pricing: the STANDARD-form SQL the pipe
+# dialect must lower to — the grade proves dialect equivalence.
+TWINS["pipe_syntax_pricing"] = """
+    SELECT l_returnflag, l_linestatus,
+           CAST(count(*) AS BIGINT) AS n_items,
+           round(sum(l_quantity), 4) AS sum_qty,
+           CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
+             AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_disc_price
+    FROM lineitem
+    WHERE l_quantity >= 10
+    GROUP BY 1, 2
+    HAVING count(*) > 0
+"""
+
+
 def q_lateral_topn_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL subquery (Spark 4 SQL surface): per order
     priority, the top-3 orders by (price DESC, key) — the classic
@@ -654,6 +950,17 @@ def q_lateral_topn_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
                  ORDER BY o_totalprice DESC, o_orderkey LIMIT 3) l
         """
     )
+
+
+# FULL twin of q_lateral_topn_orders: the IDENTICAL lateral SQL —
+# both engines run a genuine correlated LATERAL with ORDER+LIMIT.
+TWINS["lateral_topn_orders"] = """
+    SELECT p.o_orderpriority, l.o_orderkey, l.o_totalprice
+    FROM (SELECT DISTINCT o_orderpriority FROM orders) p,
+    LATERAL (SELECT o_orderkey, o_totalprice FROM orders o
+             WHERE o.o_orderpriority = p.o_orderpriority
+             ORDER BY o_totalprice DESC, o_orderkey LIMIT 3) l
+"""
 
 
 def q_sql_scripting_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -681,3 +988,20 @@ def q_sql_scripting_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         END
         """
     )
+
+
+# FULL twin of q_sql_scripting_rollup: the scripting block's session
+# variable inlined as a scalar subquery — the cutoff is an
+# exactly-stored double (100th highest price), so the strict
+# inequality partitions rows identically in both engines.
+TWINS["sql_scripting_rollup"] = """
+    WITH c AS (SELECT o_totalprice AS cutoff FROM orders
+               ORDER BY o_totalprice DESC, o_orderkey
+               LIMIT 1 OFFSET 99)
+    SELECT o_orderpriority,
+           CAST(count(*) AS BIGINT) AS n_above,
+           CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))), 2)
+             AS DOUBLE) AS total_above
+    FROM orders, c WHERE o_totalprice > cutoff
+    GROUP BY o_orderpriority
+"""

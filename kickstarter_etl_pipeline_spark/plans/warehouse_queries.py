@@ -2,31 +2,18 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from kickstarter_etl_pipeline_spark.operators import events as EV
-from kickstarter_etl_pipeline_spark.operators import text as TX
-from kickstarter_etl_pipeline_spark.operators.dedup import (
-    exact_dedup_groups,
-    minhash_dedup_pairs,
-    ngram_jaccard_pairs,
-    simhash_candidates,
-)
-from kickstarter_etl_pipeline_spark.operators.dims import build_dim_date
-from kickstarter_etl_pipeline_spark.operators.multimodal import documents_as_media, extract_features
+from kickstarter_etl_pipeline_spark import qdefs_star_events
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
-from kickstarter_etl_pipeline_spark.operators.similarity import brute_force_topk, lsh_topk
-from kickstarter_etl_pipeline_spark.operators.transform import fractional_days
-from kickstarter_etl_pipeline_spark.plans.star import (
-    tpch_dim_category,
-    tpch_dim_state,
-    tpch_fact,
-    tpch_star,
-)
-from kickstarter_etl_pipeline_spark.session import ensure_runtime_confs
+from kickstarter_etl_pipeline_spark.plans.star import tpch_dim_category, tpch_dim_state, tpch_fact
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
-from kickstarter_etl_pipeline_spark.streaming.events_stream import streaming_tumbling_counts
 
+
+#: DuckDB twin of each query defined here, by query name: SQL that
+#: returns the same rows on the same parquet tables. Each entry sits
+#: after its ``q_<name>`` function; queries.oracle_sql() collects them.
+TWINS: dict[str, str] = {}
 
 
 def q_cdc_apply_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -69,6 +56,26 @@ def q_cdc_apply_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["cdc_apply_agg"] = """
+        WITH final AS (
+          -- carries: even, not updated (mod 4), not deleted (mod 8)
+          SELECT o_orderkey, o_totalprice FROM orders
+          WHERE o_orderkey % 2 = 0 AND o_orderkey % 4 <> 0
+          UNION ALL
+          -- updates that survived (mod 4 but the mod-8 delete wins)
+          SELECT o_orderkey, o_totalprice + 500.0 FROM orders
+          WHERE o_orderkey % 4 = 0 AND o_orderkey % 8 <> 0
+          UNION ALL
+          -- inserts
+          SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 4 = 1
+        )
+        SELECT count(*) AS n_rows,
+               CAST(sum(o_orderkey) AS BIGINT) AS key_sum,
+               CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS total_price
+        FROM final
+    """
+
+
 def q_scd1_merge_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD1 MERGE end-to-end: a base table (even orderkeys) receives an
     upsert batch that UPDATES the keys divisible by 4 (price + 1000) and
@@ -93,6 +100,21 @@ def q_scd1_merge_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("total_price"),
     )
+
+
+TWINS["scd1_merge_agg"] = """
+        WITH merged AS (
+          SELECT o_orderkey, o_totalprice FROM orders
+          WHERE o_orderkey % 2 = 0 AND o_orderkey % 4 > 1
+          UNION ALL
+          SELECT o_orderkey, o_totalprice + 1000.0 FROM orders
+          WHERE o_orderkey % 4 <= 1
+        )
+        SELECT count(*) AS n_rows,
+               CAST(sum(o_orderkey) AS BIGINT) AS key_sum,
+               CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS total_price
+        FROM merged
+    """
 
 
 def q_scd2_priority_history(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -121,30 +143,15 @@ def q_scd2_priority_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_compaction_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-file compaction end-to-end: documents written as 16 small
-    files, compacted to 2 via the crash-safe rename swap
-    (sources.sinks.compact_parquet), then aggregated — a lost or
-    duplicated row during the rewrite/swap flips the counts against the
-    plain-documents oracle. The file-count reduction itself is asserted
-    in tests/test_scale_paths.py; the graded result proves data
-    fidelity."""
-    from kickstarter_etl_pipeline_spark.scratch import run_scratch_dir
-    from kickstarter_etl_pipeline_spark.sources.sinks import compact_parquet
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
-    path = run_scratch_dir("compact_docs_") + "/t"
-    docs.repartition(16).write.parquet(path)
-    compact_parquet(spark, path, target_files=2)
-    return (
-        spark.read.parquet(path)
-        .groupBy("source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("doc_id").cast("long").alias("id_sum"),
-            F.sum("n_chars").cast("long").alias("chars_sum"),
-        )
-    )
+TWINS["scd2_priority_history"] = """
+        SELECT o_custkey, o_orderkey, o_orderpriority, o_totalprice,
+               strftime(o_orderdate, '%Y-%m-%d') AS effective_from,
+               strftime(lead(o_orderdate) OVER w, '%Y-%m-%d') AS effective_to,
+               CAST(row_number() OVER w AS INTEGER) AS version,
+               CAST(CASE WHEN lead(o_orderdate) OVER w IS NULL THEN 1 ELSE 0 END AS INTEGER) AS is_current
+        FROM orders
+        WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+    """
 
 
 def q_dpp_join_prune_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -190,6 +197,27 @@ def q_dpp_join_prune_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_dpp_join_prune_agg (plans/warehouse_queries.py): the
+# hive-partitioned write→read round-trip is values-transparent (the
+# partitioned_prune_agg precedent), so the twin is the same dim-join
+# aggregate on the plain orders table. year() is BIGINT in DuckDB —
+# cast to INTEGER to match Spark's year() INT.
+TWINS["dpp_join_prune_agg"] = """
+    WITH dim AS (
+      SELECT CAST(year(o_orderdate) AS INTEGER) AS dim_year,
+             CAST(count(*) AS BIGINT) AS n_year
+      FROM orders GROUP BY 1 HAVING (dim_year % 2) = 0)
+    SELECT CAST(year(o_orderdate) AS INTEGER) AS order_year,
+           o_orderpriority,
+           CAST(count(*) AS BIGINT) AS n_orders,
+           CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE)
+             AS total_price,
+           max(n_year) AS n_year
+    FROM orders JOIN dim ON CAST(year(o_orderdate) AS INTEGER) = dim.dim_year
+    GROUP BY 1, 2
+"""
+
+
 def q_partitioned_prune_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partitioned fact layout end-to-end: orders written partitioned by
     order year (the reference's date-keyed warehouse layout re-expressed
@@ -216,6 +244,15 @@ def q_partitioned_prune_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total_price"),
         )
     )
+
+
+TWINS["partitioned_prune_agg"] = """
+        SELECT o_orderpriority, count(*) AS n_orders,
+               CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS total_price
+        FROM orders
+        WHERE year(o_orderdate) = 1998
+        GROUP BY 1
+    """
 
 
 def q_incremental_rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -247,6 +284,16 @@ def q_incremental_rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["incremental_rollup_agg"] = """
+        SELECT o_orderpriority, count(*) AS n_orders,
+               CAST(round(sum(CAST(o_totalprice AS DECIMAL(28,4))), 2) AS DOUBLE) AS total_price,
+               floor(CAST(round(sum(CAST(o_totalprice AS DECIMAL(28,4))), 2) AS DOUBLE) / count(*)
+                     * 1000000 + 0.5) / 1000000.0 AS avg_price
+        FROM orders
+        GROUP BY 1
+    """
+
+
 def q_idempotent_append_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4 INSERT OR IGNORE end-to-end (reference
     ``src/etl_pipeline.py:198``): batch A (even doc_ids) is appended,
@@ -270,6 +317,46 @@ def q_idempotent_append_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_chars").cast("long").alias("chars_sum"),
         )
     )
+
+
+TWINS["idempotent_append_agg"] = """
+        SELECT source, count(*) AS n_docs,
+               CAST(sum(doc_id) AS BIGINT) AS id_sum,
+               CAST(sum(n_chars) AS BIGINT) AS chars_sum
+        FROM documents
+        GROUP BY source
+    """
+
+
+def q_compaction_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Small-file compaction end-to-end: documents written as 16 small
+    files, compacted to 2 via the crash-safe rename swap
+    (sources.sinks.compact_parquet), then aggregated — a lost or
+    duplicated row during the rewrite/swap flips the counts against the
+    plain-documents oracle. The file-count reduction itself is asserted
+    in tests/test_scale_paths.py; the graded result proves data
+    fidelity."""
+    from kickstarter_etl_pipeline_spark.scratch import run_scratch_dir
+    from kickstarter_etl_pipeline_spark.sources.sinks import compact_parquet
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
+    path = run_scratch_dir("compact_docs_") + "/t"
+    docs.repartition(16).write.parquet(path)
+    compact_parquet(spark, path, target_files=2)
+    return (
+        spark.read.parquet(path)
+        .groupBy("source")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum("doc_id").cast("long").alias("id_sum"),
+            F.sum("n_chars").cast("long").alias("chars_sum"),
+        )
+    )
+
+
+# Compaction must preserve the data exactly — same oracle as the
+# idempotent-append round-trip (a plain aggregate over documents).
+TWINS["compaction_roundtrip_agg"] = TWINS["idempotent_append_agg"]
 
 
 def q_dq_star_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -310,6 +397,27 @@ def q_dq_star_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     for piece in (dup_fact, dup_state, orph_state, orph_cat):
         report = report.crossJoin(F.broadcast(piece))
     return report
+
+
+TWINS["dq_star_report"] = f"""
+        WITH dim_state AS ({qdefs_star_events.TWINS['dim_state']}),
+             dim_category AS ({qdefs_star_events.TWINS['dim_category']}),
+             fact AS ({qdefs_star_events.TWINS['fact_star']})
+        SELECT
+          (SELECT count(*) FROM fact) AS n_fact,
+          (SELECT CAST(sum(CASE WHEN state_key IS NULL THEN 1 ELSE 0 END
+                         + CASE WHEN category_key IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+             FROM fact) AS n_null_fks,
+          (SELECT CAST(count(*) - (SELECT count(*) FROM (SELECT DISTINCT l_orderkey, l_linenumber FROM fact)) AS BIGINT)
+             FROM fact) AS n_dup_fact_keys,
+          (SELECT CAST(count(*) - count(DISTINCT state_name) AS BIGINT) FROM dim_state) AS n_dup_state_names,
+          (SELECT CAST(count(*) AS BIGINT) FROM fact
+            WHERE state_key IS NOT NULL
+              AND state_key NOT IN (SELECT state_key FROM dim_state)) AS n_orphan_state_keys,
+          (SELECT CAST(count(*) AS BIGINT) FROM fact
+            WHERE category_key IS NOT NULL
+              AND category_key NOT IN (SELECT category_key FROM dim_category)) AS n_orphan_category_keys
+    """
 
 
 def q_dq_quarantine_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -363,6 +471,31 @@ def q_dq_quarantine_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TWINS["dq_quarantine_report"] = """
+        WITH corrupted AS (
+          SELECT o_orderkey,
+                 CASE WHEN o_orderkey % 7 = 0 THEN -o_totalprice ELSE o_totalprice END AS price,
+                 CASE WHEN o_orderkey % 11 = 0 THEN 'X' ELSE o_orderstatus END AS status,
+                 CASE WHEN o_orderkey % 13 = 0 THEN NULL ELSE o_orderpriority END AS prio
+          FROM orders),
+        gated AS (
+          SELECT *,
+                 CASE WHEN coalesce(price > 0, FALSE) THEN 0 ELSE 1 END AS v_price,
+                 CASE WHEN coalesce(status IN ('F','P','O'), FALSE) THEN 0 ELSE 1 END AS v_status,
+                 CASE WHEN prio IS NOT NULL THEN 0 ELSE 1 END AS v_prio
+          FROM corrupted)
+        SELECT count(*) AS n_input,
+               CAST(sum(CASE WHEN v_price + v_status + v_prio = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_clean,
+               CAST(sum(CASE WHEN v_price + v_status + v_prio > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_quarantined,
+               CAST(sum(v_price) AS BIGINT) AS n_viol_price_positive,
+               CAST(sum(v_status) AS BIGINT) AS n_viol_status_valid,
+               CAST(sum(v_prio) AS BIGINT) AS n_viol_priority_not_null,
+               CAST(round(sum(CASE WHEN v_price + v_status + v_prio = 0
+                                   THEN CAST(price AS DECIMAL(18,2)) END), 2) AS DOUBLE) AS clean_price_sum
+        FROM gated
+    """
+
+
 def q_csv_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1 CSV source: write orders to CSV, read back with the explicit
     schema, aggregate — proves the CSV reader end-to-end. The oracle runs
@@ -392,6 +525,13 @@ def q_csv_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_orders"),
         F.round(F.sum("o_totalprice"), 2).alias("total_price"),
     )
+
+
+TWINS["csv_roundtrip_agg"] = """
+        SELECT o_orderstatus, count(*) AS n_orders,
+               round(sum(o_totalprice), 2) AS total_price
+        FROM orders GROUP BY o_orderstatus
+    """
 
 
 # ---------------------------------------------------------------------------
@@ -431,6 +571,10 @@ def q_json_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _roundtrip_agg(spark.read.schema(schema).json(path))
 
 
+# Format round-trips must reproduce the parquet-sourced aggregate exactly.
+TWINS["json_roundtrip_agg"] = TWINS["csv_roundtrip_agg"]
+
+
 def q_schema_evolution_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-evolution read end-to-end, graded (was pytest-only before
     r8): half the documents are written under the v1 schema (doc_id,
@@ -458,6 +602,22 @@ def q_schema_evolution_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_schema_evolution_agg: v1 files (odd doc_ids) carry no
+# n_chars column and must surface NULL under mergeSchema — so n_chars
+# aggregates run only over the even (v2) half.
+TWINS["schema_evolution_agg"] = """
+    SELECT source,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_docs_v2,
+           CAST(sum(doc_id) AS BIGINT) AS id_sum,
+           CAST(sum(CASE WHEN doc_id % 2 = 0 THEN n_chars END) AS BIGINT)
+             AS v2_chars_sum
+    FROM documents
+    GROUP BY source
+"""
+
+
 def q_orc_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC source/sink: the other columnar format a warehouse migration
     encounters; write orders as ORC, read back, aggregate."""
@@ -467,6 +627,10 @@ def q_orc_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = run_scratch_dir("orc_orders_")
     orders.select("o_orderkey", "o_orderstatus", "o_totalprice").write.mode("overwrite").orc(path)
     return _roundtrip_agg(spark.read.orc(path))
+
+
+# Same round-trip contract as json_roundtrip_agg.
+TWINS["orc_roundtrip_agg"] = TWINS["csv_roundtrip_agg"]
 
 
 def q_range_clustered_prune_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -495,6 +659,16 @@ def q_range_clustered_prune_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_orders"),
         F.round(F.sum("o_totalprice"), 2).alias("total_price"),
     )
+
+
+TWINS["range_clustered_prune_agg"] = """
+        SELECT o_orderstatus, count(*) AS n_orders,
+               round(sum(o_totalprice), 2) AS total_price
+        FROM orders
+        WHERE o_orderdate >= TIMESTAMP '1996-01-01'
+          AND o_orderdate <  TIMESTAMP '1997-01-01'
+        GROUP BY o_orderstatus
+    """
 
 
 def q_jsonl_pyds_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -526,6 +700,19 @@ def q_jsonl_pyds_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("doc_id").alias("min_doc_id"),
         F.max("doc_id").alias("max_doc_id"),
     )
+
+
+# Custom Python Data Source connector round-trip: same contract, over
+# the documents table.
+TWINS["jsonl_pyds_roundtrip_agg"] = """
+    SELECT source, count(*) AS n_docs,
+           CAST(sum(n_chars) AS BIGINT) AS total_chars,
+           CAST(sum(length(text)) AS BIGINT) AS total_text_len,
+           count(DISTINCT lang) AS n_langs,
+           min(doc_id) AS min_doc_id,
+           max(doc_id) AS max_doc_id
+    FROM documents GROUP BY source
+"""
 
 
 def q_zorder_layout_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -597,6 +784,33 @@ def q_zorder_layout_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_zorder_layout_report: identical integer bucket grid
+# (explicit floor — Spark's double→long cast truncates, DuckDB's
+# rounds), identical 4+4-bit Morton interleave and 16-cell file blocks.
+TWINS["zorder_layout_report"] = """
+    WITH o AS (SELECT CAST(date_diff('day', DATE '1990-01-01', o_orderdate) AS BIGINT) AS day,
+                      CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+               FROM orders),
+    r AS (SELECT min(day) AS dmin, max(day) AS dmax,
+                 min(cents) AS cmin, max(cents) AS cmax FROM o),
+    b AS (SELECT day, cents,
+                 CAST(floor((day - dmin) * 16 / (dmax - dmin + 1)) AS BIGINT) AS bd,
+                 CAST(floor((cents - cmin) * 16 / (cmax - cmin + 1)) AS BIGINT) AS bp
+          FROM o, r),
+    z AS (SELECT day, cents,
+                 (((bd >> 0) & 1) << 1) + (((bp >> 0) & 1) << 0) +
+                 (((bd >> 1) & 1) << 3) + (((bp >> 1) & 1) << 2) +
+                 (((bd >> 2) & 1) << 5) + (((bp >> 2) & 1) << 4) +
+                 (((bd >> 3) & 1) << 7) + (((bp >> 3) & 1) << 6) AS zval
+          FROM b)
+    SELECT CAST(zval >> 4 AS BIGINT) AS file_id,
+           CAST(count(*) AS BIGINT) AS n_rows,
+           min(day) AS min_day, max(day) AS max_day,
+           min(cents) AS min_cents, max(cents) AS max_cents
+    FROM z GROUP BY 1
+"""
+
+
 def q_pit_priority_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """POINT-IN-TIME join (the feature-store / SCD2-lookup shape): each
     lineitem is matched to the priority VERSION its customer had at
@@ -645,6 +859,29 @@ def q_pit_priority_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# FULL twin of q_pit_priority_revenue: the scd2_priority_history
+# window recurrence, the same half-open interval predicate, the same
+# decimal revenue roll-up.
+TWINS["pit_priority_revenue"] = """
+    WITH hist AS (
+      SELECT o_custkey AS h_custkey, o_orderpriority AS pit_priority,
+             o_orderdate AS effective_from,
+             lead(o_orderdate) OVER (PARTITION BY o_custkey
+                                     ORDER BY o_orderdate, o_orderkey) AS effective_to
+      FROM orders),
+    li AS (SELECT o.o_custkey, l.l_shipdate, l.l_extendedprice
+           FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
+    j AS (SELECT h.pit_priority, li.l_extendedprice
+          FROM li JOIN hist h
+            ON li.o_custkey = h.h_custkey
+           AND li.l_shipdate >= h.effective_from
+           AND (h.effective_to IS NULL OR li.l_shipdate < h.effective_to))
+    SELECT pit_priority, CAST(count(*) AS BIGINT) AS n_lineitems,
+           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+    FROM j GROUP BY pit_priority
+"""
+
+
 def q_time_travel_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot time travel end-to-end (sources.sinks.write_snapshot /
     read_snapshot): v1 = base orders (even keys), v2 = SCD1-style
@@ -681,3 +918,23 @@ def q_time_travel_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     return parts[0].unionAll(parts[1])
+
+
+# FULL twin of q_time_travel_agg: reconstruct both committed snapshot
+# states (v1 = even keys; v2 = v1 minus updated keys, plus the update
+# batch) and aggregate them side by side.
+TWINS["time_travel_agg"] = """
+    WITH base AS (SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 2 = 0),
+    upd AS (SELECT o_orderkey, o_totalprice + 1000.0 AS o_totalprice
+            FROM orders WHERE o_orderkey % 4 <= 1),
+    v2 AS (SELECT * FROM base WHERE o_orderkey NOT IN (SELECT o_orderkey FROM upd)
+           UNION ALL SELECT * FROM upd)
+    SELECT CAST(1 AS INTEGER) AS version, count(*) AS n_rows,
+           CAST(sum(o_orderkey) AS BIGINT) AS key_sum,
+           CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS total_price
+    FROM base
+    UNION ALL
+    SELECT CAST(2 AS INTEGER), count(*), CAST(sum(o_orderkey) AS BIGINT),
+           CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE)
+    FROM v2
+"""

@@ -3,9 +3,13 @@
 Every implemented operator from SURVEY.md §2 (plus the scale extensions)
 is exposed as a named query callable ``(spark, sf_dir) -> DataFrame``
 with, where SQL-expressible, an ANSI-SQL twin that DuckDB runs on the
-same parquet tables. Aliases and types are kept IDENTICAL on both sides
-(the driver hash-compares values column-name-sorted), and every float
-produced by arithmetic is rounded the same way in both engines.
+same parquet tables. Each module in QUERY_MODULES keeps its twins in a
+``TWINS`` dict, each entry directly after its ``q_<name>`` function,
+and names the queries that have none in ``ROWS_ONLY``; SQL fragments
+that twins of several modules share live in ``twin_sql``. Aliases and
+types are kept IDENTICAL on both sides (the driver hash-compares values
+column-name-sorted), and every float produced by arithmetic is rounded
+the same way in both engines.
 
 Determinism rules used throughout:
 - time arithmetic in integer microseconds (exact);
@@ -35,7 +39,6 @@ from kickstarter_etl_pipeline_spark.operators import (
     stats_queries,
     timeseries_queries,
 )
-from kickstarter_etl_pipeline_spark.oracles_builders import ALL_ORACLES as _ORACLES
 from kickstarter_etl_pipeline_spark.plans import tpch_queries, warehouse_queries
 from kickstarter_etl_pipeline_spark.session import ensure_runtime_confs
 
@@ -429,6 +432,14 @@ QUERY_NAMES: tuple[str, ...] = (
 )
 
 
+def _query_functions(mod: ModuleType) -> Iterable[tuple[str, QueryFn]]:
+    """``(name, fn)`` for each ``q_<name>`` function defined in ``mod``,
+    by ``fn.__module__``, so re-exports are ignored."""
+    for attr, fn in vars(mod).items():
+        if attr.startswith("q_") and inspect.isfunction(fn) and fn.__module__ == mod.__name__:
+            yield attr[2:], fn
+
+
 def _resolve(
     names: Sequence[str], modules: Iterable[ModuleType]
 ) -> dict[str, QueryFn]:
@@ -439,13 +450,8 @@ def _resolve(
     defined ``q_*`` function is missing from ``names``."""
     defined: dict[str, list[QueryFn]] = {}
     for mod in modules:
-        for attr, fn in vars(mod).items():
-            if (
-                attr.startswith("q_")
-                and inspect.isfunction(fn)
-                and fn.__module__ == mod.__name__
-            ):
-                defined.setdefault(attr[2:], []).append(fn)
+        for name, fn in _query_functions(mod):
+            defined.setdefault(name, []).append(fn)
     problems = {
         "no function": [n for n in names if n not in defined],
         "two functions": sorted(n for n, fns in defined.items() if len(fns) > 1),
@@ -460,7 +466,35 @@ def _resolve(
     return {n: defined[n][0] for n in names}
 
 
+def _resolve_twins(
+    names: Sequence[str], modules: Iterable[ModuleType]
+) -> dict[str, str]:
+    """Collect the DuckDB twins each of ``modules`` keeps in ``TWINS``,
+    in ``names`` order. A module names its queries that have no twin in
+    ``ROWS_ONLY``. Raises, naming the offenders, if a twin or rows-only
+    entry has no ``q_<name>`` function in its own module, a query has
+    neither a twin nor a rows-only entry or has both, or a name has a
+    twin in two modules."""
+    twins: dict[str, list[str]] = {}
+    problems: dict[str, list[str]] = collections.defaultdict(list)
+    for mod in modules:
+        own = vars(mod).get("TWINS", {})
+        rows_only = vars(mod).get("ROWS_ONLY", frozenset())
+        defined = {name for name, _ in _query_functions(mod)}
+        problems["no query in its module"] += sorted((set(own) | rows_only) - defined)
+        problems["neither twin nor rows-only"] += sorted(defined - set(own) - rows_only)
+        problems["twin and rows-only"] += sorted(set(own) & rows_only)
+        for name, sql in own.items():
+            twins.setdefault(name, []).append(sql)
+    problems["twins in two modules"] = sorted(n for n, sqls in twins.items() if len(sqls) > 1)
+    problems = {k: v for k, v in problems.items() if v}
+    if problems:
+        raise RuntimeError(f"twin registry out of sync: {problems}")
+    return {n: twins[n][0] for n in names if n in twins}
+
+
 _QUERIES = _resolve(QUERY_NAMES, QUERY_MODULES)
+_TWINS = _resolve_twins(QUERY_NAMES, QUERY_MODULES)
 
 #: Registry entries that run a Structured Streaming query (state-store
 #: init, checkpoint dir, one or two AvailableNow runs — a fixed
@@ -478,18 +512,10 @@ def queries() -> dict[str, QueryFn]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB twins for every SQL-expressible query.
-
-    Omitted (rows-only check, by design): simhash_candidates
-    (Spark-native xxhash64 DuckDB can't reproduce; partial oracle in
-    tests/ plus the graded simhash_twin_containment contract on the
-    same code path), approx_aggregates and distinct_users_rollup
-    (sketch-specific estimates; 5-σ contracts in tests/).
-    ann_ivf_topk is FULLY oracle'd since r8 (integer-grid Lloyd
-    k-means, unrolled-CTE twin), as are ann_lsh_topk and
-    perplexity_proxy (deterministic md5 planes / nano-nat grid).
-    """
-    return dict(_ORACLES)
+    """DuckDB twins for every SQL-expressible query, in registry order.
+    The queries without one are listed in their module's ``ROWS_ONLY``,
+    each with its reason."""
+    return dict(_TWINS)
 
 
 def entry(spark: SparkSession) -> DataFrame:

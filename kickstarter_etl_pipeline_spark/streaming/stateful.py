@@ -203,7 +203,7 @@ CLICK_STATE_SCHEMA = T.StructType([T.StructField("last_click_us", T.LongType())]
 
 #: A purchase converts iff it lands within 2 hours of the user's
 #: most recent preceding click. Must stay in lockstep with the DuckDB
-#: twin's literal (oracles_r12.events_stream_conversions).
+#: twin's literal (qdefs_star_events.TWINS["events_stream_conversions"]).
 CONVERSION_WINDOW_US = 2 * 3600 * 1_000_000
 
 

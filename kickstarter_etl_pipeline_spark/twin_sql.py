@@ -1,11 +1,19 @@
-"""Shared DuckDB twin fragment for the co-occurrence graph device.
+"""SQL fragments that DuckDB twins in more than one query module share.
 
-operators.graph.cooccurrence_nodes (round 11) applies a hard
+Each query module keeps its own twins in ``TWINS`` beside the queries;
+only a fragment that twins of two or more modules splice in lives here.
+
+``_TOKS`` and ``_NORM`` are the twin side of ``operators.text.tokens``
+and ``operators.text.normalized``: split the trimmed, lower-cased text
+on whitespace runs, and collapse those runs to one space.
+
+The co-occurrence builders replay the graph device's per-bucket
+occupancy bound. operators.graph.cooccurrence_nodes applies a hard
 per-join-key occupancy bound to the error co-occurrence self-join:
 within each time bucket, users are ranked by ``(md5(user_id),
 user_id)`` — deterministic and engine-portable — and split into
 sub-buckets of at most OCCUPANCY_CAP members; pair joins are keyed by
-``(bucket, sub_bucket)``. This module emits the byte-for-byte DuckDB
+``(bucket, sub_bucket)``. The builders emit the byte-for-byte DuckDB
 replay of that ranking so every graph-tier twin (pagerank, label
 propagation, k-core, BFS, spectral, Bellman-Ford, triangles,
 clustering coefficients, assortativity, Adamic-Adar, link prediction)
@@ -20,14 +28,17 @@ string order); ``(rank - 1) // cap`` on BIGINT equals Spark's
 hash is injective per bucket (users are distinct), but user_id stays
 as an explicit tie-break on both engines anyway.
 
-This module imports nothing from the package but the import-free
-``constants`` (every oracles_* ledger imports it, so any other package
-import here risks a cycle).
+Query modules import this module, so it imports nothing from the
+package but the import-free ``constants``: any other package import
+here risks a cycle.
 """
 
 from __future__ import annotations
 
 from kickstarter_etl_pipeline_spark.constants import OCCUPANCY_CAP, WEDGE_DEGREE_CAP
+
+_TOKS = "string_split_regex(lower(trim(text)), '\\s+')"
+_NORM = "lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
 
 
 def ranked_cooccurrence_nodes(width_us: int, name: str = "n") -> str:

@@ -55,7 +55,7 @@ def duck_exact(sf_dir):
         ("ann_lsh_topk", 0.8, 2),
         ("ann_ivf_topk", 0.5, 2),
         # ann_ivf_anchor_topk also carries a FULL hash-match oracle
-        # (_ann_ivf_anchor_oracle_sql); the invariants here pin it
+        # (qdefs_embeddings.TWINS); the invariants here pin it
         # against EXACT brute force besides. Its soundness window is 4k
         # (top-20), not 2k: an UNTRAINED 16-cell index probing 4 cells
         # scans ~1/4 of the corpus, so a rank-5 emission can sit deeper

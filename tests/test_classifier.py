@@ -2,7 +2,7 @@
 batch perceptron and the percentile-calibrated curation manifest.
 
 The cross-engine hash contract is held by the DuckDB twins
-(oracles_r14, exercised by test_oracle_parity); these tests pin the
+(classifier.TWINS, exercised by test_oracle_parity); these tests pin the
 LEARNING semantics (separable data converges, updates are the exact
 batch rule) and the plan posture (no CRITICAL advisor finding — the
 fit is broadcast-1-row + global aggregates, never a data-sized

@@ -4,7 +4,7 @@ cooccurrence_edges' bucket self-join was the one remaining systematic
 scale-killer: pair fan-out quadratic in per-bucket occupancy. The fix
 is deterministic hash-ordered sub-bucketing (occupancy cap 64) applied
 INSIDE the device and mirrored byte-for-byte in every DuckDB twin
-(oracles_graph_common). These tests pin the three contract halves:
+(twin_sql). These tests pin the three contract halves:
 
 1. a synthetic hot bucket produces the LINEAR pair count
    Σ C(sub_size, 2), not the quadratic C(n, 2);
@@ -30,7 +30,7 @@ from kickstarter_etl_pipeline_spark.operators.graph import (
     common_neighbor_link_prediction,
     cooccurrence_edges,
 )
-from kickstarter_etl_pipeline_spark import oracles_graph_common as OGC
+from kickstarter_etl_pipeline_spark import twin_sql as OGC
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
 
 SF = "/root/testdata/sf0.001"

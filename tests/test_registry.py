@@ -11,18 +11,25 @@ import ast
 import hashlib
 import json
 import re
+import sys
 import types
 from pathlib import Path
 
 import pytest
 
-from kickstarter_etl_pipeline_spark.queries import _resolve, oracle_sql, queries
+from kickstarter_etl_pipeline_spark.queries import (
+    QUERY_NAMES,
+    _resolve,
+    _resolve_twins,
+    oracle_sql,
+    queries,
+)
 
 # sha256 of the JSON list of (name, fn.__module__, fn.__qualname__) in
-# registry order, and of the JSON list of (name, sql) oracle items.
-# Update only together with a deliberate registry change.
+# registry order, and of the JSON list of (name, sql) oracle items in
+# registry order. Update only together with a deliberate registry change.
 QUERIES_DIGEST = "1099092054ce3d98f2447de91344245d6ff773a3927c15dd72c76668c3443c89"
-ORACLES_DIGEST = "60c919530e387418bc73e44ef04e24bb294f4a779ab2f3a4eb5722eb1a0fdff2"
+ORACLES_DIGEST = "228e73f0683b940a8fd261ca9493c90de4589153d7d7c5963cb204e4cd711e58"
 
 ROOT = Path(__file__).resolve().parents[1]
 PKG = ROOT / "kickstarter_etl_pipeline_spark"
@@ -50,6 +57,7 @@ def test_registry_snapshot():
 def test_oracle_snapshot():
     oracles = oracle_sql()
     assert len(oracles) == 355
+    assert list(oracles) == [n for n in QUERY_NAMES if n in oracles]
     assert _digest(list(oracles.items())) == ORACLES_DIGEST
 
 
@@ -84,6 +92,63 @@ def test_resolver_raises_on_missing_and_duplicate_entries():
         _resolve(("x", "x"), (a,))
     with pytest.raises(RuntimeError, match=r"not listed.*'extra'"):
         _resolve(("x",), (_fake_module("fake_c", "x", "extra"),))
+
+
+def _twin_module(name: str, twins: dict[str, str], rows_only=(), queries=None):
+    """A fake query module defining ``queries`` (default: every twin and
+    rows-only name) with the given ``TWINS`` and ``ROWS_ONLY``."""
+    mod = _fake_module(name, *(queries if queries is not None else [*twins, *rows_only]))
+    mod.TWINS = twins
+    mod.ROWS_ONLY = frozenset(rows_only)
+    return mod
+
+
+def test_twin_resolver_returns_twins_in_listed_order():
+    a = _twin_module("fake_a", {"x": "SELECT 1", "y": "SELECT 2"})
+    b = _twin_module("fake_b", {}, rows_only=["z"])
+    assert list(_resolve_twins(("y", "z", "x"), (a, b)).items()) == [
+        ("y", "SELECT 2"),
+        ("x", "SELECT 1"),
+    ]
+
+
+def test_twin_resolver_raises_on_twin_without_query():
+    a = _twin_module("fake_a", {"x": "SELECT 1", "ghost": "SELECT 2"}, queries=["x"])
+    with pytest.raises(RuntimeError, match=r"no query in its module.*'ghost'"):
+        _resolve_twins(("x",), (a,))
+
+
+def test_twin_resolver_raises_on_query_without_twin_or_rows_only():
+    a = _twin_module("fake_a", {"x": "SELECT 1"}, queries=["x", "bare"])
+    with pytest.raises(RuntimeError, match=r"neither twin nor rows-only.*'bare'"):
+        _resolve_twins(("x", "bare"), (a,))
+
+
+def test_twin_resolver_raises_on_query_with_twin_and_rows_only():
+    a = _twin_module("fake_a", {"x": "SELECT 1"}, rows_only=["x"], queries=["x"])
+    with pytest.raises(RuntimeError, match=r"twin and rows-only.*'x'"):
+        _resolve_twins(("x",), (a,))
+
+
+def test_twin_resolver_raises_on_twin_in_two_modules():
+    a = _twin_module("fake_a", {"x": "SELECT 1"})
+    b = _twin_module("fake_b", {"x": "SELECT 1"}, queries=[])
+    with pytest.raises(RuntimeError, match=r"twins in two modules.*'x'"):
+        _resolve_twins(("x",), (a, b))
+
+
+def test_every_twin_is_found_by_its_query_name_alone():
+    """The module that defines ``q_<name>`` holds the query's twin in
+    its ``TWINS`` or names the query in its ``ROWS_ONLY``."""
+    oracles = oracle_sql()
+    lost = []
+    for name, fn in queries().items():
+        mod = sys.modules[fn.__module__]
+        twin = vars(mod).get("TWINS", {}).get(name)
+        rows_only = name in vars(mod).get("ROWS_ONLY", ())
+        if (twin is None) == (not rows_only) or twin != oracles.get(name):
+            lost.append(name)
+    assert lost == []
 
 
 def _references(node: ast.AST):
