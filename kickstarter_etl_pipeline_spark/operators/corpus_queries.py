@@ -14,7 +14,7 @@ from kickstarter_etl_pipeline_spark.operators.ranking import (
 )
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
-from kickstarter_etl_pipeline_spark.twin_sql import _NORM, _TOKS
+from kickstarter_etl_pipeline_spark.twin_sql import _NORM, _TOKS, markers
 
 
 #: DuckDB twin of each query defined here, by query name: SQL that
@@ -384,16 +384,13 @@ def q_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return clean.select("doc_id", "lang", "quality", F.col("n_chars").alias("n_chars"))
 
 
-_EN_STOP = "['the','a','of','and','to','is']"
-
-
 TWINS["clean_corpus"] = f"""
         WITH scored AS (
           SELECT doc_id, lang, text, n_chars, toks,
-                 len(list_filter(toks, t -> list_contains(['der','die','das','und','ist','ein'], t))) AS s_de,
-                 len(list_filter(toks, t -> list_contains({_EN_STOP}, t))) AS s_en,
-                 len(list_filter(toks, t -> list_contains(['el','la','los','de','que','es'], t))) AS s_es,
-                 len(list_filter(toks, t -> list_contains(['le','la','les','et','est','une'], t))) AS s_fr
+                 len(list_filter(toks, t -> list_contains({markers('de')}, t))) AS s_de,
+                 len(list_filter(toks, t -> list_contains({markers('en')}, t))) AS s_en,
+                 len(list_filter(toks, t -> list_contains({markers('es')}, t))) AS s_es,
+                 len(list_filter(toks, t -> list_contains({markers('fr')}, t))) AS s_fr
           FROM (SELECT doc_id, lang, text, n_chars, {_TOKS} AS toks FROM documents)
         ),
         labeled AS (
@@ -605,10 +602,10 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 TWINS["lang_id"] = f"""
         WITH scored AS (
           SELECT doc_id, lang, text,
-                 len(list_filter(toks, t -> list_contains(['der','die','das','und','ist','ein'], t))) AS s_de,
-                 len(list_filter(toks, t -> list_contains({_EN_STOP}, t))) AS s_en,
-                 len(list_filter(toks, t -> list_contains(['el','la','los','de','que','es'], t))) AS s_es,
-                 len(list_filter(toks, t -> list_contains(['le','la','les','et','est','une'], t))) AS s_fr
+                 len(list_filter(toks, t -> list_contains({markers('de')}, t))) AS s_de,
+                 len(list_filter(toks, t -> list_contains({markers('en')}, t))) AS s_en,
+                 len(list_filter(toks, t -> list_contains({markers('es')}, t))) AS s_es,
+                 len(list_filter(toks, t -> list_contains({markers('fr')}, t))) AS s_fr
           FROM (SELECT doc_id, lang, text, {_TOKS} AS toks FROM documents)
         )
         SELECT doc_id, lang,
@@ -649,7 +646,7 @@ TWINS["text_stats"] = f"""
                CAST(len(toks) AS BIGINT) AS n_tokens,
                CAST(len(list_distinct(toks)) AS BIGINT) AS n_unique_tokens,
                floor(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) / nullif(length(text), 0) * 1000000 + 0.5) / 1000000.0 AS punct_ratio,
-               floor(len(list_filter(toks, t -> list_contains({_EN_STOP}, t))) / nullif(len(toks), 0) * 1000000 + 0.5) / 1000000.0 AS stopword_ratio
+               floor(len(list_filter(toks, t -> list_contains({markers('en')}, t))) / nullif(len(toks), 0) * 1000000 + 0.5) / 1000000.0 AS stopword_ratio
         FROM (SELECT doc_id, text, {_TOKS} AS toks FROM documents)
     """
 
@@ -1192,10 +1189,10 @@ def q_lang_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 TWINS["lang_confusion_matrix"] = f"""
     WITH scored AS (
       SELECT doc_id, lang, text,
-             len(list_filter(toks, t -> list_contains(['der','die','das','und','ist','ein'], t))) AS s_de,
-             len(list_filter(toks, t -> list_contains(['the','a','of','and','to','is'], t))) AS s_en,
-             len(list_filter(toks, t -> list_contains(['el','la','los','de','que','es'], t))) AS s_es,
-             len(list_filter(toks, t -> list_contains(['le','la','les','et','est','une'], t))) AS s_fr
+             len(list_filter(toks, t -> list_contains({markers('de')}, t))) AS s_de,
+             len(list_filter(toks, t -> list_contains({markers('en')}, t))) AS s_en,
+             len(list_filter(toks, t -> list_contains({markers('es')}, t))) AS s_es,
+             len(list_filter(toks, t -> list_contains({markers('fr')}, t))) AS s_fr
       FROM (SELECT doc_id, lang, text, {_TOKS} AS toks FROM documents)
     ),
     pred AS (

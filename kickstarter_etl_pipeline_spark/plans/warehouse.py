@@ -18,7 +18,10 @@ skips files and row groups from their parquet footer min/max stats.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from kickstarter_etl_pipeline_spark.operators.quality import observe_quality
 from kickstarter_etl_pipeline_spark.plans.star import StarSchema
@@ -80,6 +83,21 @@ def load_warehouse(spark: SparkSession, star: StarSchema, db: str = "kickstarter
     """Load a built star schema into the warehouse tables (overwrite —
     the reference's fresh-database run).
 
+    The four writes run as concurrent Spark jobs, one pool thread per
+    table. They are independent: the fact does not read the written
+    dims, it re-derives its keys from the same deterministic
+    ``dim_from_distinct`` plans. So each table's planning, commit and
+    catalog round trips overlap the others' instead of queueing behind
+    them. Each thread runs under ``inheritable_thread_target``, so its
+    jobs carry the caller's job group, tags and other local properties.
+    Under the default FIFO scheduler the dims, submitted first and a
+    few tasks each, take the free slots before the fact's stages fill
+    them.
+
+    If a write fails, the other writes still run to the end; then the
+    first failure, in table order, re-raises from here. No pool thread
+    outlives the call.
+
     The fact is range-clustered on ``launched_date_key`` into
     ``spark.sql.shuffle.partitions`` files (the session's core-sized
     width, read here). That adds a sampling job for the range bounds
@@ -90,25 +108,36 @@ def load_warehouse(spark: SparkSession, star: StarSchema, db: str = "kickstarter
     row groups overlapping the range are read — with no directory per
     date to list or write.
 
-    The returned counts are the rows each write job wrote, taken from
-    an ``observe_quality`` observation on the written frame: no table
-    is re-scanned to count it."""
+    The returned counts, in table order, are the rows each write job
+    wrote, taken from an ``observe_quality`` observation on the written
+    frame: no table is re-scanned to count it."""
     create_warehouse_schema(spark, db)
     n_files = int(spark.conf.get("spark.sql.shuffle.partitions"))
     fact = star.fact.select(
         "campaign_id", "name", "backers", "pledged_usd", "goal_usd",
         "duration_days", "state_key", "category_key", "launched_date_key",
     )
-    counts = {}
-    for name, df in (
-        ("dim_state", star.dim_state),
-        ("dim_category", star.dim_category),
-        ("dim_date", star.dim_date),
+    tables = {
+        "dim_state": star.dim_state,
+        "dim_category": star.dim_category,
+        "dim_date": star.dim_date,
         # observed above the range clustering, so the bounds-sampling
         # job does not count the fact's rows
-        ("fact_campaigns", range_clustered(fact, "launched_date_key", n_files)),
-    ):
+        "fact_campaigns": range_clustered(fact, "launched_date_key", n_files),
+    }
+
+    def write(name: str, df: DataFrame) -> int:
         observed, obs = observe_quality(df, [], name)
         observed.write.mode("overwrite").insertInto(f"{db}.{name}", overwrite=True)
-        counts[name] = obs.get["n_rows"]
-    return counts
+        return obs.get["n_rows"]
+
+    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
+        # one wrapper per write: each captures its own copy of the
+        # caller's local properties, which the job then mutates (its SQL
+        # execution id) without touching another thread's copy
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(write), name, df)
+            for name, df in tables.items()
+        }
+    # leaving the block joined every thread; a failure re-raises here
+    return {name: future.result() for name, future in futures.items()}

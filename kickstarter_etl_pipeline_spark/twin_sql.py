@@ -1,7 +1,8 @@
 """SQL fragments that DuckDB twins in more than one query module share.
 
 Each query module keeps its own twins in ``TWINS`` beside the queries;
-only a fragment that twins of two or more modules splice in lives here.
+only a fragment that twins of two or more modules splice in, or that
+renders a constant the Spark side also reads, lives here.
 
 ``_TOKS`` and ``_NORM`` are the twin side of ``operators.text.tokens``
 and ``operators.text.normalized``: split the trimmed, lower-cased text
@@ -35,10 +36,16 @@ here risks a cycle.
 
 from __future__ import annotations
 
-from kickstarter_etl_pipeline_spark.constants import OCCUPANCY_CAP, WEDGE_DEGREE_CAP
+from kickstarter_etl_pipeline_spark.constants import LANG_MARKERS, OCCUPANCY_CAP
 
 _TOKS = "string_split_regex(lower(trim(text)), '\\s+')"
 _NORM = "lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
+
+
+def markers(lang: str) -> str:
+    """``constants.LANG_MARKERS[lang]`` as a DuckDB list literal, the
+    twin side of the marker lists ``operators.text`` scores."""
+    return "[" + ",".join(f"'{w}'" for w in LANG_MARKERS[lang]) + "]"
 
 
 def ranked_cooccurrence_nodes(width_us: int, name: str = "n") -> str:

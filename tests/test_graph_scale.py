@@ -23,7 +23,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from kickstarter_etl_pipeline_spark.operators import events as EV
+from kickstarter_etl_pipeline_spark.operators import events as EV, graph_queries as GQ, mining_queries as MQ
 from kickstarter_etl_pipeline_spark.operators.graph import (
     OCCUPANCY_CAP,
     WEDGE_DEGREE_CAP,
@@ -44,8 +44,13 @@ def _hot_bucket_events(spark, n_users: int):
 
 
 def test_constants_lockstep():
-    assert OCCUPANCY_CAP == OGC.OCCUPANCY_CAP == 64
-    assert WEDGE_DEGREE_CAP == OGC.WEDGE_DEGREE_CAP == 256
+    """The twins embed the caps the Spark operators apply: the wedge
+    degree cap in both wedge-join twins, the occupancy cap in the
+    shared co-occurrence node CTE."""
+    assert (OCCUPANCY_CAP, WEDGE_DEGREE_CAP) == (64, 256)
+    for module, name in ((MQ, "graph_link_prediction"), (GQ, "adamic_adar_links")):
+        assert f"<= {WEDGE_DEGREE_CAP}" in module.TWINS[name], name
+    assert f"- 1) // {OCCUPANCY_CAP} AS sb" in OGC.ranked_cooccurrence_nodes(1800000000)
 
 
 def test_hot_bucket_pair_count_is_linear(spark):

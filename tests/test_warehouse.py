@@ -6,15 +6,20 @@ import glob
 import logging
 import re
 import shutil
+import threading
+import uuid
 from datetime import date, timedelta
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import Row, functions as F
 
+from kickstarter_etl_pipeline_spark import pipeline
 from kickstarter_etl_pipeline_spark.logging_config import configure_logger
 from kickstarter_etl_pipeline_spark.operators import transform as X
 from kickstarter_etl_pipeline_spark.operators.ranking import CONTROL_ROWS_CAP
 from kickstarter_etl_pipeline_spark.pipeline import run_pipeline
+from kickstarter_etl_pipeline_spark.plans import warehouse as W
 from kickstarter_etl_pipeline_spark.plans.star import kickstarter_star
 from kickstarter_etl_pipeline_spark.plans.warehouse import create_warehouse_schema, load_warehouse
 from tests.test_range_clustering import _file_ranges
@@ -162,6 +167,79 @@ def test_run_pipeline_refuses_data_sized_state_column(spark, tmp_path):
     logger = logging.getLogger("RunPipelineCapTest")
     with pytest.raises(ValueError, match=re.escape(f"CONTROL_ROWS_CAP={CONTROL_ROWS_CAP}")):
         run_pipeline(spark, csv_path, db="wh_test", logger=logger)
+
+
+def _ks_csv(spark, tmp_path) -> str:
+    csv_path = str(tmp_path / "ks.csv")
+    raw_rows(spark).toPandas().to_csv(csv_path, index=False)
+    return csv_path
+
+
+def test_run_pipeline_parses_the_csv_once(spark, tmp_path, monkeypatch):
+    """The star's four frames read the staged CSV: no executed plan of
+    theirs scans the file, so the load parses it once, in the stage."""
+    stars = []
+
+    def spy(spark, star, db):
+        stars.append(star)
+        return load_warehouse(spark, star, db=db)
+
+    monkeypatch.setattr(pipeline, "load_warehouse", spy)
+    counts = run_pipeline(spark, _ks_csv(spark, tmp_path), db="wh_test", logger=logging.getLogger("ParseOnceTest"))
+    assert counts == {"dim_state": 2, "dim_category": 3, "dim_date": 2, "fact_campaigns": 3}
+    (star,) = stars
+    for name in ("dim_state", "dim_category", "dim_date", "fact"):
+        plan = getattr(star, name)._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan csv" not in plan, (name, plan)
+
+
+def test_run_pipeline_jobs_stay_in_the_callers_job_group(spark, tmp_path):
+    """Every job the load starts, on the caller's thread or a write
+    thread, carries the job group the caller set."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group, fence = f"load-{uuid.uuid4().hex}", f"fence-{uuid.uuid4().hex}"
+    csv_path = _ks_csv(spark, tmp_path)
+
+    def fence_job() -> int:
+        """Run one job in the fence group and return its id; job ids are
+        sequential, so the load's jobs lie strictly between two fences."""
+        sc.setJobGroup(fence, fence)
+        sc.parallelize([0], 1).count()
+        # the status tracker is fed by the asynchronous listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(tracker.getJobIdsForGroup(fence))
+
+    try:
+        before = fence_job()
+        sc.setJobGroup(group, group)
+        run_pipeline(spark, csv_path, db="wh_test", logger=logging.getLogger("JobGroupTest"))
+        after = fence_job()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    load_jobs = set(range(before + 1, after))
+    assert len(load_jobs) >= 5  # stage, aggregate and at least one job per write
+    assert load_jobs <= set(tracker.getJobIdsForGroup(group))
+
+
+def test_load_warehouse_failed_write_reraises_after_the_pool_drains(spark, monkeypatch):
+    """One write fails (its table is dropped between the DDL and the
+    insert): load_warehouse raises that error once the other three
+    writes have finished, and leaves no pool thread behind."""
+    create = W.create_warehouse_schema
+
+    def create_then_drop(spark, db):
+        create(spark, db)
+        spark.sql(f"DROP TABLE {db}.dim_date")
+
+    monkeypatch.setattr(W, "create_warehouse_schema", create_then_drop)
+    star = kickstarter_star(raw_rows(spark))
+    threads = set(threading.enumerate())
+    with pytest.raises(AnalysisException, match="dim_date"):
+        load_warehouse(spark, star, db="wh_test")
+    assert [t for t in threading.enumerate() if t not in threads] == []
+    written = {t: spark.table(f"wh_test.{t}").count() for t in ("dim_state", "dim_category", "fact_campaigns")}
+    assert written == {"dim_state": 2, "dim_category": 3, "fact_campaigns": 3}
 
 
 def test_configure_logger_rotating(tmp_path):
