@@ -148,6 +148,26 @@ def char_jaccard_pairs(df: DataFrame) -> DataFrame:
     return jaccard_pairs_from_shingle_table(sh, 0.8)
 
 
+def _pair_overlaps(sh: DataFrame) -> DataFrame:
+    """Every pair of ids that share a shingle of an exploded
+    (``doc_id``, ``shingle``) table, ``id_a < id_b``, with the shared
+    count ``n_common`` and both set sizes ``size_a`` and ``size_b``."""
+    # Materialized: the sizes and both sides of the self-join read it.
+    sh = materialize(sh)
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("_size"))
+    a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
+    b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
+    common = (
+        a.join(b, on="shingle")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("n_common"))
+    )
+    return common.join(
+        sizes.select(F.col("doc_id").alias("id_a"), F.col("_size").alias("size_a")), "id_a"
+    ).join(sizes.select(F.col("doc_id").alias("id_b"), F.col("_size").alias("size_b")), "id_b")
+
+
 def containment_pairs(df: DataFrame, threshold: float = 0.9) -> DataFrame:
     """n-gram containment pairs: overlap coefficient ≥ threshold, with
     both directed Broder containments emitted.
@@ -166,20 +186,8 @@ def containment_pairs(df: DataFrame, threshold: float = 0.9) -> DataFrame:
     correctness/verification tier; at 100 TB run it only on MinHash-LSH
     candidate pairs.
     """
-    # Materialized: the sizes and both sides of the self-join read it.
-    sh = materialize(shingle_table(df, "doc_id", SHINGLE_N))
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("_size"))
-    a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
-    common = (
-        a.join(b, on="shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_common"))
-    )
     return (
-        common.join(sizes.select(F.col("doc_id").alias("id_a"), F.col("_size").alias("size_a")), "id_a")
-        .join(sizes.select(F.col("doc_id").alias("id_b"), F.col("_size").alias("size_b")), "id_b")
+        _pair_overlaps(shingle_table(df, "doc_id", SHINGLE_N))
         .withColumn(
             "overlap_coef",
             round_det(F.col("n_common") / F.least("size_a", "size_b"), 6),
@@ -199,20 +207,8 @@ def containment_pairs(df: DataFrame, threshold: float = 0.9) -> DataFrame:
 def jaccard_pairs_from_shingle_table(sh: DataFrame, threshold: float) -> DataFrame:
     """Exact Jaccard over an exploded (id, shingle) table (shared by the
     word-gram and char-gram operators)."""
-    # Materialized: the sizes and both sides of the self-join read it.
-    sh = materialize(sh)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("_size"))
-    a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
-    common = (
-        a.join(b, on="shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_common"))
-    )
     return (
-        common.join(sizes.select(F.col("doc_id").alias("id_a"), F.col("_size").alias("size_a")), "id_a")
-        .join(sizes.select(F.col("doc_id").alias("id_b"), F.col("_size").alias("size_b")), "id_b")
+        _pair_overlaps(sh)
         .withColumn(
             "jaccard",
             round_det(

@@ -64,7 +64,7 @@ def build_dim_date(df: DataFrame, ts_col: str) -> DataFrame:
         df.select(F.to_date(ts_col).alias("_d"))
         .distinct()
         .select(
-            F.date_format(d, "yyyyMMdd").cast("int").alias("date_key"),
+            date_key(d).alias("date_key"),
             F.date_format(d, "yyyy-MM-dd").alias("full_date"),
             F.year(d).cast("int").alias("year"),
             F.quarter(d).cast("int").alias("quarter"),

@@ -1,8 +1,8 @@
 """Transform operators — reference parity, zero Python UDFs.
 
 Re-expresses the reference transform phase (``src/etl_pipeline.py:83-141``)
-as composable DataFrame→DataFrame functions built purely from Column
-expressions, so every step stays inside whole-stage codegen. The three
+as one projection and one filter built purely from Column expressions,
+so every step stays inside whole-stage codegen. The three
 semantic traps from SURVEY.md §2.3 are encoded here:
 
 - F2: duration is FRACTIONAL days (seconds/86400), not integer datediff
@@ -39,18 +39,6 @@ FINAL_COLUMNS = [
 ]
 
 
-def parse_event_times(df: DataFrame) -> DataFrame:
-    """F1: string→timestamp for launch/deadline (src/etl_pipeline.py:91-92).
-
-    ``launched`` is 'yyyy-MM-dd HH:mm:ss'; ``deadline`` is 'yyyy-MM-dd'.
-    Spark's default parser handles both; formats are not pinned so the
-    operator also accepts already-typed timestamp columns.
-    """
-    return df.withColumn("launched_at", F.to_timestamp("launched")).withColumn(
-        "deadline_at", F.to_timestamp("deadline")
-    )
-
-
 def fractional_days(end: Column | str, start: Column | str) -> Column:
     """F2: (end − start) in FRACTIONAL days (src/etl_pipeline.py:95).
 
@@ -66,49 +54,42 @@ def fractional_days(end: Column | str, start: Column | str) -> Column:
     ) / F.lit(86400.0)
 
 
-def with_duration_days(df: DataFrame) -> DataFrame:
-    return df.withColumn("duration_days", fractional_days("deadline_at", "launched_at"))
+def typed_kickstarter(df: DataFrame) -> DataFrame:
+    """The reference transform's typing, as one projection onto
+    :data:`FINAL_COLUMNS` (P1, src/etl_pipeline.py:123-138). Every row
+    is kept: :func:`transform_kickstarter` filters with :func:`kept`."""
+    # F1: string→timestamp (src/etl_pipeline.py:91-92). No format is
+    # pinned: the default parser reads launched's 'yyyy-MM-dd HH:mm:ss'
+    # and deadline's 'yyyy-MM-dd', and passes timestamp columns through.
+    launched_at = F.to_timestamp("launched")
+    deadline_at = F.to_timestamp("deadline")
+    derived = {
+        # P2: usd_*_real → *_usd (src/etl_pipeline.py:100-103)
+        "pledged_usd": F.col("usd_pledged_real"),
+        "goal_usd": F.col("usd_goal_real"),
+        # F3: 1 iff state ∈ SUCCESS_STATES else 0 (src/etl_pipeline.py:106-110)
+        "success_flag": F.when(F.col("state").isin(*SUCCESS_STATES), 1).otherwise(0).cast("int"),
+        "launched_at": launched_at,
+        "deadline_at": deadline_at,
+        # F2: fractional days (src/etl_pipeline.py:95)
+        "duration_days": fractional_days(deadline_at, launched_at),
+    }
+    return df.select(*(derived[c].alias(c) if c in derived else c for c in FINAL_COLUMNS))
 
 
-def rename_monetary(df: DataFrame) -> DataFrame:
-    """P2: usd_*_real → *_usd (src/etl_pipeline.py:100-103)."""
-    return df.withColumnRenamed("usd_pledged_real", "pledged_usd").withColumnRenamed(
-        "usd_goal_real", "goal_usd"
-    )
-
-
-def success_flag() -> Column:
-    """F3: 1 iff state ∈ SUCCESS_STATES else 0 (src/etl_pipeline.py:106-110)."""
-    return F.when(F.col("state").isin(*SUCCESS_STATES), 1).otherwise(0).cast("int")
-
-
-def with_success_flag(df: DataFrame) -> DataFrame:
-    return df.withColumn("success_flag", success_flag())
-
-
-def drop_null(df: DataFrame) -> DataFrame:
-    """P3: drop rows with a null ``name`` (src/etl_pipeline.py:112-119)."""
-    return df.na.drop(subset=["name"])
-
-
-def project_final(df: DataFrame) -> DataFrame:
-    """P1: fixed-order projection (src/etl_pipeline.py:123-138)."""
-    return df.select(*FINAL_COLUMNS)
+def kept() -> Column:
+    """P3: the rows the transform keeps, those with a non-null ``name``
+    (src/etl_pipeline.py:112-119)."""
+    return F.col("name").isNotNull()
 
 
 def transform_kickstarter(df: DataFrame) -> DataFrame:
     """Full reference transform phase (src/etl_pipeline.py:83-141).
 
-    parse dates → fractional duration → monetary rename → success flag →
-    drop null names → 13-column projection. Lazy: Catalyst prunes the
-    unused raw columns all the way down to the scan.
+    Lazy: Catalyst prunes the unused raw columns all the way down to
+    the scan.
     """
-    out = parse_event_times(df)
-    out = with_duration_days(out)
-    out = rename_monetary(out)
-    out = with_success_flag(out)
-    out = drop_null(out)
-    return project_final(out)
+    return typed_kickstarter(df).filter(kept())
 
 
 # --- Inspection / data-quality operators (reference §2.8) ---

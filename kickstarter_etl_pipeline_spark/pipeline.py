@@ -3,11 +3,14 @@
 Mirrors the reference ``__main__`` flow (``src/etl_pipeline.py:285-315``)
 including its logging narrative, against a Spark warehouse instead of
 SQLite. The CSV is parsed once, like the reference's one in-memory
-frame. The actions, in order:
+frame. The transform's rules live in ``operators.transform`` alone:
+the counts and the star both type the stage with
+``typed_kickstarter`` and keep rows by ``kept``. The actions, in order:
 
-1. one stage job, which parses the columns the load reads into a local
-   checkpoint (``partitioning.materialize``);
-2. one aggregate over the stage, behind every logged count;
+1. one stage job, which parses the 11 raw columns the load reads into
+   a local checkpoint (``partitioning.materialize``); the typing runs
+   later, inside each job that reads the stage;
+2. one aggregate over the typed stage, behind every logged count;
 3. four concurrent warehouse writes (``load_warehouse``), which count
    their own rows; the fact's adds the sampling job that sets its
    range bounds.
@@ -56,26 +59,21 @@ def run_pipeline(
     logger = logger or configure_logger()
     logger.info("START OF KICKSTARTER ETL PIPELINE")
 
-    raw = read_csv(
-        spark,
-        csv_path,
-        schema=None if infer_schema else schemas.KICKSTARTER_RAW,
-        infer=infer_schema,
-    )
+    raw = read_csv(spark, csv_path, None if infer_schema else schemas.KICKSTARTER_RAW)
     if raw is None:
         logger.critical("Extraction failed — terminating execution.")
         return None
     # the aggregate and the star's four writes all read the CSV: stage
     # the columns they use once, so it is parsed once
     stage = materialize(raw.drop("currency", "goal", "pledged", "usd pledged"))
-    # one pass for every logged count: the transform keeps non-null
-    # names, and its pledged_usd is usd_pledged_real renamed
-    kept = F.col("name").isNotNull()
+    # one pass for every logged count; Catalyst prunes the typing to
+    # the three columns the aggregate reads
+    typed = X.typed_kickstarter(stage)
     per_state = collect_control(
-        stage.groupBy("state").agg(
+        typed.groupBy("state").agg(
             F.count("*").alias("n"),
-            F.count_if(kept).alias("kept"),
-            F.count_if(kept & F.col("usd_pledged_real").isNull()).alias("null_pledged"),
+            F.count_if(X.kept()).alias("kept"),
+            F.count_if(X.kept() & F.col("pledged_usd").isNull()).alias("null_pledged"),
         )
     )
     per_state.sort(key=lambda r: (-r["n"], r["state"] is not None, r["state"]))
@@ -86,7 +84,7 @@ def run_pipeline(
     n_kept = sum(r["kept"] for r in per_state)
     if n_raw - n_kept:
         logger.warning("Removed %d rows with null 'name' (NOT NULL constraint).", n_raw - n_kept)
-    logger.info("Transformation completed: %d rows, %d columns", n_kept, len(X.FINAL_COLUMNS))
+    logger.info("Transformation completed: %d rows, %d columns", n_kept, len(typed.columns))
     logger.info("Null values in 'pledged_usd': %d", sum(r["null_pledged"] for r in per_state))
 
     star = kickstarter_star(stage)

@@ -1,18 +1,18 @@
-"""End-to-end star-schema pipelines.
-
-Two variants of the reference's extract→transform→load flow
-(``src/etl_pipeline.py:285-315``):
+"""Star-schema builds of the reference's transform→load flow
+(``src/etl_pipeline.py:285-315``).
 
 - :func:`kickstarter_star` — exact reference semantics over the raw
-  Kickstarter schema (used by the parity tests on synthesized data).
-- :func:`tpch_star` — the same star-schema decomposition over the driver
-  fixture tables (FIXTURES.md §B mapping): state-dim from
-  ``o_orderstatus``, category-dim from ``part(p_brand, p_type)``,
-  date-dim from ``o_orderdate``, fact = ``lineitem ⋈ orders ⋈ part``.
+  Kickstarter schema; ``pipeline.run_pipeline`` loads it.
+- :func:`tpch_dim_state`, :func:`tpch_dim_category` and :func:`tpch_fact`
+  — the same decomposition over the driver fixture tables (FIXTURES.md
+  §B mapping), which the registry's star queries call.
 
-Both produce the dims + keyed fact lazily; the caller decides when/where
-to materialize (tests collect; ``plans.warehouse.load_warehouse`` writes
-the range-clustered warehouse).
+The reference keys its fact with dict lookups (``src/etl_pipeline.py:260-262``).
+Those dicts are broadcast hash-join build sides, so here they are
+broadcast LEFT joins (a missed ``.map()`` key is NaN, not a dropped
+row; SURVEY.md §2.5); the date key is derived inline (J3). Every frame
+is lazy: the caller collects it or writes it
+(``plans.warehouse.load_warehouse``).
 """
 
 from __future__ import annotations
@@ -23,8 +23,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from kickstarter_etl_pipeline_spark.operators import transform as X
 from kickstarter_etl_pipeline_spark.operators.dims import build_dim_date, date_key, dim_from_distinct
-from kickstarter_etl_pipeline_spark.operators.fact import build_fact_campaigns, join_dim
-from kickstarter_etl_pipeline_spark.operators.transform import fractional_days
 
 
 @dataclass
@@ -53,7 +51,32 @@ def kickstarter_star(raw: DataFrame) -> StarSchema:
         key_col="category_key",
     )
     dim_date = build_dim_date(transformed, "launched_at")
-    fact = build_fact_campaigns(transformed, dim_state, dim_category)
+    # J1 (state, single key) and J2 (category, composite key) key the
+    # fact; its select is the DDL's column order (src/etl_pipeline.py:256-269),
+    # which the warehouse's positional insert relies on
+    fact = (
+        transformed.join(
+            F.broadcast(dim_state.select("state_key", F.col("state_name").alias("state"))),
+            ["state"],
+            "left",
+        )
+        .join(
+            F.broadcast(
+                dim_category.select(
+                    "category_key",
+                    F.col("main_category_name").alias("main_category"),
+                    F.col("sub_category_name").alias("category"),
+                )
+            ),
+            ["main_category", "category"],
+            "left",
+        )
+        .select(
+            F.col("ID").alias("campaign_id"), "name", "backers", "pledged_usd", "goal_usd",
+            "duration_days", "state_key", "category_key",
+            date_key(F.col("launched_at")).alias("launched_date_key"),
+        )
+    )
     return StarSchema(dim_state, dim_category, dim_date, fact)
 
 
@@ -116,7 +139,7 @@ def tpch_fact(
         ),
         barrier=False,  # downstream work is joins — can't sink below the exchange
     )
-    enriched = (
+    return (
         li.join(
             orders.select("o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate"),
             li.l_orderkey == F.col("o_orderkey"),
@@ -127,35 +150,30 @@ def tpch_fact(
             li.l_partkey == F.col("p_partkey"),
             "left",
         )
-    )
-    keyed = join_dim(
-        enriched,
-        dim_state.select("state_key", F.col("state_name").alias("o_orderstatus")),
-        on=["o_orderstatus"],
-    )
-    keyed = join_dim(
-        keyed,
-        dim_category.select(
+        .join(
+            F.broadcast(dim_state.select("state_key", F.col("state_name").alias("o_orderstatus"))),
+            ["o_orderstatus"],
+            "left",
+        )
+        .join(
+            F.broadcast(
+                dim_category.select(
+                    "category_key",
+                    F.col("main_category_name").alias("p_brand"),
+                    F.col("sub_category_name").alias("p_type"),
+                )
+            ),
+            ["p_brand", "p_type"],
+            "left",
+        )
+        .select(
+            "l_orderkey",
+            "l_linenumber",
+            F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias("revenue"),
+            F.round(X.fractional_days("l_shipdate", "o_orderdate"), 6).alias("ship_delay_days"),
+            "state_key",
             "category_key",
-            F.col("main_category_name").alias("p_brand"),
-            F.col("sub_category_name").alias("p_type"),
-        ),
-        on=["p_brand", "p_type"],
-    )
-    return keyed.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias("revenue"),
-        F.round(fractional_days("l_shipdate", "o_orderdate"), 6).alias("ship_delay_days"),
-        "state_key",
-        "category_key",
-        date_key(F.col("o_orderdate")).alias("order_date_key"),
+            date_key(F.col("o_orderdate")).alias("order_date_key"),
+        )
     )
 
-
-def tpch_star(orders: DataFrame, lineitem: DataFrame, part: DataFrame) -> StarSchema:
-    dim_state = tpch_dim_state(orders)
-    dim_category = tpch_dim_category(part)
-    dim_date = build_dim_date(orders, "o_orderdate")
-    fact = tpch_fact(lineitem, orders, part, dim_state, dim_category)
-    return StarSchema(dim_state, dim_category, dim_date, fact)

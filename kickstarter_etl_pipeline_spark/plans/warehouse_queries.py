@@ -642,15 +642,15 @@ def q_range_clustered_prune_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     lost in the rewrite flips the hash; per-file range disjointness is
     asserted from the real footers in tests/test_range_clustering.py."""
     from kickstarter_etl_pipeline_spark.scratch import run_scratch_dir
-    from kickstarter_etl_pipeline_spark.sources.bucketing import write_range_clustered
+    from kickstarter_etl_pipeline_spark.sources.bucketing import range_clustered
 
     orders = load_table(spark, sf_dir, "orders")
     path = run_scratch_dir("range_orders_")
-    write_range_clustered(
+    range_clustered(
         orders.select("o_orderkey", "o_orderdate", "o_orderstatus", "o_totalprice"),
-        path,
         "o_orderdate",
-    )
+        8,
+    ).write.mode("overwrite").parquet(path)
     back = spark.read.parquet(path).filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp_ntz"))
         & (F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp_ntz"))

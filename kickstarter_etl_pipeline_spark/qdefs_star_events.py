@@ -26,7 +26,6 @@ from kickstarter_etl_pipeline_spark.plans.star import (
     tpch_dim_category,
     tpch_dim_state,
     tpch_fact,
-    tpch_star,
 )
 from kickstarter_etl_pipeline_spark.session import ensure_runtime_confs
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
@@ -117,13 +116,13 @@ TWINS["fact_star"] = f"""
 
 def q_star_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: full star build + analytical rollup by state × year."""
-    star = tpch_star(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "part"),
-    )
+    orders = load_table(spark, sf_dir, "orders")
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
+    dim_state = tpch_dim_state(orders)
+    fact = tpch_fact(lineitem, orders, part, dim_state, tpch_dim_category(part))
     return (
-        star.fact.groupBy(
+        fact.groupBy(
             "state_key",
             F.expr("CAST(order_date_key DIV 10000 AS INT)").alias("order_year"),
         )
@@ -137,7 +136,7 @@ def q_star_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total_revenue"),
             round_det(F.avg("ship_delay_days"), 4).alias("avg_ship_delay_days"),
         )
-        .join(F.broadcast(star.dim_state.select("state_key", "state_name")), "state_key")
+        .join(F.broadcast(dim_state.select("state_key", "state_name")), "state_key")
         .select("state_name", "order_year", "n_items", "total_revenue", "avg_ship_delay_days")
     )
 

@@ -12,14 +12,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def range_clustered(df: DataFrame, cols: str | list[str], num_files: int) -> DataFrame:
+def range_clustered(df: DataFrame, col: str, num_files: int) -> DataFrame:
     """Range-clustered layout: the data-skipping twin of bucketing.
 
-    ``repartitionByRange`` range-partitions on ``cols`` (sampled global
+    ``repartitionByRange`` range-partitions on ``col`` (sampled global
     bounds) and ``sortWithinPartitions`` orders rows inside each
     partition, so every file written from the result covers a DISJOINT
     value range and its parquet footer min/max stats are tight. Any
-    later scan with a predicate on ``cols`` prunes whole files/row
+    later scan with a predicate on ``col`` prunes whole files/row
     groups from the footer alone — bucketing pays one shuffle at ingest
     to kill JOIN exchanges, this pays one shuffle at ingest to kill SCAN
     volume. At 100 TB this (or its multi-column Z-order refinement in
@@ -29,15 +29,4 @@ def range_clustered(df: DataFrame, cols: str | list[str], num_files: int) -> Dat
     is gone. Disjointness is asserted from real footers in
     tests/test_range_clustering.py and tests/test_warehouse.py.
     """
-    keys = [cols] if isinstance(cols, str) else cols
-    return df.repartitionByRange(num_files, *keys).sortWithinPartitions(*keys)
-
-
-def write_range_clustered(
-    df: DataFrame,
-    path: str,
-    cols: str | list[str],
-    num_files: int = 8,
-) -> None:
-    """Write :func:`range_clustered` ``df`` as parquet at ``path``."""
-    range_clustered(df, cols, num_files).write.mode("overwrite").parquet(path)
+    return df.repartitionByRange(num_files, col).sortWithinPartitions(col)

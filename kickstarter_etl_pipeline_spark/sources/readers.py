@@ -27,21 +27,20 @@ logger = logging.getLogger("kickstarter_etl_pipeline_spark")
 def read_csv(
     spark: SparkSession,
     path: str,
-    schema: T.StructType | None = None,
-    infer: bool = False,
+    schema: T.StructType | None,
 ) -> DataFrame | None:
     """CSV scan with the reference's missing-file contract (S1).
 
-    Header row, UTF-8, explicit ``schema`` by default; ``infer=True`` is
-    the parity mode matching the reference's pandas inference. Returns
-    ``None`` (plus a CRITICAL log) when the path does not exist, exactly
-    like reference ``src/etl_pipeline.py:57-60``.
+    Header row, UTF-8, the explicit ``schema``; ``None`` infers the
+    types, the parity mode matching the reference's pandas inference.
+    Returns ``None`` (plus a CRITICAL log) when the path does not exist,
+    exactly like reference ``src/etl_pipeline.py:57-60``.
     """
     reader = spark.read.option("header", True).option("encoding", "UTF-8")
-    if schema is not None:
-        reader = reader.schema(schema)
-    elif infer:
+    if schema is None:
         reader = reader.option("inferSchema", True)
+    else:
+        reader = reader.schema(schema)
     try:
         df = reader.csv(path)
         # Force path resolution now so the missing-file contract holds at

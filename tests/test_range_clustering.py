@@ -1,4 +1,4 @@
-"""Range-clustered write layout (sources/bucketing.py:write_range_clustered).
+"""Range-clustered write layout (sources/bucketing.py:range_clustered).
 
 The oracle-level proof is ``range_clustered_prune_agg`` (the read-back
 aggregate must hash-match the original table); these tests pin the
@@ -15,7 +15,7 @@ import os
 import pyarrow.parquet as pq
 
 from kickstarter_etl_pipeline_spark.scratch import run_scratch_dir
-from kickstarter_etl_pipeline_spark.sources.bucketing import write_range_clustered
+from kickstarter_etl_pipeline_spark.sources.bucketing import range_clustered
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
 from tests.conftest import SF_SMOKE
 
@@ -40,12 +40,11 @@ def _file_ranges(path: str, column: str):
 def test_range_clustered_files_are_disjoint_and_complete(spark):
     orders = load_table(spark, SF_SMOKE, "orders")
     path = run_scratch_dir("range_unit_")
-    write_range_clustered(
+    range_clustered(
         orders.select("o_orderkey", "o_orderdate", "o_totalprice"),
-        path,
         "o_orderdate",
         num_files=6,
-    )
+    ).write.mode("overwrite").parquet(path)
     ranges = sorted(_file_ranges(path, "o_orderdate"))
     assert len(ranges) > 1, "expected multiple range files"
     # Disjoint: each file's max strictly below the next file's min is
@@ -61,6 +60,6 @@ def test_range_clustered_files_are_disjoint_and_complete(spark):
 def test_range_clustered_readback_equals_source(spark):
     orders = load_table(spark, SF_SMOKE, "orders").select("o_orderkey", "o_totalprice")
     path = run_scratch_dir("range_unit2_")
-    write_range_clustered(orders, path, "o_orderkey", num_files=4)
+    range_clustered(orders, "o_orderkey", num_files=4).write.mode("overwrite").parquet(path)
     back = spark.read.parquet(path)
     assert back.orderBy("o_orderkey").collect() == orders.orderBy("o_orderkey").collect()

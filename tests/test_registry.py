@@ -288,8 +288,6 @@ ONE_VALUE_PINS = {
     "stream_upsert_rollup.path_glob": "test_streaming_append_and_jdbc.py::test_upsert_rollup_refines_open_windows_and_drops_late",
     "transitive_closure.rounds": "test_scale_paths.py::test_transitive_closure_synthetic_and_partition_invariant",
     "two_phase_rank.n_parts": "test_properties.py::test_two_phase_rank_matches_row_number",
-    "write_range_clustered.cols": "test_range_clustering.py::test_range_clustered_readback_equals_source",
-    "write_range_clustered.num_files": "test_range_clustering.py::test_range_clustered_files_are_disjoint_and_complete",
 }
 
 
