@@ -89,7 +89,7 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("_cvec"),
     ).withColumn("_cnorm", norm(F.col("_cvec")))
-    # r15 probe (plans/r15/ab_vector.py): the Arrow dot kernel was
+    # r15 probe (OPTIMIZATION_r15.md): the Arrow dot kernel was
     # interleave-A/B'd here and REVERTED — at bench scale the pair scan
     # is one fused stage whose HOF CPU spreads over all cores, and the
     # Arrow round trip cost more than it saved (0.79 → 1.15 s min).
@@ -526,7 +526,7 @@ def ivf_lloyd_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     # r15 (guide §4): the assignment/probe distance reductions were the
     # query's CPU floor — the interpreted `aggregate(zip_with(...))`
     # tree burned ~8.4 s of executor CPU PER PASS at sf0.1 (profile in
-    # plans/r15/profile_top3.txt), ~100 s total across the 5 Lloyd
+    # OPTIMIZATION_r15.md's table), ~100 s total across the 5 Lloyd
     # rounds + final assignment. The Arrow kernels compute the
     # identical exact-int64 distances/argmin in NumPy (bit-equality
     # argument in operators/vector_kernels.py); the centroid matrix
@@ -716,7 +716,7 @@ def pca_top_component(corpus: DataFrame, n_iters: int = PCA_ITERS) -> DataFrame:
     # plan build: _pca_projection writes the round's w as ONE SQL
     # expression (one parse), where 64 F.lit Columns and two Python
     # lambdas cost 45-95 ms of py4j calls per ~0.2 s round. r15 probe
-    # (plans/r15/ab_vector.py): an Arrow-kernel projection was
+    # (OPTIMIZATION_r15.md): an Arrow-kernel projection was
     # interleave-A/B'd here and REVERTED — per round it swapped ~0.19 s
     # of well-parallelized HOF CPU for an ArrowEvalPython round trip
     # that cost more at bench scale (pca min 4.40 → 5.38 s over 8
@@ -800,8 +800,8 @@ def semantic_dedup(
     anchor_mat = [list(r["_av"]) for r in anchor_rows]
 
     # r15 (guide §4): the 16-anchor assignment was this query's largest
-    # CPU stage (15.7 s executor CPU at sf0.1 — plans/r15/
-    # profile_batch2.txt): the interpreted transform/zip_with/aggregate
+    # CPU stage (15.7 s executor CPU at sf0.1 — OPTIMIZATION_r15.md
+    # change 1): the interpreted transform/zip_with/aggregate
     # tree re-walked per element. The Arrow kernel computes the same
     # nano-grid-snapped exact-BIGINT argmin (same IEEE fold order, same
     # (d, c) tie-break — operators/vector_kernels.py) in NumPy; the

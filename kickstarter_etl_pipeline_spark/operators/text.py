@@ -30,10 +30,11 @@ def let1(bound: Column, body) -> Column:
     downstream reference, so "stage tokens as a column, then build
     shingles from it" re-runs the regex split once per element_at — the
     shingle plan carried 15 copies of split() and the stage burned 57
-    core-seconds on 5k docs (measured, plans/r14). A transform lambda
-    variable is bound once per row and cannot be inlined, cutting that
-    stage 6.5x with a bit-identical expression tree. Same device as
-    dedup._shingles_sig_buckets_expr, exposed for every operator.
+    core-seconds on 5k docs (measured; OPTIMIZATION_r14.md finding 1).
+    A transform lambda variable is bound once per row and cannot be
+    inlined, cutting that stage 6.5x with a bit-identical expression
+    tree. Same device as dedup._shingles_sig_buckets_expr, exposed for
+    every operator.
     """
     return F.element_at(F.transform(F.array(bound), body), 1)
 

@@ -1,11 +1,11 @@
 """Arrow-vectorized numeric kernels for the vector tier (r15, guide §4).
 
-Round-15 profiling (plans/r15/profile_top3.txt) attributed the vector
-tier's bench cost to INTERPRETED higher-order-function expressions, not
-to shuffles or scheduling: one Lloyd assignment pass over 2,000
-64-dim vectors burned 8.4 s of executor CPU (`aggregate(zip_with(...))`
-is CodegenFallback — every element evaluation walks the expression tree
-and allocates), and the PCA projection and SemDeDup pair scans showed
+Round-15 profiling (the profile table in OPTIMIZATION_r15.md)
+attributed the vector tier's bench cost to INTERPRETED
+higher-order-function expressions, not to shuffles or scheduling: one
+Lloyd assignment pass over 2,000 64-dim vectors burned 8.4 s of
+executor CPU (`aggregate(zip_with(...))` is CodegenFallback — every
+element evaluation walks the expression tree and allocates), and the PCA projection and SemDeDup pair scans showed
 the same signature (64 s and 40 s total stage CPU respectively). These
 kernels move exactly those per-row array reductions across the Arrow
 boundary into NumPy, per the optimization guide §4.2: Spark keeps the

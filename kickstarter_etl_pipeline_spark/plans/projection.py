@@ -142,64 +142,57 @@ class ScalingReport:
         return max(ops, key=order.get)
 
 
-def run_with_metrics(spark, df) -> list[NodeStat]:
+def _executed_metrics(spark, df):
     """Execute ``df`` end-to-end (noop sink — every column computed, no
-    disk IO) and return the tracked per-node metrics of THAT execution,
-    in plan-graph node order. File scans are tracked under the
-    normalized name ``Scan`` (their measured output rows are the input
-    ground truth the growth exponents are fitted against)."""
+    disk IO) and yield ``(node_id, node_name, metric_name, value_text)``
+    for every metric THAT execution recorded, read from the
+    SQLAppStatusStore."""
     df.write.mode("overwrite").format("noop").save()
     store = spark._jsparkSession.sharedState().statusStore()
     execs = store.executionsList()
     eid = max(execs.apply(i).executionId() for i in range(execs.size()))
-    graph = store.planGraph(eid)
     mv = store.executionMetrics(eid)
-    out: list[NodeStat] = []
-    nodes = graph.allNodes()
+    nodes = store.planGraph(eid).allNodes()
     for i in range(nodes.size()):
         node = nodes.apply(i)
-        raw_name = node.name()
-        if raw_name.startswith("Scan"):
-            name, (metric_name, kind) = "Scan", ("number of output rows", "rows")
-        else:
-            tracked = _TRACKED.get(raw_name)
-            if tracked is None:
-                continue
-            name, (metric_name, kind) = raw_name, tracked
         ms = node.metrics()
         for k in range(ms.size()):
             m = ms.apply(k)
-            if m.name() != metric_name:
-                continue
             v = mv.get(m.accumulatorId())
             if v.isDefined():
-                out.append(NodeStat(node.id(), name, kind, parse_metric(v.get())))
-            break
+                yield node.id(), node.name(), m.name(), v.get()
+
+
+def run_with_metrics(spark, df) -> list[NodeStat]:
+    """Execute ``df`` (noop sink) and return the tracked per-node
+    metrics of THAT execution, in plan-graph node order. File scans are
+    tracked under the normalized name ``Scan`` (their measured output
+    rows are the input ground truth the growth exponents are fitted
+    against)."""
+    out: list[NodeStat] = []
+    for node_id, raw_name, metric_name, text in _executed_metrics(spark, df):
+        if raw_name.startswith("Scan"):
+            name, (tracked, kind) = "Scan", ("number of output rows", "rows")
+        elif raw_name in _TRACKED:
+            name, (tracked, kind) = raw_name, _TRACKED[raw_name]
+        else:
+            continue
+        if metric_name == tracked:
+            out.append(NodeStat(node_id, name, kind, parse_metric(text)))
     return sorted(out, key=lambda s: s.node_id)
 
 
 def run_spill_bytes(spark, df) -> float:
     """Execute ``df`` (noop sink) and return the TOTAL spill bytes the
     execution recorded across all nodes ("spill size" covers sort /
-    aggregate / join memory-pressure spills). The brief's spill-aware
-    mandate, measured: a fixture-scale run of a well-sized plan must
-    spill ZERO bytes (pinned in tests), and the per-round artifact
-    records spill at the bench SF so growth shows up round-over-round."""
-    df.write.mode("overwrite").format("noop").save()
-    store = spark._jsparkSession.sharedState().statusStore()
-    execs = store.executionsList()
-    eid = max(execs.apply(i).executionId() for i in range(execs.size()))
-    mv = store.executionMetrics(eid)
+    aggregate / join memory-pressure spills). A fixture-scale run of a
+    well-sized plan must spill ZERO bytes (pinned in tests), and
+    SCALE_PROJECTION.json records spill at the big SF so growth shows
+    up between runs."""
     total = 0.0
-    nodes = store.planGraph(eid).allNodes()
-    for i in range(nodes.size()):
-        ms = nodes.apply(i).metrics()
-        for k in range(ms.size()):
-            m = ms.apply(k)
-            if "spill size" in m.name():
-                v = mv.get(m.accumulatorId())
-                if v.isDefined():
-                    total += parse_metric(v.get())
+    for _id, _name, metric_name, text in _executed_metrics(spark, df):
+        if "spill size" in metric_name:
+            total += parse_metric(text)
     return total
 
 
@@ -315,8 +308,6 @@ def main() -> None:
     # table (documents/embeddings included) actually grows.
     ap.add_argument("--small", default="/root/testdata/sf0.01")
     ap.add_argument("--big", default="/root/testdata/sf0.1")
-    ap.add_argument("--sf-small", type=float, default=0.01)
-    ap.add_argument("--sf-big", type=float, default=0.1)
     ap.add_argument("--target-sf", type=float, default=100.0)
     ap.add_argument("--out", default="SCALE_PROJECTION.json")
     ap.add_argument(
@@ -339,6 +330,15 @@ def main() -> None:
         ),
     )
     args = ap.parse_args()
+
+    def scale_factor(sf_dir: str) -> float:
+        # bench.py's rule: the SF is the number after "sf" in the dir.
+        match = re.search(r"sf([0-9.]+)", sf_dir)
+        if not match:
+            ap.error(f"{sf_dir}: the directory name carries no sfN scale factor")
+        return float(match.group(1))
+
+    sf_small, sf_big = scale_factor(args.small), scale_factor(args.big)
     spark = get_spark("scale-projection")
     reg = queries()
     out = []
@@ -348,8 +348,8 @@ def main() -> None:
             spark,
             args.small,
             args.big,
-            args.sf_small,
-            args.sf_big,
+            sf_small,
+            sf_big,
             args.target_sf,
         )
         d = report_dict(name, rep)

@@ -68,7 +68,6 @@ from kickstarter_etl_pipeline_spark.streaming.events_stream import (
 )
 from kickstarter_etl_pipeline_spark.streaming.tws_sessionize import (
     _export_worker_pythonpath,
-    tws_available,
 )
 
 #: TTL on the fleeting state. The inter-phase wall gap is a full query
@@ -266,11 +265,6 @@ def _two_phase_tws(
     against the same checkpoint (the schema-evolution redeploy);
     ``extra_confs`` extends the isolated session (e.g. the Avro state
     encoding evolution requires)."""
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas requires a google.protobuf runtime; "
-            "neither the real package nor the vendored shim is importable."
-        )
     _export_worker_pythonpath(spark)
     confs = {
         "spark.sql.streaming.stateStore.providerClass": (
@@ -399,11 +393,6 @@ def tws_state_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     mis-typed fails the hash. This is the TWS complement of
     events_stream_state_split (which reads a windowed-AGGREGATION
     store): same reader, user-defined typed state."""
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas requires a google.protobuf runtime; "
-            "neither the real package nor the vendored shim is importable."
-        )
     _export_worker_pythonpath(spark)
     child = isolated_session(
         spark,

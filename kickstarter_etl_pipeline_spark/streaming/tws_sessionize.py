@@ -127,10 +127,20 @@ def _export_process_pythonpath() -> None:
 
 
 def _export_worker_pythonpath(spark: SparkSession) -> None:
-    """Propagate the shim path into Spark worker processes: PythonRDD /
+    """The one gate every transformWithStateInPandas entry point passes:
+    raise RuntimeError up front when no protobuf runtime is importable,
+    then propagate the shim path into Spark worker processes: PythonRDD /
     UDF envVars come from sc.environment (pyspark.core.rdd.
     _prepare_for_python_RDD), and PythonWorkerFactory merges an
     envVars PYTHONPATH into the worker's own."""
+    if not tws_available():
+        raise RuntimeError(
+            "transformWithStateInPandas requires the 'protobuf' package "
+            "(pyspark's state-protocol worker imports google.protobuf); "
+            "not available in this environment — use "
+            "streaming.stateful.stateful_sessionize (applyInPandasWithState), "
+            "which has identical emitted sessions."
+        )
     _export_process_pythonpath()
     env = spark.sparkContext.environment
     current = env.get("PYTHONPATH", "")
@@ -202,14 +212,6 @@ def tws_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Raises RuntimeError up front when the runtime lacks protobuf (see
     module docstring) instead of letting the stream crash mid-query.
     """
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(pyspark's state-protocol worker imports google.protobuf); "
-            "not available in this environment — use "
-            "streaming.stateful.stateful_sessionize (applyInPandasWithState), "
-            "which has identical emitted sessions."
-        )
     _export_worker_pythonpath(spark)
     # transformWithState requires a state store with column-family
     # support; the default HDFSBackedStateStoreProvider refuses
@@ -322,11 +324,6 @@ def tws_sessionize_with_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the event-time-timer sessionizer (StatefulProcessor API)
     over the events fixture with AvailableNow; emitted rows equal
     stateful_sessionize_with_timeout's exactly (same oracle)."""
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas requires a google.protobuf runtime; "
-            "neither the real package nor the vendored shim is importable."
-        )
     _export_worker_pythonpath(spark)
     child = isolated_session(
         spark,
@@ -447,11 +444,6 @@ class UserProfileProcessor(StatefulProcessor):
 def tws_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the three-state profile processor over the events fixture
     (AvailableNow, single batch) and return one profile row per user."""
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas requires a google.protobuf runtime; "
-            "neither the real package nor the vendored shim is importable."
-        )
     _export_worker_pythonpath(spark)
     child = isolated_session(
         spark,
@@ -529,11 +521,6 @@ def tws_warm_start_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seed per-user state with the BATCH purchase count, then fold the
     event stream on top (AvailableNow, single batch): one row per user,
     n_total = purchases + all streamed events, seeded = had purchases."""
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas requires a google.protobuf runtime; "
-            "neither the real package nor the vendored shim is importable."
-        )
     _export_worker_pythonpath(spark)
     from pyspark.sql import functions as F
 

@@ -438,3 +438,21 @@ def test_coverage_code_references_resolve():
         if name.split(".")[0] not in top:
             broken.append(f"{path}:{name} not defined")
     assert broken == []
+
+
+def test_package_cited_paths_resolve():
+    """Each repo file a production comment or docstring cites
+    (`plans/inspect.py`, `tests/test_x.py`, `vendor/...`) exists under
+    the repo root or the package dir, so no comment points into a
+    deleted tree."""
+    cited = re.compile(
+        r"(?<![\w.])((?:plans|tests|perfbench|sources|operators|streaming|vendor)"
+        r"/[\w./-]*?\.(?:py|txt|json|md|log))\b"
+    )
+    broken = sorted(
+        f"{f.relative_to(ROOT)}: {path}"
+        for f in PROD_FILES
+        for path in cited.findall(f.read_text())
+        if not ((ROOT / path).exists() or (PKG / path).exists())
+    )
+    assert broken == []
