@@ -14,7 +14,11 @@ from kickstarter_etl_pipeline_spark.constants import (
 )
 from kickstarter_etl_pipeline_spark.operators import events as EV
 from kickstarter_etl_pipeline_spark.operators.partitioning import materialize
-from kickstarter_etl_pipeline_spark.operators.ranking import ntile_exact, two_phase_rank
+from kickstarter_etl_pipeline_spark.operators.ranking import (
+    control_frame,
+    ntile_exact,
+    two_phase_rank,
+)
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.operators.similarity import (
     brute_force_topk,
@@ -783,7 +787,7 @@ def q_range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     size, so BroadcastNestedLoopJoin costs one pass over the fact with a
     4-entry probe — no shuffle."""
     orders = load_table(spark, sf_dir, "orders")
-    bands = spark.createDataFrame(_PRICE_BANDS, "band string, lo double, hi double")
+    bands = control_frame(spark, _PRICE_BANDS, "band string, lo double, hi double")
     return (
         orders.join(
             F.broadcast(bands),
@@ -872,9 +876,7 @@ def q_null_safe_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = nation.select(
         F.col("n_nationkey").alias("nk"), F.col("n_name").alias("nation_name")
     ).unionByName(
-        nation.sparkSession.createDataFrame(
-            [(None, "UNKNOWN")], "nk bigint, nation_name string"
-        )
+        control_frame(spark, [(None, "UNKNOWN")], "nk bigint, nation_name string")
     )
     joined = cust.join(F.broadcast(dim), cust.nk.eqNullSafe(dim.nk), "left").select(
         "c_custkey", "c_acctbal", "nation_name"

@@ -54,7 +54,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from kickstarter_etl_pipeline_spark.constants import KEEP_PER_MILLE, PERCEPTRON_EPOCHS
 from kickstarter_etl_pipeline_spark.operators.partitioning import loop_frame, materialize
-from kickstarter_etl_pipeline_spark.operators.ranking import collect_control, two_phase_rank
+from kickstarter_etl_pipeline_spark.operators.ranking import (
+    collect_control,
+    control_frame,
+    two_phase_rank,
+)
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
 
 
@@ -152,7 +156,7 @@ def perceptron_fit(
     spark = feats.sparkSession
     # Materialized: epoch 1's margins and its snapshot both read it.
     w = materialize(
-        spark.createDataFrame([(0, 0, 0, 0, 0)], "w0 long, w1 long, w2 long, w3 long, w4 long")
+        control_frame(spark, [(0, 0, 0, 0, 0)], "w0 long, w1 long, w2 long, w3 long, w4 long")
     )
     snaps: list[DataFrame] = []
     zero = F.lit(0).cast("long")

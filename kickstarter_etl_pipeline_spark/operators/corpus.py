@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from kickstarter_etl_pipeline_spark.constants import MAX_COVERAGE_K
 from kickstarter_etl_pipeline_spark.operators.partitioning import loop_frame, materialize
-from kickstarter_etl_pipeline_spark.operators.ranking import collect_control
+from kickstarter_etl_pipeline_spark.operators.ranking import collect_control, control_frame
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.operators.text import tokens
 
@@ -256,4 +256,4 @@ def greedy_max_coverage(docs: DataFrame) -> DataFrame:
         picked.append(doc)
         rows.append((t, doc, gain, covered_total))
     schema = "step bigint, doc_id bigint, marginal_gain bigint, covered_total bigint"
-    return spark.createDataFrame(rows, schema)
+    return control_frame(spark, rows, schema)

@@ -52,7 +52,7 @@ from kickstarter_etl_pipeline_spark.constants import (
     WEDGE_DEGREE_CAP,
 )
 from kickstarter_etl_pipeline_spark.operators.partitioning import loop_frame, materialize
-from kickstarter_etl_pipeline_spark.operators.ranking import collect_control
+from kickstarter_etl_pipeline_spark.operators.ranking import collect_control, control_frame
 
 
 def degree_table(edges: DataFrame) -> DataFrame:
@@ -505,7 +505,7 @@ def hits(edges: DataFrame, iterations: int = HITS_ITERATIONS) -> DataFrame:
     if e.limit(1).count() == 0:
         # empty edge set: _normalize's collected squared norm would be
         # NULL (sqrt(None) → TypeError); the HITS result is just empty
-        return spark.createDataFrame([], "role string, id long, score double")
+        return control_frame(spark, [], "role string, id long, score double")
     NANO = 1_000_000_000
 
     def _normalize(raw: DataFrame, key: str, out: str) -> DataFrame:

@@ -24,6 +24,7 @@ from kickstarter_etl_pipeline_spark.operators.ranking import (
     bigint,
     collect_control,
     collected_offsets,
+    control_frame,
     grouped_two_phase_rank,
     ntile_exact,
     two_phase_rank,
@@ -2652,11 +2653,11 @@ def _bt_contests_and_fit(spark: SparkSession, sf_dir: str):
         }
     return (
         lagd,
-        spark.createDataFrame(
-            [(i, j, g) for (i, j), g in games.items()], "_i string, _j string, _g bigint"
+        control_frame(
+            spark, [(i, j, g) for (i, j), g in games.items()], "_i string, _j string, _g bigint"
         ),
-        spark.createDataFrame(list(wins.items()), "_t string, _wi bigint"),
-        spark.createDataFrame(list(s.items()), "_t string, _s bigint"),
+        control_frame(spark, wins.items(), "_t string, _wi bigint"),
+        control_frame(spark, s.items(), "_t string, _s bigint"),
     )
 
 

@@ -26,6 +26,7 @@ from kickstarter_etl_pipeline_spark.operators.partitioning import loop_frame, ma
 from kickstarter_etl_pipeline_spark.operators.ranking import (
     collect_control,
     collected_offsets,
+    control_frame,
     grouped_two_phase_rank,
     two_phase_rank,
 )
@@ -895,7 +896,8 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     forces the oracle to replay the merge APPLICATIONS exactly, not
     just the selections."""
     _, merges = _bpe_fit(spark, sf_dir)
-    return spark.createDataFrame(
+    return control_frame(
+        spark,
         merges,
         "merge_rank int, lhs string, rhs string, merged string,"
         " pair_count bigint, symbols_after bigint",

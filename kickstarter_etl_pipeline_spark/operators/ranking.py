@@ -22,15 +22,19 @@ frames above :data:`CONTROL_ROWS_CAP` rows. :func:`_collect_prefix`,
 the one exclusive-prefix fold, collects through it, and so do the
 integer control loops that iterate on collected rows
 (markov_stationary, the Bradley–Terry fit), which check every product
-and sum with :func:`bigint`.
+and sum with :func:`bigint`. :func:`control_frame` is the return trip
+under the same cap: driver rows back to a DataFrame that plans as a
+``LocalTableScan``.
 """
 
 from __future__ import annotations
 
 import operator
 
-from pyspark.sql import DataFrame, Window, functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from kickstarter_etl_pipeline_spark.operators.partitioning import materialize
 from kickstarter_etl_pipeline_spark.session import default_parallelism
@@ -43,20 +47,59 @@ from kickstarter_etl_pipeline_spark.session import default_parallelism
 CONTROL_ROWS_CAP = 4096
 
 
+def _check_control_rows(rows: list) -> list:
+    """``rows``, or ``ValueError`` past :data:`CONTROL_ROWS_CAP`: the
+    one cap on both directions of a driver round trip."""
+    if len(rows) > CONTROL_ROWS_CAP:
+        raise ValueError(
+            f"control frame has {len(rows)} rows, over CONTROL_ROWS_CAP="
+            f"{CONTROL_ROWS_CAP}: a data-sized frame must not cross "
+            "between the driver and the cluster"
+        )
+    return rows
+
+
 def collect_control(df: DataFrame) -> list:
     """Collect the control-sized ``df`` to the driver.
 
     Raises ``ValueError`` past :data:`CONTROL_ROWS_CAP` rows: a frame
     that large is data, not control, and belongs in a distributed plan.
     """
-    rows = df.collect()
-    if len(rows) > CONTROL_ROWS_CAP:
-        raise ValueError(
-            f"control frame has {len(rows)} rows, over CONTROL_ROWS_CAP="
-            f"{CONTROL_ROWS_CAP}: a data-sized frame must not be collected "
-            "to the driver"
-        )
-    return rows
+    return _check_control_rows(df.collect())
+
+
+def control_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """The control-sized driver ``rows`` as a DataFrame of ``schema``
+    (a DDL string or a ``StructType``) that plans as a
+    ``LocalTableScan``.
+
+    ``spark.createDataFrame(list)`` plans as ``Scan ExistingRDD``: a
+    pickled, parallelized RDD that every action and every broadcast
+    re-reads through Python. Here the rows are checked and converted
+    exactly as that call would (``verifySchema``: a float in an int
+    column or an int out of range raises; then ``toInternal``), packed
+    into one Arrow table of the schema's Arrow types, and handed over
+    as a local relation. Arrow, not pandas: a pandas frame turns a NaN
+    double into NULL and a NULL bigint into a float, while the Arrow
+    table keeps NULL, NaN and -0.0 apart.
+
+    Raises ``ValueError`` past :data:`CONTROL_ROWS_CAP` rows, like
+    :func:`collect_control`.
+    """
+    if not isinstance(schema, T.StructType):
+        schema = T._parse_datatype_string(schema)
+    rows = _check_control_rows(list(rows))
+    verify = T._make_type_verifier(schema)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(schema.toInternal(row))
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*internal)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def bigint(x: int) -> int:
@@ -277,7 +320,7 @@ def collected_offsets(
         list(counts.schema.fields)
         + [T.StructField(out, T.LongType(), False) for _, out in sums]
     )
-    return counts.sparkSession.createDataFrame(out_rows, schema)
+    return control_frame(counts.sparkSession, out_rows, schema)
 
 
 def grouped_two_phase_rank(

@@ -33,7 +33,7 @@ from kickstarter_etl_pipeline_spark.constants import (
     PCA_ITERS,
 )
 from kickstarter_etl_pipeline_spark.operators.partitioning import materialize
-from kickstarter_etl_pipeline_spark.operators.ranking import collect_control
+from kickstarter_etl_pipeline_spark.operators.ranking import collect_control, control_frame
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 
 
@@ -175,7 +175,7 @@ def with_lsh_probe_keys(
         [_plane_component(g, j) for j in range(dim)]
         for g in range(num_tables * num_planes)
     ]
-    planes_df = spark.createDataFrame([(matrix,)], "_planes_mat: array<array<double>>")
+    planes_df = control_frame(spark, [(matrix,)], "_planes_mat: array<array<double>>")
     staged = df.join(F.broadcast(planes_df), how="cross").withColumn(
         "_dots_all",
         F.expr(
@@ -390,7 +390,7 @@ def ivf_anchor_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     )
     anchor_mat = [list(r["_av"]) for r in anchor_rows]
 
-    anchors_df = spark.createDataFrame([(anchor_mat,)], "_anchor_mat: array<array<double>>")
+    anchors_df = control_frame(spark, [(anchor_mat,)], "_anchor_mat: array<array<double>>")
 
     def _with_cells(df: DataFrame, vcol: str, probes: int) -> DataFrame:
         """Rank cells by (squared-L2 distance, cell idx) ascending and
@@ -754,8 +754,8 @@ def pca_top_component(corpus: DataFrame, n_iters: int = PCA_ITERS) -> DataFrame:
     out = [
         (d, int(mu[d]), float(w[d]), float(var_units)) for d in range(dim)
     ]
-    return spark.createDataFrame(
-        out, "dim_idx int, mu_unit long, pc1_weight double, pc1_variance double"
+    return control_frame(
+        spark, out, "dim_idx int, mu_unit long, pc1_weight double, pc1_variance double"
     )
 
 

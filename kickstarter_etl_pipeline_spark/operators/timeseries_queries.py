@@ -12,6 +12,7 @@ from kickstarter_etl_pipeline_spark.operators import events as EV
 from kickstarter_etl_pipeline_spark.operators.ranking import (
     bigint,
     collect_control,
+    control_frame,
     two_phase_rank,
 )
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
@@ -271,7 +272,8 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
             if i in v:  # the join on the previous round's states
                 nxt[j] = bigint(nxt.get(j, 0) + bigint(v[i] * nij) // ni[i])
         v = nxt
-    return spark.createDataFrame(
+    return control_frame(
+        spark,
         [(state, float(x) / 1e9) for state, x in v.items()],
         "event_type string, stationary_share double",
     )

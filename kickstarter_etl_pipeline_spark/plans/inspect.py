@@ -205,18 +205,13 @@ def _one_row_subtree(
         return bool(m) and int(m.group(1)) <= _BOUNDED_LIMIT
     if name.startswith("LocalTableScan") or name == "Scan OneRowRelation":
         # Literal local relation: rows are driver-embedded constants
-        # (band spines, anchor grids) — bounded by construction.
+        # (band spines, anchor grids; ranking.control_frame caps them at
+        # CONTROL_ROWS_CAP) — bounded by construction.
         return True
     if name.startswith("Range"):
         # spark.range(n) literal spine (band grids, percentile spines).
         m = re.search(r"Range \((-?\d+), (-?\d+)", details.get(oid, ""))
         return bool(m) and abs(int(m.group(2)) - int(m.group(1))) <= _BOUNDED_LIMIT
-    if name.startswith("Scan ExistingRDD"):
-        # createDataFrame over driver-local Python data plans as a scan
-        # of an applySchemaToPythonRDD — a literal local relation (the
-        # data already fit in the driver). localCheckpoint / arbitrary
-        # RDD scans do NOT qualify (data-sized) and return False.
-        return "applySchemaToPythonRDD" in details.get(oid, "")
     if "Join" in name or name.startswith("CartesianProduct"):
         kids = _children(tree, idx)
         return len(kids) == 2 and all(

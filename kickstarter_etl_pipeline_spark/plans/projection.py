@@ -125,6 +125,7 @@ class ScalingReport:
     target_sf: float
     shape_match: bool
     input_growth: float = 1.0
+    spill_bytes_at_big: float = 0.0
     nodes: list[NodeScaling] = field(default_factory=list)
 
     @property
@@ -163,14 +164,21 @@ def _executed_metrics(spark, df):
                 yield node.id(), node.name(), m.name(), v.get()
 
 
-def run_with_metrics(spark, df) -> list[NodeStat]:
-    """Execute ``df`` (noop sink) and return the tracked per-node
-    metrics of THAT execution, in plan-graph node order. File scans are
-    tracked under the normalized name ``Scan`` (their measured output
-    rows are the input ground truth the growth exponents are fitted
-    against)."""
+def run_with_metrics(spark, df) -> tuple[list[NodeStat], float]:
+    """Execute ``df`` (noop sink) once and return, from THAT execution,
+    the tracked per-node metrics in plan-graph node order and the TOTAL
+    spill bytes across all nodes ("spill size" covers sort / aggregate /
+    join memory-pressure spills). File scans are tracked under the
+    normalized name ``Scan`` (their measured output rows are the input
+    ground truth the growth exponents are fitted against). A
+    fixture-scale run of a well-sized plan must spill ZERO bytes
+    (pinned in tests), and SCALE_PROJECTION.json records spill at the
+    big SF so growth shows up between runs."""
     out: list[NodeStat] = []
+    spill = 0.0
     for node_id, raw_name, metric_name, text in _executed_metrics(spark, df):
+        if "spill size" in metric_name:
+            spill += parse_metric(text)
         if raw_name.startswith("Scan"):
             name, (tracked, kind) = "Scan", ("number of output rows", "rows")
         elif raw_name in _TRACKED:
@@ -179,21 +187,7 @@ def run_with_metrics(spark, df) -> list[NodeStat]:
             continue
         if metric_name == tracked:
             out.append(NodeStat(node_id, name, kind, parse_metric(text)))
-    return sorted(out, key=lambda s: s.node_id)
-
-
-def run_spill_bytes(spark, df) -> float:
-    """Execute ``df`` (noop sink) and return the TOTAL spill bytes the
-    execution recorded across all nodes ("spill size" covers sort /
-    aggregate / join memory-pressure spills). A fixture-scale run of a
-    well-sized plan must spill ZERO bytes (pinned in tests), and
-    SCALE_PROJECTION.json records spill at the big SF so growth shows
-    up between runs."""
-    total = 0.0
-    for _id, _name, metric_name, text in _executed_metrics(spark, df):
-        if "spill size" in metric_name:
-            total += parse_metric(text)
-    return total
+    return sorted(out, key=lambda s: s.node_id), spill
 
 
 def _classify(kind: str, v1: float, v2: float, ratio: float) -> tuple[float, str]:
@@ -230,9 +224,10 @@ def scaling_report(
     scan grew (a query over fixture tables that are constant between
     the chosen dirs), there is nothing to fit — every non-scan node is
     reported ``static-input`` rather than pretending alpha = 0 means
-    bounded."""
-    small = run_with_metrics(spark, build(spark, small_dir))
-    big = run_with_metrics(spark, build(spark, big_dir))
+    bounded. The big run's total spill rides along as
+    ``spill_bytes_at_big``; each SF is built and executed once."""
+    small, _ = run_with_metrics(spark, build(spark, small_dir))
+    big, spill = run_with_metrics(spark, build(spark, big_dir))
     shape_match = [s.name for s in small] == [b.name for b in big]
     by_name_small: dict[str, list[NodeStat]] = {}
     for s in small:
@@ -244,7 +239,7 @@ def scaling_report(
     for s, b in zip(by_name_small.get("Scan", []), by_name_big.get("Scan", [])):
         if s.value > 0:
             growth = max(growth, b.value / s.value)
-    report = ScalingReport(sf_small, sf_big, target_sf, shape_match, growth)
+    report = ScalingReport(sf_small, sf_big, target_sf, shape_match, growth, spill)
     fittable = growth > 1.05
     for name, bigs in by_name_big.items():
         smalls = by_name_small.get(name, [])
@@ -271,6 +266,7 @@ def report_dict(name: str, rep: ScalingReport) -> dict:
         "target_sf": rep.target_sf,
         "shape_match": rep.shape_match,
         "input_growth": round(rep.input_growth, 3),
+        "spill_bytes_at_big": rep.spill_bytes_at_big,
         "worst": rep.worst,
         "nodes": [
             {
@@ -353,7 +349,6 @@ def main() -> None:
             args.target_sf,
         )
         d = report_dict(name, rep)
-        d["spill_bytes_at_big"] = run_spill_bytes(spark, reg[name](spark, args.big))
         print(
             json.dumps(
                 {k: d[k] for k in ("query", "worst", "shape_match", "spill_bytes_at_big")}

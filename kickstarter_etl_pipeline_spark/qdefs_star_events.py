@@ -18,7 +18,10 @@ from kickstarter_etl_pipeline_spark.operators.dedup import (
 )
 from kickstarter_etl_pipeline_spark.operators.dims import build_dim_date
 from kickstarter_etl_pipeline_spark.operators.multimodal import documents_as_media, extract_features
-from kickstarter_etl_pipeline_spark.operators.ranking import grouped_two_phase_rank
+from kickstarter_etl_pipeline_spark.operators.ranking import (
+    control_frame,
+    grouped_two_phase_rank,
+)
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.operators.similarity import query_anchors
 from kickstarter_etl_pipeline_spark.operators.transform import fractional_days
@@ -1189,7 +1192,8 @@ def q_events_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame
         streaming_static_enrich,
     )
 
-    dim = spark.createDataFrame(
+    dim = control_frame(
+        spark,
         [
             ("click", "engagement"),
             ("view", "engagement"),
@@ -1197,7 +1201,7 @@ def q_events_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame
             ("add_to_cart", "revenue"),
             ("search", "intent"),
         ],
-        ["event_type", "category"],
+        "event_type string, category string",
     )
     return streaming_static_enrich(spark, sf_dir, dim)
 

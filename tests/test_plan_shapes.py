@@ -314,7 +314,7 @@ def test_threshold_curve_queries_have_no_outer_bnlj(spark, sf_dir, monkeypatch):
     vocab = explain_str(q_vocab_growth_curve(spark, sf_dir))
     (decile_frame,) = collected
     vocab_deciles = explain_str(decile_frame)
-    assert "Scan ExistingRDD" in vocab and "Join" not in vocab
+    assert "LocalTableScan" in vocab and "Join" not in vocab
 
     for name, plan in (
         ("lorenz_curve_events", lorenz),

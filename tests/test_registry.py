@@ -389,26 +389,38 @@ def test_no_new_one_value_parameters():
 # Materializing an intermediate and collecting to the driver each have
 # one device: partitioning.materialize (the storage policy) and
 # ranking.collect_control (the row cap). certify.py compares results on
-# the driver by design.
+# the driver by design. The return trip, driver rows -> DataFrame, is
+# ranking.control_frame's one createDataFrame call.
 MATERIALIZE_HOME = {"operators/partitioning.py"}
 COLLECT_HOMES = {"operators/ranking.py", "certify.py"}
+CONTROL_FRAME_HOME = ("operators/ranking.py", "control_frame")
 DRIVER_ACTIONS = {"collect", "toPandas", "toLocalIterator", "take", "head", "tail"}
 
 
 def test_materialize_and_collect_only_through_their_devices():
-    """No ``.localCheckpoint(`` outside ``materialize``'s module, and no
+    """No ``.localCheckpoint(`` outside ``materialize``'s module; no
     driver collect (``collect``/``toPandas``/``toLocalIterator``/
     ``take``/``head``/``tail`` or a zero-argument ``.first()``) outside
-    ``collect_control``'s module and the certifier."""
+    ``collect_control``'s module and the certifier; and no
+    ``.createDataFrame(`` outside ``control_frame`` itself."""
     raw = []
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
-        for node in ast.walk(ast.parse(path.read_text())):
+        tree = ast.parse(path.read_text())
+        device = [
+            fn
+            for fn in tree.body
+            if (rel, getattr(fn, "name", None)) == CONTROL_FRAME_HOME
+        ]
+        in_device = {id(n) for fn in device for n in ast.walk(fn)}
+        for node in ast.walk(tree):
             if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
                 continue
             attr = node.func.attr
             if attr == "localCheckpoint" and rel not in MATERIALIZE_HOME:
                 raw.append(f"{rel}:{node.lineno} .localCheckpoint(")
+            if attr == "createDataFrame" and id(node) not in in_device:
+                raw.append(f"{rel}:{node.lineno} .createDataFrame(")
             first = attr == "first" and not node.args and not node.keywords
             if (attr in DRIVER_ACTIONS or first) and rel not in COLLECT_HOMES:
                 raw.append(f"{rel}:{node.lineno} .{attr}(")

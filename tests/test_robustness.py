@@ -298,7 +298,7 @@ def test_prover_bounded_branches_demote_and_large_limit_stays(spark, sf_dir):
     - ``limit k`` (k <= 1000) anchor closure on a BNLJ broadcast side
       -> INFO; ``limit 2_000_000`` -> stays CRITICAL (the r13 ADVICE
       limit-threshold fix);
-    - literal local relation (createDataFrame of driver data) -> INFO;
+    - literal local relation (control_frame of driver data) -> INFO;
     - calendar-bounded aggregate (group-by on a date cast) -> INFO;
     - Generate explode(sequence(..)) over a one-row aggregate (the
       calendar-spine device) -> INFO;
@@ -306,6 +306,7 @@ def test_prover_bounded_branches_demote_and_large_limit_stays(spark, sf_dir):
     """
     from pyspark.sql import functions as F2
 
+    from kickstarter_etl_pipeline_spark.operators.ranking import control_frame
     from kickstarter_etl_pipeline_spark.plans.inspect import advise
 
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -322,7 +323,7 @@ def test_prover_bounded_branches_demote_and_large_limit_stays(spark, sf_dir):
     assert crit(orders.crossJoin(F2.broadcast(big))) != []
 
     # 2. literal local relation
-    lit = spark.createDataFrame([(1, "x"), (2, "y")], "k: long, v: string")
+    lit = control_frame(spark, [(1, "x"), (2, "y")], "k: long, v: string")
     assert crit(orders.crossJoin(F2.broadcast(lit))) == []
 
     # 3. calendar-bounded aggregate broadcast

@@ -11,6 +11,7 @@ from contextlib import redirect_stdout
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kickstarter_etl_pipeline_spark.operators import partitioning
 from kickstarter_etl_pipeline_spark.operators.dims import dim_from_distinct
@@ -19,6 +20,7 @@ from kickstarter_etl_pipeline_spark.operators.ranking import (
     CONTROL_ROWS_CAP,
     collect_control,
     collected_offsets,
+    control_frame,
     two_phase_rank,
 )
 from kickstarter_etl_pipeline_spark.operators.similarity import brute_force_topk
@@ -80,20 +82,70 @@ def test_scalable_keys_dense_at_256_partitions(spark):
 
 
 def test_control_collect_refuses_frame_over_cap(spark):
-    """collect_control, and the driver-side prefix fold on top of it,
-    refuse a frame one row over CONTROL_ROWS_CAP, naming the cap; a
-    frame of exactly the cap is still returned and folds."""
+    """collect_control, the driver-side prefix fold on top of it, and
+    the return trip control_frame refuse a frame one row over
+    CONTROL_ROWS_CAP, naming the cap; a frame of exactly the cap is
+    still returned, folds and builds."""
     def counts(n_rows):
         return spark.range(n_rows).select(
             F.col("id").alias("k"), F.lit(1).cast("long").alias("n")
         )
 
+    def rows(n_rows):
+        return [(i, 1) for i in range(n_rows)]
+
     assert len(collect_control(counts(CONTROL_ROWS_CAP))) == CONTROL_ROWS_CAP
     offs = collected_offsets(counts(CONTROL_ROWS_CAP), ["k"], [("n", "off")])
     assert offs.agg(F.max("off")).first()[0] == CONTROL_ROWS_CAP - 1
+    frame = control_frame(spark, rows(CONTROL_ROWS_CAP), "k bigint, n bigint")
+    assert frame.count() == CONTROL_ROWS_CAP
     for over_cap in (collect_control, lambda df: collected_offsets(df, ["k"], [("n", "off")])):
         with pytest.raises(ValueError, match=f"CONTROL_ROWS_CAP={CONTROL_ROWS_CAP}"):
             over_cap(counts(CONTROL_ROWS_CAP + 1))
+    with pytest.raises(ValueError, match=f"CONTROL_ROWS_CAP={CONTROL_ROWS_CAP}"):
+        control_frame(spark, rows(CONTROL_ROWS_CAP + 1), "k bigint, n bigint")
+
+
+def test_control_frame_matches_create_data_frame(spark):
+    """control_frame returns the rows and schema spark.createDataFrame
+    returns for the same rows and schema, on the configured session and
+    on a plain one with Arrow off, but plans as a LocalTableScan. Rows
+    compare by repr, so NULL, NaN and -0.0 must each come back as
+    themselves. Rows createDataFrame refuses, control_frame refuses too."""
+    plain = spark.newSession()
+    plain.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
+    nan = float("nan")
+    offsets = T.StructType(
+        [T.StructField("k", T.StringType()), T.StructField("off", T.LongType(), False)]
+    )
+    cases = [
+        ([(None,), (nan,), (-0.0,), (0.0,), (1.5,)], "x double"),
+        ([(None,), (2**63 - 1,), (-(2**63),), (0,)], "x bigint"),
+        ([("it's",), ('say "hi"',), ("ünïcødé ✓",), ("",), (None,)], "s string"),
+        ([([[1.0, -0.0], [nan]],), ([],), ([None, [None]],), (None,)], "m array<array<double>>"),
+        ([], "a int, b string"),
+        ([(None, 0), ("a", 3)], offsets),
+    ]
+    for session in (spark, plain):
+        for rows, schema in cases:
+            got = control_frame(session, rows, schema)
+            want = session.createDataFrame(rows, schema)
+            assert got.schema == want.schema, schema
+            assert [repr(r) for r in got.collect()] == [repr(r) for r in want.collect()]
+            plan = got._jdf.queryExecution().executedPlan().toString()
+            assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    refused = [
+        ([(1.5,)], "x int"),
+        ([(2**31,)], "x int"),
+        ([(2**63,)], "x bigint"),
+        ([(1,)], "x double"),
+        ([("a", None)], offsets),
+    ]
+    for rows, schema in refused:
+        with pytest.raises((TypeError, ValueError)):
+            spark.createDataFrame(rows, schema)
+        with pytest.raises((TypeError, ValueError)):
+            control_frame(spark, rows, schema)
 
 
 def test_connected_components_nonconvergence_raises(spark):

@@ -5,11 +5,17 @@ REAL executions at two fixture scales, not on synthetic numbers."""
 
 from __future__ import annotations
 
+import json
+import sys
+from collections import Counter
+
 from pyspark.sql import functions as F
 
+from kickstarter_etl_pipeline_spark import queries as registry
+from kickstarter_etl_pipeline_spark import session
 from kickstarter_etl_pipeline_spark.plans.projection import (
+    main,
     parse_metric,
-    run_spill_bytes,
     run_with_metrics,
     scaling_report,
 )
@@ -34,7 +40,7 @@ def test_run_with_metrics_sees_exchange_and_join(spark):
     df = o.hint("merge").join(l, o.o_orderkey == l.l_orderkey).groupBy(
         "o_orderstatus"
     ).count()
-    stats = run_with_metrics(spark, df)
+    stats, _ = run_with_metrics(spark, df)
     names = {s.name for s in stats}
     assert "Exchange" in names and "SortMergeJoin" in names
     assert all(s.value >= 0 for s in stats)
@@ -125,7 +131,7 @@ def test_no_spill_at_fixture_scale(spark):
         .groupBy("o_orderstatus")
         .agg(F.sum("l_quantity").alias("q"))
     )
-    assert run_spill_bytes(spark, df) == 0.0
+    assert run_with_metrics(spark, df)[1] == 0.0
 
 
 def test_static_input_is_reported_not_misclassified(spark):
@@ -146,3 +152,26 @@ def test_static_input_is_reported_not_misclassified(spark):
     rep = scaling_report(build, spark, SMALL, BIG, 0.001, 0.01)
     assert rep.input_growth <= 1.05
     assert {n.cls for n in rep.nodes} == {"static-input"}
+
+
+def test_projection_cli_executes_each_scale_once(spark, monkeypatch, tmp_path):
+    """The CLI builds and executes each query once per SF: the big-SF
+    spill comes from the same execution the growth fit reads."""
+    built = Counter()
+
+    def counted(sp, d):
+        built[d] += 1
+        return sp.read.parquet(f"{d}/orders.parquet").groupBy("o_orderstatus").count()
+
+    out = tmp_path / "projection.json"
+    monkeypatch.setattr(registry, "queries", lambda: {"counted": counted})
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(
+        sys,
+        "argv",
+        ["projection", "--small", SMALL, "--big", BIG, "--queries", "counted", "--out", str(out)],
+    )
+    main()
+    assert built == {SMALL: 1, BIG: 1}
+    (report,) = json.loads(out.read_text())
+    assert report["query"] == "counted" and report["spill_bytes_at_big"] == 0.0
