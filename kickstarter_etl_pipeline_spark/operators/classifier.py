@@ -60,6 +60,7 @@ from kickstarter_etl_pipeline_spark.operators.ranking import (
     two_phase_rank,
 )
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
+from kickstarter_etl_pipeline_spark.streaming.events_stream import run_to_memory
 
 
 #: DuckDB twin of each query defined here, by query name: SQL that
@@ -302,12 +303,6 @@ def q_documents_stream_classifier_scores(
     materialize the grid on the driver — fine at any sf (the grid is
     enumeration-bounded), and the oracle is the batch replay of the
     same fit + scoring (TWINS, below)."""
-    import uuid
-
-    from kickstarter_etl_pipeline_spark.streaming.events_stream import (
-        _checkpoint_dir,
-    )
-
     feats = doc_feature_frame(spark, sf_dir)
     w, _ = perceptron_fit(feats)
     wr = collect_control(w)[0]
@@ -334,17 +329,7 @@ def q_documents_stream_classifier_scores(
             .alias("n_positive"),
         )
     )
-    name = f"stream_classifier_{uuid.uuid4().hex[:8]}"
-    query = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", _checkpoint_dir("ks_stream_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "complete")
 
 
 # FULL twin of q_documents_stream_classifier_scores (train-offline /

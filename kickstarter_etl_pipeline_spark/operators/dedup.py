@@ -31,6 +31,7 @@ from kickstarter_etl_pipeline_spark.operators.partitioning import (
 from kickstarter_etl_pipeline_spark.operators.ranking import collect_control
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
 from kickstarter_etl_pipeline_spark.operators.text import fingerprint_md5, tokens
+from kickstarter_etl_pipeline_spark.streaming.events_stream import run_to_memory
 
 #: Word-shingle width of the near-duplicate detectors.
 SHINGLE_N = 3
@@ -989,12 +990,7 @@ def stream_near_dup_pairs(spark, sf_dir: str):
     100 TB you would keep the payload in a separate doc-keyed store
     and add one candidate join; the fixture-tier layout inlines it to
     keep the stream side join-once."""
-    import uuid
-
     from kickstarter_etl_pipeline_spark.sources.readers import load_table
-    from kickstarter_etl_pipeline_spark.streaming.events_stream import (
-        _checkpoint_dir,
-    )
 
     docs = load_table(spark, sf_dir, "documents")
 
@@ -1064,14 +1060,4 @@ def stream_near_dup_pairs(spark, sf_dir: str):
         .filter(F.col("jaccard") >= 0.8)
         .select("id_a", "id_b", "jaccard")
     )
-    name = f"stream_near_dup_{uuid.uuid4().hex[:8]}"
-    query = (
-        cand.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", _checkpoint_dir("ks_neardup_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(cand, "append")

@@ -110,16 +110,20 @@ def loop_frame(df: DataFrame) -> DataFrame:
 
 
 # State-store partition count of the stateful streaming queries that
-# pin it on an isolated_session: the tws_sessionize operators,
-# tws_recovery.tws_state_at_rest and the chained hourly -> daily rollup.
+# pin it on an isolated_session: every transformWithState query (the
+# session tws_sessionize.tws_session builds) and the chained hourly ->
+# daily rollup.
 # Streaming reads it from spark.sql.shuffle.partitions when the
 # checkpoint is created. Like LOOP_PARTITIONS it is DATA-sized: it
 # tracks open state keys ((window, event_type) groups, live users), not
 # input volume or cores. Each state partition pays a commit per
 # micro-batch, so at 32 the rollup's two stateful operators were mostly
 # commit overhead (4.2 s -> 1.5 s at sf0.1 going 32 -> 8, byte-identical
-# 145 rows). On a cluster, raise it only when the open-key count needs
-# it. No emitted row depends on it: every operator is a per-key fold.
+# 145 rows), and events_tws_sessions ran 13.46 s cold at 8 against
+# 16.39 s at 32 (sf0.1, local[4], min of 3 fresh processes per value,
+# identical 95,465 rows). On a cluster, raise it only when the open-key
+# count needs it. No emitted row depends on it: every operator is a
+# per-key fold.
 STATE_PARTITIONS = 8
 
 
@@ -145,8 +149,10 @@ def isolated_session(spark: SparkSession, confs: dict[str, str]) -> SparkSession
     tripwire (tests/test_graph_scale.py) whitelists exactly this
     function and nothing else.
 
-    Callers must read any memory-sink table through the RETURNED
-    session (temp views are per-session).
+    Temp views, memory-sink tables among them, are per-session:
+    ``events_stream.run_to_memory`` reads a stream's table back through
+    the session the stream was planned on, so a stream planned on the
+    child returns through the child.
     """
     child = spark.newSession()
     for key, value in confs.items():

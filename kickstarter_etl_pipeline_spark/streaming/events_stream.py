@@ -12,14 +12,6 @@ from __future__ import annotations
 
 import uuid
 
-from kickstarter_etl_pipeline_spark.scratch import run_scratch_dir
-
-
-def _checkpoint_dir(prefix: str) -> str:
-    """Checkpoint dir under the per-run scratch root (auto-cleaned at
-    process exit — checkpoints are only needed while the query runs)."""
-    return run_scratch_dir(prefix)
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from kickstarter_etl_pipeline_spark import schemas
@@ -28,10 +20,41 @@ from kickstarter_etl_pipeline_spark.operators.partitioning import (
     isolated_session,
 )
 from kickstarter_etl_pipeline_spark.operators.rounding import round_det
+from kickstarter_etl_pipeline_spark.scratch import run_scratch_dir
 from kickstarter_etl_pipeline_spark.session import ensure_runtime_confs
 
 #: Event-time watermark delay of the memory-sink streaming queries.
 WATERMARK = "2 hours"
+
+
+def run_to_memory(df: DataFrame, output_mode: str) -> DataFrame:
+    """Run the finite stream ``df`` to completion into a memory sink and
+    return the sink's table: the one way this package runs a stream
+    against its batch twin.
+
+    ``Trigger.AvailableNow`` processes what the source holds at start,
+    then stops; the checkpoint lives under the run scratch root and the
+    query name is a fresh uuid, so repeat calls in one session never
+    collide. Memory-sink tables are per-session, so the table is read
+    back through the session ``df`` was planned on: a stream planned on
+    an ``isolated_session`` child returns through that child.
+
+    FIXTURE-VERIFICATION TIER ONLY: the memory sink holds the whole
+    result on the driver. Production = the parquet and foreachBatch
+    sinks below (:func:`stream_tumbling_append_parquet`,
+    :func:`stream_upsert_rollup`).
+    """
+    name = f"stream_{uuid.uuid4().hex}"
+    query = (
+        df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(name)
+        .option("checkpointLocation", run_scratch_dir("ks_stream_ckpt_"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    return df.sparkSession.table(name)
 
 
 def _probe_events_ts_dtype(spark: SparkSession, src_dir: str, glob: str) -> str:
@@ -118,18 +141,7 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             round_det(F.col("sum_value") / F.col("n_events"), 6).alias("avg_value"),
         )
     )
-    name = f"stream_tumbling_{uuid.uuid4().hex[:8]}"
-    checkpoint = _checkpoint_dir("ks_stream_ckpt_")
-    query = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "complete")
 
 
 def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -155,18 +167,7 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = f"stream_sliding_{uuid.uuid4().hex[:8]}"
-    checkpoint = _checkpoint_dir("ks_stream_ckpt_")
-    query = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "complete")
 
 
 def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -190,18 +191,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = f"stream_sessions_{uuid.uuid4().hex[:8]}"
-    checkpoint = _checkpoint_dir("ks_stream_ckpt_")
-    query = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "complete")
 
 
 def stream_events_to_parquet(
@@ -296,18 +286,7 @@ def streaming_static_enrich(
         F.count("*").alias("n_events"),
         F.round(F.sum("value"), 4).alias("sum_value"),
     )
-    name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    checkpoint = _checkpoint_dir("ks_stream_ckpt_")
-    query = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "complete")
 
 
 def streaming_purchase_click_join(
@@ -377,18 +356,7 @@ def streaming_purchase_click_join(
         joined = joined.filter(F.col("click_id").isNull()).select(
             "user_id", "purchase_id"
         )
-    name = f"stream_ssj_{uuid.uuid4().hex[:8]}"
-    checkpoint = _checkpoint_dir("ks_stream_ssj_")
-    query = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(joined, "append")
 
 
 def stream_upsert_rollup(
@@ -485,9 +453,7 @@ def streaming_hourly_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame
     # Streaming pins its state partitioning from the session conf at
     # query start (fresh checkpoint every call, so it always applies).
     # Plan the ENTIRE query — source to sink — on an isolated child
-    # session so the shared session's conf is never mutated; the memory
-    # sink's temp view is per-session, so the result is read back
-    # through the child too.
+    # session so the shared session's conf is never mutated.
     child = isolated_session(spark, {"spark.sql.shuffle.partitions": str(STATE_PARTITIONS)})
     stream = read_events_stream(child, sf_dir)
     hourly = (
@@ -515,18 +481,7 @@ def streaming_hourly_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame
             "total_value",
         )
     )
-    name = f"stream_rollup_{uuid.uuid4().hex[:8]}"
-    checkpoint = _checkpoint_dir("ks_stream_ckpt_")
-    query = (
-        daily.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return child.table(name)
+    return run_to_memory(daily, "append")
 
 
 def streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -549,19 +504,8 @@ def streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type", "minute_bucket"])
         .select("user_id", "event_type", "minute_bucket")
     )
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    checkpoint = _checkpoint_dir("ks_stream_ckpt_")
-    query = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
     return (
-        spark.table(name)
+        run_to_memory(deduped, "append")
         .groupBy("event_type")
         .agg(F.count("*").cast("long").alias("n_distinct_keys"))
     )

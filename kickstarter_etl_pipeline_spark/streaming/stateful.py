@@ -25,7 +25,6 @@ Two eviction strategies:
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -35,8 +34,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
 from kickstarter_etl_pipeline_spark.streaming.events_stream import (
-    _checkpoint_dir,
     read_events_stream,
+    run_to_memory,
 )
 
 SESSION_SCHEMA = T.StructType(
@@ -151,18 +150,7 @@ def stateful_sessionize_with_timeout(spark: SparkSession, sf_dir: str) -> DataFr
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    name = f"stateful_timeout_{uuid.uuid4().hex[:8]}"
-    checkpoint = _checkpoint_dir("ks_stateful_to_ckpt_")
-    query = (
-        sessions.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(sessions, "append")
 
 
 def stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -176,18 +164,7 @@ def stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"stateful_sessions_{uuid.uuid4().hex[:8]}"
-    checkpoint = _checkpoint_dir("ks_stateful_ckpt_")
-    query = (
-        sessions.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(sessions, "append")
 
 
 CONVERSION_SCHEMA = T.StructType(
@@ -292,15 +269,4 @@ def stateful_conversions(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"stateful_conv_{uuid.uuid4().hex[:8]}"
-    checkpoint = _checkpoint_dir("ks_stateful_conv_ckpt_")
-    query = (
-        conv.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(conv, "append")

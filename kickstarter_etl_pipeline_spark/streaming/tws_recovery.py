@@ -45,8 +45,6 @@ from __future__ import annotations
 import glob as _glob
 import os
 import shutil
-import time
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -56,19 +54,13 @@ from pyspark.sql import types as T
 
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
-from kickstarter_etl_pipeline_spark.operators.partitioning import (
-    STATE_PARTITIONS,
-    isolated_session,
-)
 from kickstarter_etl_pipeline_spark.operators.ranking import collect_control
 from kickstarter_etl_pipeline_spark.scratch import run_scratch_dir
 from kickstarter_etl_pipeline_spark.sources.readers import load_table
 from kickstarter_etl_pipeline_spark.streaming.events_stream import (
     read_events_raw_stream,
 )
-from kickstarter_etl_pipeline_spark.streaming.tws_sessionize import (
-    _export_worker_pythonpath,
-)
+from kickstarter_etl_pipeline_spark.streaming.tws_sessionize import tws_session
 
 #: TTL on the fleeting state. The inter-phase wall gap is a full query
 #: teardown + startup (reliably multiple seconds); 500 ms keeps a >10×
@@ -223,8 +215,7 @@ def _split_events_by_midpoint(spark: SparkSession, sf_dir: str):
     """Write the events fixture as two single-file halves split at the
     integer-µs midpoint ``(min + max) div 2`` (half A: us <= cut, half
     B: us > cut — both provably non-empty). Returns (src_dir containing
-    only a.parquet, staged path of b.parquet to add for phase 2,
-    row count of half A, row count of half B)."""
+    only a.parquet, staged path of b.parquet to add for phase 2)."""
     ev = load_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     row = collect_control(ev.select(F.min(us).alias("mn"), F.max(us).alias("mx")))[0]
@@ -234,12 +225,9 @@ def _split_events_by_midpoint(spark: SparkSession, sf_dir: str):
     src = os.path.join(root, "src")
     os.makedirs(src, exist_ok=True)
 
-    counts: dict[str, int] = {}
-
     def _one_file(df: DataFrame, name: str, dest_dir: str) -> str:
         out = os.path.join(root, name)
         df.coalesce(1).write.parquet(out)
-        counts[name] = spark.read.parquet(out).count()
         (part,) = _glob.glob(os.path.join(out, "part-*.parquet"))
         final = os.path.join(dest_dir, f"{name}.parquet")
         shutil.copy(part, final)
@@ -247,7 +235,7 @@ def _split_events_by_midpoint(spark: SparkSession, sf_dir: str):
 
     _one_file(ev.filter(us <= F.lit(cut)), "a", src)
     staged_b = _one_file(ev.filter(us > F.lit(cut)), "b", root)
-    return src, staged_b, counts["a"], counts["b"]
+    return src, staged_b
 
 
 def _two_phase_tws(
@@ -263,50 +251,14 @@ def _two_phase_tws(
     fresh processor instance per phase, returning phase 2's emissions.
     ``processor_factory_p2`` lets phase 2 run a DIFFERENT processor
     against the same checkpoint (the schema-evolution redeploy);
-    ``extra_confs`` extends the isolated session (e.g. the Avro state
+    ``extra_confs`` extends :func:`tws_session` (e.g. the Avro state
     encoding evolution requires)."""
-    _export_worker_pythonpath(spark)
-    confs = {
-        "spark.sql.streaming.stateStore.providerClass": (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        )
-    }
-    confs.update(extra_confs or {})
-    child = isolated_session(spark, confs)
-    src, staged_b, n_a, n_b = _split_events_by_midpoint(child, sf_dir)
+    child = tws_session(spark, extra_confs)
+    src, staged_b = _split_events_by_midpoint(child, sf_dir)
     root = run_scratch_dir("ks_tws_resume_")
     checkpoint = os.path.join(root, "ckpt")
 
-    def _await_drain(query, expected_rows: int, timeout_s: float = 300.0) -> None:
-        """availableNow + processingTime timeMode never self-terminates
-        in this Spark build: after the data batch, EMPTY micro-batches
-        keep firing to advance processing time (probed live — 224
-        batches in 120 s, zero new rows). Emissions are unaffected (an
-        input-driven processor yields nothing on an empty batch), so
-        drain deterministically: wait until the cumulative input row
-        count reaches the phase's expected rows AND a later empty batch
-        has completed (proof the data batch committed), then stop."""
-        deadline = time.monotonic() + timeout_s
-        while time.monotonic() < deadline:
-            progress = query.recentProgress
-            seen = sum(p["numInputRows"] for p in progress)
-            if (
-                seen >= expected_rows
-                and progress
-                and progress[-1]["numInputRows"] == 0
-            ):
-                query.stop()
-                query.awaitTermination()
-                return
-            time.sleep(0.5)
-        query.stop()
-        raise RuntimeError(
-            f"two-phase TWS drain timed out after {timeout_s}s "
-            f"(saw {seen} of {expected_rows} input rows)"
-        )
-
-    def _run_phase(tag: str, expected_rows: int, factory=None) -> DataFrame:
+    def _run_phase(tag: str, factory=None) -> DataFrame:
         stream = read_events_raw_stream(child, src, glob="*.parquet")
         folded = stream.groupBy("user_id").transformWithStateInPandas(
             statefulProcessor=(factory or processor_factory)(),
@@ -318,7 +270,7 @@ def _two_phase_tws(
         # RECOVERY for the memory sink in append mode, and a restart
         # from the phase-1 checkpoint is the whole point. A per-phase
         # parquet dir also isolates phase 2's emissions exactly.
-        out_dir = os.path.join(root, f"out_{tag}_{uuid.uuid4().hex[:8]}")
+        out_dir = os.path.join(root, f"out_{tag}")
 
         def _sink(batch_df: DataFrame, _batch_id: int) -> None:
             batch_df.write.mode("append").parquet(out_dir)
@@ -330,16 +282,13 @@ def _two_phase_tws(
             .trigger(availableNow=True)
             .start()
         )
-        if time_mode == "processingTime":
-            _await_drain(query, expected_rows)
-        else:
-            query.awaitTermination()
+        query.awaitTermination()
         return child.read.schema(out_schema).parquet(out_dir)
 
-    _run_phase("p1", n_a)  # phase 1: half A only; emissions discarded
+    _run_phase("p1")  # phase 1: half A only; emissions discarded
     shutil.copy(staged_b, os.path.join(src, "b.parquet"))
     # resumes the SAME checkpoint; sees only B (optionally evolved)
-    return _run_phase("p2", n_b, factory=processor_factory_p2)
+    return _run_phase("p2", factory=processor_factory_p2)
 
 
 def tws_restart_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -376,9 +325,16 @@ def tws_ttl_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     evicted between phases (n_ttl = half B only)."""
     # TTLConfig is legal only under processingTime timeMode; no
     # timers are registered, so the fold itself is time-independent.
+    # Under processingTime, availableNow keeps firing empty batches to
+    # advance the clock and never terminates, and stopping it
+    # interrupts a batch mid-write (an aborted sink job, then a
+    # StackOverflowError in the stream thread). Without empty batches
+    # each phase is one data batch and ends by itself; expired TTL
+    # state is already invisible to the phase-2 read.
     return _two_phase_tws(
         spark, sf_dir, TtlCounterProcessor, TTL_SCHEMA,
         time_mode="processingTime",
+        extra_confs={"spark.sql.streaming.noDataMicroBatches.enabled": "false"},
     )
 
 
@@ -393,18 +349,8 @@ def tws_state_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     mis-typed fails the hash. This is the TWS complement of
     events_stream_state_split (which reads a windowed-AGGREGATION
     store): same reader, user-defined typed state."""
-    _export_worker_pythonpath(spark)
-    child = isolated_session(
-        spark,
-        {
-            "spark.sql.streaming.stateStore.providerClass": (
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider"
-            ),
-            "spark.sql.shuffle.partitions": str(STATE_PARTITIONS),
-        },
-    )
-    src, _staged_b, _n_a, _n_b = _split_events_by_midpoint(child, sf_dir)
+    child = tws_session(spark)
+    src, _staged_b = _split_events_by_midpoint(child, sf_dir)
     root = run_scratch_dir("ks_tws_atrest_")
     checkpoint = os.path.join(root, "ckpt")
     out_dir = os.path.join(root, "out")

@@ -40,12 +40,11 @@ from __future__ import annotations
 
 import os
 import sys
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
@@ -53,9 +52,10 @@ from kickstarter_etl_pipeline_spark.operators.partitioning import (
     STATE_PARTITIONS,
     isolated_session,
 )
+from kickstarter_etl_pipeline_spark.sources.readers import load_table
 from kickstarter_etl_pipeline_spark.streaming.events_stream import (
-    _checkpoint_dir,
     read_events_stream,
+    run_to_memory,
 )
 from kickstarter_etl_pipeline_spark.streaming.stateful import (
     GAP_US,
@@ -150,6 +150,33 @@ def _export_worker_pythonpath(spark: SparkSession) -> None:
         )
 
 
+def tws_session(
+    spark: SparkSession, extra_confs: dict[str, str] | None = None
+) -> SparkSession:
+    """The session every transformWithStateInPandas query is planned on.
+
+    Passes the protobuf gate (:func:`_export_worker_pythonpath`), then
+    returns an ``isolated_session`` child pinning the RocksDB state
+    store and ``STATE_PARTITIONS`` state partitions, so the caller's
+    session conf is never mutated. transformWithState needs a store with
+    column families; the default HDFSBackedStateStoreProvider refuses
+    (UNSUPPORTED_FEATURE.STATE_STORE_MULTIPLE_COLUMN_FAMILIES).
+    ``extra_confs`` extends the child (the Avro state encoding that
+    state schema evolution requires)."""
+    _export_worker_pythonpath(spark)
+    return isolated_session(
+        spark,
+        {
+            "spark.sql.streaming.stateStore.providerClass": (
+                "org.apache.spark.sql.execution.streaming.state."
+                "RocksDBStateStoreProvider"
+            ),
+            "spark.sql.shuffle.partitions": str(STATE_PARTITIONS),
+            **(extra_confs or {}),
+        },
+    )
+
+
 def tws_available() -> bool:
     """True iff the runtime can execute transformWithStateInPandas:
     Spark's state-protocol worker imports google.protobuf.descriptor at
@@ -212,23 +239,7 @@ def tws_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Raises RuntimeError up front when the runtime lacks protobuf (see
     module docstring) instead of letting the stream crash mid-query.
     """
-    _export_worker_pythonpath(spark)
-    # transformWithState requires a state store with column-family
-    # support; the default HDFSBackedStateStoreProvider refuses
-    # (UNSUPPORTED_FEATURE.STATE_STORE_MULTIPLE_COLUMN_FAMILIES).
-    # Plan the whole query on an isolated child session pinning the
-    # RocksDB provider — the shared session conf is never mutated
-    # (the streaming_hourly_daily_rollup device).
-    child = isolated_session(
-        spark,
-        {
-            "spark.sql.streaming.stateStore.providerClass": (
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider"
-            ),
-            "spark.sql.shuffle.partitions": str(STATE_PARTITIONS),
-        },
-    )
+    child = tws_session(spark)
     stream = read_events_stream(child, sf_dir)
     sessions = stream.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=SessionProcessor(),
@@ -236,20 +247,7 @@ def tws_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeMode="none",
     )
-    name = f"tws_sessions_{uuid.uuid4().hex[:8]}"
-    checkpoint = _checkpoint_dir("ks_tws_ckpt_")
-    query = (
-        sessions.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    # memory-sink temp views are per-session — read back through the
-    # child the query was planned on
-    return child.table(name)
+    return run_to_memory(sessions, "append")
 
 
 class TimeoutSessionProcessor(StatefulProcessor):
@@ -324,17 +322,7 @@ def tws_sessionize_with_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the event-time-timer sessionizer (StatefulProcessor API)
     over the events fixture with AvailableNow; emitted rows equal
     stateful_sessionize_with_timeout's exactly (same oracle)."""
-    _export_worker_pythonpath(spark)
-    child = isolated_session(
-        spark,
-        {
-            "spark.sql.streaming.stateStore.providerClass": (
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider"
-            ),
-            "spark.sql.shuffle.partitions": str(STATE_PARTITIONS),
-        },
-    )
+    child = tws_session(spark)
     stream = read_events_stream(child, sf_dir).withWatermark("ts", "1 minute")
     sessions = stream.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=TimeoutSessionProcessor(),
@@ -342,18 +330,7 @@ def tws_sessionize_with_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeMode="eventTime",
     )
-    name = f"tws_timeout_{uuid.uuid4().hex[:8]}"
-    checkpoint = _checkpoint_dir("ks_tws_to_ckpt_")
-    query = (
-        sessions.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return child.table(name)
+    return run_to_memory(sessions, "append")
 
 
 PROFILE_SCHEMA = T.StructType(
@@ -444,17 +421,7 @@ class UserProfileProcessor(StatefulProcessor):
 def tws_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the three-state profile processor over the events fixture
     (AvailableNow, single batch) and return one profile row per user."""
-    _export_worker_pythonpath(spark)
-    child = isolated_session(
-        spark,
-        {
-            "spark.sql.streaming.stateStore.providerClass": (
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider"
-            ),
-            "spark.sql.shuffle.partitions": str(STATE_PARTITIONS),
-        },
-    )
+    child = tws_session(spark)
     stream = read_events_stream(child, sf_dir)
     profiles = stream.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=UserProfileProcessor(),
@@ -462,18 +429,7 @@ def tws_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeMode="none",
     )
-    name = f"tws_profile_{uuid.uuid4().hex[:8]}"
-    checkpoint = _checkpoint_dir("ks_tws_prof_ckpt_")
-    query = (
-        profiles.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return child.table(name)
+    return run_to_memory(profiles, "append")
 
 
 WARM_START_SCHEMA = T.StructType(
@@ -502,7 +458,7 @@ class WarmStartProcessor(StatefulProcessor):
         self._n = handle.getValueState("n", _SEED_SCHEMA)
 
     def handleInitialState(self, key, initialState, timerValues) -> None:
-        self._n.update((int(initialState["base"]),))
+        self._n.update((int(initialState["base"].iloc[0]),))
 
     def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
         (user_id,) = key
@@ -521,21 +477,7 @@ def tws_warm_start_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seed per-user state with the BATCH purchase count, then fold the
     event stream on top (AvailableNow, single batch): one row per user,
     n_total = purchases + all streamed events, seeded = had purchases."""
-    _export_worker_pythonpath(spark)
-    from pyspark.sql import functions as F
-
-    from kickstarter_etl_pipeline_spark.sources.readers import load_table
-
-    child = isolated_session(
-        spark,
-        {
-            "spark.sql.streaming.stateStore.providerClass": (
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider"
-            ),
-            "spark.sql.shuffle.partitions": str(STATE_PARTITIONS),
-        },
-    )
+    child = tws_session(spark)
     seed = (
         load_table(child, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
@@ -550,15 +492,4 @@ def tws_warm_start_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeMode="none",
         initialState=seed.groupBy("user_id"),
     )
-    name = f"tws_warm_{uuid.uuid4().hex[:8]}"
-    checkpoint = _checkpoint_dir("ks_tws_warm_ckpt_")
-    query = (
-        totals.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return child.table(name)
+    return run_to_memory(totals, "append")

@@ -395,32 +395,62 @@ MATERIALIZE_HOME = {"operators/partitioning.py"}
 COLLECT_HOMES = {"operators/ranking.py", "certify.py"}
 CONTROL_FRAME_HOME = ("operators/ranking.py", "control_frame")
 DRIVER_ACTIONS = {"collect", "toPandas", "toLocalIterator", "take", "head", "tail"}
+# A finite stream runs against its batch twin through
+# events_stream.run_to_memory, and every transformWithState query is
+# planned on the session tws_sessionize.tws_session builds. The one
+# other memory sink is q_pystream_replay_agg's: under availableNow Spark
+# fixes the end offset with a single latestOffset call, so pyeventlog's
+# replay would stop after 1 of the 5 micro-batches the query exists to
+# test (and miss 4/5 of the rows), hence processAllAvailable + stop.
+MEMORY_SINK_HOMES = {
+    ("streaming/events_stream.py", "run_to_memory"),
+    ("qdefs_star_events.py", "q_pystream_replay_agg"),
+}
+TWS_SESSION_HOME = ("streaming/tws_sessionize.py", "tws_session")
 
 
 def test_materialize_and_collect_only_through_their_devices():
     """No ``.localCheckpoint(`` outside ``materialize``'s module; no
     driver collect (``collect``/``toPandas``/``toLocalIterator``/
     ``take``/``head``/``tail`` or a zero-argument ``.first()``) outside
-    ``collect_control``'s module and the certifier; and no
-    ``.createDataFrame(`` outside ``control_frame`` itself."""
+    ``collect_control``'s module and the certifier; no
+    ``.createDataFrame(`` outside ``control_frame`` itself; no
+    ``.format("memory")`` outside ``run_to_memory`` (and the pystream
+    query above); and no ``RocksDBStateStoreProvider`` outside
+    ``tws_session``."""
     raw = []
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
         tree = ast.parse(path.read_text())
-        device = [
-            fn
-            for fn in tree.body
-            if (rel, getattr(fn, "name", None)) == CONTROL_FRAME_HOME
-        ]
-        in_device = {id(n) for fn in device for n in ast.walk(fn)}
+
+        def inside(homes):
+            return {
+                id(n)
+                for fn in tree.body
+                if (rel, getattr(fn, "name", None)) in homes
+                for n in ast.walk(fn)
+            }
+
+        in_frame = inside({CONTROL_FRAME_HOME})
+        in_sink = inside(MEMORY_SINK_HOMES)
+        in_tws = inside({TWS_SESSION_HOME})
         for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Constant)
+                and "RocksDBStateStoreProvider" in str(node.value)
+                and id(node) not in in_tws
+            ):
+                raw.append(f"{rel}:{node.lineno} RocksDBStateStoreProvider")
             if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
                 continue
             attr = node.func.attr
             if attr == "localCheckpoint" and rel not in MATERIALIZE_HOME:
                 raw.append(f"{rel}:{node.lineno} .localCheckpoint(")
-            if attr == "createDataFrame" and id(node) not in in_device:
+            if attr == "createDataFrame" and id(node) not in in_frame:
                 raw.append(f"{rel}:{node.lineno} .createDataFrame(")
+            memory = [ast.unparse(a) for a in node.args] == ["'memory'"]
+            if attr == "format" and memory and id(node) not in in_sink:
+                raw.append(f'{rel}:{node.lineno} .format("memory")')
             first = attr == "first" and not node.args and not node.keywords
             if (attr in DRIVER_ACTIONS or first) and rel not in COLLECT_HOMES:
                 raw.append(f"{rel}:{node.lineno} .{attr}(")

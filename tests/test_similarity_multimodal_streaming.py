@@ -183,7 +183,6 @@ def test_stateful_conversions_state_carries_across_batches(spark, tmp_path):
     state-seeding half of the vectorized ffill fold, which a
     single-batch replay never exercises."""
     import datetime
-    import uuid as _uuid
 
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -194,8 +193,8 @@ def test_stateful_conversions_state_carries_across_batches(spark, tmp_path):
         _conversion_fn,
     )
     from kickstarter_etl_pipeline_spark.streaming.events_stream import (
-        _checkpoint_dir,
         read_events_raw_stream,
+        run_to_memory,
     )
 
     import glob as _glob
@@ -237,16 +236,6 @@ def test_stateful_conversions_state_carries_across_batches(spark, tmp_path):
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"conv_carry_{_uuid.uuid4().hex[:8]}"
-    q = (
-        conv.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", _checkpoint_dir("ks_conv_carry_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = {tuple(r) for r in spark.table(name).collect()}
+    rows = {tuple(r) for r in run_to_memory(conv, "append").collect()}
     us = int(base.replace(tzinfo=datetime.timezone.utc).timestamp() * 1_000_000)
     assert rows == {(7, us, us + 30 * 60 * 1_000_000, 30 * 60 * 1_000_000)}

@@ -1,6 +1,7 @@
 """Production-tier surfaces: append-mode streaming with late-data drop,
 stream-static joins, upsert rollups, partition pruning, and run-scoped
-scratch hygiene."""
+scratch hygiene; plus the memory-sink device the fixture tier runs
+through."""
 
 from __future__ import annotations
 
@@ -10,7 +11,11 @@ from datetime import datetime, timezone
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from kickstarter_etl_pipeline_spark.operators.partitioning import isolated_session
+from kickstarter_etl_pipeline_spark.sources.readers import load_table
 from kickstarter_etl_pipeline_spark.streaming.events_stream import (
+    read_events_stream,
+    run_to_memory,
     stream_tumbling_append_parquet,
 )
 
@@ -89,6 +94,22 @@ def test_append_mode_drops_late_events(spark, tmp_path):
     assert ten_oclock[0]["sum_value"] == 2.0
     # Window [15:00,16:00) never passed the watermark → never emitted.
     assert not any(r["bucket_start"] == "2024-01-01 15:00:00" for r in collected)
+
+
+def test_run_to_memory_reads_back_through_the_planning_session(spark, sf_dir):
+    """A stream planned on an ``isolated_session`` child returns its rows
+    through ``run_to_memory`` without the caller naming the child (the
+    memory-sink table exists only in the child's catalog), and no query
+    is left running on either session."""
+    child = isolated_session(spark, {"spark.sql.shuffle.partitions": "2"})
+    counts = read_events_stream(child, sf_dir).groupBy("event_type").count()
+    got = {r["event_type"]: r["count"] for r in run_to_memory(counts, "complete").collect()}
+    want = {
+        r["event_type"]: r["count"]
+        for r in load_table(spark, sf_dir, "events").groupBy("event_type").count().collect()
+    }
+    assert got == want and len(got) > 1
+    assert spark.streams.active == [] and child.streams.active == []
 
 
 def test_stream_static_join_equals_batch(spark, sf_dir):

@@ -78,20 +78,13 @@ def test_tws_profile_state_carries_across_batches(spark, tmp_path):
     row per batch (append), and the row with the most events must equal
     the single-batch profile over the full fixture — proving the
     map/value state round-tripped the JVM state store between batches."""
-    import uuid as _uuid
-
     from pyspark.sql import functions as F2
 
-    from kickstarter_etl_pipeline_spark.operators.partitioning import (
-        isolated_session,
-    )
-    from kickstarter_etl_pipeline_spark.streaming.events_stream import (
-        _checkpoint_dir,
-    )
+    from kickstarter_etl_pipeline_spark.streaming.events_stream import run_to_memory
     from kickstarter_etl_pipeline_spark.streaming.tws_sessionize import (
         PROFILE_SCHEMA,
         UserProfileProcessor,
-        _export_worker_pythonpath,
+        tws_session,
         tws_user_profile,
     )
     from tests.conftest import SF_SMOKE
@@ -108,35 +101,19 @@ def test_tws_profile_state_carries_across_batches(spark, tmp_path):
         "append"
     ).parquet(d + "/a.parquet")
 
-    _export_worker_pythonpath(spark)
-    child = isolated_session(
-        spark,
-        {"spark.sql.streaming.stateStore.providerClass":
-         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"},
-    )
     stream = (
-        child.readStream.schema(events.schema)
+        tws_session(spark)
+        .readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(d + "/a.parquet")
     )
-    name = f"tws_carry_{_uuid.uuid4().hex[:8]}"
-    q = (
-        stream.groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=UserProfileProcessor(),
-            outputStructType=PROFILE_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", _checkpoint_dir("ks_tws_carry_"))
-        .trigger(availableNow=True)
-        .start()
+    profiles = stream.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=UserProfileProcessor(),
+        outputStructType=PROFILE_SCHEMA,
+        outputMode="append",
+        timeMode="none",
     )
-    q.awaitTermination()
-    per_batch = child.table(name).collect()
+    per_batch = run_to_memory(profiles, "append").collect()
     assert len(per_batch) > len({r["user_id"] for r in per_batch})  # >1 batch
     final = {}
     for r in per_batch:  # the accumulating profile: keep the max-events row
@@ -169,7 +146,6 @@ def test_tws_ttl_state_and_initial_state(spark, tmp_path):
     surface is the GRADED events_tws_ttl_counts query under
     processingTime (tests/test_tws_recovery.py), whose eviction
     differential can only pass if the TTLConfig reaches the JVM."""
-    import uuid as _uuid
     from collections.abc import Iterator as _It
 
     import pandas as _pd
@@ -177,25 +153,18 @@ def test_tws_ttl_state_and_initial_state(spark, tmp_path):
     from pyspark.sql import types as T2
     from pyspark.sql.streaming import StatefulProcessor as _SP
 
-    from kickstarter_etl_pipeline_spark.operators.partitioning import (
-        isolated_session,
-    )
     from kickstarter_etl_pipeline_spark.streaming.events_stream import (
-        _checkpoint_dir,
+        read_events_stream,
+        run_to_memory,
     )
     from kickstarter_etl_pipeline_spark.streaming.tws_sessionize import (
-        _export_worker_pythonpath,
         tws_available,
+        tws_session,
     )
     from tests.conftest import SF_SMOKE
 
     assert tws_available()
-    _export_worker_pythonpath(spark)
-    child = isolated_session(
-        spark,
-        {"spark.sql.streaming.stateStore.providerClass":
-         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"},
-    )
+    child = tws_session(spark)
 
     out_schema = T2.StructType(
         [T2.StructField("user_id", T2.LongType()),
@@ -212,7 +181,7 @@ def test_tws_ttl_state_and_initial_state(spark, tmp_path):
             self._n = handle.getValueState("n", cnt_schema)
 
         def handleInitialState(self, key, initialState, timerValues):
-            self._n.update((int(initialState["base"]),))
+            self._n.update((int(initialState["base"].iloc[0]),))
 
         def handleInputRows(self, key, rows, timerValues) -> _It[_pd.DataFrame]:
             (user_id,) = key
@@ -227,30 +196,15 @@ def test_tws_ttl_state_and_initial_state(spark, tmp_path):
     base = events.groupBy("user_id").agg(
         (F2.count("*") * 10).alias("base")  # seeded base = 10x count
     )
-    from kickstarter_etl_pipeline_spark.streaming.events_stream import (
-        read_events_stream,
-    )
-
     stream = read_events_stream(child, SF_SMOKE)
-    name = f"tws_seed_{_uuid.uuid4().hex[:8]}"
-    q = (
-        stream.groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=SeededCounter(),
-            outputStructType=out_schema,
-            outputMode="append",
-            timeMode="none",
-            initialState=base.groupBy("user_id"),
-        )
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", _checkpoint_dir("ks_tws_seed_"))
-        .trigger(availableNow=True)
-        .start()
+    seeded = stream.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=SeededCounter(),
+        outputStructType=out_schema,
+        outputMode="append",
+        timeMode="none",
+        initialState=base.groupBy("user_id"),
     )
-    q.awaitTermination()
-    got = {r["user_id"]: r["n_total"] for r in child.table(name).collect()}
+    got = {r["user_id"]: r["n_total"] for r in run_to_memory(seeded, "append").collect()}
     want = {
         r["user_id"]: 11 * r["n"]
         for r in events.groupBy("user_id").agg(F2.count("*").alias("n")).collect()
